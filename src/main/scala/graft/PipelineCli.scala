@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{CatalogBuilder, DateParse, WeekBins}
@@ -27,14 +26,7 @@ object PipelineCli {
     val Array(s2Listing, hlsListing, imagesPath, masksPath, maskId, outDir) = args.take(6)
     val batch = if (args.length > 6) args(6).toInt else 300
     val scale = if (args.length > 7) args(7).toInt else 3
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-pipeline")
 
     // E1 — catalogs
     val (edge, n) = WeekBins.Ref2023

@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Replicates the driver's t1 smoke check: build a fresh default session,
-  * run [[SparkEntry.entry]], require rows > 0. */
+/** Replicates the driver's t1 smoke check: build a fresh session from
+  * [[GraftSession]], run [[SparkEntry.entry]], require rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"entry_rows=$n cols=${df.columns.mkString(",")}")

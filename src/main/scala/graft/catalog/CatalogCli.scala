@@ -1,7 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** E1 pipeline entry point — the engine's equivalent of the reference's
   * `main_fct.SL_create_csv` driver (main_code.py:17–21): build both sensor
@@ -19,15 +20,7 @@ object CatalogCli {
       sys.exit(2)
     }
     val Array(s2Listing, hlsListing, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-catalog")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-catalog")
 
     val (edge, n) = WeekBins.Ref2023
     val s2Names = spark.read.textFile(s2Listing).toDF("data")

@@ -40,22 +40,6 @@ object Ranking {
     spark.createDataFrame(ranked, schema)
   }
 
-  /** Global row numbering for a frame PROVEN bounded by a constant (a
-    * dimension table, a top-K survivor set, a vocabulary) — NOT the corpus.
-    * One task is then the *right* plan, but `row_number() over (order by …)`
-    * still plans a no-partition WindowExec, whose runtime warning is
-    * indistinguishable from the real corpus-scale funnel. This shape keeps
-    * the explicit single-partition exchange (intentional, K rows) and drops
-    * the window operator: after the partition-local sort,
-    * `monotonically_increasing_id()` enumerates the lone partition's rows in
-    * iteration order (pid 0, so ids are exactly 0..n-1). The id project sits
-    * ABOVE the sort and is non-deterministic, so the optimizer may neither
-    * push it below the sort nor duplicate it; on task retry the total order
-    * (caller passes a unique tiebreaker) reproduces the same ids.
-    *
-    * Equals `row_number() over (order by …)` for any total order. For
-    * corpus-cardinality frames use [[globalRank]] instead.
-    */
   /** Whole-frame window spec for a frame PROVEN bounded by a constant (a
     * register table, a source/day rollup — dimension-scale, never the
     * corpus): partitioned by the NON-FOLDABLE constant key
@@ -80,6 +64,22 @@ object Ranking {
   def boundedAll(key: Column): WindowSpec =
     Window.partitionBy(pmod(xxhash64(key), lit(1L)))
 
+  /** Global row numbering for a frame PROVEN bounded by a constant (a
+    * dimension table, a top-K survivor set, a vocabulary) — NOT the corpus.
+    * One task is then the *right* plan, but `row_number() over (order by …)`
+    * still plans a no-partition WindowExec, whose runtime warning is
+    * indistinguishable from the real corpus-scale funnel. This shape keeps
+    * the explicit single-partition exchange (intentional, K rows) and drops
+    * the window operator: after the partition-local sort,
+    * `monotonically_increasing_id()` enumerates the lone partition's rows in
+    * iteration order (pid 0, so ids are exactly 0..n-1). The id project sits
+    * ABOVE the sort and is non-deterministic, so the optimizer may neither
+    * push it below the sort nor duplicate it; on task retry the total order
+    * (caller passes a unique tiebreaker) reproduces the same ids.
+    *
+    * Equals `row_number() over (order by …)` for any total order. For
+    * corpus-cardinality frames use [[globalRank]] instead.
+    */
   def boundedRank(df: DataFrame, rankName: String, order: Column*): DataFrame = {
     require(order.nonEmpty, "boundedRank needs at least one order column")
     require(!df.columns.contains(rankName),

@@ -1,6 +1,6 @@
 package graft.pairing
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** E2 pipeline entry point — the engine's equivalent of the reference's pair
   * step (main_code.py:24–27): read the two sensor catalogs, join on weekly
@@ -18,14 +18,7 @@ object PairCli {
     }
     val Array(lCsv, sCsv, outDir) = args.take(3)
     val native = args.contains("--native")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-pair")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-pair")
 
     def cat(p: String) = spark.read.option("header", true).csv(p)
     val pairs = Pairing.pathsPair(cat(lCsv), cat(sCsv))

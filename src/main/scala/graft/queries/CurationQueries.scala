@@ -753,11 +753,11 @@ object CurationQueries {
     // the exponent (exact), floor pins it — so weight_micro replays
     // bit-for-bit. Totals attach via ONE whole-frame window over the
     // |S|-row source rollup, partitioned by the non-foldable constant key
-    // (Ranking.boundedAll: pmod(col, 1) ≡ 0 but Catalyst can't fold it, so
-    // the WindowExec carries a non-empty partitionSpec — no unpartitioned
-    // window, no second aggregate branch, ONE evaluation of the rollup;
-    // the r18 agg+broadcast-join variant measured +0.06 s per invocation
-    // at sf0.1 over this single-pass shape).
+    // (Ranking.boundedAll: pmod(xxhash64(key), 1) ≡ 0 but Catalyst can't
+    // fold it, so the WindowExec carries a non-empty partitionSpec — no
+    // unpartitioned window, no second aggregate branch, ONE evaluation of
+    // the rollup; the r18 agg+broadcast-join variant measured +0.06 s per
+    // invocation at sf0.1 over this single-pass shape).
     "q164_temperature_mix" -> ((s, dir) => {
       val wAll = graft.ops.Ranking.boundedAll(col("n_docs"))
       t(s, dir, "documents")

@@ -439,8 +439,8 @@ object OpsQueries {
         .select(posexplode(col("regs")).as(Seq("bucket", "reg_direct")))
       // global stats via ONE whole-frame window over the 64-row joined
       // register frame, partitioned by the non-foldable constant key
-      // (Ranking.boundedAll — pmod(bucket, 1) ≡ 0 but Catalyst can't fold
-      // it, so the WindowExec carries a non-empty partitionSpec: no
+      // (Ranking.boundedAll — pmod(xxhash64(key), 1) ≡ 0 but Catalyst can't
+      // fold it, so the WindowExec carries a non-empty partitionSpec: no
       // unpartitioned-window funnel, and no second aggregate branch /
       // broadcast join / persist to attach the totals — a re-aggregation
       // against the uncached frame would re-execute the merged AND direct

@@ -1,7 +1,8 @@
 package graft.raster
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Raster-ingest entry point (the executor-side replacement for the
   * reference's serial per-file rasterio loop, main_function_original.py:
@@ -26,13 +27,7 @@ object IngestCli {
       case other => System.err.println(s"unknown sensor $other (want L8|S2)"); sys.exit(2); Nil
     }
     val idRegex = args.lift(3).getOrElse("([^/]+?)[._]B\\d+.*$")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-ingest")
 
     val perBand = TiffDecoder.readTiffDir(spark, dir, bands, glob = "*")
       .toDF()

@@ -1,6 +1,6 @@
 package graft.tiling
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** E3 pipeline entry point — the engine's equivalent of the reference's
   * tensor_creator + dataset_creation drive (main_code.py:29–84): read a pair
@@ -29,13 +29,7 @@ object TilingCli {
       case "grid" => TileJobs.GridSnap
       case _ => TileJobs.Greedy
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-tiling")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-tiling")
 
     val pairs = TileJobs.assemblePairs(spark,
       spark.read.parquet(pairsPath),

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Scale-factor multiplier for the driver's testdata: writes `factor`
   * replica-shifted copies of each table so scale claims argued at sf0.1 can
@@ -40,13 +42,7 @@ object ScaleUp {
     require(factor >= 1 && factor <= 26,
       s"factor $factor out of range [1, 26]: the replica decorrelators " +
         "(Caesar mod 26, dimension rotation) repeat past 26")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-scaleup")
 
     def t(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")
     def write(name: String)(df: DataFrame): Unit = {

@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, Pmod, XxHash64}
+
 import graft.SparkSpec
 
 /** Physical-plan regression guards: the scale properties argued in
@@ -499,10 +501,10 @@ class PlanSpec extends SparkSpec {
   test("q127 trending: the reference day is a PARTITIONED whole-frame window " +
       "over the day rollup — one pass, no join, no persist") {
     // max(day) rides Ranking.boundedAll — a WindowExec partitioned by the
-    // non-foldable constant key pmod(day, 1), so the rollup evaluates ONCE
-    // inside its own plan (no second aggregate branch, no 1-row broadcast,
-    // no cache) and the partitionSpec is non-empty (the registry sweep's
-    // unpartitioned-window ban sees an intentional bounded partition)
+    // non-foldable constant key pmod(xxhash64(key), 1), so the rollup
+    // evaluates ONCE inside its own plan (no second aggregate branch, no
+    // 1-row broadcast, no cache) and the partitionSpec is non-empty (the
+    // registry sweep allowlists q127 as an intentional bounded partition)
     val qe = graft.SparkEntry.queries("q127_trending")(spark, dir).queryExecution
     val p = qe.executedPlan.toString
     assert(p.contains("Window"), s"reference-day window gone:\n${p.take(800)}")
@@ -655,8 +657,18 @@ class PlanSpec extends SparkSpec {
       "q192_ann_trained_ivf", "q199_image_neardup_recall",
       "q200_vector_model_store", "q215_ann_index_maintain",
       "q223_ivf_drift")
+    // Ranking.boundedAll partitions by pmod(xxhash64(key), 1), which is 0 on
+    // every row: a window keyed only on it is one global partition, so it
+    // counts as unpartitioned outside these dimension-scale frames
+    val boundedAllUsers = Map(
+      "q91_prep_pipeline" -> "min mass over the |S|-row source rollup",
+      "q110_hll_merge" -> "global stats over the 64-row HLL register frame",
+      "q127_trending" -> "reference day over the #types × #days rollup",
+      "q164_temperature_mix" -> "weight total over the |S|-row source rollup",
+      "q165_curation_v2" -> "weight total over the |S|-row source rollup")
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     val windowed = scala.collection.mutable.ListBuffer.empty[String]
+    val constKeyed = scala.collection.mutable.ListBuffer.empty[String]
     for (name <- graft.SparkEntry.queries.keys.toSeq.sorted) {
       val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
       val p = qe.executedPlan.toString
@@ -667,17 +679,40 @@ class PlanSpec extends SparkSpec {
       // WindowExec moves its whole input through one task (the 100-TB
       // scale-killer Spark itself warns about); every global rank/running
       // count in the registry uses Ranking.globalRank / boundedRank instead.
-      // No exceptions — bounded frames use boundedRank, which plans the
-      // same single partition WITHOUT the window operator.
-      val unpart = qe.sparkPlan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty => w
-        case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-            if w.partitionSpec.isEmpty => w
+      // Bounded frames use boundedRank, which plans the same single
+      // partition WITHOUT the window operator; the only one-partition
+      // windows are the boundedAll users allowlisted above.
+      val sp = qe.sparkPlan
+      val specs = sp.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w.partitionSpec
+        case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec => w.partitionSpec
       }
-      if (unpart.nonEmpty) windowed += name
+      // the planner moves the key into a Project below the window as an
+      // alias; the window then partitions by the alias's attribute
+      val constAliases = sp.flatMap(_.expressions).flatMap(_.collect {
+        case a: Alias if isConstKey(a.child) => a.exprId
+      }).toSet
+      def constant(spec: Seq[Expression]): Boolean = spec.nonEmpty && spec.forall {
+        case a: Attribute => constAliases(a.exprId)
+        case e => isConstKey(e)
+      }
+      if (specs.exists(constant)) constKeyed += name
+      if (specs.exists(_.isEmpty) || (specs.exists(constant) && !boundedAllUsers.contains(name)))
+        windowed += name
     }
     assert(offenders.isEmpty, s"quadratic join plans in: $offenders")
     assert(windowed.isEmpty, s"unpartitioned window plans in: $windowed")
+    // a stale entry would let a future misuse in that query pass unseen
+    assert(constKeyed.toSet == boundedAllUsers.keySet,
+      s"constant-key windows in $constKeyed, allowlisted ${boundedAllUsers.keySet}")
+  }
+
+  /** Ranking.boundedAll's constant key: pmod(xxhash64(...), 1). */
+  private def isConstKey(e: Expression): Boolean = e match {
+    case p: Pmod => p.left.isInstanceOf[XxHash64] && (p.right match {
+      case Literal(v: Number, _) => v.longValue == 1L
+      case _ => false
+    })
+    case _ => false
   }
 }
