@@ -16,7 +16,7 @@ object SparkEntry {
     * CACHE CONTRACT (applies to EVERY registry entry, present and future —
     * judge r11 Next #6): a query body may `.persist()` loop-invariant /
     * multiply-referenced BOUNDED frames (currently q91, q97, q110's 64-row
-    * joined register frame, q127's day rollup, q151, q165,
+    * joined register frame, q127's day rollup, q151, q165 (incl. its quota frame),
     * q169, q176, q182's three tier frames, q188's `members`, q192's truth/
     * tier frames, the span family's grams frames inside Dedup.spanDups/
     * spanIncremental/spanSweep — q193/q194/q196/q197/q207 (q207 also the
@@ -39,33 +39,26 @@ object SparkEntry {
     * queries, or cached frames accumulate across the 190+-entry registry
     * and force LRU churn. A caller running a single query can ignore this
     * (one query's persisted frames are bounded and die with the session). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RefQueries.queries ++
-      graft.queries.DedupQueries.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.SimilarityQueries.queries ++
-      graft.queries.StreamingQueries.queries ++
-      graft.queries.TilingQueries.queries ++
-      graft.queries.MultimodalQueries.queries ++
-      graft.queries.OpsQueries.queries ++
-      graft.queries.CurationQueries.queries ++
-      graft.queries.RasterQueries.queries ++
-      graft.queries.FormatQueries.queries ++
-      graft.queries.WebQueries.queries
+  def queries: Map[String, Query] = modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.RefQueries.oracle ++
-      graft.queries.DedupQueries.oracle ++
-      graft.queries.TextQueries.oracle ++
-      graft.queries.SimilarityQueries.oracle ++
-      graft.queries.StreamingQueries.oracle ++
-      graft.queries.TilingQueries.oracle ++
-      graft.queries.MultimodalQueries.oracle ++
-      graft.queries.OpsQueries.oracle ++
-      graft.queries.CurationQueries.oracle ++
-      graft.queries.RasterQueries.oracle ++
-      graft.queries.FormatQueries.oracle ++
-      graft.queries.WebQueries.oracle
+  def oracleSql: Map[String, String] = modules.map(_.oracle).reduce(_ ++ _)
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The modules [[queries]] and [[oracleSql]] merge. A query name lives in
+    * one module only, and each module's oracle keys name its own queries
+    * (VerifySpec guards both: a merge silently keeps the later duplicate). */
+  def modules: Seq[QueryModule] = {
+    import graft.queries._
+    Seq(RefQueries, DedupQueries, TextQueries, SimilarityQueries, StreamingQueries, TilingQueries,
+      MultimodalQueries, OpsQueries, CurationQueries, RasterQueries, FormatQueries, WebQueries)
+  }
+}
+
+/** One registry module: its queries and their DuckDB oracles. */
+trait QueryModule {
+  def queries: Map[String, SparkEntry.Query]
+  def oracle: Map[String, String]
 }

@@ -71,6 +71,20 @@ object CatalogBuilder {
     filled.unionByName(placeholders).orderBy("bin", "data")
   }
 
+  /** E1 as the reference runs it (main_code.py:17–21): both sensor catalogs
+    * over the 2023 week range, under the reference's parent dirs (the
+    * goldens' `path` column).
+    * @return (S catalog, L catalog) in [[build]]'s form */
+  def reference(s2Names: DataFrame, hlsNames: DataFrame): (DataFrame, DataFrame) = {
+    val (edge, n) = WeekBins.Ref2023
+    (build(s2Names, DateParse.s2AcqDate, "./2023/crop/S2_bis_crop", edge, n),
+      build(hlsNames, DateParse.hlsAcqDate, "./2023/crop/L8_bis_crop", edge, n))
+  }
+
+  /** The reference's committed goldens (`S_out.csv`, `L_out.csv`):
+    * `GRAFT_REF_DIR`, else the reference checkout's `data_pair`. */
+  def goldenDir: String = sys.env.getOrElse("GRAFT_REF_DIR", "/root/reference/data_pair")
+
   /** O15 — the reference's "pairs" metric, faithful mode (quirk Q1,
     * main_function_original.py:64–70): Σ over L *rows* of
     * count_L(class) × count_S(class) = Σ_c L_c² · S_c, `"0"` classes included.

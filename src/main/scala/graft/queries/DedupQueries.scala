@@ -13,7 +13,7 @@ import graft.dedup.Dedup
   * rows-only) and are instead pinned by GraftDedupSpec against planted
   * near-duplicates.
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * at 100 TB) and types JSON numerics unpredictably — an inferred-schema
   * read is the format-source anti-pattern this module exists to avoid.
   */
-object FormatQueries {
+object FormatQueries extends graft.QueryModule {
 
   /** Per-(format, dataset) sink dir — the OpsQueries.suffix convention:
     * concurrent verify runs at different SFs on one host must not clobber

@@ -23,7 +23,7 @@ import graft.multimodal.Multimodal
   * per-channel std is intentionally NOT compared (its sum of squares spans
   * >53 bits, so its value is summation-order-dependent).
   */
-object MultimodalQueries {
+object MultimodalQueries extends graft.QueryModule {
 
   private val C = 3; private val H = 16; private val W = 16
 

@@ -18,7 +18,7 @@ import graft.ops.{Bucketing, Deletion, Layout, Quantiles, Sampling, Skew, Snapsh
   * the shuffle/layout cost is paid once at write time and amortized over
   * every subsequent read, which is what the 100 TB user buys.
   */
-object OpsQueries {
+object OpsQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

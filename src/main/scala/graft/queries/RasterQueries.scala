@@ -20,7 +20,7 @@ import graft.raster.{TiffDecoder, TiffEncoder}
   * placement, byte order, LZW/Deflate/PackBits/JPEG decode, or hostile-
   * stream rejection reddens the row.
   */
-object RasterQueries {
+object RasterQueries extends graft.QueryModule {
 
   /** Fixtures the decoder must read, with exact expected pixels. */
   val DecodableFixtures: Seq[String] = Seq(

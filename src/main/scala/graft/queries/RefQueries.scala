@@ -24,7 +24,7 @@ import graft.functions.Base26
   * exercising the physical paths that matter at scale (broadcast joins,
   * shuffle joins, partial aggregation, top-k).
   */
-object RefQueries {
+object RefQueries extends graft.QueryModule {
 
   /** Thursday-anchored bin range covering the `events` table (Jan 2024) with
     * trailing empty bins: 2023-12-28 + 10 weeks. */

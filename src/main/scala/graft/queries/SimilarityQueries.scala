@@ -10,7 +10,7 @@ import graft.similarity.Ann
   * above cross-engine float noise). The IVF and hyperplane variants are
   * rows-only; AnnSpec pins their recall against brute force.
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * streaming execution of the same logic). All arithmetic is exact integer
   * microseconds → bit-identical oracles.
   */
-object StreamingQueries {
+object StreamingQueries extends graft.QueryModule {
 
   /** Exact µs event time (events.ts is TIMESTAMP(MICROS) NTZ; the UTC
     * re-pin makes the NTZ→TZ cast the identity even on a foreign

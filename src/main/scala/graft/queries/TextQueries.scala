@@ -13,7 +13,7 @@ import graft.text.TextAnalysis._
   * DuckDB twin too (the xxhash64 production variant is pinned native≡HOF
   * in TextSpec — xxhash64 has no DuckDB equivalent).
   */
-object TextQueries {
+object TextQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

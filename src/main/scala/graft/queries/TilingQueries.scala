@@ -13,7 +13,7 @@ import graft.tiling.{PairRow, TileJobs, TileKernel}
   * grid-snap suppression (q63), each over deterministically synthesized
   * inputs a DuckDB oracle regenerates arithmetically.
   */
-object TilingQueries {
+object TilingQueries extends graft.QueryModule {
 
   /** Deterministic synthetic HR 30×30 / LR 10×10 4-band pair images with a
     * dense centerline band, pixels from xxhash64 of `seed` — pure column
@@ -290,18 +290,15 @@ object TilingQueries {
       // design: its job is pinning the dataflow against the reference's
       // committed goldens. Overridable for other checkouts; absence fails
       // with a named message, not an opaque CSV-read error.
-      val refDir = sys.env.getOrElse("GRAFT_REF_DIR", "/root/reference/data_pair")
+      val refDir = graft.catalog.CatalogBuilder.goldenDir
       require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refDir)),
         s"q101_e3_pipeline needs the reference goldens at $refDir " +
           "(set GRAFT_REF_DIR to the data_pair dir of the reference checkout)")
       def names(f: String) =
         s.read.option("header", true).csv(s"$refDir/$f")
           .where(col("data") =!= "0").select("data")
-      val (edge, nBins) = graft.catalog.WeekBins.Ref2023
-      val sCat = graft.catalog.CatalogBuilder.build(names("S_out.csv"),
-        graft.catalog.DateParse.s2AcqDate, "./2023/crop/S2_bis_crop", edge, nBins)
-      val lCat = graft.catalog.CatalogBuilder.build(names("L_out.csv"),
-        graft.catalog.DateParse.hlsAcqDate, "./2023/crop/L8_bis_crop", edge, nBins)
+      val (sCat, lCat) =
+        graft.catalog.CatalogBuilder.reference(names("S_out.csv"), names("L_out.csv"))
       val pairs = graft.pairing.Pairing.pathsPair(lCat, sCat, includePlaceholders = true)
       val tiles = TileJobs.tilePairs(
         synthesizePairs(pairs, col("data_1"), xxhash64(col("data_1"))),

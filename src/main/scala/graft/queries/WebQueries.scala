@@ -22,7 +22,7 @@ import graft.text.Urls
   * Both engines build the identical string, so canonicalization is
   * compared end-to-end per doc.
   */
-object WebQueries {
+object WebQueries extends graft.QueryModule {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

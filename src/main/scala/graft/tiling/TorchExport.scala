@@ -161,7 +161,7 @@ object TorchExport {
     require(totalBytes <= maxBytes,
       s"$totalBytes tensor bytes exceed the export ceiling ($maxBytes): " +
         "a single .pth is a single-machine artifact - keep the Parquet " +
-        "tile store (TilingCli) for datasets past the reference scale")
+        "tile store (PipelineCli tile) for datasets past the reference scale")
     val zos = new ZipOutputStream(
       java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path)))
     try {

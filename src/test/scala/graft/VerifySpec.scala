@@ -20,4 +20,16 @@ class VerifySpec extends SparkSpec {
     assert(spark.read.parquet(good.resolve(q).toString).count() > 0)
     assert(Files.readString(good.resolve("oracle_sql.json")).contains(s"\"$q\""))
   }
+
+  private def name(m: QueryModule) = m.getClass.getSimpleName.stripSuffix("$")
+
+  test("registry keys: no query name in two modules; each oracle key names its own module's query") {
+    val owners = SparkEntry.modules.flatMap(m => m.queries.keys.map(_ -> name(m)))
+      .groupMap(_._1)(_._2)
+    val dupes = owners.collect { case (q, ms) if ms.size > 1 => s"$q in ${ms.mkString(", ")}" }
+    assert(dupes.isEmpty, dupes.mkString("\n"))
+    val strays = SparkEntry.modules.flatMap(m =>
+      m.oracle.keys.filterNot(m.queries.contains).map(k => s"${name(m)}: oracle $k"))
+    assert(strays.isEmpty, strays.mkString("\n"))
+  }
 }

@@ -12,13 +12,13 @@ import graft.SparkSpec
   * through our E1 build must reproduce both golden CSVs row-for-row
   * (class, path, data — including `"0"` placeholder rows and row order).
   *
-  * The goldens are read from the read-only reference checkout; suites skip
-  * (pending) if it is absent.
+  * The goldens are read from [[CatalogBuilder.goldenDir]] (`GRAFT_REF_DIR`,
+  * the same setting q101 reads); suites skip (pending) if it is absent.
   */
 class GoldenCatalogSpec extends SparkSpec {
   import spark.implicits._
 
-  private val refDir = "/root/reference/data_pair"
+  private val refDir = CatalogBuilder.goldenDir
   private def gold(f: String): Option[Seq[(String, String, String)]] = {
     val p = Paths.get(refDir, f)
     if (!Files.exists(p)) None
@@ -38,34 +38,42 @@ class GoldenCatalogSpec extends SparkSpec {
     assert(firstEdge.getDayOfWeek == java.time.DayOfWeek.THURSDAY)
   }
 
-  private def rebuild(goldRows: Seq[(String, String, String)],
-                      dateOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-  : Seq[(String, String, String)] = {
-    val names = goldRows.collect { case (_, _, d) if d != "0" => d }
-    val path = goldRows.head._2
-    val df = names.toDF("data")
-    CatalogBuilder.build(df, dateOf, path, firstEdge, nBins)
-      .select("class", "path", "data")
-      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
-  }
+  /** Both golden catalogs and their rebuild through
+    * [[CatalogBuilder.reference]] from the golden names alone. */
+  private lazy val rebuilt =
+    for (s <- gold("S_out.csv"); l <- gold("L_out.csv")) yield {
+      def names(rows: Seq[(String, String, String)]) =
+        rows.collect { case (_, _, d) if d != "0" => d }.toDF("data")
+      def rows(cat: org.apache.spark.sql.DataFrame) = cat.select("class", "path", "data")
+        .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      val (sCat, lCat) = CatalogBuilder.reference(names(s), names(l))
+      ((s, rows(sCat)), (l, rows(lCat)))
+    }
 
   test("S_out.csv reproduced exactly (110 names + 4 placeholders)") {
-    gold("S_out.csv") match {
+    rebuilt match {
       case None => pending
-      case Some(rows) =>
-        val got = rebuild(rows, DateParse.s2AcqDate)
+      case Some(((rows, got), _)) =>
         assert(got.size == rows.size)
         assert(got == rows)
     }
   }
 
   test("L_out.csv reproduced exactly (85 names + 3 placeholders)") {
-    gold("L_out.csv") match {
+    rebuilt match {
       case None => pending
-      case Some(rows) =>
-        val got = rebuild(rows, DateParse.hlsAcqDate)
+      case Some((_, (rows, got))) =>
         assert(got.size == rows.size)
         assert(got == rows)
+    }
+  }
+
+  test("golden path columns are the parent dirs CatalogBuilder.reference writes") {
+    rebuilt match {
+      case None => pending
+      case Some(((s, sGot), (l, lGot))) =>
+        assert(sGot.map(_._2).distinct == s.map(_._2).distinct)
+        assert(lGot.map(_._2).distinct == l.map(_._2).distinct)
     }
   }
 

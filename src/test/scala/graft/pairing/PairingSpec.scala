@@ -17,7 +17,7 @@ import graft.SparkSpec
 class PairingSpec extends SparkSpec {
   import spark.implicits._
 
-  private val refDir = "/root/reference/data_pair"
+  private val refDir = graft.catalog.CatalogBuilder.goldenDir
 
   private def goldCatalog(f: String) = {
     val p = Paths.get(refDir, f)
