@@ -39,7 +39,9 @@ class GoldenCatalogSpec extends SparkSpec {
   }
 
   /** Both golden catalogs and their rebuild through
-    * [[CatalogBuilder.reference]] from the golden names alone. */
+    * [[CatalogBuilder.reference]] from the golden names alone. The exact-row
+    * tests compare whole (class, path, data) rows, so they also pin the
+    * golden `path` column to the reference paths. */
   private lazy val rebuilt =
     for (s <- gold("S_out.csv"); l <- gold("L_out.csv")) yield {
       def names(rows: Seq[(String, String, String)]) =
@@ -65,15 +67,6 @@ class GoldenCatalogSpec extends SparkSpec {
       case Some((_, (rows, got))) =>
         assert(got.size == rows.size)
         assert(got == rows)
-    }
-  }
-
-  test("golden path columns are the parent dirs CatalogBuilder.reference writes") {
-    rebuilt match {
-      case None => pending
-      case Some(((s, sGot), (l, lGot))) =>
-        assert(sGot.map(_._2).distinct == s.map(_._2).distinct)
-        assert(lGot.map(_._2).distinct == l.map(_._2).distinct)
     }
   }
 

@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.SparkSpec
 
@@ -682,7 +685,7 @@ class PlanSpec extends SparkSpec {
       // Bounded frames use boundedRank, which plans the same single
       // partition WITHOUT the window operator; the only one-partition
       // windows are the boundedAll users allowlisted above.
-      val sp = qe.sparkPlan
+      val sp = planNodes(qe.sparkPlan)
       val specs = sp.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w.partitionSpec
         case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec => w.partitionSpec
@@ -705,6 +708,16 @@ class PlanSpec extends SparkSpec {
     // a stale entry would let a future misuse in that query pass unseen
     assert(constKeyed.toSet == boundedAllUsers.keySet,
       s"constant-key windows in $constKeyed, allowlisted ${boundedAllUsers.keySet}")
+  }
+
+  /** Every node of `p`, including the plans behind its leaves: a persisted
+    * frame's cached plan, an adaptive plan's input and a query stage's plan.
+    * A window inside a `.persist()`ed frame is still a window of the query. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+    case s: InMemoryTableScanExec => s +: planNodes(s.relation.cachedPlan)
+    case a: AdaptiveSparkPlanExec => a +: planNodes(a.inputPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case n => Seq(n)
   }
 
   /** Ranking.boundedAll's constant key: pmod(xxhash64(...), 1). */
