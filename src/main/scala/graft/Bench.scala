@@ -200,17 +200,7 @@ object Bench {
     // state-store I/O on cold /tmp — the r8 artifact spent ~20-40 s of its
     // overshoot exactly there (judge r8, Next #2). One timed rep each; the
     // history guard below still re-measures on an outlier.
-    val replayQueries = Set(
-      "q92_stream_sessionize", "q94_stream_kmv", "q99_stream_histogram",
-      "q100_stream_heavy", "q105_stream_cm", "q107_stream_scd2",
-      "q109_stream_hll", "q120_stream_attribution", "q122_stream_tombstone",
-      "q128_stream_trending", "q135_stream_abandoned", "q156_stream_cluster",
-      "q171_stream_dedup", "q180_stream_loghist", "q187_stream_rocksdb",
-      "q195_stream_span_dedup", "q202_stream_fp_dedup", "q208_stream_markup",
-      "q212_stream_url_dedup", "q213_stream_host_quota",
-      "q216_stream_ann_serve", "q220_stream_blocklist",
-      "q221_stream_par_dedup", "q222_stream_sig_serve",
-      "q225_stream_directive_gate", "q228_stream_robots_gate")
+    val replayQueries = SparkEntry.registry.filter(_.replay).map(_.name).toSet
     // Per-query history: the newest BENCH_r*.json in the working directory
     // (the driver runs from the repo root, where it also writes them).
     // The r8 artifact carried 16-39x ambient outliers on individually tiny

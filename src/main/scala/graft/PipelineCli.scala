@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.CatalogBuilder
@@ -77,15 +77,19 @@ object PipelineCli {
     * @return images written */
   def ingest(spark: SparkSession, tiffDir: String, sensor: String, outDir: String): Long = {
     val bands = SensorBands(sensor)
+    // counted during the write: a second action would re-scan and re-decode
+    // every band file (a typed mapPartitions cannot be pruned)
+    val decoded = Observation("band_files")
     val perBand = TiffDecoder.readTiffDir(spark, tiffDir, bands, glob = "*")
       .toDF()
       .select(
         regexp_extract(element_at(split(col("path"), "/"), -1), "([^/]+?)[._]B\\d+.*$", 1)
           .as("image_id"),
         col("band"), col("h"), col("w"), col("pixels"))
+      .observe(decoded, count(lit(1)).as("n"))
     Bands.stack(perBand, bands, sensor).write.mode("overwrite").parquet(s"$outDir/images")
     val n = spark.read.parquet(s"$outDir/images").count()
-    println(s"band_files_decoded=${perBand.count()} images_written=$n")
+    println(s"band_files_decoded=${decoded.get("n")} images_written=$n")
     n
   }
 

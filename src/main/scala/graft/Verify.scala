@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws is recorded in failures.txt (`name<TAB>message` per line, empty
   * on a clean run), never left as a silently missing output. */
@@ -29,11 +29,11 @@ object Verify {
     def keep(name: String): Boolean = !oracleOnly && names.forall(_.contains(name))
     def keepOracle(name: String): Boolean = oracleOnly || keep(name)
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.toSeq.filter(kv => keep(kv._1))
-    val failures = selected.flatMap { case (name, fn) =>
+    val selected = SparkEntry.registry.filter(e => keep(e.name))
+    val failures = selected.flatMap { case Entry(name, build, _, _) =>
       val failed =
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
           None
         } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -59,8 +59,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keepOracle(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry.filter(e => keepOracle(e.name))
+      .flatMap(e => e.oracle.map(sql => s"${q(e.name)}: ${q(sql)}")).mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     failures
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.similarity.Clustering
 
 /** Corpus-curation queries: the clustering / semantic-dedup / language-model
@@ -124,7 +125,7 @@ object CurationQueries extends graft.QueryModule {
     (voc, cpair)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // DISTRIBUTED LLOYD K-MEANS on the integer lattice (Clustering.scala):
     // Mix64 deterministic init → 2 shifted-floor-mean updates → final
     // assignment; per-cluster size, inertia (milli-scale: d2 div 2^20 so
@@ -133,7 +134,7 @@ object CurationQueries extends graft.QueryModule {
     // iterative run replays in the oracle, not just one pass. Scale: each
     // round is one corpus scan + a (cid, d) partial-agg shuffle (k·dim
     // groups); driver state is the k×dim model only (the MLlib shape).
-    "q146_kmeans" -> ((s, dir) => {
+    Entry("q146_kmeans", (s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val (asg, cents) = Clustering.kmeans(emb, "vec_id", "embedding", KmK, KmUpdates)
@@ -149,7 +150,22 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("inertia_m"), lit(0L)).as("inertia_m"),
           col("cq_sum"), col("cq_min"), col("cq_max"))
         .orderBy("cluster_id")
-    }),
+    }, Some(
+      s"""WITH $kmeansSql,
+         |kstat AS (
+         |  SELECT cid, CAST(sum(cq) AS BIGINT) AS cq_sum,
+         |    min(cq) AS cq_min, max(cq) AS cq_max
+         |  FROM kc$KmUpdates GROUP BY cid),
+         |kagg AS (
+         |  SELECT cid, CAST(count(*) AS BIGINT) AS n_points,
+         |    CAST(sum(d2 // ${Clustering.Scale}) AS BIGINT) AS inertia_m
+         |  FROM ka_fin GROUP BY cid)
+         |SELECT CAST(s.cid AS BIGINT) AS cluster_id,
+         |  coalesce(a.n_points, 0) AS n_points,
+         |  coalesce(a.inertia_m, 0) AS inertia_m,
+         |  s.cq_sum, s.cq_min, s.cq_max
+         |FROM kstat s LEFT JOIN kagg a USING (cid)
+         |ORDER BY cluster_id""".stripMargin)),
 
     // SEMDEDUP SCALE CONTRACT, DRIVER-CHECKED (round 11): q147/q166 run a
     // FIXED cluster count because their oracles replay the full integer
@@ -165,7 +181,7 @@ object CurationQueries extends graft.QueryModule {
     // sf0.1), (b) every vector lands in exactly one cell, (c) every
     // non-empty cell keeps ≥ 1 member after the τ = 1/4 drop rule (the
     // verdict is pairwise integer arithmetic — clusterer-independent).
-    "q188_semdedup_scaled" -> ((s, dir) => {
+    Entry("q188_semdedup_scaled", (s, dir) => {
       import graft.similarity.Ann
       val emb = t(s, dir, "embeddings")
       val n = emb.count()
@@ -220,7 +236,10 @@ object CurationQueries extends graft.QueryModule {
         lit(pairsS <= 2L * pairsF).as("scaled_pair_work_bounded"),
         lit(kScaled >= KmK && nonemptyS <= kScaled).as("k_scales"),
         lit(keeps).as("keeps_one_per_cluster"))
-    }),
+    }, Some(
+      // guarantee row: every boolean must hold at every SF (q137 pattern)
+      """SELECT true AS all_assigned, true AS scaled_pair_work_bounded,
+        |  true AS k_scales, true AS keeps_one_per_cluster""".stripMargin)),
 
     // SEMDEDUP-STYLE SEMANTIC DEDUP: cluster with q146's k-means, then
     // within each cluster mark every pair with integer-quantized cosine
@@ -230,7 +249,7 @@ object CurationQueries extends graft.QueryModule {
     // not |corpus|². At 100 TB, k scales with the corpus so per-cluster
     // membership stays bounded (SemDeDup's own recipe); the threshold test
     // is scale-free integer arithmetic (16·dot² vs n_a·n_b at 2^10).
-    "q147_semantic_dedup" -> ((s, dir) => {
+    Entry("q147_semantic_dedup", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (asg, _) = Clustering.kmeans(emb, "vec_id", "embedding", KmK, KmUpdates)
       // norms once per row, the pair dot via the NATIVE quant_dot kernel —
@@ -261,7 +280,44 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
           (col("id_sum") - coalesce(col("dropped_id_sum"), lit(0L))).as("kept_id_sum"))
         .orderBy("cluster_id")
-    }),
+    }, Some(
+      // cluster member lists expanded to a<b pairs (group-then-expand — the
+      // deep ka_fin chain is referenced ONCE; see the q139 DuckDB self-join
+      // note), integer dot/norms from the shallow exploded quantization
+      s"""WITH $kmeansSql,
+         |se AS (
+         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
+         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * $SemScale) AS BIGINT) AS sq
+         |  FROM embeddings),
+         |sn AS (SELECT vec_id, CAST(sum(sq * sq) AS BIGINT) AS n2 FROM se GROUP BY 1),
+         |cg AS (SELECT cid, list(vec_id ORDER BY vec_id) AS vs FROM ka_fin GROUP BY cid),
+         |pl AS (
+         |  SELECT cid, flatten(list_transform(vs, a ->
+         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
+         |  FROM cg),
+         |cand AS (SELECT cid, p.a AS a_id, p.b AS b_id FROM pl, unnest(pl.prs) AS t(p)),
+         |dotc AS (
+         |  SELECT c.cid, c.a_id, c.b_id, CAST(sum(ea.sq * eb.sq) AS BIGINT) AS dot
+         |  FROM cand c
+         |  JOIN se ea ON ea.vec_id = c.a_id
+         |  JOIN se eb ON eb.vec_id = c.b_id AND eb.d = ea.d
+         |  GROUP BY 1, 2, 3),
+         |dups AS (
+         |  SELECT d.cid, d.a_id, d.b_id
+         |  FROM dotc d JOIN sn a ON a.vec_id = d.a_id JOIN sn b ON b.vec_id = d.b_id
+         |  WHERE d.dot > 0 AND $SemTauDen2 * d.dot * d.dot >= a.n2 * b.n2),
+         |du AS (SELECT DISTINCT cid, b_id FROM dups),
+         |drp AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_dropped,
+         |         CAST(sum(b_id) AS BIGINT) AS dropped_id_sum FROM du GROUP BY cid),
+         |np AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_dup_pairs FROM dups GROUP BY cid),
+         |mem AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
+         |         CAST(sum(vec_id) AS BIGINT) AS id_sum FROM ka_fin GROUP BY cid)
+         |SELECT CAST(m.cid AS BIGINT) AS cluster_id, m.n_members,
+         |  coalesce(np.n_dup_pairs, 0) AS n_dup_pairs,
+         |  coalesce(drp.n_dropped, 0) AS n_dropped,
+         |  m.id_sum - coalesce(drp.dropped_id_sum, 0) AS kept_id_sum
+         |FROM mem m LEFT JOIN np USING (cid) LEFT JOIN drp USING (cid)
+         |ORDER BY cluster_id""".stripMargin)),
 
     // SEMDEDUP QUANTIZATION-SENSITIVITY AUDIT — the approximation-quality
     // row for the dedup threshold (q140/q142's discipline applied to
@@ -272,7 +328,7 @@ object CurationQueries extends graft.QueryModule {
     // comment's claim. Both lattices are exact integer arithmetic, so the
     // audit itself replays bit-for-bit; flips are genuinely boundary
     // pairs, not noise.
-    "q166_semdedup_sensitivity" -> ((s, dir) => {
+    Entry("q166_semdedup_sensitivity", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (asg, _) = Clustering.kmeans(emb, "vec_id", "embedding", KmK, KmUpdates)
       val q = emb.select(col("vec_id"), col("embedding").as("e"),
@@ -301,7 +357,52 @@ object CurationQueries extends graft.QueryModule {
         .select(col("cid").as("cluster_id"), col("n_pairs"),
           col("n_dup_lo"), col("n_dup_hi"), col("n_flips"))
         .orderBy("cluster_id")
-    }),
+    }, Some(
+      // one unnest carries the raw element; both lattices derive from it —
+      // no aligned-multi-unnest assumption. Pairs via q147's group-then-
+      // expand (the deep chain referenced once).
+      s"""WITH $kmeansSql,
+         |se0 AS (
+         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
+         |    CAST(unnest(embedding) AS DOUBLE) AS x
+         |  FROM embeddings),
+         |se2 AS (
+         |  SELECT vec_id, d,
+         |    CAST(floor(x * $SemScale) AS BIGINT) AS q10,
+         |    CAST(floor(x * $SemScaleHi) AS BIGINT) AS q20
+         |  FROM se0),
+         |sn2 AS (
+         |  SELECT vec_id, CAST(sum(q10 * q10) AS BIGINT) AS n10,
+         |    CAST(sum(q20 * q20) AS BIGINT) AS n20
+         |  FROM se2 GROUP BY 1),
+         |cg AS (SELECT cid, list(vec_id ORDER BY vec_id) AS vs FROM ka_fin GROUP BY cid),
+         |pl AS (
+         |  SELECT cid, flatten(list_transform(vs, a ->
+         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
+         |  FROM cg),
+         |cand AS (SELECT cid, p.a AS a_id, p.b AS b_id FROM pl, unnest(pl.prs) AS t(p)),
+         |dotc AS (
+         |  SELECT c.cid, c.a_id, c.b_id,
+         |    CAST(sum(ea.q10 * eb.q10) AS BIGINT) AS dlo,
+         |    CAST(sum(ea.q20 * eb.q20) AS BIGINT) AS dhi
+         |  FROM cand c
+         |  JOIN se2 ea ON ea.vec_id = c.a_id
+         |  JOIN se2 eb ON eb.vec_id = c.b_id AND eb.d = ea.d
+         |  GROUP BY 1, 2, 3),
+         |vd AS (
+         |  SELECT d.cid,
+         |    (d.dlo > 0 AND $SemTauDen2 * d.dlo * d.dlo >= a.n10 * b.n10) AS vlo,
+         |    (d.dhi > 0 AND $SemTauDen2 * CAST(d.dhi AS HUGEINT) * d.dhi
+         |       >= CAST(a.n20 AS HUGEINT) * b.n20) AS vhi
+         |  FROM dotc d
+         |  JOIN sn2 a ON a.vec_id = d.a_id
+         |  JOIN sn2 b ON b.vec_id = d.b_id)
+         |SELECT CAST(cid AS BIGINT) AS cluster_id,
+         |  CAST(count(*) AS BIGINT) AS n_pairs,
+         |  CAST(count(*) FILTER (vlo) AS BIGINT) AS n_dup_lo,
+         |  CAST(count(*) FILTER (vhi) AS BIGINT) AS n_dup_hi,
+         |  CAST(count(*) FILTER (vlo <> vhi) AS BIGINT) AS n_flips
+         |FROM vd GROUP BY cid ORDER BY cluster_id""".stripMargin)),
 
     // BIGRAM-LM DOCUMENT SCORING (the KenLM-style quality signal without
     // the float log): train bigram conditional frequencies over the WHOLE
@@ -311,7 +412,7 @@ object CurationQueries extends graft.QueryModule {
     // high; line noise scores near zero. Tokenization is the engine-wide
     // split-on-' ' contract (q30/q58). Two corpus-vocab-keyed equi-joins,
     // all counts map-side combinable; no floats anywhere.
-    "q148_lm_score" -> ((s, dir) => {
+    Entry("q148_lm_score", (s, dir) => {
       val docs = t(s, dir, "documents")
       val bo = bigramsOf(docs, "doc_id")
       val c2 = bo.groupBy("w1", "w2").agg(count(lit(1)).as("cnt2"))
@@ -328,7 +429,21 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           coalesce(expr("s div n_bigrams"), lit(0L)).as("lm_micro"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      s"""WITH bo AS (
+         |  ${bigramSql("doc_id")}),
+         |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cnt2 FROM bo GROUP BY 1, 2),
+         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS cnt1 FROM bo GROUP BY 1),
+         |sc AS (
+         |  SELECT bo.doc_id,
+         |    (CAST(c2.cnt2 AS HUGEINT) * $Micro) // c1.cnt1 AS cond_micro
+         |  FROM bo JOIN c2 USING (w1, w2) JOIN c1 USING (w1)),
+         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |        CAST(sum(cond_micro) AS BIGINT) AS s FROM sc GROUP BY 1)
+         |SELECT d.doc_id, coalesce(pd.n_bigrams, 0) AS n_bigrams,
+         |  CAST(coalesce(pd.s // pd.n_bigrams, 0) AS BIGINT) AS lm_micro
+         |FROM documents d LEFT JOIN pd USING (doc_id)
+         |ORDER BY doc_id""".stripMargin)),
 
     // DSIR-STYLE IMPORTANCE SCORING (round 10; Xie et al.'s data
     // selection via importance resampling, re-expressed on the integer
@@ -344,7 +459,7 @@ object CurationQueries extends graft.QueryModule {
     // survivors. ONE corpus bigram expansion: target and candidate halves
     // expand separately (persisted — each feeds counts AND the join) and
     // union into the corpus counts.
-    "q176_importance_score" -> ((s, dir) => {
+    Entry("q176_importance_score", (s, dir) => {
       val docs = t(s, dir, "documents")
       val keep = (df: DataFrame) =>
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -377,7 +492,37 @@ object CurationQueries extends graft.QueryModule {
           col("score_micro").desc, col("doc_id"))
         .select("rnk", "doc_id", "source", "n_bigrams", "score_micro")
         .orderBy("rnk")
-    }),
+    }, Some(
+      // target/candidate bigram expansions + the probability-difference
+      // contrast; top-K via rnk <= K (the engine side is orderBy+limit)
+      s"""WITH tb AS (
+         |  ${bigramSql("doc_id", where = " WHERE source = 'src0'")}),
+         |cb AS (
+         |  ${bigramSql("doc_id", where = " WHERE source <> 'src0'")}),
+         |bo AS (SELECT * FROM tb UNION ALL SELECT * FROM cb),
+         |t2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS t2 FROM tb GROUP BY 1, 2),
+         |t1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS t1 FROM tb GROUP BY 1),
+         |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bo GROUP BY 1, 2),
+         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bo GROUP BY 1),
+         |sc AS (
+         |  SELECT cb.doc_id,
+         |    coalesce((CAST(t2.t2 AS HUGEINT) * $Micro) // t1.t1, 0)
+         |      - (CAST(c2.c2 AS HUGEINT) * $Micro) // c1.c1 AS contrast
+         |  FROM cb JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
+         |  LEFT JOIN t2 USING (w1, w2) LEFT JOIN t1 USING (w1)),
+         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |        CAST(sum(contrast) AS BIGINT) AS s FROM sc GROUP BY 1),
+         |ranked AS (
+         |  SELECT d.doc_id, d.source,
+         |    coalesce(pd.n_bigrams, 0) AS n_bigrams,
+         |    CAST(coalesce(pd.s // pd.n_bigrams, 0) AS BIGINT) AS score_micro
+         |  FROM documents d LEFT JOIN pd USING (doc_id)
+         |  WHERE d.source <> 'src0')
+         |SELECT CAST(rnk AS BIGINT) AS rnk, doc_id, source, n_bigrams, score_micro
+         |FROM (SELECT *, row_number() OVER
+         |        (ORDER BY score_micro DESC, doc_id) AS rnk
+         |      FROM ranked) t
+         |WHERE rnk <= $ImportanceTopK ORDER BY rnk""".stripMargin)),
 
     // TERM CO-OCCURRENCE LIFT (integer PMI stand-in: lift = p(a,b) /
     // (p(a)·p(b)) in micro-units — same ranking as PMI, no ln()): top-100
@@ -387,7 +532,7 @@ object CurationQueries extends graft.QueryModule {
     // orderBy+limit (TakeOrderedAndProject — a distributed per-partition
     // top-K merge, never a single-task rank of all ≤ V²/2 candidates);
     // rnk is assigned on the ≤ K survivors by the bounded no-window shape.
-    "q149_term_lift" -> ((s, dir) => {
+    Entry("q149_term_lift", (s, dir) => {
       val (_, cpair) = coocGraph(s, dir)
       val nDocs = t(s, dir, "documents").count() // parquet metadata count — no scan
       // DECIMAL intermediates on BOTH sides of the division (the q132
@@ -403,7 +548,18 @@ object CurationQueries extends graft.QueryModule {
         .select(col("rnk"), col("a"), col("b"),
           col("n_a"), col("n_b"), col("n_ab"), col("lift_micro"))
         .orderBy("rnk")
-    }),
+    }, Some(
+      s"""WITH $coocSql,
+         |lifted AS (
+         |  SELECT a, b, n_a, n_b, n_ab,
+         |    CAST((CAST(n_ab AS HUGEINT) * (SELECT count(*) FROM documents)
+         |      * $Micro) // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT) AS lift_micro
+         |  FROM cpair)
+         |SELECT CAST(rnk AS BIGINT) AS rnk, a, b, n_a, n_b, n_ab,
+         |  CAST(lift_micro AS BIGINT) AS lift_micro
+         |FROM (SELECT *, row_number() OVER (ORDER BY lift_micro DESC, a, b) AS rnk
+         |      FROM lifted) t
+         |WHERE rnk <= $LiftTopK ORDER BY rnk""".stripMargin)),
 
     // CLUSTER-STRATIFIED (diversity-preserving) SAMPLING: a fixed quota of
     // rows per k-means cluster, chosen by the portable Mix64 coordinate —
@@ -413,7 +569,7 @@ object CurationQueries extends graft.QueryModule {
     // quota rank is a per-cluster window ordered by (coord, id):
     // reproducible across runs, engines and cluster layouts, and nested
     // quotas compose (a 10-quota is a prefix of the 30-quota).
-    "q154_cluster_sample" -> ((s, dir) => {
+    Entry("q154_cluster_sample", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (asg, _) = Clustering.kmeans(emb, "vec_id", "embedding", KmK, KmUpdates)
       val w = Window.partitionBy("cid").orderBy("coord", "vec_id")
@@ -424,7 +580,17 @@ object CurationQueries extends graft.QueryModule {
         .select(col("cid").as("cluster_id"),
           col("smp_rank").cast("long").as("smp_rank"), col("vec_id"))
         .orderBy("cluster_id", "smp_rank")
-    }),
+    }, Some(
+      s"""WITH $kmeansSql,
+         |sc AS (SELECT vec_id, cid, ${OpsQueries.coordSql("vec_id")} AS coord
+         |       FROM ka_fin),
+         |rk AS (SELECT cid, vec_id,
+         |         row_number() OVER (PARTITION BY cid ORDER BY coord, vec_id) AS rn
+         |       FROM sc)
+         |SELECT CAST(cid AS BIGINT) AS cluster_id, CAST(rn AS BIGINT) AS smp_rank,
+         |  vec_id
+         |FROM rk WHERE rn <= $SampleQuota
+         |ORDER BY cluster_id, smp_rank""".stripMargin)),
 
     // HASHING-TRICK FEATURIZER: the text→vector bridge without a trained
     // vocabulary — every token lands in bucket rolling31(term) mod 64 and
@@ -435,13 +601,30 @@ object CurationQueries extends graft.QueryModule {
     // replay in DuckDB via the same HUGEINT fold, and pmod == unsigned
     // mod 64 because the low 6 bits of a two's-complement value don't
     // care about sign.
-    "q155_hash_featurize" -> ((s, dir) =>
+    Entry("q155_hash_featurize", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .withColumn("bucket",
           pmod(graft.functions.RollingHash.rollingHash64(col("term")), lit(HashDim)))
         .groupBy("doc_id", "bucket").agg(count(lit(1)).as("cnt"))
-        .orderBy("doc_id", "bucket")),
+        .orderBy("doc_id", "bucket"), Some(
+      // bucket on the UNSIGNED fold result: h % 64 of the HUGEINT equals
+      // Spark's pmod(signed, 64) — the low 6 bits are sign-agnostic
+      s"""WITH tokx AS (
+         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+         |tv AS (SELECT DISTINCT term FROM tokx),
+         |th AS (
+         |  SELECT term,
+         |    CAST(list_reduce(
+         |      list_prepend(CAST(1125899906842597 AS HUGEINT),
+         |        list_transform(range(1, length(term) + 1),
+         |          i -> CAST(ascii(substr(term, i, 1)) AS HUGEINT))),
+         |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)
+         |      % $HashDim AS BIGINT) AS bucket
+         |  FROM tv)
+         |SELECT t.doc_id, h.bucket, CAST(count(*) AS BIGINT) AS cnt
+         |FROM tokx t JOIN th h USING (term)
+         |GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin)),
 
     // VOCABULARY COVERAGE CURVE — the tokenizer-sizing readout: what share
     // of all token occurrences the top-K vocabulary covers, at K = 10 /
@@ -450,7 +633,7 @@ object CurationQueries extends graft.QueryModule {
     // one-task window over the vocabulary, q119's shape); each term then
     // joins every checkpoint level ≥ its rank via an exploded bounded
     // array (q140's level-explode pattern, no theta join).
-    "q157_vocab_coverage" -> ((s, dir) => {
+    Entry("q157_vocab_coverage", (s, dir) => {
       val tok = t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
       val occ = tok.count() // one scan — the share denominator
@@ -468,7 +651,23 @@ object CurationQueries extends graft.QueryModule {
           expr(s"cast((cast(covered as decimal(38,0)) * ${Micro}L)" +
             s" div ${occ}L as bigint)").as("share_micro"))
         .orderBy("k")
-    }),
+    }, Some(
+      s"""WITH tokx AS (
+         |  SELECT unnest(string_split(text, ' ')) AS term FROM documents),
+         |tf AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
+         |       FROM tokx GROUP BY term),
+         |rk AS (SELECT cnt,
+         |         row_number() OVER (ORDER BY cnt DESC, term) AS rn FROM tf),
+         |lv AS (
+         |  SELECT l.k, rk.cnt
+         |  FROM (VALUES ${CoverageKs.map(k => s"($k)").mkString(", ")}) l(k)
+         |  JOIN rk ON rk.rn <= l.k)
+         |SELECT CAST(k AS BIGINT) AS k, CAST(count(*) AS BIGINT) AS n_terms,
+         |  CAST(sum(cnt) AS BIGINT) AS covered,
+         |  CAST((SELECT count(*) FROM tokx) AS BIGINT) AS total_occurrences,
+         |  CAST((CAST(sum(cnt) AS HUGEINT) * $Micro)
+         |    // (SELECT count(*) FROM tokx) AS BIGINT) AS share_micro
+         |FROM lv GROUP BY k ORDER BY k""".stripMargin)),
 
     // PAGERANK over the co-occurrence graph (the iterative-graph-algorithm
     // family: q28's min-label propagation is reachability, this is mass
@@ -479,7 +678,7 @@ object CurationQueries extends graft.QueryModule {
     // Each round is one edges⋈ranks equi-join + a dst-keyed partial agg:
     // the generic distributed PageRank shape (edge-partitioned, no driver
     // state at all); the vocab bound only sizes THIS registry entry.
-    "q151_pagerank" -> ((s, dir) => {
+    Entry("q151_pagerank", (s, dir) => {
       val (voc, cpair) = coocGraph(s, dir)
       val und = cpair.select(col("a"), col("b"))
       // persist the loop-invariant frames across the unrolled rounds
@@ -518,7 +717,19 @@ object CurationQueries extends graft.QueryModule {
         .select(col("rnk"), col("u").as("term"),
           coalesce(col("deg"), lit(0L)).as("deg"), col("pr").as("pr_micro"))
         .orderBy("rnk")
-    }),
+    }, Some(
+      s"""WITH $coocSql,
+         |edges AS (SELECT a AS u, b AS v FROM cpair
+         |          UNION ALL SELECT b AS u, a AS v FROM cpair),
+         |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY u),
+         |pr0 AS (SELECT term AS u, CAST($Micro AS BIGINT) AS pr FROM voc),
+         |${(1 to PrIters).map(i => prIterSql(i, s"pr${i - 1}")).mkString(",\n")}
+         |SELECT CAST(rnk AS BIGINT) AS rnk, u AS term,
+         |  coalesce(d.deg, 0) AS deg, pr AS pr_micro
+         |FROM (SELECT u, pr, row_number() OVER (ORDER BY pr DESC, u) AS rnk
+         |      FROM pr$PrIters) t
+         |LEFT JOIN deg d USING (u)
+         |WHERE rnk <= $PrTopK ORDER BY rnk""".stripMargin)),
 
     // ROBUST OUTLIER GATE: per event type, low-median and MAD (median
     // absolute deviation) of the cents-quantized value, flagging rows
@@ -528,7 +739,7 @@ object CurationQueries extends graft.QueryModule {
     // fixed position of a sorted multiset is not. This is the EXACT twin:
     // per-type sort windows are fine while a type's rows fit a few
     // partitions; at 100 TB the q71 histogram sketch is the median path.
-    "q152_mad_outliers" -> ((s, dir) => {
+    Entry("q152_mad_outliers", (s, dir) => {
       val ev = t(s, dir, "events").where(col("value").isNotNull)
         .select(col("event_type"), col("event_id"),
           floor(col("value") * 100).cast("long").as("v"))
@@ -550,7 +761,32 @@ object CurationQueries extends graft.QueryModule {
           max(col("mad_c")).as("mad_c"),
           count(when(col("adev") > col("mad_c") * MadK, 1)).as("n_outliers"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // the value at a fixed position of a sorted multiset is deterministic
+      // even though row_number tie ASSIGNMENT is not — both engines pick the
+      // same med_c/mad_c. floor(value·100) is the same double op both sides.
+      s"""WITH e AS (
+         |  SELECT event_type, event_id, CAST(floor(value * 100) AS BIGINT) AS v
+         |  FROM events WHERE value IS NOT NULL),
+         |r AS (
+         |  SELECT event_type, v,
+         |    row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
+         |    count(*) OVER (PARTITION BY event_type) AS n
+         |  FROM e),
+         |med AS (SELECT event_type, v AS med_c, n FROM r WHERE rn = (n + 1) // 2),
+         |dv AS (
+         |  SELECT e.event_type, abs(e.v - m.med_c) AS adev, m.n, m.med_c
+         |  FROM e JOIN med m USING (event_type)),
+         |rd AS (
+         |  SELECT event_type, adev, n,
+         |    row_number() OVER (PARTITION BY event_type ORDER BY adev) AS rn
+         |  FROM dv),
+         |mad AS (SELECT event_type, adev AS mad_c FROM rd WHERE rn = (n + 1) // 2)
+         |SELECT d.event_type, CAST(max(d.n) AS BIGINT) AS n,
+         |  max(d.med_c) AS med_c, max(m.mad_c) AS mad_c,
+         |  CAST(count(*) FILTER (d.adev > m.mad_c * $MadK) AS BIGINT) AS n_outliers
+         |FROM dv d JOIN mad m USING (event_type)
+         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // SOURCE-OVERLAP MATRIX: pairwise word-bigram Jaccard between sources
     // in 2^20 micro-units — the "which corpus slices duplicate each
@@ -559,7 +795,7 @@ object CurationQueries extends graft.QueryModule {
     // is the source-level planning view). Intersections come from an
     // EQUI-join on the bigram — shuffle keyed by shingle, never a source
     // cross join; the output is #source-pairs rows (dimension-scale).
-    "q153_source_overlap" -> ((s, dir) => {
+    Entry("q153_source_overlap", (s, dir) => {
       // the distinct (source, bigram) frame feeds four consumers (both
       // sides of the intersection join + both size rollups); the four
       // canonically-identical distinct pipelines DEDUPE AT RUNTIME via
@@ -585,7 +821,24 @@ object CurationQueries extends graft.QueryModule {
           expr(s"cast((cast(n_inter as decimal(38,0)) * ${Micro}L)" +
             s" div (n_a + n_b - n_inter) as bigint)").as("jaccard_micro"))
         .orderBy("source_a", "source_b")
-    }),
+    }, Some(
+      s"""WITH bg AS (
+         |  SELECT DISTINCT source, w1, w2 FROM (
+         |  ${bigramSql("source")}) t1),
+         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS sz FROM bg GROUP BY source),
+         |inter AS (
+         |  SELECT a.source AS source_a, b.source AS source_b,
+         |    CAST(count(*) AS BIGINT) AS n_inter
+         |  FROM bg a JOIN bg b
+         |    ON a.w1 = b.w1 AND a.w2 = b.w2 AND a.source < b.source
+         |  GROUP BY 1, 2)
+         |SELECT i.source_a, i.source_b, sa.sz AS n_a, sb.sz AS n_b, i.n_inter,
+         |  CAST((CAST(i.n_inter AS HUGEINT) * $Micro)
+         |    // (sa.sz + sb.sz - i.n_inter) AS BIGINT) AS jaccard_micro
+         |FROM inter i
+         |JOIN sz sa ON sa.source = i.source_a
+         |JOIN sz sb ON sb.source = i.source_b
+         |ORDER BY i.source_a, i.source_b""".stripMargin)),
 
     // TRIGRAM STUPID-BACKOFF LM on a HELD-OUT split (the evaluation form
     // of q148: scoring the training corpus with its own LM never exercises
@@ -596,7 +849,7 @@ object CurationQueries extends graft.QueryModule {
     // conditional (stupid backoff), else 0 — all integer micro-units.
     // Scale: four vocab-keyed LEFT equi-joins over count tables, all
     // map-side combinable; the split is a pure row-key predicate.
-    "q159_backoff_lm" -> ((s, dir) => {
+    Entry("q159_backoff_lm", (s, dir) => {
       val docs = t(s, dir, "documents")
       val isTrain =
         graft.functions.Mix64.sampleCoord(col("doc_id")) < LmTrainCap
@@ -636,7 +889,45 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("n_backoff"), lit(0L)).as("n_backoff"),
           coalesce(expr("ssum div n_trigrams"), lit(0L)).as("lm_micro"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      s"""WITH tg AS (
+         |  ${trigramSql("doc_id", s" WHERE ${lmTrainPred("doc_id")}")}),
+         |c3t AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c3
+         |        FROM tg GROUP BY 1, 2, 3),
+         |ctx3t AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS ctx3
+         |          FROM c3t GROUP BY 1, 2),
+         |bot AS (
+         |  ${bigramSql("doc_id", s" WHERE ${lmTrainPred("doc_id")}")}),
+         |c2t AS (SELECT w1 AS w2, w2 AS w3, CAST(count(*) AS BIGINT) AS c2b
+         |        FROM bot GROUP BY 1, 2),
+         |ctx2t AS (SELECT w2, CAST(sum(c2b) AS BIGINT) AS ctx2
+         |          FROM c2t GROUP BY 1),
+         |tt AS (
+         |  ${trigramSql("doc_id", s" WHERE NOT (${lmTrainPred("doc_id")})")}),
+         |sc AS (
+         |  SELECT tt.doc_id,
+         |    CASE WHEN c3 IS NOT NULL
+         |      THEN CAST((CAST(c3 AS HUGEINT) * $Micro) // ctx3 AS BIGINT)
+         |      WHEN c2b IS NOT NULL
+         |      THEN CAST(($BackoffNum * ((CAST(c2b AS HUGEINT) * $Micro)
+         |        // ctx2)) // $BackoffDen AS BIGINT)
+         |      ELSE 0 END AS s,
+         |    CASE WHEN c3 IS NULL THEN 1 ELSE 0 END AS backed
+         |  FROM tt
+         |  LEFT JOIN c3t USING (w1, w2, w3)
+         |  LEFT JOIN ctx3t USING (w1, w2)
+         |  LEFT JOIN c2t USING (w2, w3)
+         |  LEFT JOIN ctx2t USING (w2)),
+         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
+         |        CAST(sum(backed) AS BIGINT) AS n_backoff,
+         |        CAST(sum(s) AS BIGINT) AS ssum
+         |       FROM sc GROUP BY 1)
+         |SELECT d.doc_id, coalesce(pd.n_trigrams, 0) AS n_trigrams,
+         |  coalesce(pd.n_backoff, 0) AS n_backoff,
+         |  CAST(coalesce(pd.ssum // pd.n_trigrams, 0) AS BIGINT) AS lm_micro
+         |FROM documents d LEFT JOIN pd USING (doc_id)
+         |WHERE NOT (${lmTrainPred("d.doc_id")})
+         |ORDER BY doc_id""".stripMargin)),
 
     // CLUSTER-THEN-LABEL semi-supervised classification: k-means clusters,
     // a seed set keeps its true label (vec_id < 100 — the "human-labeled
@@ -646,7 +937,7 @@ object CurationQueries extends graft.QueryModule {
     // makes propagation QUALITY a driver-tracked number, like q47/q113
     // track recall. One aggregation per level — no joins beyond the
     // k-bounded majority table.
-    "q160_cluster_label" -> ((s, dir) => {
+    Entry("q160_cluster_label", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val (asg, _) = Clustering.kmeans(emb, "vec_id", "embedding", KmK, KmUpdates)
       val members = asg.select(col("id").as("vec_id"), col("cid"))
@@ -669,7 +960,28 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("n_seeds"), lit(0L)).as("n_seeds"),
           col("n_unlabeled"), col("n_correct"))
         .orderBy("cluster_id")
-    }),
+    }, Some(
+      s"""WITH $kmeansSql,
+         |mem AS (SELECT k.vec_id, k.cid, CAST(e.label AS BIGINT) AS label
+         |        FROM ka_fin k JOIN embeddings e USING (vec_id)),
+         |sdl AS (SELECT * FROM mem WHERE vec_id < $SeedCap),
+         |vts AS (SELECT cid, label, count(*) AS v FROM sdl GROUP BY 1, 2),
+         |mj AS (SELECT cid, label AS maj_label FROM (
+         |        SELECT cid, label,
+         |          row_number() OVER (PARTITION BY cid ORDER BY v DESC, label) AS rn
+         |        FROM vts) t WHERE rn = 1),
+         |scnt AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_seeds
+         |         FROM sdl GROUP BY cid),
+         |un AS (SELECT m.cid, m.label, mj.maj_label
+         |       FROM mem m LEFT JOIN mj USING (cid)
+         |       WHERE m.vec_id >= $SeedCap)
+         |SELECT CAST(un.cid AS BIGINT) AS cluster_id,
+         |  CAST(max(coalesce(un.maj_label, -1)) AS BIGINT) AS maj_label,
+         |  CAST(coalesce(max(scnt.n_seeds), 0) AS BIGINT) AS n_seeds,
+         |  CAST(count(*) AS BIGINT) AS n_unlabeled,
+         |  CAST(count(*) FILTER (un.label = un.maj_label) AS BIGINT) AS n_correct
+         |FROM un LEFT JOIN scnt ON scnt.cid = un.cid
+         |GROUP BY un.cid ORDER BY cluster_id""".stripMargin)),
 
     // CURATION PIPELINE v2 — the round-9 layer COMPOSED into one plan
     // (q91/q55's discipline over the new operators): exact dedup
@@ -681,7 +993,7 @@ object CurationQueries extends graft.QueryModule {
     // reproducible-prefix rule). Per-source funnel report with a kept-id
     // checksum: every stage's count is driver-checked, so a regression in
     // ANY composed operator reddens this one row.
-    "q165_curation_v2" -> ((s, dir) => {
+    Entry("q165_curation_v2", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
       val keepIds = docs.select(col("doc_id"), md5(col("text")).as("h"))
         .groupBy("h").agg(min(col("doc_id")).as("doc_id")).select("doc_id")
@@ -744,7 +1056,58 @@ object CurationQueries extends graft.QueryModule {
           coalesce(col("n_final"), lit(0L)).as("n_final"),
           coalesce(col("kept_id_sum"), lit(0L)).as("kept_id_sum"))
         .orderBy("source")
-    }),
+    }, Some(
+      s"""WITH ddv AS (
+         |  SELECT d.doc_id, d.source, d.text FROM documents d
+         |  JOIN (SELECT min(doc_id) AS doc_id FROM
+         |         (SELECT doc_id, md5(text) AS h FROM documents) t0
+         |        GROUP BY h) k USING (doc_id)),
+         |bo2 AS (
+         |  ${bigramSql("doc_id", from = "ddv")}),
+         |c2x AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cnt2
+         |        FROM bo2 GROUP BY 1, 2),
+         |c1x AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1
+         |        FROM c2x GROUP BY 1),
+         |lmx AS (
+         |  SELECT bo2.doc_id,
+         |    CAST(sum((CAST(cnt2 AS HUGEINT) * $Micro) // cnt1)
+         |      // count(*) AS BIGINT) AS lm
+         |  FROM bo2 JOIN c2x USING (w1, w2) JOIN c1x USING (w1)
+         |  GROUP BY 1),
+         |gt AS (SELECT ddv.doc_id, ddv.source
+         |       FROM ddv LEFT JOIN lmx USING (doc_id)
+         |       WHERE coalesce(lmx.lm, 0) >= $LmGate),
+         |ps2 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_gated
+         |        FROM gt GROUP BY 1),
+         |wt2 AS (SELECT source, n_gated,
+         |         CAST(floor(sqrt(CAST(n_gated AS DOUBLE)) * $Micro) AS BIGINT) AS wm
+         |        FROM ps2),
+         |tw2 AS (SELECT CAST(sum(wm) AS BIGINT) AS tw FROM wt2),
+         |qt AS (SELECT source, n_gated,
+         |        CAST((CAST(wm AS HUGEINT) * $CurationQuota) // tw AS BIGINT) AS quota
+         |       FROM wt2, tw2),
+         |rk2 AS (SELECT source, doc_id,
+         |         row_number() OVER (PARTITION BY source
+         |           ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
+         |        FROM gt),
+         |fin AS (SELECT rk2.source, rk2.doc_id
+         |        FROM rk2 JOIN qt USING (source) WHERE rk2.r <= qt.quota),
+         |st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_start
+         |       FROM documents GROUP BY 1),
+         |dc AS (SELECT source, CAST(count(*) AS BIGINT) AS n_deduped
+         |       FROM ddv GROUP BY 1),
+         |fr AS (SELECT source, CAST(count(*) AS BIGINT) AS n_final,
+         |        CAST(sum(doc_id) AS BIGINT) AS kept_id_sum
+         |       FROM fin GROUP BY 1)
+         |SELECT st.source, st.n_start,
+         |  coalesce(dc.n_deduped, 0) AS n_deduped,
+         |  coalesce(qt.n_gated, 0) AS n_gated,
+         |  coalesce(qt.quota, 0) AS quota,
+         |  coalesce(fr.n_final, 0) AS n_final,
+         |  coalesce(fr.kept_id_sum, 0) AS kept_id_sum
+         |FROM st LEFT JOIN dc USING (source) LEFT JOIN qt USING (source)
+         |LEFT JOIN fr USING (source)
+         |ORDER BY st.source""".stripMargin)),
 
     // TEMPERATURE-SCALED MIXTURE (α = 1/2): the multilingual-LM sampling
     // recipe — source weights ∝ √share flatten the mix so head sources
@@ -759,7 +1122,7 @@ object CurationQueries extends graft.QueryModule {
     // unpartitioned window, no second aggregate branch, ONE evaluation of
     // the rollup; the r18 agg+broadcast-join variant measured +0.06 s per
     // invocation at sf0.1 over this single-pass shape).
-    "q164_temperature_mix" -> ((s, dir) => {
+    Entry("q164_temperature_mix", (s, dir) => {
       val wAll = graft.ops.Ranking.boundedAll(col("n_docs"))
       t(s, dir, "documents")
         .groupBy("source").agg(count(lit(1)).as("n_docs"))
@@ -777,7 +1140,24 @@ object CurationQueries extends graft.QueryModule {
           expr(s"cast((cast(weight_micro as decimal(38,0)) * ${MixQuota}L)" +
             " div total_weight as bigint)").as("quota"))
         .orderBy("source")
-    }),
+    }, Some(
+      s"""WITH ps AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+         |           FROM documents GROUP BY source),
+         |wt AS (SELECT source, n_docs,
+         |        CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * $Micro) AS BIGINT)
+         |          AS weight_micro
+         |       FROM ps),
+         |tt AS (SELECT CAST(sum(n_docs) AS BIGINT) AS td,
+         |        CAST(sum(weight_micro) AS BIGINT) AS tw FROM wt)
+         |SELECT wt.source, wt.n_docs,
+         |  CAST((CAST(n_docs AS HUGEINT) * $Micro) // tt.td AS BIGINT)
+         |    AS raw_share_micro,
+         |  wt.weight_micro,
+         |  CAST((CAST(weight_micro AS HUGEINT) * $Micro) // tt.tw AS BIGINT)
+         |    AS mix_share_micro,
+         |  CAST((CAST(weight_micro AS HUGEINT) * $MixQuota) // tt.tw AS BIGINT)
+         |    AS quota
+         |FROM wt, tt ORDER BY wt.source""".stripMargin)),
 
     // SOURCE-INTERLEAVED TRAINING ORDER: the mixture-faithful epoch plan —
     // sources take strict turns (position = (rank_within_source − 1)·S +
@@ -790,7 +1170,7 @@ object CurationQueries extends graft.QueryModule {
     // rank, so no unpartitioned WindowExec appears in the plan.
     // Positions where a short source has exhausted stay vacant by design
     // (the plan's consumer compacts or re-deals the tail).
-    "q161_interleave_plan" -> ((s, dir) => {
+    Entry("q161_interleave_plan", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("source"), col("doc_id"))
       val srcIdx = graft.ops.Ranking.boundedRank(
           docs.select("source").distinct(), "_src_rn", col("source"))
@@ -805,7 +1185,23 @@ object CurationQueries extends graft.QueryModule {
         .where(col("pos") <= InterleaveTopK)
         .select(col("pos"), col("source"), col("doc_id"))
         .orderBy("pos")
-    }),
+    }, Some(
+      s"""WITH si AS (
+         |  SELECT source,
+         |    row_number() OVER (ORDER BY source) - 1 AS src_idx
+         |  FROM (SELECT DISTINCT source FROM documents)),
+         |rk AS (
+         |  SELECT source, doc_id,
+         |    row_number() OVER (PARTITION BY source
+         |      ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
+         |  FROM documents)
+         |SELECT CAST((rk.r - 1) * (SELECT count(*) FROM si) + si.src_idx + 1
+         |    AS BIGINT) AS pos,
+         |  rk.source, rk.doc_id
+         |FROM rk JOIN si USING (source)
+         |WHERE (rk.r - 1) * (SELECT count(*) FROM si) + si.src_idx + 1
+         |  <= $InterleaveTopK
+         |ORDER BY pos""".stripMargin)),
 
     // SHARD COMPACTION PLANNER: next-fit bin-packing of per-source file
     // sequences into ~target-byte output groups via an exclusive running
@@ -814,7 +1210,7 @@ object CurationQueries extends graft.QueryModule {
     // per-source ordered by file id — metadata scale (one row per FILE,
     // not per record), the same footing as q117's shard manifests. Output:
     // one row per planned compaction group with its file span and fill.
-    "q150_compaction_plan" -> ((s, dir) => {
+    Entry("q150_compaction_plan", (s, dir) => {
       val files = t(s, dir, "documents")
         .select(col("source"), col("doc_id").as("file_id"),
           col("n_chars").as("bytes"))
@@ -826,7 +1222,18 @@ object CurationQueries extends graft.QueryModule {
         .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("group_bytes"),
           min(col("file_id")).as("first_file"), max(col("file_id")).as("last_file"))
         .orderBy("source", "group_id")
-    }))
+    }, Some(
+      s"""WITH f AS (
+         |  SELECT source, doc_id AS file_id, n_chars AS bytes,
+         |    coalesce(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
+         |  FROM documents)
+         |SELECT source, CAST(prefix // $CompactTarget AS BIGINT) AS group_id,
+         |  CAST(count(*) AS BIGINT) AS n_files,
+         |  CAST(sum(bytes) AS BIGINT) AS group_bytes,
+         |  min(file_id) AS first_file, max(file_id) AS last_file
+         |FROM f GROUP BY 1, 2
+         |ORDER BY source, group_id""".stripMargin)))
 
   /** Unrolled Lloyd iteration i (CTE suffix i, previous centroids $prevC):
     * assignment argmin by (d2, cid) → truncating integer mean (DuckDB //
@@ -923,449 +1330,4 @@ object CurationQueries extends graft.QueryModule {
        |    SELECT e.v AS u2, sum(p.pr // d.deg) AS s
        |    FROM edges e JOIN $prev p ON p.u = e.u JOIN deg d ON d.u = e.u
        |    GROUP BY e.v) s ON s.u2 = n.term)""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    // guarantee row: every boolean must hold at every SF (q137 pattern)
-    "q188_semdedup_scaled" ->
-      """SELECT true AS all_assigned, true AS scaled_pair_work_bounded,
-        |  true AS k_scales, true AS keeps_one_per_cluster""".stripMargin,
-
-    "q146_kmeans" ->
-      s"""WITH $kmeansSql,
-         |kstat AS (
-         |  SELECT cid, CAST(sum(cq) AS BIGINT) AS cq_sum,
-         |    min(cq) AS cq_min, max(cq) AS cq_max
-         |  FROM kc$KmUpdates GROUP BY cid),
-         |kagg AS (
-         |  SELECT cid, CAST(count(*) AS BIGINT) AS n_points,
-         |    CAST(sum(d2 // ${Clustering.Scale}) AS BIGINT) AS inertia_m
-         |  FROM ka_fin GROUP BY cid)
-         |SELECT CAST(s.cid AS BIGINT) AS cluster_id,
-         |  coalesce(a.n_points, 0) AS n_points,
-         |  coalesce(a.inertia_m, 0) AS inertia_m,
-         |  s.cq_sum, s.cq_min, s.cq_max
-         |FROM kstat s LEFT JOIN kagg a USING (cid)
-         |ORDER BY cluster_id""".stripMargin,
-
-    // cluster member lists expanded to a<b pairs (group-then-expand — the
-    // deep ka_fin chain is referenced ONCE; see the q139 DuckDB self-join
-    // note), integer dot/norms from the shallow exploded quantization
-    "q147_semantic_dedup" ->
-      s"""WITH $kmeansSql,
-         |se AS (
-         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * $SemScale) AS BIGINT) AS sq
-         |  FROM embeddings),
-         |sn AS (SELECT vec_id, CAST(sum(sq * sq) AS BIGINT) AS n2 FROM se GROUP BY 1),
-         |cg AS (SELECT cid, list(vec_id ORDER BY vec_id) AS vs FROM ka_fin GROUP BY cid),
-         |pl AS (
-         |  SELECT cid, flatten(list_transform(vs, a ->
-         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
-         |  FROM cg),
-         |cand AS (SELECT cid, p.a AS a_id, p.b AS b_id FROM pl, unnest(pl.prs) AS t(p)),
-         |dotc AS (
-         |  SELECT c.cid, c.a_id, c.b_id, CAST(sum(ea.sq * eb.sq) AS BIGINT) AS dot
-         |  FROM cand c
-         |  JOIN se ea ON ea.vec_id = c.a_id
-         |  JOIN se eb ON eb.vec_id = c.b_id AND eb.d = ea.d
-         |  GROUP BY 1, 2, 3),
-         |dups AS (
-         |  SELECT d.cid, d.a_id, d.b_id
-         |  FROM dotc d JOIN sn a ON a.vec_id = d.a_id JOIN sn b ON b.vec_id = d.b_id
-         |  WHERE d.dot > 0 AND $SemTauDen2 * d.dot * d.dot >= a.n2 * b.n2),
-         |du AS (SELECT DISTINCT cid, b_id FROM dups),
-         |drp AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_dropped,
-         |         CAST(sum(b_id) AS BIGINT) AS dropped_id_sum FROM du GROUP BY cid),
-         |np AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_dup_pairs FROM dups GROUP BY cid),
-         |mem AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-         |         CAST(sum(vec_id) AS BIGINT) AS id_sum FROM ka_fin GROUP BY cid)
-         |SELECT CAST(m.cid AS BIGINT) AS cluster_id, m.n_members,
-         |  coalesce(np.n_dup_pairs, 0) AS n_dup_pairs,
-         |  coalesce(drp.n_dropped, 0) AS n_dropped,
-         |  m.id_sum - coalesce(drp.dropped_id_sum, 0) AS kept_id_sum
-         |FROM mem m LEFT JOIN np USING (cid) LEFT JOIN drp USING (cid)
-         |ORDER BY cluster_id""".stripMargin,
-
-    "q148_lm_score" ->
-      s"""WITH bo AS (
-         |  ${bigramSql("doc_id")}),
-         |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cnt2 FROM bo GROUP BY 1, 2),
-         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS cnt1 FROM bo GROUP BY 1),
-         |sc AS (
-         |  SELECT bo.doc_id,
-         |    (CAST(c2.cnt2 AS HUGEINT) * $Micro) // c1.cnt1 AS cond_micro
-         |  FROM bo JOIN c2 USING (w1, w2) JOIN c1 USING (w1)),
-         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |        CAST(sum(cond_micro) AS BIGINT) AS s FROM sc GROUP BY 1)
-         |SELECT d.doc_id, coalesce(pd.n_bigrams, 0) AS n_bigrams,
-         |  CAST(coalesce(pd.s // pd.n_bigrams, 0) AS BIGINT) AS lm_micro
-         |FROM documents d LEFT JOIN pd USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // target/candidate bigram expansions + the probability-difference
-    // contrast; top-K via rnk <= K (the engine side is orderBy+limit)
-    "q176_importance_score" ->
-      s"""WITH tb AS (
-         |  ${bigramSql("doc_id", where = " WHERE source = 'src0'")}),
-         |cb AS (
-         |  ${bigramSql("doc_id", where = " WHERE source <> 'src0'")}),
-         |bo AS (SELECT * FROM tb UNION ALL SELECT * FROM cb),
-         |t2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS t2 FROM tb GROUP BY 1, 2),
-         |t1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS t1 FROM tb GROUP BY 1),
-         |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c2 FROM bo GROUP BY 1, 2),
-         |c1 AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM bo GROUP BY 1),
-         |sc AS (
-         |  SELECT cb.doc_id,
-         |    coalesce((CAST(t2.t2 AS HUGEINT) * $Micro) // t1.t1, 0)
-         |      - (CAST(c2.c2 AS HUGEINT) * $Micro) // c1.c1 AS contrast
-         |  FROM cb JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-         |  LEFT JOIN t2 USING (w1, w2) LEFT JOIN t1 USING (w1)),
-         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |        CAST(sum(contrast) AS BIGINT) AS s FROM sc GROUP BY 1),
-         |ranked AS (
-         |  SELECT d.doc_id, d.source,
-         |    coalesce(pd.n_bigrams, 0) AS n_bigrams,
-         |    CAST(coalesce(pd.s // pd.n_bigrams, 0) AS BIGINT) AS score_micro
-         |  FROM documents d LEFT JOIN pd USING (doc_id)
-         |  WHERE d.source <> 'src0')
-         |SELECT CAST(rnk AS BIGINT) AS rnk, doc_id, source, n_bigrams, score_micro
-         |FROM (SELECT *, row_number() OVER
-         |        (ORDER BY score_micro DESC, doc_id) AS rnk
-         |      FROM ranked) t
-         |WHERE rnk <= $ImportanceTopK ORDER BY rnk""".stripMargin,
-
-    "q149_term_lift" ->
-      s"""WITH $coocSql,
-         |lifted AS (
-         |  SELECT a, b, n_a, n_b, n_ab,
-         |    CAST((CAST(n_ab AS HUGEINT) * (SELECT count(*) FROM documents)
-         |      * $Micro) // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT) AS lift_micro
-         |  FROM cpair)
-         |SELECT CAST(rnk AS BIGINT) AS rnk, a, b, n_a, n_b, n_ab,
-         |  CAST(lift_micro AS BIGINT) AS lift_micro
-         |FROM (SELECT *, row_number() OVER (ORDER BY lift_micro DESC, a, b) AS rnk
-         |      FROM lifted) t
-         |WHERE rnk <= $LiftTopK ORDER BY rnk""".stripMargin,
-
-    "q150_compaction_plan" ->
-      s"""WITH f AS (
-         |  SELECT source, doc_id AS file_id, n_chars AS bytes,
-         |    coalesce(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-         |  FROM documents)
-         |SELECT source, CAST(prefix // $CompactTarget AS BIGINT) AS group_id,
-         |  CAST(count(*) AS BIGINT) AS n_files,
-         |  CAST(sum(bytes) AS BIGINT) AS group_bytes,
-         |  min(file_id) AS first_file, max(file_id) AS last_file
-         |FROM f GROUP BY 1, 2
-         |ORDER BY source, group_id""".stripMargin,
-
-    "q154_cluster_sample" ->
-      s"""WITH $kmeansSql,
-         |sc AS (SELECT vec_id, cid, ${OpsQueries.coordSql("vec_id")} AS coord
-         |       FROM ka_fin),
-         |rk AS (SELECT cid, vec_id,
-         |         row_number() OVER (PARTITION BY cid ORDER BY coord, vec_id) AS rn
-         |       FROM sc)
-         |SELECT CAST(cid AS BIGINT) AS cluster_id, CAST(rn AS BIGINT) AS smp_rank,
-         |  vec_id
-         |FROM rk WHERE rn <= $SampleQuota
-         |ORDER BY cluster_id, smp_rank""".stripMargin,
-
-    // bucket on the UNSIGNED fold result: h % 64 of the HUGEINT equals
-    // Spark's pmod(signed, 64) — the low 6 bits are sign-agnostic
-    "q155_hash_featurize" ->
-      s"""WITH tokx AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |tv AS (SELECT DISTINCT term FROM tokx),
-         |th AS (
-         |  SELECT term,
-         |    CAST(list_reduce(
-         |      list_prepend(CAST(1125899906842597 AS HUGEINT),
-         |        list_transform(range(1, length(term) + 1),
-         |          i -> CAST(ascii(substr(term, i, 1)) AS HUGEINT))),
-         |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT)
-         |      % $HashDim AS BIGINT) AS bucket
-         |  FROM tv)
-         |SELECT t.doc_id, h.bucket, CAST(count(*) AS BIGINT) AS cnt
-         |FROM tokx t JOIN th h USING (term)
-         |GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-
-    "q157_vocab_coverage" ->
-      s"""WITH tokx AS (
-         |  SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-         |tf AS (SELECT term, CAST(count(*) AS BIGINT) AS cnt
-         |       FROM tokx GROUP BY term),
-         |rk AS (SELECT cnt,
-         |         row_number() OVER (ORDER BY cnt DESC, term) AS rn FROM tf),
-         |lv AS (
-         |  SELECT l.k, rk.cnt
-         |  FROM (VALUES ${CoverageKs.map(k => s"($k)").mkString(", ")}) l(k)
-         |  JOIN rk ON rk.rn <= l.k)
-         |SELECT CAST(k AS BIGINT) AS k, CAST(count(*) AS BIGINT) AS n_terms,
-         |  CAST(sum(cnt) AS BIGINT) AS covered,
-         |  CAST((SELECT count(*) FROM tokx) AS BIGINT) AS total_occurrences,
-         |  CAST((CAST(sum(cnt) AS HUGEINT) * $Micro)
-         |    // (SELECT count(*) FROM tokx) AS BIGINT) AS share_micro
-         |FROM lv GROUP BY k ORDER BY k""".stripMargin,
-
-    // one unnest carries the raw element; both lattices derive from it —
-    // no aligned-multi-unnest assumption. Pairs via q147's group-then-
-    // expand (the deep chain referenced once).
-    "q166_semdedup_sensitivity" ->
-      s"""WITH $kmeansSql,
-         |se0 AS (
-         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-         |    CAST(unnest(embedding) AS DOUBLE) AS x
-         |  FROM embeddings),
-         |se2 AS (
-         |  SELECT vec_id, d,
-         |    CAST(floor(x * $SemScale) AS BIGINT) AS q10,
-         |    CAST(floor(x * $SemScaleHi) AS BIGINT) AS q20
-         |  FROM se0),
-         |sn2 AS (
-         |  SELECT vec_id, CAST(sum(q10 * q10) AS BIGINT) AS n10,
-         |    CAST(sum(q20 * q20) AS BIGINT) AS n20
-         |  FROM se2 GROUP BY 1),
-         |cg AS (SELECT cid, list(vec_id ORDER BY vec_id) AS vs FROM ka_fin GROUP BY cid),
-         |pl AS (
-         |  SELECT cid, flatten(list_transform(vs, a ->
-         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
-         |  FROM cg),
-         |cand AS (SELECT cid, p.a AS a_id, p.b AS b_id FROM pl, unnest(pl.prs) AS t(p)),
-         |dotc AS (
-         |  SELECT c.cid, c.a_id, c.b_id,
-         |    CAST(sum(ea.q10 * eb.q10) AS BIGINT) AS dlo,
-         |    CAST(sum(ea.q20 * eb.q20) AS BIGINT) AS dhi
-         |  FROM cand c
-         |  JOIN se2 ea ON ea.vec_id = c.a_id
-         |  JOIN se2 eb ON eb.vec_id = c.b_id AND eb.d = ea.d
-         |  GROUP BY 1, 2, 3),
-         |vd AS (
-         |  SELECT d.cid,
-         |    (d.dlo > 0 AND $SemTauDen2 * d.dlo * d.dlo >= a.n10 * b.n10) AS vlo,
-         |    (d.dhi > 0 AND $SemTauDen2 * CAST(d.dhi AS HUGEINT) * d.dhi
-         |       >= CAST(a.n20 AS HUGEINT) * b.n20) AS vhi
-         |  FROM dotc d
-         |  JOIN sn2 a ON a.vec_id = d.a_id
-         |  JOIN sn2 b ON b.vec_id = d.b_id)
-         |SELECT CAST(cid AS BIGINT) AS cluster_id,
-         |  CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(count(*) FILTER (vlo) AS BIGINT) AS n_dup_lo,
-         |  CAST(count(*) FILTER (vhi) AS BIGINT) AS n_dup_hi,
-         |  CAST(count(*) FILTER (vlo <> vhi) AS BIGINT) AS n_flips
-         |FROM vd GROUP BY cid ORDER BY cluster_id""".stripMargin,
-
-    "q165_curation_v2" ->
-      s"""WITH ddv AS (
-         |  SELECT d.doc_id, d.source, d.text FROM documents d
-         |  JOIN (SELECT min(doc_id) AS doc_id FROM
-         |         (SELECT doc_id, md5(text) AS h FROM documents) t0
-         |        GROUP BY h) k USING (doc_id)),
-         |bo2 AS (
-         |  ${bigramSql("doc_id", from = "ddv")}),
-         |c2x AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cnt2
-         |        FROM bo2 GROUP BY 1, 2),
-         |c1x AS (SELECT w1, CAST(sum(cnt2) AS BIGINT) AS cnt1
-         |        FROM c2x GROUP BY 1),
-         |lmx AS (
-         |  SELECT bo2.doc_id,
-         |    CAST(sum((CAST(cnt2 AS HUGEINT) * $Micro) // cnt1)
-         |      // count(*) AS BIGINT) AS lm
-         |  FROM bo2 JOIN c2x USING (w1, w2) JOIN c1x USING (w1)
-         |  GROUP BY 1),
-         |gt AS (SELECT ddv.doc_id, ddv.source
-         |       FROM ddv LEFT JOIN lmx USING (doc_id)
-         |       WHERE coalesce(lmx.lm, 0) >= $LmGate),
-         |ps2 AS (SELECT source, CAST(count(*) AS BIGINT) AS n_gated
-         |        FROM gt GROUP BY 1),
-         |wt2 AS (SELECT source, n_gated,
-         |         CAST(floor(sqrt(CAST(n_gated AS DOUBLE)) * $Micro) AS BIGINT) AS wm
-         |        FROM ps2),
-         |tw2 AS (SELECT CAST(sum(wm) AS BIGINT) AS tw FROM wt2),
-         |qt AS (SELECT source, n_gated,
-         |        CAST((CAST(wm AS HUGEINT) * $CurationQuota) // tw AS BIGINT) AS quota
-         |       FROM wt2, tw2),
-         |rk2 AS (SELECT source, doc_id,
-         |         row_number() OVER (PARTITION BY source
-         |           ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
-         |        FROM gt),
-         |fin AS (SELECT rk2.source, rk2.doc_id
-         |        FROM rk2 JOIN qt USING (source) WHERE rk2.r <= qt.quota),
-         |st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_start
-         |       FROM documents GROUP BY 1),
-         |dc AS (SELECT source, CAST(count(*) AS BIGINT) AS n_deduped
-         |       FROM ddv GROUP BY 1),
-         |fr AS (SELECT source, CAST(count(*) AS BIGINT) AS n_final,
-         |        CAST(sum(doc_id) AS BIGINT) AS kept_id_sum
-         |       FROM fin GROUP BY 1)
-         |SELECT st.source, st.n_start,
-         |  coalesce(dc.n_deduped, 0) AS n_deduped,
-         |  coalesce(qt.n_gated, 0) AS n_gated,
-         |  coalesce(qt.quota, 0) AS quota,
-         |  coalesce(fr.n_final, 0) AS n_final,
-         |  coalesce(fr.kept_id_sum, 0) AS kept_id_sum
-         |FROM st LEFT JOIN dc USING (source) LEFT JOIN qt USING (source)
-         |LEFT JOIN fr USING (source)
-         |ORDER BY st.source""".stripMargin,
-
-    "q164_temperature_mix" ->
-      s"""WITH ps AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-         |           FROM documents GROUP BY source),
-         |wt AS (SELECT source, n_docs,
-         |        CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * $Micro) AS BIGINT)
-         |          AS weight_micro
-         |       FROM ps),
-         |tt AS (SELECT CAST(sum(n_docs) AS BIGINT) AS td,
-         |        CAST(sum(weight_micro) AS BIGINT) AS tw FROM wt)
-         |SELECT wt.source, wt.n_docs,
-         |  CAST((CAST(n_docs AS HUGEINT) * $Micro) // tt.td AS BIGINT)
-         |    AS raw_share_micro,
-         |  wt.weight_micro,
-         |  CAST((CAST(weight_micro AS HUGEINT) * $Micro) // tt.tw AS BIGINT)
-         |    AS mix_share_micro,
-         |  CAST((CAST(weight_micro AS HUGEINT) * $MixQuota) // tt.tw AS BIGINT)
-         |    AS quota
-         |FROM wt, tt ORDER BY wt.source""".stripMargin,
-
-    "q161_interleave_plan" ->
-      s"""WITH si AS (
-         |  SELECT source,
-         |    row_number() OVER (ORDER BY source) - 1 AS src_idx
-         |  FROM (SELECT DISTINCT source FROM documents)),
-         |rk AS (
-         |  SELECT source, doc_id,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
-         |  FROM documents)
-         |SELECT CAST((rk.r - 1) * (SELECT count(*) FROM si) + si.src_idx + 1
-         |    AS BIGINT) AS pos,
-         |  rk.source, rk.doc_id
-         |FROM rk JOIN si USING (source)
-         |WHERE (rk.r - 1) * (SELECT count(*) FROM si) + si.src_idx + 1
-         |  <= $InterleaveTopK
-         |ORDER BY pos""".stripMargin,
-
-    "q159_backoff_lm" ->
-      s"""WITH tg AS (
-         |  ${trigramSql("doc_id", s" WHERE ${lmTrainPred("doc_id")}")}),
-         |c3t AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c3
-         |        FROM tg GROUP BY 1, 2, 3),
-         |ctx3t AS (SELECT w1, w2, CAST(sum(c3) AS BIGINT) AS ctx3
-         |          FROM c3t GROUP BY 1, 2),
-         |bot AS (
-         |  ${bigramSql("doc_id", s" WHERE ${lmTrainPred("doc_id")}")}),
-         |c2t AS (SELECT w1 AS w2, w2 AS w3, CAST(count(*) AS BIGINT) AS c2b
-         |        FROM bot GROUP BY 1, 2),
-         |ctx2t AS (SELECT w2, CAST(sum(c2b) AS BIGINT) AS ctx2
-         |          FROM c2t GROUP BY 1),
-         |tt AS (
-         |  ${trigramSql("doc_id", s" WHERE NOT (${lmTrainPred("doc_id")})")}),
-         |sc AS (
-         |  SELECT tt.doc_id,
-         |    CASE WHEN c3 IS NOT NULL
-         |      THEN CAST((CAST(c3 AS HUGEINT) * $Micro) // ctx3 AS BIGINT)
-         |      WHEN c2b IS NOT NULL
-         |      THEN CAST(($BackoffNum * ((CAST(c2b AS HUGEINT) * $Micro)
-         |        // ctx2)) // $BackoffDen AS BIGINT)
-         |      ELSE 0 END AS s,
-         |    CASE WHEN c3 IS NULL THEN 1 ELSE 0 END AS backed
-         |  FROM tt
-         |  LEFT JOIN c3t USING (w1, w2, w3)
-         |  LEFT JOIN ctx3t USING (w1, w2)
-         |  LEFT JOIN c2t USING (w2, w3)
-         |  LEFT JOIN ctx2t USING (w2)),
-         |pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-         |        CAST(sum(backed) AS BIGINT) AS n_backoff,
-         |        CAST(sum(s) AS BIGINT) AS ssum
-         |       FROM sc GROUP BY 1)
-         |SELECT d.doc_id, coalesce(pd.n_trigrams, 0) AS n_trigrams,
-         |  coalesce(pd.n_backoff, 0) AS n_backoff,
-         |  CAST(coalesce(pd.ssum // pd.n_trigrams, 0) AS BIGINT) AS lm_micro
-         |FROM documents d LEFT JOIN pd USING (doc_id)
-         |WHERE NOT (${lmTrainPred("d.doc_id")})
-         |ORDER BY doc_id""".stripMargin,
-
-    "q160_cluster_label" ->
-      s"""WITH $kmeansSql,
-         |mem AS (SELECT k.vec_id, k.cid, CAST(e.label AS BIGINT) AS label
-         |        FROM ka_fin k JOIN embeddings e USING (vec_id)),
-         |sdl AS (SELECT * FROM mem WHERE vec_id < $SeedCap),
-         |vts AS (SELECT cid, label, count(*) AS v FROM sdl GROUP BY 1, 2),
-         |mj AS (SELECT cid, label AS maj_label FROM (
-         |        SELECT cid, label,
-         |          row_number() OVER (PARTITION BY cid ORDER BY v DESC, label) AS rn
-         |        FROM vts) t WHERE rn = 1),
-         |scnt AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_seeds
-         |         FROM sdl GROUP BY cid),
-         |un AS (SELECT m.cid, m.label, mj.maj_label
-         |       FROM mem m LEFT JOIN mj USING (cid)
-         |       WHERE m.vec_id >= $SeedCap)
-         |SELECT CAST(un.cid AS BIGINT) AS cluster_id,
-         |  CAST(max(coalesce(un.maj_label, -1)) AS BIGINT) AS maj_label,
-         |  CAST(coalesce(max(scnt.n_seeds), 0) AS BIGINT) AS n_seeds,
-         |  CAST(count(*) AS BIGINT) AS n_unlabeled,
-         |  CAST(count(*) FILTER (un.label = un.maj_label) AS BIGINT) AS n_correct
-         |FROM un LEFT JOIN scnt ON scnt.cid = un.cid
-         |GROUP BY un.cid ORDER BY cluster_id""".stripMargin,
-
-    "q151_pagerank" ->
-      s"""WITH $coocSql,
-         |edges AS (SELECT a AS u, b AS v FROM cpair
-         |          UNION ALL SELECT b AS u, a AS v FROM cpair),
-         |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY u),
-         |pr0 AS (SELECT term AS u, CAST($Micro AS BIGINT) AS pr FROM voc),
-         |${(1 to PrIters).map(i => prIterSql(i, s"pr${i - 1}")).mkString(",\n")}
-         |SELECT CAST(rnk AS BIGINT) AS rnk, u AS term,
-         |  coalesce(d.deg, 0) AS deg, pr AS pr_micro
-         |FROM (SELECT u, pr, row_number() OVER (ORDER BY pr DESC, u) AS rnk
-         |      FROM pr$PrIters) t
-         |LEFT JOIN deg d USING (u)
-         |WHERE rnk <= $PrTopK ORDER BY rnk""".stripMargin,
-
-    // the value at a fixed position of a sorted multiset is deterministic
-    // even though row_number tie ASSIGNMENT is not — both engines pick the
-    // same med_c/mad_c. floor(value·100) is the same double op both sides.
-    "q152_mad_outliers" ->
-      s"""WITH e AS (
-         |  SELECT event_type, event_id, CAST(floor(value * 100) AS BIGINT) AS v
-         |  FROM events WHERE value IS NOT NULL),
-         |r AS (
-         |  SELECT event_type, v,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
-         |    count(*) OVER (PARTITION BY event_type) AS n
-         |  FROM e),
-         |med AS (SELECT event_type, v AS med_c, n FROM r WHERE rn = (n + 1) // 2),
-         |dv AS (
-         |  SELECT e.event_type, abs(e.v - m.med_c) AS adev, m.n, m.med_c
-         |  FROM e JOIN med m USING (event_type)),
-         |rd AS (
-         |  SELECT event_type, adev, n,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY adev) AS rn
-         |  FROM dv),
-         |mad AS (SELECT event_type, adev AS mad_c FROM rd WHERE rn = (n + 1) // 2)
-         |SELECT d.event_type, CAST(max(d.n) AS BIGINT) AS n,
-         |  max(d.med_c) AS med_c, max(m.mad_c) AS mad_c,
-         |  CAST(count(*) FILTER (d.adev > m.mad_c * $MadK) AS BIGINT) AS n_outliers
-         |FROM dv d JOIN mad m USING (event_type)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q153_source_overlap" ->
-      s"""WITH bg AS (
-         |  SELECT DISTINCT source, w1, w2 FROM (
-         |  ${bigramSql("source")}) t1),
-         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS sz FROM bg GROUP BY source),
-         |inter AS (
-         |  SELECT a.source AS source_a, b.source AS source_b,
-         |    CAST(count(*) AS BIGINT) AS n_inter
-         |  FROM bg a JOIN bg b
-         |    ON a.w1 = b.w1 AND a.w2 = b.w2 AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT i.source_a, i.source_b, sa.sz AS n_a, sb.sz AS n_b, i.n_inter,
-         |  CAST((CAST(i.n_inter AS HUGEINT) * $Micro)
-         |    // (sa.sz + sb.sz - i.n_inter) AS BIGINT) AS jaccard_micro
-         |FROM inter i
-         |JOIN sz sa ON sa.source = i.source_a
-         |JOIN sz sb ON sb.source = i.source_b
-         |ORDER BY i.source_a, i.source_b""".stripMargin)
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.dedup.Dedup
 
 /** Deduplication queries over the `documents`/`embeddings` tables. The
@@ -23,11 +24,13 @@ object DedupQueries extends graft.QueryModule {
   private val SplitTrain = 3435973836L
   private val SplitVal = 3865470566L
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // exact dedup groups on content hash
-    "q20_exact_dedup" -> ((s, dir) =>
+    Entry("q20_exact_dedup", (s, dir) =>
       Dedup.exactGroups(t(s, dir, "documents"), col("text"), col("doc_id"))
-        .orderBy("keep_id")),
+        .orderBy("keep_id"), Some(
+      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin)),
 
     // EXACT SUBSTRING (SPAN) DEDUP (round 12): the q20–q24 family dedups
     // whole DOCUMENTS; training corpora also need the span form — repeated
@@ -46,9 +49,28 @@ object DedupQueries extends graft.QueryModule {
     // fingerprint, and position coverage explodes k× the DUPLICATED grams
     // only. Tokens are the non-empty space-split sequence (q178's
     // convention) so positions index identically on both engines.
-    "q193_substring_dedup" -> ((s, dir) =>
+    Entry("q193_substring_dedup", (s, dir) =>
       Dedup.spanStats(t(s, dir, "documents"), col("text"), col("doc_id"), k = 8)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // the same earliest-wins 8-token-window replay: md5 fingerprints,
+      // row_number over (doc_id, pos) per fingerprint, rn>1 occurrences
+      // cover their 8 positions, DISTINCT coverage per doc.
+      s"""WITH ${spanOracleCtes("documents")},
+        |cov AS (
+        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
+        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
+        |  GROUP BY doc_id),
+        |gc AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
+        |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(gc.n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
+        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
+        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
+        |FROM toks t
+        |LEFT JOIN gc USING (doc_id) LEFT JOIN dc USING (doc_id)
+        |LEFT JOIN cov USING (doc_id)
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // SPAN-CLEANED CORPUS EMIT (round 12): q193 measures the duplicated
     // spans; this row actually REMOVES them — every covered token position
@@ -57,9 +79,31 @@ object DedupQueries extends graft.QueryModule {
     // materialization cost of emitting cleaned text (the real pipeline
     // writes this table); the covered-set derivation is q193's identical
     // hash-shuffle path. Oracle reconstructs with string_agg ORDER BY pos.
-    "q194_span_clean" -> ((s, dir) =>
+    Entry("q194_span_clean", (s, dir) =>
       Dedup.spanClean(t(s, dir, "documents"), col("text"), col("doc_id"), k = 8)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // the cleaned-text emit: identical covered-set CTEs, then per-token
+      // anti join + string_agg(tok, ' ' ORDER BY p) reconstruct
+      s"""WITH ${spanOracleCtes("documents")},
+        |covp AS (
+        |  SELECT DISTINCT doc_id, p FROM (
+        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t),
+        |tokrows AS (
+        |  SELECT doc_id, CAST(i AS BIGINT) AS p, w[CAST(i AS INT)] AS tok
+        |  FROM (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS i FROM toks) t),
+        |kept AS (
+        |  SELECT tr.doc_id, tr.p, tr.tok FROM tokrows tr
+        |  LEFT JOIN covp c ON c.doc_id = tr.doc_id AND c.p = tr.p
+        |  WHERE c.p IS NULL),
+        |agg AS (
+        |  SELECT doc_id, count(*) AS n_kept,
+        |    string_agg(tok, ' ' ORDER BY p) AS clean_text
+        |  FROM kept GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept_tokens,
+        |  coalesce(agg.clean_text, '') AS clean_text
+        |FROM toks t LEFT JOIN agg USING (doc_id)
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // MAXIMAL DUPLICATED SPANS (round 13, judge r12 Next #3): q193 counts
     // duplicate k=8 windows; the operational report of Lee et al. 2022 is
@@ -69,9 +113,30 @@ object DedupQueries extends graft.QueryModule {
     // the per-doc dup windows — the q50 sessionize gap-merge machinery on
     // positions; the per-doc window state is bounded by the doc's own dup
     // count, and only the narrow (doc_id, pos) frame feeds it.
-    "q197_maximal_spans" -> ((s, dir) =>
+    Entry("q197_maximal_spans", (s, dir) =>
       Dedup.spanMaximal(t(s, dir, "documents"), col("text"), col("doc_id"), k = 8)
-        .orderBy("doc_id", "span_idx")),
+        .orderBy("doc_id", "span_idx"), Some(
+      // the same dups CTE, then the classic islands SQL (the q50 sessionize
+      // oracle's gap-merge): running max end over earlier windows, a new
+      // island when s exceeds it, min/max per island
+      s"""WITH ${spanOracleCtes("documents")},
+        |iv AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM dups),
+        |m AS (
+        |  SELECT doc_id, s, e,
+        |    max(e) OVER (PARTITION BY doc_id ORDER BY s
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+        |  FROM iv),
+        |isl AS (
+        |  SELECT doc_id, s, e,
+        |    sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY doc_id ORDER BY s) AS span_idx
+        |  FROM m)
+        |SELECT doc_id, CAST(span_idx AS BIGINT) AS span_idx,
+        |  CAST(min(s) AS BIGINT) AS start_pos,
+        |  CAST(max(e) AS BIGINT) AS end_pos,
+        |  CAST(max(e) - min(s) AS BIGINT) AS span_len
+        |FROM isl GROUP BY doc_id, span_idx
+        |ORDER BY doc_id, span_idx""".stripMargin)),
 
     // MULTI-k SPAN SWEEP (round 14, judge r13 Next #2): q193 reports one
     // width; the k-floor is the window form's documented blind spot (a
@@ -81,24 +146,85 @@ object DedupQueries extends graft.QueryModule {
     // operational knob as a table. The oracle instantiates the shared
     // span CTE chain once per k (the same SQL q193 is verified by,
     // parameterized — never a second definition that could drift).
-    "q207_span_multik" -> ((s, dir) =>
+    Entry("q207_span_multik", (s, dir) =>
       Dedup.spanSweep(t(s, dir, "documents"), col("text"), col("doc_id"),
           ks = Seq(8, 16, 32))
-        .orderBy("k")),
+        .orderBy("k"), Some(
+      // the shared span chain instantiated once per k (prefixes k8/k16/k32),
+      // each reduced to its corpus-level dup-mass row, unioned — the same
+      // SQL q193 is verified by, swept across the width knob
+      {
+      val perK = Seq(8, 16, 32).map { k =>
+        val p = s"k$k"
+        s"""${spanOracleCtes("documents", p, k)},
+           |${p}ds AS (
+           |  SELECT doc_id, count(*) // $k AS n_dups,
+           |    count(DISTINCT p) AS n_cov
+           |  FROM (SELECT doc_id, unnest(range(pos, pos + $k)) AS p
+           |        FROM ${p}dups) t
+           |  GROUP BY doc_id),
+           |${p}row AS (
+           |  SELECT CAST($k AS BIGINT) AS k,
+           |    (SELECT CAST(coalesce(sum(greatest(len(w) - ${k - 1}, 0)), 0) AS BIGINT)
+           |     FROM ${p}toks) AS n_grams_total,
+           |    CAST(coalesce((SELECT sum(n_dups) FROM ${p}ds), 0) AS BIGINT) AS n_dup_spans,
+           |    CAST((SELECT count(*) FROM ${p}ds) AS BIGINT) AS n_docs_with_dups,
+           |    CAST(coalesce((SELECT sum(n_cov) FROM ${p}ds), 0) AS BIGINT) AS n_covered_tokens)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH $perK
+         |SELECT * FROM k8row
+         |UNION ALL SELECT * FROM k16row
+         |UNION ALL SELECT * FROM k32row
+         |ORDER BY k""".stripMargin
+    })),
 
     // INCREMENTAL SPAN DEDUP (round 12) — the q72 discipline at span
     // level: even doc_ids play the already-ingested corpus, odd doc_ids
     // the incoming batch. Corpus-known fingerprints are duplicates
     // outright; the fresh residue runs batch-internal earliest-wins.
     // Duplicates reported split by reason, coverage distinct across both.
-    "q196_span_incremental" -> ((s, dir) => {
+    Entry("q196_span_incremental", (s, dir) => {
       val docs = t(s, dir, "documents")
       Dedup.spanIncremental(
           docs.where(col("doc_id") % 2 === 0),
           docs.where(col("doc_id") % 2 =!= 0),
           col("text"), col("doc_id"), k = 8)
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // two prefixed instantiations of the shared chain (corpus c*, batch
+      // b*); corpus-known via IN on the distinct fingerprint set, fresh
+      // residue re-ranked batch-internally
+      s"""WITH corpus AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
+        |batchd AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 <> 0),
+        |${spanOracleCtes("corpus", "c")},
+        |${spanOracleCtes("batchd", "b")},
+        |cg AS (SELECT DISTINCT g FROM cgrams),
+        |vs AS (SELECT doc_id, pos FROM bgrams WHERE g IN (SELECT g FROM cg)),
+        |fr AS (
+        |  SELECT doc_id, pos,
+        |    row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
+        |  FROM bgrams WHERE g NOT IN (SELECT g FROM cg)),
+        |wb AS (SELECT doc_id, pos FROM fr WHERE rn > 1),
+        |alld AS (SELECT doc_id, pos FROM vs UNION ALL SELECT doc_id, pos FROM wb),
+        |cov AS (
+        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
+        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM alld) t
+        |  GROUP BY doc_id),
+        |gc AS (SELECT doc_id, count(*) AS n_grams FROM bgrams GROUP BY doc_id),
+        |vc AS (SELECT doc_id, count(*) AS n_vs FROM vs GROUP BY doc_id),
+        |wc AS (SELECT doc_id, count(*) AS n_wb FROM wb GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        |  CAST(coalesce(gc.n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(vc.n_vs, 0) AS BIGINT) AS n_dup_vs_corpus,
+        |  CAST(coalesce(wc.n_wb, 0) AS BIGINT) AS n_dup_within_batch,
+        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
+        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
+        |FROM btoks t
+        |LEFT JOIN gc USING (doc_id) LEFT JOIN vc USING (doc_id)
+        |LEFT JOIN wc USING (doc_id) LEFT JOIN cov USING (doc_id)
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // exact word-trigram Jaccard near-dup pairs, verified ONLY within
     // MinHash-LSH candidate buckets (the scale path — no per-block all-pairs
@@ -108,16 +234,31 @@ object DedupQueries extends graft.QueryModule {
     // LSH candidate set provably contains every ≥ 0.5 pair of this corpus
     // (verified at sf0.001/0.01/0.1) and the exact-verify output equals the
     // all-pairs result.
-    "q21_ngram_jaccard" -> ((s, dir) =>
+    Entry("q21_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccardPairsLsh(t(s, dir, "documents"),
           col("doc_id"), col("text"), n = 3, m = 32, bands = 16, threshold = 0.5)
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), Some(
+      // same integer set arithmetic (|∩| / (|A|+|B|-|∩|)) → bit-identical.
+      // Intentionally the NAIVE global all-pairs formulation: the engine's
+      // LSH-candidate path must reproduce it exactly (see queries note).
+      """WITH docs AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |  FROM documents WHERE len(string_split(text,' ')) >= 3)
+        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jacc
+        |FROM docs a JOIN docs b ON a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
+        |ORDER BY a_id, b_id""".stripMargin)),
 
     // near-dup KEEP LIST: connected components over the LSH-verified pair
     // graph — every doc labeled with the min doc_id of its transitive
     // near-dup group (singletons label themselves). The oracle is a
     // recursive-CTE transitive closure over the naive all-pairs edge set.
-    "q28_dedup_groups" -> ((s, dir) => {
+    Entry("q28_dedup_groups", (s, dir) => {
       val docs = t(s, dir, "documents")
       val edges = Dedup.ngramJaccardPairsLsh(docs,
         col("doc_id"), col("text"), n = 3, m = 32, bands = 16, threshold = 0.5)
@@ -126,7 +267,25 @@ object DedupQueries extends graft.QueryModule {
           edges, col("a_id"), col("b_id"))
         .select(col("id").as("doc_id"), col("component").as("keep_id"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // transitive closure of the same all-pairs ≥ 0.5 edge set; UNION (not
+      // UNION ALL) bounds the recursion
+      """WITH RECURSIVE sh_docs AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
+        |pairs AS (
+        |  SELECT a.doc_id AS a, b.doc_id AS b
+        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
+        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
+        |reach AS (
+        |  SELECT doc_id AS x, doc_id AS n FROM documents
+        |  UNION
+        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x)
+        |SELECT x AS doc_id, min(n) AS keep_id FROM reach GROUP BY x ORDER BY doc_id""".stripMargin)),
 
     // LEAKAGE-SAFE TRAIN/VAL/TEST SPLIT (round 10): q95's per-doc Mix64
     // split is the right PRIMITIVE but the wrong GRAIN for a corpus with
@@ -145,7 +304,7 @@ object DedupQueries extends graft.QueryModule {
     // corpus has NO pairs in (0.1, 0.8) (verified at all three SFs), so
     // the candidate set provably contains every ≥ 0.5 edge. Scale shape
     // = q28 (banded LSH, distributed components) + one split-keyed agg.
-    "q169_leakage_safe_split" -> ((s, dir) => {
+    Entry("q169_leakage_safe_split", (s, dir) => {
       val docs = t(s, dir, "documents")
       // edges feed BOTH the component labeling and the cross-split check,
       // and the assignment feeds both the check and the rollup — persist
@@ -179,7 +338,44 @@ object DedupQueries extends graft.QueryModule {
         .select(col("split"), col("n_docs"), col("n_groups"), col("doc_id_sum"),
           coalesce(col("n_cross_edges"), lit(0L)).as("n_cross_edges"))
         .orderBy("split")
-    }),
+    }, Some(
+      // q28's closure + component-keyed Mix64 split + the in-band
+      // cross-split edge count recomputed from the oracle's OWN edge set
+      s"""WITH RECURSIVE sh_docs AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
+        |pairs AS (
+        |  SELECT a.doc_id AS a, b.doc_id AS b
+        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
+        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
+        |reach AS (
+        |  SELECT doc_id AS x, doc_id AS n FROM documents
+        |  UNION
+        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
+        |comp AS (SELECT x AS id, min(n) AS component FROM reach GROUP BY x),
+        |asg AS (
+        |  SELECT id, component,
+        |    CASE WHEN ${OpsQueries.coordSql("component")} < $SplitTrain THEN 'train'
+        |         WHEN ${OpsQueries.coordSql("component")} < $SplitVal THEN 'val'
+        |         ELSE 'test' END AS split
+        |  FROM comp),
+        |cr AS (
+        |  SELECT sa.split AS split,
+        |    CAST(count(CASE WHEN sa.split <> sb.split THEN 1 END) AS BIGINT)
+        |      AS n_cross_edges
+        |  FROM pairs p
+        |  JOIN asg sa ON sa.id = p.a JOIN asg sb ON sb.id = p.b
+        |  GROUP BY 1)
+        |SELECT asg.split, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(DISTINCT component) AS BIGINT) AS n_groups,
+        |  CAST(sum(id) AS BIGINT) AS doc_id_sum,
+        |  coalesce(max(cr.n_cross_edges), 0) AS n_cross_edges
+        |FROM asg LEFT JOIN cr ON cr.split = asg.split
+        |GROUP BY asg.split ORDER BY asg.split""".stripMargin)),
 
     // MinHash 32-component signature, 8×4 banded LSH candidates with
     // estimated similarity (no oracle: xxhash64-specific). Native one-pass
@@ -189,7 +385,7 @@ object DedupQueries extends graft.QueryModule {
     // signatures are co-located, narrow survivors deduped after (the
     // pre-filter groupBy pair dedupe shuffled both signatures per
     // candidate — judge r2 finding #1).
-    "q22_minhash_lsh" -> ((s, dir) =>
+    Entry("q22_minhash_lsh", (s, dir) =>
       Dedup.minhashLshPairs(t(s, dir, "documents"), col("doc_id"), col("text"),
           n = 3, m = 32, bands = 8, minEstSim = 0.3)
         .orderBy("a_id", "b_id")),
@@ -198,10 +394,17 @@ object DedupQueries extends graft.QueryModule {
     // slice-keyed banding make signature, banding, est_sim AND threshold
     // all DuckDB-expressible, so the full MinHash-LSH semantics get a green
     // oracle row (q22 keeps the xxhash64 production path, rows-only)
-    "q48_minhash_portable" -> ((s, dir) =>
+    Entry("q48_minhash_portable", (s, dir) =>
       Dedup.minhashLshPairsPortable(t(s, dir, "documents"), col("doc_id"), col("text"),
           n = 3, m = 32, bands = 8, minEstSim = 0.3)
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), Some(
+      // Complete MinHash-LSH twin: word-trigram gram strings → rolling-31
+      // base hash mod 2^32 (the 32-bit reduction keeps a_j·x inside signed
+      // HUGEINT) → per-slot (a_j·x + b_j) mod 2^64, converted to SIGNED
+      // before the min (Spark Long order) → 8 bands keyed by the 4-slot
+      // signature slice → est_sim = equal-slot fraction, ≥ 0.3, distinct.
+      s"""WITH ${portableLshPairsSql("documents")}
+         |SELECT a_id, b_id, est_sim FROM lsh_pairs ORDER BY a_id, b_id""".stripMargin)),
 
     // FUZZY DECONTAMINATION: q75 catches exact 4-gram overlap with the
     // benchmark; paraphrased/lightly-edited contamination slips through.
@@ -210,7 +413,7 @@ object DedupQueries extends graft.QueryModule {
     // contaminated corpus doc reports its best benchmark similarity and
     // match count. Same banded buckets as q48: never an all-pairs scan;
     // the source lookup is two id-keyed hash joins over the (few) pairs.
-    "q133_fuzzy_decontaminate" -> ((s, dir) => {
+    Entry("q133_fuzzy_decontaminate", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashLshPairsPortable(docs, col("doc_id"), col("text"),
         n = 3, m = 32, bands = 8, minEstSim = 0.3)
@@ -225,10 +428,22 @@ object DedupQueries extends graft.QueryModule {
         .agg(max(col("est_sim")).as("max_est_sim"),
           count(lit(1)).as("n_bench_matches"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the same lsh_pairs chain, filtered to cross-set (benchmark vs
+      // corpus) candidates and rolled up per contaminated doc
+      s"""WITH ${portableLshPairsSql("documents")},
+         |src AS (SELECT doc_id, source = 'src0' AS is_bench FROM documents)
+         |SELECT CASE WHEN a.is_bench THEN p.b_id ELSE p.a_id END AS doc_id,
+         |  max(p.est_sim) AS max_est_sim,
+         |  CAST(count(*) AS BIGINT) AS n_bench_matches
+         |FROM lsh_pairs p
+         |JOIN src a ON a.doc_id = p.a_id
+         |JOIN src b ON b.doc_id = p.b_id
+         |WHERE a.is_bench <> b.is_bench
+         |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
 
     // SimHash fingerprints + banded near-dup pairs (no oracle)
-    "q23_simhash" -> ((s, dir) =>
+    Entry("q23_simhash", (s, dir) =>
       Dedup.simhashPairs(t(s, dir, "documents"), col("doc_id"), col("text"),
           maxHamming = 6)
         .orderBy("a_id", "b_id")),
@@ -236,10 +451,12 @@ object DedupQueries extends graft.QueryModule {
     // PORTABLE SimHash twin (multiply-add + xorshift token hash): the
     // fingerprint, the 16-bit chunk banding and the hamming verify all get
     // a DuckDB oracle; q23's xxhash64 path stays production, rows-only
-    "q53_simhash_portable" -> ((s, dir) =>
+    Entry("q53_simhash_portable", (s, dir) =>
       Dedup.simhashPairsPortable(t(s, dir, "documents"), col("doc_id"), col("text"),
           maxHamming = 6)
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), Some(
+      s"""WITH $simhashPortablePairsSql
+         |SELECT a_id, b_id, hamming FROM sh_pairs ORDER BY a_id, b_id""".stripMargin)),
 
     // INCREMENTAL dedup — the production ingestion shape: the top half of
     // doc_ids play the "new batch" arriving against the already-ingested
@@ -250,13 +467,33 @@ object DedupQueries extends graft.QueryModule {
     // semantics — a dropped doc's partner may itself be near-dropped
     // (chains are accepted, as in production one-shot LSH dedup; the
     // transitive variant is q28/q29's components path).
-    "q72_incremental_dedup" -> ((s, dir) => {
+    Entry("q72_incremental_dedup", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
       Dedup.incrementalDedup(docs, col("doc_id"), col("text"), split,
           n = 3, m = 32, bands = 8, minEstSim = 0.3)
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the same LSH chain replayed over exact survivors, then the decision
+      // join (md5 + min-id rep; smallest qualifying partner)
+      s"""WITH hashed AS (SELECT doc_id, text, md5(text) AS h FROM documents),
+         |reps AS (SELECT h, min(doc_id) AS rep_id FROM hashed GROUP BY h),
+         |wr AS (SELECT hashed.doc_id, hashed.text, reps.rep_id
+         |       FROM hashed JOIN reps USING (h)),
+         |surv AS (SELECT doc_id, text FROM wr WHERE doc_id = rep_id),
+         |${portableLshPairsSql("surv")},
+         |sp AS (SELECT (max(doc_id) // 2 + 1) AS s FROM documents),
+         |near AS (SELECT b_id AS doc_id, min(a_id) AS near_partner
+         |         FROM lsh_pairs CROSS JOIN sp WHERE b_id >= sp.s GROUP BY b_id)
+         |SELECT wr.doc_id,
+         |  CASE WHEN wr.doc_id <> wr.rep_id THEN 'drop_exact'
+         |       WHEN near.near_partner IS NOT NULL THEN 'drop_near'
+         |       ELSE 'keep' END AS decision,
+         |  CASE WHEN wr.doc_id <> wr.rep_id THEN wr.rep_id
+         |       ELSE near.near_partner END AS partner_id
+         |FROM wr CROSS JOIN sp LEFT JOIN near ON near.doc_id = wr.doc_id
+         |WHERE wr.doc_id >= sp.s
+         |ORDER BY wr.doc_id""".stripMargin)),
 
     // NEAR-DUP AGAINST A STORED SIGNATURE INDEX (round 14, judge r13
     // Next #7): q72 re-derives the corpus signatures every run; the
@@ -271,7 +508,7 @@ object DedupQueries extends graft.QueryModule {
     // A batch doc identical to a corpus doc surfaces here as est_sim 1.0
     // drop_near (exact dedup is q72's combined form; this operator is the
     // near-dup index serve).
-    "q209_neardup_index" -> ((s, dir) => {
+    Entry("q209_neardup_index", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val split = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
       val sink = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -298,7 +535,27 @@ object DedupQueries extends graft.QueryModule {
           col("partner_id"),
           coalesce(col("n_index_hits"), lit(0L)).as("n_index_hits"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the full portable chain replayed FROM TEXT over the whole corpus
+      // (no index — that's the point: the engine's stored-index serve must
+      // agree with the from-scratch derivation); corpus→batch pairs are
+      // exactly the a_id < split <= b_id slice of the a<b pair set
+      s"""WITH ${portableLshPairsSql("documents")},
+         |sp AS (SELECT (max(doc_id) // 2 + 1) AS s FROM documents),
+         |near AS (
+         |  SELECT b_id AS doc_id, min(a_id) AS partner_id,
+         |    CAST(count(DISTINCT a_id) AS BIGINT) AS n_index_hits
+         |  FROM lsh_pairs CROSS JOIN sp
+         |  WHERE a_id < sp.s AND b_id >= sp.s GROUP BY b_id)
+         |SELECT d.doc_id,
+         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
+         |       ELSE 'keep' END AS decision,
+         |  near.partner_id,
+         |  CAST(coalesce(near.n_index_hits, 0) AS BIGINT) AS n_index_hits
+         |FROM documents d CROSS JOIN sp
+         |LEFT JOIN near ON near.doc_id = d.doc_id
+         |WHERE d.doc_id >= sp.s
+         |ORDER BY d.doc_id""".stripMargin)),
 
     // SIGNATURE-INDEX MAINTENANCE (round 15, judge r14 Next #3): closes
     // the q209 ingest loop — the stored index is a LIVING model table.
@@ -314,7 +571,7 @@ object DedupQueries extends graft.QueryModule {
     // hashed band keys. The oracle replays the WHOLE portable chain from
     // text over A∪B∖deleted vs C, so a leaked deleted signature, a lost
     // appended one, or any Parquet/compaction drift reddens the row.
-    "q214_index_maintain" -> ((s, dir) => {
+    Entry("q214_index_maintain", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val (indexPath, s2) = buildMaintainedSigIndex(s, dir, "q214")
       val index = s.read.parquet(indexPath)
@@ -334,25 +591,98 @@ object DedupQueries extends graft.QueryModule {
           col("partner_id"),
           coalesce(col("n_index_hits"), lit(0L)).as("n_index_hits"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the full portable chain replayed FROM TEXT with the maintained
+      // index's membership rule applied as a WHERE: a_id ∈ A∪B (below s2)
+      // minus the deletion ledger (% 7 = 3), b_id ∈ C — serve-after-
+      // append-and-delete must equal the from-scratch derivation
+      s"""WITH ${portableLshPairsSql("documents")},
+         |sp AS (SELECT (max(doc_id) // 3 + 1) AS s1,
+         |              ((2 * max(doc_id)) // 3 + 1) AS s2 FROM documents),
+         |near AS (
+         |  SELECT b_id AS doc_id, min(a_id) AS partner_id,
+         |    CAST(count(DISTINCT a_id) AS BIGINT) AS n_index_hits
+         |  FROM lsh_pairs CROSS JOIN sp
+         |  WHERE a_id < sp.s2 AND a_id % 7 <> 3 AND b_id >= sp.s2
+         |  GROUP BY b_id)
+         |SELECT d.doc_id,
+         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
+         |       ELSE 'keep' END AS decision,
+         |  near.partner_id,
+         |  CAST(coalesce(near.n_index_hits, 0) AS BIGINT) AS n_index_hits
+         |FROM documents d CROSS JOIN sp
+         |LEFT JOIN near ON near.doc_id = d.doc_id
+         |WHERE d.doc_id >= sp.s2
+         |ORDER BY d.doc_id""".stripMargin)),
 
     // the WHOLE dedup pipeline as one call: exact dedup → LSH near-dup
     // pairs over exact survivors → components → keep table with reasons
-    "q29_dedup_pipeline" -> ((s, dir) =>
+    Entry("q29_dedup_pipeline", (s, dir) =>
       Dedup.nearDupKeepList(t(s, dir, "documents"),
           col("doc_id"), col("text"), n = 3, m = 32, bands = 16, threshold = 0.5)
-        .orderBy("id")),
+        .orderBy("id"), Some(
+      // exact-dedup window + all-pairs closure over exact survivors only
+      """WITH RECURSIVE rep AS (
+        |  SELECT doc_id, text, min(doc_id) OVER (PARTITION BY md5(text)) AS exact_rep
+        |  FROM documents),
+        |surv AS (SELECT doc_id, text FROM rep WHERE doc_id = exact_rep),
+        |sh_docs AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |  FROM surv WHERE len(string_split(text,' ')) >= 3),
+        |pairs AS (
+        |  SELECT a.doc_id AS a, b.doc_id AS b
+        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
+        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
+        |reach AS (
+        |  SELECT doc_id AS x, doc_id AS n FROM surv
+        |  UNION
+        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
+        |comp AS (SELECT x AS exact_rep, min(n) AS keep_id FROM reach GROUP BY x)
+        |SELECT rep.doc_id AS id, coalesce(c.keep_id, rep.exact_rep) AS keep_id,
+        |  CASE WHEN rep.doc_id = coalesce(c.keep_id, rep.exact_rep) THEN 'kept'
+        |       WHEN rep.doc_id <> rep.exact_rep THEN 'exact' ELSE 'near' END AS reason
+        |FROM rep LEFT JOIN comp c ON rep.exact_rep = c.exact_rep
+        |ORDER BY id""".stripMargin)),
 
     // embedding cosine near-dup via banded sign-bit LSH + exact verify
     // (ids only — see oracle note). The oracle mirrors the banding exactly
     // (sign bits of stored floats are portable integers), so candidate
     // recall is part of the operator's defined semantics, not a divergence.
-    "q24_embedding_neardup" -> ((s, dir) =>
+    Entry("q24_embedding_neardup", (s, dir) =>
       Dedup.cosinePairsSignLsh(t(s, dir, "embeddings"),
           col("vec_id"), col("embedding"), nBands = 8, bitsPerBand = 4,
           threshold = 0.4)
         .select("a_id", "b_id")
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), Some(
+      // ids only: cosine magnitudes differ in the last ulp between engines,
+      // but the 0.4 threshold has ≥1e-5 margin to every pair at all SFs.
+      // The banding mirrors Dedup.cosinePairsSignLsh(8 bands × 4 sign bits)
+      // bit-for-bit — sign comparisons on stored floats are exact integers.
+      // candidates deduped as int pairs FIRST, vectors joined back once per
+      // pair — same result as the engine's in-band verify, but cheap enough
+      // for DuckDB to complete at sf0.1 too (carrying the float lists
+      // through the pair GROUP BY spilled for tens of minutes)
+      """WITH banded AS (
+        |  SELECT vec_id, b.band,
+        |      (CASE WHEN embedding[b.band*4 + 1] >= 0 THEN 1 ELSE 0 END)
+        |    + (CASE WHEN embedding[b.band*4 + 2] >= 0 THEN 2 ELSE 0 END)
+        |    + (CASE WHEN embedding[b.band*4 + 3] >= 0 THEN 4 ELSE 0 END)
+        |    + (CASE WHEN embedding[b.band*4 + 4] >= 0 THEN 8 ELSE 0 END) AS bucket
+        |  FROM embeddings, range(0, 8) b(band)),
+        |cand AS (
+        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+        |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
+        |    AND a.vec_id < b.vec_id)
+        |SELECT c.a_id, c.b_id
+        |FROM cand c
+        |JOIN embeddings ea ON ea.vec_id = c.a_id
+        |JOIN embeddings eb ON eb.vec_id = c.b_id
+        |WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])) >= 0.4
+        |ORDER BY a_id, b_id""".stripMargin)),
 
     // PRODUCTION-PATH check for the xxhash64 MinHash-LSH family (judge r8
     // #3). Raw set-equality against the portable twin is the WRONG
@@ -367,14 +697,33 @@ object DedupQueries extends graft.QueryModule {
     // jaccard ≥ 0.5 pairs}; the oracle computes the truth side in DuckDB
     // as the naive all-pairs SQL — the xxhash64 path becomes driver-
     // checked against exact ground truth, no DuckDB xxhash64 needed.
-    "q137_minhash_prod_vs_truth" -> ((s, dir) => {
+    Entry("q137_minhash_prod_vs_truth", (s, dir) => {
       val docs = t(s, dir, "documents")
       pairPathAgreement(
         Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
           n = 3, m = 32, bands = 8, minEstSim = 0.5),
         Dedup.ngramJaccardPairsLsh(docs, col("doc_id"), col("text"),
           n = 3, m = 32, bands = 16, threshold = 0.5))
-    }),
+    }, Some(
+      // production-path check oracles: the reference side computed exactly
+      // in DuckDB IS the expected value of the Spark prod path — total
+      // agreement / zero misses asserted (see the queries' design notes)
+      """WITH docs AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
+        |truth AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
+        |  FROM docs a JOIN docs b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5)
+        |SELECT CAST(count(*) AS BIGINT) AS n_prod,
+        |  CAST(count(*) AS BIGINT) AS n_ref,
+        |  CAST(count(*) AS BIGINT) AS n_both,
+        |  CAST(0 AS BIGINT) AS n_only_prod,
+        |  CAST(0 AS BIGINT) AS n_only_ref
+        |FROM truth""".stripMargin)),
 
     // PRODUCTION-PATH check for the xxhash64 SimHash family. The hamming
     // ≤ 6 near-dup shell is hash-family-dependent (measured at sf0.1:
@@ -388,7 +737,7 @@ object DedupQueries extends graft.QueryModule {
     // first 50 docs (ids + 10^7) — the check is non-degenerate at every
     // SF and both engines build the identical planted corpus. The oracle
     // computes the exact-dup pair count in DuckDB and asserts zero misses.
-    "q138_simhash_dup_recall" -> ((s, dir) => {
+    Entry("q138_simhash_dup_recall", (s, dir) => {
       val docs0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val docs = docs0.unionByName(docs0.where(col("doc_id") < 50)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
@@ -407,7 +756,18 @@ object DedupQueries extends graft.QueryModule {
             .as("n_missed_prod"),
           coalesce(sum(when(col("in_port").isNull, 1L).otherwise(0L)), lit(0L))
             .as("n_missed_portable"))
-    }))
+    }, Some(
+      """WITH docs AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 50),
+        |h AS (SELECT md5(text) AS h, doc_id FROM docs),
+        |dp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
+        |       FROM h a JOIN h b ON a.h = b.h AND a.doc_id < b.doc_id)
+        |SELECT CAST(count(*) AS BIGINT) AS n_dup_pairs,
+        |  CAST(0 AS BIGINT) AS n_missed_prod,
+        |  CAST(0 AS BIGINT) AS n_missed_portable
+        |FROM dp""".stripMargin)))
 
   /** One-row agreement summary between a production-hash pair set and an
     * oracle-expressible REFERENCE set (exact ground truth for q137, the
@@ -438,7 +798,7 @@ object DedupQueries extends graft.QueryModule {
     * generated from graft.functions.PortableMinHash so the Spark expression
     * and the oracle can never drift apart. b_j is emitted UNSIGNED (the
     * oracle works in HUGEINT mod 2^64). */
-  private val MinhashConstsSql: String = (0 until 32).map { j =>
+  private lazy val MinhashConstsSql: String = (0 until 32).map { j =>
     val a = graft.functions.PortableMinHash.a(j)
     val b = java.lang.Long.toUnsignedString(graft.functions.PortableMinHash.b(j))
     s"{'a': $a::HUGEINT, 'b': $b::HUGEINT}"
@@ -446,12 +806,12 @@ object DedupQueries extends graft.QueryModule {
 
   /** 2^0 … 2^63 as HUGEINT literals (bit tests on the unsigned fingerprint
     * run as division + parity — no engine-specific shift semantics). */
-  private val PowersSql: String =
+  private lazy val PowersSql: String =
     (0 until 64).map(b => s"${BigInt(1) << b}::HUGEINT").mkString("[", ", ", "]")
 
-  private val M64 = "18446744073709551616::HUGEINT"
-  private val SimA = java.lang.Long.toUnsignedString(graft.functions.Mix64.MulA)
-  private val SimB = java.lang.Long.toUnsignedString(graft.functions.Mix64.AddB)
+  private lazy val M64 = "18446744073709551616::HUGEINT"
+  private lazy val SimA = java.lang.Long.toUnsignedString(graft.functions.Mix64.MulA)
+  private lazy val SimB = java.lang.Long.toUnsignedString(graft.functions.Mix64.AddB)
 
   /** The complete portable MinHash-LSH pair chain (word trigrams →
     * rolling-31 mod 2^32 → per-slot (a·x+b) mod 2^64 signed mins → 8 bands
@@ -504,7 +864,7 @@ object DedupQueries extends graft.QueryModule {
       dir: String, tag: String): (String, Long) = {
     // s2 cached too (review r17 #4): the warm path must launch ZERO
     // Spark jobs — the max(doc_id) agg was harness cost on every rep
-    val Seq(s2) = graft.tools.HarnessCache.onceScalars(
+    val Seq(s2) = graft.tools.HarnessCache.onceValue(
       s"sigidx_${tag}_s2${OpsQueries.suffix(dir)}") {
       Seq(2 * t(s, dir, "documents").agg(max(col("doc_id")))
         .head().getLong(0) / 3 + 1)
@@ -608,7 +968,7 @@ object DedupQueries extends graft.QueryModule {
     * is converted to SIGNED for output/hamming, and the pairs replay the
     * 16-bit chunk banding + bit_count(xor) verify. Shared by q53 (full
     * pair rows) and q138 (the path-equivalence counts). */
-  private val simhashPortablePairsSql: String =
+  private lazy val simhashPortablePairsSql: String =
       s"""tk AS (
          |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
          |th AS (
@@ -653,399 +1013,4 @@ object DedupQueries extends graft.QueryModule {
          |  FROM bnd l JOIN bnd r
          |    ON l.chunk = r.chunk AND l.ckey = r.ckey AND l.doc_id < r.doc_id
          |  WHERE bit_count(xor(l.sh, r.sh)) <= 6)""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "q53_simhash_portable" ->
-      s"""WITH $simhashPortablePairsSql
-         |SELECT a_id, b_id, hamming FROM sh_pairs ORDER BY a_id, b_id""".stripMargin,
-
-    // production-path check oracles: the reference side computed exactly
-    // in DuckDB IS the expected value of the Spark prod path — total
-    // agreement / zero misses asserted (see the queries' design notes)
-    "q137_minhash_prod_vs_truth" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
-        |truth AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM docs a JOIN docs b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5)
-        |SELECT CAST(count(*) AS BIGINT) AS n_prod,
-        |  CAST(count(*) AS BIGINT) AS n_ref,
-        |  CAST(count(*) AS BIGINT) AS n_both,
-        |  CAST(0 AS BIGINT) AS n_only_prod,
-        |  CAST(0 AS BIGINT) AS n_only_ref
-        |FROM truth""".stripMargin,
-    "q138_simhash_dup_recall" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 50),
-        |h AS (SELECT md5(text) AS h, doc_id FROM docs),
-        |dp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |       FROM h a JOIN h b ON a.h = b.h AND a.doc_id < b.doc_id)
-        |SELECT CAST(count(*) AS BIGINT) AS n_dup_pairs,
-        |  CAST(0 AS BIGINT) AS n_missed_prod,
-        |  CAST(0 AS BIGINT) AS n_missed_portable
-        |FROM dp""".stripMargin,
-
-    // Complete MinHash-LSH twin: word-trigram gram strings → rolling-31
-    // base hash mod 2^32 (the 32-bit reduction keeps a_j·x inside signed
-    // HUGEINT) → per-slot (a_j·x + b_j) mod 2^64, converted to SIGNED
-    // before the min (Spark Long order) → 8 bands keyed by the 4-slot
-    // signature slice → est_sim = equal-slot fraction, ≥ 0.3, distinct.
-    "q48_minhash_portable" ->
-      s"""WITH ${portableLshPairsSql("documents")}
-         |SELECT a_id, b_id, est_sim FROM lsh_pairs ORDER BY a_id, b_id""".stripMargin,
-
-    // the same lsh_pairs chain, filtered to cross-set (benchmark vs
-    // corpus) candidates and rolled up per contaminated doc
-    "q133_fuzzy_decontaminate" ->
-      s"""WITH ${portableLshPairsSql("documents")},
-         |src AS (SELECT doc_id, source = 'src0' AS is_bench FROM documents)
-         |SELECT CASE WHEN a.is_bench THEN p.b_id ELSE p.a_id END AS doc_id,
-         |  max(p.est_sim) AS max_est_sim,
-         |  CAST(count(*) AS BIGINT) AS n_bench_matches
-         |FROM lsh_pairs p
-         |JOIN src a ON a.doc_id = p.a_id
-         |JOIN src b ON b.doc_id = p.b_id
-         |WHERE a.is_bench <> b.is_bench
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // the same LSH chain replayed over exact survivors, then the decision
-    // join (md5 + min-id rep; smallest qualifying partner)
-    "q72_incremental_dedup" ->
-      s"""WITH hashed AS (SELECT doc_id, text, md5(text) AS h FROM documents),
-         |reps AS (SELECT h, min(doc_id) AS rep_id FROM hashed GROUP BY h),
-         |wr AS (SELECT hashed.doc_id, hashed.text, reps.rep_id
-         |       FROM hashed JOIN reps USING (h)),
-         |surv AS (SELECT doc_id, text FROM wr WHERE doc_id = rep_id),
-         |${portableLshPairsSql("surv")},
-         |sp AS (SELECT (max(doc_id) // 2 + 1) AS s FROM documents),
-         |near AS (SELECT b_id AS doc_id, min(a_id) AS near_partner
-         |         FROM lsh_pairs CROSS JOIN sp WHERE b_id >= sp.s GROUP BY b_id)
-         |SELECT wr.doc_id,
-         |  CASE WHEN wr.doc_id <> wr.rep_id THEN 'drop_exact'
-         |       WHEN near.near_partner IS NOT NULL THEN 'drop_near'
-         |       ELSE 'keep' END AS decision,
-         |  CASE WHEN wr.doc_id <> wr.rep_id THEN wr.rep_id
-         |       ELSE near.near_partner END AS partner_id
-         |FROM wr CROSS JOIN sp LEFT JOIN near ON near.doc_id = wr.doc_id
-         |WHERE wr.doc_id >= sp.s
-         |ORDER BY wr.doc_id""".stripMargin,
-    "q20_exact_dedup" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-
-    // the full portable chain replayed FROM TEXT over the whole corpus
-    // (no index — that's the point: the engine's stored-index serve must
-    // agree with the from-scratch derivation); corpus→batch pairs are
-    // exactly the a_id < split <= b_id slice of the a<b pair set
-    "q209_neardup_index" ->
-      s"""WITH ${portableLshPairsSql("documents")},
-         |sp AS (SELECT (max(doc_id) // 2 + 1) AS s FROM documents),
-         |near AS (
-         |  SELECT b_id AS doc_id, min(a_id) AS partner_id,
-         |    CAST(count(DISTINCT a_id) AS BIGINT) AS n_index_hits
-         |  FROM lsh_pairs CROSS JOIN sp
-         |  WHERE a_id < sp.s AND b_id >= sp.s GROUP BY b_id)
-         |SELECT d.doc_id,
-         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
-         |       ELSE 'keep' END AS decision,
-         |  near.partner_id,
-         |  CAST(coalesce(near.n_index_hits, 0) AS BIGINT) AS n_index_hits
-         |FROM documents d CROSS JOIN sp
-         |LEFT JOIN near ON near.doc_id = d.doc_id
-         |WHERE d.doc_id >= sp.s
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // the full portable chain replayed FROM TEXT with the maintained
-    // index's membership rule applied as a WHERE: a_id ∈ A∪B (below s2)
-    // minus the deletion ledger (% 7 = 3), b_id ∈ C — serve-after-
-    // append-and-delete must equal the from-scratch derivation
-    "q214_index_maintain" ->
-      s"""WITH ${portableLshPairsSql("documents")},
-         |sp AS (SELECT (max(doc_id) // 3 + 1) AS s1,
-         |              ((2 * max(doc_id)) // 3 + 1) AS s2 FROM documents),
-         |near AS (
-         |  SELECT b_id AS doc_id, min(a_id) AS partner_id,
-         |    CAST(count(DISTINCT a_id) AS BIGINT) AS n_index_hits
-         |  FROM lsh_pairs CROSS JOIN sp
-         |  WHERE a_id < sp.s2 AND a_id % 7 <> 3 AND b_id >= sp.s2
-         |  GROUP BY b_id)
-         |SELECT d.doc_id,
-         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
-         |       ELSE 'keep' END AS decision,
-         |  near.partner_id,
-         |  CAST(coalesce(near.n_index_hits, 0) AS BIGINT) AS n_index_hits
-         |FROM documents d CROSS JOIN sp
-         |LEFT JOIN near ON near.doc_id = d.doc_id
-         |WHERE d.doc_id >= sp.s2
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // the same earliest-wins 8-token-window replay: md5 fingerprints,
-    // row_number over (doc_id, pos) per fingerprint, rn>1 occurrences
-    // cover their 8 positions, DISTINCT coverage per doc.
-    "q193_substring_dedup" ->
-      s"""WITH ${spanOracleCtes("documents")},
-        |cov AS (
-        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
-        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
-        |  GROUP BY doc_id),
-        |gc AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
-        |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(gc.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
-        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
-        |FROM toks t
-        |LEFT JOIN gc USING (doc_id) LEFT JOIN dc USING (doc_id)
-        |LEFT JOIN cov USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // two prefixed instantiations of the shared chain (corpus c*, batch
-    // b*); corpus-known via IN on the distinct fingerprint set, fresh
-    // residue re-ranked batch-internally
-    "q196_span_incremental" ->
-      s"""WITH corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |batchd AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 <> 0),
-        |${spanOracleCtes("corpus", "c")},
-        |${spanOracleCtes("batchd", "b")},
-        |cg AS (SELECT DISTINCT g FROM cgrams),
-        |vs AS (SELECT doc_id, pos FROM bgrams WHERE g IN (SELECT g FROM cg)),
-        |fr AS (
-        |  SELECT doc_id, pos,
-        |    row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-        |  FROM bgrams WHERE g NOT IN (SELECT g FROM cg)),
-        |wb AS (SELECT doc_id, pos FROM fr WHERE rn > 1),
-        |alld AS (SELECT doc_id, pos FROM vs UNION ALL SELECT doc_id, pos FROM wb),
-        |cov AS (
-        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
-        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM alld) t
-        |  GROUP BY doc_id),
-        |gc AS (SELECT doc_id, count(*) AS n_grams FROM bgrams GROUP BY doc_id),
-        |vc AS (SELECT doc_id, count(*) AS n_vs FROM vs GROUP BY doc_id),
-        |wc AS (SELECT doc_id, count(*) AS n_wb FROM wb GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(gc.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(vc.n_vs, 0) AS BIGINT) AS n_dup_vs_corpus,
-        |  CAST(coalesce(wc.n_wb, 0) AS BIGINT) AS n_dup_within_batch,
-        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
-        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
-        |FROM btoks t
-        |LEFT JOIN gc USING (doc_id) LEFT JOIN vc USING (doc_id)
-        |LEFT JOIN wc USING (doc_id) LEFT JOIN cov USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // the shared span chain instantiated once per k (prefixes k8/k16/k32),
-    // each reduced to its corpus-level dup-mass row, unioned — the same
-    // SQL q193 is verified by, swept across the width knob
-    "q207_span_multik" -> {
-      val perK = Seq(8, 16, 32).map { k =>
-        val p = s"k$k"
-        s"""${spanOracleCtes("documents", p, k)},
-           |${p}ds AS (
-           |  SELECT doc_id, count(*) // $k AS n_dups,
-           |    count(DISTINCT p) AS n_cov
-           |  FROM (SELECT doc_id, unnest(range(pos, pos + $k)) AS p
-           |        FROM ${p}dups) t
-           |  GROUP BY doc_id),
-           |${p}row AS (
-           |  SELECT CAST($k AS BIGINT) AS k,
-           |    (SELECT CAST(coalesce(sum(greatest(len(w) - ${k - 1}, 0)), 0) AS BIGINT)
-           |     FROM ${p}toks) AS n_grams_total,
-           |    CAST(coalesce((SELECT sum(n_dups) FROM ${p}ds), 0) AS BIGINT) AS n_dup_spans,
-           |    CAST((SELECT count(*) FROM ${p}ds) AS BIGINT) AS n_docs_with_dups,
-           |    CAST(coalesce((SELECT sum(n_cov) FROM ${p}ds), 0) AS BIGINT) AS n_covered_tokens)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $perK
-         |SELECT * FROM k8row
-         |UNION ALL SELECT * FROM k16row
-         |UNION ALL SELECT * FROM k32row
-         |ORDER BY k""".stripMargin
-    },
-
-    // the same dups CTE, then the classic islands SQL (the q50 sessionize
-    // oracle's gap-merge): running max end over earlier windows, a new
-    // island when s exceeds it, min/max per island
-    "q197_maximal_spans" ->
-      s"""WITH ${spanOracleCtes("documents")},
-        |iv AS (SELECT doc_id, pos AS s, pos + 8 AS e FROM dups),
-        |m AS (
-        |  SELECT doc_id, s, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |  FROM iv),
-        |isl AS (
-        |  SELECT doc_id, s, e,
-        |    sum(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY s) AS span_idx
-        |  FROM m)
-        |SELECT doc_id, CAST(span_idx AS BIGINT) AS span_idx,
-        |  CAST(min(s) AS BIGINT) AS start_pos,
-        |  CAST(max(e) AS BIGINT) AS end_pos,
-        |  CAST(max(e) - min(s) AS BIGINT) AS span_len
-        |FROM isl GROUP BY doc_id, span_idx
-        |ORDER BY doc_id, span_idx""".stripMargin,
-
-    // the cleaned-text emit: identical covered-set CTEs, then per-token
-    // anti join + string_agg(tok, ' ' ORDER BY p) reconstruct
-    "q194_span_clean" ->
-      s"""WITH ${spanOracleCtes("documents")},
-        |covp AS (
-        |  SELECT DISTINCT doc_id, p FROM (
-        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t),
-        |tokrows AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS p, w[CAST(i AS INT)] AS tok
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS i FROM toks) t),
-        |kept AS (
-        |  SELECT tr.doc_id, tr.p, tr.tok FROM tokrows tr
-        |  LEFT JOIN covp c ON c.doc_id = tr.doc_id AND c.p = tr.p
-        |  WHERE c.p IS NULL),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_kept,
-        |    string_agg(tok, ' ' ORDER BY p) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept_tokens,
-        |  coalesce(agg.clean_text, '') AS clean_text
-        |FROM toks t LEFT JOIN agg USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // same integer set arithmetic (|∩| / (|A|+|B|-|∩|)) → bit-identical.
-    // Intentionally the NAIVE global all-pairs formulation: the engine's
-    // LSH-candidate path must reproduce it exactly (see queries note).
-    "q21_ngram_jaccard" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |  FROM documents WHERE len(string_split(text,' ')) >= 3)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jacc
-        |FROM docs a JOIN docs b ON a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // transitive closure of the same all-pairs ≥ 0.5 edge set; UNION (not
-    // UNION ALL) bounds the recursion
-    "q28_dedup_groups" ->
-      """WITH RECURSIVE sh_docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS x, doc_id AS n FROM documents
-        |  UNION
-        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x)
-        |SELECT x AS doc_id, min(n) AS keep_id FROM reach GROUP BY x ORDER BY doc_id""".stripMargin,
-
-    // q28's closure + component-keyed Mix64 split + the in-band
-    // cross-split edge count recomputed from the oracle's OWN edge set
-    "q169_leakage_safe_split" ->
-      s"""WITH RECURSIVE sh_docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |  FROM documents WHERE len(string_split(text,' ')) >= 3),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS x, doc_id AS n FROM documents
-        |  UNION
-        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
-        |comp AS (SELECT x AS id, min(n) AS component FROM reach GROUP BY x),
-        |asg AS (
-        |  SELECT id, component,
-        |    CASE WHEN ${OpsQueries.coordSql("component")} < $SplitTrain THEN 'train'
-        |         WHEN ${OpsQueries.coordSql("component")} < $SplitVal THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM comp),
-        |cr AS (
-        |  SELECT sa.split AS split,
-        |    CAST(count(CASE WHEN sa.split <> sb.split THEN 1 END) AS BIGINT)
-        |      AS n_cross_edges
-        |  FROM pairs p
-        |  JOIN asg sa ON sa.id = p.a JOIN asg sb ON sb.id = p.b
-        |  GROUP BY 1)
-        |SELECT asg.split, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(DISTINCT component) AS BIGINT) AS n_groups,
-        |  CAST(sum(id) AS BIGINT) AS doc_id_sum,
-        |  coalesce(max(cr.n_cross_edges), 0) AS n_cross_edges
-        |FROM asg LEFT JOIN cr ON cr.split = asg.split
-        |GROUP BY asg.split ORDER BY asg.split""".stripMargin,
-
-    // exact-dedup window + all-pairs closure over exact survivors only
-    "q29_dedup_pipeline" ->
-      """WITH RECURSIVE rep AS (
-        |  SELECT doc_id, text, min(doc_id) OVER (PARTITION BY md5(text)) AS exact_rep
-        |  FROM documents),
-        |surv AS (SELECT doc_id, text FROM rep WHERE doc_id = exact_rep),
-        |sh_docs AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-        |  FROM surv WHERE len(string_split(text,' ')) >= 3),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-        |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
-        |reach AS (
-        |  SELECT doc_id AS x, doc_id AS n FROM surv
-        |  UNION
-        |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
-        |comp AS (SELECT x AS exact_rep, min(n) AS keep_id FROM reach GROUP BY x)
-        |SELECT rep.doc_id AS id, coalesce(c.keep_id, rep.exact_rep) AS keep_id,
-        |  CASE WHEN rep.doc_id = coalesce(c.keep_id, rep.exact_rep) THEN 'kept'
-        |       WHEN rep.doc_id <> rep.exact_rep THEN 'exact' ELSE 'near' END AS reason
-        |FROM rep LEFT JOIN comp c ON rep.exact_rep = c.exact_rep
-        |ORDER BY id""".stripMargin,
-
-    // ids only: cosine magnitudes differ in the last ulp between engines,
-    // but the 0.4 threshold has ≥1e-5 margin to every pair at all SFs.
-    // The banding mirrors Dedup.cosinePairsSignLsh(8 bands × 4 sign bits)
-    // bit-for-bit — sign comparisons on stored floats are exact integers.
-    // candidates deduped as int pairs FIRST, vectors joined back once per
-    // pair — same result as the engine's in-band verify, but cheap enough
-    // for DuckDB to complete at sf0.1 too (carrying the float lists
-    // through the pair GROUP BY spilled for tens of minutes)
-    "q24_embedding_neardup" ->
-      """WITH banded AS (
-        |  SELECT vec_id, b.band,
-        |      (CASE WHEN embedding[b.band*4 + 1] >= 0 THEN 1 ELSE 0 END)
-        |    + (CASE WHEN embedding[b.band*4 + 2] >= 0 THEN 2 ELSE 0 END)
-        |    + (CASE WHEN embedding[b.band*4 + 3] >= 0 THEN 4 ELSE 0 END)
-        |    + (CASE WHEN embedding[b.band*4 + 4] >= 0 THEN 8 ELSE 0 END) AS bucket
-        |  FROM embeddings, range(0, 8) b(band)),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-        |  FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
-        |    AND a.vec_id < b.vec_id)
-        |SELECT c.a_id, c.b_id
-        |FROM cand c
-        |JOIN embeddings ea ON ea.vec_id = c.a_id
-        |JOIN embeddings eb ON eb.vec_id = c.b_id
-        |WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])) >= 0.4
-        |ORDER BY a_id, b_id""".stripMargin)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Entry
+
 /** Interchange-format round-trip rows: the engine writes a table out in a
   * foreign format, reads it back, and aggregates — the oracle computes the
   * SAME aggregate straight from the parquet source, so any value mangled by
@@ -28,13 +30,13 @@ object FormatQueries extends graft.QueryModule {
     new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft_fmt_$name${OpsQueries.suffix(dir)}").getAbsolutePath
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // ORC sink + source: lineitem's numeric/flag columns through a
     // partitioned ORC write (partitionBy exercises directory layout +
     // partition-column recovery on read), then the q01-shape rollup with
     // the decimal-exact float discipline. snappy ORC, one file per
     // partition value at bench scale.
-    "q174_orc_roundtrip" -> ((s, dir) => {
+    Entry("q174_orc_roundtrip", (s, dir) => {
       val out = tmpDir("orc", dir)
       s.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
@@ -55,14 +57,20 @@ object FormatQueries extends graft.QueryModule {
             .cast("decimal(25,6)")).cast("double").as("sum_disc_price"),
           sum(col("l_orderkey")).as("orderkey_sum"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
+    }, Some(
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(20,2))) AS DECIMAL(20,2)) AS DOUBLE) AS sum_qty,
+        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(25,6))) AS DECIMAL(25,6)) AS DOUBLE) AS sum_disc_price,
+        |  CAST(sum(l_orderkey) AS BIGINT) AS orderkey_sum
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // JSONL sink + source: the documents corpus through gzipped
     // JSON-lines (escaping, unicode, compression) and back under an
     // explicit schema; the rollup pins a per-source content fingerprint —
     // md5 over the lexicographically-sorted doc_id:md5(text) pairs — so a
     // single mangled character anywhere in the round-trip flips the row.
-    "q175_jsonl_roundtrip" -> ((s, dir) => {
+    Entry("q175_jsonl_roundtrip", (s, dir) => {
       val out = tmpDir("jsonl", dir)
       s.read.parquet(s"$dir/documents.parquet")
         .write.mode("overwrite").option("compression", "gzip").json(out)
@@ -80,21 +88,10 @@ object FormatQueries extends graft.QueryModule {
             concat(col("doc_id").cast("string"), lit(":"), md5(col("text")))))))
             .as("content_md5"))
         .orderBy("source")
-    }))
-
-  val oracle: Map[String, String] = Map(
-    "q174_orc_roundtrip" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(CAST(sum(CAST(l_quantity AS DECIMAL(20,2))) AS DECIMAL(20,2)) AS DOUBLE) AS sum_qty,
-        |  CAST(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(25,6))) AS DECIMAL(25,6)) AS DOUBLE) AS sum_disc_price,
-        |  CAST(sum(l_orderkey) AS BIGINT) AS orderkey_sum
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q175_jsonl_roundtrip" ->
+    }, Some(
       """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  md5(string_agg(CAST(doc_id AS VARCHAR) || ':' || md5(text), ';'
         |    ORDER BY CAST(doc_id AS VARCHAR) || ':' || md5(text))) AS content_md5
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin)
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.multimodal.Multimodal
 
 /** Multimodal-pipeline CORRECTNESS query: deterministic GRFT containers are
@@ -142,7 +143,7 @@ object MultimodalQueries extends graft.QueryModule {
       .toDF("img_id", "fp")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // IMAGE PERCEPTUAL NEAR-DUP (round 13, judge r12 Next #4): q98 dedups
     // EXACT frames; re-encoded / resized / tone-mapped copies hash apart
     // there. dHash64 (gradient signs of the 8×9 box grid) + banded-hamming
@@ -155,10 +156,12 @@ object MultimodalQueries extends graft.QueryModule {
     // sf0.1 — the few drifting past 6 are outside the operator's "near"
     // definition, and q199 reports them). The oracle replays pixels →
     // cells → bits → chunks → pairs entirely in SQL.
-    "q198_image_dhash_pairs" -> ((s, dir) =>
+    Entry("q198_image_dhash_pairs", (s, dir) =>
       graft.dedup.Dedup.fingerprintPairs(dhashFps(s, dir),
           col("img_id"), col("fp"), maxHamming = 6, nChunks = 8)
-        .orderBy("a_id", "b_id")),
+        .orderBy("a_id", "b_id"), Some(
+      s"""WITH ${dhashOracleCtes()}
+         |SELECT a_id, b_id, hamming FROM prs ORDER BY a_id, b_id""".stripMargin)),
 
     // AUDIO PERCEPTUAL NEAR-DUP (round 13): the q198 discipline on the
     // energy envelope — audioHash64 (gradient signs of 65 window energies,
@@ -173,7 +176,7 @@ object MultimodalQueries extends graft.QueryModule {
     // the container/windowing plumbing itself is oracle-verified by
     // q173/q190, so the closed-form energy is the same integer the engine
     // sums sample-by-sample.
-    "q201_audio_neardup" -> ((s, dir) => {
+    Entry("q201_audio_neardup", (s, dir) => {
       import s.implicits._
       val fps = audioAssets(s, dir).as[(Long, Array[Byte])]
         .flatMap { case (id, bytes) =>
@@ -184,7 +187,9 @@ object MultimodalQueries extends graft.QueryModule {
       graft.dedup.Dedup.fingerprintPairs(fps, col("aud_id"), col("fp"),
           maxHamming = 6, nChunks = 8)
         .orderBy("a_id", "b_id")
-    }),
+    }, Some(
+      s"""WITH $audioOracleCtes
+         |SELECT a_id, b_id, hamming FROM prs ORDER BY a_id, b_id""".stripMargin)),
 
     // MEASURED PLANTED RECALL for q198 (the q137-style path check made
     // self-contained): planted pairs are the same-doc asset pairs
@@ -193,7 +198,7 @@ object MultimodalQueries extends graft.QueryModule {
     // recall counts how many the banded pipeline surfaced. The oracle
     // recomputes every field from its own replay — recall is driver-
     // checked, not asserted.
-    "q199_image_neardup_recall" -> ((s, dir) => {
+    Entry("q199_image_neardup_recall", (s, dir) => {
       val fps = dhashFps(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pairs = graft.dedup.Dedup.fingerprintPairs(fps,
@@ -221,7 +226,31 @@ object MultimodalQueries extends graft.QueryModule {
             col("n_planted_pairs").cast("double")).as("planted_recall"),
           col("max_planted_hamming").cast("long").as("max_planted_hamming"),
           col("n_pairs_total"))
-    }),
+    }, Some(
+      // planted pairs = same-doc asset pairs; their exact hamming computed
+      // directly (no LSH), recall = found/planted; every field recomputed
+      // from the oracle's own replay
+      s"""WITH ${dhashOracleCtes()},
+         |pl AS (
+         |  SELECT a.img_id AS a_id, b.img_id AS b_id
+         |  FROM assets a JOIN assets b
+         |    ON a.doc_id = b.doc_id AND a.img_id < b.img_id),
+         |plh AS (
+         |  SELECT pl.a_id, pl.b_id,
+         |    bit_count(xor(fa.sh, fb.sh)) AS ham
+         |  FROM pl
+         |  JOIN sfp fa ON fa.img_id = pl.a_id
+         |  JOIN sfp fb ON fb.img_id = pl.b_id),
+         |fnd AS (
+         |  SELECT plh.a_id FROM plh JOIN prs USING (a_id, b_id))
+         |SELECT
+         |  (SELECT CAST(count(*) AS BIGINT) FROM assets) AS n_assets,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM plh) AS n_planted_pairs,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM fnd) AS n_planted_found,
+         |  (SELECT CAST(count(*) AS DOUBLE) FROM fnd)
+         |    / (SELECT CAST(count(*) AS DOUBLE) FROM plh) AS planted_recall,
+         |  (SELECT CAST(max(ham) AS BIGINT) FROM plh) AS max_planted_hamming,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM prs) AS n_pairs_total""".stripMargin)),
 
     // FRAME-LEVEL exact dedup — the image-dedup stage of a multimodal
     // pipeline: decode → canonical content hash per frame → keep the
@@ -238,7 +267,7 @@ object MultimodalQueries extends graft.QueryModule {
     // map partition instead of sorting its whole group in one task's
     // window — and every frame marks itself against the 1-row-per-hash
     // keeper by a streaming hash probe.
-    "q98_frame_dedup" -> ((s, dir) => {
+    Entry("q98_frame_dedup", (s, dir) => {
       val frames = Multimodal.decodeFrames(assetsOf(s, dir)).toDF()
       val hashed = frames.select(col("asset_id"), col("frame_idx"),
         md5(graft.functions.PixelCsv.pixelCsv(col("pixels"))).as("frame_md5"))
@@ -251,7 +280,33 @@ object MultimodalQueries extends graft.QueryModule {
           (struct(col("asset_id"), col("frame_idx")) === col("_k"))
             .cast("int").as("kept"))
         .orderBy("asset_id", "frame_idx")
-    }),
+    }, Some(
+      // payload bytes regenerated arithmetically; hash input is the same
+      // canonical comma-joined byte string the engine reconstructs from the
+      // decoded floats, so any codec drift breaks the md5 compare
+      """WITH fr AS (
+        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
+        |    CAST(f AS INT) AS frame_idx
+        |  FROM documents, range(0, 3) t(f) WHERE f <= doc_id % 3),
+        |h AS (
+        |  SELECT asset_id, frame_idx,
+        |    md5(array_to_string(list_transform(range(0, 768),
+        |      i -> CAST((doc_id*31 + frame_idx*17 + i*7) % 256 AS VARCHAR)), ',')) AS frame_md5
+        |  FROM fr),
+        |r AS (
+        |  SELECT asset_id, frame_idx, frame_md5,
+        |    row_number() OVER (PARTITION BY frame_md5
+        |      ORDER BY asset_id, frame_idx) AS rn,
+        |    first_value(asset_id) OVER (PARTITION BY frame_md5
+        |      ORDER BY asset_id, frame_idx
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS keep_asset,
+        |    first_value(frame_idx) OVER (PARTITION BY frame_md5
+        |      ORDER BY asset_id, frame_idx
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS keep_frame
+        |  FROM h)
+        |SELECT asset_id, frame_idx, frame_md5, keep_asset, keep_frame,
+        |  CAST(rn = 1 AS INT) AS kept
+        |FROM r ORDER BY asset_id, frame_idx""".stripMargin)),
 
     // TEMPORAL FRAME DIFF (motion proxy) over decoded video assets: for
     // every consecutive frame pair of a multi-frame asset, the exact
@@ -264,7 +319,7 @@ object MultimodalQueries extends graft.QueryModule {
     // 1.2 s at sf0.1 and a pointless pixel shuffle; the in-container
     // kernel is 0.5 s and the right 100 TB shape). Single-frame assets
     // contribute no rows (no pair to diff).
-    "q177_frame_diff" -> ((s, dir) => {
+    Entry("q177_frame_diff", (s, dir) => {
       import s.implicits._
       assetsOf(s, dir).select(col("asset_id"), col("content"))
         .as[(String, Array[Byte])]
@@ -284,7 +339,24 @@ object MultimodalQueries extends graft.QueryModule {
         }
         .toDF("asset_id", "frame_idx", "abs_diff_sum", "n_px", "mean_diff_q")
         .orderBy("asset_id", "frame_idx")
-    }),
+    }, Some(
+      // payload bytes regenerated arithmetically for both frames of each
+      // consecutive pair; |diff| summed over the 768 indices
+      """WITH fr AS (
+        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
+        |    CAST(f AS INT) AS frame_idx
+        |  FROM documents, range(1, 3) t(f) WHERE f <= doc_id % 3),
+        |d AS (
+        |  SELECT asset_id, frame_idx,
+        |    CAST(sum(abs((doc_id*31 + frame_idx*17 + i*7) % 256
+        |          - (doc_id*31 + (frame_idx-1)*17 + i*7) % 256)) AS BIGINT)
+        |      AS abs_diff_sum
+        |  FROM fr, range(0, 768) t(i)
+        |  GROUP BY asset_id, frame_idx)
+        |SELECT asset_id, frame_idx, abs_diff_sum,
+        |  CAST(768 AS BIGINT) AS n_px,
+        |  CAST(abs_diff_sum // 768 AS BIGINT) AS mean_diff_q
+        |FROM d ORDER BY asset_id, frame_idx""".stripMargin)),
 
     // TRAINING-EXAMPLE ASSEMBLY + COMPLETENESS AUDIT: the last step of a
     // multimodal pipeline — join each document with its embedding and its
@@ -295,7 +367,7 @@ object MultimodalQueries extends graft.QueryModule {
     // exercised; joins are id-keyed left joins (never a shuffle of
     // payloads — the audit projects presence bits only, so text, vectors
     // and pixels all stay at rest).
-    "q181_example_assembly" -> ((s, dir) => {
+    Entry("q181_example_assembly", (s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"))
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
@@ -313,7 +385,21 @@ object MultimodalQueries extends graft.QueryModule {
           sum(when(col("has_emb") === 1 && col("has_asset") === 1,
             col("doc_id"))).as("complete_id_sum"))
         .orderBy("source")
-    }),
+    }, Some(
+      // same planted gaps + the natural ones (embeddings stop at their own
+      // row count — docs beyond it are genuinely embedding-less)
+      """WITH emb AS (SELECT vec_id AS doc_id, 1 AS has_emb
+        |             FROM embeddings WHERE vec_id % 7 <> 0),
+        |ast AS (SELECT doc_id, 1 AS has_asset
+        |        FROM documents WHERE doc_id % 11 <> 0)
+        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(CASE WHEN e.has_emb = 1 AND a.has_asset = 1 THEN 1 END) AS BIGINT) AS n_complete,
+        |  CAST(count(CASE WHEN e.has_emb IS NULL THEN 1 END) AS BIGINT) AS n_missing_embedding,
+        |  CAST(count(CASE WHEN a.has_asset IS NULL THEN 1 END) AS BIGINT) AS n_missing_asset,
+        |  CAST(sum(CASE WHEN e.has_emb = 1 AND a.has_asset = 1 THEN d.doc_id END) AS BIGINT) AS complete_id_sum
+        |FROM documents d
+        |LEFT JOIN emb e USING (doc_id) LEFT JOIN ast a USING (doc_id)
+        |GROUP BY d.source ORDER BY d.source""".stripMargin)),
 
     // AUDIO WINDOWED FEATURES over an opaque PCM binary column: per-doc
     // planted s16le payloads (the q70 pattern — deterministic bytes, real
@@ -326,7 +412,7 @@ object MultimodalQueries extends graft.QueryModule {
     // branch of pcmS16Windows is covered by the oracle row (advisor r10).
     // One narrow flatMap — audio bytes never shuffle, only the per-window
     // feature rows do.
-    "q173_audio_features" -> ((s, dir) => {
+    Entry("q173_audio_features", (s, dir) => {
       import s.implicits._
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id")).as[Long]
@@ -337,7 +423,29 @@ object MultimodalQueries extends graft.QueryModule {
         }
         .toDF()
         .orderBy("asset_id", "widx")
-    }),
+    }, Some(
+      // samples regenerated arithmetically (byte pairs → sign-corrected
+      // s16), windowed by j div 64, lag() for the strict crossings
+      """WITH d AS (SELECT doc_id, 200 + (doc_id % 3) * 60 AS ns FROM documents),
+        |s AS (SELECT doc_id, CAST(j AS INT) AS j,
+        |        ((doc_id*31 + (2*j+1)*7) % 256) * 256
+        |          + ((doc_id*31 + (2*j)*7) % 256) AS v
+        |      FROM d, range(0, 320) t(j) WHERE j < ns),
+        |ss AS (SELECT doc_id, j,
+        |        CAST(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS BIGINT) AS smp
+        |       FROM s),
+        |w AS (SELECT doc_id, CAST(j // 64 AS INT) AS widx, smp,
+        |        lag(smp) OVER (PARTITION BY doc_id, j // 64 ORDER BY j) AS prev
+        |      FROM ss)
+        |SELECT 'audio_' || CAST(doc_id AS VARCHAR) AS asset_id, widx,
+        |  CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(smp * smp) AS BIGINT) AS sum_sq,
+        |  CAST(count(CASE WHEN prev * smp < 0 THEN 1 END) AS BIGINT)
+        |    AS zero_crossings,
+        |  CAST(floor(sqrt(CAST(sum(smp * smp) // count(*) AS DOUBLE))) AS BIGINT)
+        |    AS rms
+        |FROM w GROUP BY doc_id, widx
+        |ORDER BY asset_id, widx""".stripMargin)),
 
     // WAV CONTAINER INGEST (round 11): q173 windows NAKED sample buffers;
     // a real pipeline ingests .wav FILES. Per doc-id asset, executor-side:
@@ -352,7 +460,7 @@ object MultimodalQueries extends graft.QueryModule {
     // truth — and mean-downmix to the floorDiv per-frame mean; windowing
     // interleaved stereo as if mono is the bug this boolean pins out.
     // Booleans aggregate to one guarantee row.
-    "q190_wav_ingest" -> ((s, dir) => {
+    Entry("q190_wav_ingest", (s, dir) => {
       import s.implicits._
       s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id")).as[Long]
@@ -414,7 +522,12 @@ object MultimodalQueries extends graft.QueryModule {
           "bool_and(list_skipped) AS unknown_chunks_skipped",
           "bool_and(hostile_rejected) AS hostiles_rejected",
           "bool_and(stereo) AS stereo_deinterleaved")
-    }),
+    }, Some(
+      // guarantee row: one asset per doc, every boolean must hold
+      """SELECT CAST(count(*) AS BIGINT) AS n_assets, true AS windows_roundtrip,
+        |  true AS unknown_chunks_skipped, true AS hostiles_rejected,
+        |  true AS stereo_deinterleaved
+        |FROM documents""".stripMargin)),
 
     // BOX-AVERAGE RESIZE (pooling) over decoded frames — the multimodal
     // resize op in exact integer form: 16×16 → 5×5 (non-divisible ratio,
@@ -423,7 +536,7 @@ object MultimodalQueries extends graft.QueryModule {
     // cell values as csv + their sum; the oracle regenerates payload
     // bytes arithmetically and replays the same partition by exploding
     // pixel indices and grouping (sum div count — exact integers).
-    "q172_multimodal_resize" -> ((s, dir) => {
+    Entry("q172_multimodal_resize", (s, dir) => {
       import s.implicits._
       val frames = Multimodal.decodeFrames(assetsOf(s, dir))
       frames.flatMap { f =>
@@ -435,9 +548,30 @@ object MultimodalQueries extends graft.QueryModule {
         }
       }.toDF("asset_id", "frame_idx", "ch", "cells_csv", "cells_sum")
         .orderBy("asset_id", "frame_idx", "ch")
-    }),
+    }, Some(
+      // explode pixel indices, map each to its pooling cell with the same
+      // integer partition (y·5 div 16), sum div count per cell, then
+      // csv in row-major cell order
+      """WITH fr AS (
+        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
+        |    CAST(f AS INT) AS frame_idx
+        |  FROM documents, range(0, 3) t(f) WHERE f <= doc_id % 3),
+        |px AS (
+        |  SELECT asset_id, frame_idx, CAST(i // 256 AS INT) AS ch,
+        |    ((i % 256) // 16) * 5 // 16 AS r, (i % 16) * 5 // 16 AS c,
+        |    (doc_id*31 + frame_idx*17 + i*7) % 256 AS b
+        |  FROM fr, range(0, 768) t(i)),
+        |cells AS (
+        |  SELECT asset_id, frame_idx, ch, r, c,
+        |    CAST(sum(b) // count(*) AS BIGINT) AS v
+        |  FROM px GROUP BY 1, 2, 3, 4, 5)
+        |SELECT asset_id, frame_idx, ch,
+        |  string_agg(CAST(v AS VARCHAR), ',' ORDER BY r, c) AS cells_csv,
+        |  CAST(sum(v) AS BIGINT) AS cells_sum
+        |FROM cells GROUP BY 1, 2, 3
+        |ORDER BY asset_id, frame_idx, ch""".stripMargin)),
 
-    "q70_multimodal_features" -> ((s, dir) => {
+    Entry("q70_multimodal_features", (s, dir) => {
       val assets = assetsOf(s, dir)
       val frames = Multimodal.decodeFrames(assets)
       val sampled = Multimodal.sampleFrames(frames, stride = 2)
@@ -451,11 +585,28 @@ object MultimodalQueries extends graft.QueryModule {
           element_at(col("thumb"), 1).as("thumb_first"),
           element_at(col("thumb"), 48).as("thumb_last"))
         .orderBy("asset_id", "frame_idx")
-    }))
+    }, Some(
+      """WITH fr AS (
+        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id, CAST(f AS INT) AS frame_idx
+        |  FROM documents, range(0, 3) t(f)
+        |  WHERE f <= doc_id % 3 AND f % 2 = 0),
+        |m AS (
+        |  SELECT asset_id, frame_idx, doc_id,
+        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
+        |      CAST(CAST((doc_id*31 + frame_idx*17 + (0*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c0,
+        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
+        |      CAST(CAST((doc_id*31 + frame_idx*17 + (1*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c1,
+        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
+        |      CAST(CAST((doc_id*31 + frame_idx*17 + (2*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c2,
+        |    CAST(CAST((doc_id*31 + frame_idx*17 + 0) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS FLOAT) AS thumb_first,
+        |    CAST(CAST((doc_id*31 + frame_idx*17 + (2*256 + 12*16 + 12)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS FLOAT) AS thumb_last
+        |  FROM fr)
+        |SELECT asset_id, frame_idx, mean_c0, mean_c1, mean_c2, thumb_first, thumb_last
+        |FROM m ORDER BY asset_id, frame_idx""".stripMargin)))
 
   /** 2^0 … 2^63 as HUGEINT literals for the dHash fingerprint pack (the
     * q53-oracle powers discipline). */
-  private val PowersSql: String =
+  private lazy val PowersSql: String =
     (0 until 64).map(b => s"${BigInt(1) << b}::HUGEINT").mkString("[", ", ", "]")
 
   /** ONE copy of the dHash oracle chain (q198 pairs, q199 recall):
@@ -575,173 +726,4 @@ object MultimodalQueries extends graft.QueryModule {
        |  FROM aen l JOIN aen r ON r.img_id = l.img_id AND r.w = l.w + 1
        |  WHERE l.w < 64),
        |$hammingTailSql""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "q201_audio_neardup" ->
-      s"""WITH $audioOracleCtes
-         |SELECT a_id, b_id, hamming FROM prs ORDER BY a_id, b_id""".stripMargin,
-
-    "q198_image_dhash_pairs" ->
-      s"""WITH ${dhashOracleCtes()}
-         |SELECT a_id, b_id, hamming FROM prs ORDER BY a_id, b_id""".stripMargin,
-
-    // planted pairs = same-doc asset pairs; their exact hamming computed
-    // directly (no LSH), recall = found/planted; every field recomputed
-    // from the oracle's own replay
-    "q199_image_neardup_recall" ->
-      s"""WITH ${dhashOracleCtes()},
-         |pl AS (
-         |  SELECT a.img_id AS a_id, b.img_id AS b_id
-         |  FROM assets a JOIN assets b
-         |    ON a.doc_id = b.doc_id AND a.img_id < b.img_id),
-         |plh AS (
-         |  SELECT pl.a_id, pl.b_id,
-         |    bit_count(xor(fa.sh, fb.sh)) AS ham
-         |  FROM pl
-         |  JOIN sfp fa ON fa.img_id = pl.a_id
-         |  JOIN sfp fb ON fb.img_id = pl.b_id),
-         |fnd AS (
-         |  SELECT plh.a_id FROM plh JOIN prs USING (a_id, b_id))
-         |SELECT
-         |  (SELECT CAST(count(*) AS BIGINT) FROM assets) AS n_assets,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM plh) AS n_planted_pairs,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM fnd) AS n_planted_found,
-         |  (SELECT CAST(count(*) AS DOUBLE) FROM fnd)
-         |    / (SELECT CAST(count(*) AS DOUBLE) FROM plh) AS planted_recall,
-         |  (SELECT CAST(max(ham) AS BIGINT) FROM plh) AS max_planted_hamming,
-         |  (SELECT CAST(count(*) AS BIGINT) FROM prs) AS n_pairs_total""".stripMargin,
-
-    // guarantee row: one asset per doc, every boolean must hold
-    "q190_wav_ingest" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_assets, true AS windows_roundtrip,
-        |  true AS unknown_chunks_skipped, true AS hostiles_rejected,
-        |  true AS stereo_deinterleaved
-        |FROM documents""".stripMargin,
-
-    // same planted gaps + the natural ones (embeddings stop at their own
-    // row count — docs beyond it are genuinely embedding-less)
-    "q181_example_assembly" ->
-      """WITH emb AS (SELECT vec_id AS doc_id, 1 AS has_emb
-        |             FROM embeddings WHERE vec_id % 7 <> 0),
-        |ast AS (SELECT doc_id, 1 AS has_asset
-        |        FROM documents WHERE doc_id % 11 <> 0)
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(CASE WHEN e.has_emb = 1 AND a.has_asset = 1 THEN 1 END) AS BIGINT) AS n_complete,
-        |  CAST(count(CASE WHEN e.has_emb IS NULL THEN 1 END) AS BIGINT) AS n_missing_embedding,
-        |  CAST(count(CASE WHEN a.has_asset IS NULL THEN 1 END) AS BIGINT) AS n_missing_asset,
-        |  CAST(sum(CASE WHEN e.has_emb = 1 AND a.has_asset = 1 THEN d.doc_id END) AS BIGINT) AS complete_id_sum
-        |FROM documents d
-        |LEFT JOIN emb e USING (doc_id) LEFT JOIN ast a USING (doc_id)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    // payload bytes regenerated arithmetically for both frames of each
-    // consecutive pair; |diff| summed over the 768 indices
-    "q177_frame_diff" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
-        |    CAST(f AS INT) AS frame_idx
-        |  FROM documents, range(1, 3) t(f) WHERE f <= doc_id % 3),
-        |d AS (
-        |  SELECT asset_id, frame_idx,
-        |    CAST(sum(abs((doc_id*31 + frame_idx*17 + i*7) % 256
-        |          - (doc_id*31 + (frame_idx-1)*17 + i*7) % 256)) AS BIGINT)
-        |      AS abs_diff_sum
-        |  FROM fr, range(0, 768) t(i)
-        |  GROUP BY asset_id, frame_idx)
-        |SELECT asset_id, frame_idx, abs_diff_sum,
-        |  CAST(768 AS BIGINT) AS n_px,
-        |  CAST(abs_diff_sum // 768 AS BIGINT) AS mean_diff_q
-        |FROM d ORDER BY asset_id, frame_idx""".stripMargin,
-
-    // samples regenerated arithmetically (byte pairs → sign-corrected
-    // s16), windowed by j div 64, lag() for the strict crossings
-    "q173_audio_features" ->
-      """WITH d AS (SELECT doc_id, 200 + (doc_id % 3) * 60 AS ns FROM documents),
-        |s AS (SELECT doc_id, CAST(j AS INT) AS j,
-        |        ((doc_id*31 + (2*j+1)*7) % 256) * 256
-        |          + ((doc_id*31 + (2*j)*7) % 256) AS v
-        |      FROM d, range(0, 320) t(j) WHERE j < ns),
-        |ss AS (SELECT doc_id, j,
-        |        CAST(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END AS BIGINT) AS smp
-        |       FROM s),
-        |w AS (SELECT doc_id, CAST(j // 64 AS INT) AS widx, smp,
-        |        lag(smp) OVER (PARTITION BY doc_id, j // 64 ORDER BY j) AS prev
-        |      FROM ss)
-        |SELECT 'audio_' || CAST(doc_id AS VARCHAR) AS asset_id, widx,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(smp * smp) AS BIGINT) AS sum_sq,
-        |  CAST(count(CASE WHEN prev * smp < 0 THEN 1 END) AS BIGINT)
-        |    AS zero_crossings,
-        |  CAST(floor(sqrt(CAST(sum(smp * smp) // count(*) AS DOUBLE))) AS BIGINT)
-        |    AS rms
-        |FROM w GROUP BY doc_id, widx
-        |ORDER BY asset_id, widx""".stripMargin,
-
-    // explode pixel indices, map each to its pooling cell with the same
-    // integer partition (y·5 div 16), sum div count per cell, then
-    // csv in row-major cell order
-    "q172_multimodal_resize" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
-        |    CAST(f AS INT) AS frame_idx
-        |  FROM documents, range(0, 3) t(f) WHERE f <= doc_id % 3),
-        |px AS (
-        |  SELECT asset_id, frame_idx, CAST(i // 256 AS INT) AS ch,
-        |    ((i % 256) // 16) * 5 // 16 AS r, (i % 16) * 5 // 16 AS c,
-        |    (doc_id*31 + frame_idx*17 + i*7) % 256 AS b
-        |  FROM fr, range(0, 768) t(i)),
-        |cells AS (
-        |  SELECT asset_id, frame_idx, ch, r, c,
-        |    CAST(sum(b) // count(*) AS BIGINT) AS v
-        |  FROM px GROUP BY 1, 2, 3, 4, 5)
-        |SELECT asset_id, frame_idx, ch,
-        |  string_agg(CAST(v AS VARCHAR), ',' ORDER BY r, c) AS cells_csv,
-        |  CAST(sum(v) AS BIGINT) AS cells_sum
-        |FROM cells GROUP BY 1, 2, 3
-        |ORDER BY asset_id, frame_idx, ch""".stripMargin,
-    // payload bytes regenerated arithmetically; hash input is the same
-    // canonical comma-joined byte string the engine reconstructs from the
-    // decoded floats, so any codec drift breaks the md5 compare
-    "q98_frame_dedup" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id,
-        |    CAST(f AS INT) AS frame_idx
-        |  FROM documents, range(0, 3) t(f) WHERE f <= doc_id % 3),
-        |h AS (
-        |  SELECT asset_id, frame_idx,
-        |    md5(array_to_string(list_transform(range(0, 768),
-        |      i -> CAST((doc_id*31 + frame_idx*17 + i*7) % 256 AS VARCHAR)), ',')) AS frame_md5
-        |  FROM fr),
-        |r AS (
-        |  SELECT asset_id, frame_idx, frame_md5,
-        |    row_number() OVER (PARTITION BY frame_md5
-        |      ORDER BY asset_id, frame_idx) AS rn,
-        |    first_value(asset_id) OVER (PARTITION BY frame_md5
-        |      ORDER BY asset_id, frame_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS keep_asset,
-        |    first_value(frame_idx) OVER (PARTITION BY frame_md5
-        |      ORDER BY asset_id, frame_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS keep_frame
-        |  FROM h)
-        |SELECT asset_id, frame_idx, frame_md5, keep_asset, keep_frame,
-        |  CAST(rn = 1 AS INT) AS kept
-        |FROM r ORDER BY asset_id, frame_idx""".stripMargin,
-    "q70_multimodal_features" ->
-      """WITH fr AS (
-        |  SELECT doc_id, 'asset_' || CAST(doc_id AS VARCHAR) AS asset_id, CAST(f AS INT) AS frame_idx
-        |  FROM documents, range(0, 3) t(f)
-        |  WHERE f <= doc_id % 3 AND f % 2 = 0),
-        |m AS (
-        |  SELECT asset_id, frame_idx, doc_id,
-        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
-        |      CAST(CAST((doc_id*31 + frame_idx*17 + (0*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c0,
-        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
-        |      CAST(CAST((doc_id*31 + frame_idx*17 + (1*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c1,
-        |    CAST(list_aggregate(list_transform(range(0, 256), j ->
-        |      CAST(CAST((doc_id*31 + frame_idx*17 + (2*256 + j)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS DOUBLE)), 'sum') / 256 AS FLOAT) AS mean_c2,
-        |    CAST(CAST((doc_id*31 + frame_idx*17 + 0) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS FLOAT) AS thumb_first,
-        |    CAST(CAST((doc_id*31 + frame_idx*17 + (2*256 + 12*16 + 12)*7) % 256 AS FLOAT) / CAST(255 AS FLOAT) AS FLOAT) AS thumb_last
-        |  FROM fr)
-        |SELECT asset_id, frame_idx, mean_c0, mean_c1, mean_c2, thumb_first, thumb_last
-        |FROM m ORDER BY asset_id, frame_idx""".stripMargin)
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.functions.Mix64
 import graft.ops.{Bucketing, Deletion, Layout, Quantiles, Sampling, Skew, SnapshotDiff, Temporal}
 
@@ -34,8 +35,8 @@ object OpsQueries extends graft.QueryModule {
 
   /** q121's deletion-request rate: the deterministic share of users whose
     * Mix64 coordinate files a request (both engines derive the threshold
-    * through the same Sampling.threshold floor). Defined BEFORE the query
-    * and oracle maps — those vals capture it at object-init time. */
+    * through the same Sampling.threshold floor). Defined BEFORE
+    * [[entries]] — its oracle SQL captures it at object-init time. */
   private[queries] val DeleteRate = 0.02
 
   /** 2024-01-16T00:00:00Z — the mid-corpus split instant shared by every
@@ -62,11 +63,11 @@ object OpsQueries extends graft.QueryModule {
   private[graft] def suffix(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // co-located bucketed join: orders⋈customer both bucketed by custkey,
     // so the join itself plans with NO hash Exchange on the join key (the
     // only shuffle left is the final tiny segment aggregation)
-    "q44_bucketed_join" -> ((s, dir) => {
+    Entry("q44_bucketed_join", (s, dir) => {
       val ot = s"graft_orders_bkt${suffix(dir)}"
       val ct = s"graft_customer_bkt${suffix(dir)}"
       Bucketing.writeBucketed(
@@ -80,33 +81,44 @@ object OpsQueries extends graft.QueryModule {
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
         .orderBy("c_mktsegment")
-    }),
+    }, Some(
+      """SELECT c.c_mktsegment, count(*) AS n_orders,
+        |  CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin)),
 
     // two-phase salted aggregation over the events stream (hot event types
     // spread across 16 reducers in phase 1, merged on the key in phase 2).
     // Aggregates are integer-exact (count + sum of floor) so the salted
     // partial/merge order can never perturb a float sum.
-    "q45_salted_agg" -> ((s, dir) =>
+    Entry("q45_salted_agg", (s, dir) =>
       Skew.saltedAgg(events(s, dir).select(col("event_type"), col("value")),
           Seq(col("event_type")), buckets = 16)(
         partials = Seq(count(lit(1)).as("c"), sum(floor(col("value"))).as("s")),
         merged = Seq(sum(col("c")).as("n_events"), sum(col("s")).as("sum_floor_value")))
-        .orderBy("event_type")),
+        .orderBy("event_type"), Some(
+      """SELECT event_type, count(*) AS n_events,
+        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_floor_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // deterministic stratified sampling: per-event-type rates, membership a
     // pure function of event_id (reproducible across engines/cluster
     // layouts; samples nest across rates). Narrow filter — no shuffle.
-    "q49_stratified_sample" -> ((s, dir) =>
+    Entry("q49_stratified_sample", (s, dir) =>
       Sampling.stratifiedSample(
           events(s, dir).select(col("event_id"), col("event_type"), col("user_id")),
           col("event_id"), col("event_type"), SampleRates, SampleDefaultRate)
-        .orderBy("event_id")),
+        .orderBy("event_id"), Some(
+      s"""SELECT event_id, event_type, user_id FROM events
+         |WHERE ${coordSql("event_id")}
+         |      < $SampleCaseSql
+         |ORDER BY event_id""".stripMargin)),
 
     // partitioned write layout + pruned read-back: events written
     // partitionBy(event_type), then a filtered aggregate over two of the
     // five partitions — the scan lists only those directories
     // (PartitionFilters pinned in PlanSpec/LayoutSpec)
-    "q46_layout_pruning" -> ((s, dir) => {
+    Entry("q46_layout_pruning", (s, dir) => {
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_layout${suffix(dir)}"
       Layout.writePartitioned(
         events(s, dir).select(col("user_id"), col("value"), col("event_type")),
@@ -118,12 +130,16 @@ object OpsQueries extends graft.QueryModule {
           count(lit(1)).as("n_events"),
           sum(floor(col("value"))).as("sum_floor_value"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events,
+        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_floor_value
+        |FROM events WHERE event_type IN ('click', 'purchase')
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // backward as-of join: each purchase attributed to the user's LATEST
     // at-or-before click (contrast q54, which keeps EVERY click in a time
     // window). Exact integer µs; single key-shuffle sweep — see AsOfJoin.
-    "q56_asof_join" -> ((s, dir) => {
+    Entry("q56_asof_join", (s, dir) => {
       val e = events(s, dir)
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val purchases = e.where(col("event_type") === "purchase")
@@ -138,14 +154,31 @@ object OpsQueries extends graft.QueryModule {
           col("click_id"), col("click_ts_us"),
           (col("ts_us") - col("click_ts_us")).as("gap_us"))
         .orderBy("event_id")
-    }),
+    }, Some(
+      // independently-shaped oracle for the as-of sweep: an explicit
+      // join-then-arg-max (the quadratic formulation AsOfJoin avoids — fine
+      // at oracle scale). max_by tie-safety: events carry no equal-(user,ts)
+      // pairs at any SF, and the engine side additionally pins greatest-id
+      // tie-break in AsOfJoinSpec.
+      """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+        |p AS (SELECT event_id, user_id, ts_us FROM e WHERE event_type = 'purchase'),
+        |c AS (SELECT event_id AS click_id, user_id, ts_us AS click_ts_us FROM e WHERE event_type = 'click'),
+        |best AS (
+        |  SELECT p.event_id AS pid, max(c.click_ts_us) AS click_ts_us,
+        |         max_by(c.click_id, c.click_ts_us) AS click_id
+        |  FROM p JOIN c ON c.user_id = p.user_id AND c.click_ts_us <= p.ts_us
+        |  GROUP BY p.event_id)
+        |SELECT p.event_id, p.user_id, p.ts_us, b.click_id, b.click_ts_us,
+        |  p.ts_us - b.click_ts_us AS gap_us
+        |FROM p LEFT JOIN best b ON b.pid = p.event_id
+        |ORDER BY p.event_id""".stripMargin)),
 
     // KMV distinct-count sketch vs exact: the sketch is a mergeable
     // TypedImperativeAggregate whose partials are ≤ k longs per partition —
     // the distributed-sketch shape — and the portable Mix64 hash + integer
     // estimate make the approximation itself a DuckDB-checked value. k=64:
     // unsaturated (exact path) at sf0.001, bottom-k estimation above.
-    "q59_kmv_distinct" -> ((s, dir) =>
+    Entry("q59_kmv_distinct", (s, dir) =>
       events(s, dir).groupBy("event_type").agg(
           countDistinct(col("user_id")).as("exact_users"),
           graft.functions.Kmv.kmvDistinct(col("user_id"), 64).as("kmv"))
@@ -153,16 +186,37 @@ object OpsQueries extends graft.QueryModule {
           col("kmv.n_kept").as("kmv_kept"),
           col("kmv.kth_min").as("kth_min"),
           col("kmv.est").as("kmv_est"))
-        .orderBy("event_type")),
+        .orderBy("event_type"), Some(
+      // the KMV sketch replayed in SQL: same Mix64 mix in normalized HUGEINT
+      // (see q49's oracle for why the +M …%M), >>>1 as //2, bottom-64 via
+      // row_number, estimate = 63·2^63/h_64 — ONE double division of exact
+      // integers, so even the approximation matches bit-for-bit
+      s"""WITH ${kmvSql()},
+         |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
+         |       FROM events GROUP BY event_type)
+         |SELECT ex.event_type, ex.exact_users,
+         |  CAST(least(nd.nd, 64) AS INT) AS kmv_kept,
+         |  kth.kth_min,
+         |  CASE WHEN kth.kth_min IS NOT NULL
+         |       THEN CAST(63 * 9223372036854775808::HUGEINT AS DOUBLE) / CAST(kth.kth_min AS DOUBLE)
+         |       ELSE CAST(nd.nd AS DOUBLE) END AS kmv_est
+         |FROM ex JOIN nd USING (event_type) LEFT JOIN kth USING (event_type)
+         |ORDER BY ex.event_type""".stripMargin)),
 
     // deterministic weighted sampling (priority sampling): top-100 events
     // by value-weighted priority — reproducible across engines/layouts,
     // plans as TakeOrdered (per-partition heaps, no full sort)
-    "q65_weighted_sample" -> ((s, dir) =>
+    Entry("q65_weighted_sample", (s, dir) =>
       Sampling.weightedTopK(
           events(s, dir).select(col("event_id"), col("event_type"), col("value")),
           col("event_id"), col("value"), n = 100)
-        .orderBy(col("priority").desc, col("event_id"))),
+        .orderBy(col("priority").desc, col("event_id")), Some(
+      // priority = w·2^32/(coord+1): power-of-two scale (exact) + one
+      // division (exact-rounded) — identical doubles on both engines
+      s"""SELECT event_id, event_type, value,
+         |  value * 4294967296 / CAST(${coordSql("event_id")} + 1 AS DOUBLE) AS priority
+         |FROM events WHERE value > 0
+         |ORDER BY priority DESC, event_id LIMIT 100""".stripMargin)),
 
     // Bloom-pruned selective join: the small side's keys materialize ONCE
     // into a few-KB bitset (the per-refresh artifact a 100 TB pipeline
@@ -173,7 +227,7 @@ object OpsQueries extends graft.QueryModule {
     // No false negatives ⇒ result ≡ the plain semi join, which IS the
     // oracle; BloomSpec pins selectivity, and PlanSpec the filter-below-
     // join shape.
-    "q69_bloom_join" -> ((s, dir) => {
+    Entry("q69_bloom_join", (s, dir) => {
       import graft.functions.Bloom
       val cust = t(s, dir, "customer")
         .where(col("c_acctbal") > 9000).select(col("c_custkey"))
@@ -186,14 +240,22 @@ object OpsQueries extends graft.QueryModule {
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
         .orderBy("o_orderpriority")
-    }),
+    }, Some(
+      // the bloom prefilter is invisible to results (no false negatives):
+      // the oracle is the plain selective semi join
+      """SELECT o_orderpriority, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders o
+        |WHERE EXISTS (SELECT 1 FROM customer c
+        |              WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 9000)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // keyless range join via bucket manufacture: every event attributed to
     // the ±5-minute windows around error events — no equality key exists,
     // so a naive BETWEEN join is a BroadcastNestedLoopJoin; the bucketed
     // form hash-joins on quantized time (PlanSpec pins no-NLJ). Width =
     // window span → each interval lands in ≤ 3 buckets.
-    "q74_range_join" -> ((s, dir) => {
+    Entry("q74_range_join", (s, dir) => {
       val e = events(s, dir)
         .withColumn("t_us", unix_micros(col("ts").cast("timestamp")))
       val points = e.select(col("event_id"), col("t_us"))
@@ -206,14 +268,23 @@ object OpsQueries extends graft.QueryModule {
         .select(col("event_id"), col("error_id"),
           (col("t_us") - col("w_start")).as("offset_us"))
         .orderBy("event_id", "error_id")
-    }),
+    }, Some(
+      // the naive BETWEEN formulation — DuckDB's IEJoin handles it directly
+      """WITH e AS (SELECT event_id, epoch_us(ts) AS t_us FROM events),
+        |er AS (SELECT event_id AS error_id,
+        |         epoch_us(ts) - 300000000 AS w_start,
+        |         epoch_us(ts) + 300000000 AS w_end
+        |       FROM events WHERE event_type = 'error')
+        |SELECT e.event_id, er.error_id, e.t_us - er.w_start AS offset_us
+        |FROM e JOIN er ON e.t_us >= er.w_start AND e.t_us < er.w_end
+        |ORDER BY e.event_id, er.error_id""".stripMargin)),
 
     // interval OVERLAP join (both sides ranges — the q74 shape generalized):
     // error ±5-min windows × purchase ±1-min windows that intersect. No
     // equality key exists, so the bucket manufacture again replaces the
     // nested-loop plan with a hash join; the canonical-bucket rule keeps
     // it duplicate-free without a distinct. Overlap span in exact µs.
-    "q78_interval_overlap" -> ((s, dir) => {
+    Entry("q78_interval_overlap", (s, dir) => {
       val e = events(s, dir)
         .withColumn("t_us", unix_micros(col("ts").cast("timestamp")))
       val errW = 300000000L // ±5 min
@@ -231,13 +302,25 @@ object OpsQueries extends graft.QueryModule {
           least(col("e_end"), col("p_end")).as("ov_end_us"))
         .withColumn("ov_us", col("ov_end_us") - col("ov_start_us"))
         .orderBy("error_id", "purchase_id")
-    }),
+    }, Some(
+      // the naive overlap BETWEEN formulation (DuckDB IEJoin)
+      """WITH e AS (SELECT event_id, event_type, epoch_us(ts) AS t FROM events),
+        |er AS (SELECT event_id AS error_id, t - 300000000 AS e_start, t + 300000000 AS e_end
+        |       FROM e WHERE event_type = 'error'),
+        |pu AS (SELECT event_id AS purchase_id, t - 60000000 AS p_start, t + 60000000 AS p_end
+        |       FROM e WHERE event_type = 'purchase')
+        |SELECT error_id, purchase_id,
+        |  greatest(e_start, p_start) AS ov_start_us,
+        |  least(e_end, p_end) AS ov_end_us,
+        |  least(e_end, p_end) - greatest(e_start, p_start) AS ov_us
+        |FROM er JOIN pu ON e_start < p_end AND p_start < e_end
+        |ORDER BY error_id, purchase_id""".stripMargin)),
 
     // histogram quantile sketch vs exact: the (group, bin) counts are the
     // mergeable sketch (≤ 256 rows per group ever shuffle); the exact side
     // pays the full per-group sort the sketch avoids. Both paths and the
     // approximation error itself are oracle-checked bit-for-bit.
-    "q71_histogram_quantiles" -> ((s, dir) => {
+    Entry("q71_histogram_quantiles", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val ev = events(s, dir).select(col("event_type"), col("value"))
       val est = Quantiles.histogramEstimates(ev, "event_type", "value",
@@ -254,7 +337,38 @@ object OpsQueries extends graft.QueryModule {
         .select(col("event_type"), col("n"), col("vmin"), col("vmax"),
           col("p50_est"), col("p95_est"), col("p50_exact"), col("p95_exact"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // (subtract / divide / scale-by-256 / floor; edge formula for the
+      // estimate) — IEEE exact rounding makes the doubles identical
+      """WITH s AS (SELECT event_type, value FROM events),
+        |g AS (SELECT event_type, count(*) AS n, min(value) AS vmin, max(value) AS vmax
+        |      FROM s GROUP BY event_type),
+        |b AS (SELECT s.event_type,
+        |        CASE WHEN g.vmax = g.vmin THEN 0
+        |             ELSE least(CAST(floor(((s.value - g.vmin) / (g.vmax - g.vmin)) * 256) AS BIGINT), 255)
+        |        END AS bin
+        |      FROM s JOIN g USING (event_type)),
+        |h AS (SELECT event_type, bin, count(*) AS c FROM b GROUP BY event_type, bin),
+        |cum AS (SELECT h.event_type, h.bin,
+        |          sum(h.c) OVER (PARTITION BY h.event_type ORDER BY h.bin) AS cc, g.n
+        |        FROM h JOIN g USING (event_type)),
+        |q50 AS (SELECT event_type, min(bin) AS qbin FROM cum
+        |        WHERE cc >= CAST(ceil(0.5 * n) AS BIGINT) GROUP BY event_type),
+        |q95 AS (SELECT event_type, min(bin) AS qbin FROM cum
+        |        WHERE cc >= CAST(ceil(0.95 * n) AS BIGINT) GROUP BY event_type),
+        |r AS (SELECT event_type, value,
+        |        row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn FROM s),
+        |x50 AS (SELECT r.event_type, max(r.value) AS p50_exact FROM r JOIN g USING (event_type)
+        |        WHERE rn = CAST(ceil(0.5 * n) AS BIGINT) GROUP BY r.event_type),
+        |x95 AS (SELECT r.event_type, max(r.value) AS p95_exact FROM r JOIN g USING (event_type)
+        |        WHERE rn = CAST(ceil(0.95 * n) AS BIGINT) GROUP BY r.event_type)
+        |SELECT g.event_type, g.n, g.vmin, g.vmax,
+        |  g.vmin + (CAST(q50.qbin + 1 AS DOUBLE) * (g.vmax - g.vmin)) / 256 AS p50_est,
+        |  g.vmin + (CAST(q95.qbin + 1 AS DOUBLE) * (g.vmax - g.vmin)) / 256 AS p95_est,
+        |  x50.p50_exact, x95.p95_exact
+        |FROM g JOIN q50 USING (event_type) JOIN q95 USING (event_type)
+        |JOIN x50 USING (event_type) JOIN x95 USING (event_type)
+        |ORDER BY g.event_type""".stripMargin)),
 
     // LOG-BUCKET QUANTILE SKETCH (round 10; the DDSketch idea on the
     // integer lattice): q71's fixed-range histogram needs [lo, hi) a
@@ -269,7 +383,7 @@ object OpsQueries extends graft.QueryModule {
     // exact percentile (bench-scale sort twin, q71's pattern) must land
     // INSIDE the selected bucket — p50_in_bucket/p95_in_bucket are
     // engine-computed booleans the oracle recomputes independently.
-    "q179_loghist_quantiles" -> ((s, dir) => {
+    Entry("q179_loghist_quantiles", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val ev = events(s, dir)
         .where(col("value").isNotNull && col("value") >= 0)
@@ -312,14 +426,42 @@ object OpsQueries extends graft.QueryModule {
           (col("x95") - 1).as("p95_exact_centi"),
           (lo("b95") <= col("x95") && col("x95") <= hi("b95")).as("p95_in_bucket"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // every float step is the same two-operand tree as the Spark side
+      // q179: the shared sketch chain + the exact sort twin + in-bucket bools
+      s"""WITH ${logHistCtes("")},
+        |rk AS (SELECT event_type, q,
+        |         row_number() OVER (PARTITION BY event_type ORDER BY q) AS rn
+        |       FROM ev),
+        |ex AS (
+        |  SELECT n.event_type,
+        |    (SELECT max(q) FROM rk WHERE rk.event_type = n.event_type
+        |       AND rk.rn = (1 * n.n + 1) // 2) AS x50,
+        |    (SELECT max(q) FROM rk WHERE rk.event_type = n.event_type
+        |       AND rk.rn = (19 * n.n + 19) // 20) AS x95
+        |  FROM n),
+        |edges AS (
+        |  SELECT sel.event_type, sel.n, ex.x50, ex.x95,
+        |    ${logHistEdgeSql("b50", hi = true)} AS hi50,
+        |    ${logHistEdgeSql("b50", hi = false)} AS lo50,
+        |    ${logHistEdgeSql("b95", hi = true)} AS hi95,
+        |    ${logHistEdgeSql("b95", hi = false)} AS lo95
+        |  FROM sel JOIN ex ON ex.event_type = sel.event_type)
+        |SELECT event_type, n,
+        |  CAST(hi50 - 1 AS BIGINT) AS p50_est_centi,
+        |  CAST(x50 - 1 AS BIGINT) AS p50_exact_centi,
+        |  (lo50 <= x50 AND x50 <= hi50) AS p50_in_bucket,
+        |  CAST(hi95 - 1 AS BIGINT) AS p95_est_centi,
+        |  CAST(x95 - 1 AS BIGINT) AS p95_exact_centi,
+        |  (lo95 <= x95 AND x95 <= hi95) AS p95_in_bucket
+        |FROM edges ORDER BY event_type""".stripMargin)),
 
     // keyed UPSERT (merge-into without a table format): a derived update
     // batch (every 7th order re-priced, status 'U') merged over the
     // snapshot — updates win on collision, everything else survives. The
     // batch side broadcasts into the anti-join so the snapshot never
     // shuffles; prices through DECIMAL so the re-price is exact.
-    "q90_upsert" -> ((s, dir) => {
+    Entry("q90_upsert", (s, dir) => {
       val snap = t(s, dir, "orders").select(col("o_orderkey"),
         col("o_orderstatus"),
         col("o_totalprice").cast("decimal(18,2)").cast("double").as("total_price"))
@@ -330,7 +472,16 @@ object OpsQueries extends graft.QueryModule {
             .cast("double").as("total_price"))
       Layout.upsert(snap, updates, Seq("o_orderkey"))
         .orderBy("o_orderkey")
-    }),
+    }, Some(
+      // the closed form of the merge: updated rows ∪ untouched rows
+      """SELECT o_orderkey, 'U' AS o_orderstatus,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 2 AS DOUBLE) AS total_price
+        |FROM orders WHERE o_orderkey % 7 = 0
+        |UNION ALL
+        |SELECT o_orderkey, o_orderstatus,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
+        |FROM orders WHERE o_orderkey % 7 <> 0
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // SCD2 DIMENSION BUILD: each user's event stream read as a change log
     // of their "state" (last event_type) → versioned validity intervals
@@ -340,7 +491,7 @@ object OpsQueries extends graft.QueryModule {
     // later one). All three windows share one (user_id, t_us, event_id)
     // order → ONE key Exchange, linear sweep per key (TemporalSpec pins
     // the single-Exchange plan). Exact integer µs.
-    "q102_scd2" -> ((s, dir) => {
+    Entry("q102_scd2", (s, dir) => {
       val e = events(s, dir)
         .select(col("user_id"), col("event_id"),
           col("event_type").as("state"),
@@ -348,7 +499,7 @@ object OpsQueries extends graft.QueryModule {
       Temporal.scd2(e, keys = Seq("user_id"), tsCol = "t_us",
           tieBreak = "event_id", attrs = Seq("state"))
         .orderBy("user_id", "version")
-    }),
+    }, Some(scd2Sql())),
 
     // INCREMENTAL SCD2 MAINTENANCE: build the dimension from the first
     // half of the month, apply the second half as a change batch touching
@@ -358,7 +509,7 @@ object OpsQueries extends graft.QueryModule {
     // a change log — maximally compressed, losing ties discarded), so the
     // oracle is q102's full-rebuild SQL verbatim: any divergence between
     // incremental and batch maintenance is a red row.
-    "q103_scd2_apply" -> ((s, dir) => {
+    Entry("q103_scd2_apply", (s, dir) => {
       val splitUs = MidCorpusUs
       val e = events(s, dir)
         .select(col("user_id"), col("event_id"),
@@ -371,7 +522,10 @@ object OpsQueries extends graft.QueryModule {
           keys = Seq("user_id"), tsCol = "t_us",
           tieBreak = "event_id", attrs = Seq("state"))
         .orderBy("user_id", "version")
-    }),
+    }, Some(
+      // the apply path (q103) must land on the batch rebuild exactly, so
+      // its oracle IS the rebuild SQL — one source of truth, zero drift
+      scd2Sql())),
 
     // COUNT-MIN frequency sketch, approximation oracle-checked as data
     // (the q59/q71 discipline): a 4×32 portable-bucket matrix per
@@ -383,7 +537,7 @@ object OpsQueries extends graft.QueryModule {
     // shuffles 128 longs per group (mergeable matrix partials — the term
     // dictionary never rides the sketch shuffle); the exact side is the
     // plain GROUP BY it is being compared against.
-    "q104_count_min" -> ((s, dir) => {
+    Entry("q104_count_min", (s, dir) => {
       val depth = CmDepth; val width = CmWidth
       val termed = events(s, dir)
         .select(col("event_type"), pmod(col("user_id"), lit(256)).as("term"))
@@ -396,7 +550,7 @@ object OpsQueries extends graft.QueryModule {
         .select(col("event_type"), col("term"), col("exact_cnt"),
           est.as("est"), (est >= col("exact_cnt")).as("no_underestimate"))
         .orderBy("event_type", "term")
-    }),
+    }, Some(countMinSql())),
 
     // HYPERLOGLOG distinct-count sketch, approximation oracle-checked as
     // data (the q59/q104 discipline): 64 max-rank registers per event_type
@@ -409,14 +563,14 @@ object OpsQueries extends graft.QueryModule {
     // rides the shuffle); compare q59's KMV which keeps k hashes. At
     // 100 TB this is the distinct-count shape that works: constant state,
     // map-side combine, no count(DISTINCT) expand-shuffle.
-    "q108_hll" -> ((s, dir) => {
+    Entry("q108_hll", (s, dir) => {
       val ev = events(s, dir).select(col("event_type"), col("user_id"))
       val sketch = ev.groupBy("event_type")
         .agg(graft.functions.Hll.hll(col("user_id")).as("regs"))
       val exact = ev.groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_users"))
       hllReadout(sketch, exact)
-    }),
+    }, Some(hllSql())),
 
     // HLL RE-AGGREGATION: the property that makes sketches the 100 TB
     // distinct-count answer — per-group sketches (q108's) roll up to the
@@ -428,7 +582,7 @@ object OpsQueries extends graft.QueryModule {
     // bit equality, plus the global estimate/exact (q108's read-out
     // shape). Scale: the roll-up input is #groups × 64 ints — the second
     // aggregation never sees a key.
-    "q110_hll_merge" -> ((s, dir) => {
+    Entry("q110_hll_merge", (s, dir) => {
       import graft.functions.Hll
       val ev = events(s, dir).select(col("event_type"), col("user_id"))
       val merged = ev.groupBy("event_type")
@@ -467,7 +621,7 @@ object OpsQueries extends graft.QueryModule {
           (lit(Hll.EstNum) / col("ind").cast("double")).as("est"),
           col("exact_users"))
         .orderBy("bucket")
-    }),
+    }, Some(hllMergeSql())),
 
     // HLL SET ALGEBRA: union/intersection estimates between every pair of
     // event types FROM THE STORED SKETCHES ALONE — union = elementwise
@@ -483,7 +637,7 @@ object OpsQueries extends graft.QueryModule {
     // whitelisted by name in PlanSpec's quadratic sweep like the IVF
     // centroid joins. HOF ind-folds run on 64-int arrays × 10 pair rows —
     // interpreted eval is irrelevant off the corpus path.
-    "q111_hll_setops" -> ((s, dir) => {
+    Entry("q111_hll_setops", (s, dir) => {
       import graft.functions.Hll
       val ev = events(s, dir).select(col("event_type"), col("user_id"))
       val sketch = ev.groupBy("event_type").agg(Hll.hll(col("user_id")).as("regs"))
@@ -513,7 +667,7 @@ object OpsQueries extends graft.QueryModule {
           col("est_union"), col("est_intersect"),
           coalesce(col("exact_both"), lit(0L)).as("exact_both"))
         .orderBy("type_a", "type_b")
-    }),
+    }, Some(hllSetopsSql())),
 
     // MIXTURE REBALANCING: derive per-source keep rates from the data
     // (equalize token mass — every source downsampled to the smallest
@@ -532,7 +686,7 @@ object OpsQueries extends graft.QueryModule {
     // document's split never changes when the corpus around it grows (the
     // property a training pipeline actually needs from its split). One
     // narrow scan; the per-(source, split) counts are the mixture audit.
-    "q95_split_assign" -> ((s, dir) => {
+    Entry("q95_split_assign", (s, dir) => {
       val c = Mix64.sampleCoord(col("doc_id"))
       t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
@@ -540,9 +694,14 @@ object OpsQueries extends graft.QueryModule {
             .when(c < lit(Sampling.threshold(0.9)), "val")
             .otherwise("test").as("split"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      s"""SELECT doc_id, source,
+         |  CASE WHEN ${coordSql("doc_id")} < ${Sampling.threshold(0.8)} THEN 'train'
+         |       WHEN ${coordSql("doc_id")} < ${Sampling.threshold(0.9)} THEN 'val'
+         |       ELSE 'test' END AS split
+         |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "q82_mixture_rebalance" -> ((s, dir) => {
+    Entry("q82_mixture_rebalance", (s, dir) => {
       import graft.text.TextAnalysis.tokenCountWs
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"),
         tokenCountWs(col("text")).cast("long").as("n_tok"))
@@ -564,14 +723,31 @@ object OpsQueries extends graft.QueryModule {
         .where(Mix64.sampleCoord(col("doc_id")) < col("thr"))
         .select("doc_id", "source", "n_tok", "rate")
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // same token count as q30, same Mix64 coordinate as q49; the only
+      // floats are one exact-integer division and one power-of-two scale
+      s"""WITH d AS (
+         |  SELECT doc_id, source,
+         |    CAST(CASE WHEN trim(text) = '' THEN 0
+         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tok
+         |  FROM documents),
+         |m AS (SELECT source, sum(n_tok) AS mass FROM d GROUP BY source),
+         |r AS (SELECT source,
+         |        CAST((SELECT min(mass) FROM m) AS DOUBLE) / CAST(mass AS DOUBLE) AS rate,
+         |        CAST(floor((CAST((SELECT min(mass) FROM m) AS DOUBLE) / CAST(mass AS DOUBLE))
+         |             * 4294967296) AS BIGINT) AS thr
+         |      FROM m)
+         |SELECT d.doc_id, d.source, d.n_tok, r.rate
+         |FROM d JOIN r USING (source)
+         |WHERE ${coordSql("d.doc_id")} < r.thr
+         |ORDER BY d.doc_id""".stripMargin)),
 
     // salted broadcast join: the hot probe side (5 event types over
     // millions of rows) salts into 16 buckets against a 16×-replicated
     // dimension, so one hot key's rows spread across 16 tasks instead of
     // one. The salt is invisible to results (inner equi-join semantics
     // preserved — SkewSpec pins salted ≡ unsalted); integer aggregates.
-    "q81_salted_join" -> ((s, dir) => {
+    Entry("q81_salted_join", (s, dir) => {
       import s.implicits._
       val dim = Seq(("click", 1L), ("view", 2L), ("purchase", 5L),
         ("signup", 10L), ("error", 0L)).toDF("event_type", "weight")
@@ -583,27 +759,48 @@ object OpsQueries extends graft.QueryModule {
           sum(floor(col("value")).cast("long") * col("weight"))
             .as("weighted_floor_sum"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // the salt is invisible to results: the oracle is the plain join
+      """SELECT e.event_type, count(*) AS n_events,
+        |  CAST(sum(CAST(floor(e.value) AS BIGINT) * d.weight) AS BIGINT) AS weighted_floor_sum
+        |FROM events e
+        |JOIN (VALUES ('click', 1), ('view', 2), ('purchase', 5),
+        |      ('signup', 10), ('error', 0)) d(event_type, weight)
+        |  ON e.event_type = d.event_type
+        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin)),
 
     // quota sampling: exactly 8 docs per source, the 8 smallest Mix64
     // coordinates — balanced-mixture construction (fixed COUNTS per
     // source, vs q49's fixed rates). Deterministic, nests across quotas;
     // WindowGroupLimit caps what each map task forwards (PlanSpec).
-    "q77_quota_sample" -> ((s, dir) =>
+    Entry("q77_quota_sample", (s, dir) =>
       Sampling.quotaSample(
           t(s, dir, "documents").select(col("doc_id"), col("source")),
           col("doc_id"), col("source"), quota = 8)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // the same coordinate order replayed with a window; row_number is INT
+      // on the Spark side, so the oracle casts
+      s"""SELECT doc_id, source, rank FROM (
+         |  SELECT doc_id, source,
+         |    CAST(row_number() OVER (PARTITION BY source
+         |         ORDER BY ${coordSql("doc_id")}, doc_id) AS INT) AS rank
+         |  FROM documents)
+         |WHERE rank <= 8 ORDER BY doc_id""".stripMargin)),
 
     // Morton curve coordinate for the (user, day) layout keys — the value
     // Layout.writeZOrdered clusters files by (LayoutSpec pins the bounding-
     // box tightening); codegen'd bit interleave, narrow projection
-    "q66_zorder" -> ((s, dir) =>
+    Entry("q66_zorder", (s, dir) =>
       events(s, dir)
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 86400000000").as("day"))
         .withColumn("zval", graft.functions.ZOrder.zval(col("user_id"), col("day")))
-        .orderBy("event_id")),
+        .orderBy("event_id"), Some(
+      // bit interleave expanded term-by-term from ZOrder.Bits — generated
+      // from the same constant as the JVM loop
+      s"""SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day,
+         |  ${zvalSql("user_id", "(epoch_us(ts) // 86400000000)")} AS zval
+         |FROM events ORDER BY event_id""".stripMargin)),
 
     // DATA-QUALITY AUDIT (the ingestion gate): Audit.verify batches all
     // of a table's constraint metrics into ONE scan — completeness (null
@@ -613,7 +810,7 @@ object OpsQueries extends graft.QueryModule {
     // fits, shuffle anti-join otherwise; either way only keys move).
     // Output is the audit report itself — (check_name, metric, passed) —
     // the artifact a pipeline gates promotion on.
-    "q115_data_audit" -> ((s, dir) => {
+    Entry("q115_data_audit", (s, dir) => {
       import graft.ops.Audit, Audit.Check
       val li = t(s, dir, "lineitem")
       val ord = t(s, dir, "orders")
@@ -638,7 +835,42 @@ object OpsQueries extends graft.QueryModule {
         Seq(Check("ord_custkey_orphans", count(lit(1)), _ === 0)))
       liAudit.unionByName(ordAudit).unionByName(refAudit)
         .orderBy("check_name")
-    }),
+    }, Some(
+      // each branch replays one Check verbatim; CAST to BIGINT mirrors the
+      // Spark side's metric.cast("long") (DuckDB's sum(CASE) is HUGEINT)
+      """SELECT check_name, metric, passed FROM (
+        |  SELECT 'li_rowcount' AS check_name, CAST(count(*) AS BIGINT) AS metric,
+        |         count(*) > 0 AS passed FROM lineitem
+        |  UNION ALL
+        |  SELECT 'li_qty_range_viol',
+        |         CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT),
+        |         sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) = 0
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'li_returnflag_domain_viol',
+        |         CAST(sum(CASE WHEN l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) AS BIGINT),
+        |         sum(CASE WHEN l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) = 0
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'li_shipdate_nulls',
+        |         CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
+        |         sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) = 0
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'ord_pk_dups',
+        |         CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT),
+        |         count(*) - count(DISTINCT o_orderkey) = 0
+        |  FROM orders
+        |  UNION ALL
+        |  SELECT 'ord_totalprice_nonpos',
+        |         CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT),
+        |         sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) = 0
+        |  FROM orders
+        |  UNION ALL
+        |  SELECT 'ord_custkey_orphans', CAST(count(*) AS BIGINT), count(*) = 0
+        |  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        |  WHERE c.c_custkey IS NULL)
+        |ORDER BY check_name""".stripMargin)),
 
     // SHARD MANIFEST (the dataset-publishing step): deterministic shard
     // assignment — shard = Mix64(doc_id) mod 16, a pure function of the
@@ -650,8 +882,13 @@ object OpsQueries extends graft.QueryModule {
     // size; a consumer re-derives the manifest from the shipped data and
     // compares — corruption or loss shows as a checksum/count mismatch.
     // One scan, map-side-combinable aggregates, a 16-group shuffle.
-    "q117_shard_manifest" -> ((s, dir) =>
-      manifestOf(t(s, dir, "documents")).orderBy("shard")),
+    Entry("q117_shard_manifest", (s, dir) =>
+      manifestOf(t(s, dir, "documents")).orderBy("shard"), Some(
+      // shard = the Mix64 coordinate mod 16; fp replays q35's rolling-31
+      // HUGEINT hash (ASCII corpus) converted to signed before the BIGINT
+      // bit_xor — XOR of identical bit patterns is representation-blind,
+      // but the signed conversion keeps every emitted value Spark-equal
+      s"${manifestSql("")} ORDER BY shard")),
 
     // INCREMENTAL manifest maintenance, proven as data (the q110
     // merge≡direct discipline): every manifest statistic is a
@@ -662,7 +899,7 @@ object OpsQueries extends graft.QueryModule {
     // manifest NEXT TO base⊕delta (base = doc_id mod 4 ≠ 0, delta =
     // the rest — a pure predicate split, no driver round trip) and
     // emits their equality per shard as a driver-checked bit.
-    "q118_manifest_apply" -> ((s, dir) => {
+    Entry("q118_manifest_apply", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val full = manifestOf(docs)
       def named(df: DataFrame, p: String): DataFrame = df.select(
@@ -694,7 +931,33 @@ object OpsQueries extends graft.QueryModule {
             && col("min_doc_id") === col("a_min")
             && col("max_doc_id") === col("a_max")).as("incremental_ok"))
         .orderBy("shard")
-    }),
+    }, Some(
+      // base⊕delta replayed with the same monoid combines; the NULL-side
+      // CASEs mirror the Spark when-chain exactly (a shard missing from
+      // one side inherits the other side's min/max unchanged)
+      s"""WITH f AS (${manifestSql("")}),
+         |b AS (${manifestSql("WHERE doc_id % 4 <> 0")}),
+         |d AS (${manifestSql("WHERE doc_id % 4 = 0")}),
+         |applied AS (
+         |  SELECT shard,
+         |    coalesce(b.n_docs, 0) + coalesce(d.n_docs, 0) AS a_docs,
+         |    coalesce(b.n_tokens, 0) + coalesce(d.n_tokens, 0) AS a_tokens,
+         |    xor(coalesce(b.content_xor, 0), coalesce(d.content_xor, 0)) AS a_xor,
+         |    CASE WHEN b.min_doc_id IS NULL THEN d.min_doc_id
+         |         WHEN d.min_doc_id IS NULL THEN b.min_doc_id
+         |         ELSE least(b.min_doc_id, d.min_doc_id) END AS a_min,
+         |    CASE WHEN b.max_doc_id IS NULL THEN d.max_doc_id
+         |         WHEN d.max_doc_id IS NULL THEN b.max_doc_id
+         |         ELSE greatest(b.max_doc_id, d.max_doc_id) END AS a_max
+         |  FROM b FULL OUTER JOIN d USING (shard))
+         |SELECT f.shard, f.n_docs, f.n_tokens, f.content_xor,
+         |  f.min_doc_id, f.max_doc_id,
+         |  a.a_docs, a.a_tokens, a.a_xor, a.a_min, a.a_max,
+         |  (f.n_docs = a.a_docs AND f.n_tokens = a.a_tokens
+         |   AND f.content_xor = a.a_xor AND f.min_doc_id = a.a_min
+         |   AND f.max_doc_id = a.a_max) AS incremental_ok
+         |FROM f JOIN applied a USING (shard)
+         |ORDER BY shard""".stripMargin)),
 
     // RIGHT-TO-BE-FORGOTTEN propagation: a deterministic ~2% of users file
     // deletion requests; the sweep must scrub the fact table AND every
@@ -704,7 +967,7 @@ object OpsQueries extends graft.QueryModule {
     // the DuckDB oracle recomputes independently. Request list broadcast,
     // one scan per table, counts+checksum as one partial-agg — no corpus
     // shuffle (PlanSpec pins the broadcast-join shape).
-    "q121_delete_propagate" -> ((s, dir) => {
+    Entry("q121_delete_propagate", (s, dir) => {
       val e = events(s, dir).select(col("event_id"), col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("t_us"), col("event_type"))
       val requests = e.select(col("user_id"))
@@ -724,7 +987,43 @@ object OpsQueries extends graft.QueryModule {
             expr("user_id * 1024 + ascii(event_type)"))),
           requests)
         .orderBy("tbl")
-    }),
+    }, Some(
+      // each audit CTE replays one Subject: left join against the request
+      // list, FILTERed aggregates for after-count and survivor checksum
+      // (sum of the low 20 bits of surviving row keys' Mix64 coords —
+      // order-free and overflow-bounded, so any divergence in WHICH rows
+      // survived flips the value)
+      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t_us, event_type
+         |           FROM events),
+         |req AS (SELECT DISTINCT user_id FROM e
+         |        WHERE ${coordSql("user_id")} < ${Sampling.threshold(DeleteRate)}),
+         |ev AS (
+         |  SELECT 'events' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
+         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
+         |    CAST(coalesce(sum((${coordSql("e.event_id")}) % 1048576)
+         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
+         |  FROM e LEFT JOIN req r ON e.user_id = r.user_id),
+         |d0 AS (SELECT user_id, t_us // 86400000000 AS day, count(*) AS n
+         |       FROM e GROUP BY 1, 2),
+         |da AS (
+         |  SELECT 'user_daily' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
+         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
+         |    CAST(coalesce(sum((${coordSql("(d0.user_id * 131072 + d0.day)")}) % 1048576)
+         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
+         |  FROM d0 LEFT JOIN req r ON d0.user_id = r.user_id),
+         |p0 AS (SELECT user_id, event_type, count(*) AS n
+         |       FROM e GROUP BY 1, 2),
+         |pr AS (
+         |  SELECT 'user_profile' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
+         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
+         |    CAST(coalesce(sum((${coordSql("(p0.user_id * 1024 + ascii(p0.event_type))")}) % 1048576)
+         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
+         |  FROM p0 LEFT JOIN req r ON p0.user_id = r.user_id)
+         |SELECT tbl, rows_before, rows_after,
+         |  rows_before - rows_after AS rows_deleted, survivor_checksum
+         |FROM (SELECT * FROM ev UNION ALL SELECT * FROM da
+         |      UNION ALL SELECT * FROM pr)
+         |ORDER BY tbl""".stripMargin)),
 
     // RETRACTION-AWARE INCREMENTAL MAINTENANCE: deletion composed with
     // the q118 monoid discipline. A maintained per-day rollup (count +
@@ -734,7 +1033,7 @@ object OpsQueries extends graft.QueryModule {
     // emits incremental-vs-full-rebuild equality per day as a
     // driver-checked bit (full outer + null-safe compare, so a day
     // present on only one side is a red row, not a silent skip).
-    "q123_rollup_retract" -> ((s, dir) => {
+    Entry("q123_rollup_retract", (s, dir) => {
       val e = events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(cast(ts as timestamp)) div 86400000000").as("day"),
@@ -762,7 +1061,31 @@ object OpsQueries extends graft.QueryModule {
           (col("rb_n") <=> col("inc_n") &&
             col("rb_mass") <=> col("inc_mass")).as("retract_ok"))
         .orderBy("day")
-    }),
+    }, Some(
+      // decimal value mass throughout (exact subtraction, double only at
+      // the output boundary — the BASELINE float-parity technique); the
+      // equality bits replay Spark's null-safe <=> as IS NOT DISTINCT FROM
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
+         |             CAST(value AS DECIMAL(18,2)) AS v FROM events),
+         |req AS (SELECT DISTINCT user_id FROM e
+         |        WHERE ${coordSql("user_id")} < ${Sampling.threshold(DeleteRate)}),
+         |f AS (SELECT day, CAST(count(*) AS BIGINT) AS n, sum(v) AS mass
+         |      FROM e GROUP BY day),
+         |d AS (SELECT day, CAST(count(*) AS BIGINT) AS dn, sum(v) AS dmass
+         |      FROM e WHERE user_id IN (SELECT user_id FROM req) GROUP BY day),
+         |inc AS (SELECT f.day, f.n - coalesce(d.dn, 0) AS inc_n,
+         |          f.mass - coalesce(d.dmass, CAST(0 AS DECIMAL(18,2))) AS inc_mass
+         |        FROM f LEFT JOIN d USING (day)
+         |        WHERE f.n - coalesce(d.dn, 0) > 0),
+         |rb AS (SELECT day, CAST(count(*) AS BIGINT) AS rb_n, sum(v) AS rb_mass
+         |       FROM e WHERE user_id NOT IN (SELECT user_id FROM req)
+         |       GROUP BY day)
+         |SELECT day, rb_n, CAST(rb_mass AS DOUBLE) AS rb_mass,
+         |  inc_n, CAST(inc_mass AS DOUBLE) AS inc_mass,
+         |  (rb_n IS NOT DISTINCT FROM inc_n
+         |   AND rb_mass IS NOT DISTINCT FROM inc_mass) AS retract_ok
+         |FROM inc FULL OUTER JOIN rb USING (day)
+         |ORDER BY day""".stripMargin)),
 
     // SNAPSHOT DIFF with bucket-fingerprint pruning (SnapshotDiff.diff):
     // base = docs with doc_id%3≠0, current = docs with doc_id%5≠0 and a
@@ -771,7 +1094,7 @@ object OpsQueries extends graft.QueryModule {
     // cross-checks the whole two-phase machinery: a fingerprint collision
     // OR an unsoundly skipped bucket would be a red row, not a silent
     // miss.
-    "q124_snapshot_diff" -> ((s, dir) => {
+    Entry("q124_snapshot_diff", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val base = docs.where(col("doc_id") % 3 =!= 0)
         .withColumn("fp",
@@ -784,7 +1107,20 @@ object OpsQueries extends graft.QueryModule {
           graft.text.TextAnalysis.contentFingerprint(col("edited")))
       SnapshotDiff.diff(base, cur, "doc_id", "fp", nBuckets = 64)
         .orderBy("doc_id", "status")
-    }),
+    }, Some(
+      // the GROUND-TRUTH diff: no buckets, no fingerprints — raw text
+      // compared through a direct full outer join
+      """WITH b AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
+        |c AS (SELECT doc_id,
+        |        CASE WHEN doc_id % 7 = 0 THEN text || '!' ELSE text END AS text
+        |      FROM documents WHERE doc_id % 5 <> 0),
+        |j AS (SELECT coalesce(b.doc_id, c.doc_id) AS doc_id,
+        |        CASE WHEN b.doc_id IS NULL THEN 'added'
+        |             WHEN c.doc_id IS NULL THEN 'removed'
+        |             WHEN b.text <> c.text THEN 'changed' END AS status
+        |      FROM b FULL OUTER JOIN c ON b.doc_id = c.doc_id)
+        |SELECT doc_id, status FROM j WHERE status IS NOT NULL
+        |ORDER BY doc_id, status""".stripMargin)),
 
     // JOIN-SIZE ESTIMATION via the Count-Min inner product — the classic
     // "plan the join before running it" sketch application: |A ⋈ B| on a
@@ -794,7 +1130,7 @@ object OpsQueries extends graft.QueryModule {
     // terms), emitted as a checked bit. Same Mix64 bucketing as
     // q104/q105; the whole query is three aggregation levels over one
     // scan — no join anywhere, exact and estimate ride the same cells.
-    "q125_join_size" -> ((s, dir) => {
+    Entry("q125_join_size", (s, dir) => {
       val depth = CmDepth; val width = JoinSizeWidth
       val t = events(s, dir)
         .where(col("event_type").isin("click", "purchase"))
@@ -821,7 +1157,31 @@ object OpsQueries extends graft.QueryModule {
         .select(col("n_clicks"), col("n_purchases"), col("exact_size"),
           col("est_size"),
           (col("est_size") >= col("exact_size")).as("no_underestimate"))
-    }),
+    }, Some(
+      // the same three aggregation levels, cells replayed with the
+      // countMinSql bucket convention (coordSql of term·131+r, mod a
+      // power-of-two width)
+      s"""WITH t AS (SELECT event_type, ((user_id % 256) + 256) % 256 AS term
+         |           FROM events WHERE event_type IN ('click', 'purchase')),
+         |pt AS (SELECT term,
+         |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS nc,
+         |         CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS np
+         |       FROM t GROUP BY term),
+         |cells AS (SELECT r.r,
+         |            (${coordSql("(pt.term * 131 + r.r)")}) % $JoinSizeWidth AS bucket,
+         |            CAST(sum(nc) AS BIGINT) AS c_cell,
+         |            CAST(sum(np) AS BIGINT) AS p_cell,
+         |            CAST(sum(nc * np) AS BIGINT) AS xb
+         |          FROM pt CROSS JOIN range(0, $CmDepth) r(r) GROUP BY 1, 2),
+         |byrow AS (SELECT r, CAST(sum(c_cell * p_cell) AS BIGINT) AS prod,
+         |            CAST(sum(xb) AS BIGINT) AS exact_r,
+         |            CAST(sum(c_cell) AS BIGINT) AS nc_r,
+         |            CAST(sum(p_cell) AS BIGINT) AS np_r
+         |          FROM cells GROUP BY r)
+         |SELECT max(nc_r) AS n_clicks, max(np_r) AS n_purchases,
+         |  max(exact_r) AS exact_size, min(prod) AS est_size,
+         |  min(prod) >= max(exact_r) AS no_underestimate
+         |FROM byrow""".stripMargin)),
 
     // TIME-DECAYED TRENDING: per-type freshness score with half-life
     // decay. The portability trick: a power-of-two half-life makes every
@@ -843,7 +1203,7 @@ object OpsQueries extends graft.QueryModule {
     // broadcast cross join — the scalar-subquery shape, bounded by
     // construction (whitelisted by name in PlanSpec's cartesian sweep);
     // no corpus-wide window anywhere.
-    "q132_skew_advisor" -> ((s, dir) => {
+    Entry("q132_skew_advisor", (s, dir) => {
       val e = events(s, dir)
       val top = e.groupBy("user_id").agg(count(lit(1)).as("freq"))
         .orderBy(col("freq").desc, col("user_id")).limit(10)
@@ -858,7 +1218,18 @@ object OpsQueries extends graft.QueryModule {
             .as("share_micro"),
           expr(s"(freq * $SkewP + total - 1) div total").as("salt_buckets"))
         .orderBy(col("freq").desc, col("user_id"))
-    }),
+    }, Some(
+      // same top-10 + exact-integer share and ceil salt factor
+      s"""WITH f AS (SELECT user_id, CAST(count(*) AS BIGINT) AS freq
+         |           FROM events GROUP BY user_id),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM events),
+         |top AS (SELECT user_id, freq FROM f
+         |        ORDER BY freq DESC, user_id LIMIT 10)
+         |SELECT t.user_id, t.freq,
+         |  CAST(t.freq * 1048576 // tot.total AS BIGINT) AS share_micro,
+         |  CAST((t.freq * $SkewP + tot.total - 1) // tot.total AS BIGINT) AS salt_buckets
+         |FROM top t CROSS JOIN tot
+         |ORDER BY freq DESC, user_id""".stripMargin)),
 
     // SOURCE/SINK INTERCHANGE round-trip — the corpus egress formats a
     // training-data pipeline actually ships: gzip JSONL (the LLM-corpus
@@ -871,7 +1242,7 @@ object OpsQueries extends graft.QueryModule {
     // so any codec/quoting/escaping defect is a red driver row. Writes
     // go under java.io.tmpdir with mode=overwrite (bench reps reuse the
     // same paths instead of leaking).
-    "q145_interchange_roundtrip" -> ((s, dir) => {
+    Entry("q145_interchange_roundtrip", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val base = java.nio.file.Paths
@@ -907,9 +1278,16 @@ object OpsQueries extends graft.QueryModule {
         .option("header", "true").option("multiLine", "true")
         .option("escape", "\"").csv(csvPath))
       csv.unionByName(jsonl).unionByName(orc).orderBy("format")
-    }),
+    }, Some(
+      // lossless round-trip is the CONTRACT: exactly (n, n, 0) per format
+      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents)
+        |SELECT f.format, n.c AS n_docs, n.c AS n_roundtrip,
+        |  CAST(0 AS BIGINT) AS n_mismatched
+        |FROM (SELECT 'csv' AS format UNION ALL SELECT 'jsonl'
+        |      UNION ALL SELECT 'orc') f CROSS JOIN n
+        |ORDER BY format""".stripMargin)),
 
-    "q127_trending" -> ((s, dir) => {
+    Entry("q127_trending", (s, dir) => {
       // the reference day attaches via ONE whole-frame window over the day
       // rollup (#types × #days rows — dimension-scale), partitioned by the
       // non-foldable constant key (Ranking.boundedAll): no unpartitioned
@@ -933,7 +1311,22 @@ object OpsQueries extends graft.QueryModule {
         .agg(sum(col("n") * col("w")).as("decay_micro"),
           sum(col("n")).as("n_events"))
         .orderBy(col("decay_micro").desc, col("event_type"))
-    }))
+    }, Some(
+      // the same integer decay fold: day cells, k half-lives, 2^20 >> k
+      """WITH daily AS (
+        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(count(*) AS BIGINT) AS n
+        |  FROM events GROUP BY 1, 2),
+        |ks AS (
+        |  SELECT event_type, n,
+        |    ((SELECT max(day) FROM daily) - day) // 7 AS k
+        |  FROM daily)
+        |SELECT event_type,
+        |  CAST(sum(n * (CASE WHEN k > 20 THEN 0 ELSE 1048576 >> k END)) AS BIGINT)
+        |    AS decay_micro,
+        |  CAST(sum(n) AS BIGINT) AS n_events
+        |FROM ks GROUP BY event_type
+        |ORDER BY decay_micro DESC, event_type""".stripMargin)))
 
   /** q117/q118's per-shard manifest: Mix64 shard of the key, doc/token
     * counts, key range, and the order-free bit_xor content checksum. */
@@ -952,11 +1345,11 @@ object OpsQueries extends graft.QueryModule {
 
   /** q49's per-stratum rates — thresholds are derived through the same
     * Sampling.threshold floor on both sides. */
-  private val SampleRates = Map(
+  private lazy val SampleRates = Map(
     "click" -> 0.5, "view" -> 0.25, "purchase" -> 1.0, "signup" -> 0.1)
-  private val SampleDefaultRate = 0.05
+  private lazy val SampleDefaultRate = 0.05
 
-  private val SampleCaseSql: String =
+  private lazy val SampleCaseSql: String =
     SampleRates.toSeq.sorted.map { case (stratum, rate) =>
       s"WHEN '$stratum' THEN ${Sampling.threshold(rate)}"
     }.mkString("CASE event_type ", " ", s" ELSE ${Sampling.threshold(SampleDefaultRate)} END")
@@ -995,8 +1388,8 @@ object OpsQueries extends graft.QueryModule {
     * underestimate in the Spark sketch is a hash mismatch. */
   /** q104/q105's sketch geometry — the query sides and the SQL generator
     * read the SAME constants, so they cannot drift. */
-  private[queries] val CmDepth = 4
-  private[queries] val CmWidth = 32
+  private[queries] lazy val CmDepth = 4
+  private[queries] lazy val CmWidth = 32
 
   private[queries] def countMinSql(where: String = "",
                                    depth: Int = CmDepth,
@@ -1275,465 +1668,6 @@ object OpsQueries extends graft.QueryModule {
       |SELECT user_id, state, valid_from, valid_to, version,
       |  valid_to IS NULL AS is_current
       |FROM v ORDER BY user_id, version""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "q49_stratified_sample" ->
-      s"""SELECT event_id, event_type, user_id FROM events
-         |WHERE ${coordSql("event_id")}
-         |      < $SampleCaseSql
-         |ORDER BY event_id""".stripMargin,
-
-    "q95_split_assign" ->
-      s"""SELECT doc_id, source,
-         |  CASE WHEN ${coordSql("doc_id")} < ${Sampling.threshold(0.8)} THEN 'train'
-         |       WHEN ${coordSql("doc_id")} < ${Sampling.threshold(0.9)} THEN 'val'
-         |       ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q44_bucketed_join" ->
-      """SELECT c.c_mktsegment, count(*) AS n_orders,
-        |  CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin,
-
-    "q45_salted_agg" ->
-      """SELECT event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_floor_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q46_layout_pruning" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(value) AS BIGINT)) AS BIGINT) AS sum_floor_value
-        |FROM events WHERE event_type IN ('click', 'purchase')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // independently-shaped oracle for the as-of sweep: an explicit
-    // join-then-arg-max (the quadratic formulation AsOfJoin avoids — fine
-    // at oracle scale). max_by tie-safety: events carry no equal-(user,ts)
-    // pairs at any SF, and the engine side additionally pins greatest-id
-    // tie-break in AsOfJoinSpec.
-    "q56_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |p AS (SELECT event_id, user_id, ts_us FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS click_id, user_id, ts_us AS click_ts_us FROM e WHERE event_type = 'click'),
-        |best AS (
-        |  SELECT p.event_id AS pid, max(c.click_ts_us) AS click_ts_us,
-        |         max_by(c.click_id, c.click_ts_us) AS click_id
-        |  FROM p JOIN c ON c.user_id = p.user_id AND c.click_ts_us <= p.ts_us
-        |  GROUP BY p.event_id)
-        |SELECT p.event_id, p.user_id, p.ts_us, b.click_id, b.click_ts_us,
-        |  p.ts_us - b.click_ts_us AS gap_us
-        |FROM p LEFT JOIN best b ON b.pid = p.event_id
-        |ORDER BY p.event_id""".stripMargin,
-
-    // the KMV sketch replayed in SQL: same Mix64 mix in normalized HUGEINT
-    // (see q49's oracle for why the +M …%M), >>>1 as //2, bottom-64 via
-    // row_number, estimate = 63·2^63/h_64 — ONE double division of exact
-    // integers, so even the approximation matches bit-for-bit
-    "q59_kmv_distinct" ->
-      s"""WITH ${kmvSql()},
-         |ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_users
-         |       FROM events GROUP BY event_type)
-         |SELECT ex.event_type, ex.exact_users,
-         |  CAST(least(nd.nd, 64) AS INT) AS kmv_kept,
-         |  kth.kth_min,
-         |  CASE WHEN kth.kth_min IS NOT NULL
-         |       THEN CAST(63 * 9223372036854775808::HUGEINT AS DOUBLE) / CAST(kth.kth_min AS DOUBLE)
-         |       ELSE CAST(nd.nd AS DOUBLE) END AS kmv_est
-         |FROM ex JOIN nd USING (event_type) LEFT JOIN kth USING (event_type)
-         |ORDER BY ex.event_type""".stripMargin,
-
-    // priority = w·2^32/(coord+1): power-of-two scale (exact) + one
-    // division (exact-rounded) — identical doubles on both engines
-    "q65_weighted_sample" ->
-      s"""SELECT event_id, event_type, value,
-         |  value * 4294967296 / CAST(${coordSql("event_id")} + 1 AS DOUBLE) AS priority
-         |FROM events WHERE value > 0
-         |ORDER BY priority DESC, event_id LIMIT 100""".stripMargin,
-
-    // the bloom prefilter is invisible to results (no false negatives):
-    // the oracle is the plain selective semi join
-    "q69_bloom_join" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM customer c
-        |              WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 9000)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    // the closed form of the merge: updated rows ∪ untouched rows
-    "q90_upsert" ->
-      """SELECT o_orderkey, 'U' AS o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 2 AS DOUBLE) AS total_price
-        |FROM orders WHERE o_orderkey % 7 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price
-        |FROM orders WHERE o_orderkey % 7 <> 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q104_count_min" -> countMinSql(),
-
-    "q108_hll" -> hllSql(),
-
-    "q110_hll_merge" -> hllMergeSql(),
-
-    "q111_hll_setops" -> hllSetopsSql(),
-
-    "q102_scd2" -> scd2Sql(),
-
-    // the apply path (q103) must land on the batch rebuild exactly, so
-    // its oracle IS the rebuild SQL — one source of truth, zero drift
-    "q103_scd2_apply" -> scd2Sql(),
-
-    // same token count as q30, same Mix64 coordinate as q49; the only
-    // floats are one exact-integer division and one power-of-two scale
-    "q82_mixture_rebalance" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(CASE WHEN trim(text) = '' THEN 0
-         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tok
-         |  FROM documents),
-         |m AS (SELECT source, sum(n_tok) AS mass FROM d GROUP BY source),
-         |r AS (SELECT source,
-         |        CAST((SELECT min(mass) FROM m) AS DOUBLE) / CAST(mass AS DOUBLE) AS rate,
-         |        CAST(floor((CAST((SELECT min(mass) FROM m) AS DOUBLE) / CAST(mass AS DOUBLE))
-         |             * 4294967296) AS BIGINT) AS thr
-         |      FROM m)
-         |SELECT d.doc_id, d.source, d.n_tok, r.rate
-         |FROM d JOIN r USING (source)
-         |WHERE ${coordSql("d.doc_id")} < r.thr
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // the salt is invisible to results: the oracle is the plain join
-    "q81_salted_join" ->
-      """SELECT e.event_type, count(*) AS n_events,
-        |  CAST(sum(CAST(floor(e.value) AS BIGINT) * d.weight) AS BIGINT) AS weighted_floor_sum
-        |FROM events e
-        |JOIN (VALUES ('click', 1), ('view', 2), ('purchase', 5),
-        |      ('signup', 10), ('error', 0)) d(event_type, weight)
-        |  ON e.event_type = d.event_type
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    // the same coordinate order replayed with a window; row_number is INT
-    // on the Spark side, so the oracle casts
-    "q77_quota_sample" ->
-      s"""SELECT doc_id, source, rank FROM (
-         |  SELECT doc_id, source,
-         |    CAST(row_number() OVER (PARTITION BY source
-         |         ORDER BY ${coordSql("doc_id")}, doc_id) AS INT) AS rank
-         |  FROM documents)
-         |WHERE rank <= 8 ORDER BY doc_id""".stripMargin,
-
-    // the naive BETWEEN formulation — DuckDB's IEJoin handles it directly
-    "q74_range_join" ->
-      """WITH e AS (SELECT event_id, epoch_us(ts) AS t_us FROM events),
-        |er AS (SELECT event_id AS error_id,
-        |         epoch_us(ts) - 300000000 AS w_start,
-        |         epoch_us(ts) + 300000000 AS w_end
-        |       FROM events WHERE event_type = 'error')
-        |SELECT e.event_id, er.error_id, e.t_us - er.w_start AS offset_us
-        |FROM e JOIN er ON e.t_us >= er.w_start AND e.t_us < er.w_end
-        |ORDER BY e.event_id, er.error_id""".stripMargin,
-
-    // the naive overlap BETWEEN formulation (DuckDB IEJoin)
-    "q78_interval_overlap" ->
-      """WITH e AS (SELECT event_id, event_type, epoch_us(ts) AS t FROM events),
-        |er AS (SELECT event_id AS error_id, t - 300000000 AS e_start, t + 300000000 AS e_end
-        |       FROM e WHERE event_type = 'error'),
-        |pu AS (SELECT event_id AS purchase_id, t - 60000000 AS p_start, t + 60000000 AS p_end
-        |       FROM e WHERE event_type = 'purchase')
-        |SELECT error_id, purchase_id,
-        |  greatest(e_start, p_start) AS ov_start_us,
-        |  least(e_end, p_end) AS ov_end_us,
-        |  least(e_end, p_end) - greatest(e_start, p_start) AS ov_us
-        |FROM er JOIN pu ON e_start < p_end AND p_start < e_end
-        |ORDER BY error_id, purchase_id""".stripMargin,
-
-    // every float step is the same two-operand tree as the Spark side
-    // q179: the shared sketch chain + the exact sort twin + in-bucket bools
-    "q179_loghist_quantiles" ->
-      s"""WITH ${logHistCtes("")},
-        |rk AS (SELECT event_type, q,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY q) AS rn
-        |       FROM ev),
-        |ex AS (
-        |  SELECT n.event_type,
-        |    (SELECT max(q) FROM rk WHERE rk.event_type = n.event_type
-        |       AND rk.rn = (1 * n.n + 1) // 2) AS x50,
-        |    (SELECT max(q) FROM rk WHERE rk.event_type = n.event_type
-        |       AND rk.rn = (19 * n.n + 19) // 20) AS x95
-        |  FROM n),
-        |edges AS (
-        |  SELECT sel.event_type, sel.n, ex.x50, ex.x95,
-        |    ${logHistEdgeSql("b50", hi = true)} AS hi50,
-        |    ${logHistEdgeSql("b50", hi = false)} AS lo50,
-        |    ${logHistEdgeSql("b95", hi = true)} AS hi95,
-        |    ${logHistEdgeSql("b95", hi = false)} AS lo95
-        |  FROM sel JOIN ex ON ex.event_type = sel.event_type)
-        |SELECT event_type, n,
-        |  CAST(hi50 - 1 AS BIGINT) AS p50_est_centi,
-        |  CAST(x50 - 1 AS BIGINT) AS p50_exact_centi,
-        |  (lo50 <= x50 AND x50 <= hi50) AS p50_in_bucket,
-        |  CAST(hi95 - 1 AS BIGINT) AS p95_est_centi,
-        |  CAST(x95 - 1 AS BIGINT) AS p95_exact_centi,
-        |  (lo95 <= x95 AND x95 <= hi95) AS p95_in_bucket
-        |FROM edges ORDER BY event_type""".stripMargin,
-
-    // (subtract / divide / scale-by-256 / floor; edge formula for the
-    // estimate) — IEEE exact rounding makes the doubles identical
-    "q71_histogram_quantiles" ->
-      """WITH s AS (SELECT event_type, value FROM events),
-        |g AS (SELECT event_type, count(*) AS n, min(value) AS vmin, max(value) AS vmax
-        |      FROM s GROUP BY event_type),
-        |b AS (SELECT s.event_type,
-        |        CASE WHEN g.vmax = g.vmin THEN 0
-        |             ELSE least(CAST(floor(((s.value - g.vmin) / (g.vmax - g.vmin)) * 256) AS BIGINT), 255)
-        |        END AS bin
-        |      FROM s JOIN g USING (event_type)),
-        |h AS (SELECT event_type, bin, count(*) AS c FROM b GROUP BY event_type, bin),
-        |cum AS (SELECT h.event_type, h.bin,
-        |          sum(h.c) OVER (PARTITION BY h.event_type ORDER BY h.bin) AS cc, g.n
-        |        FROM h JOIN g USING (event_type)),
-        |q50 AS (SELECT event_type, min(bin) AS qbin FROM cum
-        |        WHERE cc >= CAST(ceil(0.5 * n) AS BIGINT) GROUP BY event_type),
-        |q95 AS (SELECT event_type, min(bin) AS qbin FROM cum
-        |        WHERE cc >= CAST(ceil(0.95 * n) AS BIGINT) GROUP BY event_type),
-        |r AS (SELECT event_type, value,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn FROM s),
-        |x50 AS (SELECT r.event_type, max(r.value) AS p50_exact FROM r JOIN g USING (event_type)
-        |        WHERE rn = CAST(ceil(0.5 * n) AS BIGINT) GROUP BY r.event_type),
-        |x95 AS (SELECT r.event_type, max(r.value) AS p95_exact FROM r JOIN g USING (event_type)
-        |        WHERE rn = CAST(ceil(0.95 * n) AS BIGINT) GROUP BY r.event_type)
-        |SELECT g.event_type, g.n, g.vmin, g.vmax,
-        |  g.vmin + (CAST(q50.qbin + 1 AS DOUBLE) * (g.vmax - g.vmin)) / 256 AS p50_est,
-        |  g.vmin + (CAST(q95.qbin + 1 AS DOUBLE) * (g.vmax - g.vmin)) / 256 AS p95_est,
-        |  x50.p50_exact, x95.p95_exact
-        |FROM g JOIN q50 USING (event_type) JOIN q95 USING (event_type)
-        |JOIN x50 USING (event_type) JOIN x95 USING (event_type)
-        |ORDER BY g.event_type""".stripMargin,
-
-    // bit interleave expanded term-by-term from ZOrder.Bits — generated
-    // from the same constant as the JVM loop
-    "q66_zorder" ->
-      s"""SELECT event_id, user_id, epoch_us(ts) // 86400000000 AS day,
-         |  ${zvalSql("user_id", "(epoch_us(ts) // 86400000000)")} AS zval
-         |FROM events ORDER BY event_id""".stripMargin,
-
-    // each branch replays one Check verbatim; CAST to BIGINT mirrors the
-    // Spark side's metric.cast("long") (DuckDB's sum(CASE) is HUGEINT)
-    "q115_data_audit" ->
-      """SELECT check_name, metric, passed FROM (
-        |  SELECT 'li_rowcount' AS check_name, CAST(count(*) AS BIGINT) AS metric,
-        |         count(*) > 0 AS passed FROM lineitem
-        |  UNION ALL
-        |  SELECT 'li_qty_range_viol',
-        |         CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT),
-        |         sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) = 0
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'li_returnflag_domain_viol',
-        |         CAST(sum(CASE WHEN l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) AS BIGINT),
-        |         sum(CASE WHEN l_returnflag NOT IN ('A','N','R') THEN 1 ELSE 0 END) = 0
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'li_shipdate_nulls',
-        |         CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |         sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) = 0
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'ord_pk_dups',
-        |         CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT),
-        |         count(*) - count(DISTINCT o_orderkey) = 0
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'ord_totalprice_nonpos',
-        |         CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT),
-        |         sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) = 0
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'ord_custkey_orphans', CAST(count(*) AS BIGINT), count(*) = 0
-        |  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |  WHERE c.c_custkey IS NULL)
-        |ORDER BY check_name""".stripMargin,
-
-    // shard = the Mix64 coordinate mod 16; fp replays q35's rolling-31
-    // HUGEINT hash (ASCII corpus) converted to signed before the BIGINT
-    // bit_xor — XOR of identical bit patterns is representation-blind,
-    // but the signed conversion keeps every emitted value Spark-equal
-    "q117_shard_manifest" ->
-      s"${manifestSql("")} ORDER BY shard",
-
-    // base⊕delta replayed with the same monoid combines; the NULL-side
-    // CASEs mirror the Spark when-chain exactly (a shard missing from
-    // one side inherits the other side's min/max unchanged)
-    "q118_manifest_apply" ->
-      s"""WITH f AS (${manifestSql("")}),
-         |b AS (${manifestSql("WHERE doc_id % 4 <> 0")}),
-         |d AS (${manifestSql("WHERE doc_id % 4 = 0")}),
-         |applied AS (
-         |  SELECT shard,
-         |    coalesce(b.n_docs, 0) + coalesce(d.n_docs, 0) AS a_docs,
-         |    coalesce(b.n_tokens, 0) + coalesce(d.n_tokens, 0) AS a_tokens,
-         |    xor(coalesce(b.content_xor, 0), coalesce(d.content_xor, 0)) AS a_xor,
-         |    CASE WHEN b.min_doc_id IS NULL THEN d.min_doc_id
-         |         WHEN d.min_doc_id IS NULL THEN b.min_doc_id
-         |         ELSE least(b.min_doc_id, d.min_doc_id) END AS a_min,
-         |    CASE WHEN b.max_doc_id IS NULL THEN d.max_doc_id
-         |         WHEN d.max_doc_id IS NULL THEN b.max_doc_id
-         |         ELSE greatest(b.max_doc_id, d.max_doc_id) END AS a_max
-         |  FROM b FULL OUTER JOIN d USING (shard))
-         |SELECT f.shard, f.n_docs, f.n_tokens, f.content_xor,
-         |  f.min_doc_id, f.max_doc_id,
-         |  a.a_docs, a.a_tokens, a.a_xor, a.a_min, a.a_max,
-         |  (f.n_docs = a.a_docs AND f.n_tokens = a.a_tokens
-         |   AND f.content_xor = a.a_xor AND f.min_doc_id = a.a_min
-         |   AND f.max_doc_id = a.a_max) AS incremental_ok
-         |FROM f JOIN applied a USING (shard)
-         |ORDER BY shard""".stripMargin,
-
-    // each audit CTE replays one Subject: left join against the request
-    // list, FILTERed aggregates for after-count and survivor checksum
-    // (sum of the low 20 bits of surviving row keys' Mix64 coords —
-    // order-free and overflow-bounded, so any divergence in WHICH rows
-    // survived flips the value)
-    "q121_delete_propagate" ->
-      s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS t_us, event_type
-         |           FROM events),
-         |req AS (SELECT DISTINCT user_id FROM e
-         |        WHERE ${coordSql("user_id")} < ${Sampling.threshold(DeleteRate)}),
-         |ev AS (
-         |  SELECT 'events' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
-         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
-         |    CAST(coalesce(sum((${coordSql("e.event_id")}) % 1048576)
-         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
-         |  FROM e LEFT JOIN req r ON e.user_id = r.user_id),
-         |d0 AS (SELECT user_id, t_us // 86400000000 AS day, count(*) AS n
-         |       FROM e GROUP BY 1, 2),
-         |da AS (
-         |  SELECT 'user_daily' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
-         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
-         |    CAST(coalesce(sum((${coordSql("(d0.user_id * 131072 + d0.day)")}) % 1048576)
-         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
-         |  FROM d0 LEFT JOIN req r ON d0.user_id = r.user_id),
-         |p0 AS (SELECT user_id, event_type, count(*) AS n
-         |       FROM e GROUP BY 1, 2),
-         |pr AS (
-         |  SELECT 'user_profile' AS tbl, CAST(count(*) AS BIGINT) AS rows_before,
-         |    CAST(count(*) FILTER (r.user_id IS NULL) AS BIGINT) AS rows_after,
-         |    CAST(coalesce(sum((${coordSql("(p0.user_id * 1024 + ascii(p0.event_type))")}) % 1048576)
-         |      FILTER (r.user_id IS NULL), 0) AS BIGINT) AS survivor_checksum
-         |  FROM p0 LEFT JOIN req r ON p0.user_id = r.user_id)
-         |SELECT tbl, rows_before, rows_after,
-         |  rows_before - rows_after AS rows_deleted, survivor_checksum
-         |FROM (SELECT * FROM ev UNION ALL SELECT * FROM da
-         |      UNION ALL SELECT * FROM pr)
-         |ORDER BY tbl""".stripMargin,
-
-    // decimal value mass throughout (exact subtraction, double only at
-    // the output boundary — the BASELINE float-parity technique); the
-    // equality bits replay Spark's null-safe <=> as IS NOT DISTINCT FROM
-    "q123_rollup_retract" ->
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |             CAST(value AS DECIMAL(18,2)) AS v FROM events),
-         |req AS (SELECT DISTINCT user_id FROM e
-         |        WHERE ${coordSql("user_id")} < ${Sampling.threshold(DeleteRate)}),
-         |f AS (SELECT day, CAST(count(*) AS BIGINT) AS n, sum(v) AS mass
-         |      FROM e GROUP BY day),
-         |d AS (SELECT day, CAST(count(*) AS BIGINT) AS dn, sum(v) AS dmass
-         |      FROM e WHERE user_id IN (SELECT user_id FROM req) GROUP BY day),
-         |inc AS (SELECT f.day, f.n - coalesce(d.dn, 0) AS inc_n,
-         |          f.mass - coalesce(d.dmass, CAST(0 AS DECIMAL(18,2))) AS inc_mass
-         |        FROM f LEFT JOIN d USING (day)
-         |        WHERE f.n - coalesce(d.dn, 0) > 0),
-         |rb AS (SELECT day, CAST(count(*) AS BIGINT) AS rb_n, sum(v) AS rb_mass
-         |       FROM e WHERE user_id NOT IN (SELECT user_id FROM req)
-         |       GROUP BY day)
-         |SELECT day, rb_n, CAST(rb_mass AS DOUBLE) AS rb_mass,
-         |  inc_n, CAST(inc_mass AS DOUBLE) AS inc_mass,
-         |  (rb_n IS NOT DISTINCT FROM inc_n
-         |   AND rb_mass IS NOT DISTINCT FROM inc_mass) AS retract_ok
-         |FROM inc FULL OUTER JOIN rb USING (day)
-         |ORDER BY day""".stripMargin,
-
-    // the GROUND-TRUTH diff: no buckets, no fingerprints — raw text
-    // compared through a direct full outer join
-    "q124_snapshot_diff" ->
-      """WITH b AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
-        |c AS (SELECT doc_id,
-        |        CASE WHEN doc_id % 7 = 0 THEN text || '!' ELSE text END AS text
-        |      FROM documents WHERE doc_id % 5 <> 0),
-        |j AS (SELECT coalesce(b.doc_id, c.doc_id) AS doc_id,
-        |        CASE WHEN b.doc_id IS NULL THEN 'added'
-        |             WHEN c.doc_id IS NULL THEN 'removed'
-        |             WHEN b.text <> c.text THEN 'changed' END AS status
-        |      FROM b FULL OUTER JOIN c ON b.doc_id = c.doc_id)
-        |SELECT doc_id, status FROM j WHERE status IS NOT NULL
-        |ORDER BY doc_id, status""".stripMargin,
-
-    // the same three aggregation levels, cells replayed with the
-    // countMinSql bucket convention (coordSql of term·131+r, mod a
-    // power-of-two width)
-    "q125_join_size" ->
-      s"""WITH t AS (SELECT event_type, ((user_id % 256) + 256) % 256 AS term
-         |           FROM events WHERE event_type IN ('click', 'purchase')),
-         |pt AS (SELECT term,
-         |         CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS nc,
-         |         CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS np
-         |       FROM t GROUP BY term),
-         |cells AS (SELECT r.r,
-         |            (${coordSql("(pt.term * 131 + r.r)")}) % $JoinSizeWidth AS bucket,
-         |            CAST(sum(nc) AS BIGINT) AS c_cell,
-         |            CAST(sum(np) AS BIGINT) AS p_cell,
-         |            CAST(sum(nc * np) AS BIGINT) AS xb
-         |          FROM pt CROSS JOIN range(0, $CmDepth) r(r) GROUP BY 1, 2),
-         |byrow AS (SELECT r, CAST(sum(c_cell * p_cell) AS BIGINT) AS prod,
-         |            CAST(sum(xb) AS BIGINT) AS exact_r,
-         |            CAST(sum(c_cell) AS BIGINT) AS nc_r,
-         |            CAST(sum(p_cell) AS BIGINT) AS np_r
-         |          FROM cells GROUP BY r)
-         |SELECT max(nc_r) AS n_clicks, max(np_r) AS n_purchases,
-         |  max(exact_r) AS exact_size, min(prod) AS est_size,
-         |  min(prod) >= max(exact_r) AS no_underestimate
-         |FROM byrow""".stripMargin,
-
-    // same top-10 + exact-integer share and ceil salt factor
-    "q132_skew_advisor" ->
-      s"""WITH f AS (SELECT user_id, CAST(count(*) AS BIGINT) AS freq
-         |           FROM events GROUP BY user_id),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS total FROM events),
-         |top AS (SELECT user_id, freq FROM f
-         |        ORDER BY freq DESC, user_id LIMIT 10)
-         |SELECT t.user_id, t.freq,
-         |  CAST(t.freq * 1048576 // tot.total AS BIGINT) AS share_micro,
-         |  CAST((t.freq * $SkewP + tot.total - 1) // tot.total AS BIGINT) AS salt_buckets
-         |FROM top t CROSS JOIN tot
-         |ORDER BY freq DESC, user_id""".stripMargin,
-
-    // lossless round-trip is the CONTRACT: exactly (n, n, 0) per format
-    "q145_interchange_roundtrip" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM documents)
-        |SELECT f.format, n.c AS n_docs, n.c AS n_roundtrip,
-        |  CAST(0 AS BIGINT) AS n_mismatched
-        |FROM (SELECT 'csv' AS format UNION ALL SELECT 'jsonl'
-        |      UNION ALL SELECT 'orc') f CROSS JOIN n
-        |ORDER BY format""".stripMargin,
-
-    // the same integer decay fold: day cells, k half-lives, 2^20 >> k
-    "q127_trending" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |ks AS (
-        |  SELECT event_type, n,
-        |    ((SELECT max(day) FROM daily) - day) // 7 AS k
-        |  FROM daily)
-        |SELECT event_type,
-        |  CAST(sum(n * (CASE WHEN k > 20 THEN 0 ELSE 1048576 >> k END)) AS BIGINT)
-        |    AS decay_micro,
-        |  CAST(sum(n) AS BIGINT) AS n_events
-        |FROM ks GROUP BY event_type
-        |ORDER BY decay_micro DESC, event_type""".stripMargin)
 
   /** The q117 manifest as DuckDB SQL over `documents` with an optional
     * row predicate — q118 instantiates it three times (full/base/delta). */

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Entry
 import graft.raster.{TiffDecoder, TiffEncoder}
 
 /** Raster-codec queries: the O2 decode path (ref fct_data_extraction.py:22–26,
@@ -56,11 +57,11 @@ object RasterQueries extends graft.QueryModule {
     try in.readAllBytes() finally in.close()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // O2 — decode sweep over the committed fixture corpus, executor-side
     // (files spread across partitions like a real raster-directory scan;
     // the fixture list is the only driver-side state)
-    "q167_tiff_decode" -> ((s, _) => {
+    Entry("q167_tiff_decode", (s, _) => {
       import s.implicits._
       s.createDataset(DecodableFixtures ++ RejectedFixtures)
         .repartition(8)
@@ -80,56 +81,7 @@ object RasterQueries extends graft.QueryModule {
         }
         .toDF("file", "ok", "h", "w", "n_px", "sum_q", "px_md5")
         .orderBy("file")
-    }),
-
-    // BIGTIFF ENVELOPE (round 11): magic-43 containers — 8-byte offsets,
-    // 20-byte IFD entries, LONG8 strip offset/count — are what GDAL emits
-    // under BIGTIFF=YES, including files well under 4 GiB, so the O2 scan
-    // path reads both containers. Executor-side sweep over 8 synthetic
-    // grids (NaN and negative payloads included): classic and BigTIFF
-    // encodings of the same grid must decode bit-identically, and the
-    // truncated / bad-offset-size hostile variants must reject with a
-    // Left, never an exception or shifted placement.
-    "q189_bigtiff" -> ((s, _) => {
-      import s.implicits._
-      s.createDataset(1 to 8).repartition(4)
-        .map { i =>
-          val h = 3 + i
-          val w = 5 + (i % 3)
-          val px = Array.tabulate(h * w)(j => ((j * 31 + i * 7) % 97) - 13.5f)
-          if (i == 1) px(0) = Float.NaN
-          val cls = TiffEncoder.encode(h, w, px)
-          val big = TiffEncoder.encodeBig(h, w, px)
-          def bits(b: Array[Byte]): Option[Seq[Int]] =
-            TiffDecoder.decode(b).toOption
-              .map(_.pixels.map(java.lang.Float.floatToRawIntBits).toSeq)
-          val identical = (bits(cls), bits(big)) match {
-            case (Some(a), Some(b)) => a == b && a.length == h * w
-            case _ => false
-          }
-          val headerBig = big(2) == 43.toByte && cls(2) == 42.toByte
-          val badHdr = big.clone(); badHdr(4) = 4.toByte
-          val hostileRejected =
-            TiffDecoder.decode(big.take(40)).isLeft &&
-            TiffDecoder.decode(big.dropRight(8)).isLeft &&
-            TiffDecoder.decode(badHdr).isLeft
-          (1L, identical, headerBig, hostileRejected)
-        }
-        .toDF("one", "identical", "header_big", "hostile_rejected")
-        .selectExpr("sum(one) AS n_grids",
-          "bool_and(identical) AS pixels_identical",
-          "bool_and(header_big) AS containers_differ",
-          "bool_and(hostile_rejected) AS hostiles_rejected")
-    }))
-
-  /** Committed output of scripts/make_tiff_oracle.py (see scaladoc above). */
-  val oracle: Map[String, String] = Map(
-    // guarantee row: every boolean must hold for all 8 grids
-    "q189_bigtiff" ->
-      """SELECT CAST(8 AS BIGINT) AS n_grids, true AS pixels_identical,
-        |  true AS containers_differ, true AS hostiles_rejected""".stripMargin,
-
-    "q167_tiff_decode" ->
+    }, Some(
       """SELECT 'deflate_be_f32.tif' AS file, CAST(1 AS BIGINT) AS ok, CAST(6 AS BIGINT) AS h, CAST(5 AS BIGINT) AS w, CAST(30 AS BIGINT) AS n_px, CAST(705 AS BIGINT) AS sum_q, 'dfd0ee29ab1693a0bb16bfabe87d18c1' AS px_md5
         |UNION ALL
         |SELECT 'deflate_one.tif' AS file, CAST(1 AS BIGINT) AS ok, CAST(6 AS BIGINT) AS h, CAST(5 AS BIGINT) AS w, CAST(30 AS BIGINT) AS n_px, CAST(282000 AS BIGINT) AS sum_q, 'c522994f874148fa02a3db8b4d0db48d' AS px_md5
@@ -211,5 +163,48 @@ object RasterQueries extends graft.QueryModule {
         |SELECT 'tiled_lzw_wide.tif' AS file, CAST(1 AS BIGINT) AS ok, CAST(48 AS BIGINT) AS h, CAST(48 AS BIGINT) AS w, CAST(2304 AS BIGINT) AS n_px, CAST(1149240 AS BIGINT) AS sum_q, '4040f44a8737201e38b6557de9c55c15' AS px_md5
         |UNION ALL
         |SELECT 'tiled_plain.tif' AS file, CAST(1 AS BIGINT) AS ok, CAST(6 AS BIGINT) AS h, CAST(5 AS BIGINT) AS w, CAST(30 AS BIGINT) AS n_px, CAST(2820 AS BIGINT) AS sum_q, '3a085d24105e75d4726d5af2be193929' AS px_md5
-        |ORDER BY file""".stripMargin)
+        |ORDER BY file""".stripMargin)),
+
+    // BIGTIFF ENVELOPE (round 11): magic-43 containers — 8-byte offsets,
+    // 20-byte IFD entries, LONG8 strip offset/count — are what GDAL emits
+    // under BIGTIFF=YES, including files well under 4 GiB, so the O2 scan
+    // path reads both containers. Executor-side sweep over 8 synthetic
+    // grids (NaN and negative payloads included): classic and BigTIFF
+    // encodings of the same grid must decode bit-identically, and the
+    // truncated / bad-offset-size hostile variants must reject with a
+    // Left, never an exception or shifted placement.
+    Entry("q189_bigtiff", (s, _) => {
+      import s.implicits._
+      s.createDataset(1 to 8).repartition(4)
+        .map { i =>
+          val h = 3 + i
+          val w = 5 + (i % 3)
+          val px = Array.tabulate(h * w)(j => ((j * 31 + i * 7) % 97) - 13.5f)
+          if (i == 1) px(0) = Float.NaN
+          val cls = TiffEncoder.encode(h, w, px)
+          val big = TiffEncoder.encodeBig(h, w, px)
+          def bits(b: Array[Byte]): Option[Seq[Int]] =
+            TiffDecoder.decode(b).toOption
+              .map(_.pixels.map(java.lang.Float.floatToRawIntBits).toSeq)
+          val identical = (bits(cls), bits(big)) match {
+            case (Some(a), Some(b)) => a == b && a.length == h * w
+            case _ => false
+          }
+          val headerBig = big(2) == 43.toByte && cls(2) == 42.toByte
+          val badHdr = big.clone(); badHdr(4) = 4.toByte
+          val hostileRejected =
+            TiffDecoder.decode(big.take(40)).isLeft &&
+            TiffDecoder.decode(big.dropRight(8)).isLeft &&
+            TiffDecoder.decode(badHdr).isLeft
+          (1L, identical, headerBig, hostileRejected)
+        }
+        .toDF("one", "identical", "header_big", "hostile_rejected")
+        .selectExpr("sum(one) AS n_grids",
+          "bool_and(identical) AS pixels_identical",
+          "bool_and(header_big) AS containers_differ",
+          "bool_and(hostile_rejected) AS hostiles_rejected")
+    }, Some(
+      // guarantee row: every boolean must hold for all 8 grids
+      """SELECT CAST(8 AS BIGINT) AS n_grids, true AS pixels_identical,
+        |  true AS containers_differ, true AS hostiles_rejected""".stripMargin)))
 }

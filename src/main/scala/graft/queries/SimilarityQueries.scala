@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.similarity.Ann
 
 /** Similarity-search queries over `embeddings`. The brute-force top-k is
@@ -16,8 +17,8 @@ object SimilarityQueries extends graft.QueryModule {
     s.read.parquet(s"$dir/$name.parquet")
 
   /** q112/q113 configuration, shared by the Spark side and [[rerankSql]]
-    * so the two can't drift (declared BEFORE the maps — the oracle map
-    * val interpolates these at object-init time): 128 sampled codewords
+    * so the two can't drift (declared BEFORE [[entries]] — its oracle SQL
+    * interpolates these at object-init time): 128 sampled codewords
     * per subspace (the UNTRAINED portable codebook — the synthetic
     * embeddings are near-random, so a coarser codebook would gut
     * candidate recall; measured 0.845 @ sf0.1 / ≥0.95 @ sf0.01 with
@@ -26,7 +27,7 @@ object SimilarityQueries extends graft.QueryModule {
   private val RerankCb = 128
   private val RerankCand = 200
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // EMBEDDING HEALTH AUDIT — the ingestion gate for the vector column
     // (q115's discipline applied to embeddings): per label, vector count,
     // wrong-dimension count, and min/max/mean squared norm in the exact
@@ -36,7 +37,7 @@ object SimilarityQueries extends graft.QueryModule {
     // no windows. explode_OUTER + a non-null count keep NULL/empty
     // embeddings visible: they fold to dim = 0 and land in n_bad_dim —
     // the worst corruption class must not vanish from its own gate.
-    "q134_embedding_audit" -> ((s, dir) => {
+    Entry("q134_embedding_audit", (s, dir) => {
       val q = 1048576L // 2^20
       val perVec = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
@@ -52,15 +53,45 @@ object SimilarityQueries extends graft.QueryModule {
           max(col("norm2_q")).as("max_norm2_q"),
           expr("sum(norm2_q) div count(1)").as("mean_norm2_q"))
         .orderBy("label")
-    }),
+    }, Some(
+      // the per-vector fold via list ops (no unnest — a NULL/empty
+      // embedding must stay a row with dim 0, mirroring explode_outer),
+      // same 2^20 floor. dim counts NON-NULL elements (len() counts NULL
+      // list elements; Spark's count(x) over the explode does not — a
+      // vector with NULL elements must land in n_bad_dim on BOTH engines,
+      // advisor r8), and the norm skips them the way sum(q·q) does.
+      """WITH pv AS (
+        |  SELECT vec_id, label,
+        |    CAST(coalesce(len(list_filter(embedding, x -> x IS NOT NULL)), 0)
+        |      AS BIGINT) AS dim,
+        |    CAST(coalesce(list_aggregate(
+        |      list_transform(
+        |        list_transform(list_filter(embedding, x -> x IS NOT NULL),
+        |          x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)),
+        |        q -> q * q), 'sum'), 0) AS BIGINT) AS norm2_q
+        |  FROM embeddings)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |  CAST(count(*) FILTER (dim <> 64) AS BIGINT) AS n_bad_dim,
+        |  min(norm2_q) AS min_norm2_q, max(norm2_q) AS max_norm2_q,
+        |  CAST(sum(norm2_q) // count(*) AS BIGINT) AS mean_norm2_q
+        |FROM pv GROUP BY label ORDER BY label""".stripMargin)),
 
     // exact cosine top-10 for the first 20 vectors as queries
-    "q40_ann_topk" -> ((s, dir) => {
+    Entry("q40_ann_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.bruteForceTopK(emb.where(col("vec_id") < 20), emb,
           "vec_id", "embedding", k = 10)
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+        |q AS (SELECT * FROM e WHERE vec_id < 20),
+        |sims AS (
+        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY q.vec_id
+        |      ORDER BY list_cosine_similarity(q.emb, e.emb) DESC, e.vec_id) AS rank
+        |  FROM q JOIN e ON q.vec_id <> e.vec_id)
+        |SELECT query_id, rank, neighbor_id FROM sims WHERE rank <= 10
+        |ORDER BY query_id, rank""".stripMargin)),
 
     // IVF: 16 cells, 4 probes — fully oracle-backed since the centroid
     // sample moved to the portable Mix64 coordinate: centroids, cell
@@ -68,12 +99,15 @@ object SimilarityQueries extends graft.QueryModule {
     // all replay in DuckDB. Rank-only output; every ranking gap measured
     // ≥ 2e-5 at sf0.01/0.1 (assignment) — far above cross-engine ulp noise
     // (the q40 argument).
-    "q41_ann_ivf" -> ((s, dir) => {
+    Entry("q41_ann_ivf", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.ivfTopK(emb.where(col("vec_id") < 20), emb,
           "vec_id", "embedding", k = 10, nCentroids = 16, nProbe = 4)
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      s"""WITH $ivfSql
+         |SELECT query_id, rank, neighbor_id FROM ivf
+         |ORDER BY query_id, rank""".stripMargin)),
 
     // k-NN CLASSIFICATION over the IVF index — the auto-labeling step of
     // a curation pipeline (propagate labels from a labeled seed corpus to
@@ -84,7 +118,7 @@ object SimilarityQueries extends graft.QueryModule {
     // assignment broadcast, whitelisted with q41's rationale in PlanSpec)
     // and q41's oracle generator, so the classification is fully
     // driver-checked: votes, prediction, and per-query correctness bit.
-    "q106_knn_classify" -> ((s, dir) => {
+    Entry("q106_knn_classify", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val topk = Ann.ivfTopK(emb.where(col("vec_id") < 20), emb,
         "vec_id", "embedding", k = 10, nCentroids = 16, nProbe = 4)
@@ -102,10 +136,25 @@ object SimilarityQueries extends graft.QueryModule {
         .select(col("query_id"), col("predicted"), col("votes"), col("actual"),
           (col("predicted") === col("actual")).as("correct"))
         .orderBy("query_id")
-    }),
+    }, Some(
+      // majority vote over the same ivf CTE; rn-ordering = (votes DESC,
+      // label ASC) is exactly the Spark side's max_by (votes, -label) struct
+      s"""WITH $ivfSql,
+         |lab AS (SELECT vec_id, label FROM embeddings),
+         |votes AS (SELECT i.query_id, l.label, count(*) AS votes
+         |          FROM ivf i JOIN lab l ON l.vec_id = i.neighbor_id
+         |          GROUP BY 1, 2),
+         |pred AS (SELECT query_id, label AS predicted, votes FROM (
+         |           SELECT *, row_number() OVER (PARTITION BY query_id
+         |             ORDER BY votes DESC, label) AS rn FROM votes) t
+         |         WHERE rn = 1)
+         |SELECT p.query_id, p.predicted, p.votes, q.label AS actual,
+         |       p.predicted = q.label AS correct
+         |FROM pred p JOIN lab q ON q.vec_id = p.query_id
+         |ORDER BY p.query_id""".stripMargin)),
 
     // hyperplane LSH signatures (rows-only; deterministic)
-    "q42_hyperplane_sig" -> ((s, dir) =>
+    Entry("q42_hyperplane_sig", (s, dir) =>
       t(s, dir, "embeddings")
         .select(col("vec_id"),
           Ann.hyperplaneSignature(col("embedding"), nBits = 32, seed = 42L).as("sig"))
@@ -118,7 +167,7 @@ object SimilarityQueries extends graft.QueryModule {
     // (tiny: 20 queries × k rows each); oracle-backed now that the IVF side
     // replays in DuckDB (q41). The aggregate recall is additionally pinned
     // in AnnSpec.
-    "q47_ivf_recall" -> ((s, dir) => {
+    Entry("q47_ivf_recall", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
@@ -134,14 +183,31 @@ object SimilarityQueries extends graft.QueryModule {
           (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
             .as("recall"))
         .orderBy("query_id")
-    }),
+    }, Some(
+      s"""WITH $ivfSql,
+         |bf AS (
+         |  SELECT query_id, neighbor_id FROM (
+         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY q.vec_id
+         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
+         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
+         |  WHERE rank <= 10),
+         |hits AS (
+         |  SELECT bf.query_id, count(*) AS n_hit
+         |  FROM bf JOIN ivf USING (query_id, neighbor_id) GROUP BY bf.query_id)
+         |SELECT b.query_id, b.n_true,
+         |  coalesce(h.n_hit, 0) AS n_hit,
+         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / CAST(b.n_true AS DOUBLE) AS recall
+         |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) b
+         |LEFT JOIN hits h ON b.query_id = h.query_id
+         |ORDER BY b.query_id""".stripMargin)),
 
     // product-quantization ADC top-10: the compressed-domain scan (corpus
     // rows shrink 64 floats → 16 codes; codebook = deterministic sample +
     // 3 integer-mean Lloyd iterations). Rows-only — argmin encode over
     // float L2 has no DuckDB twin; PqSpec pins determinism + recall, q80
     // MEASURES it.
-    "q79_ann_pq" -> ((s, dir) => {
+    Entry("q79_ann_pq", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.similarity.Pq.adcTopK(emb.where(col("vec_id") < 20), emb,
           "vec_id", "embedding", k = 10, m = 16, kCent = 64)
@@ -150,7 +216,7 @@ object SimilarityQueries extends graft.QueryModule {
 
     // PQ approximation quality as a measured output (the q47 pattern):
     // per-query recall@10 of the ADC scan against exact brute force
-    "q80_pq_recall" -> ((s, dir) => {
+    Entry("q80_pq_recall", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
@@ -172,7 +238,7 @@ object SimilarityQueries extends graft.QueryModule {
     // carry — the production ANN config, measured like q47/q80: per-query
     // recall@10 against exact brute force (compounds both approximations).
     // Rows-only (xxhash64 cells + float argmin encode, no DuckDB twin).
-    "q84_ivfpq_recall" -> ((s, dir) => {
+    Entry("q84_ivfpq_recall", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
@@ -200,19 +266,22 @@ object SimilarityQueries extends graft.QueryModule {
     // row. FULLY oracle-backed, unlike the float-ADC q79/q80 tier:
     // quantizer (q93's chain), candidate order, and re-rank (q40's
     // rank-only argument) all replay. Recall lift is MEASURED in q113.
-    "q112_pq_rerank" -> ((s, dir) => {
+    Entry("q112_pq_rerank", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.similarity.Pq.rerankTopK(emb.where(col("vec_id") < 20), emb,
           "vec_id", "embedding", k = 10, nCand = RerankCand,
           m = 8, kCent = RerankCb)
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      s"""WITH $rerankSql
+         |SELECT query_id, rank, neighbor_id FROM rer WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
 
     // re-rank approximation quality as a measured output (the q47/q80
     // pattern): recall@10 of q112 against exact brute force — the number
     // that demonstrates the candidate cut preserves the true top-k
     // (vs 0.625 for the raw float-ADC ranking at the same sf)
-    "q113_rerank_recall" -> ((s, dir) => {
+    Entry("q113_rerank_recall", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
@@ -229,7 +298,25 @@ object SimilarityQueries extends graft.QueryModule {
           (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
             .as("recall"))
         .orderBy("query_id")
-    }),
+    }, Some(
+      s"""WITH $rerankSql,
+         |rr AS (SELECT query_id, neighbor_id FROM rer WHERE rank <= 10),
+         |bf AS (
+         |  SELECT query_id, neighbor_id FROM (
+         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY q.vec_id
+         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
+         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
+         |  WHERE rank <= 10),
+         |hits AS (
+         |  SELECT bf.query_id, count(*) AS n_hit
+         |  FROM bf JOIN rr USING (query_id, neighbor_id) GROUP BY bf.query_id)
+         |SELECT b.query_id, b.n_true,
+         |  coalesce(h.n_hit, 0) AS n_hit,
+         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / CAST(b.n_true AS DOUBLE) AS recall
+         |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) b
+         |LEFT JOIN hits h ON b.query_id = h.query_id
+         |ORDER BY b.query_id""".stripMargin)),
 
     // PORTABLE PQ encode: the q48/q53/q64 pattern applied to the PQ family
     // — Mix64-sampled codebook, components and codewords quantized to
@@ -238,7 +325,7 @@ object SimilarityQueries extends graft.QueryModule {
     // PQ — replays bit-for-bit in DuckDB, shrinking the family's
     // unverifiable surface to the float ADC scan (whose recall q80/q84
     // measure). Codes posexploded to flat (vec_id, mi, code) rows.
-    "q93_pq_portable" -> ((s, dir) => {
+    Entry("q93_pq_portable", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val qcb = graft.similarity.Pq.codebookPortable(
         emb, "vec_id", "embedding", m = 8, k = 16)
@@ -247,19 +334,30 @@ object SimilarityQueries extends graft.QueryModule {
             .as(Seq("mi", "code")))
         .select(col("vec_id"), col("mi").cast("int").as("mi"), col("code"))
         .orderBy("vec_id", "mi")
-    }),
+    }, Some(
+      // integer-quantized per-subspace argmin (m=8 → sub=8, k=16): dims join
+      // codeword dims 1:1 and group by subspace d//8, so d2 is the exact
+      // integer L2 between the vector's subspace slice and codeword j's
+      s"""WITH $pqPortableSql
+         |SELECT vec_id, CAST(mi AS INT) AS mi, CAST(j AS INT) AS code
+         |FROM pqcode ORDER BY vec_id, mi""".stripMargin)),
 
     // PORTABLE hyperplane LSH signatures: integer-quantized dot products
     // (order-free exact sums) against splitmix64-regenerated planes — the
     // whole signature replays in DuckDB SQL, giving the hyperplane family a
     // full oracle (q42's float variant stays the prod form; its bits are
     // pinned deterministic in AnnSpec)
-    "q64_hyperplane_portable" -> ((s, dir) =>
+    Entry("q64_hyperplane_portable", (s, dir) =>
       t(s, dir, "embeddings")
         .select(col("vec_id"),
           graft.functions.HyperplanePortable
             .signature(col("embedding"), nBits = 32, seed = 42L).as("sig"))
-        .orderBy("vec_id")),
+        .orderBy("vec_id"), Some(
+      // plane components c(j,i) = signed top-32 of splitmix64(42 ^ j<<32 ^ i);
+      // quantization floor(x·2^20) is exact in double; integer dot sums are
+      // order-free so GROUP BY may reassociate freely (see HyperplanePortable)
+      s"""WITH $hyperplaneSigSql
+         |SELECT vec_id, sig FROM hsig ORDER BY vec_id""".stripMargin)),
 
     // RANDOM PROJECTION (Johnson–Lindenstrauss): 64-dim embeddings → 16
     // integer projections ⟨q(v), r_j⟩ — the dimensionality-reduction
@@ -267,13 +365,25 @@ object SimilarityQueries extends graft.QueryModule {
     // (nothing materializes or ships; the projection is a stateless
     // native expression, embarrassingly parallel at any scale). Exploded
     // (vec_id, j, proj) rows so the DuckDB comp/dv twin compares exactly.
-    "q158_random_projection" -> ((s, dir) =>
+    Entry("q158_random_projection", (s, dir) =>
       t(s, dir, "embeddings")
         .select(col("vec_id"),
           posexplode(graft.functions.HyperplanePortable
             .projection(col("embedding"), nDims = 16, seed = 42L)).as(Seq("j", "proj")))
         .select(col("vec_id"), col("j").cast("long").as("j"), col("proj"))
-        .orderBy("vec_id", "j")),
+        .orderBy("vec_id", "j"), Some(
+      // the first 16 planes of the same splitmix component chain, raw dots
+      s"""WITH rpcomp AS (
+         |  SELECT j, i, $splitmixSql
+         |  FROM range(0, 16) tj(j), range(0, 64) ti(i)),
+         |rpdv AS (
+         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
+         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1048576) AS BIGINT) AS q
+         |  FROM embeddings)
+         |SELECT d.vec_id, CAST(c.j AS BIGINT) AS j,
+         |  CAST(sum(d.q * c.comp) AS BIGINT) AS proj
+         |FROM rpdv d JOIN rpcomp c ON c.i = d.i
+         |GROUP BY 1, 2 ORDER BY vec_id, j""".stripMargin)),
 
     // RE-RANK RECALL/COST CURVE (the q140 pattern on the production
     // retrieval tier): one row per shortlist size — how big a candidate
@@ -281,12 +391,50 @@ object SimilarityQueries extends graft.QueryModule {
     // (one ranking pass); the exact-arithmetic cost grows with
     // max(levels) only. q113's single point (200 → 0.99 @ sf0.01) gets
     // its whole curve.
-    "q142_rerank_curve" -> ((s, dir) => {
+    Entry("q142_rerank_curve", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.similarity.Pq.rerankRecallCurve(emb.where(col("vec_id") < 20), emb,
         "vec_id", "embedding", k = 10, levels = Seq(25, 50, 100, 200, 400),
         m = 8, kCent = RerankCb)
-    }),
+    }, Some(
+      // the adc chain + per-level re-rank: each candidate joins every level
+      // >= its ADC rank, exact cosine ranks within (level, query), recall
+      // totals vs the exact brute force
+      s"""WITH ${rerankAdcSql}cand142 AS (
+         |  SELECT query_id, neighbor_id, crank FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY add2, neighbor_id) AS crank FROM adc) t
+         |  WHERE crank <= 400),
+         |lv AS (SELECT CAST(unnest([25, 50, 100, 200, 400]) AS INT) AS n_cand),
+         |rr AS (
+         |  SELECT l.n_cand, c.query_id, c.neighbor_id,
+         |    row_number() OVER (PARTITION BY l.n_cand, c.query_id
+         |      ORDER BY list_cosine_similarity(qe.emb, ne.emb) DESC,
+         |        c.neighbor_id) AS rank
+         |  FROM cand142 c JOIN lv l ON c.crank <= l.n_cand
+         |  JOIN e qe ON qe.vec_id = c.query_id
+         |  JOIN e ne ON ne.vec_id = c.neighbor_id),
+         |bf142 AS (
+         |  SELECT query_id, neighbor_id FROM (
+         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY q.vec_id
+         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
+         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
+         |  WHERE rank <= 10),
+         |hits AS (
+         |  SELECT rr.n_cand, CAST(count(*) AS BIGINT) AS n_hit
+         |  FROM rr JOIN bf142 USING (query_id, neighbor_id)
+         |  WHERE rr.rank <= 10 GROUP BY rr.n_cand),
+         |base AS (
+         |  SELECT l.n_cand,
+         |    CAST(count(DISTINCT c.query_id) * 10 AS BIGINT) AS n_true
+         |  FROM cand142 c JOIN lv l ON c.crank <= l.n_cand
+         |  GROUP BY l.n_cand)
+         |SELECT base.n_cand, base.n_true,
+         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / base.n_true AS recall
+         |FROM base LEFT JOIN hits h USING (n_cand)
+         |ORDER BY n_cand""".stripMargin)),
 
     // PORTABLE IVF-PQ top-10: the composed production ANN architecture
     // (cells prune WHICH rows, codes shrink WHAT they carry) built from
@@ -295,13 +443,46 @@ object SimilarityQueries extends graft.QueryModule {
     // fully oracle-backed (q84's float tier stays production, its recall
     // measured). Scan shape identical to the float tier: hash join on
     // centroid_id, 8 ints per scanned row.
-    "q141_ivfpq_portable" -> ((s, dir) => {
+    Entry("q141_ivfpq_portable", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       graft.similarity.Pq.ivfAdcPortableTopK(emb.where(col("vec_id") < 20), emb,
           "vec_id", "embedding", k = 10, nCentroids = 16, nProbe = 4,
           m = 8, kCent = 16)
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      // PORTABLE IVF-PQ (the composed architecture under a full oracle):
+      // q41's Mix64 cell chain prunes WHICH rows (cc/qc), q93's integer
+      // quantizer codes WHAT they carry (pqcode), and the ADC distance is
+      // the exact integer L2 between the quantized query dims and the
+      // codeword each code selects — summed per (query, neighbor) over the
+      // probed cells only, ranked (add2, id): a bit-portable total order,
+      // so ranks replay exactly (cell assignment stays the q41 rank-only
+      // argument). The unused `ivf` CTE from the shared chain is never
+      // referenced, hence never evaluated.
+      s"""WITH $ivfSql,
+         |$pqPortableSql,
+         |adist AS (
+         |  SELECT q.vec_id AS query_id, q.d // 8 AS mi, c.j,
+         |    sum((q.qv - c.qc) * (q.qv - c.qc)) AS d2
+         |  FROM (SELECT vec_id, d, qv FROM pqdv WHERE vec_id < 20) q
+         |  JOIN pqcb c ON c.d = q.d
+         |  GROUP BY 1, 2, 3),
+         |nnd AS (
+         |  SELECT p.query_id, cc.neighbor_id, sum(a.d2) AS add2
+         |  FROM qc p
+         |  JOIN cc ON cc.centroid_id = p.centroid_id
+         |  JOIN pqcode cd ON cd.vec_id = cc.neighbor_id
+         |  JOIN adist a ON a.query_id = p.query_id AND a.mi = cd.mi AND a.j = cd.j
+         |  WHERE p.query_id <> cc.neighbor_id
+         |  GROUP BY 1, 2),
+         |rankedpq AS (
+         |  SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id
+         |      ORDER BY add2, neighbor_id) AS rank
+         |  FROM nnd)
+         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id
+         |FROM rankedpq WHERE rank <= 10
+         |ORDER BY query_id, rank""".stripMargin)),
 
     // ANN INDEX MAINTENANCE (round 15 — the q214 lifecycle for the
     // VECTOR index family; judge r14 Next #3's "living model table"
@@ -320,7 +501,7 @@ object SimilarityQueries extends graft.QueryModule {
     // from the source table (A-third centroids, membership A∪B∖deleted),
     // so a leaked deleted vector, a lost append, a quantizer re-derive
     // or any Parquet drift reddens the row.
-    "q215_ann_index_maintain" -> ((s, dir) => {
+    Entry("q215_ann_index_maintain", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
       val s1 = maxId / 3 + 1
@@ -351,7 +532,45 @@ object SimilarityQueries extends graft.QueryModule {
           s.read.parquet(s"$base/cells_v2"), "vec_id", "embedding",
           k = 10, nProbe = 4, centroids = cents)
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      // the maintained-index chain replayed from the source table: the
+      // coarse quantizer derives from corpus third A ONLY (the stored
+      // model's provenance), cell membership is A∪B minus the deletion
+      // ledger, queries probe their 4 nearest cells — serve-after-
+      // maintenance must equal the from-scratch derivation
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+         |           FROM embeddings),
+         |sp AS (SELECT (max(vec_id) // 3 + 1) AS s1,
+         |              ((2 * max(vec_id)) // 3 + 1) AS s2 FROM embeddings),
+         |cent AS (
+         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
+         |    emb AS cvec
+         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
+         |        FROM e CROSS JOIN sp WHERE vec_id < sp.s1
+         |        ORDER BY coord, vec_id LIMIT 16) t),
+         |cc AS (
+         |  SELECT vec_id AS neighbor_id, emb AS cv, centroid_id FROM (
+         |    SELECT e.vec_id, e.emb, c.centroid_id,
+         |      row_number() OVER (PARTITION BY e.vec_id
+         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
+         |    FROM e CROSS JOIN sp CROSS JOIN cent c
+         |    WHERE e.vec_id < sp.s2 AND e.vec_id % 7 <> 3) t WHERE crank <= 1),
+         |qc AS (
+         |  SELECT vec_id AS query_id, emb AS qv, centroid_id FROM (
+         |    SELECT e.vec_id, e.emb, c.centroid_id,
+         |      row_number() OVER (PARTITION BY e.vec_id
+         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
+         |    FROM e CROSS JOIN cent c WHERE e.vec_id < 20) t WHERE crank <= 4),
+         |ivfm AS (
+         |  SELECT query_id, neighbor_id, rank FROM (
+         |    SELECT qc.query_id, cc.neighbor_id,
+         |      row_number() OVER (PARTITION BY qc.query_id
+         |        ORDER BY list_cosine_similarity(qc.qv, cc.cv) DESC, cc.neighbor_id) AS rank
+         |    FROM qc JOIN cc USING (centroid_id)
+         |    WHERE qc.query_id <> cc.neighbor_id) t
+         |  WHERE rank <= 10)
+         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM ivfm
+         |ORDER BY query_id, rank""".stripMargin)),
 
     // IVF DRIFT INSTRUMENT (round 16, judge r15 Next #4a): q215's
     // maintenance deliberately never retrains ("appends never shift
@@ -368,7 +587,7 @@ object SimilarityQueries extends graft.QueryModule {
     // rollup cross-joins a 1-row total. Empty cells stay visible (LEFT
     // join from the quantizer) — a cell whose members all deleted is
     // exactly what the gauge must show.
-    "q223_ivf_drift" -> ((s, dir) => {
+    Entry("q223_ivf_drift", (s, dir) => {
       import graft.similarity.Ann
       val emb = t(s, dir, "embeddings")
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
@@ -394,7 +613,42 @@ object SimilarityQueries extends graft.QueryModule {
           expr("n_v2 * 1000000 div total").as("share_ppm"),
           (col("n_v2") * col("n_cells") > col("total") * 2).as("over_2x_mean"))
         .orderBy("centroid_id")
-    }),
+    }, Some(
+      // the drift gauge replayed exactly: A-third sampled centroids, ONE
+      // assignment pass over A∪B, v1/v2 populations as filtered counts,
+      // integer ppm share and the over-2×-mean flag — all integer/boolean
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+         |           FROM embeddings),
+         |sp AS (SELECT (max(vec_id) // 3 + 1) AS s1,
+         |              ((2 * max(vec_id)) // 3 + 1) AS s2 FROM embeddings),
+         |cent AS (
+         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
+         |    emb AS cvec
+         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
+         |        FROM e CROSS JOIN sp WHERE vec_id < sp.s1
+         |        ORDER BY coord, vec_id LIMIT 16) t),
+         |asg AS (
+         |  SELECT vec_id, centroid_id FROM (
+         |    SELECT e.vec_id, c.centroid_id,
+         |      row_number() OVER (PARTITION BY e.vec_id
+         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
+         |    FROM e CROSS JOIN sp CROSS JOIN cent c
+         |    WHERE e.vec_id < sp.s2) t WHERE crank <= 1),
+         |cs AS (
+         |  SELECT c.centroid_id,
+         |    CAST(coalesce(count(a.vec_id) FILTER (WHERE a.vec_id < sp.s1), 0)
+         |      AS BIGINT) AS n_v1,
+         |    CAST(coalesce(count(a.vec_id) FILTER (WHERE a.vec_id % 7 <> 3), 0)
+         |      AS BIGINT) AS n_v2
+         |  FROM cent c CROSS JOIN sp LEFT JOIN asg a USING (centroid_id)
+         |  GROUP BY c.centroid_id),
+         |tt AS (SELECT sum(n_v2) AS total, CAST(count(*) AS BIGINT) AS n_cells
+         |       FROM cs)
+         |SELECT centroid_id, n_v1, n_v2,
+         |  CAST(n_v2 * 1000000 // total AS BIGINT) AS share_ppm,
+         |  n_v2 * n_cells > total * 2 AS over_2x_mean
+         |FROM cs CROSS JOIN tt
+         |ORDER BY centroid_id""".stripMargin)),
 
     // IVF REBALANCE (round 16, judge r15 Next #4b — the Layout.compact
     // discipline for the vector family): the maintenance op the q223
@@ -414,7 +668,7 @@ object SimilarityQueries extends graft.QueryModule {
     // +0.065–0.115 recall with wide margin over both booleans; the
     // chain is seeded, so per SF each recall is a constant of the code,
     // not a sample — the 0.3 floor is regression detection).
-    "q224_ivf_rebalance" -> ((s, dir) => {
+    Entry("q224_ivf_rebalance", (s, dir) => {
       import graft.similarity.Ann
       val emb = t(s, dir, "embeddings")
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
@@ -480,7 +734,14 @@ object SimilarityQueries extends graft.QueryModule {
           lit(shape).as("shape_ok"),
           (hits(after) >= hits(before)).as("rebalance_recall_ge_before"),
           (hits(after) * 10 >= lit(nTruth) * 3).as("recall_floor_03"))
-    }),
+    }, Some(
+      // const-oracle guarantee row: the retrain-and-swap maintenance must
+      // conserve membership, keep serve structure intact, and match-or-beat
+      // the pre-rebalance recall at the pinned 16/4 point (measured
+      // headroom per SF in the q224 scaladoc)
+      """SELECT CAST(20 AS BIGINT) AS n_queries,
+        |  true AS membership_conserved, true AS shape_ok,
+        |  true AS rebalance_recall_ge_before, true AS recall_floor_03""".stripMargin)),
 
     // IVF RECALL/COST CURVE (judge r8 #5): q47 measures recall at ONE
     // config (16 cells / 4 probes → ~0.4 on these near-random
@@ -488,12 +749,68 @@ object SimilarityQueries extends graft.QueryModule {
     // accuracy/cost tradeoff is driver-tracked data. The top level
     // probes every cell, so its recall row must be exactly 1.0 — an
     // end-to-end self-check of the IVF plumbing.
-    "q140_ivf_recall_curve" -> ((s, dir) => {
+    Entry("q140_ivf_recall_curve", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.ivfRecallCurve(emb.where(col("vec_id") < 20), emb,
         "vec_id", "embedding", k = 10, nCentroids = 16,
         probes = Seq(1, 2, 4, 8, 12, 16))
-    }),
+    }, Some(
+      // the probe sweep: qca ranks ALL cells per query; a candidate row
+      // joins every probe level >= its cell rank; per-level top-10 vs the
+      // exact brute force. n_true = 10 per query (count DISTINCT stays
+      // join-local — the Spark side computes it the same way, no scalar
+      // cross join on either engine).
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+         |cent AS (
+         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
+         |    emb AS cvec
+         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
+         |        FROM e ORDER BY coord, vec_id LIMIT 16) t),
+         |cc AS (
+         |  SELECT vec_id AS neighbor_id, emb AS cv, centroid_id FROM (
+         |    SELECT e.vec_id, e.emb, c.centroid_id,
+         |      row_number() OVER (PARTITION BY e.vec_id
+         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
+         |    FROM e CROSS JOIN cent c) t WHERE crank <= 1),
+         |qca AS (
+         |  SELECT vec_id AS query_id, emb AS qv, centroid_id, crank FROM (
+         |    SELECT e.vec_id, e.emb, c.centroid_id,
+         |      row_number() OVER (PARTITION BY e.vec_id
+         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
+         |    FROM e CROSS JOIN cent c WHERE e.vec_id < 20) t),
+         |bf AS (
+         |  SELECT query_id, neighbor_id FROM (
+         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY q.vec_id
+         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
+         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
+         |  WHERE rank <= 10),
+         |cand AS (
+         |  SELECT l.n_probe, q.query_id, c.neighbor_id,
+         |    list_cosine_similarity(q.qv, c.cv) AS sim
+         |  FROM qca q JOIN cc c USING (centroid_id)
+         |  JOIN (SELECT CAST(unnest([1, 2, 4, 8, 12, 16]) AS INT) AS n_probe) l
+         |    ON q.crank <= l.n_probe
+         |  WHERE q.query_id <> c.neighbor_id),
+         |ranked AS (
+         |  SELECT n_probe, query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY n_probe, query_id
+         |      ORDER BY sim DESC, neighbor_id) AS rank
+         |  FROM cand),
+         |hits AS (
+         |  SELECT r.n_probe, CAST(count(*) AS BIGINT) AS n_hit
+         |  FROM ranked r JOIN bf USING (query_id, neighbor_id)
+         |  WHERE r.rank <= 10 GROUP BY r.n_probe),
+         |base AS (
+         |  SELECT n_probe, CAST(count(*) AS BIGINT) AS rows_scanned,
+         |    CAST(count(DISTINCT query_id) * 10 AS BIGINT) AS n_true
+         |  FROM cand GROUP BY n_probe)
+         |SELECT base.n_probe, base.n_true,
+         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / base.n_true AS recall,
+         |  base.rows_scanned
+         |FROM base LEFT JOIN hits h USING (n_probe)
+         |ORDER BY n_probe""".stripMargin)),
 
     // PRODUCTION-PATH EQUIVALENCE for the hyperplane family (judge r8 #3,
     // the q137/q138 pattern): near-dup pairs via banded q42 (xxhash-mixed
@@ -505,7 +822,7 @@ object SimilarityQueries extends graft.QueryModule {
     // w.p. < 1e-3, and misses are ruled out empirically at all SFs) and
     // the verify kills everything else, so the sets coincide and the
     // oracle asserts it against the DuckDB-computed portable set.
-    "q139_hyperplane_path_equiv" -> ((s, dir) => {
+    Entry("q139_hyperplane_path_equiv", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       DedupQueries.pairPathAgreement(
         Ann.hyperplanePairsLsh(emb, col("vec_id"), col("embedding"),
@@ -514,7 +831,44 @@ object SimilarityQueries extends graft.QueryModule {
         Ann.hyperplanePairsLsh(emb, col("vec_id"), col("embedding"),
           v => graft.functions.HyperplanePortable.signature(v, nBits = 32, seed = 42L),
           threshold = 0.4))
-    }),
+    }, Some(
+      // the portable signature chain banded 8×4 bits, candidates cosine-
+      // verified at 0.4 (q24's margin note applies: ≥1e-5 to every pair at
+      // all SFs), counted — the expected value of BOTH Spark hyperplane
+      // paths in q139's agreement row. Candidates come from a GROUP-THEN-
+      // EXPAND (bucket id-lists → in-list pair expansion), NOT a banded
+      // self-join: DuckDB 1.0.0 inlines CTEs, and self-joining the deep
+      // hsig chain aborts with thread-local allocation failures at high
+      // thread counts (reproduced at 32 threads; fine at 8) — the single-
+      // reference formulation sidesteps the bug at any thread count.
+      s"""WITH $hyperplaneSigSql,
+         |banded AS (
+         |  SELECT vec_id, CAST(b.band AS INT) AS band,
+         |    (sig // (CAST(1 AS BIGINT) << CAST(b.band * 4 AS INT))) % 16 AS bkey
+         |  FROM hsig, range(0, 8) b(band)),
+         |cg AS (
+         |  SELECT list(vec_id ORDER BY vec_id) AS vs
+         |  FROM banded GROUP BY band, bkey),
+         |pl AS (
+         |  SELECT flatten(list_transform(vs, a ->
+         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
+         |  FROM cg),
+         |cand AS (
+         |  SELECT DISTINCT p.a AS a_id, p.b AS b_id
+         |  FROM pl, unnest(pl.prs) AS t(p)),
+         |hp_pairs AS (
+         |  SELECT c.a_id, c.b_id
+         |  FROM cand c
+         |  JOIN embeddings ea ON ea.vec_id = c.a_id
+         |  JOIN embeddings eb ON eb.vec_id = c.b_id
+         |  WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
+         |          CAST(eb.embedding AS DOUBLE[])) >= 0.4)
+         |SELECT CAST(count(*) AS BIGINT) AS n_prod,
+         |  CAST(count(*) AS BIGINT) AS n_ref,
+         |  CAST(count(*) AS BIGINT) AS n_both,
+         |  CAST(0 AS BIGINT) AS n_only_prod,
+         |  CAST(0 AS BIGINT) AS n_only_ref
+         |FROM hp_pairs""".stripMargin)),
 
     // DRIVER-CHECKED GUARANTEE for the float ANN tiers (judge r10 Next
     // #4): q79/q80/q84 are rows-only by design — the float-argmin encode
@@ -530,7 +884,7 @@ object SimilarityQueries extends graft.QueryModule {
     // detection, not a statistical bet. All frames here are the tiers'
     // own bounded top-k outputs (≤ |Q|·k rows), so the assembly
     // crossJoins are 1-row scalar broadcasts.
-    "q182_ann_float_guarantee" -> ((s, dir) => {
+    Entry("q182_ann_float_guarantee", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       // bf is referenced THREE times (two tier semi-joins + n_true) and
@@ -580,7 +934,14 @@ object SimilarityQueries extends graft.QueryModule {
           col("ivfpq_shape_ok"),
           (col("ivfpq_hits") * 10L >= col("n_true") * 3L).as("ivfpq_recall_ok"),
           (col("n_true") === col("pq_nq") * 10L).as("truth_shape_ok"))
-    }),
+    }, Some(
+      // const-oracle: every guarantee boolean must be true and the query
+      // set is the fixed vec_id < 20 slice at every SF (see q182 scaladoc
+      // for the measured recall headroom behind the 0.5/0.3 floors)
+      """SELECT CAST(20 AS BIGINT) AS n_queries,
+        |  true AS pq_shape_ok, true AS pq_recall_ok,
+        |  true AS ivfpq_shape_ok, true AS ivfpq_recall_ok,
+        |  true AS truth_shape_ok""".stripMargin)),
 
     // TRAINED-IVF GUARANTEE (round 12, judge r11 Next #4): ivfTopK's
     // trainIters path (spherical-k-means-refined coarse quantizer,
@@ -601,7 +962,7 @@ object SimilarityQueries extends graft.QueryModule {
     // the twice-referenced trained tier (the sampled tier is consumed
     // exactly once — no persist), released by the SparkEntry.queries
     // clearCache contract.
-    "q192_ann_trained_ivf" -> ((s, dir) => {
+    Entry("q192_ann_trained_ivf", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.where(col("vec_id") < 20)
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -640,7 +1001,14 @@ object SimilarityQueries extends graft.QueryModule {
           (col("trained_hits") * 100L >= col("n_true") * 35L)
             .as("trained_recall_floor"),
           (col("n_true") === col("nq") * 10L).as("truth_shape_ok"))
-    }),
+    }, Some(
+      // const-oracle guarantee row: trained coarse quantizer must keep full
+      // output structure and match-or-beat the sampled quantizer's recall
+      // at the pinned 16/4 operating point (headroom measured per SF in the
+      // q192 scaladoc)
+      """SELECT CAST(20 AS BIGINT) AS n_queries,
+        |  true AS trained_shape_ok, true AS trained_ge_sampled,
+        |  true AS trained_recall_floor, true AS truth_shape_ok""".stripMargin)),
 
     // VECTOR MODELS AS DATA (round 13, judge r12 Next #5): q184/q191
     // established vocab-as-data for text; this is the vector twin — the
@@ -654,7 +1022,7 @@ object SimilarityQueries extends graft.QueryModule {
     // sinks live under java.io.tmpdir with the OpsQueries.suffix
     // convention (driver-local here; a shared FS at cluster scale),
     // mode=overwrite so bench reps replay cleanly.
-    "q200_vector_model_store" -> ((s, dir) => {
+    Entry("q200_vector_model_store", (s, dir) => {
       val emb = t(s, dir, "embeddings")
       def sink(name: String): String =
         new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -710,7 +1078,15 @@ object SimilarityQueries extends graft.QueryModule {
         .select(col("n_vectors"), col("n_centroids"),
           lit(m.toLong * kCw).as("n_codebook_entries"),
           col("assign_match"), col("topk_match"), col("codes_match"))
-    }))
+    }, Some(
+      // guarantee row: the stored model must serve IDENTICALLY to the
+      // in-memory one — counts are structural (corpus size, 16 centroids,
+      // 8×16 codebook rows), equality booleans machine-checked in-engine
+      """SELECT CAST(count(*) AS BIGINT) AS n_vectors,
+        |  CAST(16 AS BIGINT) AS n_centroids,
+        |  CAST(128 AS BIGINT) AS n_codebook_entries,
+        |  true AS assign_match, true AS topk_match, true AS codes_match
+        |FROM embeddings""".stripMargin)))
 
   /** The splitmix64 chain as DuckDB SQL over normalized HUGEINT (add and
     * multiply wrap mod 2^64; >>> n as unsigned // 2^n; xor on the BIGINT
@@ -793,422 +1169,6 @@ object SimilarityQueries extends graft.QueryModule {
        |  SELECT vec_id,
        |    CAST(sum(CASE WHEN dot >= 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INT)) ELSE 0 END) AS BIGINT) AS sig
        |  FROM dots GROUP BY vec_id)""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    // const-oracle: every guarantee boolean must be true and the query
-    // set is the fixed vec_id < 20 slice at every SF (see q182 scaladoc
-    // for the measured recall headroom behind the 0.5/0.3 floors)
-    "q182_ann_float_guarantee" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries,
-        |  true AS pq_shape_ok, true AS pq_recall_ok,
-        |  true AS ivfpq_shape_ok, true AS ivfpq_recall_ok,
-        |  true AS truth_shape_ok""".stripMargin,
-
-    // const-oracle guarantee row: trained coarse quantizer must keep full
-    // output structure and match-or-beat the sampled quantizer's recall
-    // at the pinned 16/4 operating point (headroom measured per SF in the
-    // q192 scaladoc)
-    "q192_ann_trained_ivf" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries,
-        |  true AS trained_shape_ok, true AS trained_ge_sampled,
-        |  true AS trained_recall_floor, true AS truth_shape_ok""".stripMargin,
-
-    // guarantee row: the stored model must serve IDENTICALLY to the
-    // in-memory one — counts are structural (corpus size, 16 centroids,
-    // 8×16 codebook rows), equality booleans machine-checked in-engine
-    "q200_vector_model_store" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-        |  CAST(16 AS BIGINT) AS n_centroids,
-        |  CAST(128 AS BIGINT) AS n_codebook_entries,
-        |  true AS assign_match, true AS topk_match, true AS codes_match
-        |FROM embeddings""".stripMargin,
-
-    // the per-vector fold via list ops (no unnest — a NULL/empty
-    // embedding must stay a row with dim 0, mirroring explode_outer),
-    // same 2^20 floor. dim counts NON-NULL elements (len() counts NULL
-    // list elements; Spark's count(x) over the explode does not — a
-    // vector with NULL elements must land in n_bad_dim on BOTH engines,
-    // advisor r8), and the norm skips them the way sum(q·q) does.
-    "q134_embedding_audit" ->
-      """WITH pv AS (
-        |  SELECT vec_id, label,
-        |    CAST(coalesce(len(list_filter(embedding, x -> x IS NOT NULL)), 0)
-        |      AS BIGINT) AS dim,
-        |    CAST(coalesce(list_aggregate(
-        |      list_transform(
-        |        list_transform(list_filter(embedding, x -> x IS NOT NULL),
-        |          x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)),
-        |        q -> q * q), 'sum'), 0) AS BIGINT) AS norm2_q
-        |  FROM embeddings)
-        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(count(*) FILTER (dim <> 64) AS BIGINT) AS n_bad_dim,
-        |  min(norm2_q) AS min_norm2_q, max(norm2_q) AS max_norm2_q,
-        |  CAST(sum(norm2_q) // count(*) AS BIGINT) AS mean_norm2_q
-        |FROM pv GROUP BY label ORDER BY label""".stripMargin,
-
-    // plane components c(j,i) = signed top-32 of splitmix64(42 ^ j<<32 ^ i);
-    // quantization floor(x·2^20) is exact in double; integer dot sums are
-    // order-free so GROUP BY may reassociate freely (see HyperplanePortable)
-    "q64_hyperplane_portable" ->
-      s"""WITH $hyperplaneSigSql
-         |SELECT vec_id, sig FROM hsig ORDER BY vec_id""".stripMargin,
-
-    // the first 16 planes of the same splitmix component chain, raw dots
-    "q158_random_projection" ->
-      s"""WITH rpcomp AS (
-         |  SELECT j, i, $splitmixSql
-         |  FROM range(0, 16) tj(j), range(0, 64) ti(i)),
-         |rpdv AS (
-         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
-         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 1048576) AS BIGINT) AS q
-         |  FROM embeddings)
-         |SELECT d.vec_id, CAST(c.j AS BIGINT) AS j,
-         |  CAST(sum(d.q * c.comp) AS BIGINT) AS proj
-         |FROM rpdv d JOIN rpcomp c ON c.i = d.i
-         |GROUP BY 1, 2 ORDER BY vec_id, j""".stripMargin,
-
-    // the portable signature chain banded 8×4 bits, candidates cosine-
-    // verified at 0.4 (q24's margin note applies: ≥1e-5 to every pair at
-    // all SFs), counted — the expected value of BOTH Spark hyperplane
-    // paths in q139's agreement row. Candidates come from a GROUP-THEN-
-    // EXPAND (bucket id-lists → in-list pair expansion), NOT a banded
-    // self-join: DuckDB 1.0.0 inlines CTEs, and self-joining the deep
-    // hsig chain aborts with thread-local allocation failures at high
-    // thread counts (reproduced at 32 threads; fine at 8) — the single-
-    // reference formulation sidesteps the bug at any thread count.
-    "q139_hyperplane_path_equiv" ->
-      s"""WITH $hyperplaneSigSql,
-         |banded AS (
-         |  SELECT vec_id, CAST(b.band AS INT) AS band,
-         |    (sig // (CAST(1 AS BIGINT) << CAST(b.band * 4 AS INT))) % 16 AS bkey
-         |  FROM hsig, range(0, 8) b(band)),
-         |cg AS (
-         |  SELECT list(vec_id ORDER BY vec_id) AS vs
-         |  FROM banded GROUP BY band, bkey),
-         |pl AS (
-         |  SELECT flatten(list_transform(vs, a ->
-         |    list_transform(list_filter(vs, b -> b > a), b -> {'a': a, 'b': b}))) AS prs
-         |  FROM cg),
-         |cand AS (
-         |  SELECT DISTINCT p.a AS a_id, p.b AS b_id
-         |  FROM pl, unnest(pl.prs) AS t(p)),
-         |hp_pairs AS (
-         |  SELECT c.a_id, c.b_id
-         |  FROM cand c
-         |  JOIN embeddings ea ON ea.vec_id = c.a_id
-         |  JOIN embeddings eb ON eb.vec_id = c.b_id
-         |  WHERE list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-         |          CAST(eb.embedding AS DOUBLE[])) >= 0.4)
-         |SELECT CAST(count(*) AS BIGINT) AS n_prod,
-         |  CAST(count(*) AS BIGINT) AS n_ref,
-         |  CAST(count(*) AS BIGINT) AS n_both,
-         |  CAST(0 AS BIGINT) AS n_only_prod,
-         |  CAST(0 AS BIGINT) AS n_only_ref
-         |FROM hp_pairs""".stripMargin,
-
-    "q40_ann_topk" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |q AS (SELECT * FROM e WHERE vec_id < 20),
-        |sims AS (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY q.vec_id
-        |      ORDER BY list_cosine_similarity(q.emb, e.emb) DESC, e.vec_id) AS rank
-        |  FROM q JOIN e ON q.vec_id <> e.vec_id)
-        |SELECT query_id, rank, neighbor_id FROM sims WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q41_ann_ivf" ->
-      s"""WITH $ivfSql
-         |SELECT query_id, rank, neighbor_id FROM ivf
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // the drift gauge replayed exactly: A-third sampled centroids, ONE
-    // assignment pass over A∪B, v1/v2 populations as filtered counts,
-    // integer ppm share and the over-2×-mean flag — all integer/boolean
-    "q223_ivf_drift" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         |sp AS (SELECT (max(vec_id) // 3 + 1) AS s1,
-         |              ((2 * max(vec_id)) // 3 + 1) AS s2 FROM embeddings),
-         |cent AS (
-         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
-         |    emb AS cvec
-         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
-         |        FROM e CROSS JOIN sp WHERE vec_id < sp.s1
-         |        ORDER BY coord, vec_id LIMIT 16) t),
-         |asg AS (
-         |  SELECT vec_id, centroid_id FROM (
-         |    SELECT e.vec_id, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
-         |    FROM e CROSS JOIN sp CROSS JOIN cent c
-         |    WHERE e.vec_id < sp.s2) t WHERE crank <= 1),
-         |cs AS (
-         |  SELECT c.centroid_id,
-         |    CAST(coalesce(count(a.vec_id) FILTER (WHERE a.vec_id < sp.s1), 0)
-         |      AS BIGINT) AS n_v1,
-         |    CAST(coalesce(count(a.vec_id) FILTER (WHERE a.vec_id % 7 <> 3), 0)
-         |      AS BIGINT) AS n_v2
-         |  FROM cent c CROSS JOIN sp LEFT JOIN asg a USING (centroid_id)
-         |  GROUP BY c.centroid_id),
-         |tt AS (SELECT sum(n_v2) AS total, CAST(count(*) AS BIGINT) AS n_cells
-         |       FROM cs)
-         |SELECT centroid_id, n_v1, n_v2,
-         |  CAST(n_v2 * 1000000 // total AS BIGINT) AS share_ppm,
-         |  n_v2 * n_cells > total * 2 AS over_2x_mean
-         |FROM cs CROSS JOIN tt
-         |ORDER BY centroid_id""".stripMargin,
-
-    // const-oracle guarantee row: the retrain-and-swap maintenance must
-    // conserve membership, keep serve structure intact, and match-or-beat
-    // the pre-rebalance recall at the pinned 16/4 point (measured
-    // headroom per SF in the q224 scaladoc)
-    "q224_ivf_rebalance" ->
-      """SELECT CAST(20 AS BIGINT) AS n_queries,
-        |  true AS membership_conserved, true AS shape_ok,
-        |  true AS rebalance_recall_ge_before, true AS recall_floor_03""".stripMargin,
-
-    // the maintained-index chain replayed from the source table: the
-    // coarse quantizer derives from corpus third A ONLY (the stored
-    // model's provenance), cell membership is A∪B minus the deletion
-    // ledger, queries probe their 4 nearest cells — serve-after-
-    // maintenance must equal the from-scratch derivation
-    "q215_ann_index_maintain" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         |sp AS (SELECT (max(vec_id) // 3 + 1) AS s1,
-         |              ((2 * max(vec_id)) // 3 + 1) AS s2 FROM embeddings),
-         |cent AS (
-         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
-         |    emb AS cvec
-         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
-         |        FROM e CROSS JOIN sp WHERE vec_id < sp.s1
-         |        ORDER BY coord, vec_id LIMIT 16) t),
-         |cc AS (
-         |  SELECT vec_id AS neighbor_id, emb AS cv, centroid_id FROM (
-         |    SELECT e.vec_id, e.emb, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
-         |    FROM e CROSS JOIN sp CROSS JOIN cent c
-         |    WHERE e.vec_id < sp.s2 AND e.vec_id % 7 <> 3) t WHERE crank <= 1),
-         |qc AS (
-         |  SELECT vec_id AS query_id, emb AS qv, centroid_id FROM (
-         |    SELECT e.vec_id, e.emb, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
-         |    FROM e CROSS JOIN cent c WHERE e.vec_id < 20) t WHERE crank <= 4),
-         |ivfm AS (
-         |  SELECT query_id, neighbor_id, rank FROM (
-         |    SELECT qc.query_id, cc.neighbor_id,
-         |      row_number() OVER (PARTITION BY qc.query_id
-         |        ORDER BY list_cosine_similarity(qc.qv, cc.cv) DESC, cc.neighbor_id) AS rank
-         |    FROM qc JOIN cc USING (centroid_id)
-         |    WHERE qc.query_id <> cc.neighbor_id) t
-         |  WHERE rank <= 10)
-         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM ivfm
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // majority vote over the same ivf CTE; rn-ordering = (votes DESC,
-    // label ASC) is exactly the Spark side's max_by (votes, -label) struct
-    "q106_knn_classify" ->
-      s"""WITH $ivfSql,
-         |lab AS (SELECT vec_id, label FROM embeddings),
-         |votes AS (SELECT i.query_id, l.label, count(*) AS votes
-         |          FROM ivf i JOIN lab l ON l.vec_id = i.neighbor_id
-         |          GROUP BY 1, 2),
-         |pred AS (SELECT query_id, label AS predicted, votes FROM (
-         |           SELECT *, row_number() OVER (PARTITION BY query_id
-         |             ORDER BY votes DESC, label) AS rn FROM votes) t
-         |         WHERE rn = 1)
-         |SELECT p.query_id, p.predicted, p.votes, q.label AS actual,
-         |       p.predicted = q.label AS correct
-         |FROM pred p JOIN lab q ON q.vec_id = p.query_id
-         |ORDER BY p.query_id""".stripMargin,
-
-    // integer-quantized per-subspace argmin (m=8 → sub=8, k=16): dims join
-    // codeword dims 1:1 and group by subspace d//8, so d2 is the exact
-    // integer L2 between the vector's subspace slice and codeword j's
-    "q93_pq_portable" ->
-      s"""WITH $pqPortableSql
-         |SELECT vec_id, CAST(mi AS INT) AS mi, CAST(j AS INT) AS code
-         |FROM pqcode ORDER BY vec_id, mi""".stripMargin,
-
-    // PORTABLE IVF-PQ (the composed architecture under a full oracle):
-    // q41's Mix64 cell chain prunes WHICH rows (cc/qc), q93's integer
-    // quantizer codes WHAT they carry (pqcode), and the ADC distance is
-    // the exact integer L2 between the quantized query dims and the
-    // codeword each code selects — summed per (query, neighbor) over the
-    // probed cells only, ranked (add2, id): a bit-portable total order,
-    // so ranks replay exactly (cell assignment stays the q41 rank-only
-    // argument). The unused `ivf` CTE from the shared chain is never
-    // referenced, hence never evaluated.
-    "q141_ivfpq_portable" ->
-      s"""WITH $ivfSql,
-         |$pqPortableSql,
-         |adist AS (
-         |  SELECT q.vec_id AS query_id, q.d // 8 AS mi, c.j,
-         |    sum((q.qv - c.qc) * (q.qv - c.qc)) AS d2
-         |  FROM (SELECT vec_id, d, qv FROM pqdv WHERE vec_id < 20) q
-         |  JOIN pqcb c ON c.d = q.d
-         |  GROUP BY 1, 2, 3),
-         |nnd AS (
-         |  SELECT p.query_id, cc.neighbor_id, sum(a.d2) AS add2
-         |  FROM qc p
-         |  JOIN cc ON cc.centroid_id = p.centroid_id
-         |  JOIN pqcode cd ON cd.vec_id = cc.neighbor_id
-         |  JOIN adist a ON a.query_id = p.query_id AND a.mi = cd.mi AND a.j = cd.j
-         |  WHERE p.query_id <> cc.neighbor_id
-         |  GROUP BY 1, 2),
-         |rankedpq AS (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY add2, neighbor_id) AS rank
-         |  FROM nnd)
-         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id
-         |FROM rankedpq WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q112_pq_rerank" ->
-      s"""WITH $rerankSql
-         |SELECT query_id, rank, neighbor_id FROM rer WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // the adc chain + per-level re-rank: each candidate joins every level
-    // >= its ADC rank, exact cosine ranks within (level, query), recall
-    // totals vs the exact brute force
-    "q142_rerank_curve" ->
-      s"""WITH ${rerankAdcSql}cand142 AS (
-         |  SELECT query_id, neighbor_id, crank FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY add2, neighbor_id) AS crank FROM adc) t
-         |  WHERE crank <= 400),
-         |lv AS (SELECT CAST(unnest([25, 50, 100, 200, 400]) AS INT) AS n_cand),
-         |rr AS (
-         |  SELECT l.n_cand, c.query_id, c.neighbor_id,
-         |    row_number() OVER (PARTITION BY l.n_cand, c.query_id
-         |      ORDER BY list_cosine_similarity(qe.emb, ne.emb) DESC,
-         |        c.neighbor_id) AS rank
-         |  FROM cand142 c JOIN lv l ON c.crank <= l.n_cand
-         |  JOIN e qe ON qe.vec_id = c.query_id
-         |  JOIN e ne ON ne.vec_id = c.neighbor_id),
-         |bf142 AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
-         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
-         |  WHERE rank <= 10),
-         |hits AS (
-         |  SELECT rr.n_cand, CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM rr JOIN bf142 USING (query_id, neighbor_id)
-         |  WHERE rr.rank <= 10 GROUP BY rr.n_cand),
-         |base AS (
-         |  SELECT l.n_cand,
-         |    CAST(count(DISTINCT c.query_id) * 10 AS BIGINT) AS n_true
-         |  FROM cand142 c JOIN lv l ON c.crank <= l.n_cand
-         |  GROUP BY l.n_cand)
-         |SELECT base.n_cand, base.n_true,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / base.n_true AS recall
-         |FROM base LEFT JOIN hits h USING (n_cand)
-         |ORDER BY n_cand""".stripMargin,
-
-    "q113_rerank_recall" ->
-      s"""WITH $rerankSql,
-         |rr AS (SELECT query_id, neighbor_id FROM rer WHERE rank <= 10),
-         |bf AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
-         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
-         |  WHERE rank <= 10),
-         |hits AS (
-         |  SELECT bf.query_id, count(*) AS n_hit
-         |  FROM bf JOIN rr USING (query_id, neighbor_id) GROUP BY bf.query_id)
-         |SELECT b.query_id, b.n_true,
-         |  coalesce(h.n_hit, 0) AS n_hit,
-         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / CAST(b.n_true AS DOUBLE) AS recall
-         |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) b
-         |LEFT JOIN hits h ON b.query_id = h.query_id
-         |ORDER BY b.query_id""".stripMargin,
-
-    // the probe sweep: qca ranks ALL cells per query; a candidate row
-    // joins every probe level >= its cell rank; per-level top-10 vs the
-    // exact brute force. n_true = 10 per query (count DISTINCT stays
-    // join-local — the Spark side computes it the same way, no scalar
-    // cross join on either engine).
-    "q140_ivf_recall_curve" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |cent AS (
-         |  SELECT row_number() OVER (ORDER BY coord, vec_id) - 1 AS centroid_id,
-         |    emb AS cvec
-         |  FROM (SELECT vec_id, emb, ${OpsQueries.coordSql("vec_id")} AS coord
-         |        FROM e ORDER BY coord, vec_id LIMIT 16) t),
-         |cc AS (
-         |  SELECT vec_id AS neighbor_id, emb AS cv, centroid_id FROM (
-         |    SELECT e.vec_id, e.emb, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
-         |    FROM e CROSS JOIN cent c) t WHERE crank <= 1),
-         |qca AS (
-         |  SELECT vec_id AS query_id, emb AS qv, centroid_id, crank FROM (
-         |    SELECT e.vec_id, e.emb, c.centroid_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.emb, c.cvec) DESC, c.centroid_id) AS crank
-         |    FROM e CROSS JOIN cent c WHERE e.vec_id < 20) t),
-         |bf AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
-         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
-         |  WHERE rank <= 10),
-         |cand AS (
-         |  SELECT l.n_probe, q.query_id, c.neighbor_id,
-         |    list_cosine_similarity(q.qv, c.cv) AS sim
-         |  FROM qca q JOIN cc c USING (centroid_id)
-         |  JOIN (SELECT CAST(unnest([1, 2, 4, 8, 12, 16]) AS INT) AS n_probe) l
-         |    ON q.crank <= l.n_probe
-         |  WHERE q.query_id <> c.neighbor_id),
-         |ranked AS (
-         |  SELECT n_probe, query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY n_probe, query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rank
-         |  FROM cand),
-         |hits AS (
-         |  SELECT r.n_probe, CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM ranked r JOIN bf USING (query_id, neighbor_id)
-         |  WHERE r.rank <= 10 GROUP BY r.n_probe),
-         |base AS (
-         |  SELECT n_probe, CAST(count(*) AS BIGINT) AS rows_scanned,
-         |    CAST(count(DISTINCT query_id) * 10 AS BIGINT) AS n_true
-         |  FROM cand GROUP BY n_probe)
-         |SELECT base.n_probe, base.n_true,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / base.n_true AS recall,
-         |  base.rows_scanned
-         |FROM base LEFT JOIN hits h USING (n_probe)
-         |ORDER BY n_probe""".stripMargin,
-
-    "q47_ivf_recall" ->
-      s"""WITH $ivfSql,
-         |bf AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_cosine_similarity(q.emb, e2.emb) DESC, e2.vec_id) AS rank
-         |    FROM e q JOIN e e2 ON q.vec_id <> e2.vec_id WHERE q.vec_id < 20) t
-         |  WHERE rank <= 10),
-         |hits AS (
-         |  SELECT bf.query_id, count(*) AS n_hit
-         |  FROM bf JOIN ivf USING (query_id, neighbor_id) GROUP BY bf.query_id)
-         |SELECT b.query_id, b.n_true,
-         |  coalesce(h.n_hit, 0) AS n_hit,
-         |  CAST(coalesce(h.n_hit, 0) AS DOUBLE) / CAST(b.n_true AS DOUBLE) AS recall
-         |FROM (SELECT query_id, count(*) AS n_true FROM bf GROUP BY query_id) b
-         |LEFT JOIN hits h ON b.query_id = h.query_id
-         |ORDER BY b.query_id""".stripMargin)
 
   /** Shared IVF replay (16 Mix64-sampled centroids, nearest-cell
     * assignment, 4 probes, in-cell exact top-10) as DuckDB CTEs — the SQL

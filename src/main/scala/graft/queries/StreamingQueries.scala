@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Entry
+
 /** Sessionization and stream-shaped aggregations over `events`, in their
   * batch form (the driver's Verify is batch; StreamsSpec covers the
   * streaming execution of the same logic). All arithmetic is exact integer
@@ -277,9 +279,9 @@ object StreamingQueries extends graft.QueryModule {
     * "not yet optimized" #3, judge r17 Next #3 for the two-stream rows):
     * each feed is a deterministic function of (sfDir, code) and pure
     * harness plumbing — the MEASURED stream it drives runs live on every
-    * invocation, exactly like the onceScalars batch-truth discipline the
-    * q195/q202/q212/q156 rows already follow. In-memory and per-process
-    * (HarnessCache.onceValue): a fresh bench/verify run always re-collects
+    * invocation. In-memory and per-process (HarnessCache.onceValue, which
+    * also holds the rows' batch-truth scalars; the `feed_` prefix keeps
+    * the two key sets apart): a fresh bench/verify run always re-collects
     * from the parquet inputs. Callers must not mutate the returned array. */
   private def onceFeed[T <: AnyRef](key: String, dir: String)(compute: => T): T =
     graft.tools.HarnessCache.onceValue(
@@ -398,9 +400,9 @@ object StreamingQueries extends graft.QueryModule {
     (matches, abandoned)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // gap-based sessionization (batch form of Streams.sessionize)
-    "q50_sessionize" -> ((s, dir) => {
+    Entry("q50_sessionize", (s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts_us")
       eventsUs(s, dir)
         .select(col("user_id"), col("ts_us"))
@@ -416,22 +418,26 @@ object StreamingQueries extends graft.QueryModule {
           count(lit(1)).as("n_events"))
         .select("user_id", "session_start_us", "session_end_us", "n_events")
         .orderBy("user_id", "session_start_us")
-    }),
+    }, Some(sessionizeSql())),
 
     // epoch-anchored (Thursday) weekly windows per event type — the batch
     // twin of Streams.weeklyHistogram; pins window(ts,'7 days')'s anchor
-    "q51_weekly_windows" -> ((s, dir) =>
+    Entry("q51_weekly_windows", (s, dir) =>
       eventsUs(s, dir)
         .withColumn("ts", timestamp_micros(col("ts_us")))
         .groupBy(window(col("ts"), "7 days").as("wk"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("wk.start").cast("date").as("week_start"), col("event_type"), col("cnt"))
-        .orderBy("week_start", "event_type")),
+        .orderBy("week_start", "event_type"), Some(
+      """SELECT DATE '1970-01-01'
+        |    + CAST(floor(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) / 7.0) * 7 AS INT) AS week_start,
+        |  event_type, count(*) AS cnt
+        |FROM events GROUP BY 1, 2 ORDER BY week_start, event_type""".stripMargin)),
 
     // time-bounded click→purchase attribution join (batch form of
     // Streams.attributionJoin; StreamsSpec pins streaming ≡ batch). All
     // time arithmetic in exact integer µs via unix_micros.
-    "q54_attribution_join" -> ((s, dir) => {
+    Entry("q54_attribution_join", (s, dir) => {
       val e = eventsUs(s, dir)
         .withColumn("ts", timestamp_micros(col("ts_us")))
         .select("event_id", "user_id", "ts", "event_type")
@@ -440,7 +446,16 @@ object StreamingQueries extends graft.QueryModule {
           e.where(col("event_type") === "purchase"),
           maxGap = "6 hours")
         .orderBy("user_id", "click_id", "purchase_id")
-    }),
+    }, Some(
+      // same-user purchases at most 6 h after a click; DuckDB's epoch_us(ts)
+      // equals Spark's unix_micros µs exactly (both read the same µs parquet)
+      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+        |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
+        |FROM events c JOIN events p
+        |  ON c.user_id = p.user_id
+        | AND c.event_type = 'click' AND p.event_type = 'purchase'
+        | AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT
+        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin)),
 
     // STREAMING sessionization against q50's DuckDB oracle: the events
     // table replays through MemoryStream in event-time micro-batches
@@ -461,7 +476,7 @@ object StreamingQueries extends graft.QueryModule {
     // Oracle = the batch DISTINCT over the same sampled WHERE: the
     // "streaming dedup ≡ batch dedup" claim as a driver-checked row (the
     // stream twin of q20, the way q94 twins q59).
-    "q171_stream_dedup" -> ((s, dir) => {
+    Entry("q171_stream_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -491,7 +506,20 @@ object StreamingQueries extends graft.QueryModule {
           md5(concat_ws(";", sort_array(collect_list(col("h"))))).as("uniq_md5"))
         .select(lit(nIn).as("n_in"), col("n_unique"),
           (lit(nIn) - col("n_unique")).as("n_dupes"), col("uniq_md5"))
-    }),
+    }, Some(
+      // batch DISTINCT over the same sampled WHERE — n_in recomputed from
+      // the filter, survivors by sorted-hash md5
+      s"""WITH sampled AS (
+        |  SELECT doc_id, md5(text) AS h FROM documents
+        |  WHERE ${replayWhereSql("doc_id")}),
+        |fed AS (SELECT h FROM sampled
+        |        UNION ALL SELECT h FROM sampled WHERE doc_id % 4 = 0),
+        |u AS (SELECT DISTINCT h FROM sampled)
+        |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
+        |  CAST(count(*) AS BIGINT) AS n_unique,
+        |  CAST((SELECT count(*) FROM fed) - count(*) AS BIGINT) AS n_dupes,
+        |  md5(string_agg(h, ';' ORDER BY h)) AS uniq_md5
+        |FROM u""".stripMargin), replay = true),
 
     // STREAMING SPAN DEDUP (round 12) — q193's exact-substring operator in
     // stream form: window-fingerprint occurrences (Dedup.spanGrams, the
@@ -506,7 +534,7 @@ object StreamingQueries extends graft.QueryModule {
     // absorbed by the sink distinct. Stream-end dup set ≡ the batch
     // spanDups replay in DuckDB (count, doc spread, md5 of the
     // numerically-ordered occurrence list).
-    "q195_stream_span_dedup" -> ((s, dir) => {
+    Entry("q195_stream_span_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -524,7 +552,7 @@ object StreamingQueries extends graft.QueryModule {
       // conservation: the distinct dup set must be exactly the batch
       // operator's — deterministic batch truth, computed once per
       // (version, SF) (judge r16 Next #2, the q221/q225 truth discipline)
-      val expected = graft.tools.HarnessCache.onceScalars(
+      val expected = graft.tools.HarnessCache.onceValue(
         s"q195_truth${OpsQueries.suffix(dir)}") {
         Seq(graft.dedup.Dedup.spanDups(toks, k = 8).count())
       }.head
@@ -549,7 +577,20 @@ object StreamingQueries extends graft.QueryModule {
           col("n_dup_spans").cast("long").as("n_dup_spans"),
           col("n_docs_with_dups").cast("long").as("n_docs_with_dups"),
           col("dups_md5"))
-    }),
+    }, Some(
+      // the batch spanDups replay (q193's CTEs) over the replay-sampled
+      // docs: the stream's distinct dup set must equal it exactly. md5 over
+      // the NUMERICALLY-ordered occurrence list (ORDER BY doc_id, pos —
+      // lexicographic string order would diverge at doc_id 10 vs 2);
+      // md5(coalesce(agg,'')) so an empty dup set hashes '' on both engines.
+      s"""WITH sampled AS (
+        |  SELECT doc_id, text FROM documents WHERE ${replayWhereSql("doc_id")}),
+        |${DedupQueries.spanOracleCtes("sampled")}
+        |SELECT CAST(count(*) AS BIGINT) AS n_dup_spans,
+        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_with_dups,
+        |  md5(coalesce(string_agg(doc_id || ':' || pos, ';' ORDER BY doc_id, pos), ''))
+        |    AS dups_md5
+        |FROM dups""".stripMargin), replay = true),
 
     // STREAMING PERCEPTUAL NEAR-DUP (round 13) — q198's image dHash
     // pipeline in stream form: the replay-capped docs' fingerprints flow
@@ -563,7 +604,7 @@ object StreamingQueries extends graft.QueryModule {
     // the same feed (proving no bucket evicted and no state expired —
     // the operator's documented ≡-batch condition). Oracle = the q198
     // pixel→bits→pairs SQL chain over the replay-sampled docs, summarized.
-    "q202_stream_fp_dedup" -> ((s, dir) => {
+    Entry("q202_stream_fp_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val fps = MultimodalQueries.dhashFps(s, dir)
@@ -578,7 +619,7 @@ object StreamingQueries extends graft.QueryModule {
       require(rows.nonEmpty, s"q202_stream_fp_dedup: no fingerprints at $dir")
       // batch truth (the full pair join) computed once per (version, SF)
       // — judge r16 Next #2, the q221/q225 truth discipline
-      val expected = graft.tools.HarnessCache.onceScalars(
+      val expected = graft.tools.HarnessCache.onceValue(
         s"q202_truth${OpsQueries.suffix(dir)}") {
         Seq(graft.dedup.Dedup.fingerprintPairs(fps,
           col("img_id"), col("fp"), maxHamming = 6, nChunks = 8).count())
@@ -604,7 +645,18 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("n_pairs").cast("long").as("n_pairs"),
           col("max_hamming").cast("int").as("max_hamming"),
           col("pairs_md5"))
-    }),
+    }, Some(
+      // the q198 pixel→bits→chunk→pair chain over the replay-sampled docs,
+      // summarized the q195 way (count + max + md5 of the ordered list)
+      s"""WITH rdocs AS (
+        |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
+        |${MultimodalQueries.dhashOracleCtes("rdocs")}
+        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+        |  CAST(max(hamming) AS INT) AS max_hamming,
+        |  md5(coalesce(string_agg(a_id || ':' || b_id || ':' || hamming,
+        |    ';' ORDER BY a_id, b_id), ''))
+        |    AS pairs_md5
+        |FROM prs""".stripMargin), replay = true),
 
     // STREAMING MARKUP EXTRACTION (round 14, judge r13 Next #5): q203's
     // tag-strip → entity-decode → line-rule chain as a STATELESS streaming
@@ -620,7 +672,7 @@ object StreamingQueries extends graft.QueryModule {
     // aggregated order-free (the q171 "stream ≡ batch" claim, extraction-
     // stage edition — downstream of this sits q202's streaming dedup, so
     // the two rows together are the streaming web pipeline).
-    "q208_stream_markup" -> ((s, dir) => {
+    Entry("q208_stream_markup", (s, dir) => {
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .where(replayFilter("doc_id"))
@@ -658,7 +710,27 @@ object StreamingQueries extends graft.QueryModule {
           col("n_kept_lines").cast("long").as("n_kept_lines"),
           col("n_words_kept").cast("long").as("n_words_kept"),
           col("pages_md5"))
-    }),
+    }, Some(
+      // the q203 extraction CTEs over the replay-sampled WHERE, rolled up
+      // order-free (count + sums + md5 of the doc_id-ordered page list);
+      // doc_id || ':' renders longs identically on both engines
+      s"""WITH src AS (
+        |  SELECT doc_id, text FROM documents WHERE ${replayWhereSql("doc_id")}),
+        |${TextQueries.markupOracleCtes("src")},
+        |per AS (
+        |  SELECT doc_id,
+        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
+        |    CAST(coalesce(list_aggregate(
+        |      list_transform(kept, l -> len(string_split(l, ' '))), 'sum'), 0)
+        |      AS BIGINT) AS n_words_kept,
+        |    array_to_string(kept, chr(10)) AS clean_text
+        |  FROM kp)
+        |SELECT CAST(count(*) AS BIGINT) AS n_pages,
+        |  CAST(coalesce(sum(n_kept_lines), 0) AS BIGINT) AS n_kept_lines,
+        |  CAST(coalesce(sum(n_words_kept), 0) AS BIGINT) AS n_words_kept,
+        |  md5(coalesce(string_agg(doc_id || ':' || clean_text,
+        |    ';' ORDER BY doc_id), '')) AS pages_md5
+        |FROM per""".stripMargin), replay = true),
 
     // STREAMING URL DEDUP (round 14): q205's operator at ingestion time —
     // production web crawl dedups by canonical URL in-stream, BEFORE
@@ -672,7 +744,7 @@ object StreamingQueries extends graft.QueryModule {
     // distinct survivors == the batch-computed unique canonical count
     // before any row is returned. Oracle = the batch fixture + canon
     // chain over the same sampled WHERE, DISTINCT.
-    "q212_stream_url_dedup" -> ((s, dir) => {
+    Entry("q212_stream_url_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val sampled = s.read.parquet(s"$dir/documents.parquet")
@@ -689,7 +761,7 @@ object StreamingQueries extends graft.QueryModule {
       val redelivered = rows.filter(_._1 % 4 == 0)
       val nIn = rows.length.toLong + redelivered.length.toLong
       // batch truth computed once per (version, SF) — judge r16 Next #2
-      val nUnique = graft.tools.HarnessCache.onceScalars(
+      val nUnique = graft.tools.HarnessCache.onceValue(
         s"q212_truth${OpsQueries.suffix(dir)}") {
         Seq(WebQueries.urlFixture(sampled)
           .select(graft.text.Urls.canonicalize(col("url")).as("c"))
@@ -712,7 +784,21 @@ object StreamingQueries extends graft.QueryModule {
           col("n_unique_urls").cast("long").as("n_unique_urls"),
           (lit(nIn) - col("n_unique_urls")).cast("long").as("n_dup_urls"),
           col("uniq_md5"))
-    }),
+    }, Some(
+      // the batch fixture + canonicalization chain (WebQueries' CTEs — the
+      // SAME SQL q205 is verified by) over the sampled WHERE, DISTINCT'd
+      s"""WITH docs_s AS (
+        |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
+        |${WebQueries.urlFixtureSql("docs_s")},
+        |${WebQueries.canonSql},
+        |fed AS (SELECT doc_id FROM docs_s
+        |        UNION ALL SELECT doc_id FROM docs_s WHERE doc_id % 4 = 0),
+        |cu AS (SELECT DISTINCT canon_url FROM canon)
+        |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
+        |  CAST(count(*) AS BIGINT) AS n_unique_urls,
+        |  CAST((SELECT count(*) FROM fed) - count(*) AS BIGINT) AS n_dup_urls,
+        |  md5(string_agg(canon_url, ';' ORDER BY canon_url)) AS uniq_md5
+        |FROM cu""".stripMargin), replay = true),
 
     // STREAMING HOST QUOTA (round 15, judge r14 Next #2): q206's per-host
     // curation cap as an ingestion-time gate — per-host counter state in
@@ -728,7 +814,7 @@ object StreamingQueries extends graft.QueryModule {
     // bounded at quota longs per host); conservation pins distinct
     // verdicts == docs fed before any row is returned. Output: the
     // per-doc verdict rows themselves, fully deterministic.
-    "q213_stream_host_quota" -> ((s, dir) => {
+    Entry("q213_stream_host_quota", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val sampled = s.read.parquet(s"$dir/documents.parquet")
@@ -755,7 +841,20 @@ object StreamingQueries extends graft.QueryModule {
       sink.distinct()
         .select(col("doc_id"), col("host"), col("admitted"), col("rank"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the batch quota rule over the same sampled feed: first-N per
+      // canonical host by doc_id (the arrival order the replay feeds) —
+      // per-doc verdict rows, exact compare
+      s"""WITH docs_s AS (
+         |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
+         |${WebQueries.urlFixtureSql("docs_s")},
+         |${WebQueries.hostCanonSql},
+         |r AS (SELECT doc_id, host,
+         |  row_number() OVER (PARTITION BY host ORDER BY doc_id) AS rn
+         |  FROM hh)
+         |SELECT doc_id, host, rn <= $StreamHostQuota AS admitted,
+         |  CAST(CASE WHEN rn <= $StreamHostQuota THEN rn ELSE 0 END AS INT) AS rank
+         |FROM r ORDER BY doc_id""".stripMargin), replay = true),
 
     // STREAMING ANN SERVE (round 15): query vectors arrive as a stream and
     // are answered from a STORED IVF index — the vector-family twin of the
@@ -775,7 +874,7 @@ object StreamingQueries extends graft.QueryModule {
     // (query_id −1, far-future ts) advances the watermark so every real
     // query's timeout fires — the sentinel itself never times out and is
     // filtered from the result (the q92 flush discipline).
-    "q216_stream_ann_serve" -> ((s, dir) => {
+    Entry("q216_stream_ann_serve", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       import graft.similarity.Ann
@@ -808,7 +907,7 @@ object StreamingQueries extends graft.QueryModule {
       require(rows.nonEmpty, s"q216_stream_ann_serve: no embeddings at $dir")
       // conservation expectation: the batch serve over the SAME stored
       // index — deterministic, so computed once per (version, SF)
-      val nBatchRows = graft.tools.HarnessCache.onceScalars(
+      val nBatchRows = graft.tools.HarnessCache.onceValue(
         s"annserve_truth$sfx") {
         Seq(Ann.ivfTopKOnCells(emb.where(col("vec_id") < 20),
           cellsStored, "vec_id", "embedding", k = 10, nProbe = 4,
@@ -824,7 +923,14 @@ object StreamingQueries extends graft.QueryModule {
       sink.where(col("query_id") =!= -1L).distinct()
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .orderBy("query_id", "rank")
-    }),
+    }, Some(
+      // the batch IVF serve replayed end-to-end in DuckDB (q41's chain: the
+      // stream builds its index with the SAME sampleCentroids/assignCells
+      // params, and the stream-end verdict set ≡ the batch serve exactly —
+      // same sim DESC, neighbor_id ASC tie-breaks)
+      s"""WITH ${SimilarityQueries.ivfSql}
+         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM ivf
+         |ORDER BY query_id, rank""".stripMargin), replay = true),
 
     // STREAMING BLOCKLIST GATE (round 15): q217's domain blocklist as a
     // SERVED model — derived batch-side over the full corpus, WRITTEN to
@@ -839,7 +945,7 @@ object StreamingQueries extends graft.QueryModule {
     // derivation + gate from source via the shared blocklist CTEs —
     // model drift between the stored table and the batch rule reddens
     // the row.
-    "q220_stream_blocklist" -> ((s, dir) => {
+    Entry("q220_stream_blocklist", (s, dir) => {
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // derived ONCE per (version, SF) — judge r16 Next #2; a drifted
@@ -875,7 +981,17 @@ object StreamingQueries extends graft.QueryModule {
       sink.distinct()
         .select(col("doc_id"), col("domain"), col("blocked"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the full blocklist derivation replayed from source (shared CTEs
+      // with q217 — the stored model can never drift from the batch rule),
+      // gated over the sampled feed
+      s"""WITH ${WebQueries.blocklistCtesSql},
+         |docs_s AS (SELECT doc_id FROM documents
+         |           WHERE ${replayWhereSql("doc_id")})
+         |SELECT qd.doc_id, qd.domain,
+         |  (qd.domain IN (SELECT domain FROM blk)) AS blocked
+         |FROM qd JOIN docs_s USING (doc_id)
+         |ORDER BY qd.doc_id""".stripMargin), replay = true),
 
     // STREAMING PARAGRAPH DEDUP (round 16, judge r15 Next #2): q219's
     // cross-doc earliest-keeper rule as an INGESTION stage — pages arrive,
@@ -891,7 +1007,7 @@ object StreamingQueries extends graft.QueryModule {
     // any row is returned. Re-delivered pages re-emit their dups
     // identically (keepers are established state) and collapse in the
     // sink's distinct.
-    "q221_stream_par_dedup" -> ((s, dir) => {
+    Entry("q221_stream_par_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val sampled = s.read.parquet(s"$dir/documents.parquet")
@@ -908,7 +1024,7 @@ object StreamingQueries extends graft.QueryModule {
       // batch truth (dups = occurrences − distinct fingerprints, q219's
       // rule): a full extraction pass over the sample — deterministic,
       // so computed once per (version, SF) (judge r16 Next #2)
-      val expected = graft.tools.HarnessCache.onceScalars(
+      val expected = graft.tools.HarnessCache.onceValue(
         s"q221_truth${OpsQueries.suffix(dir)}") {
         val pars = TextQueries.markupExtractedOf(sampled)
           .select(col("doc_id"), posexplode(col("kept")).as(Seq("idx", "par")))
@@ -942,7 +1058,29 @@ object StreamingQueries extends graft.QueryModule {
           col("n_dup_pars").cast("long").as("n_dup_pars"),
           col("n_docs_with_dups").cast("long").as("n_docs_with_dups"),
           col("dups_md5"))
-    }),
+    }, Some(
+      // q219's batch keeper rule (markup CTEs → 0-based paragraph explode →
+      // earliest-(doc,idx) row_number) over the replay-sampled WHERE; the
+      // rn > 1 occurrences ARE the stream's dup verdicts, summarized the
+      // q195 way (count + distinct docs + md5 of the numerically-ordered
+      // occurrence list)
+      s"""WITH src AS (
+         |  SELECT doc_id, text FROM documents WHERE ${replayWhereTightSql("doc_id")}),
+         |${TextQueries.markupOracleCtes("src")},
+         |pr AS (
+         |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS idx, kept[CAST(i AS INT)] AS par
+         |  FROM (SELECT doc_id, kept, unnest(range(1, len(kept) + 1)) AS i
+         |        FROM kp) t),
+         |rk AS (
+         |  SELECT doc_id, idx,
+         |    row_number() OVER (PARTITION BY md5(par) ORDER BY doc_id, idx) AS rn
+         |  FROM pr),
+         |dups AS (SELECT doc_id, idx FROM rk WHERE rn > 1)
+         |SELECT CAST(count(*) AS BIGINT) AS n_dup_pars,
+         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_with_dups,
+         |  md5(coalesce(string_agg(doc_id || ':' || idx, ';' ORDER BY doc_id, idx), ''))
+         |    AS dups_md5
+         |FROM dups""".stripMargin), replay = true),
 
     // STREAMING SIGNATURE-INDEX SERVE (round 16, judge r15 Next #3 — the
     // q216 symmetry for TEXT): the q214-MAINTAINED index (A∪B appended,
@@ -963,7 +1101,7 @@ object StreamingQueries extends graft.QueryModule {
     // cycle refreshes it by RESTART of the serve stream (per-doc verdict
     // state is TTL-bounded — a restart loses only the in-flight window)
     // or by the q224 stored-swap discipline (write v2, repoint, restart).
-    "q222_stream_sig_serve" -> ((s, dir) => {
+    Entry("q222_stream_sig_serve", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val (indexPath, s2) = DedupQueries.buildMaintainedSigIndexOnce(s, dir, "q222")
@@ -994,7 +1132,27 @@ object StreamingQueries extends graft.QueryModule {
       sink.where(col("doc_id") =!= -1L).distinct()
         .select(col("doc_id"), col("decision"), col("partner_id"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the whole portable chain replayed FROM TEXT (q214's oracle shape):
+      // the maintained membership rule as a WHERE — a_id ∈ A∪B (below s2)
+      // minus the ledger (% 7 = 3), b ∈ the sampled C feed — min-partner
+      // verdict per fed doc, keep when no index hit
+      s"""WITH ${DedupQueries.portableLshPairsSql("documents")},
+         |sp AS (SELECT ((2 * max(doc_id)) // 3 + 1) AS s2 FROM documents),
+         |feed AS (
+         |  SELECT doc_id FROM documents CROSS JOIN sp
+         |  WHERE doc_id >= sp.s2 AND ${replayWhereTightSql("doc_id")}),
+         |near AS (
+         |  SELECT b_id AS doc_id, min(a_id) AS partner_id
+         |  FROM lsh_pairs CROSS JOIN sp
+         |  WHERE a_id < sp.s2 AND a_id % 7 <> 3 AND b_id >= sp.s2
+         |  GROUP BY b_id)
+         |SELECT f.doc_id,
+         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
+         |       ELSE 'keep' END AS decision,
+         |  near.partner_id
+         |FROM feed f LEFT JOIN near USING (doc_id)
+         |ORDER BY f.doc_id""".stripMargin), replay = true),
 
     // STREAMING DIRECTIVE GATE (round 16, judge r15 Next #7): q218's
     // noindex + rel=canonical detection composed with q212's URL-dedup
@@ -1009,7 +1167,7 @@ object StreamingQueries extends graft.QueryModule {
     // conservation pins distinct admitted keys == the batch-computed
     // count before any row is returned. Oracle replays plant → detect →
     // gate → distinct over the same sampled WHERE.
-    "q225_stream_directive_gate" -> ((s, dir) => {
+    Entry("q225_stream_directive_gate", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       val sampled = s.read.parquet(s"$dir/documents.parquet")
@@ -1037,7 +1195,7 @@ object StreamingQueries extends graft.QueryModule {
       // pass, deterministic, computed once per (version, SF) (judge r16
       // Next #2); the replay keeps its dedicated re-delivery batch (the
       // oracle's n_in counts the full %4 re-delivery multiset)
-      val Seq(nNoindex, nUnique) = graft.tools.HarnessCache.onceScalars(
+      val Seq(nNoindex, nUnique) = graft.tools.HarnessCache.onceValue(
         s"q225_truth${OpsQueries.suffix(dir)}") {
         val tr = gateKeys(feed).agg(
           count(when(col("noindex"), 1)),
@@ -1060,7 +1218,33 @@ object StreamingQueries extends graft.QueryModule {
           lit(nNoindex).cast("long").as("n_noindex"),
           col("n_admitted").cast("long").as("n_admitted"),
           col("uniq_md5"))
-    }),
+    }, Some(
+      // plant → detect (shared directive CTEs) → gate: noindex drops, the
+      // admission key is coalesce(canonical href's canon, own canon), the
+      // admitted DISTINCT key set summarized the q212 way; n_in counts the
+      // re-delivered feed
+      s"""WITH docs_s AS (
+         |  SELECT doc_id, text FROM documents WHERE ${replayWhereTightSql("doc_id")}),
+         |${WebQueries.urlFixtureSql("docs_s")},
+         |${WebQueries.canonSql},
+         |${TextQueries.markupOracleCtes("docs_s")},
+         |${WebQueries.directiveFlSql},
+         |hu AS (SELECT doc_id, href AS url FROM fl),
+         |${WebQueries.canonSqlOver("hu", "h")},
+         |keys AS (
+         |  SELECT fl.doc_id, fl.noindex,
+         |    coalesce(hcanon.canon_url, canon.canon_url) AS gate_key
+         |  FROM fl
+         |  JOIN canon ON canon.doc_id = fl.doc_id
+         |  JOIN hcanon ON hcanon.doc_id = fl.doc_id),
+         |fed AS (SELECT doc_id FROM docs_s
+         |        UNION ALL SELECT doc_id FROM docs_s WHERE doc_id % 4 = 0),
+         |adm AS (SELECT DISTINCT gate_key FROM keys WHERE NOT noindex)
+         |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
+         |  CAST((SELECT count(*) FROM keys WHERE noindex) AS BIGINT) AS n_noindex,
+         |  CAST(count(*) AS BIGINT) AS n_admitted,
+         |  md5(string_agg(gate_key, ';' ORDER BY gate_key)) AS uniq_md5
+         |FROM adm""".stripMargin), replay = true),
 
     // STREAMING ROBOTS GATE (round 16 — q227 at ingestion time, the
     // politeness symmetry of q220's blocklist gate): the per-host
@@ -1076,7 +1260,7 @@ object StreamingQueries extends graft.QueryModule {
     // application checks BOTH against the same hand-derived VALUES.
     // Verdicts are deterministic; re-deliveries re-emit identically and
     // the sink dedups; conservation pins distinct verdicts == docs fed.
-    "q228_stream_robots_gate" -> ((s, dir) => {
+    Entry("q228_stream_robots_gate", (s, dir) => {
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
       // derived ONCE per (version, SF) — judge r16 Next #2. SERVED-MODEL
@@ -1121,9 +1305,19 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("doc_id"), col("host"), col("path"), col("allowed"),
           col("rule_dir"), col("rule_pfx"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the shared robots rule application (hand-derived VALUES — see
+      // WebQueries.robotsGateSql) over the sampled feed's (host, path) keys
+      s"""WITH docs_s AS (
+         |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
+         |${WebQueries.urlFixtureSql("docs_s")},
+         |${WebQueries.hostCanonSql},
+         |${WebQueries.canonSql},
+         |${WebQueries.robotsRdocsSql},
+         |${WebQueries.robotsGateSql}
+         |ORDER BY d.doc_id""".stripMargin), replay = true),
 
-    "q92_stream_sessionize" -> ((s, dir) => {
+    Entry("q92_stream_sessionize", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
       // cap by USER (not row): sessionization needs every event of a
@@ -1145,7 +1339,7 @@ object StreamingQueries extends graft.QueryModule {
           Streams.sessionizeTicks(_, GapUs))
         .select("user_id", "session_start_us", "session_end_us", "n_events")
         .orderBy("user_id", "session_start_us")
-    }),
+    }, Some(sessionizeSql(replayWhereSql("user_id"))), replay = true),
 
     // STREAMING KMV distinct-count vs q59's SQL replay: events stream
     // through SketchStream.distinctSketch (mapGroupsWithState, bottom-64
@@ -1157,7 +1351,7 @@ object StreamingQueries extends graft.QueryModule {
     // updates. Oracle = the same bottom-64 replay in DuckDB SQL: the
     // mergeable-sketch claim (stream ≡ batch ≡ SQL, any slicing) becomes
     // a driver-checked row.
-    "q94_stream_kmv" -> ((s, dir) => {
+    Entry("q94_stream_kmv", (s, dir) => {
       import s.implicits._
       // cap by USER: the KMV state is a set of user-hash minima, so a
       // user-keyed sample replays exactly (every row of a kept user kept)
@@ -1182,7 +1376,7 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("group").as("event_type"), col("kmv_kept"),
           col("kth_min"), col("kmv_est"))
         .orderBy("event_type")
-    }),
+    }, Some(kmvReplayOracle), replay = true),
 
     // RocksDB AT THE DRIVER (round 11): q94's sketch replay executed under
     // RocksDBStateStoreProvider, same oracle — the driver itself now
@@ -1191,7 +1385,7 @@ object StreamingQueries extends graft.QueryModule {
     // one of them driver-checked). The conf scope covers the whole replay
     // (it runs eagerly inside the fn); only the stateless batch
     // aggregation over the sink snapshot escapes it.
-    "q187_stream_rocksdb" -> ((s, dir) => {
+    Entry("q187_stream_rocksdb", (s, dir) => {
       val key = "spark.graft.stateStore.provider"
       val prev = s.conf.getOption(key)
       s.conf.set(key, "rocksdb")
@@ -1200,7 +1394,11 @@ object StreamingQueries extends graft.QueryModule {
         case Some(p) => s.conf.set(key, p)
         case None => s.conf.unset(key)
       }
-    }),
+    }, Some(
+      // identical stream-end state regardless of the store backend: the
+      // RocksDB replay answers to q94's oracle BY CONSTRUCTION (one shared
+      // string — the two entries cannot drift)
+      kmvReplayOracle), replay = true),
 
     // STREAMING LOG-BUCKET QUANTILES — q179's unbounded-range sketch as
     // bounded mapGroupsWithState (≤ 4·log2(max) buckets per group, no
@@ -1208,7 +1406,7 @@ object StreamingQueries extends graft.QueryModule {
     // the exact integer lattice, so stream-end state ≡ batch walk ≡ SQL
     // under any slicing; stream-end selection by the q94/q99 monotone
     // discipline (max(n), max_by(est, n)).
-    "q180_stream_loghist" -> ((s, dir) => {
+    Entry("q180_stream_loghist", (s, dir) => {
       import s.implicits._
       // cap by ROW (event_id unique): bucket counts are per-row sums
       val rows = onceFeed("q180", dir) {
@@ -1229,7 +1427,15 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("group").as("event_type"), col("n"),
           col("p50_est_q"), col("p95_est_q"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // q179's shared sketch chain over the replay-sampled WHERE (no exact
+      // side — the estimate IS the checked value; q179 carries the
+      // guarantee). ONE copy of the lattice SQL: OpsQueries.logHistCtes.
+      s"""WITH ${OpsQueries.logHistCtes(s"${replayWhereSql("event_id")} AND ")}
+        |SELECT event_type, n,
+        |  CAST(${OpsQueries.logHistEdgeSql("b50", hi = true)} AS BIGINT) AS p50_est_q,
+        |  CAST(${OpsQueries.logHistEdgeSql("b95", hi = true)} AS BIGINT) AS p95_est_q
+        |FROM sel ORDER BY event_type""".stripMargin), replay = true),
 
     // STREAMING histogram-quantile monitoring vs a SQL replay: the
     // fixed-range histogram sketch (bin counts as mapGroupsWithState
@@ -1239,7 +1445,7 @@ object StreamingQueries extends graft.QueryModule {
     // the stream-end state is the batch binning whatever the slicing; the
     // final update per group is the one with max n (n strictly increases
     // on every update a group receives).
-    "q99_stream_histogram" -> ((s, dir) => {
+    Entry("q99_stream_histogram", (s, dir) => {
       import s.implicits._
       // cap by ROW (event_id is unique): bin counts are per-row sums
       val rows = onceFeed("q99", dir) {
@@ -1274,7 +1480,34 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("group").as("event_type"), col("n"), col("n_clamped"),
           col("p50_est"), col("p95_est"))
         .orderBy("event_type")
-    }),
+    }, Some(
+      // the fixed-range binning replayed relationally; the quantile estimate
+      // is the right edge of the first bin whose cumulative count reaches
+      // ceil(q·n) — same walk as the sketch, all arithmetic exact
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
+        |       WHERE ${replayWhereSql("event_id")}),
+        |b AS (SELECT event_type,
+        |        least(greatest(CAST(floor(((v - 0.0) / 512.0) * 64) AS INT), 0), 63) AS bin,
+        |        CASE WHEN v < 0.0 OR v >= 512.0 THEN 1 ELSE 0 END AS clamped
+        |      FROM v),
+        |c AS (SELECT event_type, bin, count(*) AS c FROM b GROUP BY event_type, bin),
+        |n AS (SELECT event_type, sum(c) AS n FROM c GROUP BY event_type),
+        |cl AS (SELECT event_type, sum(clamped) AS n_clamped FROM b GROUP BY event_type),
+        |cum AS (SELECT event_type, bin,
+        |          sum(c) OVER (PARTITION BY event_type ORDER BY bin) AS cum
+        |        FROM c),
+        |est AS (
+        |  SELECT n.event_type,
+        |    (SELECT min(bin) FROM cum
+        |     WHERE cum.event_type = n.event_type AND cum.cum >= ceil(0.5 * n.n)) AS b50,
+        |    (SELECT min(bin) FROM cum
+        |     WHERE cum.event_type = n.event_type AND cum.cum >= ceil(0.95 * n.n)) AS b95
+        |  FROM n)
+        |SELECT n.event_type, CAST(n.n AS BIGINT) AS n, CAST(cl.n_clamped AS BIGINT) AS n_clamped,
+        |  0.0 + (CAST(least(e.b50, 63) + 1 AS DOUBLE) * 512.0) / 64 AS p50_est,
+        |  0.0 + (CAST(least(e.b95, 63) + 1 AS DOUBLE) * 512.0) / 64 AS p95_est
+        |FROM n JOIN cl USING (event_type) JOIN est e ON e.event_type = n.event_type
+        |ORDER BY n.event_type""".stripMargin), replay = true),
 
     // STREAMING Count-Min: the q104 sketch as bounded mapGroupsWithState
     // state (128 longs per group forever), replayed over the capped rows.
@@ -1283,7 +1516,7 @@ object StreamingQueries extends graft.QueryModule {
     // selected by the monotone (max n, max_by(cm, n)) shape and per-term
     // estimates read off it exactly as in q104 — stream ≡ batch ≡ SQL,
     // including the no-underestimate guarantee bit.
-    "q105_stream_cm" -> ((s, dir) => {
+    Entry("q105_stream_cm", (s, dir) => {
       import s.implicits._
       val depth = OpsQueries.CmDepth; val width = OpsQueries.CmWidth
       val termed = eventsUs(s, dir).where(replayFilter("event_id"))
@@ -1305,7 +1538,11 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("event_type"), col("term"), col("exact_cnt"),
           est.as("est"), (est >= col("exact_cnt")).as("no_underestimate"))
         .orderBy("event_type", "term")
-    }),
+    }, Some(
+      // q104's full Count-Min replay over the capped rows — the stream-end
+      // matrix must equal the batch sketch, so the oracle is the same
+      // generator with the replay WHERE on both sides
+      OpsQueries.countMinSql(replayWhereSql("event_id"))), replay = true),
 
     // STREAMING HyperLogLog: the q108 sketch as bounded mapGroupsWithState
     // state (64 ints per group forever), replayed over the capped rows.
@@ -1316,7 +1553,7 @@ object StreamingQueries extends graft.QueryModule {
     // monotone (max_by(regs, n)) shape and the read-out — every register,
     // the exact-integer indicator, the estimate — is q108's, so
     // stream ≡ batch ≡ SQL bit-for-bit.
-    "q109_stream_hll" -> ((s, dir) => {
+    Entry("q109_stream_hll", (s, dir) => {
       import s.implicits._
       val keyed = eventsUs(s, dir).where(replayFilter("event_id"))
         .select(col("event_type"), col("user_id"))
@@ -1334,7 +1571,11 @@ object StreamingQueries extends graft.QueryModule {
       val exact = keyed.groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_users"))
       OpsQueries.hllReadout(sketch, exact)
-    }),
+    }, Some(
+      // q108's full HLL replay over the capped rows — the stream-end
+      // register array must equal the batch sketch, so the oracle is the
+      // same generator with the replay WHERE on both sides
+      OpsQueries.hllSql(replayWhereSql("event_id"))), replay = true),
 
     // STREAMING SCD2: the q102 dimension build as a CDC consumer
     // (TemporalStream.scd2Stream — one open version per key as state,
@@ -1346,7 +1587,7 @@ object StreamingQueries extends graft.QueryModule {
     // delivery contract a key-partitioned change log provides. Oracle =
     // the same scd2Sql rebuild as q102/q103 over the capped rows: all
     // three maintenance paths land on the identical dimension.
-    "q107_stream_scd2" -> ((s, dir) => {
+    Entry("q107_stream_scd2", (s, dir) => {
       import s.implicits._
       val rows = onceFeed("q107", dir) {
         eventsUs(s, dir).where(replayFilter("event_id"))
@@ -1370,7 +1611,11 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("key").as("user_id"), col("state"), col("valid_from"),
           col("valid_to"), col("version"), col("valid_to").isNull.as("is_current"))
         .orderBy("user_id", "version")
-    }),
+    }, Some(
+      // the q102/q103 rebuild SQL over the capped rows: the streaming
+      // maintenance path must land on the same dimension as batch build
+      // and incremental apply
+      OpsQueries.scd2Sql(replayWhereSql("event_id"))), replay = true),
 
     // STREAMING Misra–Gries heavy hitters, driver-checked via its
     // GUARANTEE: the MG summary itself is slicing-order-sensitive (which
@@ -1387,7 +1632,7 @@ object StreamingQueries extends graft.QueryModule {
     // each) so with k=4 the >n/5 threshold selects exactly 'hot' per
     // group at ANY scale factor — never an empty, never a borderline row.
     // Stream-end selection rides the monotone n (q94/q99's shape).
-    "q100_stream_heavy" -> ((s, dir) => {
+    Entry("q100_stream_heavy", (s, dir) => {
       import s.implicits._
       val k = 4
       // row cap (event_id) BEFORE deriving terms: the exact-count side and
@@ -1414,7 +1659,23 @@ object StreamingQueries extends graft.QueryModule {
         .select(col("event_type"), col("term"), col("cnt"),
           array_contains(col("candidates"), col("term")).as("in_candidates"))
         .orderBy("event_type", "term")
-    }),
+    }, Some(
+      // the MG guarantee as SQL: exact over-threshold terms (cnt·(k+1) > n,
+      // exact integers) with the TRUE the Spark side must reproduce via
+      // array_contains against the stream-end candidate set. The double-mod
+      // ((x % 16) + 16) % 16 mirrors Spark's pmod on SIGNED keys (DuckDB %
+      // keeps the dividend's sign) — user_id is non-negative in the test
+      // data, but the pattern must stay safe to reuse on signed keys
+      s"""WITH t AS (SELECT event_type,
+        |    CASE WHEN ((user_id % 16) + 16) % 16 < 8 THEN 'hot'
+        |         ELSE CAST(((user_id % 16) + 16) % 16 AS VARCHAR) END AS term
+        |  FROM events WHERE ${replayWhereSql("event_id")}),
+        |n AS (SELECT event_type, count(*) AS n FROM t GROUP BY event_type),
+        |c AS (SELECT event_type, term, count(*) AS cnt FROM t GROUP BY event_type, term)
+        |SELECT c.event_type, c.term, c.cnt, TRUE AS in_candidates
+        |FROM c JOIN n USING (event_type)
+        |WHERE c.cnt * 5 > n.n
+        |ORDER BY event_type, term""".stripMargin), replay = true),
 
     // STREAMING stream-stream attribution join vs q54's SQL replay: the
     // last streaming operator without a driver-checked oracle row. Clicks
@@ -1427,13 +1688,23 @@ object StreamingQueries extends graft.QueryModule {
     // behind the watermark). Matches are unique by (click_id,
     // purchase_id) and deterministic, so task-replay duplicates collapse
     // under distinct — the multiplicity-proof read-out shape.
-    "q120_stream_attribution" -> ((s, dir) =>
+    Entry("q120_stream_attribution", (s, dir) =>
       replayTwoStreams(s, "q120_attr", dir, sentinel = None,
           evs => sinkDistinctCount(expectedJoinCounts(evs)._1, lit(true)))(
           (clicks, purchases) => graft.streaming.Streams.attributionJoin(
             clicks, purchases, maxGap = "6 hours", watermarkDelay = "1 hour"))
         .distinct()
-        .orderBy("user_id", "click_id", "purchase_id")),
+        .orderBy("user_id", "click_id", "purchase_id"), Some(
+      // q54's join over the user-capped rows: the stream-end match set of
+      // the two-stream replay must equal the batch join of the same sample
+      s"""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+        |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
+        |FROM events c JOIN events p
+        |  ON c.user_id = p.user_id
+        | AND c.event_type = 'click' AND p.event_type = 'purchase'
+        | AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT
+        |WHERE ${replayWhereSql("c.user_id")}
+        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin), replay = true),
 
     // STREAMING TOMBSTONE FILTER: q121's right-to-be-forgotten sweep as a
     // stream (ComplianceStream.tombstoneFilter — one long of state per
@@ -1445,7 +1716,7 @@ object StreamingQueries extends graft.QueryModule {
     // read-out dedups task-replay duplicates with distinct. Oracle = the
     // batch survivor rule (not requested OR before the tombstone) as one
     // WHERE clause.
-    "q122_stream_tombstone" -> ((s, dir) => {
+    Entry("q122_stream_tombstone", (s, dir) => {
       import s.implicits._
       val e = onceFeed("q122", dir) {
         eventsUs(s, dir).where(replayFilter("user_id"))
@@ -1470,7 +1741,16 @@ object StreamingQueries extends graft.QueryModule {
           graft.streaming.ComplianceStream.tombstoneFilter)
         .distinct()
         .orderBy("user_id", "ts_us", "event_id")
-    }),
+    }, Some(
+      // the batch survivor rule over the same capped sample: an event
+      // survives iff its user filed no request OR it precedes the tombstone
+      s"""SELECT user_id, epoch_us(ts) AS ts_us, event_id
+         |FROM events
+         |WHERE ${replayWhereSql("user_id")}
+         |  AND NOT (${OpsQueries.coordSql("user_id")}
+         |             < ${graft.ops.Sampling.threshold(OpsQueries.DeleteRate)}
+         |           AND epoch_us(ts) >= $TombUs)
+         |ORDER BY user_id, ts_us, event_id""".stripMargin), replay = true),
 
     // STREAMING ABANDONMENT (Streams.abandonedClicks — the left-outer
     // twin of q120's stream-stream join): clicks with no same-user
@@ -1483,14 +1763,27 @@ object StreamingQueries extends graft.QueryModule {
     // the read-out. Unmatched clicks are unique, so distinct collapses
     // task-replay duplicates. Oracle = the batch NOT EXISTS over the
     // same sample.
-    "q135_stream_abandoned" -> ((s, dir) =>
+    Entry("q135_stream_abandoned", (s, dir) =>
       replayTwoStreams(s, "q135_abandon", dir, sentinel = Some(8L * 3600 * 1000),
           evs => sinkDistinctCount(expectedJoinCounts(evs)._2,
             col("user_id") =!= -1L))(
           (clicks, purchases) => graft.streaming.Streams.abandonedClicks(
             clicks, purchases, maxGap = "6 hours", watermarkDelay = "1 hour"))
         .where(col("user_id") =!= -1L)
-        .distinct().orderBy("user_id", "click_id")),
+        .distinct().orderBy("user_id", "click_id"), Some(
+      // batch truth for the left-outer stream: a click is abandoned iff no
+      // same-user purchase lands in its [0, 6 h] window (both ends
+      // inclusive — an equal-µs purchase matches, see Streams.joinedSides)
+      s"""SELECT c.user_id, c.event_id AS click_id
+         |FROM events c
+         |WHERE ${replayWhereSql("c.user_id")}
+         |  AND c.event_type = 'click'
+         |  AND NOT EXISTS (
+         |    SELECT 1 FROM events p
+         |    WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
+         |      AND epoch_us(p.ts) - epoch_us(c.ts)
+         |          BETWEEN 0 AND 21600000000::BIGINT)
+         |ORDER BY user_id, click_id""".stripMargin), replay = true),
 
     // DISTRIBUTION DRIFT: the data-monitoring primitive behind every
     // training-data freshness gate — has the value distribution shifted
@@ -1500,7 +1793,7 @@ object StreamingQueries extends graft.QueryModule {
     // exact power-of-two scale, IEEE-identical everywhere), drift flagged
     // at |Δp| > 5%. One scan → (type, bin) cells; the per-type totals
     // ride a window over the ≤ #types·16-row rollup, never the corpus.
-    "q131_dist_drift" -> ((s, dir) => {
+    Entry("q131_dist_drift", (s, dir) => {
       val cells = eventsUs(s, dir)
         .select(col("event_type"),
           (col("ts_us") >= OpsQueries.MidCorpusUs).as("late"),
@@ -1523,7 +1816,30 @@ object StreamingQueries extends graft.QueryModule {
           pEarly.as("p_early_micro"), pLate.as("p_late_micro"),
           (abs(pEarly - pLate) > DriftCutMicro).as("drifted"))
         .orderBy("event_type", "bin")
-    }),
+    }, Some(
+      // same exact-integer proportions; window totals over the bin cells;
+      // the zero-total CASEs mirror the Spark guards exactly
+      s"""WITH b AS (SELECT event_type,
+         |    epoch_us(ts) >= ${OpsQueries.MidCorpusUs} AS late,
+         |    least(15, greatest(0, CAST(floor(value / 8.0) AS BIGINT))) AS bin
+         |  FROM events),
+         |cells AS (SELECT event_type, bin,
+         |    CAST(count(*) FILTER (NOT late) AS BIGINT) AS a,
+         |    CAST(count(*) FILTER (late) AS BIGINT) AS b
+         |  FROM b GROUP BY 1, 2),
+         |t AS (SELECT event_type, bin, a, b,
+         |    CAST(sum(a) OVER (PARTITION BY event_type) AS BIGINT) AS na,
+         |    CAST(sum(b) OVER (PARTITION BY event_type) AS BIGINT) AS nb
+         |  FROM cells),
+         |p AS (SELECT event_type, bin,
+         |    CASE WHEN na = 0 THEN 0
+         |         ELSE CAST(a * $DriftScale // na AS BIGINT) END AS p_early_micro,
+         |    CASE WHEN nb = 0 THEN 0
+         |         ELSE CAST(b * $DriftScale // nb AS BIGINT) END AS p_late_micro
+         |  FROM t)
+         |SELECT event_type, bin, p_early_micro, p_late_micro,
+         |  abs(p_early_micro - p_late_micro) > $DriftCutMicro AS drifted
+         |FROM p ORDER BY event_type, bin""".stripMargin)),
 
     // COHORT RETENTION: users bucketed by first-active epoch week, counted
     // in each later week they return — the analytics matrix behind every
@@ -1533,7 +1849,7 @@ object StreamingQueries extends graft.QueryModule {
     // oracle's self-join on user disappears — cohort and weeks ride the
     // same aggregation, and the (cohort, offset) rollup is a second
     // #users-row shuffle.
-    "q130_retention" -> ((s, dir) => {
+    Entry("q130_retention", (s, dir) => {
       val uw = eventsUs(s, dir)
         .select(col("user_id"), expr("ts_us div 604800000000").as("week"))
       uw.groupBy("user_id")
@@ -1544,7 +1860,16 @@ object StreamingQueries extends graft.QueryModule {
           (col("week") - col("cohort_week")).as("week_offset"))
         .agg(count(lit(1)).as("n_active"))
         .orderBy("cohort_week", "week_offset")
-    }),
+    }, Some(
+      // the matrix replayed with the join the Spark side avoids
+      """WITH uw AS (SELECT DISTINCT user_id,
+        |              epoch_us(ts) // 604800000000 AS week FROM events),
+        |c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY user_id)
+        |SELECT c.cohort_week, uw.week - c.cohort_week AS week_offset,
+        |  CAST(count(*) AS BIGINT) AS n_active
+        |FROM uw JOIN c USING (user_id)
+        |GROUP BY 1, 2
+        |ORDER BY cohort_week, week_offset""".stripMargin)),
 
     // MULTI-TOUCH ATTRIBUTION: q54 assigns every in-window click to the
     // purchase; real attribution must SPLIT the credit. Linear multi-touch
@@ -1554,7 +1879,7 @@ object StreamingQueries extends graft.QueryModule {
     // per-purchase credits sum to exactly 2^20, no float leakage, fully
     // DuckDB-replayable. Plan: the q54 user-keyed join, then one window
     // pass partitioned by purchase (state bounded per purchase).
-    "q129_multitouch" -> ((s, dir) => {
+    Entry("q129_multitouch", (s, dir) => {
       val e = eventsUs(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"), col("event_type"))
       val clicks = e.where(col("event_type") === "click")
@@ -1577,7 +1902,27 @@ object StreamingQueries extends graft.QueryModule {
             when(col("rk") === 1, expr("1048576 % n")).otherwise(lit(0L)))
             .as("credit_micro"))
         .orderBy("purchase_id", "click_id")
-    }),
+    }, Some(
+      // the q54 join + the same integer split: floor share to everyone,
+      // remainder to the earliest click (largest gap, ties to lowest id)
+      """WITH pairs AS (
+        |  SELECT c.user_id, p.event_id AS purchase_id, c.event_id AS click_id,
+        |    epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
+        |  FROM events c JOIN events p
+        |    ON c.user_id = p.user_id
+        |   AND c.event_type = 'click' AND p.event_type = 'purchase'
+        |   AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT),
+        |ranked AS (
+        |  SELECT user_id, purchase_id, click_id,
+        |    count(*) OVER (PARTITION BY purchase_id) AS n,
+        |    row_number() OVER (PARTITION BY purchase_id
+        |                       ORDER BY gap_us DESC, click_id) AS rk
+        |  FROM pairs)
+        |SELECT user_id, purchase_id, click_id,
+        |  CAST(1048576 // n + CASE WHEN rk = 1 THEN 1048576 % n ELSE 0 END
+        |    AS BIGINT) AS credit_micro
+        |FROM ranked
+        |ORDER BY purchase_id, click_id""".stripMargin)),
 
     // STREAMING TRENDING (q127's decay fold as bounded per-group state —
     // SketchStream.trendingSketch): day→count cells pruned at the decay
@@ -1585,7 +1930,7 @@ object StreamingQueries extends graft.QueryModule {
     // day is the group's own newest (one pass can't know the global max);
     // the oracle replays that with a per-group window. Stream-end pick is
     // the monotone max_by(_, n) (q94/q105 pattern).
-    "q128_stream_trending" -> ((s, dir) => {
+    Entry("q128_stream_trending", (s, dir) => {
       import s.implicits._
       val rows = onceFeed("q128", dir) {
         eventsUs(s, dir).where(replayFilter("event_id"))
@@ -1603,7 +1948,23 @@ object StreamingQueries extends graft.QueryModule {
           max(col("n")).as("n_events"))
         .select("event_type", "decay_micro", "n_events")
         .orderBy(col("decay_micro").desc, col("event_type"))
-    }),
+    }, Some(
+      // q127's integer decay fold over the capped rows, reference day per
+      // GROUP (the streaming operator's one-pass semantics)
+      s"""WITH daily AS (
+         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+         |    CAST(count(*) AS BIGINT) AS n
+         |  FROM events WHERE ${replayWhereSql("event_id")} GROUP BY 1, 2),
+         |ks AS (
+         |  SELECT event_type, n,
+         |    (max(day) OVER (PARTITION BY event_type) - day) // 7 AS k
+         |  FROM daily)
+         |SELECT event_type,
+         |  CAST(sum(n * (CASE WHEN k > 20 THEN 0 ELSE 1048576 >> k END)) AS BIGINT)
+         |    AS decay_micro,
+         |  CAST(sum(n) AS BIGINT) AS n_events
+         |FROM ks GROUP BY event_type
+         |ORDER BY decay_micro DESC, event_type""".stripMargin), replay = true),
 
     // STREAMING CLUSTER ASSIGNMENT — the model-SERVING shape: the k-means
     // model is trained in batch (Clustering.kmeans over the full
@@ -1617,7 +1978,7 @@ object StreamingQueries extends graft.QueryModule {
     // SQL for the deployed model. At 100 TB the model is a broadcast
     // artifact and the scoring is embarrassingly parallel — the exact
     // online form of q146's offline assignment.
-    "q156_stream_cluster" -> ((s, dir) => {
+    Entry("q156_stream_cluster", (s, dir) => {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       // the SERVED MODEL and the batch-truth expectation are harness
@@ -1627,10 +1988,10 @@ object StreamingQueries extends graft.QueryModule {
       // the batch assignment on EVERY bench rep, ~2-3 s of the row's cost
       // that is not the streaming operator under measurement). The model
       // is k×dim longs (512 at 8×64) and the truth is ≤ k (cid, n) pairs
-      // — both onceScalars-sized. The measured operator — the stateless
+      // — both small driver-side values. The measured operator — the stateless
       // assignExpr serve + update-mode aggregation stream — stays live.
       val sfx = OpsQueries.suffix(dir)
-      val centsFlat = graft.tools.HarnessCache.onceScalars(s"q156_cents$sfx") {
+      val centsFlat = graft.tools.HarnessCache.onceValue(s"q156_cents$sfx") {
         val (_, c) = graft.similarity.Clustering.kmeans(
           emb, "vec_id", "embedding", CurationQueries.KmK, CurationQueries.KmUpdates)
         c.flatten.toSeq
@@ -1645,7 +2006,7 @@ object StreamingQueries extends graft.QueryModule {
       }
       require(rows.nonEmpty, s"q156_stream_cluster: no embeddings at $dir")
       // expectation = the batch kernel's assignment of the same rows
-      val expect = graft.tools.HarnessCache.onceScalars(s"q156_truth$sfx") {
+      val expect = graft.tools.HarnessCache.onceValue(s"q156_truth$sfx") {
         graft.similarity.Clustering
           .assign(graft.similarity.Clustering.quantized(capped, "vec_id", "embedding"), cents)
           .groupBy("cid").agg(count(lit(1)).as("n"))
@@ -1665,7 +2026,27 @@ object StreamingQueries extends graft.QueryModule {
         .agg(max(col("n")).as("n_assigned"), max(col("id_sum")).as("id_sum"))
         .select(col("cid").as("cluster_id"), col("n_assigned"), col("id_sum"))
         .orderBy("cluster_id")
-    }))
+    }, Some(
+      // the full k-means chain trains the model on ALL embeddings; the
+      // stream-side scoring replays as the kc-final assignment restricted
+      // to the replay cap's rows — stream ≡ batch ≡ SQL for the deployment
+      s"""WITH ${CurationQueries.kmeansSql},
+         |scap AS (SELECT vec_id FROM embeddings
+         |         WHERE ${replayWhereSql("vec_id")}),
+         |sd AS (
+         |  SELECT v.vec_id, c.cid, sum((v.qv - c.cq) * (v.qv - c.cq)) AS d2
+         |  FROM kdv v JOIN kc${CurationQueries.KmUpdates} c ON c.d = v.d
+         |  WHERE v.vec_id IN (SELECT vec_id FROM scap)
+         |  GROUP BY 1, 2),
+         |sa AS (
+         |  SELECT vec_id, cid FROM (
+         |    SELECT vec_id, cid,
+         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+         |    FROM sd) t WHERE rn = 1)
+         |SELECT CAST(cid AS BIGINT) AS cluster_id,
+         |  CAST(count(*) AS BIGINT) AS n_assigned,
+         |  CAST(sum(vec_id) AS BIGINT) AS id_sum
+         |FROM sa GROUP BY cid ORDER BY cluster_id""".stripMargin), replay = true))
 
   /** q50 and q92 share one oracle body: the batch gap-sessionization SQL is
     * the ground truth for BOTH the window-function batch form (full table)
@@ -1701,446 +2082,4 @@ object StreamingQueries extends graft.QueryModule {
        |       ELSE CAST(nd.nd AS DOUBLE) END AS kmv_est
        |FROM nd LEFT JOIN kth USING (event_type)
        |ORDER BY nd.event_type""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    // batch DISTINCT over the same sampled WHERE — n_in recomputed from
-    // the filter, survivors by sorted-hash md5
-    // the batch fixture + canonicalization chain (WebQueries' CTEs — the
-    // SAME SQL q205 is verified by) over the sampled WHERE, DISTINCT'd
-    // the batch quota rule over the same sampled feed: first-N per
-    // canonical host by doc_id (the arrival order the replay feeds) —
-    // per-doc verdict rows, exact compare
-    "q213_stream_host_quota" ->
-      s"""WITH docs_s AS (
-         |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
-         |${WebQueries.urlFixtureSql("docs_s")},
-         |${WebQueries.hostCanonSql},
-         |r AS (SELECT doc_id, host,
-         |  row_number() OVER (PARTITION BY host ORDER BY doc_id) AS rn
-         |  FROM hh)
-         |SELECT doc_id, host, rn <= $StreamHostQuota AS admitted,
-         |  CAST(CASE WHEN rn <= $StreamHostQuota THEN rn ELSE 0 END AS INT) AS rank
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    "q212_stream_url_dedup" ->
-      s"""WITH docs_s AS (
-        |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
-        |${WebQueries.urlFixtureSql("docs_s")},
-        |${WebQueries.canonSql},
-        |fed AS (SELECT doc_id FROM docs_s
-        |        UNION ALL SELECT doc_id FROM docs_s WHERE doc_id % 4 = 0),
-        |cu AS (SELECT DISTINCT canon_url FROM canon)
-        |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
-        |  CAST(count(*) AS BIGINT) AS n_unique_urls,
-        |  CAST((SELECT count(*) FROM fed) - count(*) AS BIGINT) AS n_dup_urls,
-        |  md5(string_agg(canon_url, ';' ORDER BY canon_url)) AS uniq_md5
-        |FROM cu""".stripMargin,
-
-    // the batch IVF serve replayed end-to-end in DuckDB (q41's chain: the
-    // stream builds its index with the SAME sampleCentroids/assignCells
-    // params, and the stream-end verdict set ≡ the batch serve exactly —
-    // same sim DESC, neighbor_id ASC tie-breaks)
-    "q216_stream_ann_serve" ->
-      s"""WITH ${SimilarityQueries.ivfSql}
-         |SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM ivf
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // the full blocklist derivation replayed from source (shared CTEs
-    // with q217 — the stored model can never drift from the batch rule),
-    // gated over the sampled feed
-    "q220_stream_blocklist" ->
-      s"""WITH ${WebQueries.blocklistCtesSql},
-         |docs_s AS (SELECT doc_id FROM documents
-         |           WHERE ${replayWhereSql("doc_id")})
-         |SELECT qd.doc_id, qd.domain,
-         |  (qd.domain IN (SELECT domain FROM blk)) AS blocked
-         |FROM qd JOIN docs_s USING (doc_id)
-         |ORDER BY qd.doc_id""".stripMargin,
-
-    // q219's batch keeper rule (markup CTEs → 0-based paragraph explode →
-    // earliest-(doc,idx) row_number) over the replay-sampled WHERE; the
-    // rn > 1 occurrences ARE the stream's dup verdicts, summarized the
-    // q195 way (count + distinct docs + md5 of the numerically-ordered
-    // occurrence list)
-    "q221_stream_par_dedup" ->
-      s"""WITH src AS (
-         |  SELECT doc_id, text FROM documents WHERE ${replayWhereTightSql("doc_id")}),
-         |${TextQueries.markupOracleCtes("src")},
-         |pr AS (
-         |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS idx, kept[CAST(i AS INT)] AS par
-         |  FROM (SELECT doc_id, kept, unnest(range(1, len(kept) + 1)) AS i
-         |        FROM kp) t),
-         |rk AS (
-         |  SELECT doc_id, idx,
-         |    row_number() OVER (PARTITION BY md5(par) ORDER BY doc_id, idx) AS rn
-         |  FROM pr),
-         |dups AS (SELECT doc_id, idx FROM rk WHERE rn > 1)
-         |SELECT CAST(count(*) AS BIGINT) AS n_dup_pars,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_with_dups,
-         |  md5(coalesce(string_agg(doc_id || ':' || idx, ';' ORDER BY doc_id, idx), ''))
-         |    AS dups_md5
-         |FROM dups""".stripMargin,
-
-    // the whole portable chain replayed FROM TEXT (q214's oracle shape):
-    // the maintained membership rule as a WHERE — a_id ∈ A∪B (below s2)
-    // minus the ledger (% 7 = 3), b ∈ the sampled C feed — min-partner
-    // verdict per fed doc, keep when no index hit
-    "q222_stream_sig_serve" ->
-      s"""WITH ${DedupQueries.portableLshPairsSql("documents")},
-         |sp AS (SELECT ((2 * max(doc_id)) // 3 + 1) AS s2 FROM documents),
-         |feed AS (
-         |  SELECT doc_id FROM documents CROSS JOIN sp
-         |  WHERE doc_id >= sp.s2 AND ${replayWhereTightSql("doc_id")}),
-         |near AS (
-         |  SELECT b_id AS doc_id, min(a_id) AS partner_id
-         |  FROM lsh_pairs CROSS JOIN sp
-         |  WHERE a_id < sp.s2 AND a_id % 7 <> 3 AND b_id >= sp.s2
-         |  GROUP BY b_id)
-         |SELECT f.doc_id,
-         |  CASE WHEN near.partner_id IS NOT NULL THEN 'drop_near'
-         |       ELSE 'keep' END AS decision,
-         |  near.partner_id
-         |FROM feed f LEFT JOIN near USING (doc_id)
-         |ORDER BY f.doc_id""".stripMargin,
-
-    // plant → detect (shared directive CTEs) → gate: noindex drops, the
-    // admission key is coalesce(canonical href's canon, own canon), the
-    // admitted DISTINCT key set summarized the q212 way; n_in counts the
-    // re-delivered feed
-    "q225_stream_directive_gate" ->
-      s"""WITH docs_s AS (
-         |  SELECT doc_id, text FROM documents WHERE ${replayWhereTightSql("doc_id")}),
-         |${WebQueries.urlFixtureSql("docs_s")},
-         |${WebQueries.canonSql},
-         |${TextQueries.markupOracleCtes("docs_s")},
-         |${WebQueries.directiveFlSql},
-         |hu AS (SELECT doc_id, href AS url FROM fl),
-         |${WebQueries.canonSqlOver("hu", "h")},
-         |keys AS (
-         |  SELECT fl.doc_id, fl.noindex,
-         |    coalesce(hcanon.canon_url, canon.canon_url) AS gate_key
-         |  FROM fl
-         |  JOIN canon ON canon.doc_id = fl.doc_id
-         |  JOIN hcanon ON hcanon.doc_id = fl.doc_id),
-         |fed AS (SELECT doc_id FROM docs_s
-         |        UNION ALL SELECT doc_id FROM docs_s WHERE doc_id % 4 = 0),
-         |adm AS (SELECT DISTINCT gate_key FROM keys WHERE NOT noindex)
-         |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
-         |  CAST((SELECT count(*) FROM keys WHERE noindex) AS BIGINT) AS n_noindex,
-         |  CAST(count(*) AS BIGINT) AS n_admitted,
-         |  md5(string_agg(gate_key, ';' ORDER BY gate_key)) AS uniq_md5
-         |FROM adm""".stripMargin,
-
-    // the shared robots rule application (hand-derived VALUES — see
-    // WebQueries.robotsGateSql) over the sampled feed's (host, path) keys
-    "q228_stream_robots_gate" ->
-      s"""WITH docs_s AS (
-         |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
-         |${WebQueries.urlFixtureSql("docs_s")},
-         |${WebQueries.hostCanonSql},
-         |${WebQueries.canonSql},
-         |${WebQueries.robotsRdocsSql},
-         |${WebQueries.robotsGateSql}
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q171_stream_dedup" ->
-      s"""WITH sampled AS (
-        |  SELECT doc_id, md5(text) AS h FROM documents
-        |  WHERE ${replayWhereSql("doc_id")}),
-        |fed AS (SELECT h FROM sampled
-        |        UNION ALL SELECT h FROM sampled WHERE doc_id % 4 = 0),
-        |u AS (SELECT DISTINCT h FROM sampled)
-        |SELECT CAST((SELECT count(*) FROM fed) AS BIGINT) AS n_in,
-        |  CAST(count(*) AS BIGINT) AS n_unique,
-        |  CAST((SELECT count(*) FROM fed) - count(*) AS BIGINT) AS n_dupes,
-        |  md5(string_agg(h, ';' ORDER BY h)) AS uniq_md5
-        |FROM u""".stripMargin,
-
-    // the batch spanDups replay (q193's CTEs) over the replay-sampled
-    // docs: the stream's distinct dup set must equal it exactly. md5 over
-    // the NUMERICALLY-ordered occurrence list (ORDER BY doc_id, pos —
-    // lexicographic string order would diverge at doc_id 10 vs 2);
-    // md5(coalesce(agg,'')) so an empty dup set hashes '' on both engines.
-    // the q198 pixel→bits→chunk→pair chain over the replay-sampled docs,
-    // summarized the q195 way (count + max + md5 of the ordered list)
-    "q202_stream_fp_dedup" ->
-      s"""WITH rdocs AS (
-        |  SELECT doc_id FROM documents WHERE ${replayWhereSql("doc_id")}),
-        |${MultimodalQueries.dhashOracleCtes("rdocs")}
-        |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(max(hamming) AS INT) AS max_hamming,
-        |  md5(coalesce(string_agg(a_id || ':' || b_id || ':' || hamming,
-        |    ';' ORDER BY a_id, b_id), ''))
-        |    AS pairs_md5
-        |FROM prs""".stripMargin,
-
-    // the q203 extraction CTEs over the replay-sampled WHERE, rolled up
-    // order-free (count + sums + md5 of the doc_id-ordered page list);
-    // doc_id || ':' renders longs identically on both engines
-    "q208_stream_markup" ->
-      s"""WITH src AS (
-        |  SELECT doc_id, text FROM documents WHERE ${replayWhereSql("doc_id")}),
-        |${TextQueries.markupOracleCtes("src")},
-        |per AS (
-        |  SELECT doc_id,
-        |    CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |    CAST(coalesce(list_aggregate(
-        |      list_transform(kept, l -> len(string_split(l, ' '))), 'sum'), 0)
-        |      AS BIGINT) AS n_words_kept,
-        |    array_to_string(kept, chr(10)) AS clean_text
-        |  FROM kp)
-        |SELECT CAST(count(*) AS BIGINT) AS n_pages,
-        |  CAST(coalesce(sum(n_kept_lines), 0) AS BIGINT) AS n_kept_lines,
-        |  CAST(coalesce(sum(n_words_kept), 0) AS BIGINT) AS n_words_kept,
-        |  md5(coalesce(string_agg(doc_id || ':' || clean_text,
-        |    ';' ORDER BY doc_id), '')) AS pages_md5
-        |FROM per""".stripMargin,
-
-    "q195_stream_span_dedup" ->
-      s"""WITH sampled AS (
-        |  SELECT doc_id, text FROM documents WHERE ${replayWhereSql("doc_id")}),
-        |${DedupQueries.spanOracleCtes("sampled")}
-        |SELECT CAST(count(*) AS BIGINT) AS n_dup_spans,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_with_dups,
-        |  md5(coalesce(string_agg(doc_id || ':' || pos, ';' ORDER BY doc_id, pos), ''))
-        |    AS dups_md5
-        |FROM dups""".stripMargin,
-
-    // q179's shared sketch chain over the replay-sampled WHERE (no exact
-    // side — the estimate IS the checked value; q179 carries the
-    // guarantee). ONE copy of the lattice SQL: OpsQueries.logHistCtes.
-    "q180_stream_loghist" ->
-      s"""WITH ${OpsQueries.logHistCtes(s"${replayWhereSql("event_id")} AND ")}
-        |SELECT event_type, n,
-        |  CAST(${OpsQueries.logHistEdgeSql("b50", hi = true)} AS BIGINT) AS p50_est_q,
-        |  CAST(${OpsQueries.logHistEdgeSql("b95", hi = true)} AS BIGINT) AS p95_est_q
-        |FROM sel ORDER BY event_type""".stripMargin,
-
-    "q92_stream_sessionize" -> sessionizeSql(replayWhereSql("user_id")),
-    "q50_sessionize" -> sessionizeSql(),
-
-    // the full k-means chain trains the model on ALL embeddings; the
-    // stream-side scoring replays as the kc-final assignment restricted
-    // to the replay cap's rows — stream ≡ batch ≡ SQL for the deployment
-    "q156_stream_cluster" ->
-      s"""WITH ${CurationQueries.kmeansSql},
-         |scap AS (SELECT vec_id FROM embeddings
-         |         WHERE ${replayWhereSql("vec_id")}),
-         |sd AS (
-         |  SELECT v.vec_id, c.cid, sum((v.qv - c.cq) * (v.qv - c.cq)) AS d2
-         |  FROM kdv v JOIN kc${CurationQueries.KmUpdates} c ON c.d = v.d
-         |  WHERE v.vec_id IN (SELECT vec_id FROM scap)
-         |  GROUP BY 1, 2),
-         |sa AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-         |    FROM sd) t WHERE rn = 1)
-         |SELECT CAST(cid AS BIGINT) AS cluster_id,
-         |  CAST(count(*) AS BIGINT) AS n_assigned,
-         |  CAST(sum(vec_id) AS BIGINT) AS id_sum
-         |FROM sa GROUP BY cid ORDER BY cluster_id""".stripMargin,
-
-    // the fixed-range binning replayed relationally; the quantile estimate
-    // is the right edge of the first bin whose cumulative count reaches
-    // ceil(q·n) — same walk as the sketch, all arithmetic exact
-    "q99_stream_histogram" ->
-      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS v FROM events
-        |       WHERE ${replayWhereSql("event_id")}),
-        |b AS (SELECT event_type,
-        |        least(greatest(CAST(floor(((v - 0.0) / 512.0) * 64) AS INT), 0), 63) AS bin,
-        |        CASE WHEN v < 0.0 OR v >= 512.0 THEN 1 ELSE 0 END AS clamped
-        |      FROM v),
-        |c AS (SELECT event_type, bin, count(*) AS c FROM b GROUP BY event_type, bin),
-        |n AS (SELECT event_type, sum(c) AS n FROM c GROUP BY event_type),
-        |cl AS (SELECT event_type, sum(clamped) AS n_clamped FROM b GROUP BY event_type),
-        |cum AS (SELECT event_type, bin,
-        |          sum(c) OVER (PARTITION BY event_type ORDER BY bin) AS cum
-        |        FROM c),
-        |est AS (
-        |  SELECT n.event_type,
-        |    (SELECT min(bin) FROM cum
-        |     WHERE cum.event_type = n.event_type AND cum.cum >= ceil(0.5 * n.n)) AS b50,
-        |    (SELECT min(bin) FROM cum
-        |     WHERE cum.event_type = n.event_type AND cum.cum >= ceil(0.95 * n.n)) AS b95
-        |  FROM n)
-        |SELECT n.event_type, CAST(n.n AS BIGINT) AS n, CAST(cl.n_clamped AS BIGINT) AS n_clamped,
-        |  0.0 + (CAST(least(e.b50, 63) + 1 AS DOUBLE) * 512.0) / 64 AS p50_est,
-        |  0.0 + (CAST(least(e.b95, 63) + 1 AS DOUBLE) * 512.0) / 64 AS p95_est
-        |FROM n JOIN cl USING (event_type) JOIN est e ON e.event_type = n.event_type
-        |ORDER BY n.event_type""".stripMargin,
-
-    // the MG guarantee as SQL: exact over-threshold terms (cnt·(k+1) > n,
-    // exact integers) with the TRUE the Spark side must reproduce via
-    // array_contains against the stream-end candidate set. The double-mod
-    // ((x % 16) + 16) % 16 mirrors Spark's pmod on SIGNED keys (DuckDB %
-    // keeps the dividend's sign) — user_id is non-negative in the test
-    // data, but the pattern must stay safe to reuse on signed keys
-    "q100_stream_heavy" ->
-      s"""WITH t AS (SELECT event_type,
-        |    CASE WHEN ((user_id % 16) + 16) % 16 < 8 THEN 'hot'
-        |         ELSE CAST(((user_id % 16) + 16) % 16 AS VARCHAR) END AS term
-        |  FROM events WHERE ${replayWhereSql("event_id")}),
-        |n AS (SELECT event_type, count(*) AS n FROM t GROUP BY event_type),
-        |c AS (SELECT event_type, term, count(*) AS cnt FROM t GROUP BY event_type, term)
-        |SELECT c.event_type, c.term, c.cnt, TRUE AS in_candidates
-        |FROM c JOIN n USING (event_type)
-        |WHERE c.cnt * 5 > n.n
-        |ORDER BY event_type, term""".stripMargin,
-
-    // q104's full Count-Min replay over the capped rows — the stream-end
-    // matrix must equal the batch sketch, so the oracle is the same
-    // generator with the replay WHERE on both sides
-    "q105_stream_cm" ->
-      OpsQueries.countMinSql(replayWhereSql("event_id")),
-
-    // q108's full HLL replay over the capped rows — the stream-end
-    // register array must equal the batch sketch, so the oracle is the
-    // same generator with the replay WHERE on both sides
-    "q109_stream_hll" ->
-      OpsQueries.hllSql(replayWhereSql("event_id")),
-
-    // the q102/q103 rebuild SQL over the capped rows: the streaming
-    // maintenance path must land on the same dimension as batch build
-    // and incremental apply
-    "q107_stream_scd2" ->
-      OpsQueries.scd2Sql(replayWhereSql("event_id")),
-
-    "q94_stream_kmv" -> kmvReplayOracle,
-
-    // identical stream-end state regardless of the store backend: the
-    // RocksDB replay answers to q94's oracle BY CONSTRUCTION (one shared
-    // string — the two entries cannot drift)
-    "q187_stream_rocksdb" -> kmvReplayOracle,
-
-    "q51_weekly_windows" ->
-      """SELECT DATE '1970-01-01'
-        |    + CAST(floor(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) / 7.0) * 7 AS INT) AS week_start,
-        |  event_type, count(*) AS cnt
-        |FROM events GROUP BY 1, 2 ORDER BY week_start, event_type""".stripMargin,
-
-    // q54's join over the user-capped rows: the stream-end match set of
-    // the two-stream replay must equal the batch join of the same sample
-    "q120_stream_attribution" ->
-      s"""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT
-        |WHERE ${replayWhereSql("c.user_id")}
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    // same-user purchases at most 6 h after a click; DuckDB's epoch_us(ts)
-    // equals Spark's unix_micros µs exactly (both read the same µs parquet)
-    "q54_attribution_join" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT
-        |ORDER BY c.user_id, click_id, purchase_id""".stripMargin,
-
-    // the batch survivor rule over the same capped sample: an event
-    // survives iff its user filed no request OR it precedes the tombstone
-    "q122_stream_tombstone" ->
-      s"""SELECT user_id, epoch_us(ts) AS ts_us, event_id
-         |FROM events
-         |WHERE ${replayWhereSql("user_id")}
-         |  AND NOT (${OpsQueries.coordSql("user_id")}
-         |             < ${graft.ops.Sampling.threshold(OpsQueries.DeleteRate)}
-         |           AND epoch_us(ts) >= $TombUs)
-         |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    // q127's integer decay fold over the capped rows, reference day per
-    // GROUP (the streaming operator's one-pass semantics)
-    "q128_stream_trending" ->
-      s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM events WHERE ${replayWhereSql("event_id")} GROUP BY 1, 2),
-         |ks AS (
-         |  SELECT event_type, n,
-         |    (max(day) OVER (PARTITION BY event_type) - day) // 7 AS k
-         |  FROM daily)
-         |SELECT event_type,
-         |  CAST(sum(n * (CASE WHEN k > 20 THEN 0 ELSE 1048576 >> k END)) AS BIGINT)
-         |    AS decay_micro,
-         |  CAST(sum(n) AS BIGINT) AS n_events
-         |FROM ks GROUP BY event_type
-         |ORDER BY decay_micro DESC, event_type""".stripMargin,
-
-    // batch truth for the left-outer stream: a click is abandoned iff no
-    // same-user purchase lands in its [0, 6 h] window (both ends
-    // inclusive — an equal-µs purchase matches, see Streams.joinedSides)
-    "q135_stream_abandoned" ->
-      s"""SELECT c.user_id, c.event_id AS click_id
-         |FROM events c
-         |WHERE ${replayWhereSql("c.user_id")}
-         |  AND c.event_type = 'click'
-         |  AND NOT EXISTS (
-         |    SELECT 1 FROM events p
-         |    WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
-         |      AND epoch_us(p.ts) - epoch_us(c.ts)
-         |          BETWEEN 0 AND 21600000000::BIGINT)
-         |ORDER BY user_id, click_id""".stripMargin,
-
-    // same exact-integer proportions; window totals over the bin cells;
-    // the zero-total CASEs mirror the Spark guards exactly
-    "q131_dist_drift" ->
-      s"""WITH b AS (SELECT event_type,
-         |    epoch_us(ts) >= ${OpsQueries.MidCorpusUs} AS late,
-         |    least(15, greatest(0, CAST(floor(value / 8.0) AS BIGINT))) AS bin
-         |  FROM events),
-         |cells AS (SELECT event_type, bin,
-         |    CAST(count(*) FILTER (NOT late) AS BIGINT) AS a,
-         |    CAST(count(*) FILTER (late) AS BIGINT) AS b
-         |  FROM b GROUP BY 1, 2),
-         |t AS (SELECT event_type, bin, a, b,
-         |    CAST(sum(a) OVER (PARTITION BY event_type) AS BIGINT) AS na,
-         |    CAST(sum(b) OVER (PARTITION BY event_type) AS BIGINT) AS nb
-         |  FROM cells),
-         |p AS (SELECT event_type, bin,
-         |    CASE WHEN na = 0 THEN 0
-         |         ELSE CAST(a * $DriftScale // na AS BIGINT) END AS p_early_micro,
-         |    CASE WHEN nb = 0 THEN 0
-         |         ELSE CAST(b * $DriftScale // nb AS BIGINT) END AS p_late_micro
-         |  FROM t)
-         |SELECT event_type, bin, p_early_micro, p_late_micro,
-         |  abs(p_early_micro - p_late_micro) > $DriftCutMicro AS drifted
-         |FROM p ORDER BY event_type, bin""".stripMargin,
-
-    // the matrix replayed with the join the Spark side avoids
-    "q130_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |              epoch_us(ts) // 604800000000 AS week FROM events),
-        |c AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY user_id)
-        |SELECT c.cohort_week, uw.week - c.cohort_week AS week_offset,
-        |  CAST(count(*) AS BIGINT) AS n_active
-        |FROM uw JOIN c USING (user_id)
-        |GROUP BY 1, 2
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-
-    // the q54 join + the same integer split: floor share to everyone,
-    // remainder to the earliest click (largest gap, ties to lowest id)
-    "q129_multitouch" ->
-      """WITH pairs AS (
-        |  SELECT c.user_id, p.event_id AS purchase_id, c.event_id AS click_id,
-        |    epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-        |  FROM events c JOIN events p
-        |    ON c.user_id = p.user_id
-        |   AND c.event_type = 'click' AND p.event_type = 'purchase'
-        |   AND epoch_us(p.ts) - epoch_us(c.ts) BETWEEN 0 AND 21600000000::BIGINT),
-        |ranked AS (
-        |  SELECT user_id, purchase_id, click_id,
-        |    count(*) OVER (PARTITION BY purchase_id) AS n,
-        |    row_number() OVER (PARTITION BY purchase_id
-        |                       ORDER BY gap_us DESC, click_id) AS rk
-        |  FROM pairs)
-        |SELECT user_id, purchase_id, click_id,
-        |  CAST(1048576 // n + CASE WHEN rk = 1 THEN 1048576 % n ELSE 0 END
-        |    AS BIGINT) AS credit_micro
-        |FROM ranked
-        |ORDER BY purchase_id, click_id""".stripMargin)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.text.TextAnalysis._
 
 /** Text-analysis queries over `documents`. Token stats, quality scores and
@@ -35,7 +36,7 @@ object TextQueries extends graft.QueryModule {
   private val PiiPhone = "[0-9]{3}-[0-9]{4}"
   private val PiiLongId = "[0-9]{9,}"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // MARKUP → TRAINING-TEXT EXTRACTION (round 13): the front-most stage
     // of a web-corpus pipeline (C4-style, Raffel et al. 2020) — strip
     // tags, decode the five XML entities (amp LAST — &amp;lt; must yield
@@ -48,14 +49,25 @@ object TextQueries extends graft.QueryModule {
     // the extraction chain is compared end-to-end per doc. All codegen'd
     // string functions over the page's line array; text never shuffles
     // (the per-doc rollup is computed in-row).
-    "q203_markup_extract" -> ((s, dir) =>
+    Entry("q203_markup_extract", (s, dir) =>
       markupExtracted(s, dir)
         .select(col("doc_id"), col("n_lines"),
           size(col("kept")).cast("long").as("n_kept_lines"),
           expr("aggregate(kept, 0, (a, l) -> a + size(split(l, ' ')))")
             .cast("long").as("n_words_kept"),
           array_join(col("kept"), "\n").as("clean_text"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // the identical page build (list form — order-preserving, no unnest),
+      // then the same strip → decode(amp last) → collapse → trim → prose
+      // rule, all as list_transform/list_filter over the page lines
+      s"""WITH ${markupOracleCtes()}
+        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
+        |  CAST(len(kept) AS BIGINT) AS n_kept_lines,
+        |  CAST(coalesce(list_aggregate(
+        |    list_transform(kept, l -> len(string_split(l, ' '))), 'sum'), 0)
+        |    AS BIGINT) AS n_words_kept,
+        |  array_to_string(kept, chr(10)) AS clean_text
+        |FROM kp ORDER BY doc_id""".stripMargin)),
 
     // WEB-CURATION COMPOSITION (round 13) — the q165 discipline over the
     // round's new stages, composed the way a web corpus is actually
@@ -79,7 +91,7 @@ object TextQueries extends graft.QueryModule {
     // (higher-order filter on the stored array — the corpus text moves
     // exactly once, on the doc_id join). Output: per-doc paragraph
     // counts + the md5 of the cleaned reassembly.
-    "q219_paragraph_dedup" -> ((s, dir) => {
+    Entry("q219_paragraph_dedup", (s, dir) => {
       // persisted (advisor r15 #1, the q204/q217 lesson): ext feeds three
       // consumer subtrees — pars→keeper, pars→keptIdx probe, and the final
       // reassembly join — and the string-heavy page build + extraction
@@ -103,9 +115,32 @@ object TextQueries extends graft.QueryModule {
               coalesce(col("ki"), array().cast("array<int>")), i))))
             .as("clean_md5"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the shared page/extraction CTEs → 1-based position explode →
+      // earliest-(doc,idx) keeper via row_number → per-doc reassembly
+      // (string_agg FILTER rn=1 ORDER BY idx), docs with zero survivors
+      // kept by the LEFT join with md5('') like the engine's empty filter
+      s"""WITH ${markupOracleCtes()},
+         |pr AS (
+         |  SELECT doc_id, CAST(i - 1 AS INT) AS idx, kept[CAST(i AS INT)] AS par
+         |  FROM (SELECT doc_id, kept, unnest(range(1, len(kept) + 1)) AS i
+         |        FROM kp) t),
+         |rk AS (
+         |  SELECT doc_id, idx, par,
+         |    row_number() OVER (PARTITION BY md5(par) ORDER BY doc_id, idx) AS rn
+         |  FROM pr),
+         |ag AS (
+         |  SELECT doc_id,
+         |    count(*) FILTER (WHERE rn = 1) AS n_kept,
+         |    string_agg(par, ' ' ORDER BY idx) FILTER (WHERE rn = 1) AS txt
+         |  FROM rk GROUP BY 1)
+         |SELECT kp.doc_id, CAST(len(kp.kept) AS BIGINT) AS n_pars,
+         |  CAST(coalesce(ag.n_kept, 0) AS BIGINT) AS n_kept,
+         |  md5(coalesce(ag.txt, '')) AS clean_md5
+         |FROM kp LEFT JOIN ag USING (doc_id)
+         |ORDER BY kp.doc_id""".stripMargin)),
 
-    "q204_web_curation" -> ((s, dir) => {
+    Entry("q204_web_curation", (s, dir) => {
       // the extraction chain feeds the dedup hash projection, the
       // survivor semi-join AND the span tokenization — persist it (the
       // q151/q169 loop-invariant lesson) or the string-heavy page build
@@ -117,7 +152,35 @@ object TextQueries extends graft.QueryModule {
       val surv = graft.dedup.Dedup.exactDedup(ext, col("text"), col("doc_id"))
       graft.dedup.Dedup.spanStats(surv, col("text"), col("doc_id"), k = 8)
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the composed replay: extraction CTEs → non-empty pages → md5
+      // min-id exact dedup on the extracted text → the shared span-dedup
+      // CTE chain (q193's oracle) over the survivors
+      s"""WITH ${markupOracleCtes()},
+        |ext AS (
+        |  SELECT doc_id, array_to_string(kept, ' ') AS text
+        |  FROM kp WHERE len(kept) > 0),
+        |reps AS (
+        |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
+        |  FROM ext),
+        |surv AS (
+        |  SELECT ext.doc_id, ext.text FROM ext
+        |  JOIN reps ON reps.doc_id = ext.doc_id AND reps.rep = ext.doc_id),
+        |${DedupQueries.spanOracleCtes("surv")},
+        |cov AS (
+        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
+        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
+        |  GROUP BY doc_id),
+        |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        |  CAST(greatest(len(t.w) - 7, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
+        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
+        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
+        |FROM toks t
+        |LEFT JOIN dc USING (doc_id)
+        |LEFT JOIN cov USING (doc_id)
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // PII REDACTION AUDIT (round 10): q96 checks per-doc detection +
     // byte-exact scrub of two classes; this is the GOVERNANCE view a
@@ -131,7 +194,7 @@ object TextQueries extends graft.QueryModule {
     // in the oracle) and then runs the REAL scrub: three ordered
     // regexp_replace passes + regexp_count footprint columns. One corpus
     // scan, per-source agg — nothing shuffles but the 20-row rollup.
-    "q170_pii_redaction" -> ((s, dir) => {
+    Entry("q170_pii_redaction", (s, dir) => {
       val planted = t(s, dir, "documents").select(col("doc_id"), col("source"),
         concat(col("text"),
           when(col("doc_id") % 3 === 0,
@@ -164,7 +227,35 @@ object TextQueries extends graft.QueryModule {
           sum(length(col("text")).cast("long") - length(col("clean")).cast("long"))
             .as("chars_removed"))
         .orderBy("source")
-    }),
+    }, Some(
+      // same planting (CASE/||), same three ordered global regexp_replace
+      // passes (RE2 'g' flag = Spark's replace-all default), same patterns
+      s"""WITH aug AS (
+         |  SELECT doc_id, source,
+         |    text ||
+         |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' ELSE '' END ||
+         |    CASE WHEN doc_id % 5 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' today' ELSE '' END ||
+         |    CASE WHEN doc_id % 7 = 0 THEN ' id 9' || lpad(CAST(doc_id % 100000000 AS VARCHAR), 8, '0') ELSE '' END
+         |      AS text2
+         |  FROM documents),
+         |sc AS (
+         |  SELECT doc_id, source, text2,
+         |    regexp_replace(regexp_replace(regexp_replace(text2,
+         |      '$PiiEmail', '<EMAIL>', 'g'),
+         |      '$PiiPhone', '<PHONE>', 'g'),
+         |      '$PiiLongId', '<ID>', 'g') AS clean,
+         |    len(regexp_extract_all(text2, '$PiiEmail')) AS n_emails,
+         |    len(regexp_extract_all(text2, '$PiiPhone')) AS n_phones,
+         |    len(regexp_extract_all(text2, '$PiiLongId')) AS n_ids
+         |  FROM aug)
+         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(count(CASE WHEN n_emails + n_phones + n_ids > 0 THEN 1 END) AS BIGINT)
+         |    AS n_docs_with_pii,
+         |  CAST(sum(n_emails) AS BIGINT) AS n_emails,
+         |  CAST(sum(n_phones) AS BIGINT) AS n_phones,
+         |  CAST(sum(n_ids) AS BIGINT) AS n_ids,
+         |  CAST(sum(length(text2) - length(clean)) AS BIGINT) AS chars_removed
+         |FROM sc GROUP BY source ORDER BY source""".stripMargin)),
 
     // SUBWORD TOKEN COUNTING (round 10): the real token-budget estimate —
     // greedy longest-prefix segmentation against a fixed WordPiece-style
@@ -175,7 +266,7 @@ object TextQueries extends graft.QueryModule {
     // tokenizer actually charges. One narrow kernel map per doc — the
     // oracle replays the greedy walk with a recursive CTE over word
     // instances against the SAME interpolated vocabulary.
-    "q178_subword_count" -> ((s, dir) =>
+    Entry("q178_subword_count", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
           graft.functions.Subword.subwordStats(col("text")).as("sw"))
@@ -183,7 +274,31 @@ object TextQueries extends graft.QueryModule {
         .select(col("doc_id"),
           coalesce(col("sw.n_words"), lit(0L)).as("n_words"),
           coalesce(col("sw.n_subwords"), lit(0L)).as("n_subwords"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // the greedy walk as a recursive CTE: one row per (word instance,
+      // step); the longest matching unit advances pos, unknown chars
+      // advance 1; the terminal row (pos > len) carries the unit count
+      s"""WITH RECURSIVE units(unit) AS (
+         |  VALUES ${graft.text.TextAnalysis.SubwordVocab.map(u => s"('$u')").mkString(", ")}),
+         |wi AS (
+         |  SELECT doc_id, i, w[i] AS word FROM (
+         |    SELECT doc_id, w, generate_subscripts(w, 1) AS i FROM
+         |      (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t0) t
+         |  WHERE w[i] <> ''),
+         |seg AS (
+         |  SELECT doc_id, i, word, 1 AS pos, 0 AS n FROM wi
+         |  UNION ALL
+         |  SELECT doc_id, i, word,
+         |    pos + coalesce((SELECT max(len(unit)) FROM units
+         |                    WHERE unit = substr(word, pos, len(unit))), 1),
+         |    n + 1
+         |  FROM seg WHERE pos <= len(word)),
+         |fin AS (SELECT doc_id, i, n FROM seg WHERE pos > len(word))
+         |SELECT d.doc_id,
+         |  CAST(coalesce(count(fin.i), 0) AS BIGINT) AS n_words,
+         |  CAST(coalesce(sum(fin.n), 0) AS BIGINT) AS n_subwords
+         |FROM documents d LEFT JOIN fin USING (doc_id)
+         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
 
     // SUBWORD VOCAB AS DATA (round 11, judge r10 Next #5): the production
     // tokenization shape — the vocab is a TABLE loaded at runtime, not a
@@ -196,7 +311,7 @@ object TextQueries extends graft.QueryModule {
     // sorted-string-probe kernel). The trained table collapses to ≤ 66
     // driver rows → rides the serialized expression like a k-means
     // codebook; loud 1<<22 ceiling in buildSubwordVocab.
-    "q184_subword_vocab_data" -> ((s, dir) => {
+    Entry("q184_subword_vocab_data", (s, dir) => {
       val docs = t(s, dir, "documents")
       val words = docs
         .select(explode(split(col("text"), " ")).as("w"))
@@ -219,7 +334,39 @@ object TextQueries extends graft.QueryModule {
           coalesce(col("sw.n_words"), lit(0L)).as("n_words"),
           coalesce(col("sw.n_subwords"), lit(0L)).as("n_subwords"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // q178's recursive-CTE walk with the vocab REGENERATED from the
+      // corpus: the same top-40 lowercase-bigram training (count DESC,
+      // gram ASC — the unique-gram tiebreak makes the rank-40 cut
+      // deterministic on both engines) unioned with letters a-z
+      """WITH RECURSIVE wi AS (
+        |  SELECT doc_id, i, w[i] AS word FROM (
+        |    SELECT doc_id, w, generate_subscripts(w, 1) AS i FROM
+        |      (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t0) t
+        |  WHERE w[i] <> ''),
+        |bg AS (
+        |  SELECT unnest(list_transform(range(1, len(word)),
+        |    j -> substr(word, CAST(j AS INT), 2))) AS g
+        |  FROM wi WHERE len(word) >= 2),
+        |topg AS (SELECT g FROM (
+        |  SELECT g, count(*) AS c FROM bg WHERE regexp_matches(g, '^[a-z]{2}$')
+        |  GROUP BY g ORDER BY c DESC, g ASC LIMIT 40)),
+        |units AS (SELECT g AS unit FROM topg
+        |  UNION ALL SELECT chr(96 + CAST(x AS INT)) FROM range(1, 27) t(x)),
+        |seg AS (
+        |  SELECT doc_id, i, word, 1 AS pos, 0 AS n FROM wi
+        |  UNION ALL
+        |  SELECT doc_id, i, word,
+        |    pos + coalesce((SELECT max(len(unit)) FROM units
+        |                    WHERE unit = substr(word, pos, len(unit))), 1),
+        |    n + 1
+        |  FROM seg WHERE pos <= len(word)),
+        |fin AS (SELECT doc_id, i, n FROM seg WHERE pos > len(word))
+        |SELECT d.doc_id,
+        |  CAST(coalesce(count(fin.i), 0) AS BIGINT) AS n_words,
+        |  CAST(coalesce(sum(fin.n), 0) AS BIGINT) AS n_subwords
+        |FROM documents d LEFT JOIN fin USING (doc_id)
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
 
     // BPE MERGE LEARNING (round 11): q184 LOADS a trained vocab; q185
     // TRAINS one — 5 standard BPE rounds (count adjacent symbol pairs
@@ -231,7 +378,7 @@ object TextQueries extends graft.QueryModule {
     // merge application as non-overlapping string replace over
     // ()-delimited symbols — exactly the kernel's left-to-right rule
     // ([a,a,a] + (a,a) → [aa,a]).
-    "q185_bpe_train" -> ((s, dir) => {
+    Entry("q185_bpe_train", (s, dir) => {
       val merges = graft.text.Bpe.train(
         graft.text.Bpe.wordTable(t(s, dir, "documents"), col("text")),
         rounds = 5)
@@ -239,7 +386,10 @@ object TextQueries extends graft.QueryModule {
         .select(col("round"), col("left").as("merge_l"),
           col("right").as("merge_r"), col("cnt"))
         .orderBy("round")
-    }),
+    }, Some(
+      // 5 BPE rounds replayed as chained CTEs (generated — see
+      // Bpe.oracleSql for the replace-over-delimited-symbols merge rule)
+      graft.text.Bpe.oracleSql(5))),
 
     // BPE AT A REALISTIC MERGE COUNT (round 14, judge r13 Next #6): q185's
     // 5 rounds demonstrate the operator; real tokenizers train thousands.
@@ -252,7 +402,7 @@ object TextQueries extends graft.QueryModule {
     // generated CTE chain at 64 rounds — 64 chained
     // count→argmax→merge-apply CTEs, exhaustion-consistent on both sides
     // (a corpus that runs out of pairs stops emitting rows identically).
-    "q211_bpe_train_deep" -> ((s, dir) => {
+    Entry("q211_bpe_train_deep", (s, dir) => {
       val merges = graft.text.Bpe.train(
         graft.text.Bpe.wordTable(t(s, dir, "documents"), col("text")),
         rounds = 64)
@@ -260,7 +410,9 @@ object TextQueries extends graft.QueryModule {
         .select(col("round"), col("left").as("merge_l"),
           col("right").as("merge_r"), col("cnt"))
         .orderBy("round")
-    }),
+    }, Some(
+      // the same generated chain at the realistic depth
+      graft.text.Bpe.oracleSql(64))),
 
     // BPE APPLICATION (round 11): q185's learned merges applied to the
     // corpus — true BPE tokenization (merges in LEARNED ORDER, each a
@@ -269,7 +421,7 @@ object TextQueries extends graft.QueryModule {
     // charset) and their total BPE token count; docs with no training
     // words keep a 0/0 row. Training re-runs in-query (deterministic), so
     // the oracle replays train + apply in one generated SQL.
-    "q186_bpe_apply" -> ((s, dir) => {
+    Entry("q186_bpe_apply", (s, dir) => {
       import graft.functions.BpeMerge.bpeMerge
       val docs = t(s, dir, "documents")
       // trainFull: the generated oracle interpolates exactly 5 merge
@@ -294,7 +446,9 @@ object TextQueries extends graft.QueryModule {
           coalesce(col("n_words"), lit(0L)).as("n_words"),
           coalesce(col("n_bpe_tokens"), lit(0L)).as("n_bpe_tokens"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // train-replay CTEs + per-word-instance application + per-doc rollup
+      graft.text.Bpe.applyOracleSql(5))),
 
     // THE CLOSED BPE LOOP (round 12, judge r11 Next #3): train → EXPORT the
     // trained vocabulary as a table → segment → count. q185 learns merges,
@@ -310,7 +464,7 @@ object TextQueries extends graft.QueryModule {
     // driver rows riding the serialized expression like a k-means
     // codebook. Oracle replays train + export + walk in one generated SQL
     // (Bpe.segmentOracleSql).
-    "q191_bpe_vocab_segment" -> ((s, dir) => {
+    Entry("q191_bpe_vocab_segment", (s, dir) => {
       val docs = t(s, dir, "documents")
       val merges = graft.text.Bpe.trainFull(
         graft.text.Bpe.wordTable(docs, col("text")), rounds = 5)
@@ -325,19 +479,27 @@ object TextQueries extends graft.QueryModule {
           coalesce(col("sw.n_words"), lit(0L)).as("n_words"),
           coalesce(col("sw.n_subwords"), lit(0L)).as("n_subwords"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // train-replay CTEs + vocab export (merged symbols ∪ a-z) + q178's
+      // greedy longest-prefix recursive-CTE walk against that vocabulary
+      graft.text.Bpe.segmentOracleSql(5))),
 
-    "q30_token_stats" -> ((s, dir) =>
+    Entry("q30_token_stats", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         length(col("text")).as("n_chars"),
         tokenCountWs(col("text")).as("ws_tokens"),
         tokenCountBpe(col("text")).as("bpe_tokens"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      """SELECT doc_id, length(text) AS n_chars,
+        |  CASE WHEN trim(text) = '' THEN 0
+        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS ws_tokens,
+        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // textStats evaluated ONCE per row in its own projection (non-cheap
     // expression → CollapseProject keeps it), ratios derived from the struct
-    "q31_text_quality" -> ((s, dir) =>
+    Entry("q31_text_quality", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         textStats(col("text")).as("st"),
@@ -350,14 +512,50 @@ object TextQueries extends graft.QueryModule {
           stopwordRatioFrom(col("st")).as("stopword_ratio"),
           meanWordLenFrom(col("st")).as("mean_word_len"),
           qualityScoreFrom(col("st"), col("punct_ratio"), col("digit_ratio")).as("quality"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      s"""WITH base AS (
+         |  SELECT doc_id, text, length(text) AS n,
+         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
+         |  FROM documents),
+         |m AS (
+         |  SELECT doc_id,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
+         |    CASE WHEN len(toks) = 0 THEN 0.0
+         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
+         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
+         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
+         |  FROM base)
+         |SELECT doc_id, punct_ratio, digit_ratio, stopword_ratio, mean_word_len,
+         |  least(stopword_ratio * 4.0, 1.0) * 0.3
+         |    + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
+         |    + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
+         |    + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
+         |            WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
+         |FROM m ORDER BY doc_id""".stripMargin)),
 
     // profile hits evaluated once per row (own projection, like q31's st)
-    "q32_langid" -> ((s, dir) =>
+    Entry("q32_langid", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"), col("text"), langProfileHits(col("text")).as("h"))
         .select(col("doc_id"), langIdFrom(col("h"), col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // stopword-profile scoring + CJK script check — pure portable counting
+      s"""WITH base AS (
+         |  SELECT doc_id, text,
+         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
+         |  FROM documents),
+         |scored AS (
+         |  SELECT doc_id, text, list_aggregate($LangCandsSql, 'max') AS best
+         |  FROM base)
+         |SELECT doc_id,
+         |  CASE WHEN len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')) > 0 THEN 'zh'
+         |       WHEN best.score > 0 THEN best.lang
+         |       ELSE 'und' END AS lang_pred
+         |FROM scored ORDER BY doc_id""".stripMargin)),
 
     // winnowing with the PORTABLE rolling-31 k-gram hash (full DuckDB twin:
     // window-min + first-occurrence distinct, pinned by count, xor and min
@@ -365,7 +563,7 @@ object TextQueries extends graft.QueryModule {
     // ordering can't matter). The xxhash64 production variant is pinned
     // native≡HOF in TextSpec. The winnow array is evaluated in its own
     // projection (non-cheap expression — one evaluation, three consumers).
-    "q33_fingerprint" -> ((s, dir) =>
+    Entry("q33_fingerprint", (s, dir) =>
       t(s, dir, "documents").select(
           col("doc_id"),
           contentFingerprint(col("text")).as("content_fp"),
@@ -374,7 +572,60 @@ object TextQueries extends graft.QueryModule {
           size(col("fps")).as("n_winnowed"),
           aggregate(col("fps"), lit(0L), (a, x) => a.bitwiseXOR(x)).as("fp_xor"),
           array_min(col("fps")).as("fp_min"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // Full winnow twin (k=8, w=4): each k-gram's rolling 31-hash is ONE
+      // polynomial in HUGEINT — seed·31^8 + Σ code·31^j < 2^100 fits 128-bit,
+      // so a single mod 2^64 at the end is exact (mod is +/×-homomorphic) —
+      // then CONVERTED TO SIGNED before the window minima (Spark compares
+      // Longs signed; an unsigned min would pick different fingerprints),
+      // sliding-window min over w=4, distinct, count/xor/min. Degenerate
+      // cases mirror the expression: fewer grams than a window → distinct
+      // gram hashes; no grams → empty set (xor 0, min NULL). ASCII corpus:
+      // per-character code points equal unsigned UTF-8 bytes (same
+      // assumption as q35, verified by q35 staying green).
+      """WITH g AS (
+        |  SELECT doc_id, text,
+        |    list_transform(
+        |      list_transform(range(1, greatest(length(text) - 7, 0) + 1), i ->
+        |        (1125899906842597::HUGEINT * 852891037441
+        |         + ascii(substr(text, CAST(i AS INT), 1))::HUGEINT     * 27512614111
+        |         + ascii(substr(text, CAST(i + 1 AS INT), 1))::HUGEINT * 887503681
+        |         + ascii(substr(text, CAST(i + 2 AS INT), 1))::HUGEINT * 28629151
+        |         + ascii(substr(text, CAST(i + 3 AS INT), 1))::HUGEINT * 923521
+        |         + ascii(substr(text, CAST(i + 4 AS INT), 1))::HUGEINT * 29791
+        |         + ascii(substr(text, CAST(i + 5 AS INT), 1))::HUGEINT * 961
+        |         + ascii(substr(text, CAST(i + 6 AS INT), 1))::HUGEINT * 31
+        |         + ascii(substr(text, CAST(i + 7 AS INT), 1))::HUGEINT
+        |        ) % 18446744073709551616::HUGEINT),
+        |      h -> CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
+        |                     THEN h - 18446744073709551616::HUGEINT
+        |                     ELSE h END AS BIGINT)) AS grams
+        |  FROM documents),
+        |w AS (
+        |  SELECT doc_id, text,
+        |    CASE WHEN len(grams) >= 4 THEN
+        |      list_transform(range(1, len(grams) - 2), j ->
+        |        list_aggregate(grams[CAST(j AS INT):CAST(j + 3 AS INT)], 'min'))
+        |    ELSE grams END AS mins
+        |  FROM g),
+        |d AS (SELECT doc_id, text, list_distinct(mins) AS fps FROM w),
+        |cf AS (
+        |  SELECT doc_id,
+        |    CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
+        |              THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT) AS content_fp
+        |  FROM (
+        |    SELECT doc_id,
+        |      list_reduce(
+        |        list_prepend(CAST(1125899906842597 AS HUGEINT),
+        |          list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS HUGEINT))),
+        |        (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT) AS h
+        |    FROM documents))
+        |SELECT d.doc_id, cf.content_fp,
+        |  CAST(len(fps) AS INT) AS n_winnowed,
+        |  list_reduce(list_prepend(CAST(0 AS BIGINT), fps), (a, b) -> xor(a, b)) AS fp_xor,
+        |  list_aggregate(fps, 'min') AS fp_min
+        |FROM d JOIN cf ON d.doc_id = cf.doc_id
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // overlapping character-window chunking (200-char windows, 40 overlap)
     // — long-document → training-sample split, one row per chunk
@@ -383,7 +634,7 @@ object TextQueries extends graft.QueryModule {
     // boilerplate/spam drop filters for web-scale corpora. One native pass
     // per row (struct in its own projection); fractions are single
     // divisions of exact integers → bit-identical across engines.
-    "q57_repetition" -> ((s, dir) =>
+    Entry("q57_repetition", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"), length(col("text")).as("n_chars"),
         graft.functions.Repetition.repetitionStats(col("text")).as("rep"))
@@ -401,7 +652,30 @@ object TextQueries extends graft.QueryModule {
           col("rep.top3_cnt").as("top3_cnt"),
           ((col("rep.top3_cnt") * length(col("rep.top3_gram"))).cast("double") /
             col("n_chars").cast("double")).as("top3_frac"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // tokenization is string_split(text, ' ') on BOTH sides by design (the
+      // native expression mirrors it, empty tokens kept); top-gram ties break
+      // (count DESC, gram binary-ASC) identically
+      """WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS ws, length(text) AS nc FROM documents),
+        |w AS (SELECT doc_id, len(ws) AS n_words, len(list_distinct(ws)) AS n_distinct FROM d),
+        |g2 AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)), i -> array_to_string(ws[i:i+1], ' '))) AS gram FROM d),
+        |c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY doc_id, gram),
+        |t2 AS (SELECT doc_id, gram, c FROM (
+        |  SELECT doc_id, gram, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram ASC) AS rn FROM c2) WHERE rn = 1),
+        |g3 AS (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1), i -> array_to_string(ws[i:i+2], ' '))) AS gram FROM d),
+        |c3 AS (SELECT doc_id, gram, count(*) AS c FROM g3 GROUP BY doc_id, gram),
+        |t3 AS (SELECT doc_id, gram, c FROM (
+        |  SELECT doc_id, gram, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram ASC) AS rn FROM c3) WHERE rn = 1)
+        |SELECT d.doc_id, CAST(w.n_words AS INT) AS n_words,
+        |  CAST(w.n_distinct AS INT) AS n_distinct_words,
+        |  CAST(w.n_words - w.n_distinct AS DOUBLE) / CAST(w.n_words AS DOUBLE) AS dup_word_frac,
+        |  t2.gram AS top2_gram, CAST(t2.c AS INT) AS top2_cnt,
+        |  CAST(t2.c * length(t2.gram) AS DOUBLE) / CAST(d.nc AS DOUBLE) AS top2_frac,
+        |  t3.gram AS top3_gram, CAST(t3.c AS INT) AS top3_cnt,
+        |  CAST(t3.c * length(t3.gram) AS DOUBLE) / CAST(d.nc AS DOUBLE) AS top3_frac
+        |FROM d JOIN w USING (doc_id)
+        |LEFT JOIN t2 USING (doc_id) LEFT JOIN t3 USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // TF-IDF-style distinctive terms: top-3 terms per document by
     // tf·(N+1)/(df+1). The idf is the LINEAR inverse-frequency form, not
@@ -411,7 +685,7 @@ object TextQueries extends graft.QueryModule {
     // combinable aggs; the vocab→df join broadcasts (term dictionaries
     // grow sublinearly — Heaps' law — so the build side stays small
     // relative to the corpus even at 100 TB).
-    "q58_tfidf_topk" -> ((s, dir) => {
+    Entry("q58_tfidf_topk", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val nDocs = docs.count() // parquet metadata count — no scan
       val tf = docs
@@ -427,7 +701,20 @@ object TextQueries extends graft.QueryModule {
         .where(col("rnk") <= 3)
         .select("doc_id", "rnk", "term", "tf", "df", "score")
         .orderBy("doc_id", "rnk")
-    }),
+    }, Some(
+      // score = tf·(N+1)/(df+1): one division of exact integers (see the
+      // query registration for why linear idf, not log)
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
+        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
+        |    CAST(tf.tf * ((SELECT count(*) FROM documents) + 1) AS DOUBLE) / (df.df + 1) AS score
+        |  FROM tf JOIN df USING (term))
+        |SELECT doc_id, rnk, term, tf, df, score FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rnk
+        |  FROM scored)
+        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin)),
 
     // inverted-index build: term → (df, postings ordered by doc_id with
     // term frequencies) — the retrieval-side materialization of q58's
@@ -438,7 +725,7 @@ object TextQueries extends graft.QueryModule {
     // built lists are posexploded back to flat (term, df, pos, doc_id, tf)
     // rows for the oracle compare (a nested list-of-struct column defeats
     // the harness's lexsort), which also round-trip-checks the list order.
-    "q67_inverted_index" -> ((s, dir) =>
+    Entry("q67_inverted_index", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
@@ -449,7 +736,17 @@ object TextQueries extends graft.QueryModule {
           posexplode(col("postings")).as(Seq("pos", "p")))
         .select(col("term"), col("df"), col("pos").cast("int").as("pos"),
           col("p.doc_id").as("doc_id"), col("p.tf").as("tf"))
-        .orderBy("term", "pos")),
+        .orderBy("term", "pos"), Some(
+      """WITH tf AS (
+        |  SELECT term, doc_id, count(*) AS tf
+        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+        |  GROUP BY term, doc_id),
+        |d AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
+        |SELECT tf.term, d.df,
+        |  CAST(row_number() OVER (PARTITION BY tf.term ORDER BY tf.doc_id) - 1 AS INT) AS pos,
+        |  tf.doc_id, tf.tf
+        |FROM tf JOIN d USING (term)
+        |ORDER BY term, pos""".stripMargin)),
 
     // BM25-style keyword retrieval: top-20 docs for a fixed 3-term query.
     // Classic BM25 term saturation (k1=1.2, b=0.75) with the LINEAR idf
@@ -459,7 +756,7 @@ object TextQueries extends graft.QueryModule {
     // addition (a double sum's association order differs between Spark's
     // partial aggregation and DuckDB — floors make that unobservable).
     // Shape: tf filter → broadcast df join → narrow scoring → TakeOrdered.
-    "q68_bm25_topk" -> ((s, dir) => {
+    Entry("q68_bm25_topk", (s, dir) => {
       val qterms = Bm25QueryTerms
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val withDl = docs.select(col("doc_id"),
@@ -486,7 +783,28 @@ object TextQueries extends graft.QueryModule {
         .orderBy(col("score_micro").desc, col("doc_id"))
         .limit(20)
         .select("doc_id", "n_terms_hit", "score_micro")
-    }),
+    }, Some(
+      // float factors mirror the Spark expression TREE op-for-op (each IEEE
+      // op is exactly rounded, so identical trees ⇒ identical doubles); the
+      // floor-to-micro-units before the sum makes aggregation order moot
+      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
+         |       WHERE term IN (${Bm25QueryTerms.map(t => s"'$t'").mkString(", ")})
+         |       GROUP BY doc_id, term),
+         |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY term),
+         |dl AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
+         |g AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl, count(*) AS n FROM dl),
+         |scored AS (
+         |  SELECT tf.doc_id,
+         |    CAST(floor(1000000.0 *
+         |      ((CAST(g.n - dfq.df AS DOUBLE) + 0.5) / (CAST(dfq.df AS DOUBLE) + 0.5)) *
+         |      ((CAST(tf.tf AS DOUBLE) * 2.2) /
+         |       (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + (0.75 * CAST(dl.dl AS DOUBLE)) / g.avgdl)))
+         |    ) AS BIGINT) AS s_term
+         |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), g)
+         |SELECT doc_id, count(*) AS n_terms_hit, CAST(sum(s_term) AS BIGINT) AS score_micro
+         |FROM scored GROUP BY doc_id
+         |ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin)),
 
     // per-source DATA CARD: the one-pass dataset documentation artifact a
     // training corpus ships with — volume, token mass, exact-dup rate,
@@ -494,7 +812,7 @@ object TextQueries extends graft.QueryModule {
     // aggregates (quality floored to micro-units per doc BEFORE the sum)
     // so every column is bit-portable; one map-side-combinable pass plus
     // the (source, md5) dedup shuffle.
-    "q73_data_card" -> ((s, dir) => {
+    Entry("q73_data_card", (s, dir) => {
       val scored = t(s, dir, "documents")
         .select(col("source"), col("lang"), col("n_chars"),
           col("text"), textStats(col("text")).as("st"),
@@ -515,7 +833,43 @@ object TextQueries extends graft.QueryModule {
           max(col("n_chars")).as("max_chars"))
         .withColumn("n_exact_dups", col("n_docs") - col("n_distinct_content"))
         .orderBy("source")
-    }),
+    }, Some(
+      // q31's quality formula (already pinned bit-exact there) floored to
+      // micro-units per doc, then integer sums per source
+      s"""WITH base AS (
+         |  SELECT source, lang, n_chars, text, length(text) AS n,
+         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
+         |  FROM documents),
+         |m AS (
+         |  SELECT source, lang, n_chars, text, len(rawtoks) AS toks_n,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
+         |    CASE WHEN len(toks) = 0 THEN 0.0
+         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
+         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
+         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
+         |  FROM base),
+         |scored AS (
+         |  SELECT source, lang, n_chars, toks_n, md5(text) AS h,
+         |    CAST(floor((least(stopword_ratio * 4.0, 1.0) * 0.3
+         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
+         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
+         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
+         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2)
+         |      * 1000000.0) AS BIGINT) AS q_micro
+         |  FROM m)
+         |SELECT source, count(*) AS n_docs,
+         |  CAST(sum(n_chars) AS BIGINT) AS n_chars_total,
+         |  CAST(sum(toks_n) AS BIGINT) AS n_tokens_ws,
+         |  count(DISTINCT h) AS n_distinct_content,
+         |  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
+         |  CAST(sum(q_micro) AS BIGINT) AS sum_quality_micro,
+         |  min(n_chars) AS min_chars, max(n_chars) AS max_chars,
+         |  count(*) - count(DISTINCT h) AS n_exact_dups
+         |FROM scored GROUP BY source ORDER BY source""".stripMargin)),
 
     // benchmark DECONTAMINATION: flag corpus docs sharing any word 4-gram
     // with the held-out eval set (source 'src0' stands in for the
@@ -528,7 +882,7 @@ object TextQueries extends graft.QueryModule {
     // (doc_id, gram) pairs themselves. At 100 TB the probe keys would be
     // xxhash64(gram) (8 B vs ~25 B strings); raw strings here keep the
     // oracle an exact string-equality replay.
-    "q75_decontaminate" -> ((s, dir) => {
+    Entry("q75_decontaminate", (s, dir) => {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
       val bench = d.where(col("source") === "src0")
@@ -544,7 +898,26 @@ object TextQueries extends graft.QueryModule {
           coalesce(col("n_gram_hits"), lit(0L)).as("n_gram_hits"),
           (coalesce(col("n_gram_hits"), lit(0L)) > 0).as("contaminated"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // same tokenization (string_split keeps empties) and the same 4-gram
+      // windows: range(1, len-2) is empty below 4 tokens, mirroring the
+      // Spark side's size guard
+      """WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
+        |bench AS (
+        |  SELECT DISTINCT unnest(list_transform(range(1, len(ws) - 2),
+        |    i -> array_to_string(ws[i:i+3], ' '))) AS gram
+        |  FROM d WHERE source = 'src0'),
+        |hits AS (
+        |  SELECT doc_id, count(*) AS n_gram_hits
+        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 2),
+        |          i -> array_to_string(ws[i:i+3], ' '))) AS gram
+        |        FROM d WHERE source <> 'src0') c
+        |  JOIN bench USING (gram) GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(h.n_gram_hits, 0) AS n_gram_hits,
+        |  coalesce(h.n_gram_hits, 0) > 0 AS contaminated
+        |FROM d LEFT JOIN hits h USING (doc_id)
+        |WHERE d.source <> 'src0'
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // CONTAMINATION REPORT — q75's join INVERTED to the benchmark's view:
     // for each leaked benchmark 4-gram, how many corpus docs carry it,
@@ -554,7 +927,7 @@ object TextQueries extends graft.QueryModule {
     // frame, never a single-task rank of it); rnk is assigned on the ≤ 50
     // survivors by the bounded no-window shape. The corpus-side work is
     // q75's same broadcast semi-join shape.
-    "q162_contamination_report" -> ((s, dir) => {
+    Entry("q162_contamination_report", (s, dir) => {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
       val bench = d.where(col("source") === "src0")
@@ -576,7 +949,38 @@ object TextQueries extends graft.QueryModule {
           col("n_docs").desc, col("gram"))
         .select("rnk", "gram", "n_docs", "n_sources", "top_source", "top_docs")
         .orderBy("rnk")
-    }),
+    }, Some(
+      // q75's gram chain aggregated to the benchmark's view; min_by tie-break
+      // mirrored as row_number over (nd DESC, source)
+      """WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
+        |bench AS (
+        |  SELECT DISTINCT unnest(list_transform(range(1, len(ws) - 2),
+        |    i -> array_to_string(ws[i:i+3], ' '))) AS gram
+        |  FROM d WHERE source = 'src0'),
+        |gs AS (
+        |  SELECT gram, source, CAST(count(*) AS BIGINT) AS nd FROM (
+        |    SELECT DISTINCT c.source, c.doc_id, c.gram FROM (
+        |      SELECT source, doc_id, unnest(list_transform(range(1, len(ws) - 2),
+        |        i -> array_to_string(ws[i:i+3], ' '))) AS gram
+        |      FROM d WHERE source <> 'src0') c
+        |    JOIN bench USING (gram)) t
+        |  GROUP BY gram, source),
+        |agg AS (
+        |  SELECT gram, CAST(sum(nd) AS BIGINT) AS n_docs,
+        |    CAST(count(*) AS BIGINT) AS n_sources
+        |  FROM gs GROUP BY gram),
+        |top AS (
+        |  SELECT gram, source AS top_source, nd AS top_docs FROM (
+        |    SELECT gram, source, nd,
+        |      row_number() OVER (PARTITION BY gram ORDER BY nd DESC, source) AS rn
+        |    FROM gs) t WHERE rn = 1)
+        |SELECT CAST(rnk AS BIGINT) AS rnk, gram, n_docs, n_sources,
+        |  top_source, top_docs
+        |FROM (
+        |  SELECT a.gram, a.n_docs, a.n_sources, tp.top_source, tp.top_docs,
+        |    row_number() OVER (ORDER BY a.n_docs DESC, a.gram) AS rnk
+        |  FROM agg a JOIN top tp USING (gram)) t
+        |WHERE rnk <= 50 ORDER BY rnk""".stripMargin)),
 
     // CROSS-SOURCE DUPLICATION PRESSURE — the per-source planning view of
     // exact dedup: how much of each source's content also lives elsewhere
@@ -586,7 +990,7 @@ object TextQueries extends graft.QueryModule {
     // hash key (byHash is corpus-scale — one row per distinct text);
     // only 16-byte md5s ever ship (q29's text-never-shuffles discipline)
     // and the OUTPUT is bounded by the source dimension.
-    "q163_source_dup_pressure" -> ((s, dir) => {
+    Entry("q163_source_dup_pressure", (s, dir) => {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       val byHash = d.groupBy("h").agg(
@@ -598,7 +1002,17 @@ object TextQueries extends graft.QueryModule {
           count(when(col("n_src") > 1, 1)).as("n_cross_dup"),
           count(when(col("n_tot") > 1 && col("n_src") === 1, 1)).as("n_within_dup"))
         .orderBy("source")
-    }),
+    }, Some(
+      """WITH d AS (SELECT doc_id, source, md5(text) AS h FROM documents),
+        |bh AS (SELECT h, CAST(count(DISTINCT source) AS BIGINT) AS n_src,
+        |        CAST(count(*) AS BIGINT) AS n_tot
+        |       FROM d GROUP BY h)
+        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(*) FILTER (bh.n_src > 1) AS BIGINT) AS n_cross_dup,
+        |  CAST(count(*) FILTER (bh.n_tot > 1 AND bh.n_src = 1) AS BIGINT)
+        |    AS n_within_dup
+        |FROM d JOIN bh USING (h)
+        |GROUP BY d.source ORDER BY d.source""".stripMargin)),
 
     // corpus HEAVY HITTERS: terms with ≥ 1% of total token mass, found as
     // sketch-prune + exact-verify. Pass 1 is a Misra–Gries aggregate
@@ -609,7 +1023,7 @@ object TextQueries extends graft.QueryModule {
     // so the output is exact and deterministic while the full-vocabulary
     // shuffle an exact GROUP BY would pay never happens. share is one
     // double division of exact integers (portable).
-    "q76_heavy_hitters" -> ((s, dir) => {
+    Entry("q76_heavy_hitters", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("text"))
       val total = docs.agg(sum(size(split(col("text"), " ")).cast("long")))
         .head().getLong(0)
@@ -623,7 +1037,15 @@ object TextQueries extends graft.QueryModule {
         .select(col("term"), col("cnt"),
           (col("cnt").cast("double") / lit(total).cast("double")).as("share"))
         .orderBy(col("cnt").desc, col("term"))
-    }),
+    }, Some(
+      // the sketch prunes, the exact count decides — so the oracle is the
+      // plain exact heavy-hitter SQL (integer threshold, one division)
+      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
+        |tot AS (SELECT count(*) AS n FROM tok),
+        |c AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term)
+        |SELECT term, cnt, CAST(cnt AS DOUBLE) / CAST(tot.n AS DOUBLE) AS share
+        |FROM c, tot WHERE cnt * 100 >= tot.n
+        |ORDER BY cnt DESC, term""".stripMargin)),
 
     // OUT-OF-VOCABULARY rate: the unigram-LM quality signal made portable —
     // vocab = terms covering ≥ 0.1% of token mass (exact integer
@@ -631,7 +1053,7 @@ object TextQueries extends graft.QueryModule {
     // vocab is bounded (≤ 1000 terms by construction: Σ shares ≤ 1) so it
     // broadcasts; at 100 TB the vocab pass would ride the q76 Misra–Gries
     // prune instead of the exact GROUP BY — same output, bounded shuffle.
-    "q85_oov_rate" -> ((s, dir) => {
+    Entry("q85_oov_rate", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val toks = docs.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))
@@ -649,7 +1071,18 @@ object TextQueries extends graft.QueryModule {
           ((col("n_tok") - coalesce(col("n_known"), lit(0L))).cast("double") /
             col("n_tok").cast("double")).as("oov_rate"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+        |tot AS (SELECT count(*) AS n FROM tok),
+        |v AS (SELECT term FROM (SELECT term, count(*) AS cnt FROM tok GROUP BY term), tot
+        |      WHERE cnt * 1000 >= tot.n),
+        |known AS (SELECT doc_id, count(*) AS n_known FROM tok
+        |          WHERE term IN (SELECT term FROM v) GROUP BY doc_id),
+        |d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents)
+        |SELECT d.doc_id, d.n_tok, coalesce(k.n_known, 0) AS n_known,
+        |  CAST(d.n_tok - coalesce(k.n_known, 0) AS DOUBLE) / CAST(d.n_tok AS DOUBLE) AS oov_rate
+        |FROM d LEFT JOIN known k USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin)),
 
     // the END-TO-END training-data PREP PIPELINE in one plan — the four
     // stages a corpus actually passes through, composed from the
@@ -659,7 +1092,7 @@ object TextQueries extends graft.QueryModule {
     // rebalance (q82's token-mass equalization over the SURVIVORS, rates
     // derived post-dedup as a real pipeline would). Every stage's floats
     // are individually bit-portable, so the composition is too.
-    "q91_prep_pipeline" -> ((s, dir) => {
+    Entry("q91_prep_pipeline", (s, dir) => {
       import graft.functions.Mix64
       val (corpus, contaminated) = contaminationSplit(s, dir)
       val clean = corpus.join(contaminated, Seq("doc_id"), "left_anti")
@@ -688,7 +1121,27 @@ object TextQueries extends graft.QueryModule {
         .where(Mix64.sampleCoord(col("doc_id")) < col("thr"))
         .select("doc_id", "source", "n_tok", "quality")
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the four verified stage oracles concatenated as CTEs (q75's grams,
+      // q31/q55's quality+dedup, q82's rates) — one replayable chain,
+      // shared with q126 through contCtesSql/qualityCtesSql
+      s"""WITH $contCtesSql,
+         |clean AS (SELECT doc_id, source, text FROM d
+         |          WHERE source <> 'src0'
+         |            AND doc_id NOT IN (SELECT doc_id FROM cont)),
+         |${qualityCtesSql("clean", "")},
+         |qual AS (SELECT * FROM scored WHERE quality >= 0.5),
+         |keep AS (SELECT min(doc_id) AS kid FROM qual GROUP BY md5(text)),
+         |ded AS (SELECT q.* FROM qual q JOIN keep k ON q.doc_id = k.kid),
+         |ms AS (SELECT source, sum(n_tok) AS mass FROM ded GROUP BY source),
+         |r AS (SELECT source,
+         |        CAST(floor((CAST((SELECT min(mass) FROM ms) AS DOUBLE) / CAST(mass AS DOUBLE))
+         |             * 4294967296) AS BIGINT) AS thr
+         |      FROM ms)
+         |SELECT ded.doc_id, ded.source, ded.n_tok, ded.quality
+         |FROM ded JOIN r USING (source)
+         |WHERE ${OpsQueries.coordSql("ded.doc_id")} < r.thr
+         |ORDER BY ded.doc_id""".stripMargin)),
 
     // BEST-QUALITY keep policy over near-dup components: q28/q29 keep the
     // min-id representative (the reproducibility default); real curation
@@ -697,7 +1150,7 @@ object TextQueries extends graft.QueryModule {
     // candidate graph; the policy is one narrow window over (id, component,
     // quality) triples — text never rides the component shuffle, so
     // changing keep policy costs nothing at 100 TB.
-    "q97_dedup_best_keep" -> ((s, dir) => {
+    Entry("q97_dedup_best_keep", (s, dir) => {
       import graft.dedup.Dedup
       val docs = t(s, dir, "documents")
       val edges = Dedup.ngramJaccardPairsLsh(docs,
@@ -729,7 +1182,59 @@ object TextQueries extends graft.QueryModule {
       joined.join(best, Seq("component"))
         .select(col("id").as("doc_id"), col("keep_id"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // q28's recursive-CTE components + q31's quality formula; keep =
+      // row_number over (quality DESC, doc_id) per component
+      s"""WITH RECURSIVE sh_docs AS (
+         |  SELECT doc_id,
+         |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
+         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
+         |  FROM documents WHERE len(string_split(text,' ')) >= 3),
+         |pairs AS (
+         |  SELECT a.doc_id AS a, b.doc_id AS b
+         |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
+         |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+         |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
+         |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
+         |reach AS (
+         |  SELECT doc_id AS x, doc_id AS n FROM documents
+         |  UNION
+         |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
+         |comp AS (SELECT x AS doc_id, min(n) AS component FROM reach GROUP BY x),
+         |base AS (
+         |  SELECT doc_id, text, length(text) AS n,
+         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
+         |  FROM documents),
+         |m AS (
+         |  SELECT doc_id,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
+         |    CASE WHEN len(toks) = 0 THEN 0.0
+         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
+         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
+         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
+         |  FROM base),
+         |q AS (
+         |  SELECT doc_id,
+         |    least(stopword_ratio * 4.0, 1.0) * 0.3
+         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
+         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
+         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
+         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
+         |  FROM m),
+         |best AS (
+         |  SELECT component, doc_id AS keep_id FROM (
+         |    SELECT c.component, c.doc_id,
+         |      row_number() OVER (PARTITION BY c.component
+         |        ORDER BY q.quality DESC, c.doc_id) AS rn
+         |    FROM comp c JOIN q USING (doc_id)) t
+         |  WHERE rn = 1)
+         |SELECT c.doc_id, b.keep_id
+         |FROM comp c JOIN best b USING (component)
+         |ORDER BY c.doc_id""".stripMargin)),
 
     // PII detection + redaction — the scrub stage every public-corpus
     // pipeline runs before training. The synthetic documents carry no PII
@@ -741,7 +1246,7 @@ object TextQueries extends graft.QueryModule {
     // groups); the redacted text is compared as md5 so the oracle checks
     // byte-exact scrubbing, not just counts. One narrow codegen'd scan —
     // at 100 TB this shape is scan-bound, exactly as a scrub pass must be.
-    "q96_pii_redact" -> ((s, dir) => {
+    Entry("q96_pii_redact", (s, dir) => {
       val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val ipRe = "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b"
       val planted = t(s, dir, "documents").select(col("doc_id"),
@@ -758,22 +1263,43 @@ object TextQueries extends graft.QueryModule {
           md5(regexp_replace(regexp_replace(col("text"), emailRe, "<EMAIL>"),
             ipRe, "<IP>")).as("redacted_md5"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      """WITH planted AS (
+        |  SELECT doc_id,
+        |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com' ||
+        |    CASE WHEN doc_id % 3 = 0
+        |         THEN ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.7'
+        |         ELSE '' END AS text
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
+        |  CAST(len(regexp_extract_all(text, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS INT) AS n_ips,
+        |  md5(regexp_replace(
+        |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |        '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g')) AS redacted_md5
+        |FROM planted ORDER BY doc_id""".stripMargin)),
 
-    "q43_chunking" -> ((s, dir) =>
+    Entry("q43_chunking", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(chunk(col("text"), size = 200, overlap = 40)).as(Seq("chunk_idx", "chunk_text")))
         .select(col("doc_id"), col("chunk_idx"),
           length(col("chunk_text")).as("chunk_len"), col("chunk_text"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"), Some(
+      """SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+        |  length(substr(text, CAST(i * 160 + 1 AS INT), 200)) AS chunk_len,
+        |  substr(text, CAST(i * 160 + 1 AS INT), 200) AS chunk_text
+        |FROM documents, range(0, 100000) t(i)
+        |WHERE length(text) > 0
+        |  AND i <= ceil(greatest(length(text) - 200, 0) / 160.0)
+        |ORDER BY doc_id, chunk_idx""".stripMargin)),
 
     // corpus CURATION pipeline — the three LLM-data stages composed:
     // quality-score filter (q31's exact formula) → exact dedup of the
     // survivors (narrow hash+id shuffle, Dedup.exactDedup) → per-source
     // cap keeping the 10 best by (quality desc, doc_id). Quality floats
     // are bit-identical across engines (q31), so filter AND ranking agree.
-    "q55_curation" -> ((s, dir) => {
+    Entry("q55_curation", (s, dir) => {
       val scored = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"),
           textStats(col("text")).as("st"),
@@ -793,28 +1319,94 @@ object TextQueries extends graft.QueryModule {
         .where(col("rank") <= 10)
         .select(col("source"), col("doc_id"), col("quality"), col("rank"))
         .orderBy("source", "rank")
-    }),
+    }, Some(
+      // q31's quality formula → filter → md5 min-id dedup → per-source top-10
+      s"""WITH base AS (
+         |  SELECT doc_id, source, text, length(text) AS n,
+         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
+         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
+         |  FROM documents),
+         |m AS (
+         |  SELECT doc_id, source, text,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
+         |    CASE WHEN n = 0 THEN 0.0
+         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
+         |    CASE WHEN len(toks) = 0 THEN 0.0
+         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
+         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
+         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
+         |  FROM base),
+         |scored AS (
+         |  SELECT doc_id, source, text,
+         |    least(stopword_ratio * 4.0, 1.0) * 0.3
+         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
+         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
+         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
+         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
+         |  FROM m),
+         |qual AS (SELECT * FROM scored WHERE quality >= 0.5),
+         |keep AS (SELECT min(doc_id) AS kid FROM qual GROUP BY md5(text)),
+         |ded AS (SELECT q.* FROM qual q JOIN keep k ON q.doc_id = k.kid)
+         |SELECT source, doc_id, quality,
+         |  CAST(row_number() OVER (PARTITION BY source
+         |       ORDER BY quality DESC, doc_id) AS INT) AS rank
+         |FROM ded
+         |QUALIFY rank <= 10
+         |ORDER BY source, rank""".stripMargin)),
 
     // next-fit sequence packing per source shard (budget 120 ws-tokens):
     // training-batch construction — short docs concatenate into packs, a
     // doc longer than the budget gets its own pack. Sequential per shard,
     // parallel across shards (the sessionize shape); the oracle replays
     // the walk with a recursive CTE.
-    "q52_seq_packing" -> ((s, dir) =>
+    Entry("q52_seq_packing", (s, dir) =>
       graft.text.Packing.packNextFit(
           t(s, dir, "documents"),
           col("source"), col("doc_id"), tokenCountWs(col("text")), budget = 120)
-        .orderBy("shard", "doc_id")),
+        .orderBy("shard", "doc_id"), Some(
+      // replay of the per-shard next-fit walk: row_number orders each shard,
+      // the recursive step carries (pack_idx, acc) one row at a time — every
+      // shard advances once per iteration, so depth = max rows per shard
+      """WITH RECURSIVE base AS (
+        |  SELECT source AS shard, doc_id,
+        |    CAST(CASE WHEN trim(text) = '' THEN 0
+        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tok,
+        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
+        |  FROM documents),
+        |packed AS (
+        |  SELECT shard, doc_id, n_tok, rn, CAST(0 AS BIGINT) AS pack_idx, n_tok AS acc
+        |  FROM base WHERE rn = 1
+        |  UNION ALL
+        |  SELECT b.shard, b.doc_id, b.n_tok, b.rn,
+        |    CASE WHEN p.acc > 0 AND p.acc + b.n_tok > 120
+        |         THEN p.pack_idx + 1 ELSE p.pack_idx END,
+        |    CASE WHEN p.acc > 0 AND p.acc + b.n_tok > 120
+        |         THEN b.n_tok ELSE p.acc + b.n_tok END
+        |  FROM base b JOIN packed p ON b.shard = p.shard AND b.rn = p.rn + 1)
+        |SELECT shard, doc_id, n_tok, pack_idx FROM packed
+        |ORDER BY shard, doc_id""".stripMargin)),
 
     // rolling content hash alone — unlike the xxhash64-based winnowing it
     // HAS a DuckDB twin (h ← h·31 + byte is plain wrapping arithmetic,
     // reduced over the bytes with HUGEINT mod 2^64; the corpus is ASCII so
     // per-character codes equal UTF-8 bytes)
-    "q35_content_fp" -> ((s, dir) =>
+    Entry("q35_content_fp", (s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
         contentFingerprint(col("text")).as("content_fp"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      """SELECT doc_id,
+        |  CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
+        |            THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT) AS content_fp
+        |FROM (
+        |  SELECT doc_id,
+        |    list_reduce(
+        |      list_prepend(CAST(1125899906842597 AS HUGEINT),
+        |        list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, i, 1)) AS HUGEINT))),
+        |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT) AS h
+        |  FROM documents)
+        |ORDER BY doc_id""".stripMargin)),
 
     // EXACT DUPLICATED-SPAN detection — substring-level dedup at word
     // granularity (the "remove repeated 50-grams" curation stage; cf. the
@@ -833,7 +1425,7 @@ object TextQueries extends graft.QueryModule {
     // At 100 TB the window key would be xxhash64(gram) (8 B vs ~50 B
     // strings); raw strings here keep the oracle an exact string-
     // equality replay.
-    "q114_span_dedup" -> ((s, dir) => {
+    Entry("q114_span_dedup", (s, dir) => {
       val base = t(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .select(col("doc_id"),
@@ -870,7 +1462,36 @@ object TextQueries extends graft.QueryModule {
           coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
         .withColumn("cut_ppm", expr("dup_tokens * 1000000 div n_tokens"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // same 8-token spans via list slicing; coverage = distinct (doc_id,
+      // token_pos) after expanding each dup span's window — overlapping
+      // spans union without an interval walk on either side. generate_series
+      // is empty when the doc has < 8 tokens (n_spans = 0 rows filtered),
+      // matching the Spark-side where-guard; // is exact BIGINT division
+      // like Spark's div.
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+        |base AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
+        |                CAST(greatest(len(ws) - 7, 0) AS BIGINT) AS n_spans, ws
+        |         FROM d),
+        |sp AS (SELECT doc_id, ws, unnest(generate_series(1, n_spans)) AS pos
+        |       FROM base WHERE n_spans > 0),
+        |grams AS (SELECT doc_id, pos, array_to_string(ws[pos:pos+7], ' ') AS gram
+        |          FROM sp),
+        |dup AS (SELECT gram FROM (SELECT DISTINCT gram, doc_id FROM grams)
+        |        GROUP BY gram HAVING count(*) >= 2),
+        |ds AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
+        |nd AS (SELECT doc_id, count(*) AS n_dup_spans FROM ds GROUP BY doc_id),
+        |cov AS (SELECT doc_id, count(*) AS dup_tokens FROM
+        |          (SELECT DISTINCT doc_id, tp FROM
+        |            (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS tp
+        |             FROM ds))
+        |        GROUP BY doc_id)
+        |SELECT b.doc_id, b.n_tokens, b.n_spans,
+        |       coalesce(nd.n_dup_spans, 0) AS n_dup_spans,
+        |       coalesce(cov.dup_tokens, 0) AS dup_tokens,
+        |       coalesce(cov.dup_tokens, 0) * 1000000 // b.n_tokens AS cut_ppm
+        |FROM base b LEFT JOIN nd USING (doc_id) LEFT JOIN cov USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)),
 
     // MODEL-BASED quality filtering: apply a linear classifier head to
     // per-doc integer features (see QcWeights above) — q31 is the
@@ -878,10 +1499,19 @@ object TextQueries extends graft.QueryModule {
     // in production curation. One narrow projection per doc, the native
     // one-pass textStats expression for the features, exact-integer
     // logit so the keep/drop decision replays bit-for-bit anywhere.
-    "q116_quality_classifier" -> ((s, dir) =>
+    Entry("q116_quality_classifier", (s, dir) =>
       qcScored(s, dir)
         .withColumn("keep", col("logit_micro") >= 0)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"), Some(
+      // features replay q30/q31's tokenization (nonempty \s+ split; stop
+      // hits lowercased; len_sum over raw tokens, coalesced to 0 for the
+      // empty doc where DuckDB's list_aggregate('sum') is NULL); the logit
+      // terms are generated from the SAME QcWeights table as the plan
+      s"""WITH $QcFeaturesCteSql
+         |SELECT doc_id, n_tokens, stop_hits, len_sum, n_chars,
+         |  CAST($QcLogitSql AS BIGINT) AS logit_micro,
+         |  ($QcLogitSql) >= 0 AS keep
+         |FROM f ORDER BY doc_id""".stripMargin)),
 
     // CURRICULUM ORDERING: a global easy→hard rank over the classifier
     // logit — the training-order stage. Materializing a total order
@@ -891,11 +1521,18 @@ object TextQueries extends graft.QueryModule {
     // per-partition offsets, one long per partition through the driver.
     // (doc_id breaks logit ties, making the order total and the rank
     // deterministic at any partition count.)
-    "q119_curriculum_order" -> ((s, dir) =>
+    Entry("q119_curriculum_order", (s, dir) =>
       graft.ops.Ranking.globalRank(
           qcScored(s, dir).select(col("doc_id"), col("logit_micro")),
           "rank", col("logit_micro").desc, col("doc_id"))
-        .orderBy("rank")),
+        .orderBy("rank"), Some(
+      // rank replays globalRank's contract directly: row_number over the
+      // identical total order (logit DESC, doc_id)
+      s"""WITH $QcFeaturesCteSql
+         |SELECT doc_id, logit_micro,
+         |  CAST(row_number() OVER (ORDER BY logit_micro DESC, doc_id) AS BIGINT) AS rank
+         |FROM (SELECT doc_id, CAST($QcLogitSql AS BIGINT) AS logit_micro FROM f)
+         |ORDER BY rank""".stripMargin)),
 
     // DETERMINISTIC EPOCH SHUFFLE — the training-loader order stage:
     // every epoch e gets its own pseudo-random but fully reproducible
@@ -905,7 +1542,7 @@ object TextQueries extends graft.QueryModule {
     // coordination. Same scale shape as q119: Ranking.globalRank per
     // epoch (range partition + per-partition offsets — a total order
     // over 100 TB never flows through one window task).
-    "q143_epoch_shuffle" -> ((s, dir) => {
+    Entry("q143_epoch_shuffle", (s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"))
       Seq(0, 1).map { e =>
         graft.ops.Ranking.globalRank(
@@ -916,7 +1553,18 @@ object TextQueries extends graft.QueryModule {
       }.reduce(_ unionByName _)
         .select(col("epoch"), col("doc_id"), col("position"))
         .orderBy("epoch", "position")
-    }),
+    }, Some(
+      // per-epoch row_number over the shared Mix64 coordinate — the SQL
+      // image of globalRank's per-epoch total order
+      s"""WITH ep AS (SELECT CAST(0 AS INT) AS epoch UNION ALL SELECT 1),
+         |c AS (
+         |  SELECT ep.epoch, d.doc_id,
+         |    ${OpsQueries.coordSql("(d.doc_id * 2 + ep.epoch)")} AS coord
+         |  FROM documents d CROSS JOIN ep)
+         |SELECT epoch, doc_id,
+         |  CAST(row_number() OVER (PARTITION BY epoch
+         |    ORDER BY coord, doc_id) AS BIGINT) AS position
+         |FROM c ORDER BY epoch, position""".stripMargin)),
 
     // LENGTH-BUCKETED BATCHING audit — the padding-efficiency stage of
     // batch assembly: docs bucketed to the smallest configured seq_len
@@ -925,7 +1573,7 @@ object TextQueries extends graft.QueryModule {
     // paid at that seq_len — the numbers that decide bucket boundaries
     // before packing (q52). One projection + a 5-group aggregate; the
     // token count is the engine-wide string_split(text, ' ') contract.
-    "q144_length_buckets" -> ((s, dir) => {
+    Entry("q144_length_buckets", (s, dir) => {
       val toks = size(split(col("text"), " ")).cast("long")
       val seqLen = when(toks <= 16, 16L).when(toks <= 32, 32L)
         .when(toks <= 64, 64L).when(toks <= 128, 128L).otherwise(256L)
@@ -937,7 +1585,21 @@ object TextQueries extends graft.QueryModule {
           sum(greatest(col("seq_len") - col("n_tokens"), lit(0L))).as("n_padding"),
           sum(greatest(col("n_tokens") - col("seq_len"), lit(0L))).as("n_truncated"))
         .orderBy("seq_len")
-    }),
+    }, Some(
+      """WITH tk AS (
+        |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |b AS (
+        |  SELECT n_tokens,
+        |    CAST(CASE WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
+        |         WHEN n_tokens <= 64 THEN 64 WHEN n_tokens <= 128 THEN 128
+        |         ELSE 256 END AS BIGINT) AS seq_len
+        |  FROM tk)
+        |SELECT seq_len, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(least(n_tokens, seq_len)) AS BIGINT) AS n_tokens_kept,
+        |  CAST(sum(greatest(seq_len - n_tokens, 0)) AS BIGINT) AS n_padding,
+        |  CAST(sum(greatest(n_tokens - seq_len, 0)) AS BIGINT) AS n_truncated
+        |FROM b GROUP BY seq_len ORDER BY seq_len""".stripMargin)),
 
     // DROP LEDGER — per-document lineage through the q91 curation chain:
     // every corpus doc gets the FIRST stage that removed it
@@ -949,7 +1611,7 @@ object TextQueries extends graft.QueryModule {
     // TextSpec). Stage populations compose exactly as the pipeline ran
     // them: the md5 keep-min is taken over ELIGIBLE (clean, quality-pass)
     // docs only, and mixture rates derive from the pre-sample survivors.
-    "q126_drop_ledger" -> ((s, dir) => {
+    Entry("q126_drop_ledger", (s, dir) => {
       import graft.functions.Mix64
       val (corpus, contaminated) = contaminationSplit(s, dir)
       val flagged = withQuality(
@@ -982,7 +1644,35 @@ object TextQueries extends graft.QueryModule {
             .when(Mix64.sampleCoord(col("doc_id")) >= col("thr"), "sampled_out")
             .otherwise("kept").as("verdict"))
         .orderBy("doc_id")
-    }))
+    }, Some(
+      // q91's chain re-expressed as per-doc verdicts: the stage populations
+      // compose identically (md5 keep-min over eligible docs, rates over
+      // pre-sample survivors) — so 'kept' here must equal q91's rows; the
+      // shared CTE builders make the two chains ONE text
+      s"""WITH $contCtesSql,
+         |${qualityCtesSql(
+             "(SELECT doc_id, source, text, " +
+               "doc_id IN (SELECT doc_id FROM cont) AS is_cont " +
+               "FROM d WHERE source <> 'src0')",
+             ", is_cont")},
+         |qual AS (SELECT * FROM scored WHERE quality >= 0.5 AND NOT is_cont),
+         |keep AS (SELECT md5(text) AS h, min(doc_id) AS kid FROM qual GROUP BY md5(text)),
+         |ms AS (SELECT source, sum(n_tok) AS mass FROM qual q
+         |       JOIN keep k ON q.doc_id = k.kid GROUP BY source),
+         |r AS (SELECT source,
+         |        CAST(floor((CAST((SELECT min(mass) FROM ms) AS DOUBLE) / CAST(mass AS DOUBLE))
+         |             * 4294967296) AS BIGINT) AS thr
+         |      FROM ms)
+         |SELECT s.doc_id,
+         |  CASE WHEN s.is_cont THEN 'contaminated'
+         |       WHEN s.quality < 0.5 THEN 'low_quality'
+         |       WHEN s.doc_id <> k.kid THEN 'duplicate'
+         |       WHEN NOT (${OpsQueries.coordSql("s.doc_id")} < r.thr) THEN 'sampled_out'
+         |       ELSE 'kept' END AS verdict
+         |FROM scored s
+         |LEFT JOIN keep k ON md5(s.text) = k.h
+         |LEFT JOIN r ON r.source = s.source
+         |ORDER BY s.doc_id""".stripMargin)))
 
   /** Shared by q91/q126 (the ONE construction of the curation cohort —
     * a drift here would break the ledger≡pipeline invariant TextSpec
@@ -1039,14 +1729,14 @@ object TextQueries extends graft.QueryModule {
     * sigmoid needed — it is monotone in the logit). Swapping in real
     * trained weights changes only these constants. Both the Spark plan
     * and the DuckDB oracle are generated from this one table. */
-  private val QcBias = -55000L
-  private val QcWeights: Seq[(String, Long)] = Seq(
+  private lazy val QcBias = -55000L
+  private lazy val QcWeights: Seq[(String, Long)] = Seq(
     "stop_hits" -> 9000L,   // stopword mass — the strongest fluency signal
     "n_tokens"  -> 500L,
     "len_sum"   -> -120L,   // penalize long-token (gibberish/url) mass
     "n_chars"   -> 80L)
 
-  private val StopwordsSql =
+  private lazy val StopwordsSql =
     graft.text.TextAnalysis.Stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
 
   /** The decontamination CTEs shared by the q91 and q126 oracles (one
@@ -1121,7 +1811,7 @@ object TextQueries extends graft.QueryModule {
     * struct (score, lang) per non-empty profile, argmax via struct max —
     * DuckDB and Spark both order structs field-wise, so ties break to the
     * lexicographically greatest language in both engines. */
-  private val LangCandsSql =
+  private lazy val LangCandsSql =
     graft.text.TextAnalysis.LangProfiles.filter(_._2.nonEmpty).map { case (lang, sw) =>
       val swList = sw.map(s => s"'$s'").mkString("[", ", ", "]")
       s"{'score': len(list_filter(toks, x -> list_contains($swList, x))), 'lang': '$lang'}"
@@ -1221,764 +1911,4 @@ object TextQueries extends graft.QueryModule {
       |      AND len(string_split(c, ' ')) >= 4
       |      AND right(c, 1) IN ('.', '!', '?')) AS kept
       |  FROM cl)""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    // the shared page/extraction CTEs → 1-based position explode →
-    // earliest-(doc,idx) keeper via row_number → per-doc reassembly
-    // (string_agg FILTER rn=1 ORDER BY idx), docs with zero survivors
-    // kept by the LEFT join with md5('') like the engine's empty filter
-    "q219_paragraph_dedup" ->
-      s"""WITH ${markupOracleCtes()},
-         |pr AS (
-         |  SELECT doc_id, CAST(i - 1 AS INT) AS idx, kept[CAST(i AS INT)] AS par
-         |  FROM (SELECT doc_id, kept, unnest(range(1, len(kept) + 1)) AS i
-         |        FROM kp) t),
-         |rk AS (
-         |  SELECT doc_id, idx, par,
-         |    row_number() OVER (PARTITION BY md5(par) ORDER BY doc_id, idx) AS rn
-         |  FROM pr),
-         |ag AS (
-         |  SELECT doc_id,
-         |    count(*) FILTER (WHERE rn = 1) AS n_kept,
-         |    string_agg(par, ' ' ORDER BY idx) FILTER (WHERE rn = 1) AS txt
-         |  FROM rk GROUP BY 1)
-         |SELECT kp.doc_id, CAST(len(kp.kept) AS BIGINT) AS n_pars,
-         |  CAST(coalesce(ag.n_kept, 0) AS BIGINT) AS n_kept,
-         |  md5(coalesce(ag.txt, '')) AS clean_md5
-         |FROM kp LEFT JOIN ag USING (doc_id)
-         |ORDER BY kp.doc_id""".stripMargin,
-
-    // the composed replay: extraction CTEs → non-empty pages → md5
-    // min-id exact dedup on the extracted text → the shared span-dedup
-    // CTE chain (q193's oracle) over the survivors
-    "q204_web_curation" ->
-      s"""WITH ${markupOracleCtes()},
-        |ext AS (
-        |  SELECT doc_id, array_to_string(kept, ' ') AS text
-        |  FROM kp WHERE len(kept) > 0),
-        |reps AS (
-        |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
-        |  FROM ext),
-        |surv AS (
-        |  SELECT ext.doc_id, ext.text FROM ext
-        |  JOIN reps ON reps.doc_id = ext.doc_id AND reps.rep = ext.doc_id),
-        |${DedupQueries.spanOracleCtes("surv")},
-        |cov AS (
-        |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
-        |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
-        |  GROUP BY doc_id),
-        |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        |  CAST(greatest(len(t.w) - 7, 0) AS BIGINT) AS n_grams,
-        |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
-        |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
-        |FROM toks t
-        |LEFT JOIN dc USING (doc_id)
-        |LEFT JOIN cov USING (doc_id)
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // the identical page build (list form — order-preserving, no unnest),
-    // then the same strip → decode(amp last) → collapse → trim → prose
-    // rule, all as list_transform/list_filter over the page lines
-    "q203_markup_extract" ->
-      s"""WITH ${markupOracleCtes()}
-        |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-        |  CAST(len(kept) AS BIGINT) AS n_kept_lines,
-        |  CAST(coalesce(list_aggregate(
-        |    list_transform(kept, l -> len(string_split(l, ' '))), 'sum'), 0)
-        |    AS BIGINT) AS n_words_kept,
-        |  array_to_string(kept, chr(10)) AS clean_text
-        |FROM kp ORDER BY doc_id""".stripMargin,
-
-    // same planting (CASE/||), same three ordered global regexp_replace
-    // passes (RE2 'g' flag = Spark's replace-all default), same patterns
-    "q170_pii_redaction" ->
-      s"""WITH aug AS (
-         |  SELECT doc_id, source,
-         |    text ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' today' ELSE '' END ||
-         |    CASE WHEN doc_id % 7 = 0 THEN ' id 9' || lpad(CAST(doc_id % 100000000 AS VARCHAR), 8, '0') ELSE '' END
-         |      AS text2
-         |  FROM documents),
-         |sc AS (
-         |  SELECT doc_id, source, text2,
-         |    regexp_replace(regexp_replace(regexp_replace(text2,
-         |      '$PiiEmail', '<EMAIL>', 'g'),
-         |      '$PiiPhone', '<PHONE>', 'g'),
-         |      '$PiiLongId', '<ID>', 'g') AS clean,
-         |    len(regexp_extract_all(text2, '$PiiEmail')) AS n_emails,
-         |    len(regexp_extract_all(text2, '$PiiPhone')) AS n_phones,
-         |    len(regexp_extract_all(text2, '$PiiLongId')) AS n_ids
-         |  FROM aug)
-         |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(CASE WHEN n_emails + n_phones + n_ids > 0 THEN 1 END) AS BIGINT)
-         |    AS n_docs_with_pii,
-         |  CAST(sum(n_emails) AS BIGINT) AS n_emails,
-         |  CAST(sum(n_phones) AS BIGINT) AS n_phones,
-         |  CAST(sum(n_ids) AS BIGINT) AS n_ids,
-         |  CAST(sum(length(text2) - length(clean)) AS BIGINT) AS chars_removed
-         |FROM sc GROUP BY source ORDER BY source""".stripMargin,
-
-    // the greedy walk as a recursive CTE: one row per (word instance,
-    // step); the longest matching unit advances pos, unknown chars
-    // advance 1; the terminal row (pos > len) carries the unit count
-    "q178_subword_count" ->
-      s"""WITH RECURSIVE units(unit) AS (
-         |  VALUES ${graft.text.TextAnalysis.SubwordVocab.map(u => s"('$u')").mkString(", ")}),
-         |wi AS (
-         |  SELECT doc_id, i, w[i] AS word FROM (
-         |    SELECT doc_id, w, generate_subscripts(w, 1) AS i FROM
-         |      (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t0) t
-         |  WHERE w[i] <> ''),
-         |seg AS (
-         |  SELECT doc_id, i, word, 1 AS pos, 0 AS n FROM wi
-         |  UNION ALL
-         |  SELECT doc_id, i, word,
-         |    pos + coalesce((SELECT max(len(unit)) FROM units
-         |                    WHERE unit = substr(word, pos, len(unit))), 1),
-         |    n + 1
-         |  FROM seg WHERE pos <= len(word)),
-         |fin AS (SELECT doc_id, i, n FROM seg WHERE pos > len(word))
-         |SELECT d.doc_id,
-         |  CAST(coalesce(count(fin.i), 0) AS BIGINT) AS n_words,
-         |  CAST(coalesce(sum(fin.n), 0) AS BIGINT) AS n_subwords
-         |FROM documents d LEFT JOIN fin USING (doc_id)
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    // 5 BPE rounds replayed as chained CTEs (generated — see
-    // Bpe.oracleSql for the replace-over-delimited-symbols merge rule)
-    "q185_bpe_train" -> graft.text.Bpe.oracleSql(5),
-
-    // the same generated chain at the realistic depth
-    "q211_bpe_train_deep" -> graft.text.Bpe.oracleSql(64),
-
-    // train-replay CTEs + per-word-instance application + per-doc rollup
-    "q186_bpe_apply" -> graft.text.Bpe.applyOracleSql(5),
-
-    // train-replay CTEs + vocab export (merged symbols ∪ a-z) + q178's
-    // greedy longest-prefix recursive-CTE walk against that vocabulary
-    "q191_bpe_vocab_segment" -> graft.text.Bpe.segmentOracleSql(5),
-
-    // q178's recursive-CTE walk with the vocab REGENERATED from the
-    // corpus: the same top-40 lowercase-bigram training (count DESC,
-    // gram ASC — the unique-gram tiebreak makes the rank-40 cut
-    // deterministic on both engines) unioned with letters a-z
-    "q184_subword_vocab_data" ->
-      """WITH RECURSIVE wi AS (
-        |  SELECT doc_id, i, w[i] AS word FROM (
-        |    SELECT doc_id, w, generate_subscripts(w, 1) AS i FROM
-        |      (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t0) t
-        |  WHERE w[i] <> ''),
-        |bg AS (
-        |  SELECT unnest(list_transform(range(1, len(word)),
-        |    j -> substr(word, CAST(j AS INT), 2))) AS g
-        |  FROM wi WHERE len(word) >= 2),
-        |topg AS (SELECT g FROM (
-        |  SELECT g, count(*) AS c FROM bg WHERE regexp_matches(g, '^[a-z]{2}$')
-        |  GROUP BY g ORDER BY c DESC, g ASC LIMIT 40)),
-        |units AS (SELECT g AS unit FROM topg
-        |  UNION ALL SELECT chr(96 + CAST(x AS INT)) FROM range(1, 27) t(x)),
-        |seg AS (
-        |  SELECT doc_id, i, word, 1 AS pos, 0 AS n FROM wi
-        |  UNION ALL
-        |  SELECT doc_id, i, word,
-        |    pos + coalesce((SELECT max(len(unit)) FROM units
-        |                    WHERE unit = substr(word, pos, len(unit))), 1),
-        |    n + 1
-        |  FROM seg WHERE pos <= len(word)),
-        |fin AS (SELECT doc_id, i, n FROM seg WHERE pos > len(word))
-        |SELECT d.doc_id,
-        |  CAST(coalesce(count(fin.i), 0) AS BIGINT) AS n_words,
-        |  CAST(coalesce(sum(fin.n), 0) AS BIGINT) AS n_subwords
-        |FROM documents d LEFT JOIN fin USING (doc_id)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    "q30_token_stats" ->
-      """SELECT doc_id, length(text) AS n_chars,
-        |  CASE WHEN trim(text) = '' THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\s+')) END AS ws_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q31_text_quality" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text, length(text) AS n,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
-         |    CASE WHEN len(toks) = 0 THEN 0.0
-         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
-         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
-         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
-         |  FROM base)
-         |SELECT doc_id, punct_ratio, digit_ratio, stopword_ratio, mean_word_len,
-         |  least(stopword_ratio * 4.0, 1.0) * 0.3
-         |    + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
-         |    + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
-         |    + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
-         |            WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // tokenization is string_split(text, ' ') on BOTH sides by design (the
-    // native expression mirrors it, empty tokens kept); top-gram ties break
-    // (count DESC, gram binary-ASC) identically
-    "q57_repetition" ->
-      """WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS ws, length(text) AS nc FROM documents),
-        |w AS (SELECT doc_id, len(ws) AS n_words, len(list_distinct(ws)) AS n_distinct FROM d),
-        |g2 AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)), i -> array_to_string(ws[i:i+1], ' '))) AS gram FROM d),
-        |c2 AS (SELECT doc_id, gram, count(*) AS c FROM g2 GROUP BY doc_id, gram),
-        |t2 AS (SELECT doc_id, gram, c FROM (
-        |  SELECT doc_id, gram, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram ASC) AS rn FROM c2) WHERE rn = 1),
-        |g3 AS (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1), i -> array_to_string(ws[i:i+2], ' '))) AS gram FROM d),
-        |c3 AS (SELECT doc_id, gram, count(*) AS c FROM g3 GROUP BY doc_id, gram),
-        |t3 AS (SELECT doc_id, gram, c FROM (
-        |  SELECT doc_id, gram, c, row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram ASC) AS rn FROM c3) WHERE rn = 1)
-        |SELECT d.doc_id, CAST(w.n_words AS INT) AS n_words,
-        |  CAST(w.n_distinct AS INT) AS n_distinct_words,
-        |  CAST(w.n_words - w.n_distinct AS DOUBLE) / CAST(w.n_words AS DOUBLE) AS dup_word_frac,
-        |  t2.gram AS top2_gram, CAST(t2.c AS INT) AS top2_cnt,
-        |  CAST(t2.c * length(t2.gram) AS DOUBLE) / CAST(d.nc AS DOUBLE) AS top2_frac,
-        |  t3.gram AS top3_gram, CAST(t3.c AS INT) AS top3_cnt,
-        |  CAST(t3.c * length(t3.gram) AS DOUBLE) / CAST(d.nc AS DOUBLE) AS top3_frac
-        |FROM d JOIN w USING (doc_id)
-        |LEFT JOIN t2 USING (doc_id) LEFT JOIN t3 USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // score = tf·(N+1)/(df+1): one division of exact integers (see the
-    // query registration for why linear idf, not log)
-    "q58_tfidf_topk" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |    CAST(tf.tf * ((SELECT count(*) FROM documents) + 1) AS DOUBLE) / (df.df + 1) AS score
-        |  FROM tf JOIN df USING (term))
-        |SELECT doc_id, rnk, term, tf, df, score FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
-    // float factors mirror the Spark expression TREE op-for-op (each IEEE
-    // op is exactly rounded, so identical trees ⇒ identical doubles); the
-    // floor-to-micro-units before the sum makes aggregation order moot
-    "q68_bm25_topk" ->
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-         |       WHERE term IN (${Bm25QueryTerms.map(t => s"'$t'").mkString(", ")})
-         |       GROUP BY doc_id, term),
-         |dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM tf GROUP BY term),
-         |dl AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-         |g AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl, count(*) AS n FROM dl),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    CAST(floor(1000000.0 *
-         |      ((CAST(g.n - dfq.df AS DOUBLE) + 0.5) / (CAST(dfq.df AS DOUBLE) + 0.5)) *
-         |      ((CAST(tf.tf AS DOUBLE) * 2.2) /
-         |       (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + (0.75 * CAST(dl.dl AS DOUBLE)) / g.avgdl)))
-         |    ) AS BIGINT) AS s_term
-         |  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), g)
-         |SELECT doc_id, count(*) AS n_terms_hit, CAST(sum(s_term) AS BIGINT) AS score_micro
-         |FROM scored GROUP BY doc_id
-         |ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin,
-
-    // q31's quality formula (already pinned bit-exact there) floored to
-    // micro-units per doc, then integer sums per source
-    "q73_data_card" ->
-      s"""WITH base AS (
-         |  SELECT source, lang, n_chars, text, length(text) AS n,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT source, lang, n_chars, text, len(rawtoks) AS toks_n,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
-         |    CASE WHEN len(toks) = 0 THEN 0.0
-         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
-         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
-         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
-         |  FROM base),
-         |scored AS (
-         |  SELECT source, lang, n_chars, toks_n, md5(text) AS h,
-         |    CAST(floor((least(stopword_ratio * 4.0, 1.0) * 0.3
-         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
-         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
-         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
-         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2)
-         |      * 1000000.0) AS BIGINT) AS q_micro
-         |  FROM m)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS n_chars_total,
-         |  CAST(sum(toks_n) AS BIGINT) AS n_tokens_ws,
-         |  count(DISTINCT h) AS n_distinct_content,
-         |  CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-         |  CAST(sum(q_micro) AS BIGINT) AS sum_quality_micro,
-         |  min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-         |  count(*) - count(DISTINCT h) AS n_exact_dups
-         |FROM scored GROUP BY source ORDER BY source""".stripMargin,
-
-    // same tokenization (string_split keeps empties) and the same 4-gram
-    // windows: range(1, len-2) is empty below 4 tokens, mirroring the
-    // Spark side's size guard
-    "q75_decontaminate" ->
-      """WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-        |bench AS (
-        |  SELECT DISTINCT unnest(list_transform(range(1, len(ws) - 2),
-        |    i -> array_to_string(ws[i:i+3], ' '))) AS gram
-        |  FROM d WHERE source = 'src0'),
-        |hits AS (
-        |  SELECT doc_id, count(*) AS n_gram_hits
-        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(ws) - 2),
-        |          i -> array_to_string(ws[i:i+3], ' '))) AS gram
-        |        FROM d WHERE source <> 'src0') c
-        |  JOIN bench USING (gram) GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(h.n_gram_hits, 0) AS n_gram_hits,
-        |  coalesce(h.n_gram_hits, 0) > 0 AS contaminated
-        |FROM d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.source <> 'src0'
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // q75's gram chain aggregated to the benchmark's view; min_by tie-break
-    // mirrored as row_number over (nd DESC, source)
-    "q162_contamination_report" ->
-      """WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-        |bench AS (
-        |  SELECT DISTINCT unnest(list_transform(range(1, len(ws) - 2),
-        |    i -> array_to_string(ws[i:i+3], ' '))) AS gram
-        |  FROM d WHERE source = 'src0'),
-        |gs AS (
-        |  SELECT gram, source, CAST(count(*) AS BIGINT) AS nd FROM (
-        |    SELECT DISTINCT c.source, c.doc_id, c.gram FROM (
-        |      SELECT source, doc_id, unnest(list_transform(range(1, len(ws) - 2),
-        |        i -> array_to_string(ws[i:i+3], ' '))) AS gram
-        |      FROM d WHERE source <> 'src0') c
-        |    JOIN bench USING (gram)) t
-        |  GROUP BY gram, source),
-        |agg AS (
-        |  SELECT gram, CAST(sum(nd) AS BIGINT) AS n_docs,
-        |    CAST(count(*) AS BIGINT) AS n_sources
-        |  FROM gs GROUP BY gram),
-        |top AS (
-        |  SELECT gram, source AS top_source, nd AS top_docs FROM (
-        |    SELECT gram, source, nd,
-        |      row_number() OVER (PARTITION BY gram ORDER BY nd DESC, source) AS rn
-        |    FROM gs) t WHERE rn = 1)
-        |SELECT CAST(rnk AS BIGINT) AS rnk, gram, n_docs, n_sources,
-        |  top_source, top_docs
-        |FROM (
-        |  SELECT a.gram, a.n_docs, a.n_sources, tp.top_source, tp.top_docs,
-        |    row_number() OVER (ORDER BY a.n_docs DESC, a.gram) AS rnk
-        |  FROM agg a JOIN top tp USING (gram)) t
-        |WHERE rnk <= 50 ORDER BY rnk""".stripMargin,
-
-    "q163_source_dup_pressure" ->
-      """WITH d AS (SELECT doc_id, source, md5(text) AS h FROM documents),
-        |bh AS (SELECT h, CAST(count(DISTINCT source) AS BIGINT) AS n_src,
-        |        CAST(count(*) AS BIGINT) AS n_tot
-        |       FROM d GROUP BY h)
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(*) FILTER (bh.n_src > 1) AS BIGINT) AS n_cross_dup,
-        |  CAST(count(*) FILTER (bh.n_tot > 1 AND bh.n_src = 1) AS BIGINT)
-        |    AS n_within_dup
-        |FROM d JOIN bh USING (h)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-
-    // the sketch prunes, the exact count decides — so the oracle is the
-    // plain exact heavy-hitter SQL (integer threshold, one division)
-    "q76_heavy_hitters" ->
-      """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |tot AS (SELECT count(*) AS n FROM tok),
-        |c AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term)
-        |SELECT term, cnt, CAST(cnt AS DOUBLE) / CAST(tot.n AS DOUBLE) AS share
-        |FROM c, tot WHERE cnt * 100 >= tot.n
-        |ORDER BY cnt DESC, term""".stripMargin,
-
-    "q85_oov_rate" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tot AS (SELECT count(*) AS n FROM tok),
-        |v AS (SELECT term FROM (SELECT term, count(*) AS cnt FROM tok GROUP BY term), tot
-        |      WHERE cnt * 1000 >= tot.n),
-        |known AS (SELECT doc_id, count(*) AS n_known FROM tok
-        |          WHERE term IN (SELECT term FROM v) GROUP BY doc_id),
-        |d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents)
-        |SELECT d.doc_id, d.n_tok, coalesce(k.n_known, 0) AS n_known,
-        |  CAST(d.n_tok - coalesce(k.n_known, 0) AS DOUBLE) / CAST(d.n_tok AS DOUBLE) AS oov_rate
-        |FROM d LEFT JOIN known k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // the four verified stage oracles concatenated as CTEs (q75's grams,
-    // q31/q55's quality+dedup, q82's rates) — one replayable chain,
-    // shared with q126 through contCtesSql/qualityCtesSql
-    "q91_prep_pipeline" ->
-      s"""WITH $contCtesSql,
-         |clean AS (SELECT doc_id, source, text FROM d
-         |          WHERE source <> 'src0'
-         |            AND doc_id NOT IN (SELECT doc_id FROM cont)),
-         |${qualityCtesSql("clean", "")},
-         |qual AS (SELECT * FROM scored WHERE quality >= 0.5),
-         |keep AS (SELECT min(doc_id) AS kid FROM qual GROUP BY md5(text)),
-         |ded AS (SELECT q.* FROM qual q JOIN keep k ON q.doc_id = k.kid),
-         |ms AS (SELECT source, sum(n_tok) AS mass FROM ded GROUP BY source),
-         |r AS (SELECT source,
-         |        CAST(floor((CAST((SELECT min(mass) FROM ms) AS DOUBLE) / CAST(mass AS DOUBLE))
-         |             * 4294967296) AS BIGINT) AS thr
-         |      FROM ms)
-         |SELECT ded.doc_id, ded.source, ded.n_tok, ded.quality
-         |FROM ded JOIN r USING (source)
-         |WHERE ${OpsQueries.coordSql("ded.doc_id")} < r.thr
-         |ORDER BY ded.doc_id""".stripMargin,
-
-    // q91's chain re-expressed as per-doc verdicts: the stage populations
-    // compose identically (md5 keep-min over eligible docs, rates over
-    // pre-sample survivors) — so 'kept' here must equal q91's rows; the
-    // shared CTE builders make the two chains ONE text
-    "q126_drop_ledger" ->
-      s"""WITH $contCtesSql,
-         |${qualityCtesSql(
-             "(SELECT doc_id, source, text, " +
-               "doc_id IN (SELECT doc_id FROM cont) AS is_cont " +
-               "FROM d WHERE source <> 'src0')",
-             ", is_cont")},
-         |qual AS (SELECT * FROM scored WHERE quality >= 0.5 AND NOT is_cont),
-         |keep AS (SELECT md5(text) AS h, min(doc_id) AS kid FROM qual GROUP BY md5(text)),
-         |ms AS (SELECT source, sum(n_tok) AS mass FROM qual q
-         |       JOIN keep k ON q.doc_id = k.kid GROUP BY source),
-         |r AS (SELECT source,
-         |        CAST(floor((CAST((SELECT min(mass) FROM ms) AS DOUBLE) / CAST(mass AS DOUBLE))
-         |             * 4294967296) AS BIGINT) AS thr
-         |      FROM ms)
-         |SELECT s.doc_id,
-         |  CASE WHEN s.is_cont THEN 'contaminated'
-         |       WHEN s.quality < 0.5 THEN 'low_quality'
-         |       WHEN s.doc_id <> k.kid THEN 'duplicate'
-         |       WHEN NOT (${OpsQueries.coordSql("s.doc_id")} < r.thr) THEN 'sampled_out'
-         |       ELSE 'kept' END AS verdict
-         |FROM scored s
-         |LEFT JOIN keep k ON md5(s.text) = k.h
-         |LEFT JOIN r ON r.source = s.source
-         |ORDER BY s.doc_id""".stripMargin,
-
-    "q67_inverted_index" ->
-      """WITH tf AS (
-        |  SELECT term, doc_id, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        |  GROUP BY term, doc_id),
-        |d AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-        |SELECT tf.term, d.df,
-        |  CAST(row_number() OVER (PARTITION BY tf.term ORDER BY tf.doc_id) - 1 AS INT) AS pos,
-        |  tf.doc_id, tf.tf
-        |FROM tf JOIN d USING (term)
-        |ORDER BY term, pos""".stripMargin,
-
-    // q28's recursive-CTE components + q31's quality formula; keep =
-    // row_number over (quality DESC, doc_id) per component
-    "q97_dedup_best_keep" ->
-      s"""WITH RECURSIVE sh_docs AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2])) AS sh
-         |  FROM documents WHERE len(string_split(text,' ')) >= 3),
-         |pairs AS (
-         |  SELECT a.doc_id AS a, b.doc_id AS b
-         |  FROM sh_docs a JOIN sh_docs b ON a.doc_id < b.doc_id
-         |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-         |und AS (SELECT a AS x, b AS n FROM pairs UNION ALL SELECT b AS x, a AS n FROM pairs),
-         |reach AS (
-         |  SELECT doc_id AS x, doc_id AS n FROM documents
-         |  UNION
-         |  SELECT r.x, u.n FROM reach r JOIN und u ON r.n = u.x),
-         |comp AS (SELECT x AS doc_id, min(n) AS component FROM reach GROUP BY x),
-         |base AS (
-         |  SELECT doc_id, text, length(text) AS n,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
-         |    CASE WHEN len(toks) = 0 THEN 0.0
-         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
-         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
-         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
-         |  FROM base),
-         |q AS (
-         |  SELECT doc_id,
-         |    least(stopword_ratio * 4.0, 1.0) * 0.3
-         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
-         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
-         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
-         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
-         |  FROM m),
-         |best AS (
-         |  SELECT component, doc_id AS keep_id FROM (
-         |    SELECT c.component, c.doc_id,
-         |      row_number() OVER (PARTITION BY c.component
-         |        ORDER BY q.quality DESC, c.doc_id) AS rn
-         |    FROM comp c JOIN q USING (doc_id)) t
-         |  WHERE rn = 1)
-         |SELECT c.doc_id, b.keep_id
-         |FROM comp c JOIN best b USING (component)
-         |ORDER BY c.doc_id""".stripMargin,
-
-    "q96_pii_redact" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com' ||
-        |    CASE WHEN doc_id % 3 = 0
-        |         THEN ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.7'
-        |         ELSE '' END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS INT) AS n_ips,
-        |  md5(regexp_replace(
-        |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |        '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g')) AS redacted_md5
-        |FROM planted ORDER BY doc_id""".stripMargin,
-
-    "q43_chunking" ->
-      """SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-        |  length(substr(text, CAST(i * 160 + 1 AS INT), 200)) AS chunk_len,
-        |  substr(text, CAST(i * 160 + 1 AS INT), 200) AS chunk_text
-        |FROM documents, range(0, 100000) t(i)
-        |WHERE length(text) > 0
-        |  AND i <= ceil(greatest(length(text) - 200, 0) / 160.0)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // q31's quality formula → filter → md5 min-id dedup → per-source top-10
-    "q55_curation" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, source, text, length(text) AS n,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks,
-         |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS rawtoks
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id, source, text,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[^A-Za-z0-9\\s]'))::DOUBLE / n END AS punct_ratio,
-         |    CASE WHEN n = 0 THEN 0.0
-         |         ELSE len(regexp_extract_all(text, '[0-9]'))::DOUBLE / n END AS digit_ratio,
-         |    CASE WHEN len(toks) = 0 THEN 0.0
-         |         ELSE len(list_filter(toks, x -> list_contains($StopwordsSql, x)))::DOUBLE / len(toks) END AS stopword_ratio,
-         |    CASE WHEN len(rawtoks) = 0 THEN 0.0
-         |         ELSE list_aggregate(list_transform(rawtoks, x -> length(x)), 'sum')::DOUBLE / len(rawtoks) END AS mean_word_len
-         |  FROM base),
-         |scored AS (
-         |  SELECT doc_id, source, text,
-         |    least(stopword_ratio * 4.0, 1.0) * 0.3
-         |      + greatest(1.0 - punct_ratio * 5.0, 0.0) * 0.25
-         |      + greatest(1.0 - digit_ratio * 5.0, 0.0) * 0.25
-         |      + (CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 8.0 THEN 1.0
-         |              WHEN mean_word_len > 0.0 THEN 0.5 ELSE 0.0 END) * 0.2 AS quality
-         |  FROM m),
-         |qual AS (SELECT * FROM scored WHERE quality >= 0.5),
-         |keep AS (SELECT min(doc_id) AS kid FROM qual GROUP BY md5(text)),
-         |ded AS (SELECT q.* FROM qual q JOIN keep k ON q.doc_id = k.kid)
-         |SELECT source, doc_id, quality,
-         |  CAST(row_number() OVER (PARTITION BY source
-         |       ORDER BY quality DESC, doc_id) AS INT) AS rank
-         |FROM ded
-         |QUALIFY rank <= 10
-         |ORDER BY source, rank""".stripMargin,
-
-    // replay of the per-shard next-fit walk: row_number orders each shard,
-    // the recursive step carries (pack_idx, acc) one row at a time — every
-    // shard advances once per iteration, so depth = max rows per shard
-    "q52_seq_packing" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT source AS shard, doc_id,
-        |    CAST(CASE WHEN trim(text) = '' THEN 0
-        |         ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT) AS n_tok,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |packed AS (
-        |  SELECT shard, doc_id, n_tok, rn, CAST(0 AS BIGINT) AS pack_idx, n_tok AS acc
-        |  FROM base WHERE rn = 1
-        |  UNION ALL
-        |  SELECT b.shard, b.doc_id, b.n_tok, b.rn,
-        |    CASE WHEN p.acc > 0 AND p.acc + b.n_tok > 120
-        |         THEN p.pack_idx + 1 ELSE p.pack_idx END,
-        |    CASE WHEN p.acc > 0 AND p.acc + b.n_tok > 120
-        |         THEN b.n_tok ELSE p.acc + b.n_tok END
-        |  FROM base b JOIN packed p ON b.shard = p.shard AND b.rn = p.rn + 1)
-        |SELECT shard, doc_id, n_tok, pack_idx FROM packed
-        |ORDER BY shard, doc_id""".stripMargin,
-
-    // same 8-token spans via list slicing; coverage = distinct (doc_id,
-    // token_pos) after expanding each dup span's window — overlapping
-    // spans union without an interval walk on either side. generate_series
-    // is empty when the doc has < 8 tokens (n_spans = 0 rows filtered),
-    // matching the Spark-side where-guard; // is exact BIGINT division
-    // like Spark's div.
-    "q114_span_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |base AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-        |                CAST(greatest(len(ws) - 7, 0) AS BIGINT) AS n_spans, ws
-        |         FROM d),
-        |sp AS (SELECT doc_id, ws, unnest(generate_series(1, n_spans)) AS pos
-        |       FROM base WHERE n_spans > 0),
-        |grams AS (SELECT doc_id, pos, array_to_string(ws[pos:pos+7], ' ') AS gram
-        |          FROM sp),
-        |dup AS (SELECT gram FROM (SELECT DISTINCT gram, doc_id FROM grams)
-        |        GROUP BY gram HAVING count(*) >= 2),
-        |ds AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-        |nd AS (SELECT doc_id, count(*) AS n_dup_spans FROM ds GROUP BY doc_id),
-        |cov AS (SELECT doc_id, count(*) AS dup_tokens FROM
-        |          (SELECT DISTINCT doc_id, tp FROM
-        |            (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS tp
-        |             FROM ds))
-        |        GROUP BY doc_id)
-        |SELECT b.doc_id, b.n_tokens, b.n_spans,
-        |       coalesce(nd.n_dup_spans, 0) AS n_dup_spans,
-        |       coalesce(cov.dup_tokens, 0) AS dup_tokens,
-        |       coalesce(cov.dup_tokens, 0) * 1000000 // b.n_tokens AS cut_ppm
-        |FROM base b LEFT JOIN nd USING (doc_id) LEFT JOIN cov USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // features replay q30/q31's tokenization (nonempty \s+ split; stop
-    // hits lowercased; len_sum over raw tokens, coalesced to 0 for the
-    // empty doc where DuckDB's list_aggregate('sum') is NULL); the logit
-    // terms are generated from the SAME QcWeights table as the plan
-    "q116_quality_classifier" ->
-      s"""WITH $QcFeaturesCteSql
-         |SELECT doc_id, n_tokens, stop_hits, len_sum, n_chars,
-         |  CAST($QcLogitSql AS BIGINT) AS logit_micro,
-         |  ($QcLogitSql) >= 0 AS keep
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    // rank replays globalRank's contract directly: row_number over the
-    // identical total order (logit DESC, doc_id)
-    "q119_curriculum_order" ->
-      s"""WITH $QcFeaturesCteSql
-         |SELECT doc_id, logit_micro,
-         |  CAST(row_number() OVER (ORDER BY logit_micro DESC, doc_id) AS BIGINT) AS rank
-         |FROM (SELECT doc_id, CAST($QcLogitSql AS BIGINT) AS logit_micro FROM f)
-         |ORDER BY rank""".stripMargin,
-
-    // per-epoch row_number over the shared Mix64 coordinate — the SQL
-    // image of globalRank's per-epoch total order
-    "q143_epoch_shuffle" ->
-      s"""WITH ep AS (SELECT CAST(0 AS INT) AS epoch UNION ALL SELECT 1),
-         |c AS (
-         |  SELECT ep.epoch, d.doc_id,
-         |    ${OpsQueries.coordSql("(d.doc_id * 2 + ep.epoch)")} AS coord
-         |  FROM documents d CROSS JOIN ep)
-         |SELECT epoch, doc_id,
-         |  CAST(row_number() OVER (PARTITION BY epoch
-         |    ORDER BY coord, doc_id) AS BIGINT) AS position
-         |FROM c ORDER BY epoch, position""".stripMargin,
-
-    "q144_length_buckets" ->
-      """WITH tk AS (
-        |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (
-        |  SELECT n_tokens,
-        |    CAST(CASE WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
-        |         WHEN n_tokens <= 64 THEN 64 WHEN n_tokens <= 128 THEN 128
-        |         ELSE 256 END AS BIGINT) AS seq_len
-        |  FROM tk)
-        |SELECT seq_len, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(least(n_tokens, seq_len)) AS BIGINT) AS n_tokens_kept,
-        |  CAST(sum(greatest(seq_len - n_tokens, 0)) AS BIGINT) AS n_padding,
-        |  CAST(sum(greatest(n_tokens - seq_len, 0)) AS BIGINT) AS n_truncated
-        |FROM b GROUP BY seq_len ORDER BY seq_len""".stripMargin,
-
-    "q35_content_fp" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-        |            THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT) AS content_fp
-        |FROM (
-        |  SELECT doc_id,
-        |    list_reduce(
-        |      list_prepend(CAST(1125899906842597 AS HUGEINT),
-        |        list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, i, 1)) AS HUGEINT))),
-        |      (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT) AS h
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    // Full winnow twin (k=8, w=4): each k-gram's rolling 31-hash is ONE
-    // polynomial in HUGEINT — seed·31^8 + Σ code·31^j < 2^100 fits 128-bit,
-    // so a single mod 2^64 at the end is exact (mod is +/×-homomorphic) —
-    // then CONVERTED TO SIGNED before the window minima (Spark compares
-    // Longs signed; an unsigned min would pick different fingerprints),
-    // sliding-window min over w=4, distinct, count/xor/min. Degenerate
-    // cases mirror the expression: fewer grams than a window → distinct
-    // gram hashes; no grams → empty set (xor 0, min NULL). ASCII corpus:
-    // per-character code points equal unsigned UTF-8 bytes (same
-    // assumption as q35, verified by q35 staying green).
-    "q33_fingerprint" ->
-      """WITH g AS (
-        |  SELECT doc_id, text,
-        |    list_transform(
-        |      list_transform(range(1, greatest(length(text) - 7, 0) + 1), i ->
-        |        (1125899906842597::HUGEINT * 852891037441
-        |         + ascii(substr(text, CAST(i AS INT), 1))::HUGEINT     * 27512614111
-        |         + ascii(substr(text, CAST(i + 1 AS INT), 1))::HUGEINT * 887503681
-        |         + ascii(substr(text, CAST(i + 2 AS INT), 1))::HUGEINT * 28629151
-        |         + ascii(substr(text, CAST(i + 3 AS INT), 1))::HUGEINT * 923521
-        |         + ascii(substr(text, CAST(i + 4 AS INT), 1))::HUGEINT * 29791
-        |         + ascii(substr(text, CAST(i + 5 AS INT), 1))::HUGEINT * 961
-        |         + ascii(substr(text, CAST(i + 6 AS INT), 1))::HUGEINT * 31
-        |         + ascii(substr(text, CAST(i + 7 AS INT), 1))::HUGEINT
-        |        ) % 18446744073709551616::HUGEINT),
-        |      h -> CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-        |                     THEN h - 18446744073709551616::HUGEINT
-        |                     ELSE h END AS BIGINT)) AS grams
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN len(grams) >= 4 THEN
-        |      list_transform(range(1, len(grams) - 2), j ->
-        |        list_aggregate(grams[CAST(j AS INT):CAST(j + 3 AS INT)], 'min'))
-        |    ELSE grams END AS mins
-        |  FROM g),
-        |d AS (SELECT doc_id, text, list_distinct(mins) AS fps FROM w),
-        |cf AS (
-        |  SELECT doc_id,
-        |    CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-        |              THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT) AS content_fp
-        |  FROM (
-        |    SELECT doc_id,
-        |      list_reduce(
-        |        list_prepend(CAST(1125899906842597 AS HUGEINT),
-        |          list_transform(range(1, length(text) + 1), i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS HUGEINT))),
-        |        (a, b) -> (a * 31 + b) % 18446744073709551616::HUGEINT) AS h
-        |    FROM documents))
-        |SELECT d.doc_id, cf.content_fp,
-        |  CAST(len(fps) AS INT) AS n_winnowed,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT), fps), (a, b) -> xor(a, b)) AS fp_xor,
-        |  list_aggregate(fps, 'min') AS fp_min
-        |FROM d JOIN cf ON d.doc_id = cf.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // stopword-profile scoring + CJK script check — pure portable counting
-    "q32_langid" ->
-      s"""WITH base AS (
-         |  SELECT doc_id, text,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
-         |  FROM documents),
-         |scored AS (
-         |  SELECT doc_id, text, list_aggregate($LangCandsSql, 'max') AS best
-         |  FROM base)
-         |SELECT doc_id,
-         |  CASE WHEN len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')) > 0 THEN 'zh'
-         |       WHEN best.score > 0 THEN best.lang
-         |       ELSE 'und' END AS lang_pred
-         |FROM scored ORDER BY doc_id""".stripMargin)
 }

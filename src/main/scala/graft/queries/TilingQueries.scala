@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.tiling.{PairRow, TileJobs, TileKernel}
 
 /** Tiling-operator queries. The sequential E3 kernels (greedy/shuffled
@@ -67,36 +68,44 @@ object TilingQueries extends graft.QueryModule {
       .agg(count(lit(1)).as("n"),
         md5(concat_ws(";", sort_array(collect_list(col("row"))))).as("md5"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // O24/O12/O25/O13/O26 — faithful greedy tiling over synthetic pairs,
     // reduced to the (n, md5) golden summary so the sequential kernels get
     // DRIVER-visible regression protection (judge r8, Next #4); TilingSpec
     // keeps the per-tile numpy-oracle parity
-    "q60_tiling_greedy" -> ((s, _) =>
+    Entry("q60_tiling_greedy", (s, _) =>
       tileSummary(TileJobs.tilePairs(syntheticPairs(s, 64),
-        TileJobs.Config(batch = 6, scale = 3)).toDF())),
+        TileJobs.Config(batch = 6, scale = 3)).toDF()), Some(
+      // golden constants for the sequential kernels (verified against the
+      // numpy oracle via TilingSpec before being recorded; stable across
+      // parallelism — the summaries sort before hashing). The committed
+      // expected values ARE the oracle, q101-style.
+      "SELECT CAST(1465 AS BIGINT) AS n, '7bbd092987ca0982b86c5795d5ea470d' AS md5")),
 
     // O26 scalable mode over the same synthetic set (grid-snap overlap —
     // the order-independent analogue of the sequential walks; the FAITHFUL
     // O28 v1 walk is q168), summarized as (n_pairs, n_tiles, md5 of sorted
     // per-pair counts)
-    "q61_tiling_grid" -> ((s, _) =>
+    Entry("q61_tiling_grid", (s, _) =>
       TileJobs.tilePairs(syntheticPairs(s, 64),
           TileJobs.Config(batch = 6, scale = 3, mode = TileJobs.GridSnap))
         .groupBy("pair_id").agg(count(lit(1)).as("nt"))
         .agg(count(lit(1)).as("n_pairs"), sum(col("nt")).as("n_tiles"),
           md5(concat_ws(";", sort_array(collect_list(
-            concat_ws(",", col("pair_id"), col("nt")))))).as("md5"))),
+            concat_ws(",", col("pair_id"), col("nt")))))).as("md5")), Some(
+      """SELECT CAST(64 AS BIGINT) AS n_pairs, CAST(705 AS BIGINT) AS n_tiles,
+        |  '7045738976ce58339134fe15eeb01a9f' AS md5""".stripMargin)),
 
     // O27 — the SHUFFLED crop scan (the reference's unseeded random walk,
     // seeded here for reproducibility — documented divergence) over the
     // same synthetic pairs, pinned by the same golden-summary shape: the
     // last SURVEY §2 operator without a driver-visible anchor (judge r8,
     // Next #6)
-    "q136_tiling_shuffled" -> ((s, _) =>
+    Entry("q136_tiling_shuffled", (s, _) =>
       tileSummary(TileJobs.tilePairs(syntheticPairs(s, 64),
         TileJobs.Config(batch = 6, scale = 3,
-          mode = TileJobs.Shuffled(seed = 42L))).toDF())),
+          mode = TileJobs.Shuffled(seed = 42L))).toDF()), Some(
+      "SELECT CAST(1470 AS BIGINT) AS n, 'df4318efc0a3b5e6219debdd9196af81' AS md5")),
 
     // O28 — the FAITHFUL v1 column-stride walk (v1_Landsat_class_operator
     // .py:27–75) behind a driver row: one v1Walk kernel call per synthetic
@@ -105,7 +114,7 @@ object TilingQueries extends graft.QueryModule {
     // violation — contribute zero rows, faithfully). Golden (n, md5)
     // summary over sorted (pair, tile, r, c, crc(hr)) rows — lr is empty
     // in the v1 kernel, so it stays out of the hash.
-    "q168_v1_walk" -> ((s, _) => {
+    Entry("q168_v1_walk", (s, _) => {
       import s.implicits._
       val rows = syntheticPairs(s, 64).flatMap { p =>
         TileKernel.v1Walk(p.hr_pixels, p.n_bands, p.hr_h, p.hr_w,
@@ -116,7 +125,11 @@ object TilingQueries extends graft.QueryModule {
           col("c"), crc32(to_json(struct(col("hr"))))).as("row"))
         .agg(count(lit(1)).as("n"),
           md5(concat_ws(";", sort_array(collect_list(col("row"))))).as("md5"))
-    }),
+    }, Some(
+      // O28 faithful v1 walk: constant verified stable across local[4] and
+      // local[7] (sorted-summary shape); kernel parity vs numpy is pinned by
+      // TilingSpec F6/F7
+      "SELECT CAST(180 AS BIGINT) AS n, '087182434f8ff70380db09bf38bbe686' AS md5")),
 
     // COMPOSED REAL-INGEST ROW (judge r10 Next #3): the archive-ingest
     // shape the reference runs per pair (mfo:121–143) as ONE driver row —
@@ -137,7 +150,7 @@ object TilingQueries extends graft.QueryModule {
     // here (single-JVM local mode); on a cluster the same two calls point
     // at shared storage — the plumbing (binaryFile listing, glob
     // pushdown, per-file decode placement) is identical.
-    "q183_ingest_pipeline" -> ((s, _) => {
+    Entry("q183_ingest_pipeline", (s, _) => {
       import s.implicits._
       import graft.raster.{Bands, TiffDecoder, TiffEncoder}
       // per-PROCESS directory: a fixed shared path would race a second JVM
@@ -208,12 +221,16 @@ object TilingQueries extends graft.QueryModule {
         .as[PairRow]
       tileSummary(TileJobs.tilePairs(pairs,
         TileJobs.Config(batch = 6, scale = 3)).toDF())
-    }),
+    }, Some(
+      // the composed ingest row must land on EXACTLY q60's golden constant:
+      // f32 TIFF write → binaryFile scan → decode → band-stack → tile is
+      // bit-equal to tiling the same pairs in memory
+      "SELECT CAST(1465 AS BIGINT) AS n, '7bbd092987ca0982b86c5795d5ea470d' AS md5")),
 
     // O12 — border-validity filter (intended bounds) through the REAL
     // borderFilterDF join, candidates/mask dims derived arithmetically from
     // `part` so a DuckDB oracle mirrors them exactly
-    "q26_border_filter" -> ((s, dir) => {
+    Entry("q26_border_filter", (s, dir) => {
       val masks = s.range(8).select(
         col("id").as("mask_id"),
         (lit(100) + pmod(col("id"), lit(3)) * 10).cast("int").as("h"),
@@ -225,27 +242,46 @@ object TilingQueries extends graft.QueryModule {
         pmod(col("p_partkey") * 13, lit(127)).as("c"))
       TileJobs.borderFilterDF(cands, masks, batch = 40)
         .orderBy("p_partkey")
-    }),
+    }, Some(
+      """WITH masks AS (
+        |  SELECT CAST(i AS BIGINT) AS mask_id, 100 + (i % 3) * 10 AS h, 90 + (i % 4) * 5 AS w
+        |  FROM range(0, 8) t(i)),
+        |cd AS (
+        |  SELECT p_partkey % 8 AS mask_id, p_partkey, p_partkey % 131 AS r,
+        |    (p_partkey * 13) % 127 AS c
+        |  FROM part)
+        |SELECT cd.mask_id, cd.p_partkey, cd.r, cd.c
+        |FROM cd JOIN masks m USING (mask_id)
+        |WHERE cd.r >= 20 AND cd.r + 20 <= m.h AND cd.c >= 20 AND cd.c + 20 <= m.w
+        |ORDER BY p_partkey""".stripMargin)),
 
     // O24 at scale — candidate-center extraction through the REAL
     // candidatesDF (posexplode + filter) over arithmetically synthesized
     // masks, so the (r, c) recovery from flat indices carries an oracle
-    "q62_candidates_df" -> ((s, _) => {
+    Entry("q62_candidates_df", (s, _) => {
       val masks = syntheticMasks(s)
       TileJobs.candidatesDF(masks).orderBy("mask_id", "r", "c")
-    }),
+    }, Some(
+      s"""WITH $CandCte
+         |SELECT mask_id, r, c FROM cand ORDER BY mask_id, r, c""".stripMargin)),
 
     // O26 scalable mode — stride-grid overlap suppression (first candidate
     // per cell, row-major) through the REAL gridSnapDF window
-    "q63_gridsnap_df" -> ((s, _) => {
+    Entry("q63_gridsnap_df", (s, _) => {
       val cands = TileJobs.candidatesDF(syntheticMasks(s))
       TileJobs.gridSnapDF(cands, stride = 4).orderBy("mask_id", "r", "c")
-    }),
+    }, Some(
+      s"""WITH $CandCte,
+         |ranked AS (
+         |  SELECT mask_id, r, c,
+         |    row_number() OVER (PARTITION BY mask_id, r // 4, c // 4 ORDER BY r, c) AS rn
+         |  FROM cand)
+         |SELECT mask_id, r, c FROM ranked WHERE rn = 1 ORDER BY mask_id, r, c""".stripMargin)),
 
     // O13 — tile-quality counts + acceptance over synthesized HR/LR arrays
     // (zeros / nodata / inf injected arithmetically; 64- and 16-element
     // arrays so the percentage divisions are exact powers of two)
-    "q27_quality_filter" -> ((s, dir) => {
+    Entry("q27_quality_filter", (s, dir) => {
       val hrArr = transform(sequence(lit(0), lit(63)), i =>
         when(pmod(col("p_partkey"), lit(13)) === 0 && i < 2, 0.0)
           .when(pmod(col("p_partkey"), lit(29)) === 0 && i === 3, Double.PositiveInfinity)
@@ -261,7 +297,29 @@ object TilingQueries extends graft.QueryModule {
         .withColumn("ok", TileJobs.qualityOkDF(
           col("hr_nz"), col("lr_nz"), col("lr_nodata"), col("hr_inf"), hrN = 64, lrN = 16))
         .orderBy("p_partkey")
-    }),
+    }, Some(
+      """WITH base AS (
+        |  SELECT p_partkey,
+        |    list_transform(range(0, 64), i ->
+        |      CASE WHEN p_partkey % 13 = 0 AND i < 2 THEN 0.0
+        |           WHEN p_partkey % 29 = 0 AND i = 3 THEN 'infinity'::DOUBLE
+        |           ELSE CAST(((p_partkey * 7 + i * 13) % 997) % 50 + 1 AS DOUBLE) END) AS hr,
+        |    list_transform(range(0, 16), j ->
+        |      CASE WHEN p_partkey % 11 = 0 AND j = 0 THEN -9999.0
+        |           ELSE CAST(((p_partkey * 11 + j * 17) % 997) % 50 + 1 AS DOUBLE) END) AS lr
+        |  FROM part),
+        |m AS (
+        |  SELECT p_partkey,
+        |    len(list_filter(hr, v -> v <> 0)) AS hr_nz,
+        |    len(list_filter(lr, v -> v <> 0)) AS lr_nz,
+        |    len(list_filter(lr, v -> v = -9999.0)) AS lr_nodata,
+        |    len(list_filter(hr, v -> isinf(v))) AS hr_inf
+        |  FROM base)
+        |SELECT p_partkey, CAST(hr_nz AS INT) AS hr_nz, CAST(lr_nz AS INT) AS lr_nz,
+        |  CAST(lr_nodata AS INT) AS lr_nodata, CAST(hr_inf AS INT) AS hr_inf,
+        |  (hr_nz * 100.0 / 64 >= 99) AND (lr_nz * 100.0 / 16 >= 99)
+        |    AND (lr_nodata * 100.0 / 16 <= 1) AND (hr_inf * 100.0 / 64 <= 1) AS ok
+        |FROM m ORDER BY p_partkey""".stripMargin)),
 
     // THE REFERENCE'S HEADLINE DATAFLOW AS ONE DRIVER-CHECKED ROW: the E1
     // catalog build → E2 pair dict → E3 tiling kernels composed end to end,
@@ -285,7 +343,7 @@ object TilingQueries extends graft.QueryModule {
     // lazily instead of via driver collects. One eager job remains at
     // construction: Pairing.pathsPair's rdd.zipWithIndex computes its
     // partition offsets with sc.runJob (catalog-sized, documented there).
-    "q101_e3_pipeline" -> ((s, _) => {
+    Entry("q101_e3_pipeline", (s, _) => {
       // the ONE registry row whose input lives outside the data dir by
       // design: its job is pinning the dataflow against the reference's
       // committed goldens. Overridable for other checkouts; absence fails
@@ -324,9 +382,11 @@ object TilingQueries extends graft.QueryModule {
           col("pair_id"), col("tile_id"), col("r"), col("c"),
           crc32(to_json(struct(col("hr")))), crc32(to_json(struct(col("lr")))))))
         .orderBy("stage")
-    }))
+    }, Some(E3Golden.map { case (stage, n, m) =>
+      s"SELECT '$stage' AS stage, CAST($n AS BIGINT) AS n, '$m' AS md5"
+    }.mkString("", "\nUNION ALL\n", "\nORDER BY stage"))))
 
-  private val CandCte =
+  private lazy val CandCte =
     """cand AS (
       |  SELECT m.mask_id, CAST(t.i // 10 AS INT) AS r, CAST(t.i % 10 AS INT) AS c
       |  FROM range(0, 64) m(mask_id), range(0, 120) t(i)
@@ -338,89 +398,13 @@ object TilingQueries extends graft.QueryModule {
     * exact row contents the composed pipeline must keep producing —
     * verified against the committed reference CSVs (GoldenCatalogSpec) and
     * the numpy tiling oracle (TilingSpec) before being recorded here. */
-  private val E3Golden: Seq[(String, Long, String)] = Seq(
+  private lazy val E3Golden: Seq[(String, Long, String)] = Seq(
     ("1_s_catalog", 114L, "fa575c718338308d911b601d06e068c8"),
     ("2_l_catalog", 88L, "23fb96c9d642459668fd2451a7a7ad94"),
     ("3_pairs_metric_faithful", 386L, ""),
     ("4_join_cardinality", 202L, ""),
     ("5_pair_dict", 86L, "2ba341145337d1eda9c464e7231c5b0f"),
     ("6_tiles", 1880L, "23e5dfb7954a693585467f4c4024d5ed"))
-
-  val oracle: Map[String, String] = Map(
-    "q101_e3_pipeline" -> E3Golden.map { case (stage, n, m) =>
-      s"SELECT '$stage' AS stage, CAST($n AS BIGINT) AS n, '$m' AS md5"
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY stage"),
-
-    // golden constants for the sequential kernels (verified against the
-    // numpy oracle via TilingSpec before being recorded; stable across
-    // parallelism — the summaries sort before hashing). The committed
-    // expected values ARE the oracle, q101-style.
-    "q60_tiling_greedy" ->
-      "SELECT CAST(1465 AS BIGINT) AS n, '7bbd092987ca0982b86c5795d5ea470d' AS md5",
-    // the composed ingest row must land on EXACTLY q60's golden constant:
-    // f32 TIFF write → binaryFile scan → decode → band-stack → tile is
-    // bit-equal to tiling the same pairs in memory
-    "q183_ingest_pipeline" ->
-      "SELECT CAST(1465 AS BIGINT) AS n, '7bbd092987ca0982b86c5795d5ea470d' AS md5",
-    "q61_tiling_grid" ->
-      """SELECT CAST(64 AS BIGINT) AS n_pairs, CAST(705 AS BIGINT) AS n_tiles,
-        |  '7045738976ce58339134fe15eeb01a9f' AS md5""".stripMargin,
-    "q136_tiling_shuffled" ->
-      "SELECT CAST(1470 AS BIGINT) AS n, 'df4318efc0a3b5e6219debdd9196af81' AS md5",
-    // O28 faithful v1 walk: constant verified stable across local[4] and
-    // local[7] (sorted-summary shape); kernel parity vs numpy is pinned by
-    // TilingSpec F6/F7
-    "q168_v1_walk" ->
-      "SELECT CAST(180 AS BIGINT) AS n, '087182434f8ff70380db09bf38bbe686' AS md5",
-
-    "q62_candidates_df" ->
-      s"""WITH $CandCte
-         |SELECT mask_id, r, c FROM cand ORDER BY mask_id, r, c""".stripMargin,
-
-    "q63_gridsnap_df" ->
-      s"""WITH $CandCte,
-         |ranked AS (
-         |  SELECT mask_id, r, c,
-         |    row_number() OVER (PARTITION BY mask_id, r // 4, c // 4 ORDER BY r, c) AS rn
-         |  FROM cand)
-         |SELECT mask_id, r, c FROM ranked WHERE rn = 1 ORDER BY mask_id, r, c""".stripMargin,
-
-    "q26_border_filter" ->
-      """WITH masks AS (
-        |  SELECT CAST(i AS BIGINT) AS mask_id, 100 + (i % 3) * 10 AS h, 90 + (i % 4) * 5 AS w
-        |  FROM range(0, 8) t(i)),
-        |cd AS (
-        |  SELECT p_partkey % 8 AS mask_id, p_partkey, p_partkey % 131 AS r,
-        |    (p_partkey * 13) % 127 AS c
-        |  FROM part)
-        |SELECT cd.mask_id, cd.p_partkey, cd.r, cd.c
-        |FROM cd JOIN masks m USING (mask_id)
-        |WHERE cd.r >= 20 AND cd.r + 20 <= m.h AND cd.c >= 20 AND cd.c + 20 <= m.w
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q27_quality_filter" ->
-      """WITH base AS (
-        |  SELECT p_partkey,
-        |    list_transform(range(0, 64), i ->
-        |      CASE WHEN p_partkey % 13 = 0 AND i < 2 THEN 0.0
-        |           WHEN p_partkey % 29 = 0 AND i = 3 THEN 'infinity'::DOUBLE
-        |           ELSE CAST(((p_partkey * 7 + i * 13) % 997) % 50 + 1 AS DOUBLE) END) AS hr,
-        |    list_transform(range(0, 16), j ->
-        |      CASE WHEN p_partkey % 11 = 0 AND j = 0 THEN -9999.0
-        |           ELSE CAST(((p_partkey * 11 + j * 17) % 997) % 50 + 1 AS DOUBLE) END) AS lr
-        |  FROM part),
-        |m AS (
-        |  SELECT p_partkey,
-        |    len(list_filter(hr, v -> v <> 0)) AS hr_nz,
-        |    len(list_filter(lr, v -> v <> 0)) AS lr_nz,
-        |    len(list_filter(lr, v -> v = -9999.0)) AS lr_nodata,
-        |    len(list_filter(hr, v -> isinf(v))) AS hr_inf
-        |  FROM base)
-        |SELECT p_partkey, CAST(hr_nz AS INT) AS hr_nz, CAST(lr_nz AS INT) AS lr_nz,
-        |  CAST(lr_nodata AS INT) AS lr_nodata, CAST(hr_inf AS INT) AS hr_inf,
-        |  (hr_nz * 100.0 / 64 >= 99) AND (lr_nz * 100.0 / 16 >= 99)
-        |    AND (lr_nodata * 100.0 / 16 <= 1) AND (hr_inf * 100.0 / 64 <= 1) AS ok
-        |FROM m ORDER BY p_partkey""".stripMargin)
 }
 
 /** Exit-time cleanup for q183's per-process ingest directory: the per-pid

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Entry
 import graft.text.Urls
 
 /** URL/host-level web curation over `documents` (judge r13 Next #1): the
@@ -308,7 +309,7 @@ object WebQueries extends graft.QueryModule {
     docs.select(col("doc_id"), url.as("url"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val entries: Seq[Entry] = Seq(
     // URL CANONICALIZATION + EXACT URL DEDUP (round 14): lowercase
     // scheme/host, drop the default port, strip the trailing slash, sort
     // query params, drop the fragment — then exact dedup on the canonical
@@ -317,7 +318,7 @@ object WebQueries extends graft.QueryModule {
     // map-side-combinable min(doc_id) per canonical URL collapses a viral
     // URL's 10^8 copies per map partition, and occurrences mark
     // themselves by a streaming hash probe (no per-group sort, no window).
-    "q205_url_dedup" -> ((s, dir) => {
+    Entry("q205_url_dedup", (s, dir) => {
       val canon = urlFixture(t(s, dir, "documents"))
         .select(col("doc_id"), Urls.canonicalize(col("url")).as("canon_url"))
       val keep = canon.groupBy("canon_url").agg(min("doc_id").as("keep_id"))
@@ -325,7 +326,14 @@ object WebQueries extends graft.QueryModule {
         .select(col("doc_id"), col("canon_url"), col("keep_id"),
           (col("doc_id") =!= col("keep_id")).as("is_dup"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      s"""WITH ${urlFixtureSql("documents")},
+         |$canonSql,
+         |k AS (SELECT canon_url, min(doc_id) AS keep_id FROM canon GROUP BY 1)
+         |SELECT c.doc_id, c.canon_url, k.keep_id,
+         |  c.doc_id <> k.keep_id AS is_dup
+         |FROM canon c JOIN k USING (canon_url)
+         |ORDER BY c.doc_id""".stripMargin)),
 
     // HOST QUOTA CURATION (round 14; v2 round 15): CANONICAL host (escape-
     // normalized, lowercased, www folded — the www/apex alias must share
@@ -339,7 +347,7 @@ object WebQueries extends graft.QueryModule {
     // (broadcast at any real host cardinality vs corpus size). Output:
     // the kept docs with their host's pre-quota size — the curation
     // decision AND its evidence in one row.
-    "q206_host_quota" -> ((s, dir) => {
+    Entry("q206_host_quota", (s, dir) => {
       val base = urlFixture(t(s, dir, "documents"))
         .select(col("doc_id"), Urls.canonicalHost(col("url")).as("host"))
         .withColumn("domain", Urls.registeredDomain(col("host")))
@@ -349,7 +357,19 @@ object WebQueries extends graft.QueryModule {
         .select(col("doc_id"), col("host"), col("domain"), col("rank"),
           col("host_total"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      s"""WITH ${urlFixtureSql("documents")},
+         |$hostDomainSql,
+         |r AS (
+         |  SELECT doc_id, host, domain,
+         |    CAST(row_number() OVER (PARTITION BY host
+         |         ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS INT) AS rank
+         |  FROM hd),
+         |tt AS (SELECT host, CAST(count(*) AS BIGINT) AS host_total
+         |       FROM hd GROUP BY 1)
+         |SELECT doc_id, r.host, domain, rank, host_total
+         |FROM r JOIN tt USING (host)
+         |WHERE rank <= $HostQuota ORDER BY doc_id""".stripMargin)),
 
     // WEB CURATION v2 (round 14) — the complete public-pipeline order,
     // composed: URL dedup (syntactic re-skins of one page collapse FIRST,
@@ -376,7 +396,7 @@ object WebQueries extends graft.QueryModule {
     // parity: per-doc quality rounds ONCE to DECIMAL(20,12), per-domain
     // sums stay exact decimals on both engines, and mean_q is the one
     // double division both engines perform on identical operands.
-    "q217_domain_blocklist" -> ((s, dir) => {
+    Entry("q217_domain_blocklist", (s, dir) => {
       // persisted: feeds BOTH the rollup and the per-doc verdict join —
       // without it the whole quality chain (regex/tokenization over text)
       // re-runs per consumer subtree (the q204 lesson; registry cache
@@ -390,7 +410,15 @@ object WebQueries extends graft.QueryModule {
         .select(col("doc_id"), col("domain"), col("n_docs"), col("mean_q"),
           coalesce(col("blocked"), lit(false)).as("blocked"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the fixture + canonical-host/domain CTEs, q31's quality CTEs over
+      // the domain-joined corpus, exact-decimal per-domain sums, the same
+      // bottom-B rank rule, verdict per doc
+      s"""WITH $blocklistCtesSql
+         |SELECT qd.doc_id, qd.domain, mq.n_docs, mq.mean_q,
+         |  (qd.domain IN (SELECT domain FROM blk)) AS blocked
+         |FROM qd JOIN mq USING (domain)
+         |ORDER BY qd.doc_id""".stripMargin)),
 
     // NOINDEX + REL=CANONICAL CONSOLIDATION (round 15): the two in-page
     // crawl directives every public pipeline honors before any content
@@ -406,7 +434,7 @@ object WebQueries extends graft.QueryModule {
     // detection is a narrow per-page projection (the line array never
     // rides a join); the href canonicalizes with the SAME v3 chain and
     // hash-joins the (canon_url, keeper) map — strings-only shuffle.
-    "q218_noindex_canonical" -> ((s, dir) => {
+    Entry("q218_noindex_canonical", (s, dir) => {
       val docs = t(s, dir, "documents")
       val flags = directiveFlagged(docs, Nil)
       val keepers = urlFixture(docs)
@@ -420,7 +448,25 @@ object WebQueries extends graft.QueryModule {
             coalesce(col("keep_id"), col("doc_id")) === col("doc_id"))
             .as("kept"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the same planted head lines over the shared page CTEs, the same
+      // detection regexes, the href canonicalized by a second instance of
+      // the canon chain, joined to the corpus keeper map
+      s"""WITH ${urlFixtureSql("documents")},
+         |$canonSql,
+         |k AS (SELECT canon_url, min(doc_id) AS keep_id FROM canon GROUP BY 1),
+         |${TextQueries.markupOracleCtes("documents")},
+         |$directiveFlSql,
+         |hu AS (SELECT doc_id, href AS url FROM fl),
+         |${canonSqlOver("hu", "h")},
+         |res AS (
+         |  SELECT fl.doc_id, fl.noindex, hcanon.canon_url AS href_canon
+         |  FROM fl JOIN hcanon ON hcanon.doc_id = fl.doc_id)
+         |SELECT res.doc_id, res.noindex,
+         |  coalesce(k.keep_id, res.doc_id) AS canonical_doc,
+         |  (NOT res.noindex) AND coalesce(k.keep_id, res.doc_id) = res.doc_id AS kept
+         |FROM res LEFT JOIN k ON res.href_canon = k.canon_url
+         |ORDER BY res.doc_id""".stripMargin)),
 
     // IDN HOST FOLDING (round 16, judge r15 Next #5): internationalized
     // hosts are routine on a real crawl — the punycode (xn--) and display
@@ -436,7 +482,7 @@ object WebQueries extends graft.QueryModule {
     // replays only the PSL rule — so a decoder regression, a fold-order
     // bug, or expectation drift reddens the row rather than
     // self-verifying. Invalid ACE labels pass through (never-fail).
-    "q226_idn_host" -> ((s, dir) => {
+    Entry("q226_idn_host", (s, dir) => {
       val n = IdnExamples.length
       val hostC = element_at(array(IdnExamples.map(e => lit(e._1)): _*),
         (col("doc_id") % n).cast("int") + 1)
@@ -446,7 +492,22 @@ object WebQueries extends graft.QueryModule {
         .select(col("doc_id"), Urls.canonicalHost(col("url")).as("host"))
         .withColumn("domain", Urls.registeredDomain(col("host")))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the committed expected hosts (independent of the engine's decoder —
+      // see IdnExamples) + the shared PSL registered-domain rule over them
+      {
+      val n = IdnExamples.length
+      val cases = IdnExamples.zipWithIndex.map { case ((_, exp), i) =>
+        s"WHEN $i THEN '$exp'"
+      }.mkString("\n         |    ")
+      s"""WITH hh AS (
+         |  SELECT doc_id, CASE CAST(doc_id % $n AS INT)
+         |    $cases
+         |    END AS host
+         |  FROM documents),
+         |$domainOfHhSql
+         |SELECT doc_id, host, domain FROM hd ORDER BY doc_id""".stripMargin
+    })),
 
     // ROBOTS.TXT CRAWL GATE (round 16, judge r15 missing #5 — the
     // politeness layer's other half, q218 covered the in-page
@@ -468,7 +529,7 @@ object WebQueries extends graft.QueryModule {
     // both the parser and the matcher), so a parse, group-selection or
     // wildcard-match bug reddens the row rather than self-verifying
     // (the IdnExamples discipline).
-    "q227_robots_gate" -> ((s, dir) => {
+    Entry("q227_robots_gate", (s, dir) => {
       // persisted (registry cache contract in SparkEntry): the gate-key
       // frame feeds the distinct-host rule derivation, the match join
       // AND the verdict join-back — without it the canonical
@@ -489,7 +550,17 @@ object WebQueries extends graft.QueryModule {
           coalesce(col("w.a"), lit(true)).as("allowed"),
           col("w.dir").as("rule_dir"), col("w.pfx").as("rule_pfx"))
         .orderBy("doc_id")
-    }),
+    }, Some(
+      // the HAND-DERIVED applicable rules per host (independent of the
+      // parser — see robotsTxtCol's scaladoc) applied with the same
+      // longest-prefix/Allow-on-tie rule; 'sitepat' stands for the 12
+      // site{N}.example.com hosts
+      s"""WITH ${urlFixtureSql("documents")},
+         |$hostCanonSql,
+         |${canonSql},
+         |$robotsRdocsSql,
+         |$robotsGateSql
+         |ORDER BY d.doc_id""".stripMargin)),
 
     // ROBOTS METADATA AS DATA (round 17, judge r16 Next #4): the fields
     // the gate rows drop are a crawl FRONT-END's inputs — per canonical
@@ -506,7 +577,7 @@ object WebQueries extends graft.QueryModule {
     // per-host expectations (committed VALUES from the same robots.txt
     // fixtures — parser-independent) joined to the replayed host
     // counts.
-    "q229_robots_meta" -> ((s, dir) => {
+    Entry("q229_robots_meta", (s, dir) => {
       val hostCounts = urlFixture(t(s, dir, "documents"))
         .select(Urls.canonicalHost(col("url")).as("host"))
         .groupBy("host").agg(count(lit(1)).as("n_docs"))
@@ -520,7 +591,35 @@ object WebQueries extends graft.QueryModule {
           array_join(col("m.sitemaps"), ",").as("sitemaps"))
         .withColumn("est_crawl_ms", col("n_docs") * col("crawl_delay_ms"))
         .orderBy("host")
-    }),
+    }, Some(
+      // hand-derived per-host metadata from the same committed robots.txt
+      // fixtures (delay in ms after group selection for graftbot; sitemaps
+      // in file order), joined to the replayed host counts; 'sitepat'
+      // stands for the 12 site{N}.example.com hosts
+      s"""WITH ${urlFixtureSql("documents")},
+         |$hostCanonSql,
+         |hcnt AS (SELECT host, CAST(count(*) AS BIGINT) AS n_docs
+         |         FROM hh GROUP BY 1),
+         |rmeta AS (
+         |  SELECT * FROM (VALUES
+         |    ('media.example.co.uk', 2500,
+         |     'https://media.example.co.uk/sitemap.xml'),
+         |    ('shop.example.com.au', 10000, ''),
+         |    ('news.portal.example.mm', NULL, ''),
+         |    ('docs.www.ck', 1000,
+         |     'https://docs.www.ck/s1.xml,https://docs.www.ck/s2.xml'),
+         |    ('sitepat', 5000, '')) t(h, delay_ms, sitemaps))
+         |SELECT hc.host, hc.n_docs,
+         |  CAST(r.delay_ms AS BIGINT) AS crawl_delay_ms,
+         |  CAST(CASE WHEN r.sitemaps = '' THEN 0
+         |       ELSE len(string_split(r.sitemaps, ',')) END AS BIGINT)
+         |    AS n_sitemaps,
+         |  r.sitemaps,
+         |  hc.n_docs * CAST(r.delay_ms AS BIGINT) AS est_crawl_ms
+         |FROM hcnt hc JOIN rmeta r
+         |  ON (r.h = hc.host
+         |      OR (r.h = 'sitepat' AND hc.host LIKE 'site%.example.com'))
+         |ORDER BY hc.host""".stripMargin)),
 
     // SITEMAP DISCOVERY FEED (round 17): the files q229's `Sitemap:`
     // pointers advertise, parsed into frontier candidate rows — per
@@ -540,7 +639,7 @@ object WebQueries extends graft.QueryModule {
     // the same committed XML — parser-independent) with `known` replayed
     // through the SHARED canon CTE, so the novelty join is checked
     // against the q205-pinned canonicalization, not against itself.
-    "q230_sitemap_parse" -> ((s, dir) => {
+    Entry("q230_sitemap_parse", (s, dir) => {
       val docs = t(s, dir, "documents")
       val smUrls = urlFixture(docs)
         .select(Urls.canonicalHost(col("url")).as("host")).distinct()
@@ -570,7 +669,56 @@ object WebQueries extends graft.QueryModule {
           col("url_canon"), col("same_host"), col("lastmod_ms"),
           col("priority"), coalesce(col("known"), lit(false)).as("known"))
         .orderBy("sitemap_url", "loc")
-    }),
+    }, Some(
+      // hand-derived per-entry expectations from the committed sitemap XML
+      // (sitemapXmlCol — entity decode, trim, W3C lastmod→epoch ms, the
+      // protocol's same-host bit and the FULL canonical loc all derived BY
+      // HAND, parser-independent); `known` alone is replayed through the
+      // shared canon CTE so the novelty join is checked against the
+      // q205-pinned canonicalization
+      s"""WITH ${urlFixtureSql("documents")},
+         |$canonSql,
+         |sm AS (
+         |  SELECT * FROM (VALUES
+         |    ('https://docs.www.ck/s1.xml', 'sitemap',
+         |     'https://docs.www.ck/s2.xml', 'https://docs.www.ck/s2.xml',
+         |     TRUE, 1711929600000, NULL),
+         |    ('https://docs.www.ck/s1.xml', 'sitemap',
+         |     'https://docs.www.ck/s3.xml', 'https://docs.www.ck/s3.xml',
+         |     TRUE, 1711958700000, NULL),
+         |    ('https://docs.www.ck/s2.xml', 'url',
+         |     'https://docs.www.ck/a/19?b=2&a=1&c=x%2Fy',
+         |     'https://docs.www.ck/a/19?a=1&b=2&c=x%2Fy',
+         |     TRUE, NULL, 0.3),
+         |    ('https://docs.www.ck/s2.xml', 'url',
+         |     'https://docs.www.ck/p/78', 'https://docs.www.ck/p/78',
+         |     TRUE, NULL, NULL),
+         |    ('https://docs.www.ck/s2.xml', 'url',
+         |     'https://docs.www.ck/p/78', 'https://docs.www.ck/p/78',
+         |     TRUE, 1712016000000, 0.6),
+         |    ('https://media.example.co.uk/sitemap.xml', 'url',
+         |     'https://media.example.co.uk/a/1?c=x%2Fy&b=2&a=1',
+         |     'https://media.example.co.uk/a/1?a=1&b=2&c=x%2Fy',
+         |     TRUE, 1709596800000, 0.8),
+         |    ('https://media.example.co.uk/sitemap.xml', 'url',
+         |     'https://media.example.co.uk/a/15',
+         |     'https://media.example.co.uk/a/15', TRUE, NULL, 0.9),
+         |    ('https://media.example.co.uk/sitemap.xml', 'url',
+         |     'https://other.example.org/x', 'https://other.example.org/x',
+         |     FALSE, 1709634600000, NULL),
+         |    ('https://media.example.co.uk/sitemap.xml', 'url',
+         |     'https://www.media.example.co.uk/a/2/',
+         |     'https://media.example.co.uk/a/2', TRUE, NULL, NULL)
+         |  ) t(sitemap_url, kind, loc, url_canon, same_host,
+         |      lastmod_ms, priority))
+         |SELECT s.sitemap_url, s.kind, s.loc, s.url_canon, s.same_host,
+         |  CAST(s.lastmod_ms AS BIGINT) AS lastmod_ms,
+         |  CAST(s.priority AS DOUBLE) AS priority,
+         |  coalesce(k.known, FALSE) AS known
+         |FROM sm s LEFT JOIN
+         |  (SELECT DISTINCT canon_url, TRUE AS known FROM canon) k
+         |  ON s.url_canon = k.canon_url
+         |ORDER BY s.sitemap_url, s.loc""".stripMargin)),
 
     // CRAWL FRONTIER (round 17): the scheduler's per-host fetch queue —
     // q230's candidates (kind='url', same-host per the protocol, NOVEL
@@ -587,7 +735,7 @@ object WebQueries extends graft.QueryModule {
     // candidate gate verdicts (committed VALUES — including the KNOWN
     // locs, which the replayed novelty filter must DROP) + the shared
     // canon CTE for novelty + the rank window replayed in SQL.
-    "q231_crawl_frontier" -> ((s, dir) => {
+    Entry("q231_crawl_frontier", (s, dir) => {
       val docs = t(s, dir, "documents")
       val smUrls = urlFixture(docs)
         .select(Urls.canonicalHost(col("url")).as("host")).distinct()
@@ -661,9 +809,55 @@ object WebQueries extends graft.QueryModule {
           col("crawl_delay_ms"), col("priority_eff"), col("lastmod_ms"))
         .withColumn("host_rank", row_number().over(w))
         .orderBy("host", "host_rank")
-    }),
+    }, Some(
+      // hand-derived gate verdicts/priorities/delays per candidate ENTRY
+      // (committed VALUES from the same sitemap + robots fixtures — the
+      // two KNOWN locs are listed too, with their correctly-derived
+      // verdicts, so the replayed novelty filter must actually drop
+      // them, and /p/78's DUPLICATE listing is listed twice so the
+      // replayed merge must actually collapse it); the per-url_canon
+      // merge, the novelty filter (shared canon CTE) and the per-host
+      // rank window all replay in SQL
+      s"""WITH ${urlFixtureSql("documents")},
+         |$canonSql,
+         |cands AS (
+         |  SELECT * FROM (VALUES
+         |    ('https://media.example.co.uk/a/1?a=1&b=2&c=x%2Fy',
+         |     'media.example.co.uk', TRUE, '/a/1', 0.8, NULL, 2500),
+         |    ('https://media.example.co.uk/a/15',
+         |     'media.example.co.uk', TRUE, '/a/1', 0.9, NULL, 2500),
+         |    ('https://media.example.co.uk/a/2',
+         |     'media.example.co.uk', FALSE, '/a/', 0.5, NULL, 2500),
+         |    ('https://docs.www.ck/a/19?a=1&b=2&c=x%2Fy',
+         |     'docs.www.ck', TRUE, '/a/*9?*y$$', 0.3, NULL, 1000),
+         |    ('https://docs.www.ck/p/78',
+         |     'docs.www.ck', FALSE, '/p/', 0.5, NULL, 1000),
+         |    ('https://docs.www.ck/p/78',
+         |     'docs.www.ck', FALSE, '/p/', 0.6, 1712016000000, 1000)
+         |  ) t(url_canon, host, allowed, rule_pfx, priority_eff,
+         |      lastmod_ms, delay_ms)),
+         |dd AS (
+         |  SELECT url_canon, min(host) AS host, max(allowed) AS allowed,
+         |    min(rule_pfx) AS rule_pfx,
+         |    max(priority_eff) AS priority_eff,
+         |    max(lastmod_ms) AS lastmod_ms, min(delay_ms) AS delay_ms
+         |  FROM cands GROUP BY 1),
+         |fresh AS (
+         |  SELECT * FROM dd c
+         |  WHERE NOT EXISTS
+         |    (SELECT 1 FROM canon k WHERE k.canon_url = c.url_canon))
+         |SELECT url_canon, host, allowed, rule_pfx,
+         |  CAST(delay_ms AS BIGINT) AS crawl_delay_ms,
+         |  CAST(priority_eff AS DOUBLE) AS priority_eff,
+         |  CAST(lastmod_ms AS BIGINT) AS lastmod_ms,
+         |  CAST(row_number() OVER (PARTITION BY host
+         |    ORDER BY allowed DESC, priority_eff DESC,
+         |             lastmod_ms DESC NULLS LAST, url_canon) AS INT)
+         |    AS host_rank
+         |FROM fresh
+         |ORDER BY host, host_rank""".stripMargin)),
 
-    "q210_web_curation_host" -> ((s, dir) => {
+    Entry("q210_web_curation_host", (s, dir) => {
       val docs = t(s, dir, "documents")
       val urls = urlFixture(docs)
       val canon = urls.select(col("doc_id"),
@@ -686,7 +880,48 @@ object WebQueries extends graft.QueryModule {
       val surv = graft.dedup.Dedup.exactDedup(ext, col("text"), col("doc_id"))
       graft.dedup.Dedup.spanStats(surv, col("text"), col("doc_id"), k = 8)
         .orderBy("doc_id")
-    }))
+    }, Some(
+      // the full chain replayed: url fixture → canonical dedup winners →
+      // host quota over the winners → documents filtered → the q203
+      // extraction CTEs over the curated set → md5 min-id text dedup → the
+      // shared q193 span chain over the survivors
+      s"""WITH ${urlFixtureSql("documents")},
+         |$canonSql,
+         |uk AS (SELECT min(doc_id) AS doc_id FROM canon GROUP BY canon_url),
+         |$hostDomainSql,
+         |qr AS (
+         |  SELECT doc_id,
+         |    row_number() OVER (PARTITION BY host
+         |      ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
+         |  FROM hd JOIN uk USING (doc_id)),
+         |cur AS (
+         |  SELECT d.doc_id, d.text FROM documents d
+         |  JOIN qr ON qr.doc_id = d.doc_id AND qr.r <= $CompositionQuota),
+         |${TextQueries.markupOracleCtes("cur")},
+         |ext AS (
+         |  SELECT doc_id, array_to_string(kept, ' ') AS text
+         |  FROM kp WHERE len(kept) > 0),
+         |reps AS (
+         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
+         |  FROM ext),
+         |surv AS (
+         |  SELECT ext.doc_id, ext.text FROM ext
+         |  JOIN reps ON reps.doc_id = ext.doc_id AND reps.rep = ext.doc_id),
+         |${DedupQueries.spanOracleCtes("surv")},
+         |cov AS (
+         |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
+         |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
+         |  GROUP BY doc_id),
+         |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
+         |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+         |  CAST(greatest(len(t.w) - 7, 0) AS BIGINT) AS n_grams,
+         |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
+         |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
+         |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
+         |FROM toks t
+         |LEFT JOIN dc USING (doc_id)
+         |LEFT JOIN cov USING (doc_id)
+         |ORDER BY t.doc_id""".stripMargin)))
 
   /** The fixture URL build as a CTE `u(doc_id, url)` — the oracle twin of
     * [[urlFixture]] (CASE/|| over the same arithmetic). */
@@ -984,258 +1219,4 @@ object WebQueries extends graft.QueryModule {
        |         ELSE ls[-2] || '.' || ls[-1] END AS domain
        |  FROM (SELECT doc_id, host, string_split(host, '.') AS ls FROM hh) t)""".stripMargin
   }
-
-  val oracle: Map[String, String] = Map(
-    "q205_url_dedup" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$canonSql,
-         |k AS (SELECT canon_url, min(doc_id) AS keep_id FROM canon GROUP BY 1)
-         |SELECT c.doc_id, c.canon_url, k.keep_id,
-         |  c.doc_id <> k.keep_id AS is_dup
-         |FROM canon c JOIN k USING (canon_url)
-         |ORDER BY c.doc_id""".stripMargin,
-
-    "q206_host_quota" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$hostDomainSql,
-         |r AS (
-         |  SELECT doc_id, host, domain,
-         |    CAST(row_number() OVER (PARTITION BY host
-         |         ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS INT) AS rank
-         |  FROM hd),
-         |tt AS (SELECT host, CAST(count(*) AS BIGINT) AS host_total
-         |       FROM hd GROUP BY 1)
-         |SELECT doc_id, r.host, domain, rank, host_total
-         |FROM r JOIN tt USING (host)
-         |WHERE rank <= $HostQuota ORDER BY doc_id""".stripMargin,
-
-    // the HAND-DERIVED applicable rules per host (independent of the
-    // parser — see robotsTxtCol's scaladoc) applied with the same
-    // longest-prefix/Allow-on-tie rule; 'sitepat' stands for the 12
-    // site{N}.example.com hosts
-    "q227_robots_gate" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$hostCanonSql,
-         |${canonSql},
-         |$robotsRdocsSql,
-         |$robotsGateSql
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // hand-derived per-host metadata from the same committed robots.txt
-    // fixtures (delay in ms after group selection for graftbot; sitemaps
-    // in file order), joined to the replayed host counts; 'sitepat'
-    // stands for the 12 site{N}.example.com hosts
-    "q229_robots_meta" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$hostCanonSql,
-         |hcnt AS (SELECT host, CAST(count(*) AS BIGINT) AS n_docs
-         |         FROM hh GROUP BY 1),
-         |rmeta AS (
-         |  SELECT * FROM (VALUES
-         |    ('media.example.co.uk', 2500,
-         |     'https://media.example.co.uk/sitemap.xml'),
-         |    ('shop.example.com.au', 10000, ''),
-         |    ('news.portal.example.mm', NULL, ''),
-         |    ('docs.www.ck', 1000,
-         |     'https://docs.www.ck/s1.xml,https://docs.www.ck/s2.xml'),
-         |    ('sitepat', 5000, '')) t(h, delay_ms, sitemaps))
-         |SELECT hc.host, hc.n_docs,
-         |  CAST(r.delay_ms AS BIGINT) AS crawl_delay_ms,
-         |  CAST(CASE WHEN r.sitemaps = '' THEN 0
-         |       ELSE len(string_split(r.sitemaps, ',')) END AS BIGINT)
-         |    AS n_sitemaps,
-         |  r.sitemaps,
-         |  hc.n_docs * CAST(r.delay_ms AS BIGINT) AS est_crawl_ms
-         |FROM hcnt hc JOIN rmeta r
-         |  ON (r.h = hc.host
-         |      OR (r.h = 'sitepat' AND hc.host LIKE 'site%.example.com'))
-         |ORDER BY hc.host""".stripMargin,
-
-    // hand-derived per-entry expectations from the committed sitemap XML
-    // (sitemapXmlCol — entity decode, trim, W3C lastmod→epoch ms, the
-    // protocol's same-host bit and the FULL canonical loc all derived BY
-    // HAND, parser-independent); `known` alone is replayed through the
-    // shared canon CTE so the novelty join is checked against the
-    // q205-pinned canonicalization
-    "q230_sitemap_parse" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$canonSql,
-         |sm AS (
-         |  SELECT * FROM (VALUES
-         |    ('https://docs.www.ck/s1.xml', 'sitemap',
-         |     'https://docs.www.ck/s2.xml', 'https://docs.www.ck/s2.xml',
-         |     TRUE, 1711929600000, NULL),
-         |    ('https://docs.www.ck/s1.xml', 'sitemap',
-         |     'https://docs.www.ck/s3.xml', 'https://docs.www.ck/s3.xml',
-         |     TRUE, 1711958700000, NULL),
-         |    ('https://docs.www.ck/s2.xml', 'url',
-         |     'https://docs.www.ck/a/19?b=2&a=1&c=x%2Fy',
-         |     'https://docs.www.ck/a/19?a=1&b=2&c=x%2Fy',
-         |     TRUE, NULL, 0.3),
-         |    ('https://docs.www.ck/s2.xml', 'url',
-         |     'https://docs.www.ck/p/78', 'https://docs.www.ck/p/78',
-         |     TRUE, NULL, NULL),
-         |    ('https://docs.www.ck/s2.xml', 'url',
-         |     'https://docs.www.ck/p/78', 'https://docs.www.ck/p/78',
-         |     TRUE, 1712016000000, 0.6),
-         |    ('https://media.example.co.uk/sitemap.xml', 'url',
-         |     'https://media.example.co.uk/a/1?c=x%2Fy&b=2&a=1',
-         |     'https://media.example.co.uk/a/1?a=1&b=2&c=x%2Fy',
-         |     TRUE, 1709596800000, 0.8),
-         |    ('https://media.example.co.uk/sitemap.xml', 'url',
-         |     'https://media.example.co.uk/a/15',
-         |     'https://media.example.co.uk/a/15', TRUE, NULL, 0.9),
-         |    ('https://media.example.co.uk/sitemap.xml', 'url',
-         |     'https://other.example.org/x', 'https://other.example.org/x',
-         |     FALSE, 1709634600000, NULL),
-         |    ('https://media.example.co.uk/sitemap.xml', 'url',
-         |     'https://www.media.example.co.uk/a/2/',
-         |     'https://media.example.co.uk/a/2', TRUE, NULL, NULL)
-         |  ) t(sitemap_url, kind, loc, url_canon, same_host,
-         |      lastmod_ms, priority))
-         |SELECT s.sitemap_url, s.kind, s.loc, s.url_canon, s.same_host,
-         |  CAST(s.lastmod_ms AS BIGINT) AS lastmod_ms,
-         |  CAST(s.priority AS DOUBLE) AS priority,
-         |  coalesce(k.known, FALSE) AS known
-         |FROM sm s LEFT JOIN
-         |  (SELECT DISTINCT canon_url, TRUE AS known FROM canon) k
-         |  ON s.url_canon = k.canon_url
-         |ORDER BY s.sitemap_url, s.loc""".stripMargin,
-
-    // hand-derived gate verdicts/priorities/delays per candidate ENTRY
-    // (committed VALUES from the same sitemap + robots fixtures — the
-    // two KNOWN locs are listed too, with their correctly-derived
-    // verdicts, so the replayed novelty filter must actually drop
-    // them, and /p/78's DUPLICATE listing is listed twice so the
-    // replayed merge must actually collapse it); the per-url_canon
-    // merge, the novelty filter (shared canon CTE) and the per-host
-    // rank window all replay in SQL
-    "q231_crawl_frontier" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$canonSql,
-         |cands AS (
-         |  SELECT * FROM (VALUES
-         |    ('https://media.example.co.uk/a/1?a=1&b=2&c=x%2Fy',
-         |     'media.example.co.uk', TRUE, '/a/1', 0.8, NULL, 2500),
-         |    ('https://media.example.co.uk/a/15',
-         |     'media.example.co.uk', TRUE, '/a/1', 0.9, NULL, 2500),
-         |    ('https://media.example.co.uk/a/2',
-         |     'media.example.co.uk', FALSE, '/a/', 0.5, NULL, 2500),
-         |    ('https://docs.www.ck/a/19?a=1&b=2&c=x%2Fy',
-         |     'docs.www.ck', TRUE, '/a/*9?*y$$', 0.3, NULL, 1000),
-         |    ('https://docs.www.ck/p/78',
-         |     'docs.www.ck', FALSE, '/p/', 0.5, NULL, 1000),
-         |    ('https://docs.www.ck/p/78',
-         |     'docs.www.ck', FALSE, '/p/', 0.6, 1712016000000, 1000)
-         |  ) t(url_canon, host, allowed, rule_pfx, priority_eff,
-         |      lastmod_ms, delay_ms)),
-         |dd AS (
-         |  SELECT url_canon, min(host) AS host, max(allowed) AS allowed,
-         |    min(rule_pfx) AS rule_pfx,
-         |    max(priority_eff) AS priority_eff,
-         |    max(lastmod_ms) AS lastmod_ms, min(delay_ms) AS delay_ms
-         |  FROM cands GROUP BY 1),
-         |fresh AS (
-         |  SELECT * FROM dd c
-         |  WHERE NOT EXISTS
-         |    (SELECT 1 FROM canon k WHERE k.canon_url = c.url_canon))
-         |SELECT url_canon, host, allowed, rule_pfx,
-         |  CAST(delay_ms AS BIGINT) AS crawl_delay_ms,
-         |  CAST(priority_eff AS DOUBLE) AS priority_eff,
-         |  CAST(lastmod_ms AS BIGINT) AS lastmod_ms,
-         |  CAST(row_number() OVER (PARTITION BY host
-         |    ORDER BY allowed DESC, priority_eff DESC,
-         |             lastmod_ms DESC NULLS LAST, url_canon) AS INT)
-         |    AS host_rank
-         |FROM fresh
-         |ORDER BY host, host_rank""".stripMargin,
-
-    // the committed expected hosts (independent of the engine's decoder —
-    // see IdnExamples) + the shared PSL registered-domain rule over them
-    "q226_idn_host" -> {
-      val n = IdnExamples.length
-      val cases = IdnExamples.zipWithIndex.map { case ((_, exp), i) =>
-        s"WHEN $i THEN '$exp'"
-      }.mkString("\n         |    ")
-      s"""WITH hh AS (
-         |  SELECT doc_id, CASE CAST(doc_id % $n AS INT)
-         |    $cases
-         |    END AS host
-         |  FROM documents),
-         |$domainOfHhSql
-         |SELECT doc_id, host, domain FROM hd ORDER BY doc_id""".stripMargin
-    },
-
-    // the fixture + canonical-host/domain CTEs, q31's quality CTEs over
-    // the domain-joined corpus, exact-decimal per-domain sums, the same
-    // bottom-B rank rule, verdict per doc
-    "q217_domain_blocklist" ->
-      s"""WITH $blocklistCtesSql
-         |SELECT qd.doc_id, qd.domain, mq.n_docs, mq.mean_q,
-         |  (qd.domain IN (SELECT domain FROM blk)) AS blocked
-         |FROM qd JOIN mq USING (domain)
-         |ORDER BY qd.doc_id""".stripMargin,
-
-    // the same planted head lines over the shared page CTEs, the same
-    // detection regexes, the href canonicalized by a second instance of
-    // the canon chain, joined to the corpus keeper map
-    "q218_noindex_canonical" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$canonSql,
-         |k AS (SELECT canon_url, min(doc_id) AS keep_id FROM canon GROUP BY 1),
-         |${TextQueries.markupOracleCtes("documents")},
-         |$directiveFlSql,
-         |hu AS (SELECT doc_id, href AS url FROM fl),
-         |${canonSqlOver("hu", "h")},
-         |res AS (
-         |  SELECT fl.doc_id, fl.noindex, hcanon.canon_url AS href_canon
-         |  FROM fl JOIN hcanon ON hcanon.doc_id = fl.doc_id)
-         |SELECT res.doc_id, res.noindex,
-         |  coalesce(k.keep_id, res.doc_id) AS canonical_doc,
-         |  (NOT res.noindex) AND coalesce(k.keep_id, res.doc_id) = res.doc_id AS kept
-         |FROM res LEFT JOIN k ON res.href_canon = k.canon_url
-         |ORDER BY res.doc_id""".stripMargin,
-
-    // the full chain replayed: url fixture → canonical dedup winners →
-    // host quota over the winners → documents filtered → the q203
-    // extraction CTEs over the curated set → md5 min-id text dedup → the
-    // shared q193 span chain over the survivors
-    "q210_web_curation_host" ->
-      s"""WITH ${urlFixtureSql("documents")},
-         |$canonSql,
-         |uk AS (SELECT min(doc_id) AS doc_id FROM canon GROUP BY canon_url),
-         |$hostDomainSql,
-         |qr AS (
-         |  SELECT doc_id,
-         |    row_number() OVER (PARTITION BY host
-         |      ORDER BY ${OpsQueries.coordSql("doc_id")}, doc_id) AS r
-         |  FROM hd JOIN uk USING (doc_id)),
-         |cur AS (
-         |  SELECT d.doc_id, d.text FROM documents d
-         |  JOIN qr ON qr.doc_id = d.doc_id AND qr.r <= $CompositionQuota),
-         |${TextQueries.markupOracleCtes("cur")},
-         |ext AS (
-         |  SELECT doc_id, array_to_string(kept, ' ') AS text
-         |  FROM kp WHERE len(kept) > 0),
-         |reps AS (
-         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS rep
-         |  FROM ext),
-         |surv AS (
-         |  SELECT ext.doc_id, ext.text FROM ext
-         |  JOIN reps ON reps.doc_id = ext.doc_id AND reps.rep = ext.doc_id),
-         |${DedupQueries.spanOracleCtes("surv")},
-         |cov AS (
-         |  SELECT doc_id, count(DISTINCT p) AS n_covered FROM (
-         |    SELECT doc_id, unnest(range(pos, pos + 8)) AS p FROM dups) t
-         |  GROUP BY doc_id),
-         |dc AS (SELECT doc_id, count(*) AS n_dups FROM dups GROUP BY doc_id)
-         |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-         |  CAST(greatest(len(t.w) - 7, 0) AS BIGINT) AS n_grams,
-         |  CAST(coalesce(dc.n_dups, 0) AS BIGINT) AS n_dup_spans,
-         |  CAST(coalesce(cov.n_covered, 0) AS BIGINT) AS n_covered_tokens,
-         |  CAST(len(t.w) - coalesce(cov.n_covered, 0) AS BIGINT) AS n_kept_tokens
-         |FROM toks t
-         |LEFT JOIN dc USING (doc_id)
-         |LEFT JOIN cov USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin)
 }

@@ -40,9 +40,7 @@ object TileJobs {
       scale: Int,
       overlap: Boolean = true,
       pOverlap: Double = 0.7,
-      mode: OverlapMode = Greedy,
-      faithfulBorder: Boolean = true,
-      faithfulInfDenom: Boolean = true)
+      mode: OverlapMode = Greedy)
 
   /** E3 tiling core: pairs → accepted tiles. Narrow (no shuffle): each pair
     * row is processed where it sits; at 100 TB the parallelism axis is the
@@ -51,18 +49,17 @@ object TileJobs {
     implicit val enc = org.apache.spark.sql.Encoders.product[TileRow]
     pairs.flatMap { p =>
       val cand0 = TileKernel.candidateCenters(p.mask_pixels, p.mask_h, p.mask_w)
-      val cand1 = TileKernel.borderFilter(cand0, cfg.batch, p.mask_h, p.mask_w, cfg.faithfulBorder)
+      val cand1 = TileKernel.borderFilter(cand0, cfg.batch, p.mask_h, p.mask_w, faithful = true)
       val tiles = cfg.mode match {
         case Greedy =>
           TileKernel.cropPairHv(
             p.hr_pixels, p.hr_h, p.hr_w, p.lr_pixels, p.lr_h, p.lr_w,
-            p.n_bands, cand1, cfg.batch, cfg.scale, cfg.overlap, cfg.pOverlap,
-            cfg.faithfulInfDenom)
+            p.n_bands, cand1, cfg.batch, cfg.scale, cfg.overlap, cfg.pOverlap)
         case Shuffled(seed) =>
           TileKernel.cropPairShuffled(
             p.hr_pixels, p.hr_h, p.hr_w, p.lr_pixels, p.lr_h, p.lr_w,
             p.n_bands, cand1, cfg.batch, cfg.scale, cfg.overlap, cfg.pOverlap,
-            seed ^ p.pair_id.hashCode.toLong, cfg.faithfulInfDenom)
+            seed ^ p.pair_id.hashCode.toLong)
         case GridSnap =>
           val stride = math.max(1, (cfg.batch * cfg.pOverlap).toInt)
           val snapped = TileKernel.gridSnap(cand1, stride)
@@ -77,7 +74,7 @@ object TileJobs {
               Math.floorDiv(r0 - half, cfg.scale), Math.floorDiv(r0 + half, cfg.scale),
               Math.floorDiv(c0 - half, cfg.scale), Math.floorDiv(c0 + half, cfg.scale))
             if (TileKernel.qualityOk(hr, lr, p.n_bands, cfg.batch, cfg.batch,
-                cfg.batch / cfg.scale, cfg.batch / cfg.scale, cfg.faithfulInfDenom))
+                cfg.batch / cfg.scale, cfg.batch / cfg.scale, faithfulInfDenom = true))
               Some(TileKernel.Tile(i, r0, c0, hr, lr))
             else None
           }.toVector

@@ -175,8 +175,7 @@ object TileKernel {
       lrPix: Array[Float], lrH: Int, lrW: Int,
       nBands: Int, cand: Candidates,
       batch: Int, scale: Int,
-      overlap: Boolean, pOverlap: Double,
-      faithfulInfDenom: Boolean = true): Vector[Tile] = {
+      overlap: Boolean, pOverlap: Double): Vector[Tile] = {
     require(hrH / lrH == scale,
       s"scale $scale must equal the HR/LR dimension ratio (${hrH}/${lrH})")
     requireSequentialScale(cand)
@@ -195,7 +194,7 @@ object TileKernel {
         Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
         Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
       if (qualityOk(hrTile, lrTile, nBands, batch, batch, batch / scale, batch / scale,
-          faithfulInfDenom)) {
+          faithfulInfDenom = true)) {
         out += Tile(tileId, r0, c0, hrTile, lrTile)
         tileId += 1
         if (overlap) {
@@ -223,8 +222,7 @@ object TileKernel {
       nBands: Int, cand: Candidates,
       batch: Int, scale: Int,
       overlap: Boolean, pOverlap: Double,
-      seed: Long,
-      faithfulInfDenom: Boolean = true): Vector[Tile] = {
+      seed: Long): Vector[Tile] = {
     require(hrH / lrH == scale, "scale must equal the HR/LR dimension ratio")
     requireSequentialScale(cand)
     val rng = new scala.util.Random(seed)
@@ -245,7 +243,7 @@ object TileKernel {
         Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
         Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
       if (qualityOk(hrTile, lrTile, nBands, batch, batch, batch / scale, batch / scale,
-          faithfulInfDenom)) {
+          faithfulInfDenom = true)) {
         out += Tile(tileId, r0, c0, hrTile, lrTile)
         tileId += 1
         if (overlap) {

@@ -82,54 +82,18 @@ object HarnessCache {
     dir.getAbsolutePath
   }
 
-  /** Expectation scalars for `key` (conservation counts, batch truth),
-    * computed at most once per (version, key); persisted as one long per
-    * line with a trailing marker line so a torn write never reads as a
-    * valid (shorter) result; a file that fails to PARSE (corruption
-    * under a surviving marker) recomputes rather than crashing the
-    * query (review r17 #3). The write goes through a per-call unique
-    * temp name + atomic move. Like every consumer of this store, the
-    * cache assumes the repo's single-writer operating model (one bench/
-    * verify process at a time — the bench-isolation discipline);
-    * concurrent first-builds of the SAME key from separate JVMs are not
-    * coordinated. */
-  /** Per-process memo for collected HARNESS FEEDS — the driver-side arrays
-    * a replay row collects from parquet and then delivers into its
-    * MemoryStream (optimization r17 "not yet optimized" #1/#3, judge r17
-    * Next #3): the feed is a deterministic function of (sfDir, code) and
-    * pure harness plumbing — the measured operator is the STREAM the feed
-    * drives, which stays live on every invocation. In-memory (never disk):
-    * feeds are capped deterministic samples, thousands of rows; the map
-    * dies with the JVM, so a fresh bench/verify run always re-collects
-    * from the parquet inputs. Callers must treat the returned value as
+  /** Per-process memo for driver-side harness values: the collected FEEDS
+    * a replay row delivers into its MemoryStream, and the expectation
+    * scalars (conservation counts, batch truth) its validator checks.
+    * Each is a deterministic function of (sfDir, code) and pure harness
+    * plumbing — the measured operator is the STREAM the feed drives,
+    * which stays live on every invocation. In-memory (never disk): feeds
+    * are capped deterministic samples, thousands of rows; the map dies
+    * with the JVM, so a fresh bench/verify run always re-collects from
+    * the parquet inputs. Callers must treat the returned value as
     * immutable (it is shared across invocations). */
   private val values = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   def onceValue[T <: AnyRef](key: String)(compute: => T): T =
     values.computeIfAbsent(s"${Version}_$key",
       _ => compute).asInstanceOf[T]
-
-  def onceScalars(key: String)(compute: => Seq[Long]): Seq[Long] = {
-    val f = new java.io.File(base(key), "scalars.txt")
-    if (f.exists()) {
-      val parsed = scala.util.Try {
-        val lines = java.nio.file.Files.readAllLines(f.toPath)
-          .toArray(Array.empty[String]).toList
-        if (lines.lastOption.contains("ok"))
-          Some(lines.dropRight(1).map(_.toLong))
-        else None
-      }.toOption.flatten
-      parsed match {
-        case Some(v) => return v
-        case None => () // torn or corrupt: fall through and recompute
-      }
-    }
-    val vals = compute
-    f.getParentFile.mkdirs()
-    val tmp = java.io.File.createTempFile("scalars", ".tmp", f.getParentFile)
-    java.nio.file.Files.write(tmp.toPath,
-      (vals.map(_.toString) :+ "ok").mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    vals
-  }
 }

@@ -111,12 +111,11 @@ object Probe {
     }
 
   private def index(): Unit = {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    qs.toSeq.sortBy(n => n.drop(1).takeWhile(_.isDigit).toInt).foreach { n =>
-      println(s"| $n | ${if (os(n)) "oracle" else "rows-only"} |")
+    val (os, rowsOnly) = SparkEntry.registry.partition(_.oracle.isDefined)
+    SparkEntry.registry.sortBy(_.name.drop(1).takeWhile(_.isDigit).toInt).foreach { e =>
+      println(s"| ${e.name} | ${if (e.oracle.isDefined) "oracle" else "rows-only"} |")
     }
-    println(s"total=${qs.size} oracle=${qs.count(os)} rowsOnly=${qs.count(!os(_))}")
-    println("rows-only: " + qs.filterNot(os).toSeq.sorted.mkString(", "))
+    println(s"total=${SparkEntry.registry.size} oracle=${os.size} rowsOnly=${rowsOnly.size}")
+    println("rows-only: " + rowsOnly.map(_.name).sorted.mkString(", "))
   }
 }

@@ -6,7 +6,13 @@ import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.pairing.Pairing
 import graft.raster.{Bands, TiffEncoder}
@@ -71,6 +77,34 @@ class PipelineCliSpec extends SparkSpec {
       assert(images.select("image_id").as[String].collect().sorted.toSeq == names.sorted)
       assert(images.where($"c" =!= 4 || size($"pixels") =!= $"h" * $"w" * 4).isEmpty)
     }
+  }
+
+  test("ingest: one call scans the TIFF directory once") {
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.atomic.AtomicBoolean
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        if (qe.analyzed.exists {
+            case l: LogicalRelation => l.relation match {
+              case r: HadoopFsRelation => r.fileFormat.isInstanceOf[BinaryFileFormat]
+              case _ => false
+            }
+            case _ => false
+          }) scans.incrementAndGet()
+        if (qe.analyzed.output.exists(_.name == "ingest_scan_marker")) marker.set(true)
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (sensor, names) = Sensors.head
+      val out = root.resolve("ingest-once").toString
+      assert(PipelineCli.ingest(spark, corpus.tiffDir(sensor), sensor, out) == names.size)
+      // listener events arrive in order: once the marker's has, ingest's have too
+      spark.range(1).toDF("ingest_scan_marker").collect()
+      eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
+      assert(scans.get() == 1)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("run: golden-form catalogs, and the tiles of the directly assembled pairs") {

@@ -21,15 +21,10 @@ class VerifySpec extends SparkSpec {
     assert(Files.readString(good.resolve("oracle_sql.json")).contains(s"\"$q\""))
   }
 
-  private def name(m: QueryModule) = m.getClass.getSimpleName.stripSuffix("$")
-
-  test("registry keys: no query name in two modules; each oracle key names its own module's query") {
-    val owners = SparkEntry.modules.flatMap(m => m.queries.keys.map(_ -> name(m)))
-      .groupMap(_._1)(_._2)
-    val dupes = owners.collect { case (q, ms) if ms.size > 1 => s"$q in ${ms.mkString(", ")}" }
+  test("registry names: each query name is declared once in the whole registry") {
+    val dupes = SparkEntry.registry.groupBy(_.name).collect {
+      case (n, es) if es.size > 1 => s"$n declared ${es.size} times"
+    }
     assert(dupes.isEmpty, dupes.mkString("\n"))
-    val strays = SparkEntry.modules.flatMap(m =>
-      m.oracle.keys.filterNot(m.queries.contains).map(k => s"${name(m)}: oracle $k"))
-    assert(strays.isEmpty, strays.mkString("\n"))
   }
 }

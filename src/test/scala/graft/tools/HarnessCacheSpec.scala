@@ -7,47 +7,20 @@ import graft.SparkSpec
 
 /** Pins [[HarnessCache]] — the write-once store behind the streaming
   * replay rows' served models and truth scalars (judge r16 Next #2):
-  * compute-once semantics, torn-write rejection, and version/key
-  * isolation. Keys carry a per-test nonce so reruns in a dirty /tmp
-  * never see a previous test session's entries. */
+  * compute-once semantics and key isolation. Keys carry a per-test nonce
+  * so reruns in a dirty /tmp never see a previous test session's entries. */
 class HarnessCacheSpec extends AnyFunSuite with SparkSpec {
 
   private val nonce = java.lang.Long.toHexString(System.nanoTime())
 
-  test("onceScalars: computes exactly once; second call reads the file") {
+  test("onceValue: computes exactly once; second call reads the memo") {
     var calls = 0
-    def get() = HarnessCache.onceScalars(s"spec_scalars_$nonce") {
+    def get() = HarnessCache.onceValue(s"spec_scalars_$nonce") {
       calls += 1; Seq(7L, 42L)
     }
     assert(get() == Seq(7L, 42L))
     assert(get() == Seq(7L, 42L))
-    assert(calls == 1, "second call must read the cache, not recompute")
-  }
-
-  test("onceScalars: a torn write (missing trailing marker) is NOT read " +
-      "as a valid shorter result — it recomputes") {
-    val key = s"spec_torn_$nonce"
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_hcache_${HarnessCache.Version}/$key/scalars.txt")
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, "1\n2".getBytes("UTF-8")) // no "ok"
-    var calls = 0
-    val got = HarnessCache.onceScalars(key) { calls += 1; Seq(9L) }
-    assert(got == Seq(9L) && calls == 1,
-      "torn cache file must be recomputed, not trusted")
-    // and the recompute repaired the file: next call reads it
-    assert(HarnessCache.onceScalars(key)(fail("must not recompute")) == Seq(9L))
-  }
-
-  test("onceScalars: a CORRUPT numeric line under a surviving marker " +
-      "recomputes instead of crashing the query (review r17 #3)") {
-    val key = s"spec_corrupt_$nonce"
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_hcache_${HarnessCache.Version}/$key/scalars.txt")
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, "12garbage\nok".getBytes("UTF-8"))
-    assert(HarnessCache.onceScalars(key) { Seq(3L) } == Seq(3L))
-    assert(HarnessCache.onceScalars(key)(fail("must not recompute")) == Seq(3L))
+    assert(calls == 1, "second call must read the memo, not recompute")
   }
 
   test("onceParquet: builds once, returns a readable path; a second call " +
@@ -67,8 +40,8 @@ class HarnessCacheSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("keys are isolated: different keys never share state") {
-    val a = HarnessCache.onceScalars(s"spec_iso_a_$nonce") { Seq(1L) }
-    val b = HarnessCache.onceScalars(s"spec_iso_b_$nonce") { Seq(2L) }
+    val a = HarnessCache.onceValue(s"spec_iso_a_$nonce") { Seq(1L) }
+    val b = HarnessCache.onceValue(s"spec_iso_b_$nonce") { Seq(2L) }
     assert(a == Seq(1L) && b == Seq(2L))
   }
 }
