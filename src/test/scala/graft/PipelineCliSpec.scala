@@ -79,7 +79,7 @@ class PipelineCliSpec extends SparkSpec {
     }
   }
 
-  test("ingest: one call scans the TIFF directory once") {
+  test("ingest: one scan of the TIFF directory, and every band file counted") {
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val marker = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new QueryExecutionListener {
@@ -99,7 +99,11 @@ class PipelineCliSpec extends SparkSpec {
     try {
       val (sensor, names) = Sensors.head
       val out = root.resolve("ingest-once").toString
-      assert(PipelineCli.ingest(spark, corpus.tiffDir(sensor), sensor, out) == names.size)
+      val printed = new java.io.ByteArrayOutputStream
+      Console.withOut(printed) {
+        assert(PipelineCli.ingest(spark, corpus.tiffDir(sensor), sensor, out) == names.size)
+      }
+      assert(printed.toString.contains(s"band_files_decoded=${names.size * 4} "), printed)
       // listener events arrive in order: once the marker's has, ingest's have too
       spark.range(1).toDF("ingest_scan_marker").collect()
       eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
