@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Asset row model: D3-style with modality metadata. */
-  val AssetSchema = "asset_id STRING, kind STRING, media_type STRING, " +
-    "width INT, height INT, channels INT, n_frames INT, content BINARY"
-
   // ------------------------------------------------------------ fake codec
 
   /** Deterministic toy container standing in for a real image/video codec:

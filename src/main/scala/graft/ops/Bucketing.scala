@@ -1,8 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Bucketed-table helpers for the 100 TB path: persisting both sides of a
   * recurring equi-join bucketed (and sorted) by the join key lets Spark
@@ -17,43 +15,19 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   */
 object Bucketing {
 
-  /** Persist `df` as a bucketed, sorted managed table (overwrite).
-    *
-    * Overwrite must also cover the stale-location case: the session
-    * metastore is in-memory (fresh per JVM) while `spark-warehouse/`
-    * persists on disk, so a managed-table directory left by a PREVIOUS
-    * process is invisible to the catalog and `saveAsTable` fails with
-    * LOCATION_ALREADY_EXISTS. If the table is not in the catalog but its
-    * default location exists, remove the orphaned directory first —
-    * but ONLY if it looks like a prior managed-table write (contains a
-    * `_SUCCESS` marker or parquet part files). A name collision with
-    * unrelated data under spark-warehouse must fail loudly via
-    * saveAsTable's LOCATION_ALREADY_EXISTS, not be silently removed. */
+  /** Persist `df` as a bucketed, sorted managed table (overwrite). The
+    * table directory lands in the session warehouse, which the session
+    * factory keeps per-process, so no earlier process's table directory
+    * can be in the way; a real name collision fails loudly through
+    * `saveAsTable`'s LOCATION_ALREADY_EXISTS. */
   def writeBucketed(df: DataFrame, table: String, key: String,
-                    nBuckets: Int): Unit = {
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) {
-      val loc = new Path(
-        spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) {
-        val children = fs.listStatus(loc).map(_.getPath.getName)
-        val orphanedTableWrite = children.isEmpty ||
-          children.contains("_SUCCESS") ||
-          children.exists(n => n.startsWith("part-") && n.contains(".parquet"))
-        if (orphanedTableWrite) fs.delete(loc, true)
-        else throw new IllegalStateException(
-          s"refusing to overwrite non-table data at $loc for table '$table': " +
-            s"directory contains ${children.take(5).mkString(", ")}")
-      }
-    }
+                    nBuckets: Int): Unit =
     df.write
       .mode("overwrite")
       .bucketBy(nBuckets, key)
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-  }
 
   /** Join two same-key bucketed tables — with matching bucket counts the
     * planner elides both Exchanges (verify with

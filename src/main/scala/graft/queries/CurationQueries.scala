@@ -684,15 +684,11 @@ object CurationQueries extends graft.QueryModule {
       // persist the loop-invariant frames across the unrolled rounds
       // (round-10, judge r9 Next #7): without it every round re-derives
       // the whole tokenize→distinct→self-join co-occurrence subtree —
-      // at 100 TB that re-reads the corpus PrIters times. Default ON;
-      // SPARK_GRAFT_PR_PERSIST=0 restores re-derivation (micro-bench
-      // comparisons). PlanSpec pins the cached shape (InMemoryTableScan
-      // feeding each round, ONE documents scan in the plan).
-      val persistLoop = !sys.env.get("SPARK_GRAFT_PR_PERSIST").contains("0")
+      // at 100 TB that re-reads the corpus PrIters times. PlanSpec pins
+      // the cached shape (InMemoryTableScan feeding each round, ONE
+      // documents scan in the plan).
       def loopInvariant(df: DataFrame): DataFrame =
-        if (persistLoop)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else df
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val edges = loopInvariant(
         und.select(col("a").as("u"), col("b").as("v"))
           .union(und.select(col("b").as("u"), col("a").as("v"))))

@@ -14,21 +14,14 @@ import graft.Entry
   * actually exchanges: ORC (the other columnar warehouse format) and
   * gzipped JSON-lines (THE corpus interchange format).
   *
-  * Sink location is a per-format directory under java.io.tmpdir —
-  * driver-local like the q44 warehouse tables; at cluster scale the same
-  * code points at a shared FS. Reads use EXPLICIT schemas: schema
+  * Sink location is a per-(format, SF) directory under the process's
+  * [[graft.GraftSession.scratch]] root — driver-local like the q44
+  * warehouse tables; at cluster scale the same code points at a shared FS. Reads use EXPLICIT schemas: schema
   * inference re-scans the whole dataset before the real job (a silent 2×
   * at 100 TB) and types JSON numerics unpredictably — an inferred-schema
   * read is the format-source anti-pattern this module exists to avoid.
   */
 object FormatQueries extends graft.QueryModule {
-
-  /** Per-(format, dataset) sink dir — the OpsQueries.suffix convention:
-    * concurrent verify runs at different SFs on one host must not clobber
-    * each other's round-trip files. */
-  private def tmpDir(name: String, dir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_fmt_$name${OpsQueries.suffix(dir)}").getAbsolutePath
 
   val entries: Seq[Entry] = Seq(
     // ORC sink + source: lineitem's numeric/flag columns through a
@@ -37,7 +30,7 @@ object FormatQueries extends graft.QueryModule {
     // the decimal-exact float discipline. snappy ORC, one file per
     // partition value at bench scale.
     Entry("q174_orc_roundtrip", (s, dir) => {
-      val out = tmpDir("orc", dir)
+      val out = graft.GraftSession.scratch(s"fmt_orc${OpsQueries.suffix(dir)}")
       s.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"))
@@ -71,7 +64,7 @@ object FormatQueries extends graft.QueryModule {
     // md5 over the lexicographically-sorted doc_id:md5(text) pairs — so a
     // single mangled character anywhere in the round-trip flips the row.
     Entry("q175_jsonl_roundtrip", (s, dir) => {
-      val out = tmpDir("jsonl", dir)
+      val out = graft.GraftSession.scratch(s"fmt_jsonl${OpsQueries.suffix(dir)}")
       s.read.parquet(s"$dir/documents.parquet")
         .write.mode("overwrite").option("compression", "gzip").json(out)
       val docSchema = StructType(Seq(

@@ -119,7 +119,7 @@ object OpsQueries extends graft.QueryModule {
     // five partitions — the scan lists only those directories
     // (PartitionFilters pinned in PlanSpec/LayoutSpec)
     Entry("q46_layout_pruning", (s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_layout${suffix(dir)}"
+      val path = graft.GraftSession.scratch(s"layout${suffix(dir)}")
       Layout.writePartitioned(
         events(s, dir).select(col("user_id"), col("value"), col("event_type")),
         path, Seq("event_type"))
@@ -1240,13 +1240,13 @@ object OpsQueries extends graft.QueryModule {
     // asserts lossless round-trip via a full-outer join with null-safe
     // field compares — the oracle expects exactly (n, n, 0) per format,
     // so any codec/quoting/escaping defect is a red driver row. Writes
-    // go under java.io.tmpdir with mode=overwrite (bench reps reuse the
-    // same paths instead of leaking).
+    // go under the process scratch root with mode=overwrite (bench reps
+    // reuse the same per-SF paths instead of leaking).
     Entry("q145_interchange_roundtrip", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val base = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"), "graft_interchange_rt")
+        .get(graft.GraftSession.scratch(s"interchange_rt${suffix(dir)}"))
       val schema = "doc_id LONG, source STRING, text STRING"
       def summary(fmt: String, back: DataFrame): DataFrame = {
         val l = docs.withColumn("in_l", lit(1L))

@@ -153,22 +153,10 @@ object TilingQueries extends graft.QueryModule {
     Entry("q183_ingest_pipeline", (s, _) => {
       import s.implicits._
       import graft.raster.{Bands, TiffDecoder, TiffEncoder}
-      // per-PROCESS directory: a fixed shared path would race a second JVM
-      // on the same host (bench + sbt test both build q183) — one deletes
-      // while the other's listing/scan is mid-flight. Within one JVM,
-      // repeated invocations reuse and rewrite idempotently.
-      val root = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_q183_ingest_${ProcessHandle.current().pid()}")
-      Q183Cleanup.register(root) // per-pid dirs must not outlive the JVM
-      if (java.nio.file.Files.exists(root)) { // idempotent per invocation
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-        finally walk.close()
-      }
-      java.nio.file.Files.createDirectories(root)
+      // a fresh directory per invocation under the process scratch root:
+      // no other JVM or earlier invocation can see or delete its files
+      val root = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(graft.GraftSession.scratch("q183")), "q183_")
       val dir = root.toString
       val hrBands = Bands.LandsatBands
       val lrBands = Bands.SentinelBands
@@ -405,25 +393,4 @@ object TilingQueries extends graft.QueryModule {
     ("4_join_cardinality", 202L, ""),
     ("5_pair_dict", 86L, "2ba341145337d1eda9c464e7231c5b0f"),
     ("6_tiles", 1880L, "23e5dfb7954a693585467f4c4024d5ed"))
-}
-
-/** Exit-time cleanup for q183's per-process ingest directory: the per-pid
-  * name prevents cross-JVM races, and this hook keeps each JVM's dir from
-  * outliving it (one leaked ~2 MB dir per Bench/Verify/test run otherwise). */
-private[queries] object Q183Cleanup {
-  private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private var path: java.nio.file.Path = _
-
-  def register(p: java.nio.file.Path): Unit = {
-    path = p
-    if (registered.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        try if (path != null && java.nio.file.Files.exists(path)) {
-          val walk = java.nio.file.Files.walk(path)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-          finally walk.close()
-        } catch { case _: Exception => () } // exit path: best effort
-      }))
-  }
 }

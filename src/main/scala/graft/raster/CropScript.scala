@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * and raster file, emit one
   * `gdalwarp -cutline <gpkg> -crop_to_cutline <in> <out>` line. The
   * reference appends the lines to per-sensor .sh files; here it is a pure
-  * projection over a (acq_dir, file_name) listing plus a text sink.
+  * projection over a (acq_dir, file_name) listing.
   *
   * Sensor quirks preserved: the Landsat pass keeps only `.tif`-containing,
   * non-xml names and writes the same name; the Sentinel pass keeps all
@@ -33,8 +33,4 @@ object CropScript {
       concat_ws("/", lit(inRoot), col("acq_dir"), col("file_name")),
       concat_ws("/", lit(outRoot), col("acq_dir"), outName)).as("line"))
   }
-
-  /** Single-file .sh sink (the reference's per-sensor script file). */
-  def writeScript(lines: DataFrame, outPath: String): Unit =
-    lines.coalesce(1).write.mode("overwrite").text(outPath)
 }

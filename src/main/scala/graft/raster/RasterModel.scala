@@ -3,18 +3,9 @@ package graft.raster
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** D3/D4/D5 row models (SURVEY.md §1): multi-band image tensors and
-  * centerline masks as flattened float arrays. Spark has no tensor type, so
-  * shape travels as columns and `pixels` is band-major row-major (NCHW):
-  * index = band*h*w + r*w + c.
-  */
-case class ImageTensor(
-    image_id: String,
-    sensor: String,
-    bands: Seq[String],
-    c: Int, h: Int, w: Int,
-    pixels: Array[Float])
-
+/** D5 row model (SURVEY.md §1): a centerline mask as a flattened float
+  * array. Spark has no tensor type, so shape travels as columns and
+  * `pixels` is row-major: index = r*w + c. */
 case class CenterlineMask(mask_id: String, h: Int, w: Int, pixels: Array[Float])
 
 /** Band-file predicates and deterministic band stacking (O11, beta

@@ -208,9 +208,6 @@ object PublicSuffixes {
     "cc.tx.us", "k12.tx.us", "lib.tx.us",
     "cc.wa.us", "k12.wa.us", "lib.wa.us")
 
-  /** Membership set (the [[Urls.registeredDomain]] probe side). */
-  val TwoLabelSet: Set[String] = TwoLabel.toSet
-
   /** Wildcard TLD rules (`*.<tld>` in the PSL): every two-label tail under
     * these is a public suffix. The PSL models .bd and .np this way (there
     * is no explicit `com.bd` list upstream — earlier snapshots here

@@ -55,7 +55,8 @@ object TextAnalysis {
 
   /** One-pass token statistics struct (ws_tokens, stop_hits, len_sum) —
     * native expression ([[graft.functions.TextStats]]); the HOF ratio forms
-    * below are interpreted per token and re-tokenize per metric. */
+    * TextSpec cross-checks it against are interpreted per token and
+    * re-tokenize per metric. */
   def textStats(text: Column): Column =
     graft.functions.TextStats.textStats(text, Stopwords)
 
@@ -79,24 +80,6 @@ object TextAnalysis {
     val n = st.getField("ws_tokens")
     when(n === 0, 0.0).otherwise(
       st.getField("len_sum").cast("double") / n.cast("double"))
-  }
-
-  /** HOF twins, kept solely as independent semantic cross-checks for the
-    * native [[textStats]] (TextSpec pins ≡). */
-  def stopwordRatioHof(text: Column): Column = {
-    val toks = wsTokens(lower(text))
-    val n = size(toks)
-    when(n === 0, 0.0).otherwise(
-      size(filter(toks, t => array_contains(lit(Stopwords.toArray), t))).cast("double") /
-        n.cast("double"))
-  }
-
-  def meanWordLenHof(text: Column): Column = {
-    val toks = wsTokens(text)
-    val n = size(toks)
-    when(n === 0, 0.0).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        n.cast("double"))
   }
 
   /** Composite quality score in [0,1] — a document looks like prose when it
@@ -136,7 +119,7 @@ object TextAnalysis {
     * profile with the highest stopword hit-count. All profiles are scored
     * in ONE native tokenization pass
     * ([[graft.functions.StopwordProfileHits]] — the HOF form re-tokenized
-    * per profile, [[langIdHof]] kept as the spec cross-check). */
+    * per profile; TextSpec keeps it as the cross-check). */
   def langId(text: Column): Column =
     langIdFrom(langProfileHits(text), text)
 
@@ -156,20 +139,6 @@ object TextAnalysis {
     }
     // struct max orders by (score, lang): ties pick the lexicographically
     // greatest language — deterministic, documented.
-    val best = array_max(array(scored: _*))
-    when(regexp_count(text, lit("[\\x{4E00}-\\x{9FFF}]")) > 0, "zh")
-      .when(best.getField("score") > 0, best.getField("lang"))
-      .otherwise("und")
-  }
-
-  /** HOF twin of [[langId]], kept solely as the semantic cross-check. */
-  def langIdHof(text: Column): Column = {
-    val toks = wsTokens(lower(text))
-    val scored = LangProfiles.filter(_._2.nonEmpty).map { case (lang, sw) =>
-      struct(
-        size(filter(toks, t => array_contains(lit(sw.toArray), t))).as("score"),
-        lit(lang).as("lang"))
-    }
     val best = array_max(array(scored: _*))
     when(regexp_count(text, lit("[\\x{4E00}-\\x{9FFF}]")) > 0, "zh")
       .when(best.getField("score") > 0, best.getField("lang"))
@@ -336,8 +305,9 @@ object TextAnalysis {
     * character k-grams, then the minimum of each sliding window of w
     * hashes, distinct. Robust to local edits; the standard document
     * fingerprint for near-dup/plagiarism sweeps. Native one-pass Catalyst
-    * expression ([[graft.functions.Winnow]]) — the HOF composition below is
-    * interpreted per element and re-scans each window (O(n·w)). */
+    * expression ([[graft.functions.Winnow]]) — the HOF composition TextSpec
+    * cross-checks it against is interpreted per element and re-scans each
+    * window (O(n·w)). */
   def winnowingFingerprints(text: Column, k: Int, w: Int): Column =
     graft.functions.Winnow.winnowingFingerprints(text, k, w)
 
@@ -348,19 +318,4 @@ object TextAnalysis {
     * production default (stronger mixing). */
   def winnowingFingerprintsPortable(text: Column, k: Int, w: Int): Column =
     graft.functions.Winnow.winnowingFingerprintsPortable(text, k, w)
-
-  /** The original higher-order-function formulation — kept solely as the
-    * independent semantic cross-check for [[winnowingFingerprints]]
-    * (TextSpec pins native ≡ HOF bit-for-bit on non-null inputs). */
-  def winnowingFingerprintsHof(text: Column, k: Int, w: Int): Column = {
-    val n = length(text) - (k - 1)
-    val kgrams = when(n > 0,
-      transform(sequence(lit(1), n), i => xxhash64(text.substr(i, lit(k)))))
-      .otherwise(array().cast("array<bigint>"))
-    val m = size(kgrams) - (w - 1)
-    when(m > 0,
-      array_distinct(transform(sequence(lit(1), m),
-        j => array_min(slice(kgrams, j, lit(w))))))
-      .otherwise(array_distinct(kgrams))
-  }
 }

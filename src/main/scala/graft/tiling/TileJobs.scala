@@ -65,18 +65,10 @@ object TileJobs {
           val snapped = TileKernel.gridSnap(cand1, stride)
           // quality filter still applies, but acceptance no longer mutates
           // the candidate list — order-independent.
-          val half = cfg.batch / 2
           snapped.rs.indices.iterator.flatMap { i =>
-            val r0 = snapped.rs(i); val c0 = snapped.cs(i)
-            val hr = TileKernel.crop(p.hr_pixels, p.n_bands, p.hr_h, p.hr_w,
-              r0 - half, r0 + half, c0 - half, c0 + half)
-            val lr = TileKernel.crop(p.lr_pixels, p.n_bands, p.lr_h, p.lr_w,
-              Math.floorDiv(r0 - half, cfg.scale), Math.floorDiv(r0 + half, cfg.scale),
-              Math.floorDiv(c0 - half, cfg.scale), Math.floorDiv(c0 + half, cfg.scale))
-            if (TileKernel.qualityOk(hr, lr, p.n_bands, cfg.batch, cfg.batch,
-                cfg.batch / cfg.scale, cfg.batch / cfg.scale, faithfulInfDenom = true))
-              Some(TileKernel.Tile(i, r0, c0, hr, lr))
-            else None
+            TileKernel.alignedTile(i, snapped.rs(i), snapped.cs(i),
+              p.hr_pixels, p.hr_h, p.hr_w, p.lr_pixels, p.lr_h, p.lr_w,
+              p.n_bands, cfg.batch, cfg.scale)
           }.toVector
       }
       tiles.map(t => TileRow(p.pair_id, t.tileId, t.r, t.c, t.hr, t.lr, cfg.batch, cfg.scale))

@@ -124,6 +124,23 @@ object TileKernel {
       (infHr * 100.0 / infDen <= 1)
   }
 
+  /** The aligned HR/LR tile centered at HR pixel (r0, c0) — `batch`-edge
+    * HR crop, LR bounds the floor-div of the HR bounds by `scale` — kept
+    * only when it passes [[qualityOk]] (faithful inf denominator). */
+  private[tiling] def alignedTile(tileId: Int, r0: Int, c0: Int,
+      hrPix: Array[Float], hrH: Int, hrW: Int,
+      lrPix: Array[Float], lrH: Int, lrW: Int,
+      nBands: Int, batch: Int, scale: Int): Option[Tile] = {
+    val half = batch / 2
+    val hr = crop(hrPix, nBands, hrH, hrW, r0 - half, r0 + half, c0 - half, c0 + half)
+    val lr = crop(lrPix, nBands, lrH, lrW,
+      Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
+      Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
+    if (qualityOk(hr, lr, nBands, batch, batch, batch / scale, batch / scale,
+        faithfulInfDenom = true)) Some(Tile(tileId, r0, c0, hr, lr))
+    else None
+  }
+
   /** O26 — the reference's overlap suppression (fct_data_extraction.py:75–88
     * + trigger at :143–147). NOTE the faithful semantics: the removal
     * interval is `[r_acc + batch·p, c_acc + batch·p]` — its endpoints mix
@@ -179,7 +196,6 @@ object TileKernel {
     require(hrH / lrH == scale,
       s"scale $scale must equal the HR/LR dimension ratio (${hrH}/${lrH})")
     requireSequentialScale(cand)
-    val half = batch / 2
     val rs = ArrayBuffer.from(cand.rs)
     val cs = ArrayBuffer.from(cand.cs)
     val out = Vector.newBuilder[Tile]
@@ -189,13 +205,9 @@ object TileKernel {
     while (continue) {
       i += 1
       val r0 = rs(i); val c0 = cs(i)
-      val hrTile = crop(hrPix, nBands, hrH, hrW, r0 - half, r0 + half, c0 - half, c0 + half)
-      val lrTile = crop(lrPix, nBands, lrH, lrW,
-        Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
-        Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
-      if (qualityOk(hrTile, lrTile, nBands, batch, batch, batch / scale, batch / scale,
-          faithfulInfDenom = true)) {
-        out += Tile(tileId, r0, c0, hrTile, lrTile)
+      for (t <- alignedTile(tileId, r0, c0, hrPix, hrH, hrW, lrPix, lrH, lrW,
+          nBands, batch, scale)) {
+        out += t
         tileId += 1
         if (overlap) {
           val a = r0 + batch * pOverlap
@@ -226,7 +238,6 @@ object TileKernel {
     require(hrH / lrH == scale, "scale must equal the HR/LR dimension ratio")
     requireSequentialScale(cand)
     val rng = new scala.util.Random(seed)
-    val half = batch / 2
     val rs = ArrayBuffer.from(cand.rs)
     val cs = ArrayBuffer.from(cand.cs)
     val used = ArrayBuffer.empty[Int]
@@ -238,13 +249,10 @@ object TileKernel {
     while (continue) {
       i += 1
       val r0 = rs(index); val c0 = cs(index)
-      val hrTile = crop(hrPix, nBands, hrH, hrW, r0 - half, r0 + half, c0 - half, c0 + half)
-      val lrTile = crop(lrPix, nBands, lrH, lrW,
-        Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
-        Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
-      if (qualityOk(hrTile, lrTile, nBands, batch, batch, batch / scale, batch / scale,
-          faithfulInfDenom = true)) {
-        out += Tile(tileId, r0, c0, hrTile, lrTile)
+      val accepted = alignedTile(tileId, r0, c0, hrPix, hrH, hrW, lrPix, lrH, lrW,
+        nBands, batch, scale)
+      if (accepted.isDefined) {
+        out += accepted.get
         tileId += 1
         if (overlap) {
           noOverlap(rs, cs, r0 + batch * pOverlap, c0 + batch * pOverlap)

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session factory's settings, read from its pure settings function so
-  * no second session is built, plus a source guard that keeps every main
-  * on the factory. */
+/** The session factory's settings, read from its settings function so no
+  * second session is built, plus source guards that keep every main on the
+  * factory and every scratch write under its per-process root. */
 class GraftSessionSpec extends AnyFunSuite {
 
   private def settings(env: (String, String)*): Map[String, String] =
@@ -19,7 +19,8 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.master" -> "local[4]",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.sql.warehouse.dir" -> GraftSession.scratch("warehouse")))
   }
 
   test("SPARK_GRAFT_CPUS sizes the local master and the shuffle partitions together") {
@@ -56,5 +57,13 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     assert(strays.isEmpty, strays.mkString("\n"))
     assert(codeLines.count(_._2.contains("SparkSession.builder(")) == 1)
+  }
+
+  test("only GraftSession reads java.io.tmpdir or adds a shutdown hook") {
+    val strays = codeLines.collect {
+      case (f, l) if f.getFileName.toString != "GraftSession.scala" &&
+          (l.contains("java.io.tmpdir") || l.contains("addShutdownHook")) => s"$f: $l"
+    }
+    assert(strays.isEmpty, strays.mkString("\n"))
   }
 }

@@ -9,42 +9,21 @@ trait SparkSpec extends AnyFunSuite {
   def sfDir: String = "/root/testdata/sf0.001"
   def sf(name: String): String = s"$sfDir/$name.parquet"
 
-  /** Self-cleaning temp dir — registered for recursive deletion at JVM
-    * exit. Bare createTempDirectory leaked one dir per suite run (the
-    * repeated bench/verify/test invocations had piled up hundreds of
-    * orphan dirs in /tmp); every spec call site routes through here. */
+  /** A fresh temp dir under the process's scratch root, so it goes when
+    * the JVM exits; every spec call site routes through here. */
   def tempDir(prefix: String): java.nio.file.Path = SparkSpec.tempDir(prefix)
 }
 
 object SparkSpec {
-  private val cleanup =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(GraftSession.scratch("test")), prefix)
 
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    cleanup.forEach { p =>
-      try if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        // reverse lexicographic = children before parents
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-        finally walk.close()
-      } catch { case _: Exception => () } // exit-path cleanup is best effort
-    }
-  }))
-
-  def tempDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    cleanup.add(p)
-    p
-  }
-
+  /** The factory's default conf (local[4], 4 partitions, UTC, UI off, the
+    * per-process warehouse), independent of the caller's environment. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.settings(_ => None)
+      .foldLeft(SparkSession.builder().appName("graft-test")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -156,7 +156,7 @@ class AnnSpec extends SparkSpec {
     // retrain on the membership, reassign, round-trip the model via
     // Parquet (the q224 swap), serve from the stored tables
     val trained = Ann.trainedCentroids(members, "vec_id", "embedding", 2, 3)
-    val tmp = java.nio.file.Files.createTempDirectory("reb").toString
+    val tmp = tempDir("reb").toString
     trained.write.mode("overwrite").parquet(s"$tmp/cents")
     val stored = spark.read.parquet(s"$tmp/cents")
     val reassigned = Ann.assignCells(members, "vec_id", "embedding", stored)

@@ -1023,7 +1023,7 @@ class StreamsSpec extends SparkSpec {
     val corpus = Seq(
       (1L, "a b c d e f g h"),
       (2L, "z y x w v u t s")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("sigserve").toString
+    val tmp = tempDir("sigserve").toString
     graft.dedup.Dedup.portableSignaturesIndexed(corpus,
         col("doc_id"), col("text"), n = 3, m = 32, bands = 8)
       .write.mode("overwrite").parquet(s"$tmp/index")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.text.TextAnalysis._
+import graft.text.TextHofTwins._
 
 class TextSpec extends SparkSpec {
   import spark.implicits._

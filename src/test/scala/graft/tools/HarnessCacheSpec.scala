@@ -8,7 +8,7 @@ import graft.SparkSpec
 /** Pins [[HarnessCache]] — the write-once store behind the streaming
   * replay rows' served models and truth scalars (judge r16 Next #2):
   * compute-once semantics and key isolation. Keys carry a per-test nonce
-  * so reruns in a dirty /tmp never see a previous test session's entries. */
+  * so no two tests share an entry. */
 class HarnessCacheSpec extends AnyFunSuite with SparkSpec {
 
   private val nonce = java.lang.Long.toHexString(System.nanoTime())
