@@ -331,48 +331,59 @@ object TilingQueries extends graft.QueryModule {
     // lazily instead of via driver collects. One eager job remains at
     // construction: Pairing.pathsPair's rdd.zipWithIndex computes its
     // partition offsets with sc.runJob (catalog-sized, documented there).
-    Entry("q101_e3_pipeline", (s, _) => {
-      // the ONE registry row whose input lives outside the data dir by
-      // design: its job is pinning the dataflow against the reference's
-      // committed goldens. Overridable for other checkouts; absence fails
-      // with a named message, not an opaque CSV-read error.
-      val refDir = graft.catalog.CatalogBuilder.goldenDir
-      require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refDir)),
-        s"q101_e3_pipeline needs the reference goldens at $refDir " +
-          "(set GRAFT_REF_DIR to the data_pair dir of the reference checkout)")
-      def names(f: String) =
-        s.read.option("header", true).csv(s"$refDir/$f")
-          .where(col("data") =!= "0").select("data")
-      val (sCat, lCat) =
-        graft.catalog.CatalogBuilder.reference(names("S_out.csv"), names("L_out.csv"))
-      val pairs = graft.pairing.Pairing.pathsPair(lCat, sCat, includePlaceholders = true)
-      val tiles = TileJobs.tilePairs(
-        synthesizePairs(pairs, col("data_1"), xxhash64(col("data_1"))),
-        TileJobs.Config(batch = 6, scale = 3))
-      def summary(stage: String, df: DataFrame, rowStr: Column): DataFrame =
-        df.agg(count(lit(1)).as("n"),
-          md5(concat_ws(";", sort_array(collect_list(rowStr)))).as("md5"))
-          .select(lit(stage).as("stage"), col("n"), col("md5"))
-      // the scalar metrics join the plan as LAZY one-row aggregates
-      // instead of driver-side collects (see the bench-price note above)
-      def scalarRow(stage: String, v: DataFrame): DataFrame =
-        v.select(lit(stage).as("stage"), col("pairs").as("n"), lit("").as("md5"))
-      val catRow = concat_ws(",", col("class"), col("path"), col("data"))
-      summary("1_s_catalog", sCat, catRow)
-        .unionByName(summary("2_l_catalog", lCat, catRow))
-        .unionByName(scalarRow("3_pairs_metric_faithful",
-          graft.catalog.CatalogBuilder.pairsMetricFaithfulDF(lCat, sCat)))
-        .unionByName(scalarRow("4_join_cardinality",
-          graft.catalog.CatalogBuilder.joinCardinalityDF(lCat, sCat, includePlaceholders = true)))
-        .unionByName(summary("5_pair_dict", pairs,
-          concat_ws("|", col("data_1"), concat_ws(",", col("data_2")))))
-        .unionByName(summary("6_tiles", tiles.toDF(), concat_ws(",",
-          col("pair_id"), col("tile_id"), col("r"), col("c"),
-          crc32(to_json(struct(col("hr")))), crc32(to_json(struct(col("lr")))))))
-        .orderBy("stage")
-    }, Some(E3Golden.map { case (stage, n, m) =>
-      s"SELECT '$stage' AS stage, CAST($n AS BIGINT) AS n, '$m' AS md5"
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY stage"))))
+    //
+    // The ONE registry row whose input lives outside the data dir by
+    // design: its job is pinning the dataflow against the reference's
+    // committed goldens, so it reads CatalogBuilder.goldenDir (see
+    // e3Pipeline; PlanSpec passes a stand-in dir only to sweep the plan)
+    Entry("q101_e3_pipeline", (s, _) => e3Pipeline(s, graft.catalog.CatalogBuilder.goldenDir),
+      Some(E3Golden.map { case (stage, n, m) =>
+        s"SELECT '$stage' AS stage, CAST($n AS BIGINT) AS n, '$m' AS md5"
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY stage"))))
+
+  /** q101's composed E1 → E2 → E3 dataflow over the data names of the
+    * `S_out.csv`/`L_out.csv` catalogs in `refDir`, one (stage, n, md5)
+    * summary row per stage. The registry row passes
+    * [[graft.catalog.CatalogBuilder.goldenDir]], the reference's committed
+    * goldens, whose absence fails with a named message rather than an
+    * opaque CSV-read error. PlanSpec passes a stand-in dir of the same
+    * `class,path,data` header only to sweep the plan: the header fixes the
+    * schema, so the rows it reads cannot change the plan's shape. */
+  def e3Pipeline(s: SparkSession, refDir: String): DataFrame = {
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refDir)),
+      s"q101_e3_pipeline needs the reference goldens at $refDir " +
+        "(set GRAFT_REF_DIR to the data_pair dir of the reference checkout)")
+    def names(f: String) =
+      s.read.option("header", true).csv(s"$refDir/$f")
+        .where(col("data") =!= "0").select("data")
+    val (sCat, lCat) =
+      graft.catalog.CatalogBuilder.reference(names("S_out.csv"), names("L_out.csv"))
+    val pairs = graft.pairing.Pairing.pathsPair(lCat, sCat, includePlaceholders = true)
+    val tiles = TileJobs.tilePairs(
+      synthesizePairs(pairs, col("data_1"), xxhash64(col("data_1"))),
+      TileJobs.Config(batch = 6, scale = 3))
+    def summary(stage: String, df: DataFrame, rowStr: Column): DataFrame =
+      df.agg(count(lit(1)).as("n"),
+        md5(concat_ws(";", sort_array(collect_list(rowStr)))).as("md5"))
+        .select(lit(stage).as("stage"), col("n"), col("md5"))
+    // the scalar metrics join the plan as LAZY one-row aggregates
+    // instead of driver-side collects (see the bench-price note at its Entry)
+    def scalarRow(stage: String, v: DataFrame): DataFrame =
+      v.select(lit(stage).as("stage"), col("pairs").as("n"), lit("").as("md5"))
+    val catRow = concat_ws(",", col("class"), col("path"), col("data"))
+    summary("1_s_catalog", sCat, catRow)
+      .unionByName(summary("2_l_catalog", lCat, catRow))
+      .unionByName(scalarRow("3_pairs_metric_faithful",
+        graft.catalog.CatalogBuilder.pairsMetricFaithfulDF(lCat, sCat)))
+      .unionByName(scalarRow("4_join_cardinality",
+        graft.catalog.CatalogBuilder.joinCardinalityDF(lCat, sCat, includePlaceholders = true)))
+      .unionByName(summary("5_pair_dict", pairs,
+        concat_ws("|", col("data_1"), concat_ws(",", col("data_2")))))
+      .unionByName(summary("6_tiles", tiles.toDF(), concat_ws(",",
+        col("pair_id"), col("tile_id"), col("r"), col("c"),
+        crc32(to_json(struct(col("hr")))), crc32(to_json(struct(col("lr")))))))
+      .orderBy("stage")
+  }
 
   private lazy val CandCte =
     """cand AS (
