@@ -100,8 +100,11 @@ object PipelineCli {
            outDir: String, cfg: TileJobs.Config): Long = {
     val assembled = TileJobs.assemblePairs(spark, pairTable,
       spark.read.parquet(imagesPath), spark.read.parquet(masksPath))
-    TileJobs.tilePairs(assembled, cfg).write.mode("overwrite").parquet(s"$outDir/tiles")
-    spark.read.parquet(s"$outDir/tiles").count()
+    // counted during the write, not by re-reading the tiles it wrote
+    val written = Observation("tiles")
+    TileJobs.tilePairs(assembled, cfg).observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$outDir/tiles")
+    written.get("n").asInstanceOf[Long]
   }
 
   /** The whole chain: [[catalog]], the native pair table (`path_pair`

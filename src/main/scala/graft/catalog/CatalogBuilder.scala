@@ -2,8 +2,11 @@ package graft.catalog
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.Base26
 
@@ -21,11 +24,14 @@ import graft.functions.Base26
   *   - order rows by (bin, name) — reproducing the reference's sorted-name
   *     row order exactly (main_function_original.py:38–48).
   *
-  * Scale note: the catalog is a per-sensor file listing (thousands–millions of
-  * rows at most). The only shuffle is the groupBy(bin) histogram; the bin/label
-  * dimension (53 rows here, bounded by #weeks in the range) is broadcast back
-  * onto the listing, so the labeling window function runs on the tiny bin
-  * table, never on the full listing.
+  * Scale note: the catalog is a per-sensor file listing, one row per name
+  * plus one per empty week, and [[build]] returns it computed once as a
+  * driver-resident local relation (see [[local]]), so it is bounded by what
+  * the driver holds of the listing (thousands of names here; a few million
+  * at most). Computing it is one action over the listing: the only shuffle is
+  * the groupBy(bin) histogram, and the bin/label dimension (53 rows here,
+  * bounded by #weeks in the range) is broadcast back onto the listing, so
+  * the labeling runs on the tiny bin table, never on the full listing.
   */
 object CatalogBuilder {
 
@@ -50,7 +56,8 @@ object CatalogBuilder {
     * @param path    the constant parent-dir column value
     * @param firstEdge,nBins  weekly bin range (see WeekBins.numpyWeekRange)
     * @return columns (class, path, data, date, bin) ordered like the golden
-    *         CSVs; project (class, path, data) for byte parity.
+    *         CSVs, computed once as a local relation (see [[local]]);
+    *         project (class, path, data) for byte parity.
     */
   def build(names: DataFrame, dateOf: Column => Column, path: String,
             firstEdge: LocalDate, nBins: Int): DataFrame = {
@@ -68,7 +75,25 @@ object CatalogBuilder {
       .select(lit("0").as("class"), lit(path).as("path"), lit("0").as("data"),
         lit(null).cast("date").as("date"), col("bin"))
 
-    filled.unionByName(placeholders).orderBy("bin", "data")
+    // every row goes to the driver in order: one sorted partition does
+    // that without the range sort's sampling job and shuffle
+    local(filled.unionByName(placeholders).coalesce(1).sortWithinPartitions("bin", "data"))
+  }
+
+  /** `df` computed once: its rows collected in their current order and
+    * returned as a local relation in that order, so later actions read the
+    * rows instead of re-running `df`'s plan, and Catalyst folds projections
+    * and filters over them. With `indexCol`, each row also carries its
+    * 0-based position in that order (a non-null LONG). For listing-sized
+    * frames only: every row passes through the driver. */
+  private[graft] def local(df: DataFrame, indexCol: Option[String] = None): DataFrame = {
+    val rows = df.collect().toSeq
+    val (schema, indexed) = indexCol match {
+      case None => (df.schema, rows)
+      case Some(name) => (df.schema.add(name, LongType, nullable = false),
+        rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) })
+    }
+    df.sparkSession.createDataFrame(indexed.asJava, schema)
   }
 
   /** E1 as the reference runs it (main_code.py:17–21): both sensor catalogs

@@ -3,6 +3,8 @@ package graft.pairing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.CatalogBuilder.local
+
 /** E2 — the week-class pair join (reference: `images_pair.paths_pair`,
   * data_pair/fct_data_extraction.py:218–248, and `write_dict` ibid.:251–263;
   * SURVEY.md §3 E2, operators O14/O5/O30).
@@ -27,45 +29,31 @@ object Pairing {
   /** `os.path.join(path, data)` for our inputs (no absolute-path overrides). */
   private def joined(path: Column, data: Column): Column = concat_ws("/", path, data)
 
-  /** Pair table (data_1 STRING, data_2 ARRAY<STRING>) in L-row order.
+  /** Pair table (data_1 STRING, data_2 ARRAY<STRING>) in L-row order,
+    * computed once as a local relation (the catalogs are listing-sized).
     * `includePlaceholders=false` filters `class != "0"` first (sane mode,
     * quirk Q2). */
-  /** Materialized 0-based row index in the DataFrame's CURRENT row order —
-    * `rdd.zipWithIndex` pins (partition-ordinal, intra-partition position)
-    * at materialization time, so the index survives any later plan
-    * rewrites (AQE re-partitioning, join reordering) that would make
-    * `monotonically_increasing_id`-after-`orderBy` fragile. The RDD hop is
-    * deliberate and cheap here: pathsPair inputs are catalog-sized. */
-  private[pairing] def withRowIndex(df: DataFrame, name: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        name, org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, i) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ i)
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
-
   def pathsPair(l: DataFrame, s: DataFrame, includePlaceholders: Boolean = true): DataFrame = {
     val filt: DataFrame => DataFrame =
       df => if (includePlaceholders) df else df.where(col("class") =!= "0")
-    // Row index to reproduce dict insertion order (materialized — see
-    // withRowIndex).
+    // Dict insertion order is L-row order: `_idx` is each L row's position
+    // in the collected order of the filtered L rows, fixed on the driver, so
+    // no later plan rewrite (AQE re-partitioning, join reordering) can move it.
     // Dict assignment semantics for duplicate L paths (the placeholder rows):
     // the key sits at its FIRST-occurrence position but holds the matches of
     // its LAST assignment — so dedupe to one row per key before the join
     // (min(_idx) for order, max_by(class, _idx) for the winning class).
-    val lp = withRowIndex(filt(l), "_idx")
-      .select(col("class"), joined(col("path"), col("data")).as("data_1"), col("_idx"))
+    val lp = local(filt(l).select(col("class"), joined(col("path"), col("data")).as("data_1")),
+        Some("_idx"))
       .groupBy("data_1")
       .agg(min("_idx").as("_ord"), max_by(col("class"), col("_idx")).as("class"))
     val sp = filt(s)
       .select(col("class"), joined(col("path"), col("data")).as("s_path"))
-    lp.join(broadcast(sp), Seq("class"), "left")
+    local(lp.join(broadcast(sp), Seq("class"), "left")
       .groupBy("data_1", "_ord")
       .agg(sort_array(collect_list("s_path")).as("data_2"))
       .orderBy("_ord")
-      .select("data_1", "data_2")
+      .select("data_1", "data_2"))
   }
 
   /** Python `repr(list[str])` of an array column — the faithful `data_2` CSV

@@ -322,15 +322,12 @@ object TilingQueries extends graft.QueryModule {
     // keep producing them. Every md5 aggregates a sort_array'd row list,
     // so it is independent of partitioning and arrival order.
     //
-    // Bench price (~3.8 s/rep): intrinsic to composing six stage branches
-    // over two catalog sub-plans — each branch re-derives its inputs
-    // (Spark does no cross-branch CSE) and each catalog build is ~8 tiny
-    // exchanges. Checkpoint-materializing the 114-row catalogs was tried
-    // and does NOT help (the builds themselves are the floor, the
-    // re-reads were never the cost); the scalar metrics join the plan
-    // lazily instead of via driver collects. One eager job remains at
-    // construction: Pairing.pathsPair's rdd.zipWithIndex computes its
-    // partition offsets with sc.runJob (catalog-sized, documented there).
+    // Bench price: the two catalog builds and the pair table run at
+    // construction, each computed once into a local relation (CatalogBuilder
+    // .build, Pairing.pathsPair), so the six stage branches re-read rows
+    // instead of re-deriving ~8 tiny exchanges per catalog in every branch
+    // (Spark does no cross-branch CSE). The scalar metrics join the plan
+    // lazily instead of via driver collects.
     //
     // The ONE registry row whose input lives outside the data dir by
     // design: its job is pinning the dataflow against the reference's

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions.col
   * source's CRS/transform — the reference's `raster.meta` copy contract
   * (see [[GeoMeta]]); the pixel-grid consumers simply ignore them.
   *
-  * Anything outside that envelope (JPEG, multi-band) returns
+  * Anything outside that envelope (JPEG, multi-band, a Predictor (tag 317)
+  * other than 1) returns
   * Left(reason) — callers drop or route the file, a poison blob must never
   * kill a sweep. Decompression is bounded by the declared block size, so a
   * zip/lzw-bomb strip or tile can never allocate past the MaxPixels sanity
@@ -105,7 +106,7 @@ object TiffDecoder {
       } else bb.getShort(ifdOff) & 0xFFFF
     var width = -1; var height = -1
     var bits = 1; var compression = 1; var samples = 1; var sampleFormat = 1
-    var photometric = 1
+    var photometric = 1; var predictor = 1
     var stripOffsets: Array[Long] = null
     var stripCounts: Array[Long] = null
     var rowsPerStrip = -1L
@@ -205,6 +206,8 @@ object TiffDecoder {
         // placement is still sequential by decoded byte counts.
         case 278 => rowsPerStrip = vs.headOption.getOrElse(-1L)
         case 279 => stripCounts = vs
+        // 317 Predictor: an unreadable value counts as unsupported, never as 1
+        case 317 => predictor = safeInt(vs.headOption.getOrElse(-1L))
         case 322 => tileW = safeInt(vs.headOption.getOrElse(-1L))
         case 323 => tileH = safeInt(vs.headOption.getOrElse(-1L))
         case 324 => tileOffsets = vs
@@ -229,6 +232,9 @@ object TiffDecoder {
     val packbits = compression == 32773 // Macintosh PackBits RLE
     if (compression != 1 && !deflated && !lzw && !jpeg && !packbits)
       return Left(s"unsupported compression $compression")
+    // horizontal differencing (2) or the floating-point predictor (3) would
+    // need undoing after decompression; decoding without it is wrong pixels
+    if (predictor != 1) return Left(s"unsupported predictor $predictor")
     // YCbCr JPEG (SamplesPerPixel=3, Photometric=6): the JPEG stream
     // carries the subsampling; the decoder returns the R plane as the
     // pixel grid — band 1, exactly what `rasterio.read(1)` hands the

@@ -132,8 +132,9 @@ object TileJobs {
 
   /** Assemble PairRows from relational inputs: a pair table
     * (pair_id, hr_image_id, lr_image_id, mask_id), an images table of D4
-    * rows and a masks table of D5 rows. Two shuffle joins on image ids; the
-    * pixel payloads move once. */
+    * rows and a masks table of D5 rows. Three equi-joins, on the HR image
+    * id, the LR image id and the mask id. The images table is read once per
+    * image side, and at pipeline sizes AQE broadcasts each side whole. */
   def assemblePairs(
       spark: SparkSession,
       pairTable: DataFrame,

@@ -6,14 +6,18 @@ import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
+import graft.catalog.CatalogBuilder
 import graft.pairing.Pairing
 import graft.raster.{Bands, TiffEncoder}
 import graft.tiling.TileJobs
@@ -79,36 +83,80 @@ class PipelineCliSpec extends SparkSpec {
     }
   }
 
-  test("ingest: one scan of the TIFF directory, and every band file counted") {
-    val scans = new java.util.concurrent.atomic.AtomicInteger
+  /** The analyzed plan of every action `body` runs. */
+  private def actionPlans(body: => Unit): Seq[LogicalPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
     val marker = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        if (qe.analyzed.exists {
-            case l: LogicalRelation => l.relation match {
-              case r: HadoopFsRelation => r.fileFormat.isInstanceOf[BinaryFileFormat]
-              case _ => false
-            }
-            case _ => false
-          }) scans.incrementAndGet()
-        if (qe.analyzed.output.exists(_.name == "ingest_scan_marker")) marker.set(true)
-      }
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "action_plans_marker")) marker.set(true)
+        else plans.add(qe.analyzed)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
-      val (sensor, names) = Sensors.head
-      val out = root.resolve("ingest-once").toString
-      val printed = new java.io.ByteArrayOutputStream
+      body
+      // listener events arrive in order: once the marker's has, body's have too
+      spark.range(1).toDF("action_plans_marker").collect()
+      eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Plans among `plans` that scan a `format` file relation rooted at `path`
+    * (any root when `path` is empty). */
+  private def scans(plans: Seq[LogicalPlan], format: Class[_], path: String = ""): Int =
+    plans.count(_.exists {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => format.isInstance(r.fileFormat) &&
+          (path.isEmpty || r.location.rootPaths.exists(_.toUri.getPath == path))
+        case _ => false
+      }
+      case _ => false
+    })
+
+  test("ingest: one scan of the TIFF directory, and every band file counted") {
+    val (sensor, names) = Sensors.head
+    val out = root.resolve("ingest-once").toString
+    val printed = new java.io.ByteArrayOutputStream
+    val plans = actionPlans {
       Console.withOut(printed) {
         assert(PipelineCli.ingest(spark, corpus.tiffDir(sensor), sensor, out) == names.size)
       }
-      assert(printed.toString.contains(s"band_files_decoded=${names.size * 4} "), printed)
-      // listener events arrive in order: once the marker's has, ingest's have too
-      spark.range(1).toDF("ingest_scan_marker").collect()
-      eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
-      assert(scans.get() == 1)
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(printed.toString.contains(s"band_files_decoded=${names.size * 4} "), printed)
+    assert(scans(plans, classOf[BinaryFileFormat]) == 1)
+  }
+
+  test("catalog and pair table are computed once: one scan of each listing per run") {
+    assert(ingested.values.sum == S2Names.size + HlsNames.size)
+    val out = root.resolve("run-once").toString
+    val printed = new java.io.ByteArrayOutputStream
+    val plans = actionPlans {
+      Console.withOut(printed) {
+        PipelineCli.run(spark, corpus.s2Listing, corpus.hlsListing,
+          corpus.imagesGlob, corpus.masks, MaskId, out, cfg)
+      }
+    }
+    for (listing <- Seq(corpus.s2Listing, corpus.hlsListing))
+      assert(scans(plans, classOf[TextFileFormat], listing) == 1, listing)
+    assert(scans(plans, classOf[ParquetFileFormat], s"$out/tiles") == 0,
+      "tiles are counted during their write, not read back")
+
+    def names(p: String) = spark.read.textFile(p).toDF("data")
+    val (sCat, lCat) = CatalogBuilder.reference(names(corpus.s2Listing), names(corpus.hlsListing))
+    for (df <- Seq(sCat, lCat, Pairing.pathsPair(lCat, sCat),
+        Pairing.pathsPair(lCat, sCat, includePlaceholders = false)))
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        df.queryExecution.optimizedPlan)
+  }
+
+  test("tile: an empty pair table writes and counts no tiles") {
+    val out = root.resolve("tile-empty").toString
+    val none = Seq.empty[(String, String, String, String)]
+      .toDF("pair_id", "hr_image_id", "lr_image_id", "mask_id")
+    assert(PipelineCli.tile(spark, none, corpus.imagesGlob, corpus.masks, out, cfg) == 0)
+    assert(spark.read.parquet(s"$out/tiles").isEmpty)
   }
 
   test("run: golden-form catalogs, and the tiles of the directly assembled pairs") {

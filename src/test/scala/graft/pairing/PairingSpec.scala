@@ -58,6 +58,45 @@ class PairingSpec extends SparkSpec {
     }
   }
 
+  /** A hand-built L/S catalog pair in [[graft.catalog.CatalogBuilder.build]]'s
+    * (bin, data) order, spread over three partitions: two `"0"` placeholder
+    * rows in L, a path `dup` assigned twice with different classes, an L
+    * class `D` with no S match, and S names unsorted within a class. */
+  private def handCatalogs = {
+    val l = Seq(
+      (0, "A", "l1"), (0, "A", "l2"), (1, "0", "0"), (2, "B", "l3"), (2, "B", "dup"),
+      (3, "0", "0"), (4, "C", "dup"), (5, "D", "l4"))
+      .map { case (bin, c, d) => (bin, c, "L", d) }.toDF("bin", "class", "path", "data")
+      .repartition(3).orderBy("bin", "data")
+    val s = Seq(("A", "s9"), ("B", "s5"), ("A", "s1"), ("0", "0"), ("C", "s7"),
+      ("A", "s4"), ("C", "s2"), ("0", "0"), ("B", "s3"))
+      .map { case (c, d) => (c, "S", d) }.toDF("class", "path", "data")
+      .repartition(3)
+    (l, s)
+  }
+
+  private def pairRows(includePlaceholders: Boolean): Seq[(String, Seq[String])] = {
+    val (l, s) = handCatalogs
+    Pairing.pathsPair(l, s, includePlaceholders).collect().toSeq
+      .map(r => (r.getString(0), r.getSeq[String](1)))
+  }
+
+  test("pair dict of a hand-built catalog pair: key at first occurrence, last class, empty array") {
+    assert(pairRows(includePlaceholders = true) == Seq(
+      "L/l1" -> Seq("S/s1", "S/s4", "S/s9"),
+      "L/l2" -> Seq("S/s1", "S/s4", "S/s9"),
+      "L/0" -> Seq("S/0", "S/0"),
+      "L/dup" -> Seq("S/s2", "S/s7"), // placed at its B row, holds its last (C) class
+      "L/l3" -> Seq("S/s3", "S/s5"),
+      "L/l4" -> Seq.empty))
+    assert(pairRows(includePlaceholders = false) == Seq(
+      "L/l1" -> Seq("S/s1", "S/s4", "S/s9"),
+      "L/l2" -> Seq("S/s1", "S/s4", "S/s9"),
+      "L/dup" -> Seq("S/s2", "S/s7"),
+      "L/l3" -> Seq("S/s3", "S/s5"),
+      "L/l4" -> Seq.empty))
+  }
+
   test("list-repr codec round-trips through CSV (quirk Q3)") {
     val df = Seq(
       ("a", Seq("x/1", "x/2")),

@@ -73,6 +73,40 @@ class TiffDecoderSpec extends SparkSpec {
       Left("deflate strip inflates past its declared size"))
   }
 
+  /** [[grad]] as a one-strip little-endian Deflate uint16 TIFF whose samples
+    * carry horizontal differencing (each sample minus its left neighbour,
+    * mod 2^16 — what Predictor 2 writes), with tag 317 set to `predictor`. */
+  private def predictorTiff(predictor: Int): Array[Byte] = {
+    import java.nio.{ByteBuffer, ByteOrder}
+    val (h, w) = (6, 5)
+    val raw = ByteBuffer.allocate(h * w * 2).order(ByteOrder.LITTLE_ENDIAN)
+    for (i <- 0 until h * w)
+      raw.putShort((grad(i).toInt - (if (i % w == 0) 0 else grad(i - 1).toInt)).toShort)
+    val deflater = new java.util.zip.Deflater()
+    deflater.setInput(raw.array()); deflater.finish()
+    val buf = new Array[Byte](1024)
+    val strip = buf.take(deflater.deflate(buf))
+    val tags = Seq((256, w), (257, h), (258, 16), (259, 8), (262, 1), (273, -1),
+      (277, 1), (278, h), (279, strip.length), (317, predictor))
+    val dataOff = 8 + 2 + tags.size * 12 + 4
+    val bb = ByteBuffer.allocate(dataOff + strip.length).order(ByteOrder.LITTLE_ENDIAN)
+    bb.put("II".getBytes).putShort(42.toShort).putInt(8).putShort(tags.size.toShort)
+    for ((tag, v) <- tags) // every value a LONG, the strip offset filled in here
+      bb.putShort(tag.toShort).putShort(4.toShort).putInt(1).putInt(if (tag == 273) dataOff else v)
+    bb.putInt(0).put(strip).array()
+  }
+
+  test("predictor: a Deflate strip with Predictor 2 is rejected, never decoded to pixels") {
+    assert(TiffDecoder.decode(predictorTiff(2)) == Left("unsupported predictor 2"))
+    assert(TiffDecoder.decode(predictorTiff(3)) == Left("unsupported predictor 3"))
+    // the same strip under Predictor 1 decodes to the differenced samples —
+    // the wrong pixels a decoder ignoring tag 317 returned
+    val Right(t) = TiffDecoder.decode(predictorTiff(1))
+    assert(t.pixels.toSeq == grad.indices.map(i =>
+      grad(i) - (if (i % 5 == 0) 0f else grad(i - 1))))
+    assert(t.pixels.toSeq != grad.toSeq)
+  }
+
   test("lzw: single-strip 16-bit") {
     val Right(t) = decodeFile("lzw_one.tif")
     assert((t.h, t.w) == (6, 5))
