@@ -77,9 +77,11 @@ object PipelineCli {
     * @return images written */
   def ingest(spark: SparkSession, tiffDir: String, sensor: String, outDir: String): Long = {
     val bands = SensorBands(sensor)
-    // counted during the write: a second action would re-scan and re-decode
-    // every band file (a typed mapPartitions cannot be pruned)
+    // both counted during the write: a second action would re-scan and
+    // re-decode every band file (a typed mapPartitions cannot be pruned),
+    // or read the images back
     val decoded = Observation("band_files")
+    val written = Observation("images")
     val perBand = TiffDecoder.readTiffDir(spark, tiffDir, bands, glob = "*")
       .toDF()
       .select(
@@ -87,8 +89,9 @@ object PipelineCli {
           .as("image_id"),
         col("band"), col("h"), col("w"), col("pixels"))
       .observe(decoded, count(lit(1)).as("n"))
-    Bands.stack(perBand, bands, sensor).write.mode("overwrite").parquet(s"$outDir/images")
-    val n = spark.read.parquet(s"$outDir/images").count()
+    Bands.stack(perBand, bands, sensor).observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$outDir/images")
+    val n = written.get("n").asInstanceOf[Long]
     println(s"band_files_decoded=${decoded.get("n")} images_written=$n")
     n
   }

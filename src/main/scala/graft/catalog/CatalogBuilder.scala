@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DateType, IntegerType, StringType, StructField, StructType}
 
 import graft.functions.Base26
 
@@ -25,17 +25,16 @@ import graft.functions.Base26
   *     row order exactly (main_function_original.py:38–48).
   *
   * Scale note: the catalog is a per-sensor file listing, one row per name
-  * plus one per empty week, and [[build]] returns it computed once as a
-  * driver-resident local relation (see [[local]]), so it is bounded by what
-  * the driver holds of the listing (thousands of names here; a few million
-  * at most). Computing it is one action over the listing: the only shuffle is
-  * the groupBy(bin) histogram, and the bin/label dimension (53 rows here,
-  * bounded by #weeks in the range) is broadcast back onto the listing, so
-  * the labeling runs on the tiny bin table, never on the full listing.
+  * plus one per empty week, and [[build]] returns it as a driver-resident
+  * local relation, so it is bounded by what the driver holds of the listing
+  * (thousands of names here; a few million at most). Computing it is one
+  * Spark job over the listing (parse, bin, one sorted partition, collect)
+  * and a walk over the bins on the driver, like the reference's own loop.
   */
 object CatalogBuilder {
 
-  /** Labeled bin dimension: (bin, bin_start, cnt, class). */
+  /** Labeled bin dimension: (bin, bin_start, cnt, class) — [[build]]'s week
+    * labeling as a lazy Spark plan, for queries that keep it distributed. */
   def labeledBins(dates: DataFrame, dateCol: String, firstEdge: LocalDate, nBins: Int): DataFrame = {
     val hist = WeekBins.histogram(dates, dateCol, firstEdge, nBins)
     // Rank of each non-empty bin among non-empty bins, in bin order, via the
@@ -56,45 +55,42 @@ object CatalogBuilder {
     * @param path    the constant parent-dir column value
     * @param firstEdge,nBins  weekly bin range (see WeekBins.numpyWeekRange)
     * @return columns (class, path, data, date, bin) ordered like the golden
-    *         CSVs, computed once as a local relation (see [[local]]);
-    *         project (class, path, data) for byte parity.
+    *         CSVs, as a local relation; project (class, path, data) for byte
+    *         parity.
     */
   def build(names: DataFrame, dateOf: Column => Column, path: String,
             firstEdge: LocalDate, nBins: Int): DataFrame = {
-    val dated = names
-      .withColumn("date", dateOf(col("data")))
+    // Spark parses and bins every name; the binned names, sorted by
+    // (bin, data) in one partition, are the driver's one collect
+    val byBin = names
+      .select(col("data"), dateOf(col("data")).as("date"))
       .withColumn("bin", WeekBins.weekIndex(col("date"), firstEdge, nBins))
       .where(col("bin").isNotNull) // np.histogram drops out-of-range dates
+      .coalesce(1).sortWithinPartitions("bin", "data")
+      .collect().groupBy(_.getInt(2))
 
-    val bins = labeledBins(dated, "date", firstEdge, nBins)
-
-    val filled = dated.join(broadcast(bins.select("bin", "class")), Seq("bin"))
-      .select(col("class"), lit(path).as("path"), col("data"), col("date"), col("bin"))
-
-    val placeholders = bins.where(col("cnt") === 0)
-      .select(lit("0").as("class"), lit(path).as("path"), lit("0").as("data"),
-        lit(null).cast("date").as("date"), col("bin"))
-
-    // every row goes to the driver in order: one sorted partition does
-    // that without the range sort's sampling job and shuffle
-    local(filled.unionByName(placeholders).coalesce(1).sortWithinPartitions("bin", "data"))
-  }
-
-  /** `df` computed once: its rows collected in their current order and
-    * returned as a local relation in that order, so later actions read the
-    * rows instead of re-running `df`'s plan, and Catalyst folds projections
-    * and filters over them. With `indexCol`, each row also carries its
-    * 0-based position in that order (a non-null LONG). For listing-sized
-    * frames only: every row passes through the driver. */
-  private[graft] def local(df: DataFrame, indexCol: Option[String] = None): DataFrame = {
-    val rows = df.collect().toSeq
-    val (schema, indexed) = indexCol match {
-      case None => (df.schema, rows)
-      case Some(name) => (df.schema.add(name, LongType, nullable = false),
-        rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) })
+    // the week walk: the label counter advances on non-empty bins only
+    // (O17), and an empty bin gets one placeholder row (O18)
+    var labels = 0L
+    val rows = (0 until nBins).flatMap { bin =>
+      byBin.get(bin) match {
+        case Some(named) =>
+          labels += 1
+          val cls = Base26.letters(labels).toString
+          named.map(r => Row(cls, path, r.getString(0), r.get(1), bin)).toSeq
+        case None => Seq(Row("0", path, "0", null, bin))
+      }
     }
-    df.sparkSession.createDataFrame(indexed.asJava, schema)
+    names.sparkSession.createDataFrame(rows.asJava, Schema)
   }
+
+  /** [[build]]'s columns. */
+  private val Schema = StructType(Seq(
+    StructField("class", StringType),
+    StructField("path", StringType, nullable = false),
+    StructField("data", StringType),
+    StructField("date", DateType),
+    StructField("bin", IntegerType)))
 
   /** E1 as the reference runs it (main_code.py:17–21): both sensor catalogs
     * over the 2023 week range, under the reference's parent dirs (the

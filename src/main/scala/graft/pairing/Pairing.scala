@@ -1,60 +1,59 @@
 package graft.pairing
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import graft.catalog.CatalogBuilder.local
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** E2 — the week-class pair join (reference: `images_pair.paths_pair`,
   * data_pair/fct_data_extraction.py:218–248, and `write_dict` ibid.:251–263;
   * SURVEY.md §3 E2, operators O14/O5/O30).
   *
   * The reference runs an O(n·m) nested loop over pandas rows building
-  * `dict[L_path -> [S_path…]]`. Here it is a broadcast hash equi-join on
-  * `class` + grouped collect — the catalogs are tiny relative to any
-  * cluster, so Catalyst broadcasts the S side and no shuffle of the L side
-  * is needed beyond the final (small) groupBy.
+  * `dict[L_path -> [S_path…]]`. Here Spark projects each catalog to
+  * (class, path) in one collect, and the driver builds the same
+  * insertion-ordered dict from a class → S paths map: the catalogs are
+  * listing-sized, so over local catalogs this runs no Spark job.
   *
   * Dict-semantics notes, preserved exactly:
-  *   - every L row creates its key even with zero matches (left join,
-  *     `collect_list` drops the unmatched NULL → empty array);
+  *   - every L row creates its key even with zero matches (empty array);
   *   - duplicate L paths (the `"0"` placeholder rows) collapse to ONE key at
-  *     their first-occurrence position;
+  *     their first-occurrence position, holding their last row's matches;
   *   - `data_2` order = S row order; within one class the S catalog is
-  *     already name-sorted, so `sort_array` reproduces it deterministically
-  *     under parallel collection.
+  *     already name-sorted, so sorting each class's paths (in `sort_array`'s
+  *     byte order) reproduces it whatever order the S rows arrive in.
   */
 object Pairing {
 
   /** `os.path.join(path, data)` for our inputs (no absolute-path overrides). */
   private def joined(path: Column, data: Column): Column = concat_ws("/", path, data)
 
-  /** Pair table (data_1 STRING, data_2 ARRAY<STRING>) in L-row order,
-    * computed once as a local relation (the catalogs are listing-sized).
+  /** Pair table (data_1 STRING, data_2 ARRAY<STRING>) in L-row order, as a
+    * local relation (the catalogs are listing-sized).
     * `includePlaceholders=false` filters `class != "0"` first (sane mode,
     * quirk Q2). */
   def pathsPair(l: DataFrame, s: DataFrame, includePlaceholders: Boolean = true): DataFrame = {
-    val filt: DataFrame => DataFrame =
-      df => if (includePlaceholders) df else df.where(col("class") =!= "0")
-    // Dict insertion order is L-row order: `_idx` is each L row's position
-    // in the collected order of the filtered L rows, fixed on the driver, so
-    // no later plan rewrite (AQE re-partitioning, join reordering) can move it.
-    // Dict assignment semantics for duplicate L paths (the placeholder rows):
-    // the key sits at its FIRST-occurrence position but holds the matches of
-    // its LAST assignment — so dedupe to one row per key before the join
-    // (min(_idx) for order, max_by(class, _idx) for the winning class).
-    val lp = local(filt(l).select(col("class"), joined(col("path"), col("data")).as("data_1")),
-        Some("_idx"))
-      .groupBy("data_1")
-      .agg(min("_idx").as("_ord"), max_by(col("class"), col("_idx")).as("class"))
-    val sp = filt(s)
-      .select(col("class"), joined(col("path"), col("data")).as("s_path"))
-    local(lp.join(broadcast(sp), Seq("class"), "left")
-      .groupBy("data_1", "_ord")
-      .agg(sort_array(collect_list("s_path")).as("data_2"))
-      .orderBy("_ord")
-      .select("data_1", "data_2"))
+    def paths(df: DataFrame): Array[(String, String)] =
+      (if (includePlaceholders) df else df.where(col("class") =!= "0"))
+        .select(col("class"), joined(col("path"), col("data")))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+    // a null class matches nothing, as in an equi-join
+    val sByClass = paths(s).toSeq.filter(_._1 != null).groupMap(_._1)(_._2)
+      .map { case (c, ps) => c -> ps.sortBy(UTF8String.fromString) }
+    // Python dict assignment: a repeated L path keeps its first position and
+    // holds the matches of its last class
+    val dict = mutable.LinkedHashMap.empty[String, Seq[String]]
+    for ((c, p) <- paths(l)) dict(p) = sByClass.getOrElse(c, Nil)
+    l.sparkSession.createDataFrame(dict.map { case (k, v) => Row(k, v) }.toSeq.asJava, Schema)
   }
+
+  /** [[pathsPair]]'s columns. */
+  private val Schema = StructType(Seq(
+    StructField("data_1", StringType, nullable = false),
+    StructField("data_2", ArrayType(StringType, containsNull = false), nullable = false)))
 
   /** Python `repr(list[str])` of an array column — the faithful `data_2` CSV
     * cell format (quirk Q3): `['a', 'b']`, `[]` when empty. */

@@ -7,8 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
-import graft.catalog.WeekBins
-import graft.functions.Base26
+import graft.catalog.{CatalogBuilder, WeekBins}
 
 /** Reference-operator queries over the driver's synthetic tables
   * (TESTDATA.md), each paired with DuckDB-runnable oracle SQL in its
@@ -71,16 +70,10 @@ object RefQueries extends graft.QueryModule {
     }, Some(
       s"WITH $HistCte SELECT bin, bin_start, cnt FROM hist ORDER BY bin")),
 
-    // O17 — letter labels over the bin dimension (counter skips empty bins).
-    // The non-empty-bin counter is a rank among non-empty bins in bin order:
-    // the bounded no-window rank over the ≤ NBins dimension (never an
-    // unpartitioned WindowExec), broadcast-joined back onto the bin table.
+    // O17 — letter labels over the bin dimension (counter skips empty bins),
+    // through the catalog's own Spark labeling
     Entry("q02_week_labels", (s, dir) => {
-      val hist = WeekBins.histogram(events(s, dir).select(col("d")), "d", Edge, NBins)
-      val ranked = graft.ops.Ranking.boundedRank(
-        hist.where(col("cnt") > 0).select("bin"), "r", col("bin"))
-      hist.join(broadcast(ranked), Seq("bin"), "left")
-        .withColumn("class", when(col("cnt") > 0, Base26.base26(col("r"))).otherwise(lit("0")))
+      CatalogBuilder.labeledBins(events(s, dir).select(col("d")), "d", Edge, NBins)
         .select("bin", "cnt", "class")
         .orderBy("bin")
     }, Some(
@@ -94,12 +87,8 @@ object RefQueries extends graft.QueryModule {
       val e = ev
         .select(col("event_id"), WeekBins.weekIndex(col("d"), Edge, NBins).as("bin"))
         .where(col("bin").isNotNull)
-      val hist = WeekBins.histogram(ev.select(col("d")), "d", Edge, NBins)
-      // rank among non-empty bins in bin order ≡ the skip-empty counter;
-      // bounded no-window rank over the ≤ NBins dimension
-      val labeled = graft.ops.Ranking.boundedRank(
-          hist.where(col("cnt") > 0).select("bin"), "r", col("bin"))
-        .select(col("bin"), Base26.base26(col("r")).as("class"))
+      val labeled = CatalogBuilder.labeledBins(ev.select(col("d")), "d", Edge, NBins)
+        .where(col("cnt") > 0).select("bin", "class")
       e.join(broadcast(labeled), Seq("bin")).select("event_id", "class").orderBy("event_id")
     }, Some(
       s"""WITH $HistCte,

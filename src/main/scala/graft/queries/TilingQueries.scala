@@ -322,10 +322,10 @@ object TilingQueries extends graft.QueryModule {
     // keep producing them. Every md5 aggregates a sort_array'd row list,
     // so it is independent of partitioning and arrival order.
     //
-    // Bench price: the two catalog builds and the pair table run at
-    // construction, each computed once into a local relation (CatalogBuilder
-    // .build, Pairing.pathsPair), so the six stage branches re-read rows
-    // instead of re-deriving ~8 tiny exchanges per catalog in every branch
+    // Bench price: the two catalog builds run at construction, one Spark job
+    // each, and the pair dict is built on the driver from their rows
+    // (CatalogBuilder.build, Pairing.pathsPair), so the six stage branches
+    // re-read local rows instead of re-deriving the catalogs in every branch
     // (Spark does no cross-branch CSE). The scalar metrics join the plan
     // lazily instead of via driver collects.
     //

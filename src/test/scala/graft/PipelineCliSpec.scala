@@ -5,6 +5,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
@@ -17,7 +18,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
-import graft.catalog.CatalogBuilder
+import graft.catalog.{CatalogBuilder, DateParse, WeekBins}
 import graft.pairing.Pairing
 import graft.raster.{Bands, TiffEncoder}
 import graft.tiling.TileJobs
@@ -125,7 +126,33 @@ class PipelineCliSpec extends SparkSpec {
       }
     }
     assert(printed.toString.contains(s"band_files_decoded=${names.size * 4} "), printed)
+    assert(printed.toString.contains(s"images_written=${names.size}${System.lineSeparator}"),
+      printed)
     assert(scans(plans, classOf[BinaryFileFormat]) == 1)
+    assert(scans(plans, classOf[ParquetFileFormat], s"$out/images") == 0,
+      "images are counted during their write, not read back")
+  }
+
+  /** `body`'s result and the Spark jobs started while it runs. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val Marker = "graft.job_count_marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.atomic.AtomicBoolean
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Marker) != null)) marker.set(true)
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      // listener events arrive in order: once the marker job's has, body's have too
+      sc.setLocalProperty(Marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Marker, null)
+      eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("catalog and pair table are computed once: one scan of each listing per run") {
@@ -143,10 +170,16 @@ class PipelineCliSpec extends SparkSpec {
     assert(scans(plans, classOf[ParquetFileFormat], s"$out/tiles") == 0,
       "tiles are counted during their write, not read back")
 
+    // one Spark job per catalog build; the pair dict over them runs none
     def names(p: String) = spark.read.textFile(p).toDF("data")
-    val (sCat, lCat) = CatalogBuilder.reference(names(corpus.s2Listing), names(corpus.hlsListing))
-    for (df <- Seq(sCat, lCat, Pairing.pathsPair(lCat, sCat),
-        Pairing.pathsPair(lCat, sCat, includePlaceholders = false)))
+    val (s2, hls) = (names(corpus.s2Listing), names(corpus.hlsListing))
+    val (edge, n) = WeekBins.Ref2023
+    val (sCat, sJobs) = withJobCount(CatalogBuilder.build(s2, DateParse.s2AcqDate, "S", edge, n))
+    val (lCat, lJobs) = withJobCount(CatalogBuilder.build(hls, DateParse.hlsAcqDate, "L", edge, n))
+    val (pairs, pairJobs) = withJobCount(Seq(Pairing.pathsPair(lCat, sCat),
+      Pairing.pathsPair(lCat, sCat, includePlaceholders = false)))
+    assert((sJobs, lJobs, pairJobs) == ((1, 1, 0)))
+    for (df <- sCat +: lCat +: pairs)
       assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
         df.queryExecution.optimizedPlan)
   }

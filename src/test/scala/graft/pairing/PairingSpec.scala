@@ -61,15 +61,16 @@ class PairingSpec extends SparkSpec {
   /** A hand-built L/S catalog pair in [[graft.catalog.CatalogBuilder.build]]'s
     * (bin, data) order, spread over three partitions: two `"0"` placeholder
     * rows in L, a path `dup` assigned twice with different classes, an L
-    * class `D` with no S match, and S names unsorted within a class. */
+    * class `D` with no S match, S names unsorted within a class, and a null
+    * class on each side (an empty CSV `class` cell), which matches nothing. */
   private def handCatalogs = {
     val l = Seq(
       (0, "A", "l1"), (0, "A", "l2"), (1, "0", "0"), (2, "B", "l3"), (2, "B", "dup"),
-      (3, "0", "0"), (4, "C", "dup"), (5, "D", "l4"))
+      (3, "0", "0"), (4, "C", "dup"), (5, "D", "l4"), (6, null, "l5"))
       .map { case (bin, c, d) => (bin, c, "L", d) }.toDF("bin", "class", "path", "data")
       .repartition(3).orderBy("bin", "data")
     val s = Seq(("A", "s9"), ("B", "s5"), ("A", "s1"), ("0", "0"), ("C", "s7"),
-      ("A", "s4"), ("C", "s2"), ("0", "0"), ("B", "s3"))
+      ("A", "s4"), ("C", "s2"), ("0", "0"), ("B", "s3"), (null, "s6"))
       .map { case (c, d) => (c, "S", d) }.toDF("class", "path", "data")
       .repartition(3)
     (l, s)
@@ -88,7 +89,8 @@ class PairingSpec extends SparkSpec {
       "L/0" -> Seq("S/0", "S/0"),
       "L/dup" -> Seq("S/s2", "S/s7"), // placed at its B row, holds its last (C) class
       "L/l3" -> Seq("S/s3", "S/s5"),
-      "L/l4" -> Seq.empty))
+      "L/l4" -> Seq.empty,
+      "L/l5" -> Seq.empty)) // a null class keeps its key, matching nothing
     assert(pairRows(includePlaceholders = false) == Seq(
       "L/l1" -> Seq("S/s1", "S/s4", "S/s9"),
       "L/l2" -> Seq("S/s1", "S/s4", "S/s9"),
