@@ -165,7 +165,7 @@ object Bench {
     // initialize the parquet datasource path (reader classloading, footer
     // codecs) on the 5-row region table so one-time init isn't charged to
     // whichever query happens to scan parquet first — data stays cold
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    try SparkEntry.table(spark, sfDir, "region").count()
     catch { case _: Exception => () }
     // ONE UNTIMED PASS over every query before timing: a fresh JVM's first
     // ~30-60 s of executions run up to 15× slow (interpreter → C2 ramp over

@@ -68,12 +68,12 @@ object PipelineCli {
     def cat(p: String) = spark.read.option("header", true).csv(p)
     val pairs = Pairing.pathsPair(cat(lCsv), cat(sCsv))
     Pairing.writeCompatCsv(pairs, s"$outDir/path_pair")
-    pairs.count()
+    pairs.collect().length // a local relation: collected with no Spark job
   }
 
   /** Raster ingest (the reference's serial rasterio loop, main_function_original.py:
     * 121–143): band TIFFs → D4 rows at `images`, keyed by the file name before
-    * the band token, bands in canonical order (quirk Q4).
+    * its first band token ([[Bands.imageId]]), bands in canonical order (quirk Q4).
     * @return images written */
   def ingest(spark: SparkSession, tiffDir: String, sensor: String, outDir: String): Long = {
     val bands = SensorBands(sensor)
@@ -84,9 +84,7 @@ object PipelineCli {
     val written = Observation("images")
     val perBand = TiffDecoder.readTiffDir(spark, tiffDir, bands, glob = "*")
       .toDF()
-      .select(
-        regexp_extract(element_at(split(col("path"), "/"), -1), "([^/]+?)[._]B\\d+.*$", 1)
-          .as("image_id"),
+      .select(Bands.imageId(col("path"), bands).as("image_id"),
         col("band"), col("h"), col("w"), col("pixels"))
       .observe(decoded, count(lit(1)).as("n"))
     Bands.stack(perBand, bands, sensor).observe(written, count(lit(1)).as("n"))
@@ -130,7 +128,8 @@ object PipelineCli {
         name("data_1").as("lr_image_id"),
         lit(maskId).as("mask_id"))
     val nTiles = tile(spark, pairTable, imagesPath, masksPath, outDir, cfg)
-    val nPairs = pairTable.count()
+    // pairTable has one row per S path of each key: counted from the local dict
+    val nPairs = pairs.collect().map(_.getSeq[String](1).size.toLong).sum
     println(s"pairs=$nPairs tiles=$nTiles")
     (nPairs, nTiles)
   }

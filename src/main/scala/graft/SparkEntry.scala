@@ -30,6 +30,22 @@ object SparkEntry {
 
   type Query = (SparkSession, String) => DataFrame
 
+  /** The sf table `name` of the data dir `dir`. */
+  def table(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
+
+  /** The `events` table. It stores `ts` as parquet TIMESTAMP(MICROS) without
+    * a timezone (Spark: TIMESTAMP_NTZ), and queries derive exact integer µs
+    * via unix_micros(cast(ts as timestamp)). That NTZ→TZ cast is the
+    * identity only under a UTC session; every engine entry point pins it,
+    * and this reader re-pins it (a runtime conf) so a FOREIGN session — the
+    * driver's smoke check builds its own — cannot shift every derived
+    * instant by its host zone offset. */
+  def events(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.session.timeZone", "UTC")
+    table(s, dir, "events")
+  }
+
   /** The modules [[registry]] concatenates. A query name is declared once
     * in the whole registry (VerifySpec guards it: the name-keyed views
     * silently keep the later duplicate). */

@@ -111,31 +111,23 @@ object CatalogBuilder {
     * count_L(class) × count_S(class) = Σ_c L_c² · S_c, `"0"` classes included.
     * Golden catalogs give 386. */
   def pairsMetricFaithful(l: DataFrame, s: DataFrame): Long =
-    scalar(pairsMetricFaithfulDF(l, s))
-
-  /** Lazy one-row form of [[pairsMetricFaithful]] (column `pairs`, null →
-    * 0 folded in) — composable into a larger plan with no driver action. */
-  def pairsMetricFaithfulDF(l: DataFrame, s: DataFrame): DataFrame = {
-    val lc = l.groupBy("class").agg(count(lit(1)).as("lcnt"))
-    val sc = s.groupBy("class").agg(count(lit(1)).as("scnt"))
-    lc.join(sc, Seq("class"))
-      .agg(coalesce(sum(col("lcnt") * col("lcnt") * col("scnt")), lit(0L)).as("pairs"))
-  }
+    sumOverClasses(l, s, includePlaceholders = true)((lc, sc) => lc * lc * sc)
 
   /** Honest class-join cardinality: Σ_c L_c · S_c; optionally excluding the
     * `"0"` placeholder class (quirk Q2). Golden: 202 with, 190 without. */
   def joinCardinality(l: DataFrame, s: DataFrame, includePlaceholders: Boolean): Long =
-    scalar(joinCardinalityDF(l, s, includePlaceholders))
+    sumOverClasses(l, s, includePlaceholders)(_ * _)
 
-  /** Lazy one-row form of [[joinCardinality]] (column `pairs`). */
-  def joinCardinalityDF(l: DataFrame, s: DataFrame, includePlaceholders: Boolean): DataFrame = {
-    val filt: DataFrame => DataFrame =
-      df => if (includePlaceholders) df else df.where(col("class") =!= "0")
-    val lc = filt(l).groupBy("class").agg(count(lit(1)).as("lcnt"))
-    val sc = filt(s).groupBy("class").agg(count(lit(1)).as("scnt"))
-    lc.join(sc, Seq("class"))
-      .agg(coalesce(sum(col("lcnt") * col("scnt")), lit(0L)).as("pairs"))
+  /** Σ over the classes of both catalogs of `f(L_c, S_c)`, from per-class
+    * row counts taken on the driver (collecting a local catalog runs no
+    * Spark job). A null class matches nothing, as in an equi-join. */
+  private def sumOverClasses(l: DataFrame, s: DataFrame, includePlaceholders: Boolean)(
+      f: (Long, Long) => Long): Long = {
+    def counts(df: DataFrame): Map[String, Long] =
+      df.select("class").collect().toSeq.map(_.getString(0))
+        .filter(c => c != null && (includePlaceholders || c != "0"))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val sc = counts(s)
+    counts(l).iterator.map { case (c, n) => sc.get(c).fold(0L)(f(n, _)) }.sum
   }
-
-  private def scalar(df: DataFrame): Long = df.collect()(0).getLong(0)
 }

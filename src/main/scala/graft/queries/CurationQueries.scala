@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.similarity.Clustering
 
 /** Corpus-curation queries: the clustering / semantic-dedup / language-model
@@ -14,9 +15,6 @@ import graft.similarity.Clustering
   * oracles that replay bit-for-bit.
   */
 object CurationQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** k-means model size (shared with the oracle chain below). */
   private[queries] val KmK = 8

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.dedup.Dedup
 
 /** Deduplication queries over the `documents`/`embeddings` tables. The
@@ -15,9 +16,6 @@ import graft.dedup.Dedup
   * near-duplicates.
   */
 object DedupQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** q169 split thresholds: floor(0.8·2^32) / floor(0.9·2^32) — ONE
     * definition interpolated into the Spark expression and the oracle. */

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 
 /** Interchange-format round-trip rows: the engine writes a table out in a
   * foreign format, reads it back, and aggregates — the oracle computes the
@@ -31,7 +31,7 @@ object FormatQueries extends graft.QueryModule {
     // partition value at bench scale.
     Entry("q174_orc_roundtrip", (s, dir) => {
       val out = graft.GraftSession.scratch(s"fmt_orc${OpsQueries.suffix(dir)}")
-      s.read.parquet(s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
           col("l_quantity"), col("l_extendedprice"), col("l_discount"))
         .write.mode("overwrite").partitionBy("l_returnflag").orc(out)
@@ -65,7 +65,7 @@ object FormatQueries extends graft.QueryModule {
     // single mangled character anywhere in the round-trip flips the row.
     Entry("q175_jsonl_roundtrip", (s, dir) => {
       val out = graft.GraftSession.scratch(s"fmt_jsonl${OpsQueries.suffix(dir)}")
-      s.read.parquet(s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .write.mode("overwrite").option("compression", "gzip").json(out)
       val docSchema = StructType(Seq(
         StructField("doc_id", LongType),

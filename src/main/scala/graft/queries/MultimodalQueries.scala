@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.multimodal.Multimodal
 
 /** Multimodal-pipeline CORRECTNESS query: deterministic GRFT containers are
@@ -34,7 +35,7 @@ object MultimodalQueries extends graft.QueryModule {
   /** The q70 fixture corpus: deterministic GRFT containers from doc_id. */
   private def assetsOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
+    t(s, dir, "documents")
       .select(col("doc_id")).as[Long]
       .map { id =>
         val nFrames = (id % 3 + 1).toInt // 1..3 → exercises video sampling
@@ -72,7 +73,7 @@ object MultimodalQueries extends graft.QueryModule {
     * decode path is exercised, not just the hash. */
   private def dhashAssets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
+    t(s, dir, "documents")
       .select(col("doc_id")).as[Long]
       .flatMap { id =>
         def px16(y: Int, x: Int): Int = dhashCellByte(id, y * 8 / 16, x * 9 / 16)
@@ -102,7 +103,7 @@ object MultimodalQueries extends graft.QueryModule {
     * amplitudes nearly tie). Real WAV containers through encodeWav. */
   private def audioAssets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
+    t(s, dir, "documents")
       .select(col("doc_id")).as[Long]
       .flatMap { id =>
         def wav(amp: Int => Int): Array[Byte] = {
@@ -368,9 +369,9 @@ object MultimodalQueries extends graft.QueryModule {
     // payloads — the audit projects presence bits only, so text, vectors
     // and pixels all stay at rest).
     Entry("q181_example_assembly", (s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"))
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
         .where(col("vec_id") % 7 =!= 0)
         .select(col("vec_id").as("doc_id"), lit(1).as("has_emb"))
       val assets = docs.where(col("doc_id") % 11 =!= 0)
@@ -414,7 +415,7 @@ object MultimodalQueries extends graft.QueryModule {
     // feature rows do.
     Entry("q173_audio_features", (s, dir) => {
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(col("doc_id")).as[Long]
         .flatMap { id =>
           val nSamples = 200 + (id % 3).toInt * 60
@@ -462,7 +463,7 @@ object MultimodalQueries extends graft.QueryModule {
     // Booleans aggregate to one guarantee row.
     Entry("q190_wav_ingest", (s, dir) => {
       import s.implicits._
-      s.read.parquet(s"$dir/documents.parquet")
+      t(s, dir, "documents")
         .select(col("doc_id")).as[Long]
         .map { id =>
           val nSamples = 200 + (id % 3).toInt * 60

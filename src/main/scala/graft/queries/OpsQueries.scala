@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{events, table => t}
 import graft.functions.Mix64
 import graft.ops.{Bucketing, Deletion, Layout, Quantiles, Sampling, Skew, SnapshotDiff, Temporal}
 
@@ -20,18 +21,6 @@ import graft.ops.{Bucketing, Deletion, Layout, Quantiles, Sampling, Skew, Snapsh
   * every subsequent read, which is what the 100 TB user buys.
   */
 object OpsQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events.ts is TIMESTAMP(MICROS) NTZ; queries that need event time
-    * derive exact integer µs via unix_micros(cast(ts as timestamp)) — the
-    * UTC re-pin makes the cast the identity even on a foreign session
-    * (see RefQueries.events). */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    t(s, dir, "events")
-  }
 
   /** q121's deletion-request rate: the deterministic share of users whose
     * Mix64 coordinate files a request (both engines derive the threshold

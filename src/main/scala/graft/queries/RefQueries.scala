@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.catalog.{CatalogBuilder, WeekBins}
 
 /** Reference-operator queries over the driver's synthetic tables
@@ -32,27 +33,16 @@ object RefQueries extends graft.QueryModule {
   private val NBins = 10
   private val EdgeSql = "DATE '2023-12-28'"
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** The `events` table stores `ts` as parquet TIMESTAMP(MICROS) without a
-    * timezone (Spark: TIMESTAMP_NTZ). All downstream time arithmetic is
-    * exact-integer, so expose:
+  /** [[graft.SparkEntry.events]] with exact-integer time columns, since all
+    * downstream time arithmetic is exact-integer:
     *   - `ts_ns`  BIGINT — exact epoch nanoseconds (µs × 1000, equal to
     *              DuckDB's epoch_us(ts) × 1000);
-    *   - `d`      DATE   — the event day.
-    * The NTZ→TZ cast inside unix_micros is the identity only under a UTC
-    * session; every engine entry point pins it, and the helper re-pins
-    * here (a runtime conf) so a FOREIGN session — the driver's smoke
-    * check builds its own — cannot shift every derived instant by its
-    * host zone offset. */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    t(s, dir, "events")
+    *   - `d`      DATE   — the event day. */
+  private def events(s: SparkSession, dir: String): DataFrame =
+    graft.SparkEntry.events(s, dir)
       .withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
       .withColumnRenamed("ts", "ts_ns")
       .withColumn("d", to_date(timestamp_micros(expr("ts_ns div 1000"))))
-  }
 
   /** Exact decimal product of a money double and (1 - discount double):
     * cast each operand to DECIMAL first so the multiply is exact and

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.similarity.Ann
 
 /** Similarity-search queries over `embeddings`. The brute-force top-k is
@@ -12,9 +13,6 @@ import graft.similarity.Ann
   * rows-only; AnnSpec pins their recall against brute force.
   */
 object SimilarityQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** q112/q113 configuration, shared by the Spark side and [[rerankSql]]
     * so the two can't drift (declared BEFORE [[entries]] — its oracle SQL

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 
 /** Sessionization and stream-shaped aggregations over `events`, in their
   * batch form (the driver's Verify is batch; StreamsSpec covers the
@@ -13,15 +14,12 @@ import graft.Entry
   */
 object StreamingQueries extends graft.QueryModule {
 
-  /** Exact µs event time (events.ts is TIMESTAMP(MICROS) NTZ; the UTC
-    * re-pin makes the NTZ→TZ cast the identity even on a foreign
-    * session — see RefQueries.events). */
-  private def eventsUs(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.read.parquet(s"$dir/events.parquet")
+  /** Exact µs event time (events.ts is TIMESTAMP(MICROS) NTZ; see
+    * [[graft.SparkEntry.events]]). */
+  private def eventsUs(s: SparkSession, dir: String): DataFrame =
+    graft.SparkEntry.events(s, dir)
       .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       .drop("ts")
-  }
 
   private val GapUs = 30L * 60 * 1000 * 1000 // 30-minute session gap
 
@@ -479,7 +477,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q171_stream_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .where(replayFilter("doc_id"))
         .select(col("doc_id"), md5(col("text")).as("h"),
           timestamp_micros(lit(1704067200000000L) + // 2024-01-01 UTC
@@ -537,7 +535,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q195_stream_span_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .where(replayFilter("doc_id"))
       val toks = graft.dedup.Dedup.spanTokens(docs, col("text"), col("doc_id"))
       val occ = graft.dedup.Dedup.spanGrams(toks, k = 8)
@@ -674,7 +672,7 @@ object StreamingQueries extends graft.QueryModule {
     // the two rows together are the streaming web pipeline).
     Entry("q208_stream_markup", (s, dir) => {
       import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
         .where(replayFilter("doc_id"))
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
       val rows = onceFeed("q208", dir) {
@@ -747,7 +745,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q212_stream_url_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val sampled = s.read.parquet(s"$dir/documents.parquet")
+      val sampled = t(s, dir, "documents")
         .where(replayFilter("doc_id"))
       val urls = WebQueries.urlFixture(sampled)
         .select(col("doc_id"), col("url"),
@@ -817,7 +815,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q213_stream_host_quota", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val sampled = s.read.parquet(s"$dir/documents.parquet")
+      val sampled = t(s, dir, "documents")
         .where(replayFilter("doc_id"))
       val feed = WebQueries.urlFixture(sampled)
         .select(col("doc_id"),
@@ -878,7 +876,7 @@ object StreamingQueries extends graft.QueryModule {
       import s.implicits._
       import graft.streaming.Streams
       import graft.similarity.Ann
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       // the served model builds ONCE per (code version, SF) — judge r16
       // Next #2: the per-rep rebuild was harness cost; the row times the
       // SERVE, which starts at the stored model like a production node
@@ -947,7 +945,7 @@ object StreamingQueries extends graft.QueryModule {
     // the row.
     Entry("q220_stream_blocklist", (s, dir) => {
       import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       // derived ONCE per (process, SF) — judge r16 Next #2; a drifted
       // stale model still reddens the row (the oracle re-derives from
       // source). SERVED-MODEL REFRESH CONTRACT (judge r16 Next #6,
@@ -1010,7 +1008,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q221_stream_par_dedup", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val sampled = s.read.parquet(s"$dir/documents.parquet")
+      val sampled = t(s, dir, "documents")
         .where(replayFilterTight("doc_id"))
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
       val rows = onceFeed("q221", dir) {
@@ -1106,7 +1104,7 @@ object StreamingQueries extends graft.QueryModule {
       import graft.streaming.Streams
       val (indexPath, s2) = DedupQueries.buildMaintainedSigIndexOnce(s, dir, "q222")
       val index = s.read.parquet(indexPath)
-      val feed = s.read.parquet(s"$dir/documents.parquet")
+      val feed = t(s, dir, "documents")
         .where(col("doc_id") >= s2 && replayFilterTight("doc_id"))
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"),
           timestamp_micros(lit(1704067200000000L) +
@@ -1170,7 +1168,7 @@ object StreamingQueries extends graft.QueryModule {
     Entry("q225_stream_directive_gate", (s, dir) => {
       import s.implicits._
       import graft.streaming.Streams
-      val sampled = s.read.parquet(s"$dir/documents.parquet")
+      val sampled = t(s, dir, "documents")
         .where(replayFilterTight("doc_id"))
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
       val feed = WebQueries.urlFixture(sampled)
@@ -1262,7 +1260,7 @@ object StreamingQueries extends graft.QueryModule {
     // the sink dedups; conservation pins distinct verdicts == docs fed.
     Entry("q228_stream_robots_gate", (s, dir) => {
       import s.implicits._
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = t(s, dir, "documents")
       // derived ONCE per (process, SF) — judge r16 Next #2. SERVED-MODEL
       // REFRESH CONTRACT (judge r16 Next #6, documentation chosen): the
       // gate loads the rule table once at stream start; robots.txt
@@ -1980,7 +1978,7 @@ object StreamingQueries extends graft.QueryModule {
     // online form of q146's offline assignment.
     Entry("q156_stream_cluster", (s, dir) => {
       import s.implicits._
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = t(s, dir, "embeddings")
       // the SERVED MODEL and the batch-truth expectation are harness
       // setup, built once per process (optimization r17 — the judge r16
       // Next #2 discipline q216/q220/q222/q228 already follow; q156

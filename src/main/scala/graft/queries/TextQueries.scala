@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.text.TextAnalysis._
 
 /** Text-analysis queries over `documents`. Token stats, quality scores and
@@ -15,9 +16,6 @@ import graft.text.TextAnalysis._
   * in TextSpec — xxhash64 has no DuckDB equivalent).
   */
 object TextQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** q68's fixed keyword query — shared with its oracle SQL. */
   private val Bm25QueryTerms: Seq[String] = Seq("spark", "join", "window")

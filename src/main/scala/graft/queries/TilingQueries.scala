@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.tiling.{PairRow, TileJobs, TileKernel}
 
 /** Tiling-operator queries. The sequential E3 kernels (greedy/shuffled
@@ -136,7 +137,7 @@ object TilingQueries extends graft.QueryModule {
     // a raster DIRECTORY on disk → `binaryFile` scan (pathGlobFilter
     // pushdown prunes sidecars at the LISTING) → TiffDecoder →
     // Bands.stack in canonical band order (O11 beta semantics, both
-    // sensors) → PairRow reassembly → the faithful greedy tiling chain
+    // sensors) → TileJobs.assemblePairs → the faithful greedy tiling chain
     // (border + quality filters inside). The directory is materialized
     // first by the DISTRIBUTED f32 TIFF sink (O3) from the same 64
     // synthetic pairs q60 tiles in memory: 64 pairs × (4 HR Landsat-token
@@ -187,26 +188,25 @@ object TilingQueries extends graft.QueryModule {
           "pair_poison.B02.tif" -> Array[Byte](0x49, 0x49, 0x2a, 0x00, 9, 9),
           "pair_0.B99.tif" -> TiffEncoder.encode(2, 2, Array(1f, 2f, 3f, 4f))))
         java.nio.file.Files.write(root.resolve(leaf), bytes)
-      val perBand = TiffDecoder
-        .readTiffDir(s, dir, hrBands ++ lrBands ++ Seq("MASK"), glob = "*.tif")
-        .toDF()
-        .select(regexp_extract(element_at(split(col("path"), "/"), -1),
-            "^(pair_\\d+)", 1).as("image_id"),
+      // ingest and assembly as the pipeline runs them (PipelineCli.ingest,
+      // PipelineCli.tile)
+      val allBands = hrBands ++ lrBands :+ "MASK"
+      val perBand = TiffDecoder.readTiffDir(s, dir, allBands, glob = "*.tif").toDF()
+        .select(Bands.imageId(col("path"), allBands).as("image_id"),
           col("band"), col("h"), col("w"), col("pixels"))
+      // a pair's HR and LR stacks share its id: one images table tags them by side
       def side(bands: Seq[String], sensor: String, tag: String) =
-        Bands.stack(perBand.where(col("band").isin(bands: _*)), bands, sensor)
-          .select(col("image_id").as("pair_id"), col("h").as(s"${tag}_h"),
-            col("w").as(s"${tag}_w"), col("pixels").as(s"${tag}_pixels"))
-      val pairs = side(hrBands, "L8", "hr")
-        .join(side(lrBands, "S2", "lr"), "pair_id")
-        .join(perBand.where(col("band") === "MASK")
-          .select(col("image_id").as("pair_id"), col("h").as("mask_h"),
-            col("w").as("mask_w"), col("pixels").as("mask_pixels")), "pair_id")
-        .select(col("pair_id"), lit(4).as("n_bands"),
-          col("hr_h"), col("hr_w"), col("hr_pixels"),
-          col("lr_h"), col("lr_w"), col("lr_pixels"),
-          col("mask_h"), col("mask_w"), col("mask_pixels"))
-        .as[PairRow]
+        Bands.stack(perBand, bands, sensor)
+          .withColumn("image_id", concat(lit(tag), col("image_id")))
+      val images = side(hrBands, "L8", "hr/").unionByName(side(lrBands, "S2", "lr/"))
+      val masks = perBand.where(col("band") === "MASK")
+        .select(col("image_id").as("mask_id"), col("h"), col("w"), col("pixels"))
+      // the pair table names the 64 pairs written above, each with its own mask
+      val pairId = concat(lit("pair_"), col("id"))
+      val pairTable = s.range(64).select(pairId.as("pair_id"),
+        concat(lit("hr/"), pairId).as("hr_image_id"),
+        concat(lit("lr/"), pairId).as("lr_image_id"), pairId.as("mask_id"))
+      val pairs = TileJobs.assemblePairs(s, pairTable, images, masks)
       tileSummary(TileJobs.tilePairs(pairs,
         TileJobs.Config(batch = 6, scale = 3)).toDF())
     }, Some(
@@ -223,7 +223,7 @@ object TilingQueries extends graft.QueryModule {
         col("id").as("mask_id"),
         (lit(100) + pmod(col("id"), lit(3)) * 10).cast("int").as("h"),
         (lit(90) + pmod(col("id"), lit(4)) * 5).cast("int").as("w"))
-      val cands = s.read.parquet(s"$dir/part.parquet").select(
+      val cands = t(s, dir, "part").select(
         pmod(col("p_partkey"), lit(8)).as("mask_id"),
         col("p_partkey"),
         pmod(col("p_partkey"), lit(131)).as("r"),
@@ -277,7 +277,7 @@ object TilingQueries extends graft.QueryModule {
       val lrArr = transform(sequence(lit(0), lit(15)), j =>
         when(pmod(col("p_partkey"), lit(11)) === 0 && j === 0, -9999.0)
           .otherwise((pmod(pmod(col("p_partkey") * 11 + j.cast("bigint") * 17, lit(997)), lit(50)) + 1).cast("double")))
-      val base = s.read.parquet(s"$dir/part.parquet")
+      val base = t(s, dir, "part")
         .select(col("p_partkey"), hrArr.as("hr"), lrArr.as("lr"))
       val counted = base.select(
         (col("p_partkey") +: TileJobs.qualityCounts(col("hr"), col("lr"))): _*)
@@ -323,11 +323,10 @@ object TilingQueries extends graft.QueryModule {
     // so it is independent of partitioning and arrival order.
     //
     // Bench price: the two catalog builds run at construction, one Spark job
-    // each, and the pair dict is built on the driver from their rows
-    // (CatalogBuilder.build, Pairing.pathsPair), so the six stage branches
-    // re-read local rows instead of re-deriving the catalogs in every branch
-    // (Spark does no cross-branch CSE). The scalar metrics join the plan
-    // lazily instead of via driver collects.
+    // each, and the pair dict and the two scalar metrics are computed on the
+    // driver from their rows (CatalogBuilder.build, Pairing.pathsPair), so
+    // the six stage branches re-read local rows instead of re-deriving the
+    // catalogs in every branch (Spark does no cross-branch CSE).
     //
     // The ONE registry row whose input lives outside the data dir by
     // design: its job is pinning the dataflow against the reference's
@@ -363,17 +362,15 @@ object TilingQueries extends graft.QueryModule {
       df.agg(count(lit(1)).as("n"),
         md5(concat_ws(";", sort_array(collect_list(rowStr)))).as("md5"))
         .select(lit(stage).as("stage"), col("n"), col("md5"))
-    // the scalar metrics join the plan as LAZY one-row aggregates
-    // instead of driver-side collects (see the bench-price note at its Entry)
-    def scalarRow(stage: String, v: DataFrame): DataFrame =
-      v.select(lit(stage).as("stage"), col("pairs").as("n"), lit("").as("md5"))
+    def scalarRow(stage: String, v: Long): DataFrame =
+      s.range(1).select(lit(stage).as("stage"), lit(v).as("n"), lit("").as("md5"))
     val catRow = concat_ws(",", col("class"), col("path"), col("data"))
     summary("1_s_catalog", sCat, catRow)
       .unionByName(summary("2_l_catalog", lCat, catRow))
       .unionByName(scalarRow("3_pairs_metric_faithful",
-        graft.catalog.CatalogBuilder.pairsMetricFaithfulDF(lCat, sCat)))
+        graft.catalog.CatalogBuilder.pairsMetricFaithful(lCat, sCat)))
       .unionByName(scalarRow("4_join_cardinality",
-        graft.catalog.CatalogBuilder.joinCardinalityDF(lCat, sCat, includePlaceholders = true)))
+        graft.catalog.CatalogBuilder.joinCardinality(lCat, sCat, includePlaceholders = true)))
       .unionByName(summary("5_pair_dict", pairs,
         concat_ws("|", col("data_1"), concat_ws(",", col("data_2")))))
       .unionByName(summary("6_tiles", tiles.toDF(), concat_ws(",",

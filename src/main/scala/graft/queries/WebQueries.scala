@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Entry
+import graft.SparkEntry.{table => t}
 import graft.text.Urls
 
 /** URL/host-level web curation over `documents` (judge r13 Next #1): the
@@ -24,9 +25,6 @@ import graft.text.Urls
   * compared end-to-end per doc.
   */
 object WebQueries extends graft.QueryModule {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Host-quota cap for q206 (standalone) and the q210 composition —
     * interpolated into both engine and oracle so a one-sided edit reddens

@@ -21,19 +21,26 @@ object Bands {
   /** Sentinel-2 band set, stack order. */
   val SentinelBands: Seq[String] = Seq("B2", "B3", "B4", "B8")
 
+  /** The band tokens as one regex group: a band id matches only as a full
+    * `_`/`.`-delimited token. */
+  private def token(bands: Seq[String]): String =
+    bands.map(java.util.regex.Pattern.quote).mkString("[._](", "|", ")[._]")
+
   /** Anchored band-token predicate: keeps file names containing the band id
     * as a full token, never `.xml` sidecars. */
-  def bandFileFilter(name: Column, bands: Seq[String]): Column = {
-    val token = bands.map(java.util.regex.Pattern.quote).mkString("(", "|", ")")
-    name.rlike(s"[._]$token[._]") && !name.contains("xml")
-  }
+  def bandFileFilter(name: Column, bands: Seq[String]): Column =
+    name.rlike(token(bands)) && !name.contains("xml")
 
   /** Which band id a file name carries (NULL if none). */
   def bandOf(name: Column, bands: Seq[String]): Column = {
-    val token = bands.map(java.util.regex.Pattern.quote).mkString("(", "|", ")")
-    val ex = regexp_extract(name, s"[._]$token[._]", 1)
+    val ex = regexp_extract(name, token(bands), 1)
     when(ex =!= "", ex)
   }
+
+  /** Image id of a band file at `path`: its file name before the first
+    * band token, so the band files of one image share it. */
+  def imageId(path: Column, bands: Seq[String]): Column =
+    regexp_extract(element_at(split(path, "/"), -1), s"^(.*?)${token(bands)}", 1)
 
   /** Deterministic stack: per-band rows (image_id, band, h, w, pixels) →
     * one D4 row per image with bands concatenated in `bands` order

@@ -134,7 +134,9 @@ object TileJobs {
     * (pair_id, hr_image_id, lr_image_id, mask_id), an images table of D4
     * rows and a masks table of D5 rows. Three equi-joins, on the HR image
     * id, the LR image id and the mask id. The images table is read once per
-    * image side, and at pipeline sizes AQE broadcasts each side whole. */
+    * image side, and at pipeline sizes AQE broadcasts each side whole.
+    * The one E3 assembly: PipelineCli.tile, q183_ingest_pipeline and
+    * perfbench's pipeline pass call it. */
   def assemblePairs(
       spark: SparkSession,
       pairTable: DataFrame,

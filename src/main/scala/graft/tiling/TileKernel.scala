@@ -315,7 +315,7 @@ object TileKernel {
   /** Scalable overlap mode (documented divergence from O26): snap candidates
     * to a `stride × stride` grid and keep the first (row-major) candidate
     * per cell. Order-independent → runs as a pure window function at any
-    * scale; see TileJobs.gridSnapCandidates. */
+    * scale; see TileJobs.gridSnapDF. */
   def gridSnap(cand: Candidates, stride: Int): Candidates = {
     val seen = scala.collection.mutable.HashSet.empty[(Int, Int)]
     val keep = cand.rs.indices.filter { i =>

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{GraftSession, SparkEntry}
 
 /** Scale-factor multiplier for the driver's testdata: writes `factor`
   * replica-shifted copies of each table so scale claims argued at sf0.1 can
@@ -44,10 +44,10 @@ object ScaleUp {
         "(Caesar mod 26, dimension rotation) repeat past 26")
     val spark = GraftSession.build("graft-scaleup")
 
-    def t(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")
+    def t(name: String): DataFrame = SparkEntry.table(spark, in, name)
     def write(name: String)(df: DataFrame): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[scaleup] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${SparkEntry.table(spark, out, name).count()} rows")
     }
     /** `factor` replica transforms unioned — each replica is one narrow
       * map over the source scan, so the whole generator is scan-bound. */

@@ -5,14 +5,15 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
@@ -133,15 +134,25 @@ class PipelineCliSpec extends SparkSpec {
       "images are counted during their write, not read back")
   }
 
-  /** `body`'s result and the Spark jobs started while it runs. */
-  private def withJobCount[T](body: => T): (T, Int) = {
+  /** `body`'s result and the Spark jobs started while it runs, in start
+    * order, each as the physical plan of the SQL execution that ran it ("" for
+    * a job outside one). */
+  private def withJobs[T](body: => T): (T, Seq[String]) = {
     val Marker = "graft.job_count_marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]
     val marker = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Marker) != null)) marker.set(true)
-        else jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty(Marker) != null)) marker.set(true)
+        else jobs.add(props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId.toString, x.physicalPlanDescription)
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -151,8 +162,14 @@ class PipelineCliSpec extends SparkSpec {
       sc.setLocalProperty(Marker, "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Marker, null)
       eventually(timeout(Span(30, Seconds)))(assert(marker.get()))
-      (result, jobs.get)
+      (result, jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse("")))
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of Spark jobs started while it runs. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val (result, jobs) = withJobs(body)
+    (result, jobs.size)
   }
 
   test("catalog and pair table are computed once: one scan of each listing per run") {
@@ -182,6 +199,45 @@ class PipelineCliSpec extends SparkSpec {
     for (df <- sCat +: lCat +: pairs)
       assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
         df.queryExecution.optimizedPlan)
+  }
+
+  test("catalog: two builds and two CSV writes; the E1 metrics run no job") {
+    val out = root.resolve("catalog-jobs").toString
+    val quiet = new java.io.ByteArrayOutputStream
+    val ((sCat, lCat), catalogJobs) = withJobCount(Console.withOut(quiet) {
+      PipelineCli.catalog(spark, corpus.s2Listing, corpus.hlsListing, out)
+    })
+    assert(catalogJobs == 4)
+    val (_, metricJobs) = withJobCount(Seq(
+      CatalogBuilder.pairsMetricFaithful(lCat, sCat),
+      CatalogBuilder.joinCardinality(lCat, sCat, includePlaceholders = true),
+      CatalogBuilder.joinCardinality(lCat, sCat, includePlaceholders = false)))
+    assert(metricJobs == 0)
+  }
+
+  test("run: no Spark job after the tile write") {
+    assert(ingested.values.sum == S2Names.size + HlsNames.size)
+    val out = root.resolve("run-jobs").toString
+    val (_, jobs) = withJobs(Console.withOut(new java.io.ByteArrayOutputStream) {
+      PipelineCli.run(spark, corpus.s2Listing, corpus.hlsListing,
+        corpus.imagesGlob, corpus.masks, MaskId, out, cfg)
+    })
+    val tileWrite = jobs.map(_.contains(s"$out/tiles"))
+    assert(tileWrite.contains(true) && tileWrite.dropWhile(!_).forall(identity),
+      s"jobs after the tile write: ${tileWrite.dropWhile(!_).count(!_)}")
+  }
+
+  test("ingest: the image id is the file name before its first band token") {
+    val q183Bands = Bands.LandsatBands ++ Bands.SentinelBands :+ "MASK"
+    val cases = Seq(
+      (s"/c/S2/${S2Names.head}_B2.tif", Bands.SentinelBands, S2Names.head),
+      (s"file:/c/HLS/${HlsNames.head}.B02.tif", Bands.LandsatBands, HlsNames.head),
+      ("/c/q183/pair_7.MASK.tif", q183Bands, "pair_7"),
+      // a token of no listed band does not end the id
+      ("/c/x_B02_y/scene.B99.B02.tif", Bands.LandsatBands, "scene.B99"))
+    for ((path, bands, id) <- cases)
+      assert(Seq(path).toDF("path").select(Bands.imageId(col("path"), bands))
+        .as[String].head() == id, path)
   }
 
   test("tile: an empty pair table writes and counts no tiles") {

@@ -6,6 +6,7 @@ import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.catalog.CatalogBuilder
 
 /** Golden pair-join parity: running O14 over the reference's committed
   * catalogs must reproduce the exact dict the reference's nested loop builds
@@ -97,6 +98,15 @@ class PairingSpec extends SparkSpec {
       "L/dup" -> Seq("S/s2", "S/s7"),
       "L/l3" -> Seq("S/s3", "S/s5"),
       "L/l4" -> Seq.empty))
+  }
+
+  test("E1 metrics of a hand-built catalog pair: placeholders, one-sided and null classes") {
+    val (l, s0) = handCatalogs
+    val s = s0.unionByName(Seq(("E", "S", "s8")).toDF("class", "path", "data")) // S only
+    // L: A 2, 0 2, B 2, C 1, D 1, null 1; S: A 3, 0 2, B 2, C 2, E 1, null 1
+    assert(CatalogBuilder.pairsMetricFaithful(l, s) == 4 * 3 + 4 * 2 + 4 * 2 + 1 * 2)
+    assert(CatalogBuilder.joinCardinality(l, s, includePlaceholders = true) == 6 + 4 + 4 + 2)
+    assert(CatalogBuilder.joinCardinality(l, s, includePlaceholders = false) == 6 + 4 + 2)
   }
 
   test("list-repr codec round-trips through CSV (quirk Q3)") {
