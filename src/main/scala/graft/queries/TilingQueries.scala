@@ -189,11 +189,14 @@ object TilingQueries extends graft.QueryModule {
           "pair_0.B99.tif" -> TiffEncoder.encode(2, 2, Array(1f, 2f, 3f, 4f))))
         java.nio.file.Files.write(root.resolve(leaf), bytes)
       // ingest and assembly as the pipeline runs them (PipelineCli.ingest,
-      // PipelineCli.tile)
+      // PipelineCli.tile). The decoded bands feed the HR stack, the LR stack
+      // and the masks: persisted (a bounded, multiply-referenced frame), so
+      // the directory is scanned and decoded once
       val allBands = hrBands ++ lrBands :+ "MASK"
       val perBand = TiffDecoder.readTiffDir(s, dir, allBands, glob = "*.tif").toDF()
         .select(Bands.imageId(col("path"), allBands).as("image_id"),
           col("band"), col("h"), col("w"), col("pixels"))
+        .persist()
       // a pair's HR and LR stacks share its id: one images table tags them by side
       def side(bands: Seq[String], sensor: String, tag: String) =
         Bands.stack(perBand, bands, sensor)

@@ -22,8 +22,8 @@ object Bands {
   val SentinelBands: Seq[String] = Seq("B2", "B3", "B4", "B8")
 
   /** The band tokens as one regex group: a band id matches only as a full
-    * `_`/`.`-delimited token. */
-  private def token(bands: Seq[String]): String =
+    * `_`/`.`-delimited token, and a name's band is its leftmost match. */
+  private[raster] def token(bands: Seq[String]): String =
     bands.map(java.util.regex.Pattern.quote).mkString("[._](", "|", ")[._]")
 
   /** Anchored band-token predicate: keeps file names containing the band id

@@ -593,22 +593,23 @@ object TiffDecoder {
 
   /** Directory of band TIFFs → D3 rows, decoded executor-side via the
     * binaryFile source (pathGlobFilter pushdown prunes the listing).
-    * Undecodable files are dropped. */
+    * A file's band is the leftmost band token in its name, by the one
+    * token rule of [[Bands.bandOf]] and [[Bands.imageId]]. Files with no
+    * band token are not decoded; undecodable files are dropped. */
   def readTiffDir(spark: SparkSession, dir: String, bands: Seq[String],
                   glob: String = "*.tif"): Dataset[BandFile] = {
     import spark.implicits._
-    val bandList = bands
+    val token = Bands.token(bands)
     spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
+        val band = java.util.regex.Pattern.compile(token)
         it.flatMap { case (path, content) =>
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          val band = bandList.find(b => name.matches(s".*[._]${java.util.regex.Pattern.quote(b)}[._].*"))
-          (band, TiffDecoder.decodeWithMeta(content)) match {
-            case (Some(b), Right((t, m))) =>
-              Some(BandFile(path, b, t.h, t.w, t.pixels, m))
-            case _ => None
+          val m = band.matcher(path.substring(path.lastIndexOf('/') + 1))
+          if (!m.find()) None
+          else TiffDecoder.decodeWithMeta(content).toOption.map { case (t, meta) =>
+            BandFile(path, m.group(1), t.h, t.w, t.pixels, meta)
           }
         }
       }

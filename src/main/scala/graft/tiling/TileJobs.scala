@@ -133,8 +133,12 @@ object TileJobs {
   /** Assemble PairRows from relational inputs: a pair table
     * (pair_id, hr_image_id, lr_image_id, mask_id), an images table of D4
     * rows and a masks table of D5 rows. Three equi-joins, on the HR image
-    * id, the LR image id and the mask id. The images table is read once per
-    * image side, and at pipeline sizes AQE broadcasts each side whole.
+    * id, the LR image id and the mask id. The HR side streams the images
+    * table against the broadcast pair table. The LR side is first
+    * left-semi-joined to the pair table's `lr_image_id`s, so at pipeline
+    * sizes the LR broadcast carries only the LR images some pair names, not
+    * every image with its HR pixels. The rows are those of the three
+    * equi-joins alone: the semi-join drops only LR rows no pair joins.
     * The one E3 assembly: PipelineCli.tile, q183_ingest_pipeline and
     * perfbench's pipeline pass call it. */
   def assemblePairs(
@@ -146,9 +150,10 @@ object TileJobs {
     val hr = images.select(
       col("image_id").as("hr_image_id"), col("c").as("n_bands"),
       col("h").as("hr_h"), col("w").as("hr_w"), col("pixels").as("hr_pixels"))
-    val lr = images.select(
-      col("image_id").as("lr_image_id"),
-      col("h").as("lr_h"), col("w").as("lr_w"), col("pixels").as("lr_pixels"))
+    val lr = images
+      .join(pairTable.select(col("lr_image_id").as("image_id")), Seq("image_id"), "left_semi")
+      .select(col("image_id").as("lr_image_id"),
+        col("h").as("lr_h"), col("w").as("lr_w"), col("pixels").as("lr_pixels"))
     val mk = masks.select(
       col("mask_id"), col("h").as("mask_h"), col("w").as("mask_w"),
       col("pixels").as("mask_pixels"))

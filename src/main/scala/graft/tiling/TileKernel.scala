@@ -95,6 +95,9 @@ object TileKernel {
     * `faithfulInfDenom` reproduces the reference's mixed-dimension
     * denominator for the inf percentage (`lr_h * hr_w * n` instead of
     * `hr_h * hr_w * n`).
+    *
+    * This is the reference form over materialized crops; [[alignedTile]]
+    * decides the same counts in place, over the source windows.
     */
   def qualityOk(hr: Array[Float], lr: Array[Float], nBands: Int,
                 hrH: Int, hrW: Int, lrH: Int, lrW: Int,
@@ -118,26 +121,95 @@ object TileKernel {
     val hrDen = hrH.toDouble * hrW * nBands
     val lrDen = lrH.toDouble * lrW * nBands
     val infDen = if (faithfulInfDenom) lrH.toDouble * hrW * nBands else hrDen
-    (nzHr * 100.0 / hrDen >= 99) &&
-      (nzLr * 100.0 / lrDen >= 99) &&
-      (nineLr * 100.0 / lrDen <= 1) &&
-      (infHr * 100.0 / infDen <= 1)
+    nonZeroOk(nzHr, hrDen) && nonZeroOk(nzLr, lrDen) &&
+      rareOk(nineLr, lrDen) && rareOk(infHr, infDen)
+  }
+
+  /** O13's non-zero threshold: at least 99% of `den`. */
+  private def nonZeroOk(n: Int, den: Double): Boolean = n * 100.0 / den >= 99
+  /** O13's nodata and inf threshold: at most 1% of `den`. */
+  private def rareOk(n: Int, den: Double): Boolean = n * 100.0 / den <= 1
+
+  /** The least n in [0, hi] for which `p`, false then true as n grows, holds
+    * (hi + 1 if none). */
+  private def least(hi: Int)(p: Int => Boolean): Int = {
+    var lo = 0; var up = hi + 1
+    while (lo < up) {
+      val m = (lo + up) >>> 1
+      if (p(m)) up = m else lo = m + 1
+    }
+    lo
+  }
+
+  /** Whether the window `[r1, r2) × [c1, c2)` of every band of `pixels`
+    * passes O13 without copying it: at least [[nonZeroOk]] of `nzDen`
+    * non-zero cells, and at most [[rareOk]] of `markDen` cells equal to
+    * `markA` or `markB`. Cells outside the image count as zeros, as
+    * [[crop]]'s zero fill does. Both counts only grow, so the scan stops at
+    * the first cell that makes either threshold unreachable. */
+  private def windowOk(pixels: Array[Float], nBands: Int, h: Int, w: Int,
+                       r1: Int, r2: Int, c1: Int, c2: Int,
+                       nzDen: Double, markDen: Double, markA: Float, markB: Float): Boolean = {
+    val cells = nBands * (r2 - r1) * (c2 - c1)
+    val maxZeros = cells - least(cells)(nonZeroOk(_, nzDen))
+    val maxMarks = least(cells)(n => !rareOk(n, markDen)) - 1
+    val rs = math.max(r1, 0); val re = math.min(r2, h)
+    val cs = math.max(c1, 0); val ce = math.min(c2, w)
+    val inside = if (re > rs && ce > cs) nBands * (re - rs) * (ce - cs) else 0
+    var zeros = cells - inside
+    var marks = 0
+    if (zeros > maxZeros || maxMarks < 0) return false
+    var b = 0
+    while (b < nBands) {
+      var r = rs
+      while (r < re) {
+        var i = b * h * w + r * w + cs
+        val end = i + (ce - cs)
+        while (i < end) {
+          val v = pixels(i)
+          if (v == 0.0f) {
+            zeros += 1
+            if (zeros > maxZeros) return false
+          } else if (v == markA || v == markB) {
+            marks += 1
+            if (marks > maxMarks) return false
+          }
+          i += 1
+        }
+        r += 1
+      }
+      b += 1
+    }
+    true
   }
 
   /** The aligned HR/LR tile centered at HR pixel (r0, c0) — `batch`-edge
     * HR crop, LR bounds the floor-div of the HR bounds by `scale` — kept
-    * only when it passes [[qualityOk]] (faithful inf denominator). */
+    * only when it passes O13 with the faithful inf denominator. The check
+    * counts in place over the two source windows (LR first, the smaller),
+    * and only an accepted tile is cropped; `crop` + [[qualityOk]]
+    * (`faithfulInfDenom = true`) on the same windows is the reference form
+    * it equals. */
   private[tiling] def alignedTile(tileId: Int, r0: Int, c0: Int,
       hrPix: Array[Float], hrH: Int, hrW: Int,
       lrPix: Array[Float], lrH: Int, lrW: Int,
       nBands: Int, batch: Int, scale: Int): Option[Tile] = {
     val half = batch / 2
-    val hr = crop(hrPix, nBands, hrH, hrW, r0 - half, r0 + half, c0 - half, c0 + half)
-    val lr = crop(lrPix, nBands, lrH, lrW,
-      Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
-      Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
-    if (qualityOk(hr, lr, nBands, batch, batch, batch / scale, batch / scale,
-        faithfulInfDenom = true)) Some(Tile(tileId, r0, c0, hr, lr))
+    val r1 = r0 - half; val r2 = r0 + half; val c1 = c0 - half; val c2 = c0 + half
+    val lr1 = Math.floorDiv(r1, scale); val lr2 = Math.floorDiv(r2, scale)
+    val lc1 = Math.floorDiv(c1, scale); val lc2 = Math.floorDiv(c2, scale)
+    // qualityOk's denominators at hr = batch², lr = (batch / scale)²
+    val lrEdge = batch / scale
+    val hrDen = batch.toDouble * batch * nBands
+    val lrDen = lrEdge.toDouble * lrEdge * nBands
+    val infDen = lrEdge.toDouble * batch * nBands
+    val ok =
+      windowOk(lrPix, nBands, lrH, lrW, lr1, lr2, lc1, lc2, lrDen, lrDen, -9999.0f, -9999.0f) &&
+      windowOk(hrPix, nBands, hrH, hrW, r1, r2, c1, c2, hrDen, infDen,
+        Float.PositiveInfinity, Float.NegativeInfinity)
+    if (ok) Some(Tile(tileId, r0, c0,
+      crop(hrPix, nBands, hrH, hrW, r1, r2, c1, c2),
+      crop(lrPix, nBands, lrH, lrW, lr1, lr2, lc1, lc2)))
     else None
   }
 

@@ -1,9 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, Pmod, XxHash64}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 
 import graft.SparkSpec
 
@@ -593,17 +594,23 @@ class PlanSpec extends SparkSpec {
         fileScans.map(_.verboseStringWithSuffix(80)).mkString("; ").take(500))
   }
 
+  /** The `binaryFile` scans a run of `p` reads, persisted frames included. */
+  private def binaryFileScans(p: SparkPlan): Seq[FileSourceScanExec] = planNodes(p).collect {
+    case f: FileSourceScanExec if f.relation.fileFormat.isInstanceOf[BinaryFileFormat] => f
+  }
+
+  test("q183 decodes its TIFF directory once: one binaryFile scan, cached plans included") {
+    // the HR stack, the LR stack and the masks all read the decoded bands
+    val sp = graft.SparkEntry.queries("q183_ingest_pipeline")(spark, dir)
+      .queryExecution.sparkPlan
+    val scans = binaryFileScans(sp)
+    assert(scans.size == 1, s"${scans.size} binaryFile scans:\n${sp.toString.take(1500)}")
+  }
+
   test("q183 binaryFile listing prunes non-.tif sidecars via pathGlobFilter") {
     val df = graft.SparkEntry.queries("q183_ingest_pipeline")(spark, dir)
-    val files = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-              if r.fileFormat.toString.toLowerCase.contains("binary") =>
-            r.location.inputFiles.toSeq
-          case _ => Seq.empty[String]
-        }
-    }.flatten.distinct // the scan is referenced by the hr/lr/mask branches
+    val files = binaryFileScans(df.queryExecution.sparkPlan)
+      .flatMap(_.relation.location.inputFiles).distinct
     assert(files.nonEmpty, "expected a binaryFile scan in q183's plan")
     // pathGlobFilter prunes at the LISTING: the planted .xml/.txt
     // sidecars never appear in the file index (the poison and the
@@ -744,13 +751,20 @@ class PlanSpec extends SparkSpec {
   }
 
   /** Every node of `p`, including the plans behind its leaves: a persisted
-    * frame's cached plan, an adaptive plan's input and a query stage's plan.
-    * A window inside a `.persist()`ed frame is still a window of the query. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
-    case s: InMemoryTableScanExec => s +: planNodes(s.relation.cachedPlan)
-    case a: AdaptiveSparkPlanExec => a +: planNodes(a.inputPlan)
-    case q: QueryStageExec => q +: planNodes(q.plan)
-    case n => Seq(n)
+    * frame's cached plan (once, however often the tree reads the frame), an
+    * adaptive plan's input and a query stage's plan. A window inside a
+    * `.persist()`ed frame is still a window of the query. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case s: InMemoryTableScanExec if seen.add(s.relation.cacheBuilder) =>
+        s +: nodes(s.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => a +: nodes(a.inputPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case n => Seq(n)
+    }
+    nodes(p)
   }
 
   /** Ranking.boundedAll's constant key: pmod(xxhash64(...), 1). */

@@ -441,4 +441,20 @@ class TiffDecoderSpec extends SparkSpec {
     assert(rows("B02").pixels.toSeq == grad.toSeq)
     assert(rows.values.forall(b => b.h == 6 && b.w == 5))
   }
+
+  test("readTiffDir: a name's band is its leftmost band token, as Bands.bandOf says") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = tempDir("two-tokens")
+    // list order would say B2 for the first name; the name says B3 first
+    val names = Seq("x_B3_B2.tif", "y.B8.B2.tif", "z_B4.tif", "w_B20.tif")
+    for (n <- names) Files.write(dir.resolve(n), TiffEncoder.encode(1, 1, Array(1f)))
+    val read = TiffDecoder.readTiffDir(spark, dir.toString, Bands.SentinelBands)
+      .collect().map(b => b.path.substring(b.path.lastIndexOf('/') + 1) -> b.band).toMap
+    assert(read == Map("x_B3_B2.tif" -> "B3", "y.B8.B2.tif" -> "B8", "z_B4.tif" -> "B4"))
+    val bandOf = names.toDF("name")
+      .select(col("name"), Bands.bandOf(col("name"), Bands.SentinelBands))
+      .as[(String, String)].collect().filter(_._2 != null).toMap
+    assert(read == bandOf)
+  }
 }

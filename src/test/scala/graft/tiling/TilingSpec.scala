@@ -4,6 +4,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.security.MessageDigest
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -240,5 +245,172 @@ class TilingSpec extends SparkSpec {
     val ok = Candidates(Array(8), Array(8))
     TileKernel.cropPairHv(hr, 16, 16, lr, 8, 8, 1, ok,
       batch = 8, scale = 2, overlap = true, pOverlap = 0.7)
+  }
+  // -- the in-place quality check against its reference form ------------
+
+  /** Asserts that alignedTile at (r0, c0) decides, and crops, as the
+    * reference form does: crop both windows, then qualityOk with the
+    * faithful inf denominator. @return the reference's decision */
+  private def sameAsReference(hr: Array[Float], hrH: Int, hrW: Int,
+      lr: Array[Float], lrH: Int, lrW: Int,
+      nBands: Int, batch: Int, scale: Int, r0: Int, c0: Int): Boolean = {
+    val half = batch / 2
+    val refHr = TileKernel.crop(hr, nBands, hrH, hrW, r0 - half, r0 + half, c0 - half, c0 + half)
+    val refLr = TileKernel.crop(lr, nBands, lrH, lrW,
+      Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
+      Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
+    val want = TileKernel.qualityOk(refHr, refLr, nBands, batch, batch,
+      batch / scale, batch / scale, faithfulInfDenom = true)
+    val got = TileKernel.alignedTile(5, r0, c0, hr, hrH, hrW, lr, lrH, lrW, nBands, batch, scale)
+    val at = s"batch $batch, scale $scale, $nBands bands, ${hrH}x$hrW at ($r0, $c0)"
+    assert(got.isDefined == want, at)
+    def sameBits(a: Array[Float], b: Array[Float]) = a.length == b.length &&
+      a.indices.forall(i => java.lang.Float.floatToRawIntBits(a(i)) ==
+        java.lang.Float.floatToRawIntBits(b(i)))
+    for (t <- got) {
+      assert((t.tileId, t.r, t.c) == ((5, r0, c0)), at)
+      assert(sameBits(t.hr, refHr) && sameBits(t.lr, refLr), at)
+    }
+    want
+  }
+
+  /** `n` non-zero values of either sign, none of them -9999 or infinite. */
+  private def nonZero(rng: scala.util.Random, n: Int): Array[Float] =
+    Array.fill(n)((1 + rng.nextInt(1000)).toFloat * (if (rng.nextBoolean()) 1 else -1))
+
+  test("alignedTile equals crop + qualityOk exactly at, and one past, each quality bound") {
+    val rng = new scala.util.Random(20261019L)
+    // (batch, scale, bands). 201 is odd: its crop is 200², which meets 99%
+    // of 201² when clean, so it has bounds to cross.
+    for ((batch, scale, nBands) <- Seq((30, 3, 2), (20, 2, 3), (201, 3, 1), (201, 2, 1))) {
+      val half = batch / 2
+      val hrSide = batch + 4 * scale
+      val lrSide = hrSide / scale
+      // an interior center whose LR window has the full batch / scale edge
+      def fullLr(x: Int) =
+        Math.floorDiv(x + half, scale) - Math.floorDiv(x - half, scale) == batch / scale
+      val r0 = Iterator.from(hrSide / 2).find(fullLr).get
+      val c0 = Iterator.from(hrSide / 2 + 1).find(fullLr).get
+      val hr0 = nonZero(rng, nBands * hrSide * hrSide)
+      val lr0 = nonZero(rng, nBands * lrSide * lrSide)
+      def cells(side: Int, r1: Int, r2: Int, c1: Int, c2: Int) =
+        rng.shuffle(for (b <- 0 until nBands; r <- r1 until r2; c <- c1 until c2)
+          yield b * side * side + r * side + c)
+      val hrCells = cells(hrSide, r0 - half, r0 + half, c0 - half, c0 + half)
+      val lrCells = cells(lrSide, Math.floorDiv(r0 - half, scale), Math.floorDiv(r0 + half, scale),
+        Math.floorDiv(c0 - half, scale), Math.floorDiv(c0 + half, scale))
+      // (side, defect, whether it counts against a bound on that side)
+      val defects = Seq(("hr", 0f, true), ("hr", Float.PositiveInfinity, true),
+        ("hr", Float.NegativeInfinity, true), ("hr", Float.NaN, false), ("hr", -9999f, false),
+        ("lr", 0f, true), ("lr", -9999f, true), ("lr", Float.NaN, false),
+        ("lr", Float.PositiveInfinity, false))
+      for ((side, v, bounded) <- defects) {
+        val (hr, lr) = (hr0.clone(), lr0.clone())
+        val (window, px) = if (side == "hr") (hrCells, hr) else (lrCells, lr)
+        // every bound is under 2% of the window
+        val ks = window.size / 50 + 3
+        // k defects in the window, k = 0, 1, … up to the first reject
+        val accepted = (0 until ks).iterator.map { k =>
+          if (k > 0) px(window(k - 1)) = v
+          sameAsReference(hr, hrSide, hrSide, lr, lrSide, lrSide, nBands, batch, scale, r0, c0)
+        }.takeWhile(identity).size
+        val at = s"$v in $side, batch $batch, scale $scale: $accepted accepted"
+        // bounded: accepted at its bound (accepted - 1 defects), rejected one past it
+        if (bounded) assert(accepted >= 1 && accepted < ks, at)
+        else assert(accepted == ks, at)
+      }
+    }
+  }
+
+  test("alignedTile equals crop + qualityOk on windows clipped at each edge") {
+    // a clean 240² HR / 120² LR pair: a window that sticks out by o rows or
+    // columns has o·200 zero-filled HR cells (0.5% per line) and ~o/2
+    // zero-filled LR lines of 100 (1% each)
+    val rng = new scala.util.Random(7L)
+    val (batch, scale, hrSide, lrSide) = (200, 2, 240, 120)
+    val (hr, lr) = (nonZero(rng, hrSide * hrSide), nonZero(rng, lrSide * lrSide))
+    val (lo, hi, mid) = (batch / 2, hrSide - batch / 2, hrSide / 2)
+    val edges = Seq[(String, Int => (Int, Int))](
+      "top" -> (o => (lo - o, mid)), "bottom" -> (o => (hi + o, mid)),
+      "left" -> (o => (mid, lo - o)), "right" -> (o => (mid, hi + o)),
+      "corner" -> (o => (lo - o, hi + o)))
+    for ((edge, center) <- edges) {
+      val decisions = (0 to 5).map { o =>
+        val (r0, c0) = center(o)
+        sameAsReference(hr, hrSide, hrSide, lr, lrSide, lrSide, 1, batch, scale, r0, c0)
+      }
+      // in bounds, then accepted while the zero fill stays within 1%, then not
+      assert(decisions.head && decisions.tail.contains(true) && !decisions.last, s"$edge: $decisions")
+    }
+  }
+
+  test("alignedTile equals crop + qualityOk on seeded random images and windows") {
+    val rng = new scala.util.Random(42L)
+    val marks = Array(0f, Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -9999f)
+    def image(n: Int, defectRate: Double) = nonZero(rng, n).map { v =>
+      if (rng.nextDouble() < defectRate) marks(rng.nextInt(marks.length)) else v
+    }
+    var outcomes = Set.empty[Boolean]
+    for (_ <- 0 until 300) {
+      val scale = 2 + rng.nextInt(2)
+      val batch = Seq(2, 4, 5, 6, 7, 9, 12, 13)(rng.nextInt(8))
+      val nBands = Seq(1, 2, 4)(rng.nextInt(3))
+      val lrSide = 4 + rng.nextInt(10)
+      val hrSide = lrSide * scale
+      val rate = Seq(0.0, 0.003, 0.02)(rng.nextInt(3))
+      val (hr, lr) = (image(nBands * hrSide * hrSide, rate), image(nBands * lrSide * lrSide, rate))
+      for (_ <- 0 until 10)
+        outcomes += sameAsReference(hr, hrSide, hrSide, lr, lrSide, lrSide, nBands, batch, scale,
+          rng.nextInt(hrSide + 6) - 3, rng.nextInt(hrSide + 6) - 3)
+    }
+    assert(outcomes == Set(true, false))
+  }
+  test("assemblePairs: the three equi-joins' rows, with only paired LR images broadcast") {
+    def img(id: String, v: Float, side: Int) = (id, 1, side, side, Array.fill(side * side)(v))
+    val images = Seq(
+      img("hr_a", 1f, 6), img("hr_b", 2f, 6),           // HR only
+      img("lr_a", 3f, 2), img("lr_dup", 4f, 2),         // LR only, one id twice
+      img("lr_dup", 5f, 2),
+      img("spare_hr", 6f, 6), img("spare_lr", 7f, 2),   // no pair names them
+      img(null, 8f, 2))
+      .toDF("image_id", "c", "h", "w", "pixels")
+    val masks = Seq(("m", 6, 6, Array.fill(36)(1f))).toDF("mask_id", "h", "w", "pixels")
+    val pairTable = Seq(
+      ("p1", "hr_a", "lr_a", "m"), ("p2", "hr_b", "lr_dup", "m"),
+      ("p3", "hr_a", null, "m"), ("p4", "hr_b", "lr_gone", "m"), ("p5", "hr_gone", "lr_a", "m"))
+      .toDF("pair_id", "hr_image_id", "lr_image_id", "mask_id")
+    // the LR images that pairs name: lr_a once, lr_dup twice
+    val pairedLr = 3L
+
+    val inline = pairTable
+      .join(images.select($"image_id".as("hr_image_id"), $"c".as("n_bands"),
+        $"h".as("hr_h"), $"w".as("hr_w"), $"pixels".as("hr_pixels")), Seq("hr_image_id"))
+      .join(images.select($"image_id".as("lr_image_id"),
+        $"h".as("lr_h"), $"w".as("lr_w"), $"pixels".as("lr_pixels")), Seq("lr_image_id"))
+      .join(masks.select($"mask_id", $"h".as("mask_h"), $"w".as("mask_w"),
+        $"pixels".as("mask_pixels")), Seq("mask_id"))
+      .select("pair_id", "n_bands", "hr_h", "hr_w", "hr_pixels", "lr_h", "lr_w", "lr_pixels",
+        "mask_h", "mask_w", "mask_pixels")
+    def hash(df: DataFrame) = {
+      val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(struct(*)))")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val assembled = TileJobs.assemblePairs(spark, pairTable, images, masks).toDF()
+    assert(hash(assembled) == hash(inline))
+    assert(hash(inline)._1 == 3, "p1 once and p2 once per lr_dup row")
+
+    assembled.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case n => Seq(n)
+    }
+    val lrBroadcast = nodes(assembled.queryExecution.executedPlan).collect {
+      case b: BroadcastExchangeExec if b.output.exists(_.name == "lr_pixels") => b
+    }
+    assert(lrBroadcast.size == 1, assembled.queryExecution.executedPlan)
+    val semi = lrBroadcast.head.child.collectFirst { case j: BaseJoinExec => j }
+    assert(semi.map(_.joinType).contains(LeftSemi), lrBroadcast.head)
+    assert(semi.get.metrics("numOutputRows").value == pairedLr)
   }
 }
