@@ -12,7 +12,7 @@ import graft.functions._
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
-  * SQL surface: base26(n), simhash64(tokens), simhash64_portable(tokens),
+  * SQL surface: base26(n), simhash64_portable(tokens),
   * rolling_hash64(s), minhash_ngrams(tokens, n, m),
   * minhash_ngrams_portable(tokens, n, m), cosine_sim(a, b),
   * ngram_hashes(tokens, n), sorted_jaccard(a, b),
@@ -46,8 +46,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private[graft] val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("base26", "base26(n) - bijective base-26 letters of rank n (1 -> a)",
       es => BijectiveBase26(es.head)),
-    ("simhash64", "simhash64(tokens) - 64-bit SimHash of ARRAY<STRING>",
-      es => SimHash64(es.head)),
     ("rolling_hash64", "rolling_hash64(s) - polynomial content hash",
       es => RollingHash64(es.head)),
     ("minhash_ngrams", "minhash_ngrams(tokens, n, m) - m-slot MinHash over word n-grams",

@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, IntegerType, StringType, StructField, StructType}
 
@@ -34,18 +34,28 @@ import graft.functions.Base26
 object CatalogBuilder {
 
   /** Labeled bin dimension: (bin, bin_start, cnt, class) — [[build]]'s week
-    * labeling as a lazy Spark plan, for queries that keep it distributed. */
+    * labeling as a lazy Spark plan, for queries that keep it distributed.
+    * The ≤ nBins histogram rows meet in one bin-sorted partition, where
+    * [[weekClasses]] labels them. */
   def labeledBins(dates: DataFrame, dateCol: String, firstEdge: LocalDate, nBins: Int): DataFrame = {
     val hist = WeekBins.histogram(dates, dateCol, firstEdge, nBins)
-    // Rank of each non-empty bin among non-empty bins, in bin order, via the
-    // bounded no-window rank over the ≤ nBins dimension (never an
-    // unpartitioned WindowExec), broadcast-joined back onto the bin table.
-    val ranked = graft.ops.Ranking.boundedRank(
-      hist.where(col("cnt") > 0).select("bin"), "nonEmptyRank", col("bin"))
-    hist.join(broadcast(ranked), Seq("bin"), "left")
-      .withColumn("class",
-        when(col("cnt") > 0, Base26.base26(col("nonEmptyRank"))).otherwise(lit("0")))
-      .select("bin", "bin_start", "cnt", "class")
+    hist.coalesce(1).sortWithinPartitions("bin")
+      .mapPartitions { it =>
+        val bins = it.toVector
+        bins.zip(weekClasses(bins.map(_.getLong(2) > 0)))
+          .map { case (r, cls) => Row.fromSeq(r.toSeq :+ cls) }.iterator
+      }(Encoders.row(hist.schema.add("class", StringType)))
+  }
+
+  /** The week walk (O17/O18): one class per bin, given each bin's
+    * non-empty flag in bin order. A non-empty bin takes the next
+    * [[Base26.letters]] label, so the counter skips empty bins; an empty
+    * bin gets `"0"`. */
+  def weekClasses(nonEmpty: Seq[Boolean]): Seq[String] = {
+    var labels = 0L
+    nonEmpty.map { n =>
+      if (n) { labels += 1; Base26.letters(labels).toString } else "0"
+    }
   }
 
   /** Build one sensor catalog.
@@ -69,16 +79,13 @@ object CatalogBuilder {
       .coalesce(1).sortWithinPartitions("bin", "data")
       .collect().groupBy(_.getInt(2))
 
-    // the week walk: the label counter advances on non-empty bins only
-    // (O17), and an empty bin gets one placeholder row (O18)
-    var labels = 0L
-    val rows = (0 until nBins).flatMap { bin =>
+    // the week walk labels the bins; an empty bin gets one placeholder
+    // row (O18)
+    val bins = 0 until nBins
+    val rows = bins.zip(weekClasses(bins.map(byBin.contains))).flatMap { case (bin, cls) =>
       byBin.get(bin) match {
-        case Some(named) =>
-          labels += 1
-          val cls = Base26.letters(labels).toString
-          named.map(r => Row(cls, path, r.getString(0), r.get(1), bin)).toSeq
-        case None => Seq(Row("0", path, "0", null, bin))
+        case Some(named) => named.map(r => Row(cls, path, r.getString(0), r.get(1), bin)).toSeq
+        case None => Seq(Row(cls, path, "0", null, bin))
       }
     }
     names.sparkSession.createDataFrame(rows.asJava, Schema)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   - MinHash+LSH: per-row signature (narrow), explode to (band, bucket)
   *     keys, shuffle on the SMALL bucket key space, pair only within
   *     buckets — the classic way to avoid the O(n²) cross join;
-  *   - SimHash: 64-bit fingerprint per row (native expression), near-dup
+  *   - SimHash: 64-bit fingerprint per row (portable hash family), near-dup
   *     banding on 16-bit chunks (pigeonhole: hamming ≤ 3 ⇒ one of 4 chunks
   *     equal);
   *   - n-gram Jaccard: exact verification, only ever within a blocking key
@@ -753,37 +753,23 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash fingerprint of a token array (native expression —
-    * graft.functions.SimHash64). */
-  def simhash(tokensCol: Column): Column =
-    graft.functions.SimHash.simhash64(tokensCol)
-
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-dup pairs within hamming ≤ maxHamming, banded on 16-bit
     * chunks (pigeonhole: maxHamming ≤ 3 guarantees one equal chunk; larger
-    * maxHamming trades recall, documented). Output (a_id, b_id, hamming). */
-  def simhashPairs(df: DataFrame, idCol: Column, textCol: Column,
-                   maxHamming: Int): DataFrame =
-    simhashPairsOf(df, idCol, simhash(tokens(textCol)), maxHamming)
-
-  /** [[simhashPairs]] with the PORTABLE per-token hash family
-    * (graft.functions.PortableSimHash) so a DuckDB oracle can mirror the
-    * fingerprint, the chunk banding and the hamming verify exactly; the
-    * xxhash64 variant stays the production default. */
+    * maxHamming trades recall, documented). The fingerprint uses the
+    * PORTABLE per-token hash family (graft.functions.PortableSimHash), so a
+    * DuckDB oracle mirrors the fingerprint, the chunk banding and the
+    * hamming verify exactly. Output (a_id, b_id, hamming). */
   def simhashPairsPortable(df: DataFrame, idCol: Column, textCol: Column,
                            maxHamming: Int): DataFrame =
-    simhashPairsOf(df, idCol,
+    fingerprintPairs(df, idCol,
       graft.functions.PortableSimHash.simhash64Portable(tokens(textCol)),
-      maxHamming)
-
-  private def simhashPairsOf(df: DataFrame, idCol: Column, shCol: Column,
-                             maxHamming: Int): DataFrame =
-    fingerprintPairs(df, idCol, shCol, maxHamming, nChunks = 4)
+      maxHamming, nChunks = 4)
 
   /** Banded hamming near-dup pairs over ANY 64-bit fingerprint column —
-    * the chunk-LSH shared by SimHash (q23/q53) and the perceptual dHash
+    * the chunk-LSH shared by SimHash (q53) and the perceptual dHash
     * (q198/q199): the fingerprint splits into `nChunks` equal bit chunks,
     * pairs agreeing on at least one chunk are candidates (pigeonhole:
     * hamming < nChunks GUARANTEES a shared chunk; beyond that recall is

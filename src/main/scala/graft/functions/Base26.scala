@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -25,9 +24,6 @@ object Base26 {
     }
     UTF8String.fromString(sb.reverse.toString)
   }
-
-  /** Column API: bijective base-26 letters of a BIGINT rank (1-based). */
-  def base26(c: Column): Column = toColumn(BijectiveBase26(toExpr(c)))
 }
 
 /** Native Catalyst expression (whole-stage-codegen'd) for [[Base26.letters]]. */

@@ -2,64 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** 64-bit SimHash fingerprint of a token array: per-token xxhash64 (same
-  * hash family as Spark SQL's `xxhash64`, fixed seed 42), ±1 bit-position
-  * voting, sign → fingerprint bit. Documents differing in a few tokens land
-  * within small hamming distance — the banding in graft.dedup.Dedup
-  * .simhashPairs turns that into a shuffle-joinable key.
-  */
-object SimHash {
-  val Seed = 42L
-
-  def simhash64(tokens: Column): Column = toColumn(SimHash64(toExpr(tokens)))
-
-  /** Kernel shared by interpreted eval (and tests). */
-  def ofArray(arr: ArrayData): Long = {
-    val counters = new Array[Int](64)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = XxHash64Function.hash(arr.getUTF8String(i), StringType, Seed)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (counters(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires ARRAY<STRING>, got ${other.catalogString}")
-  }
-  override def nullSafeEval(v: Any): Any = SimHash.ofArray(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
-/** PORTABLE SimHash twin (same role as [[PortableMinHash]] for q48): the
-  * per-token hash is plain wrapping arithmetic a DuckDB oracle reproduces —
+/** 64-bit SimHash fingerprint of a token array, on the PORTABLE hash
+  * family (the role [[PortableMinHash]] plays for q48): the per-token hash
+  * is plain wrapping arithmetic a DuckDB oracle reproduces —
   *
   *   x = rolling31 over the token's bytes (unsigned fold), mod 2^32
   *       (keeping A·x inside 128-bit HUGEINT),
@@ -68,8 +18,10 @@ case class SimHash64(child: Expression) extends UnaryExpression with CodegenFall
   *       the low bits of a multiply-add alone are nearly linear in x,
   *       which would bias the low fingerprint bits),
   *
-  * then the usual ±1 bit voting. The xxhash64 variant ([[SimHash]]) stays
-  * the production default.
+  * then ±1 bit-position voting, sign → fingerprint bit. Documents
+  * differing in a few tokens land within small hamming distance; the
+  * banding in graft.dedup.Dedup.simhashPairsPortable turns that into a
+  * shuffle-joinable key.
   */
 object PortableSimHash {
   def tokenHash(bytes: Array[Byte]): Long = {

@@ -10,10 +10,9 @@ import graft.dedup.Dedup
 /** Deduplication queries over the `documents`/`embeddings` tables. The
   * SQL-expressible ones (exact hash groups, exact n-gram Jaccard, exact
   * embedding cosine, and the portable-family MinHash-LSH q48) carry DuckDB
-  * oracles; the xxhash64-family ones (q22 MinHash, q23 SimHash — xxhash64
-  * has no DuckDB twin) are registered without oracles (driver records
-  * rows-only) and are instead pinned by GraftDedupSpec against planted
-  * near-duplicates.
+  * oracles; the xxhash64-family q22 MinHash (xxhash64 has no DuckDB twin)
+  * is registered without an oracle (driver records rows-only) and is
+  * instead pinned by DedupSpec against planted near-duplicates.
   */
 object DedupQueries extends graft.QueryModule {
 
@@ -440,15 +439,9 @@ object DedupQueries extends graft.QueryModule {
          |WHERE a.is_bench <> b.is_bench
          |GROUP BY 1 ORDER BY doc_id""".stripMargin)),
 
-    // SimHash fingerprints + banded near-dup pairs (no oracle)
-    Entry("q23_simhash", (s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), col("doc_id"), col("text"),
-          maxHamming = 6)
-        .orderBy("a_id", "b_id")),
-
-    // PORTABLE SimHash twin (multiply-add + xorshift token hash): the
-    // fingerprint, the 16-bit chunk banding and the hamming verify all get
-    // a DuckDB oracle; q23's xxhash64 path stays production, rows-only
+    // SimHash fingerprints + banded near-dup pairs on the portable family
+    // (multiply-add + xorshift token hash): the fingerprint, the 16-bit
+    // chunk banding and the hamming verify all get a DuckDB oracle
     Entry("q53_simhash_portable", (s, dir) =>
       Dedup.simhashPairsPortable(t(s, dir, "documents"), col("doc_id"), col("text"),
           maxHamming = 6)
@@ -723,18 +716,14 @@ object DedupQueries extends graft.QueryModule {
         |  CAST(0 AS BIGINT) AS n_only_ref
         |FROM truth""".stripMargin)),
 
-    // PRODUCTION-PATH check for the xxhash64 SimHash family. The hamming
-    // ≤ 6 near-dup shell is hash-family-dependent (measured at sf0.1:
-    // 10k prod vs 45k portable pairs, 687 common — templated docs pack
-    // the 4–6 shell differently per family), so no cross-family set
-    // claim survives. The DETERMINISTIC production contract is recall on
-    // exact duplicates: identical texts hash to identical fingerprints →
-    // hamming 0 → a guaranteed chunk collision → the pair is always
-    // found, in BOTH families, by construction. Organic exact dups exist
-    // only at sf0.1, so the corpus is unioned with re-keyed copies of the
-    // first 50 docs (ids + 10^7) — the check is non-degenerate at every
-    // SF and both engines build the identical planted corpus. The oracle
-    // computes the exact-dup pair count in DuckDB and asserts zero misses.
+    // Recall of the SimHash path on exact duplicates: identical texts hash
+    // to identical fingerprints → hamming 0 → a guaranteed chunk
+    // collision → the pair is always found, by construction. Organic exact
+    // dups exist only at sf0.1, so the corpus is unioned with re-keyed
+    // copies of the first 50 docs (ids + 10^7) — the check is
+    // non-degenerate at every SF and both engines build the identical
+    // planted corpus. The oracle computes the exact-dup pair count in
+    // DuckDB and asserts zero misses.
     Entry("q138_simhash_dup_recall", (s, dir) => {
       val docs0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val docs = docs0.unionByName(docs0.where(col("doc_id") < 50)
@@ -742,18 +731,13 @@ object DedupQueries extends graft.QueryModule {
       val ids = docs.select(md5(col("text")).as("h"), col("doc_id"))
       val dupPairs = ids.toDF("h", "a_id").join(ids.toDF("h", "b_id"), "h")
         .where(col("a_id") < col("b_id")).select("a_id", "b_id")
-      val sProd = Dedup.simhashPairs(docs, col("doc_id"), col("text"), maxHamming = 6)
-        .select(col("a_id"), col("b_id"), lit(1L).as("in_prod"))
-      val sPort = Dedup.simhashPairsPortable(docs, col("doc_id"), col("text"), maxHamming = 6)
-        .select(col("a_id"), col("b_id"), lit(1L).as("in_port"))
+      val found = Dedup.simhashPairsPortable(docs, col("doc_id"), col("text"), maxHamming = 6)
+        .select(col("a_id"), col("b_id"), lit(1L).as("found"))
       dupPairs
-        .join(sProd, Seq("a_id", "b_id"), "left")
-        .join(sPort, Seq("a_id", "b_id"), "left")
+        .join(found, Seq("a_id", "b_id"), "left")
         .agg(count(lit(1)).as("n_dup_pairs"),
-          coalesce(sum(when(col("in_prod").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("n_missed_prod"),
-          coalesce(sum(when(col("in_port").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("n_missed_portable"))
+          coalesce(sum(when(col("found").isNull, 1L).otherwise(0L)), lit(0L))
+            .as("n_missed"))
     }, Some(
       """WITH docs AS (
         |  SELECT doc_id, text FROM documents
@@ -763,8 +747,7 @@ object DedupQueries extends graft.QueryModule {
         |dp AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
         |       FROM h a JOIN h b ON a.h = b.h AND a.doc_id < b.doc_id)
         |SELECT CAST(count(*) AS BIGINT) AS n_dup_pairs,
-        |  CAST(0 AS BIGINT) AS n_missed_prod,
-        |  CAST(0 AS BIGINT) AS n_missed_portable
+        |  CAST(0 AS BIGINT) AS n_missed
         |FROM dp""".stripMargin)))
 
   /** One-row agreement summary between a production-hash pair set and an

@@ -148,7 +148,7 @@ object MultimodalQueries extends graft.QueryModule {
     // IMAGE PERCEPTUAL NEAR-DUP (round 13, judge r12 Next #4): q98 dedups
     // EXACT frames; re-encoded / resized / tone-mapped copies hash apart
     // there. dHash64 (gradient signs of the 8×9 box grid) + banded-hamming
-    // chunk LSH (the q23/q53 discipline on pixels, shared
+    // chunk LSH (the q53 discipline on pixels, shared
     // Dedup.fingerprintPairs) + exact in-band hamming verify — never an
     // all-pairs join. 8 chunks of 8 bits with threshold 6: pigeonhole
     // GUARANTEES every pair at hamming ≤ 7 surfaces, so banding recall

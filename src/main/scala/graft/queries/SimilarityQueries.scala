@@ -171,16 +171,7 @@ object SimilarityQueries extends graft.QueryModule {
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
       val ivf = Ann.ivfTopK(q, emb, "vec_id", "embedding",
         k = 10, nCentroids = 16, nProbe = 4)
-      val hits = bf.join(ivf.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      bf.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
-            .as("recall"))
-        .orderBy("query_id")
+      Ann.recallAtK(bf, ivf).orderBy("query_id")
     }, Some(
       s"""WITH $ivfSql,
          |bf AS (
@@ -220,16 +211,7 @@ object SimilarityQueries extends graft.QueryModule {
       val bf = Ann.bruteForceTopK(q, emb, "vec_id", "embedding", k = 10)
       val pq = graft.similarity.Pq.adcTopK(q, emb,
         "vec_id", "embedding", k = 10, m = 16, kCent = 64)
-      val hits = bf.join(pq.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      bf.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
-            .as("recall"))
-        .orderBy("query_id")
+      Ann.recallAtK(bf, pq).orderBy("query_id")
     }),
 
     // IVF-PQ: cells prune WHICH rows are scanned, codes shrink WHAT they
@@ -243,16 +225,7 @@ object SimilarityQueries extends graft.QueryModule {
       val ivfpq = graft.similarity.Pq.ivfAdcTopK(q, emb,
         "vec_id", "embedding", k = 10, nCentroids = 16, nProbe = 4,
         m = 16, kCent = 64)
-      val hits = bf.join(ivfpq.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      bf.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
-            .as("recall"))
-        .orderBy("query_id")
+      Ann.recallAtK(bf, ivfpq).orderBy("query_id")
     }),
 
     // CANDIDATE + RE-RANK: the production retrieval shape — the portable
@@ -286,16 +259,7 @@ object SimilarityQueries extends graft.QueryModule {
       val rr = graft.similarity.Pq.rerankTopK(q, emb,
         "vec_id", "embedding", k = 10, nCand = RerankCand,
         m = 8, kCent = RerankCb)
-      val hits = bf.join(rr.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      bf.groupBy("query_id").agg(count(lit(1)).as("n_true"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"), col("n_true"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
-            .as("recall"))
-        .orderBy("query_id")
+      Ann.recallAtK(bf, rr).orderBy("query_id")
     }, Some(
       s"""WITH $rerankSql,
          |rr AS (SELECT query_id, neighbor_id FROM rer WHERE rank <= 10),

@@ -206,6 +206,23 @@ object Ann {
       .select("query_id", "rank", "neighbor_id")
   }
 
+  /** Per-query recall@k of an approximate top-k against the exact one:
+    * (query_id, n_true, n_hit, recall), where n_hit counts the exact
+    * neighbors the approximate result also returns. Both inputs carry
+    * (query_id, neighbor_id); a query the approximate side misses entirely
+    * gets n_hit 0. */
+  def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame = {
+    val hits = exact.join(approx.select("query_id", "neighbor_id"),
+        Seq("query_id", "neighbor_id"), "left_semi")
+      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+    exact.groupBy("query_id").agg(count(lit(1)).as("n_true"))
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"), col("n_true"),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+        (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_true"))
+          .as("recall"))
+  }
+
   /** The IVF recall/cost tradeoff as DATA: one row per probe level with
     * total recall@k against exact brute force and the candidate rows
     * scanned — so the accuracy/cost decision reads from a query result

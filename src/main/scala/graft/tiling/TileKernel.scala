@@ -213,12 +213,6 @@ object TileKernel {
     else None
   }
 
-  /** O26 — the reference's overlap suppression (fct_data_extraction.py:75–88
-    * + trigger at :143–147). NOTE the faithful semantics: the removal
-    * interval is `[r_acc + batch·p, c_acc + batch·p]` — its endpoints mix
-    * the accepted tile's ROW and COLUMN — and is applied first to rows,
-    * then to the surviving candidates' columns. When `c_acc < r_acc` the
-    * interval is empty and nothing is removed. */
   /** Hard ceiling for the SEQUENTIAL kernels' candidate lists. The
     * faithful greedy/shuffled suppression is order-dependent by reference
     * semantics, so it runs as one in-memory loop with an O(|cand|²)
@@ -239,6 +233,12 @@ object TileKernel {
         "dense - use OverlapMode.GridSnap (TileJobs.gridSnapDF), the " +
         "order-independent stride-grid mode, for this input")
 
+  /** O26 — the reference's overlap suppression (fct_data_extraction.py:75–88
+    * + trigger at :143–147). NOTE the faithful semantics: the removal
+    * interval is `[r_acc + batch·p, c_acc + batch·p]` — its endpoints mix
+    * the accepted tile's ROW and COLUMN — and is applied first to rows,
+    * then to the surviving candidates' columns. When `c_acc < r_acc` the
+    * interval is empty and nothing is removed. */
   private def noOverlap(rs: ArrayBuffer[Int], cs: ArrayBuffer[Int], a: Double, b: Double): Unit = {
     var j = 0
     while (j < rs.length) {

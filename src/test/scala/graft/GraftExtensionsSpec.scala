@@ -20,7 +20,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val row = spark.sql(
       """SELECT
         |  base26(28L) AS letters,
-        |  simhash64(array('a','b')) AS sh,
         |  rolling_hash64('hello') AS rh,
         |  size(minhash_ngrams(array('a','b','c','d'), 2, 16)) AS m,
         |  cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS cos,
@@ -33,7 +32,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
         |  size(hyperplane_proj_portable(array(CAST(1.0 AS FLOAT), CAST(0.5 AS FLOAT)), 16, 42L)) AS np
         |""".stripMargin).collect()(0)
     assert(row.getAs[String]("letters") == "ab")
-    assert(row.getAs[Long]("sh") != 0L)
     assert(row.getAs[Long]("rh") == graft.functions.RollingHash.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString("hello")))
     assert(row.getAs[Int]("m") == 16)

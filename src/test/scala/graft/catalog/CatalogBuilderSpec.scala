@@ -46,4 +46,39 @@ class CatalogBuilderSpec extends SparkSpec {
       named("d", "20240104T000000_T00AAA", 52)
     assert(cat.collect().toSeq == expected)
   }
+
+  test("week walk: leading and trailing empty bins get 0, the counter skips them") {
+    val f = false; val t = true
+    assert(CatalogBuilder.weekClasses(Seq(f, f, t, f, t, t, f, f)) ==
+      Seq("0", "0", "a", "0", "b", "c", "0", "0"))
+    assert(CatalogBuilder.weekClasses(Seq(t)) == Seq("a"))
+    assert(CatalogBuilder.weekClasses(Seq.empty) == Seq.empty)
+  }
+
+  test("week walk: all bins empty gives all 0") {
+    assert(CatalogBuilder.weekClasses(Seq.fill(nBins)(false)) == Seq.fill(nBins)("0"))
+  }
+
+  test("week walk: the 26th non-empty bin is z and the 27th is aa") {
+    // 27 non-empty bins with an empty one after every ninth
+    val flags = (1 to 27).flatMap(i => if (i % 9 == 0) Seq(true, false) else Seq(true))
+    val labels = CatalogBuilder.weekClasses(flags).filter(_ != "0")
+    assert(labels == ('a' to 'z').map(_.toString) :+ "aa")
+    assert(CatalogBuilder.weekClasses(flags).count(_ == "0") == 3)
+  }
+
+  test("labeledBins labels every bin with the week walk, an empty input included") {
+    val dates = Seq("2022-12-29", "2023-01-05", "2023-01-10", "2023-01-20", "2024-01-04")
+      .map(Date.valueOf).toDF("d")
+    val got = CatalogBuilder.labeledBins(dates.repartition(3), "d", firstEdge, nBins)
+      .orderBy("bin").collect().toSeq
+    assert(got.map(_.getInt(0)) == (0 until nBins))
+    assert(got.map(_.getString(3)) ==
+      CatalogBuilder.weekClasses(got.map(_.getLong(2) > 0)))
+    assert(got.map(_.getString(3)).filter(_ != "0") == Seq("a", "b", "c", "d"))
+
+    val empty = CatalogBuilder.labeledBins(dates.limit(0), "d", firstEdge, nBins).collect()
+    assert(empty.map(r => (r.getInt(0), r.getLong(2), r.getString(3))).toSeq ==
+      (0 until nBins).map(b => (b, 0L, "0")))
+  }
 }

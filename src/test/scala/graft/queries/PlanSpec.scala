@@ -43,6 +43,16 @@ class PlanSpec extends SparkSpec {
       s"unexpected columns in $schema")
   }
 
+  test("week labels walk the histogram in one partition: no row ids, no rank broadcast") {
+    val p = plan("q02_week_labels")
+    assert(!p.contains("monotonically_increasing_id"), p)
+    // the histogram's own broadcasts (q01) are the only ones: no ranked
+    // relation is broadcast back onto the bins
+    def broadcasts(s: String) = "BroadcastExchange".r.findAllIn(s).size
+    assert(broadcasts(p) == broadcasts(plan("q01_week_histogram")), p)
+    assert(p.contains("MapPartitions"), p)
+  }
+
   test("event classes joins labels via broadcast") {
     assert(plan("q03_event_classes").contains("BroadcastHashJoin"))
   }
