@@ -1,19 +1,21 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Entry
 import graft.SparkEntry.{table => t}
 import graft.tiling.{PairRow, TileJobs, TileKernel}
+import graft.tiling.TileKernel.Candidates
 
-/** Tiling-operator queries. The sequential E3 kernels (greedy/shuffled
-  * crop scans, q60/q61) are not SQL-expressible — driver records
-  * rows-only and TilingSpec pins full reference parity against the numpy
-  * oracle — but the DataFrame-level forms ARE oracle-backed: border
-  * filter (q26), quality filter (q27), candidate extraction (q62) and
-  * grid-snap suppression (q63), each over deterministically synthesized
-  * inputs a DuckDB oracle regenerates arithmetically.
+/** Tiling-operator queries. Every row runs the `TileKernel` functions the
+  * pipeline's `TileJobs.tilePairs` runs; none has a second, DataFrame
+  * form. The crop scans (q60 greedy, q61 grid-snap, q136 shuffled, q168
+  * the v1 walk) are pinned by golden summaries, and TilingSpec keeps full
+  * reference parity against the numpy oracle. The border filter (q26),
+  * quality filter (q27), candidate extraction (q62) and grid-snap
+  * suppression (q63) run one kernel operator each over deterministically
+  * synthesized inputs a DuckDB oracle regenerates arithmetically.
   */
 object TilingQueries extends graft.QueryModule {
 
@@ -56,6 +58,18 @@ object TilingQueries extends graft.QueryModule {
       transform(sequence(lit(0), lit(119)), i =>
         when(pmod(i.cast("bigint") * 7 + col("id") * 13, lit(11)) === 0, 1.0f)
           .otherwise(0.0f)).as("pixels"))
+
+  /** (mask_id, r, c) of every [[syntheticMasks]] row's candidate centers,
+    * after `select` (identity, or a suppression such as gridSnap). */
+  private def maskCandidates(s: SparkSession)(select: Candidates => Candidates): DataFrame = {
+    import s.implicits._
+    syntheticMasks(s).as[(Long, Int, Int, Array[Float])]
+      .flatMap { case (id, h, w, pixels) =>
+        val cand = select(TileKernel.candidateCenters(pixels, h, w))
+        cand.rs.indices.map(i => (id, cand.rs(i), cand.cs(i)))
+      }
+      .toDF("mask_id", "r", "c")
+  }
 
   /** (n, md5) golden summary of a tile set: tile count + md5 over the
     * sort_array'd per-tile rows (pair, tile, r, c, crc(hr), crc(lr)) —
@@ -218,9 +232,9 @@ object TilingQueries extends graft.QueryModule {
       // bit-equal to tiling the same pairs in memory
       "SELECT CAST(1465 AS BIGINT) AS n, '7bbd092987ca0982b86c5795d5ea470d' AS md5")),
 
-    // O12 — border-validity filter (intended bounds) through the REAL
-    // borderFilterDF join, candidates/mask dims derived arithmetically from
-    // `part` so a DuckDB oracle mirrors them exactly
+    // O12 — border-validity filter through the kernel's intended-bounds
+    // predicate, candidates/mask dims derived arithmetically from `part` so
+    // a DuckDB oracle mirrors them exactly
     Entry("q26_border_filter", (s, dir) => {
       val masks = s.range(8).select(
         col("id").as("mask_id"),
@@ -231,7 +245,10 @@ object TilingQueries extends graft.QueryModule {
         col("p_partkey"),
         pmod(col("p_partkey"), lit(131)).as("r"),
         pmod(col("p_partkey") * 13, lit(127)).as("c"))
-      TileJobs.borderFilterDF(cands, masks, batch = 40)
+      cands.join(masks, Seq("mask_id"))
+        .filter((m: Row) => TileKernel.cropInBounds(m.getAs[Long]("r").toInt,
+          m.getAs[Long]("c").toInt, batch = 40, m.getAs[Int]("h"), m.getAs[Int]("w")))
+        .select(cands.columns.map(col).toIndexedSeq: _*)
         .orderBy("p_partkey")
     }, Some(
       """WITH masks AS (
@@ -246,22 +263,18 @@ object TilingQueries extends graft.QueryModule {
         |WHERE cd.r >= 20 AND cd.r + 20 <= m.h AND cd.c >= 20 AND cd.c + 20 <= m.w
         |ORDER BY p_partkey""".stripMargin)),
 
-    // O24 at scale — candidate-center extraction through the REAL
-    // candidatesDF (posexplode + filter) over arithmetically synthesized
-    // masks, so the (r, c) recovery from flat indices carries an oracle
-    Entry("q62_candidates_df", (s, _) => {
-      val masks = syntheticMasks(s)
-      TileJobs.candidatesDF(masks).orderBy("mask_id", "r", "c")
-    }, Some(
+    // O24 — the kernel's candidate-center extraction over arithmetically
+    // synthesized masks, so the (r, c) recovery from flat indices carries
+    // an oracle
+    Entry("q62_candidates_df", (s, _) =>
+      maskCandidates(s)(identity).orderBy("mask_id", "r", "c"), Some(
       s"""WITH $CandCte
          |SELECT mask_id, r, c FROM cand ORDER BY mask_id, r, c""".stripMargin)),
 
-    // O26 scalable mode — stride-grid overlap suppression (first candidate
-    // per cell, row-major) through the REAL gridSnapDF window
-    Entry("q63_gridsnap_df", (s, _) => {
-      val cands = TileJobs.candidatesDF(syntheticMasks(s))
-      TileJobs.gridSnapDF(cands, stride = 4).orderBy("mask_id", "r", "c")
-    }, Some(
+    // O26 scalable mode — the kernel's stride-grid overlap suppression
+    // (first candidate per cell, row-major), as tilePairs' GridSnap runs it
+    Entry("q63_gridsnap_df", (s, _) =>
+      maskCandidates(s)(TileKernel.gridSnap(_, 4)).orderBy("mask_id", "r", "c"), Some(
       s"""WITH $CandCte,
          |ranked AS (
          |  SELECT mask_id, r, c,
@@ -269,10 +282,12 @@ object TilingQueries extends graft.QueryModule {
          |  FROM cand)
          |SELECT mask_id, r, c FROM ranked WHERE rn = 1 ORDER BY mask_id, r, c""".stripMargin)),
 
-    // O13 — tile-quality counts + acceptance over synthesized HR/LR arrays
-    // (zeros / nodata / inf injected arithmetically; 64- and 16-element
-    // arrays so the percentage divisions are exact powers of two)
+    // O13 — the kernel's tile-quality counts + acceptance over synthesized
+    // 1×8×8 HR / 1×4×4 LR arrays (zeros / nodata / inf injected
+    // arithmetically; 64 and 16 cells so the percentage divisions are exact
+    // powers of two)
     Entry("q27_quality_filter", (s, dir) => {
+      import s.implicits._
       val hrArr = transform(sequence(lit(0), lit(63)), i =>
         when(pmod(col("p_partkey"), lit(13)) === 0 && i < 2, 0.0)
           .when(pmod(col("p_partkey"), lit(29)) === 0 && i === 3, Double.PositiveInfinity)
@@ -280,13 +295,18 @@ object TilingQueries extends graft.QueryModule {
       val lrArr = transform(sequence(lit(0), lit(15)), j =>
         when(pmod(col("p_partkey"), lit(11)) === 0 && j === 0, -9999.0)
           .otherwise((pmod(pmod(col("p_partkey") * 11 + j.cast("bigint") * 17, lit(997)), lit(50)) + 1).cast("double")))
-      val base = t(s, dir, "part")
-        .select(col("p_partkey"), hrArr.as("hr"), lrArr.as("lr"))
-      val counted = base.select(
-        (col("p_partkey") +: TileJobs.qualityCounts(col("hr"), col("lr"))): _*)
-      counted
-        .withColumn("ok", TileJobs.qualityOkDF(
-          col("hr_nz"), col("lr_nz"), col("lr_nodata"), col("hr_inf"), hrN = 64, lrN = 16))
+      // every value (0, ±inf, -9999, 1–50) is exact as a float
+      t(s, dir, "part")
+        .select(col("p_partkey"), hrArr.cast("array<float>").as("hr"),
+          lrArr.cast("array<float>").as("lr"))
+        .as[(Long, Array[Float], Array[Float])]
+        .map { case (key, hr, lr) =>
+          val n = TileKernel.qualityCounts(hr, lr)
+          (key, n.hrNz, n.lrNz, n.lrNodata, n.hrInf,
+            TileKernel.qualityOk(hr, lr, nBands = 1, hrH = 8, hrW = 8, lrH = 4, lrW = 4,
+              faithfulInfDenom = false))
+        }
+        .toDF("p_partkey", "hr_nz", "lr_nz", "lr_nodata", "hr_inf", "ok")
         .orderBy("p_partkey")
     }, Some(
       """WITH base AS (

@@ -1,10 +1,7 @@
 package graft.tiling
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.tiling.TileKernel.Candidates
 
 /** One image pair ready for tiling: HR + LR tensors and the centerline mask
   * (HR-resolution), flattened band-major. One row per pair — the unit of
@@ -73,61 +70,6 @@ object TileJobs {
       }
       tiles.map(t => TileRow(p.pair_id, t.tileId, t.r, t.c, t.hr, t.lr, cfg.batch, cfg.scale))
     }
-  }
-
-  // ------------------------------------------------- DataFrame-level O24/O12
-
-  /** O24 at scale: candidate centers from a masks DataFrame
-    * (mask_id, h, w, pixels) without a kernel call — posexplode + filter,
-    * fully codegen'd. Returns (mask_id, r, c) in row-major order. */
-  def candidatesDF(masks: DataFrame): DataFrame =
-    masks
-      .select(col("mask_id"), col("h"), col("w"),
-        posexplode(col("pixels")).as(Seq("pos", "v")))
-      .where(col("v") === 1.0f)
-      .select(col("mask_id"), (col("pos") / col("w")).cast("int").as("r"),
-        pmod(col("pos"), col("w")).cast("int").as("c"))
-
-  /** O12 at scale, intended-bounds form. */
-  def borderFilterDF(cands: DataFrame, masks: DataFrame, batch: Int): DataFrame = {
-    val half = batch / 2
-    cands.join(masks.select("mask_id", "h", "w"), Seq("mask_id"))
-      .where(col("r") >= half && col("r") + half <= col("h") &&
-        col("c") >= half && col("c") + half <= col("w"))
-      .select(cands.columns.map(col).toIndexedSeq: _*)
-  }
-
-  /** O13 at scale, intended-denominator form: the tile-quality metrics over
-    * HR/LR pixel-array columns — (hr_nz, lr_nz, lr_nodata, hr_inf) counts.
-    * Higher-order functions are fine here: the arrays are tile-sized (b²·n
-    * elements) and the counts collapse each array to four ints. */
-  def qualityCounts(hr: org.apache.spark.sql.Column, lr: org.apache.spark.sql.Column)
-      : Seq[org.apache.spark.sql.Column] = Seq(
-    size(filter(hr, v => v =!= 0.0)).as("hr_nz"),
-    size(filter(lr, v => v =!= 0.0)).as("lr_nz"),
-    size(filter(lr, v => v === -9999.0)).as("lr_nodata"),
-    size(filter(hr, v =>
-      v === Double.PositiveInfinity || v === Double.NegativeInfinity)).as("hr_inf"))
-
-  /** O13 acceptance predicate over the [[qualityCounts]] columns
-    * (fct_data_extraction.py:129–134, intended denominators): ≥99% non-zero
-    * in both crops, ≤1% nodata in LR, ≤1% inf in HR. */
-  def qualityOkDF(hrNz: org.apache.spark.sql.Column, lrNz: org.apache.spark.sql.Column,
-                  lrNodata: org.apache.spark.sql.Column, hrInf: org.apache.spark.sql.Column,
-                  hrN: Int, lrN: Int): org.apache.spark.sql.Column =
-    (hrNz * 100.0 / hrN >= 99) && (lrNz * 100.0 / lrN >= 99) &&
-      (lrNodata * 100.0 / lrN <= 1) && (hrInf * 100.0 / hrN <= 1)
-
-  /** Scalable overlap suppression: first candidate (row-major) per
-    * stride-grid cell, as a pure window function — the 100 TB path for O26
-    * when faithful sequential semantics aren't required. */
-  def gridSnapDF(cands: DataFrame, stride: Int): DataFrame = {
-    val w = Window
-      .partitionBy(col("mask_id"), (col("r") / stride).cast("int"), (col("c") / stride).cast("int"))
-      .orderBy(col("r"), col("c"))
-    cands.withColumn("_rn", row_number().over(w))
-      .where(col("_rn") === 1)
-      .drop("_rn")
   }
 
   /** Assemble PairRows from relational inputs: a pair table

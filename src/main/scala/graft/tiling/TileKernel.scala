@@ -53,12 +53,16 @@ object TileKernel {
           cand.rs(i) > half && cand.cs(i) > half && cand.rs(i) < upperR && cand.cs(i) < upperC
         }
       } else {
-        cand.rs.indices.filter { i =>
-          cand.rs(i) >= half && cand.rs(i) + half <= h &&
-            cand.cs(i) >= half && cand.cs(i) + half <= w
-        }
+        cand.rs.indices.filter(i => cropInBounds(cand.rs(i), cand.cs(i), batch, h, w))
       }
     Candidates(keep.map(cand.rs).toArray, keep.map(cand.cs).toArray)
+  }
+
+  /** O12's intended bounds for one candidate: the `batch`-edge crop
+    * `[r-half, r+half) × [c-half, c+half)` lies inside `h × w`. */
+  def cropInBounds(r: Int, c: Int, batch: Int, h: Int, w: Int): Boolean = {
+    val half = batch / 2
+    r >= half && r + half <= h && c >= half && c + half <= w
   }
 
   /** Slice a band-major image: rows [r1, r2), cols [c1, c2) of every band.
@@ -102,6 +106,20 @@ object TileKernel {
   def qualityOk(hr: Array[Float], lr: Array[Float], nBands: Int,
                 hrH: Int, hrW: Int, lrH: Int, lrW: Int,
                 faithfulInfDenom: Boolean): Boolean = {
+    val n = qualityCounts(hr, lr)
+    val hrDen = hrH.toDouble * hrW * nBands
+    val lrDen = lrH.toDouble * lrW * nBands
+    val infDen = if (faithfulInfDenom) lrH.toDouble * hrW * nBands else hrDen
+    nonZeroOk(n.hrNz, hrDen) && nonZeroOk(n.lrNz, lrDen) &&
+      rareOk(n.lrNodata, lrDen) && rareOk(n.hrInf, infDen)
+  }
+
+  /** The four cell counts O13 thresholds. */
+  final case class QualityCounts(hrNz: Int, hrInf: Int, lrNz: Int, lrNodata: Int)
+
+  /** O13's counts over a materialized HR/LR crop pair: non-zero and ±inf
+    * cells of `hr`, non-zero and `-9999` cells of `lr`. */
+  def qualityCounts(hr: Array[Float], lr: Array[Float]): QualityCounts = {
     var nzHr = 0; var infHr = 0
     var i = 0
     while (i < hr.length) {
@@ -118,11 +136,7 @@ object TileKernel {
       if (v == -9999.0f) nineLr += 1
       i += 1
     }
-    val hrDen = hrH.toDouble * hrW * nBands
-    val lrDen = lrH.toDouble * lrW * nBands
-    val infDen = if (faithfulInfDenom) lrH.toDouble * hrW * nBands else hrDen
-    nonZeroOk(nzHr, hrDen) && nonZeroOk(nzLr, lrDen) &&
-      rareOk(nineLr, lrDen) && rareOk(infHr, infDen)
+    QualityCounts(nzHr, infHr, nzLr, nineLr)
   }
 
   /** O13's non-zero threshold: at least 99% of `den`. */
@@ -230,8 +244,8 @@ object TileKernel {
       s"${cand.rs.length} candidate centers exceed MaxSequentialCandidates " +
         s"($MaxSequentialCandidates): the faithful sequential suppression is " +
         "quadratic and order-dependent, so it cannot scale to masks this " +
-        "dense - use OverlapMode.GridSnap (TileJobs.gridSnapDF), the " +
-        "order-independent stride-grid mode, for this input")
+        "dense - use OverlapMode.GridSnap, the order-independent " +
+        "stride-grid mode, for this input")
 
   /** O26 — the reference's overlap suppression (fct_data_extraction.py:75–88
     * + trigger at :143–147). NOTE the faithful semantics: the removal
@@ -386,8 +400,8 @@ object TileKernel {
 
   /** Scalable overlap mode (documented divergence from O26): snap candidates
     * to a `stride × stride` grid and keep the first (row-major) candidate
-    * per cell. Order-independent → runs as a pure window function at any
-    * scale; see TileJobs.gridSnapDF. */
+    * per cell. Order-independent, so it needs no sequential scan; the
+    * pipeline runs it per pair in `TileJobs.tilePairs`' GridSnap mode. */
   def gridSnap(cand: Candidates, stride: Int): Candidates = {
     val seen = scala.collection.mutable.HashSet.empty[(Int, Int)]
     val keep = cand.rs.indices.filter { i =>

@@ -20,9 +20,12 @@ import graft.{Bench, GraftSession, SparkEntry}
   *    prints the construct and planning µs. No job runs, so this separates
   *    "the plan is expensive to make" from "the plan is expensive to run".
   *  - `show`: prints up to n rows (default 50) of each result.
-  *  - `run`: times each query the way Bench does. One untimed warm count,
-  *    one cache clear (the bench enters a query's reps with an empty
-  *    cache), then n reps (default 3) of `Bench.materialize(fn(...))`:
+  *  - `run`: times each query the way Bench does. One untimed
+  *    `Bench.materialize` of every named query first (plus a count for
+  *    the `rows=` figure), one cache clear (the bench enters the reps with
+  *    an empty cache), then n rounds (default 3) that each time one rep of
+  *    every query in turn (q1 r1, q2 r1, q1 r2, …), so no query alone
+  *    carries the JVM's warm-up. A rep is `Bench.materialize(fn(...))`:
   *    the query is rebuilt per rep and every output column is hashed. A
   *    bare count() would prune columns and drop the final sort, so it
   *    would time a cheaper plan than the bench does.
@@ -97,18 +100,20 @@ object Probe {
       spark.catalog.clearCache()
     }
 
-  private def run(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int): Unit =
-    for (name <- names) {
+  private def run(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int): Unit = {
+    val rows = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val n = fn(spark, sfDir).count()
-      spark.catalog.clearCache()
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        Bench.materialize(fn(spark, sfDir))
-        println(f"query=$name run=$r rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      }
-      spark.catalog.clearCache()
+      Bench.materialize(fn(spark, sfDir))
+      fn(spark, sfDir).count()
     }
+    spark.catalog.clearCache()
+    for (r <- 1 to reps; (name, n) <- names.zip(rows)) {
+      val t0 = System.nanoTime()
+      Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
+      println(f"query=$name run=$r rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+    }
+    spark.catalog.clearCache()
+  }
 
   private def index(): Unit = {
     val (os, rowsOnly) = SparkEntry.registry.partition(_.oracle.isDefined)

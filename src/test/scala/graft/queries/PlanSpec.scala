@@ -67,6 +67,12 @@ class PlanSpec extends SparkSpec {
     assert(exchanges.forall(_.contains("SinglePartition")), exchanges.toString)
   }
 
+  test("q63 runs the kernel's gridSnap in a flatMap: no Window, one Exchange (the final sort)") {
+    val p = plan("q63_gridsnap_df")
+    assert(!p.contains("Window"), p)
+    assert("Exchange \\w+".r.findAllIn(p).toList == List("Exchange rangepartitioning"), p)
+  }
+
   test("similarity joins key on LSH buckets — never a cartesian/global self-join") {
     // (q28 reuses q21's edge pipeline but materializes through checkpoints,
     // so its final plan is a checkpoint scan — the join shape is guarded

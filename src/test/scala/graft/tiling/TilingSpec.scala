@@ -159,23 +159,12 @@ class TilingSpec extends SparkSpec {
     assert(tiles.isEmpty)
   }
 
-  test("candidatesDF == kernel candidateCenters (order and content)") {
-    val mk = masks.where($"mask_id" === "mask_rand").collect()(0)
-    val kern = TileKernel.candidateCenters(
-      mk.getSeq[Float](mk.fieldIndex("pixels")).toArray, 30, 30)
-    val df = TileJobs.candidatesDF(masks.where($"mask_id" === "mask_rand"))
-      .orderBy("r", "c").collect().map(r => (r.getInt(1), r.getInt(2)))
-    assert(df.toSeq == kern.rs.zip(kern.cs).toSeq)
-  }
-
-  test("gridSnapDF == kernel gridSnap") {
-    val mk = masks.where($"mask_id" === "mask_rand").collect()(0)
-    val kern = TileKernel.gridSnap(
-      TileKernel.candidateCenters(mk.getSeq[Float](mk.fieldIndex("pixels")).toArray, 30, 30), 4)
-    val df = TileJobs.gridSnapDF(
-        TileJobs.candidatesDF(masks.where($"mask_id" === "mask_rand")), 4)
-      .orderBy("r", "c").collect().map(r => (r.getInt(1), r.getInt(2))).toSeq
-    assert(df.sorted == kern.rs.zip(kern.cs).toSeq.sorted)
+  test("quality counts: non-zero and inf cells of HR, non-zero and -9999 cells of LR") {
+    // -0.0 is a zero; -9999 in HR and inf in LR are plain non-zero cells
+    val hr = Array(0f, -0f, 1f, Float.PositiveInfinity, Float.NegativeInfinity, 2f, -9999f, 3f)
+    val lr = Array(-9999f, 0f, 5f, -9999f, Float.PositiveInfinity, 0f)
+    assert(TileKernel.qualityCounts(hr, lr) ==
+      TileKernel.QualityCounts(hrNz = 6, hrInf = 2, lrNz = 4, lrNodata = 2))
   }
 
   test("quality thresholds trip independently") {
