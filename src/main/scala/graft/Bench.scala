@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): times every registered query at the
   * given scale-factor dir and prints ONE JSON line. A generic warmup action
@@ -14,9 +15,20 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
   * computed, hashed and aggregated (xor: overflow-free under ANSI mode),
   * while the shuffle back to the driver stays one row.
   *
-  * Each query runs SPARK_GRAFT_BENCH_REPS times (default 3) and reports the
-  * per-query MEDIAN — single runs on this host vary ±20–30% (BASELINE.md),
-  * so a one-shot total can't distinguish a real 1.3× regression from noise.
+  * Every rep runs through [[Runner]]: its seconds are the row's construct
+  * plus its `materialize`, and it starts from an empty cache. Each query
+  * runs SPARK_GRAFT_BENCH_REPS times (default 3) and reports the per-query
+  * MEDIAN — single runs on this host vary ±20–30% (BASELINE.md), so a
+  * one-shot total can't distinguish a real 1.3× regression from noise. A
+  * streaming replay runs once. When this run's successful reps of a query
+  * spread by more than 3×, two more reps are taken and the median is of
+  * all of them. A query whose reps all failed reports -1.
+  *
+  * The reported numbers come only from this run's reps: Bench reads no
+  * file from its working directory (no earlier run's artifact or summary),
+  * and runs no control query or I/O probe. So `value_normalized`, which
+  * once divided the total by control and history ratios, is retired: it
+  * is kept in both JSON lines for their readers and always equals `value`.
   */
 object Bench {
 
@@ -33,131 +45,32 @@ object Bench {
     if (g.isEmpty) -1.0 else g(g.length / 2)
   }
 
-  /** The reported value for one query's reps, closing the 3×–10× ambient
-    * blind spot (judge r13 Next #3: q191's 15.2 s reading sat under the
-    * 10× poisoned-history cap, and with 3 of 5 reps inside one slow window
-    * the post-guard MEDIAN was still the spike). When the median is >3×
-    * the query's corroborated history AND the run's control queries
-    * measured calm (≤1.3× their own history — so the host, not the code,
-    * is the only suspect), the POST-GUARD reps adjudicate: if their own
-    * median corroborates the run's fastest rep (≤1.5×), report that
-    * post-guard MEDIAN — a corroborated re-measurement outside the spike
-    * window, NOT the single luckiest rep (advisor r14 #1: raw-min
-    * reporting hid intermittent regressions — a change slow on 3 of 5
-    * reps reported the lucky fast one — and min-merged history ratcheted
-    * downward). An intermittent real regression puts slow readings into
-    * the post-guard reps too, so their median stays slow and the overall
-    * median stands; a genuine uniform 3× regression corroborates a
-    * 3×-slow minimum, so nothing real is hidden either way. On a
-    * non-calm run (controls inflated too) the median always stands. */
-  def adjudicate(times: Seq[Double], postGuard: Seq[Double], hist: Option[Double],
-                 controlsCalm: Boolean): Double = {
-    val m = med(times)
+  /** The timed reps of one registry row, each through [[Runner]] (-1 for
+    * a failed rep): `reps` of them, one for a streaming replay (its
+    * MemoryStream run is deterministic), plus two more when the
+    * successful reps spread by more than 3×. */
+  def timeRow(spark: SparkSession, sfDir: String, e: Entry, reps: Int): Seq[Double] = {
+    def rep(): Double = {
+      val o = Runner.run(spark, sfDir, e)(materialize)
+      o.result.fold({ err =>
+        System.err.println(s"[bench] ${e.name} FAILED: ${err.getMessage}")
+        -1.0 // a failed query reports -1, never a plausible-looking elapsed time
+      }, _ => o.constructS + o.actS)
+    }
+    val times = (1 to (if (e.replay) 1 else reps)).map(_ => rep())
+    // SPREAD GUARD: one GC pause / host-load spike inside a 3-rep window
+    // can put an outlier on either side of the median (r7's artifact of
+    // record had q11 at 7.46 s vs sub-1 s siblings). If the successful
+    // reps spread more than 3×, take two extra reps and use the median
+    // of all five — a single spike then can't be the reported number.
     val good = times.filter(_ >= 0.0)
-    val ambient =
-      controlsCalm && good.nonEmpty && hist.exists(h => h >= 0.05 && m > 3.0 * h)
-    if (!ambient) m
-    else {
-      val post = postGuard.filter(_ >= 0.0)
-      val corroborated = post.length >= 2 && med(post) <= 1.5 * good.min
-      if (corroborated) med(post) else m
-    }
+    if (good.length >= 2 && good.max / good.min.max(1e-9) > 3.0) {
+      System.err.println(
+        f"[bench] ${e.name} reps spread ${good.max / good.min}%.1fx (>3x): running 2 extra reps")
+      times ++ (1 to 2).map(_ => rep())
+    } else times
   }
 
-  /** Ambient inflation of ONE measurement window, from the controls'
-    * measured median ÷ history ratios (geometric mean, floored at 1.0 — a
-    * FASTER-than-history control never deflates the total). Feeds the
-    * artifact's `value_normalized` field (judge r14 Next #6) so
-    * cross-round comparison of hot-window runs stops needing manual
-    * adjudication. */
-  def inflation(ratios: Seq[Double]): Double = {
-    val g = ratios.filter(r => r > 0.0 && !r.isNaN && !r.isInfinite)
-    if (g.isEmpty) 1.0
-    else math.max(1.0, math.exp(g.map(math.log).sum / g.length))
-  }
-
-  /** The I/O control's inflation for one segment: measured io-probe
-    * seconds ÷ the quiet-baseline history (judge r16 Next #1 — run 5's
-    * blind spot: the CPU controls read calm while /tmp ran hot and every
-    * state-store row measured 2–6×; the probe existed but was
-    * diagnostic-only, with no history to normalize by). Floored at 1.0;
-    * 1.0 when either side is missing/garbage (an unknown window is
-    * never "normalized" by guesswork — the first-round rule). */
-  def ioInflation(segIo: Double, ioHist: Option[Double]): Double =
-    ioHist match {
-      case Some(h) if h >= 0.005 && segIo > 0.0 => math.max(1.0, segIo / h)
-      case _ => 1.0
-    }
-
-  /** Quiet I/O baseline from all collected same-SF probe readings: the
-    * MIN of the entries that are not fast OUTLIERS — an entry below 1/3
-    * of the collection's median is discarded (review r17 #1: the
-    * probe's symmetric poisoned-history mode — one page-cache-lucky
-    * ~5 ms probe would min-ratchet the baseline forever, the io_hist
-    * carry-forward would make it permanent, and every future
-    * ioInflation would read ~10× hot, clamp-masking real replay
-    * regressions to their histories; the query history's 10×-median
-    * cap guards the slow side, this guards the fast one). The 0.005 s
-    * floor drops zero/garbage readings outright. */
-  def ioBaseline(readings: Seq[Double]): Option[Double] = {
-    val good = readings.filter(_ >= 0.005).sorted
-    if (good.isEmpty) None
-    else {
-      val med = good(good.length / 2)
-      good.find(_ >= med / 3.0) // sorted: the first survivor IS the min
-    }
-  }
-
-  /** One row's normalized value (judge r16 Next #1 — class-based
-    * controls). CPU-bound rows divide by their segment's CPU-control
-    * inflation (the r15 segment model, unchanged). STATE-STORE-bound
-    * rows (the streaming replay-harness set, `isReplay`) divide by the
-    * LARGER of the segment's CPU and IO inflations — whichever ambient
-    * mode is hot dominates their cost — and the correction is then
-    * CLAMPED to [min(v, hist), v]: the io probe is a coarse control
-    * (raw write+fsync+read throughput, not state-store cost), so a
-    * corrected state-store row must never report below what quiet
-    * rounds say it costs (its own min-merged history), and never above
-    * the raw measurement. A real regression on a quiet-io run keeps its
-    * raw value (divisor 1); a real regression inside a hot-io window is
-    * clamped down THIS round but its raw per-query value (always
-    * reported alongside) exposes it, and the next quiet round's
-    * normalized value re-raises it.
-    *
-    * The history clamp applies to BOTH classes (round 17, run 7's
-    * lesson — the symmetric over-correction blind spot): a control
-    * pair is ~30 s of measurement, so an ambient window that lands ON
-    * THE CONTROLS (run 7: segment controls read 3.49× while the worst
-    * per-query tail was 2.6×) deflates a whole 50-query segment of
-    * CALM rows to a fraction of their true cost. Clamping each row's
-    * corrected value to no less than its own min-merged quiet history
-    * bounds the damage in both directions: hot queries + calm controls
-    * → raw (divisor 1); calm queries + hot controls → history, not
-    * raw/3.5. A genuine improvement below history over-reports for one
-    * round and re-lowers when the next quiet run min-merges history
-    * down. */
-  def normalizeRow(v: Double, isReplay: Boolean, cpuInfl: Double,
-      ioInfl: Double, hist: Option[Double]): Double = {
-    val n =
-      if (!isReplay) v / math.max(1.0, cpuInfl)
-      else v / math.max(1.0, math.max(cpuInfl, ioInfl))
-    hist.filter(_ >= 0.05).map(h => math.min(v, math.max(n, h))).getOrElse(n)
-  }
-
-  /** Segment-normalized total (judge r15 Next #1; class-based controls
-    * judge r16 Next #1): each query's value normalizes by ITS segment's
-    * control of ITS class ([[normalizeRow]]) — the structural fix for
-    * the start-anchored window model (BENCH_r15.json carried ~100 s of
-    * mid-run CPU window that calm START controls certified), extended
-    * to the I/O mode (BENCH_r16.json carried ~60–90 s of hot-/tmp
-    * window that calm CPU controls certified). `rows` carries each
-    * query's (reported seconds, segment index, is-state-store-bound,
-    * quiet history); failed queries (-1) contribute nothing. */
-  def normalizedTotal(rows: Seq[(Double, Int, Boolean, Option[Double])],
-      cpuInfl: Int => Double, ioInfl: Int => Double): Double =
-    rows.filter(_._1 >= 0.0)
-      .map { case (v, s, r, h) => normalizeRow(v, r, cpuInfl(s), ioInfl(s), h) }
-      .sum
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
@@ -166,7 +79,7 @@ object Bench {
     // codecs) on the 5-row region table so one-time init isn't charged to
     // whichever query happens to scan parquet first — data stays cold
     try SparkEntry.table(spark, sfDir, "region").count()
-    catch { case _: Exception => () }
+    catch { case NonFatal(_) => () }
     // ONE UNTIMED PASS over every query before timing: a fresh JVM's first
     // ~30-60 s of executions run up to 15× slow (interpreter → C2 ramp over
     // Spark's own hot paths + first-touch codegen/encoders), and with
@@ -184,308 +97,16 @@ object Bench {
       require(unknown.isEmpty, // "all-fast" artifact
         s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(",")}")
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (_, fn) =>
-      try materialize(fn(spark, sfDir)) catch { case _: Exception => () }
-    }
-    // the warm pass registered every persisting query's cached frames —
-    // release them so the timed section starts from a bounded cache (each
-    // query's own first timed rep rebuilds what it needs; reps 2+ reuse it)
-    spark.catalog.clearCache()
+    val selected = SparkEntry.registry.sortBy(_.name).filter(e => only.forall(_.contains(e.name)))
+    selected.foreach(e => Runner.run(spark, sfDir, e)(materialize))
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // The streaming MemoryStream replays are DETERMINISTIC end-to-end
-    // (seeded feeds, conservation-validated sink snapshots), so the median
-    // of three identical replays buys nothing while each rep pays the full
-    // state-store I/O on cold /tmp — the r8 artifact spent ~20-40 s of its
-    // overshoot exactly there (judge r8, Next #2). One timed rep each; the
-    // history guard below still re-measures on an outlier.
-    val replayQueries = SparkEntry.registry.filter(_.replay).map(_.name).toSet
-    // Per-query history: the newest BENCH_r*.json in the working directory
-    // (the driver runs from the repo root, where it also writes them).
-    // The r8 artifact carried 16-39x ambient outliers on individually tiny
-    // plans; the IN-RUN spread guard cannot see those when every rep lands
-    // in the same slow window, so each query's median is also compared
-    // against its own previous-round number and re-measured on >3x.
-    val (history: Map[String, Double], ioHist: Option[Double]) = {
-      val sfName = new java.io.File(sfDir).getName
-      // parse (sf tag, per-query map) — files recording a DIFFERENT scale
-      // factor are excluded outright (advisor r12 #2: a full-registry run
-      // at a smaller SF would min-merge tiny timings into a larger-SF
-      // run's history and trip the >3x guard on every query); files
-      // without an sf tag merge as before (pre-tag artifacts).
-      // the driver's BENCH_r*.json embeds our stdout line as an ESCAPED
-      // JSON string (\" for every quote) — unescape before regexing, or
-      // the artifact side parses to nothing (r14 finding: every quote-
-      // anchored pattern silently missed, so corroboration never fired
-      // and artifact history was always empty)
-      def readUnescaped(f: java.io.File): String =
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          .replace("\\\"", "\"")
-      def parseQ(f: java.io.File): Map[String, Double] =
-        if (!f.exists()) Map.empty
-        else {
-          val txt = readUnescaped(f)
-          val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(m => new java.io.File(m.group(1)).getName)
-          if (sf.exists(_ != sfName)) Map.empty
-          else "\"(q[0-9]+[a-z0-9_]*)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      val artifact = files.sortBy(_.getName.replaceAll("\\D+", "").toInt)
-        .lastOption.map(parseQ).getOrElse(Map.empty)
-      // I/O-probe quiet baseline (judge r16 Next #1): the MIN positive
-      // segment_io_secs entry across every same-SF artifact + the
-      // summary — io spikes only ever inflate, so the cheapest recorded
-      // probe is the trustworthy quiet cost (the min-merge discipline
-      // the query history already uses)
-      // each file contributes its raw probe readings AND the io_hist it
-      // carried (review r17 #2: io_hist is the min-merged baseline of
-      // every artifact the WRITING run could see — without harvesting
-      // it back, rotating old BENCH_r*.json files away would quietly
-      // raise the baseline to the surviving files' min and under-correct
-      // every hot window)
-      def parseIo(f: java.io.File): Seq[Double] =
-        if (!f.exists()) Nil
-        else {
-          val txt = readUnescaped(f)
-          val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(m => new java.io.File(m.group(1)).getName)
-          if (sf.exists(_ != sfName)) Nil
-          else {
-            val segs = "\"segment_io_secs\":\\[([^\\]]*)\\]".r
-              .findFirstMatchIn(txt)
-              .map(_.group(1).split(",").toSeq
-                .flatMap(s => scala.util.Try(s.trim.toDouble).toOption))
-              .getOrElse(Nil)
-            val carried = "\"io_hist\":([0-9.]+)".r.findFirstMatchIn(txt)
-              .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
-            (segs ++ carried).filter(_ > 0.0)
-          }
-        }
-      // Merge with the previous run's own BENCH_SUMMARY.json (committed
-      // quiet-window runs land here), taking the MIN per query: ambient
-      // spikes only ever INFLATE a measurement, so the cheapest recent
-      // number is the trustworthy "previous cost" for a too-slow guard.
-      val summaryFile = new java.io.File("BENCH_SUMMARY.json")
-      val summary = parseQ(summaryFile)
-      // run-id of each file (stamped into the detail line since r14):
-      // the robust same-run signal for the corroboration exemption below
-      def runIdOf(f: java.io.File): Option[String] =
-        if (!f.exists()) None
-        else "\"run_id\":\"([^\"]+)\"".r.findFirstMatchIn(readUnescaped(f))
-          .map(_.group(1))
-      val artifactRunId = files.sortBy(_.getName.replaceAll("\\D+", "").toInt)
-        .lastOption.flatMap(runIdOf)
-      val summaryRunId = runIdOf(summaryFile)
-      // drop failed-run markers (-1) so they can't mask a real measurement
-      val raw = (artifact.keySet ++ summary.keySet).flatMap { k =>
-        val vs = (artifact.get(k).toSeq ++ summary.get(k).toSeq).filter(_ >= 0.0)
-        if (vs.isEmpty) None else Some(k -> vs.min)
-      }.toMap
-      // POISONED-HISTORY CAP (judge r11, What's wrong #1): a query whose
-      // recorded value was itself an ambient spike (q182: 11.1 s artifact
-      // vs 2.65 s isolated) would otherwise raise its own guard tolerance
-      // to 3× the spike. Cap every history entry at 10× the artifact's own
-      // median s/q — an entry can't be trusted to be >10× more expensive
-      // than the run it came from says a typical query costs.
-      // CORROBORATED entries are exempt (advisor r12 #1): when the
-      // artifact and the summary agree within 2×, two independent runs
-      // measured the same magnitude — a genuinely heavy query must not be
-      // permanently capped to the registry median (and then re-measured
-      // with a misleading warning every round forever). SAME-RUN files
-      // are NOT corroboration: the driver writes BENCH_SUMMARY.json from
-      // the same run that becomes the newest artifact, and one run can't
-      // corroborate itself. Detection is by the run_id stamped into both
-      // files (advisor r13 #3: exact map equality broke on any formatting
-      // or field difference between the two files, letting one run
-      // self-corroborate); pre-r14 files without a run_id fall back to
-      // map equality.
-      val sameRun =
-        if (artifactRunId.isDefined && summaryRunId.isDefined)
-          artifactRunId == summaryRunId
-        else artifact.nonEmpty && artifact == summary
-      val corroborated =
-        if (sameRun) Set.empty[String]
-        else (artifact.keySet & summary.keySet).filter { k =>
-          val (a, b) = (artifact(k), summary(k))
-          a >= 0.0 && b >= 0.0 && math.max(a, b) <= 2.0 * math.min(a, b)
-        }
-      val good = raw.values.filter(_ >= 0.0).toSeq.sorted
-      val hist =
-        if (good.isEmpty) raw
-        else {
-          val cap = 10.0 * good(good.length / 2)
-          raw.map { case (k, v) =>
-            k -> (if (corroborated(k)) v else math.min(v, cap))
-          }
-        }
-      val ioBase = ioBaseline((files.toSeq :+ summaryFile).flatMap(parseIo))
-      (hist, ioBase)
-    }
-    // CONTROL CALIBRATION, INTERLEAVED (judge r13 Next #3; segment model
-    // judge r15 Next #1): two small, code-stable queries measured against
-    // their own history — no longer once up front, but BEFORE EVERY
-    // SegmentSize-query segment of the registry. The r15 artifact showed
-    // the start-anchored blind spot: calm start controls certified
-    // `inflation 1.0` for a run whose middle and tail sat in a ~100 s hot
-    // window, so `value_normalized` corrected nothing and per-query
-    // adjudication (which needs post-guard corroboration) caught only 4
-    // of ~30 spiked rows. Per-segment controls bound the blind spot to
-    // one segment: each query's calm flag and inflation come from the
-    // control pair measured at ITS segment's start, the artifact carries
-    // per-segment inflations + per-query wall-clock offsets, and
-    // `value_normalized` is the segment-weighted sum ([[normalizedTotal]]).
-    // A calm segment (both controls ≤ 1.3× history) certifies that
-    // segment's windows enough that a >3× outlier inside it is the HOST's
-    // fault, unlocking adjudication in [[adjudicate]]. Without history
-    // (first round, foreign SF) a segment is conservatively non-calm and
-    // its inflation 1.0 (an unknown window is reported raw, never
-    // "normalized" by guesswork). Cost: ~2 s of control reps per segment
-    // (≈10 s per full run) — cheap against the ~100 s adjudication burden
-    // it retires.
-    val SegmentSize = 50
-    // per-control measured-median / history ratio; None when the control
-    // has no usable history or ANY of its reps failed — a fast FAILURE
-    // must not certify a calm window (advisor r14 #2: the old path timed
-    // the failed attempt, and a missing-fixture error measured "calm")
-    def controlPass(): Seq[Option[Double]] = {
-      val controls = Seq("q30_token_stats", "q45_salted_agg")
-      val rs = controls.map { cn =>
-        (SparkEntry.queries.get(cn), history.get(cn.takeWhile(_ != '_'))) match {
-          case (Some(fn), Some(h)) if h >= 0.05 =>
-            val ts = (1 to 3).map { _ =>
-              val t0 = System.nanoTime()
-              val ok =
-                try { materialize(fn(spark, sfDir)); true }
-                catch { case e: Exception =>
-                  System.err.println(s"[bench] control $cn FAILED: ${e.getMessage}")
-                  false
-                }
-              if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-            }
-            if (ts.forall(_ >= 0.0)) Some(med(ts) / h) else None
-          case _ => None
-        }
-      }
-      spark.catalog.clearCache()
-      rs
-    }
-    // I/O PROBE (round-16 run 5's finding): the q30/q45 controls are
-    // CPU-narrow scans, and a window where /tmp (the streaming replays'
-    // state-store home) runs hot reads "calm" on them while every
-    // state-store row runs 2–6×. Each segment therefore also times one
-    // deterministic 16 MiB tmp-file write+fsync+read+delete; the per-
-    // segment seconds ship in the artifact as `segment_io_secs`, AND —
-    // round 17, judge r16 Next #1 — the probe now has HISTORY (ioHist:
-    // min-merged across same-SF artifacts), so the state-store class's
-    // rows normalize by it in value_normalized ([[normalizeRow]]).
-    def ioProbe(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val f = java.io.File.createTempFile("graft_bench_io", ".bin")
-        try {
-          val buf = new Array[Byte](1 << 20)
-          java.util.Arrays.fill(buf, 0x5a.toByte)
-          val out = new java.io.FileOutputStream(f)
-          try { var i = 0; while (i < 16) { out.write(buf); i += 1 }
-            out.getFD.sync() } finally out.close()
-          val in = new java.io.FileInputStream(f)
-          try { while (in.read(buf) > 0) () } finally in.close()
-        } finally f.delete()
-      } catch { case _: Exception => return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val segInflations = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val segIoSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // name -> (rejected median, reported value) for every ambient-
-    // adjudicated query this run — emitted into the artifact
-    val adjudicated = scala.collection.mutable.Map.empty[String, (Double, Double)]
-    // name -> seconds since the timed section started (wall-clock stamp:
-    // judge r15 Next #1 — hot windows identifiable post-hoc)
-    val tsOffsets = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // (name, seconds since the timed section started, reported value): the
+    // wall-clock stamp places a hot window on the host after the fact
     val runT0Ms = System.currentTimeMillis()
-    val results = selected.grouped(SegmentSize).toSeq.zipWithIndex.flatMap {
-      case (segment, segIdx) =>
-      val ratios = controlPass()
-      val segCalm = ratios.forall(_.exists(_ <= 1.3))
-      val segInfl = if (ratios.exists(_.isEmpty)) 1.0 else inflation(ratios.flatten)
-      segInflations += segInfl
-      val io = ioProbe()
-      segIoSecs += io
-      System.err.println(f"[bench] segment $segIdx controls calm: $segCalm " +
-        f"(inflation ${segInfl}%.2fx, io ${io}%.3f s)")
-      segment.map { case (name, fn) =>
-      tsOffsets(name) = (System.currentTimeMillis() - runT0Ms) / 1000.0
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(fn(spark, sfDir)); true }
-          catch { case e: Exception =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-          }
-        // a failed query reports -1, never a plausible-looking elapsed time
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      // NO-HISTORY queries get 5 reps unconditionally (judge r11, What's
-      // wrong #1): the history guard below can't see a first-round ambient
-      // spike, and the in-run spread guard can't fire when all three reps
-      // land in the same slow window — five reps make a single spike
-      // window unable to own the median.
-      val hasHistory = history.contains(name.takeWhile(_ != '_'))
-      val qReps =
-        if (replayQueries(name)) 1
-        else if (!hasHistory) reps.max(5)
-        else reps
-      var times = (1 to qReps).map(_ => rep())
-      // SPREAD GUARD: one GC pause / host-load spike inside a 3-rep window
-      // can put an outlier on either side of the median (r7's artifact of
-      // record had q11 at 7.46 s vs sub-1 s siblings). If the successful
-      // reps spread more than 3×, take two extra reps and use the median
-      // of all five — a single spike then can't be the reported number.
-      val firstGood = times.filter(_ >= 0.0)
-      if (firstGood.length >= 2 && firstGood.max / firstGood.min.max(1e-9) > 3.0) {
-        System.err.println(
-          f"[bench] $name reps spread ${firstGood.max / firstGood.min}%.1fx " +
-            "(>3x): running 2 extra reps")
-        times = times ++ (1 to 2).map(_ => rep())
-      }
-      // HISTORY GUARD: >3x the query's own previous-round artifact median
-      // (short-key lookup) → re-measure with 2 extra reps. The 0.05 s floor
-      // keeps sub-tick noise from triggering it.
-      val hist = history.get(name.takeWhile(_ != '_'))
-      var postGuard = Seq.empty[Double]
-      hist.filter(h => h >= 0.05 && med(times) > 3.0 * h).foreach { h =>
-        System.err.println(
-          f"[bench] $name median ${med(times)}%.2f s is >3x its previous-round " +
-            f"$h%.2f s: running 2 extra reps")
-        postGuard = (1 to 2).map(_ => rep())
-        times = times ++ postGuard
-      }
-      // median of the successful reps (-1 only if every rep failed) —
-      // post-guard-corroborated re-measurement on a calm-control run whose
-      // median is still >3x history (the q191 ambient scenario; see
-      // adjudicate's scaladoc). Adjudicated entries are FLAGGED in the
-      // artifact (advisor r14 #1) so history consumers can tell a
-      // re-measured value from a raw median.
-      val adj = adjudicate(times, postGuard, hist, segCalm)
-      if (adj != med(times)) {
-        System.err.println(
-          f"[bench] $name median ${med(times)}%.2f s >3x history on a " +
-            f"calm-control segment: ambient-adjudicated to post-guard median $adj%.2f s")
-        adjudicated += name -> ((med(times), adj))
-      }
-      val out = (name, adj, segIdx)
-      // release this query's persisted frames (q151/q165/q169/q176-style
-      // loop-invariant caches): unreleased they accumulate for the whole
-      // 170+-query session and force LRU churn on later memory-hungry rows
-      spark.catalog.clearCache()
-      out
-      }
+    val results = selected.map { e =>
+      (e.name, (System.currentTimeMillis() - runT0Ms) / 1000.0, med(timeRow(spark, sfDir, e, reps)))
     }
+    val replayQueries = selected.filter(_.replay).map(_.name).toSet
     // The driver records only a bounded TAIL of stdout: the r6 artifact lost
     // the line's head (metric/value) because 91 full query names at nanosecond
     // precision overflowed the window. Keep the whole line comfortably inside
@@ -499,71 +120,32 @@ object Bench {
       if (pref.values.toSeq.distinct.length == pref.size) pref
       else results.map { case (k, _, _) => k -> k }.toMap // collision: full names
     }
-    val qs = results.map { case (k, v, _) => "\"" + shortKey(k) + "\":" + ms(v) }
+    val qs = results.map { case (k, _, v) => "\"" + shortKey(k) + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    // totals EXCLUDE failed queries (-1) so value, value_normalized and
-    // control_inflation stay mutually consistent on a failure run
-    // (advisor r16 #1: summing the -1 markers let value_normalized
-    // exceed value); n_failed reports them loudly instead. The
-    // batch/replay split ships machine-readable (judge r16 Next #2) so
-    // the 2× contract reads per class: the replay class's cost is
+    // totals EXCLUDE failed queries (-1); n_failed reports them loudly
+    // instead. The batch/replay split ships machine-readable so the 2×
+    // contract reads per class: the replay class's cost is
     // MemoryStream-harness + state-store I/O, not operator cost.
-    val nFailed = results.count(_._2 < 0.0)
+    val nFailed = results.count(_._3 < 0.0)
     val batchTotal = results.collect {
-      case (k, v, _) if v >= 0.0 && !replayQueries(k) => v }.sum
+      case (k, _, v) if v >= 0.0 && !replayQueries(k) => v }.sum
     val replayTotal = results.collect {
-      case (k, v, _) if v >= 0.0 && replayQueries(k) => v }.sum
+      case (k, _, v) if v >= 0.0 && replayQueries(k) => v }.sum
     val total = batchTotal + replayTotal
     // Per-query detail line under a DISTINCT metric name (advisor r11 #4:
     // two stdout lines both tagged "total" let a metric==total consumer
     // match the wrong line or double-count). The judge's per-query
     // extraction regexes the "qNN":sec pairs regardless of the tag.
-    // run_id: stamps this run's identity into BOTH the stdout artifact and
-    // BENCH_SUMMARY.json, so the history corroboration check can tell "two
-    // independent runs agree" from "one run read twice" (advisor r13 #3)
-    val runId = java.util.UUID.randomUUID().toString.take(8) +
-      "-" + System.currentTimeMillis()
-    // value_normalized = each query divided by ITS segment's control of
-    // ITS class, summed ([[normalizedTotal]] — judge r15 Next #1 for the
-    // CPU mode, r16 Next #1 for the I/O mode): a run whose hot window
-    // hit only the middle segments carries a correction that actually
-    // corrects it, and a run whose /tmp ran hot under calm CPU controls
-    // (r16 run 5) corrects its state-store rows by the io probe's
-    // history-normalized ratio, clamped to each row's own quiet history.
-    // control_inflation = the EFFECTIVE run divisor (total ÷ normalized)
-    // for cross-round continuity; the per-segment factors ship
-    // alongside. Raw value stays the value of record.
-    val normTotal = normalizedTotal(
-      results.map { case (k, v, si) =>
-        (v, si, replayQueries(k), history.get(k.takeWhile(_ != '_'))) },
-      si => if (si >= 0 && si < segInflations.length) segInflations(si) else 1.0,
-      si => ioInflation(
-        if (si >= 0 && si < segIoSecs.length) segIoSecs(si) else -1.0, ioHist))
-    val runInflation = if (normTotal > 0.0) total / normTotal else 1.0
-    val normFields = s""","value_normalized":${ms(normTotal)},"control_inflation":${ms(runInflation)}"""
-    // adjudicated entries: {"qNN":[rejected_median, reported]} — flags
-    // every ambient-adjudicated value so history consumers can tell a
-    // post-guard re-measurement from a raw median (advisor r14 #1)
-    val adjField =
-      if (adjudicated.isEmpty) ""
-      else adjudicated.toSeq.sortBy(_._1).map { case (k, (m, v)) =>
-        "\"" + shortKey(k) + "\":[" + ms(m) + "," + ms(v) + "]"
-      }.mkString(""","adjudicated":{""", ",", "}")
-    // per-segment inflations + per-query wall-clock offsets (seconds since
-    // the timed section began; t0 is the absolute epoch anchor): the
-    // post-hoc hot-window forensics the r14/r15 judges had to reconstruct
-    // by hand. ts keys are "t_"-prefixed so the history parser's
-    // quote-anchored "qNN": regex can never read an offset as a timing.
-    val segField = segInflations.map(ms).mkString(""","segment_inflations":[""", ",", "]") +
-      segIoSecs.map(ms).mkString(""","segment_io_secs":[""", ",", "]") +
-      s""","io_hist":${ioHist.map(ms).getOrElse("null")}""" +
-      s""","batch_total":${ms(batchTotal)},"replay_total":${ms(replayTotal)}""" +
-      s""","n_failed":$nFailed""" +
-      s""","segment_size":$SegmentSize,"t0_epoch_ms":$runT0Ms"""
-    val tsField = tsOffsets.map { case (k, off) =>
+    // ts: per-query wall-clock offsets (seconds since the timed section
+    // began; t0_epoch_ms is the absolute anchor), so a hot window can be
+    // placed after the fact. Its keys are "t_"-prefixed so a reader of the
+    // quote-anchored "qNN": pairs never reads an offset as a timing.
+    val tsField = results.map { case (k, off, _) =>
       "\"t_" + shortKey(k) + "\":" + String.format(java.util.Locale.ROOT, "%.1f", Double.box(off))
     }.mkString(""","ts":{""", ",", "}")
-    val detail = s"""{"metric":"total_detail","value":${ms(total)}$normFields,"unit":"sec","run_id":"$runId"$segField$adjField,"queries":$qs$tsField,"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total_detail","value":${ms(total)},"value_normalized":${ms(total)},"unit":"sec",""" +
+      s""""batch_total":${ms(batchTotal)},"replay_total":${ms(replayTotal)},"n_failed":$nFailed,""" +
+      s""""t0_epoch_ms":$runT0Ms,"queries":$qs$tsField,"sf":"$sfDir"}"""
     println(detail)
     // The driver records only a bounded TAIL of stdout, and at 180+ queries
     // the per-query line above is ~3 KB — r10's artifact lost the line's
@@ -572,17 +154,17 @@ object Bench {
     // is, the last ~100 bytes are always inside it, so the driver's
     // single-line JSON parse finds a complete object with the total. This
     // is the ONE line tagged "total" (the driver contract's line).
-    println(s"""{"metric":"total","value":${ms(total)},"value_normalized":${ms(normTotal)},"unit":"sec","n":${results.length},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${ms(total)},"value_normalized":${ms(total)},"unit":"sec","n":${results.length},"sf":"$sfDir"}""")
     // Belt and braces (judge r11, Next #1): the full object as a FILE, so
     // the totals survive any stdout windowing/wrapping the harness applies.
-    // FULL-REGISTRY runs only: a builder-side SPARK_GRAFT_BENCH_ONLY
-    // iteration run must not clobber the committed full-run summary (which
-    // also feeds the next run's min-merged history).
+    // It is output only; no run reads it back. FULL-REGISTRY runs only: a
+    // SPARK_GRAFT_BENCH_ONLY subset run must not clobber the committed
+    // full-run summary.
     if (only.isEmpty) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_SUMMARY.json"),
         (detail + "\n").getBytes("UTF-8"))
-      catch { case e: Exception =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] BENCH_SUMMARY.json write failed: ${e.getMessage}")
       }
     }

@@ -18,11 +18,12 @@ object SparkEntry {
     * BOUNDED frames and does NOT unpersist them — unpersisting inside the
     * body would evict the cache before the caller's action materializes
     * the plan, which is the only moment the persist pays. Consumers that
-    * run MANY registry entries in one session (Bench, Verify) must call
-    * `spark.catalog.clearCache()` between queries, or cached frames
-    * accumulate across the registry and force LRU churn. A caller running
-    * a single query can ignore this (one query's persisted frames are
-    * bounded and die with the session). */
+    * run MANY registry entries in one session (Bench, Verify, Probe) run
+    * each one through [[Runner]], which calls `spark.catalog.clearCache()`
+    * after the row's action; otherwise cached frames accumulate across the
+    * registry and force LRU churn. A caller running a single query can
+    * ignore this (one query's persisted frames are bounded and die with
+    * the session). */
   lazy val registry: Seq[Entry] = modules.flatMap(_.entries)
 
   /** Name → build view of [[registry]]. */

@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
   * throws is recorded in failures.txt (`name<TAB>message` per line, empty
@@ -10,9 +9,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (builder-side iteration only; the driver passes 2):
     // comma-separated query names to dump/oracle, e.g. "q56_asof_join"
-    val Array(sfDir, outDir) = args.take(2)
+    if (args.length < 2) {
+      System.err.println("usage: Verify <sfDir> <outDir> [q1,q2,...|__oracle_only__]")
+      sys.exit(2)
+    }
     val spark = GraftSession.build("graft-verify")
-    run(spark, sfDir, outDir, args.lift(2))
+    run(spark, args(0), args(1), args.lift(2))
     spark.stop()
   }
 
@@ -30,20 +32,13 @@ object Verify {
     def keepOracle(name: String): Boolean = oracleOnly || keep(name)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.registry.filter(e => keep(e.name))
-    val failures = selected.flatMap { case Entry(name, build, _, _) =>
-      val failed =
-        try {
-          build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          None
-        } catch { case NonFatal(e) =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failures = selected.flatMap { e =>
+      Runner.run(spark, sfDir, e)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${e.name}"))
+        .result.left.toOption.map { err =>
+          System.err.println(s"[verify] ${e.name} failed: ${err.getMessage}")
           // one line per failure: the message's own newlines and tabs fold
-          Some(name -> String.valueOf(e.getMessage).replaceAll("\\s+", " "))
+          e.name -> String.valueOf(err.getMessage).replaceAll("\\s+", " ")
         }
-      // release the query's persisted frames — unreleased caches accumulate
-      // across the 170+-query dump and churn storage memory
-      spark.catalog.clearCache()
-      failed
     }
     Files.writeString(Paths.get(s"$outDir/failures.txt"),
       failures.map { case (n, m) => s"$n\t$m\n" }.mkString)

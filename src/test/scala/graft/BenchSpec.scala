@@ -1,196 +1,25 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Pins the bench guard's ambient adjudication (judge r13 Next #3, advisor
-  * r14 #1): the r13 artifact carried a 15.2 s q191 reading (steady-state
-  * ~2 s) that passed the 10×-median poisoned-history cap AND the
-  * post-guard median (3 of 5 reps landed inside one slow window). The
-  * rule under test: >3× history on a run whose CONTROLS measured calm →
-  * report the post-guard reps' median, but ONLY when those reps
-  * corroborate the fast reading — an intermittent real regression (slow
-  * on some reps by CODE, not window) keeps its honest median.
-  */
-class BenchSpec extends AnyFunSuite {
-
-  test("q191 scenario: 3 spike reps + 2 calm guard reps, calm controls -> " +
-      "post-guard median reported (the old median kept the spike)") {
-    // three timed reps inside the ambient window, then the history guard's
-    // two extra reps landing at steady-state — exactly r13's q191 shape
-    val times = Seq(15.2, 15.3, 15.1, 2.9, 3.0)
-    assert(Bench.med(times) == 15.1) // the old reported value — the bug
-    // reported value is the post-guard MEDIAN (3.0), not the raw min (2.9):
-    // a corroborated re-measurement, no downward best-case ratchet
-    assert(Bench.adjudicate(times, postGuard = Seq(2.9, 3.0),
-      hist = Some(2.0), controlsCalm = true) == 3.0)
-  }
-
-  test("intermittent regression: post-guard reps stay slow -> median " +
-      "stands (advisor r14 #1: min-reporting hid the 3-of-5-slow change)") {
-    // code-caused slowness on 3 of 5 reps; the guard reps reproduce it
-    val times = Seq(15.2, 0.8, 15.1, 15.0, 0.9)
-    assert(Bench.adjudicate(times, postGuard = Seq(15.0, 0.9),
-      hist = Some(2.0), controlsCalm = true) == Bench.med(times))
-  }
-
-  test("non-calm controls: the median stands even >3x history") {
-    val times = Seq(15.2, 15.3, 15.1, 2.9, 3.0)
-    assert(Bench.adjudicate(times, postGuard = Seq(2.9, 3.0),
-      hist = Some(2.0), controlsCalm = false) == 15.1)
-  }
-
-  test("genuine uniform 3x regression survives adjudication: the " +
-      "post-guard median is itself 3x-slow, so the report stays honest") {
-    val times = Seq(6.1, 6.0, 6.2, 6.1, 6.0)
-    assert(Bench.adjudicate(times, postGuard = Seq(6.1, 6.0),
-      hist = Some(2.0), controlsCalm = true) == 6.1)
-  }
-
-  test("no post-guard reps (or a lone survivor) cannot corroborate: " +
-      "the median stands") {
-    assert(Bench.adjudicate(Seq(15.2, 15.3, 15.1), postGuard = Nil,
-      hist = Some(2.0), controlsCalm = true) == 15.2)
-    assert(Bench.adjudicate(Seq(15.2, 15.3, 15.1, 2.9, -1.0),
-      postGuard = Seq(2.9, -1.0), hist = Some(2.0), controlsCalm = true) == 15.2)
-  }
-
-  test("within-3x readings and no-history queries report the median") {
-    assert(Bench.adjudicate(Seq(2.4, 2.5, 2.6), Nil, Some(2.0),
-      controlsCalm = true) == 2.5)
-    assert(Bench.adjudicate(Seq(15.2, 15.3, 15.1), Nil, None,
-      controlsCalm = true) == 15.2)
-    // sub-floor history (noise) never triggers min-reporting
-    assert(Bench.adjudicate(Seq(0.30, 0.10, 0.32), Nil, Some(0.01),
-      controlsCalm = true) == 0.30)
-  }
+/** Bench's per-row reporting: the median of this run's successful reps. */
+class BenchSpec extends SparkSpec {
 
   test("failed reps: -1 markers are ignored by both median and min; " +
       "all-failed reports -1") {
     assert(Bench.med(Seq(-1.0, 2.0, 3.0)) == 3.0)
-    assert(Bench.adjudicate(Seq(-1.0, 15.0, 15.1, 2.9, 3.0),
-      postGuard = Seq(2.9, 3.0), hist = Some(2.0), controlsCalm = true) == 3.0)
-    assert(Bench.adjudicate(Seq(-1.0, -1.0), Nil, Some(2.0),
-      controlsCalm = true) == -1.0)
+    assert(Bench.med(Seq(15.2, 15.3, 15.1)) == 15.2)
+    assert(Bench.med(Seq(-1.0, -1.0)) == -1.0)
+    assert(Bench.med(Nil) == -1.0)
   }
 
-  test("mid-run-spike scenario (judge r15 Next #1): start controls calm, " +
-      "a middle segment 3x hot -> normalizedTotal corrects exactly that " +
-      "segment (the start-anchored run-level model corrected nothing)") {
-    // 3 segments x 2 queries; the BENCH_r15 shape — the run starts and
-    // ends calm, the middle segment's window runs 3x hot (CPU-bound rows:
-    // isReplay = false, history irrelevant to their path)
-    val vals = Seq((1.0, 0), (1.0, 0), (3.0, 1), (3.0, 1), (1.0, 2), (1.0, 2))
-      .map { case (v, s) => (v, s, false, None: Option[Double]) }
-    val segInfl = Map(0 -> 1.0, 1 -> 3.0, 2 -> 1.0)
-    val noIo = (_: Int) => 1.0
-    // OLD model: the up-front controls (segment 0's window) measure calm,
-    // run inflation stamps 1.0, value_normalized == value — the blind spot
-    assert(Bench.inflation(Seq(1.0, 1.0)) == 1.0)
-    // SEGMENT model: the spiked segment's values divide by ITS inflation;
-    // 1+1 + 3/3+3/3 + 1+1 = 6.0 (the true calm-window cost), not 10.0
-    assert(Bench.normalizedTotal(vals, segInfl, noIo) == 6.0)
-    // effective run divisor reported as control_inflation: 10/6
-    assert(math.abs(vals.map(_._1).sum /
-      Bench.normalizedTotal(vals, segInfl, noIo) - 10.0 / 6.0) < 1e-12)
-  }
+  test("per-row timing: a replay row gets one rep, a failing row reports -1") {
+    var builds = 0
+    val replay = Entry("replay", (s, _) => { builds += 1; s.range(10).toDF("id") }, replay = true)
+    val times = Bench.timeRow(spark, sfDir, replay, reps = 3)
+    assert(builds == 1 && times.size == 1 && times.head >= 0.0, times)
 
-  test("normalizedTotal: failed queries drop; a faster-than-history " +
-      "segment (inflation < 1) never inflates the normalized total") {
-    assert(Bench.normalizedTotal(
-      Seq((2.0, 0, false, None), (-1.0, 0, false, None)),
-      _ => 0.5, _ => 1.0) == 2.0)
-    assert(Bench.normalizedTotal(Nil, _ => 2.0, _ => 2.0) == 0.0)
-  }
-
-  test("I/O-window scenario (judge r16 Next #1, the run-5 shape): CPU " +
-      "controls calm, io probe 12x its history -> state-store rows " +
-      "correct to their own quiet history; CPU rows untouched") {
-    // segment 0: cpu inflation 1.0 (controls read calm), io probe 0.6 s
-    // vs quiet baseline 0.05 -> ioInflation 12
-    val ioInfl = Bench.ioInflation(0.6, Some(0.05))
-    assert(math.abs(ioInfl - 12.0) < 1e-9)
-    // the r16 run-5 rows: q195 18.4 s (history 3.2), q135 14.6 (4.9),
-    // q191 7.5 (0.74) — all state-store-bound; a CPU row rides along
-    val rows = Seq(
-      (18.4, 0, true, Some(3.2)),   // -> clamps to history 3.2
-      (14.6, 0, true, Some(4.9)),   // -> 4.9
-      (7.5, 0, true, Some(0.74)),   // 7.5/12 = 0.625 < hist -> floor 0.74
-      (2.0, 0, false, Some(0.5)))   // CPU row: divisor is cpuInfl (1.0)
-    val got = Bench.normalizedTotal(rows, _ => 1.0, _ => ioInfl)
-    val minComposite = 3.2 + 4.9 + 0.74 + 2.0
-    assert(math.abs(got - minComposite) < 1e-9,
-      s"normalized $got should equal the min-composite $minComposite")
-    // the same rows on a QUIET-io run keep their raw values: a real
-    // regression is never hidden when the window is calm
-    assert(Bench.normalizedTotal(rows, _ => 1.0, _ => 1.0) ==
-      rows.map(_._1).sum)
-    // a replay row with NO history divides by the io ratio uncapped
-    assert(Bench.normalizeRow(12.0, isReplay = true, cpuInfl = 1.0,
-      ioInfl = 12.0, hist = None) == 1.0)
-    // the correction never reports ABOVE the raw measurement
-    assert(Bench.normalizeRow(2.0, isReplay = true, cpuInfl = 1.0,
-      ioInfl = 12.0, hist = Some(5.0)) == 2.0)
-    // missing/garbage io history -> inflation 1.0 (never guess)
-    assert(Bench.ioInflation(0.6, None) == 1.0)
-    assert(Bench.ioInflation(-1.0, Some(0.05)) == 1.0)
-    assert(Bench.ioInflation(0.6, Some(0.0)) == 1.0)
-    // a FASTER-than-history probe never deflates
-    assert(Bench.ioInflation(0.02, Some(0.05)) == 1.0)
-  }
-
-  test("hot-CONTROL scenario (round 17, the run-7 shape): the ambient " +
-      "window lands on the control pair (3.49x) while the segment's " +
-      "queries ran calm -> CPU rows clamp to their own quiet history " +
-      "instead of deflating to raw/3.5") {
-    // run 7: segment-4 controls read 3.494x while its rows measured at
-    // history; unclamped division would report each at ~29% of true cost
-    val rows = Seq(
-      (1.0, 0, false, Some(1.0)),    // calm row AT history -> stays 1.0
-      (2.4, 0, false, Some(2.3)),    // mild tail -> clamps at history 2.3
-      (0.9, 0, false, None))         // no history -> divides (new row)
-    val got = Bench.normalizedTotal(rows, _ => 3.494, _ => 1.0)
-    val want = 1.0 + 2.3 + 0.9 / 3.494
-    assert(math.abs(got - want) < 1e-9, s"$got != $want")
-    // a REAL regression (raw far above history) inside a hot-control
-    // window still corrects by the control ratio, floored at history
-    assert(math.abs(Bench.normalizeRow(7.0, isReplay = false,
-      cpuInfl = 3.494, ioInfl = 1.0, hist = Some(1.0)) - 7.0 / 3.494) < 1e-9)
-    // and never reports above raw: history stale-high (code got faster)
-    assert(Bench.normalizeRow(0.4, isReplay = false, cpuInfl = 1.0,
-      ioInfl = 1.0, hist = Some(0.8)) == 0.4)
-  }
-
-  test("ioBaseline: a page-cache-lucky fast outlier cannot own the quiet " +
-      "baseline (review r17 #1 — the fast-side poisoned-history guard)") {
-    // a 6 ms fluke among honest ~50-60 ms readings: dropped (< med/3)
-    assert(Bench.ioBaseline(Seq(0.055, 0.006, 0.049, 0.062, 0.058))
-      .contains(0.049))
-    // a legitimately fast HOST (all readings cluster low) keeps its min
-    assert(Bench.ioBaseline(Seq(0.012, 0.010, 0.011)).contains(0.010))
-    // zero/garbage readings drop at the floor; empty -> None
-    assert(Bench.ioBaseline(Seq(0.001, -1.0, 0.0)).isEmpty)
-    assert(Bench.ioBaseline(Nil).isEmpty)
-    // single reading is its own median and survives
-    assert(Bench.ioBaseline(Seq(0.05)).contains(0.05))
-  }
-
-  test("I/O-window + CPU-window combine: a state-store row divides by " +
-      "the LARGER inflation (whichever ambient mode is hot dominates)") {
-    // cpu 4x, io 2x: divisor 4; v=8, hist=1.5 -> max(8/4, 1.5) = 2.0
-    assert(Bench.normalizeRow(8.0, isReplay = true, cpuInfl = 4.0,
-      ioInfl = 2.0, hist = Some(1.5)) == 2.0)
-    // CPU rows ignore the io control entirely
-    assert(Bench.normalizeRow(8.0, isReplay = false, cpuInfl = 2.0,
-      ioInfl = 12.0, hist = Some(0.5)) == 4.0)
-  }
-
-  test("control inflation: geometric mean of the ratios, floored at 1.0, " +
-      "garbage-tolerant (judge r14 Next #6)") {
-    assert(Bench.inflation(Seq(2.0, 2.0)) == 2.0)
-    assert(math.abs(Bench.inflation(Seq(1.0, 4.0)) - 2.0) < 1e-9)
-    // a faster-than-history control never DEFLATES the total
-    assert(Bench.inflation(Seq(0.5, 0.8)) == 1.0)
-    assert(Bench.inflation(Nil) == 1.0)
-    assert(Bench.inflation(Seq(-1.0, 0.0, Double.NaN)) == 1.0)
+    val failing = Entry("failing", (_, _) => throw new IllegalStateException("no table"))
+    val failed = Bench.timeRow(spark, sfDir, failing, reps = 3)
+    assert(failed == Seq(-1.0, -1.0, -1.0))
+    assert(Bench.med(failed) == -1.0)
   }
 }

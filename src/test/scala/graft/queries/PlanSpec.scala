@@ -695,7 +695,6 @@ class PlanSpec extends SparkSpec {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     val windowed = scala.collection.mutable.ListBuffer.empty[String]
     val constKeyed = scala.collection.mutable.ListBuffer.empty[String]
-    val buildFailures = scala.collection.mutable.ListBuffer.empty[String]
     // q101 reads the reference goldens, which a checkout may not hold. Its
     // plan is still swept, over a stand-in of the two catalogs: q101 reads
     // them as header CSVs, so the `class,path,data` header fixes the schema
@@ -705,17 +704,18 @@ class PlanSpec extends SparkSpec {
     val q101Dir =
       if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(goldenDir))) goldenDir
       else q101StandIn().toString
-    // a row that fails to build or plan is recorded and fails the test by
-    // name below, after every other row has been swept
-    def build(name: String): Option[org.apache.spark.sql.execution.QueryExecution] =
-      scala.util.Try {
-        val df =
-          if (name == "q101_e3_pipeline") TilingQueries.e3Pipeline(spark, q101Dir)
-          else graft.SparkEntry.queries(name)(spark, dir)
-        df.queryExecution.executedPlan
-        df.queryExecution
-      }.fold(e => { buildFailures += s"$name: ${e.getMessage}"; None }, Some(_))
-    for (name <- graft.SparkEntry.queries.keys.toSeq.sorted; qe <- build(name)) {
+    // each row is planned through the Runner, as Bench and Verify run it: a
+    // row that fails to build or plan fails the test by name below, after
+    // every other row has been swept
+    val rows = graft.SparkEntry.registry.sortBy(_.name).map { e =>
+      if (e.name != "q101_e3_pipeline") e
+      else e.copy(build = (s, _) => TilingQueries.e3Pipeline(s, q101Dir))
+    }
+    val outcomes = rows.map(e => graft.Runner.run(spark, dir, e) { df =>
+      df.queryExecution.executedPlan
+      df.queryExecution
+    })
+    for (graft.Outcome(name, _, _, Right(qe)) <- outcomes) {
       val p = qe.executedPlan.toString
       if (!allowed(name) &&
           (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")))
@@ -750,7 +750,8 @@ class PlanSpec extends SparkSpec {
     // a stale entry would let a future misuse in that query pass unseen
     assert(constKeyed.toSet == boundedAllUsers.keySet,
       s"constant-key windows in $constKeyed, allowlisted ${boundedAllUsers.keySet}")
-    assert(buildFailures.isEmpty, s"rows that failed to build: $buildFailures")
+    val failed = outcomes.collect { case graft.Outcome(n, _, _, Left(e)) => s"$n: ${e.getMessage}" }
+    assert(failed.isEmpty, s"rows that failed to build: $failed")
   }
 
   /** Plan-only stand-ins for q101's `S_out.csv`/`L_out.csv`: the goldens'
